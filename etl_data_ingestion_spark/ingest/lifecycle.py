@@ -22,11 +22,9 @@ class LandingZone:
     """A landing root containing Unprocessed/, Processed/, Failed/."""
 
     def __init__(self, spark: SparkSession, root: str):
-        self._spark = spark
         self.root = root.rstrip("/")
         jvm = spark.sparkContext._jvm
         jsc = spark.sparkContext._jsc
-        self._jvm = jvm
         self._conf = jsc.hadoopConfiguration()
         self._Path = jvm.org.apache.hadoop.fs.Path
         self._fs = self._Path(self.root).getFileSystem(self._conf)

@@ -125,12 +125,3 @@ def ingest_ctb_file(
     )
     return IngestResult(valid=valid, quarantine=quarantine)
 
-
-def ingest_ctb_df(
-    df: DataFrame, types: dict[str, str] | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """Pure-DataFrame variant for pre-loaded all-string input (tests,
-    mailbox-sourced batches): columns must already be canonical."""
-    corrupt = CORRUPT_COL if CORRUPT_COL in df.columns else None
-    return split_valid_quarantine(df, types=types, corrupt_col=corrupt)
-

@@ -1,24 +1,33 @@
-"""Batch driver shell: the reference's __main__ loop, Spark-first.
+"""The per-file ingest policy and the batch landing-zone runner: the
+reference's __main__ loop, Spark-first.
 
-Mirrors main.py:648-687 policy exactly:
-- per-file isolation: one file's failure never aborts the run
-  (main.py:674-677);
-- partial success: ≥1 valid row → file Processed, clean runs get a
-  success notification, partial runs get an error report listing
-  counts (main.py:470-495);
-- zero valid rows → file Failed + error notification (main.py:435-446,
+``process_file`` is the reference's per-file policy, shared by this
+runner and ``stream_runner``:
+- a file-level error (empty file, unknown column) fails the file with
+  an error notification (main.py:289-295, 353-364);
+- L3: the warehouse sink's ``check_target`` runs before any write
+  (main.py:416-430);
+- partial success: ≥1 valid row → file processed, clean files get a
+  success notification, partial ones an error report listing counts
+  (main.py:470-495);
+- zero valid rows → file failed + error notification (main.py:435-446,
   496-511);
-- zero files found → no-data notification (main.py:679-685).
+- per-file isolation: an exception fails the file, never the run
+  (main.py:674-677).
 
-Unlike the reference, consumption is effectively at-least-once +
-idempotent: the file moves out of Unprocessed/ only after the
-warehouse append commits, and every appended row carries the file's
-load_id for downstream dedup (SURVEY.md §4.1 deviation, documented).
+``run_landing_zone`` is the batch arrival loop (main.py:648-687): it
+lists Unprocessed/ and moves each file to Processed/ or Failed/ after
+its outcome is settled. Unlike the reference, consumption is
+effectively at-least-once + idempotent: the file moves out of
+Unprocessed/ only after the warehouse append commits, and every
+appended row carries the file's load_id for downstream dedup
+(SURVEY.md §4.1 deviation, documented).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import SparkSession
 
@@ -46,40 +55,39 @@ class RunReport:
         return sum(o.valid_rows for o in self.outcomes if o.state == "processed")
 
 
-def run_landing_zone(
+def process_file(
     spark: SparkSession,
-    zone: LandingZone,
+    path: str,
     warehouse: ParquetWarehouseSink,
     quarantine: ParquetWarehouseSink,
     notifier: Notifier,
-    require_existing_target: bool = False,
-) -> RunReport:
-    report = RunReport()
-    files = zone.list_unprocessed()
-    if not files:
-        notifier.no_data(zone.root)
-        return report
+    settle: Callable[[FileOutcome], object] | None = None,
+) -> FileOutcome:
+    """Ingest one landed file under the reference's per-file policy
+    and return its outcome.
 
-    for path in files:
-        filename = path.rsplit("/", 1)[-1]
-        try:
-            res = ingest_ctb_file(spark, path)
-            if not res.ok:
-                notifier.error(filename, res.file_error)
-                zone.mark_failed(path)
-                report.outcomes.append(
-                    FileOutcome(path, "failed", error=res.file_error)
-                )
-                continue
-
-            # L3 (main.py:416-430): missing/denied target fails the
-            # file before any write, with an error notification.
-            warehouse.check_target(spark, require_existing_target)
-
+    ``settle(outcome)`` is the caller's lifecycle action, run after the
+    file's notification and inside the same isolation: if it raises,
+    the file fails with an error notification and ``settle`` gets one
+    best-effort call with the failed outcome."""
+    filename = path.rsplit("/", 1)[-1]
+    try:
+        res = ingest_ctb_file(spark, path)
+        if not res.ok:
+            notifier.error(filename, res.file_error)
+            outcome = FileOutcome(path, "failed", error=res.file_error)
+        else:
+            warehouse.check_target(spark)
             q_rows = quarantine.write(res.quarantine, load_id=filename)
             v_rows = warehouse.write(res.valid, load_id=filename)
-
-            if v_rows > 0:
+            if v_rows == 0:
+                msg = (
+                    f"No valid data rows found in '{filename}' to insert "
+                    f"({q_rows} quarantined)."
+                )
+                notifier.error(filename, msg)
+                outcome = FileOutcome(path, "failed", 0, q_rows, error=msg)
+            else:
                 if q_rows == 0:
                     notifier.success(filename, v_rows)
                 else:
@@ -88,25 +96,43 @@ def run_landing_zone(
                         f"Inserted {v_rows} valid rows from '{filename}'; "
                         f"{q_rows} rows quarantined with row-level errors.",
                     )
-                zone.mark_processed(path)
-                report.outcomes.append(
-                    FileOutcome(path, "processed", v_rows, q_rows)
-                )
-            else:
-                msg = (
-                    f"No valid data rows found in '{filename}' to insert "
-                    f"({q_rows} quarantined). The file will be moved to 'Failed'."
-                )
-                notifier.error(filename, msg)
-                zone.mark_failed(path)
-                report.outcomes.append(
-                    FileOutcome(path, "failed", 0, q_rows, error=msg)
-                )
-        except Exception as e:  # per-file isolation (main.py:674-677)
-            notifier.error(filename, f"Unexpected error: {e}")
+                outcome = FileOutcome(path, "processed", v_rows, q_rows)
+        if settle is not None:
+            settle(outcome)
+        return outcome
+    except Exception as e:  # per-file isolation (main.py:674-677)
+        notifier.error(filename, f"Unexpected error: {e}")
+        outcome = FileOutcome(path, "failed", error=str(e))
+        if settle is not None:
             try:
-                zone.mark_failed(path)
+                settle(outcome)
             except Exception:
                 pass
-            report.outcomes.append(FileOutcome(path, "failed", error=str(e)))
+        return outcome
+
+
+def finish_run(report: RunReport, notifier: Notifier, source: str) -> RunReport:
+    """A run that found no files sends the no-data notification
+    (main.py:679-685)."""
+    if not report.outcomes:
+        notifier.no_data(source)
     return report
+
+
+def run_landing_zone(
+    spark: SparkSession,
+    zone: LandingZone,
+    warehouse: ParquetWarehouseSink,
+    quarantine: ParquetWarehouseSink,
+    notifier: Notifier,
+) -> RunReport:
+    def move(o: FileOutcome) -> None:
+        (zone.mark_processed if o.state == "processed" else zone.mark_failed)(o.path)
+
+    report = RunReport(
+        [
+            process_file(spark, path, warehouse, quarantine, notifier, move)
+            for path in zone.list_unprocessed()
+        ]
+    )
+    return finish_run(report, notifier, zone.root)

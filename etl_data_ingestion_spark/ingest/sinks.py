@@ -11,54 +11,63 @@ at-most-once gap, SURVEY.md §4.1).
 
 from __future__ import annotations
 
+from typing import Callable
+
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame, DataFrameWriter, Observation
+
+
+def _append_counted(
+    df: DataFrame, load_id: str, tail: Callable[[DataFrameWriter], object]
+) -> int:
+    """Append ``df`` tagged with load_id; ``tail`` finishes the append
+    ``DataFrameWriter`` (format, options, save). Returns rows written,
+    counted via an Observation on the write itself (no second scan, no
+    driver collect)."""
+    obs = Observation(f"write:{load_id}")
+    tail(
+        df.withColumn("_load_id", F.lit(load_id))
+        .observe(obs, F.count(F.lit(1)).alias("rows"))
+        .write.mode("append")
+    )
+    return int(obs.get["rows"])
 
 
 class ParquetWarehouseSink:
     """Append-mode parquet warehouse table (stands in for the BigQuery
-    table; swap for format('bigquery') with the connector jar)."""
+    table; swap for format('bigquery') with the connector jar).
 
-    def __init__(self, path: str, batch_size: int = 500):
+    ``require_existing`` is the L3 target policy (main.py:416-430):
+    when set, the target directory must already exist; by default a
+    first write may create it."""
+
+    def __init__(
+        self, path: str, batch_size: int = 500, require_existing: bool = False
+    ):
         self.path = path
         self.batch_size = batch_size
+        self.require_existing = require_existing
 
-    def target_exists(self, spark) -> bool:
-        """L3 (main.py:416-430): verify the target before writing.
-
-        For a catalog table this is ``spark.catalog.tableExists``; for
-        the path-based stand-in, existence of the target directory.
-        ``require_existing`` mirrors the reference's fail-the-file
-        behavior; by default a first write may create the path."""
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(self.path)
-        fs = hpath.getFileSystem(
-            spark._jsc.hadoopConfiguration()
-        )
-        return bool(fs.exists(hpath))
-
-    def check_target(self, spark, require_existing: bool = False) -> None:
-        """Raise (→ runner marks the file Failed + error notification,
-        exactly the reference's missing-table policy) when the target
-        must pre-exist but doesn't."""
-        if require_existing and not self.target_exists(spark):
+    def check_target(self, spark) -> None:
+        """Raise (→ the file fails with an error notification, the
+        reference's missing-table policy) when the target must
+        pre-exist but doesn't. For a catalog table the check would be
+        ``spark.catalog.tableExists``; for this path-based stand-in it
+        is existence of the target directory."""
+        if not self.require_existing:
+            return
+        hpath = spark._jvm.org.apache.hadoop.fs.Path(self.path)
+        if not hpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(hpath):
             raise RuntimeError(
                 f"Target table/path does not exist or is not accessible: {self.path}"
             )
 
     def write(self, df: DataFrame, load_id: str) -> int:
-        """Append rows tagged with load_id; returns rows written,
-        counted via an Observation on the write itself (no second scan,
-        no driver collect)."""
-        obs = Observation(f"write:{load_id}")
-        (
-            df.withColumn("_load_id", F.lit(load_id))
-            .observe(obs, F.count(F.lit(1)).alias("rows"))
-            .write.mode("append")
-            .option("maxRecordsPerFile", self.batch_size)
-            .parquet(self.path)
+        return _append_counted(
+            df,
+            load_id,
+            lambda w: w.option("maxRecordsPerFile", self.batch_size).parquet(self.path),
         )
-        return int(obs.get["rows"])
 
 
 class BigQueryWarehouseSink:
@@ -93,7 +102,7 @@ class BigQueryWarehouseSink:
         except Exception:
             return False
 
-    def check_target(self, spark, require_existing: bool = False) -> None:
+    def check_target(self, spark) -> None:
         if not self.is_available(spark):
             raise RuntimeError(
                 "spark-bigquery connector not on classpath; "
@@ -101,16 +110,11 @@ class BigQueryWarehouseSink:
             )
 
     def write(self, df: DataFrame, load_id: str) -> int:
-        obs = Observation(f"write:{load_id}")
-        (
-            df.withColumn("_load_id", F.lit(load_id))
-            .observe(obs, F.count(F.lit(1)).alias("rows"))
-            .write.format("bigquery")
-            .mode("append")
-            .option("table", self.table)
-            .save()
+        return _append_counted(
+            df,
+            load_id,
+            lambda w: w.format("bigquery").option("table", self.table).save(),
         )
-        return int(obs.get["rows"])
 
 
 def make_warehouse_sink(spark, config, strict: bool = False):
@@ -164,17 +168,14 @@ class BucketedWarehouseSink:
         self.n_buckets = n_buckets
 
     def write(self, df: DataFrame, load_id: str) -> int:
-        obs = Observation(f"write:{self.table}:{load_id}")
-        (
-            df.withColumn("_load_id", F.lit(load_id))
-            .observe(obs, F.count(F.lit(1)).alias("rows"))
-            .write.mode("append")
-            .bucketBy(self.n_buckets, *self.bucket_cols)
+        return _append_counted(
+            df,
+            load_id,
+            lambda w: w.bucketBy(self.n_buckets, *self.bucket_cols)
             .sortBy(*self.bucket_cols)
             .format("parquet")
-            .saveAsTable(self.table)
+            .saveAsTable(self.table),
         )
-        return int(obs.get["rows"])
 
 
 def compact_parquet_dir(

@@ -6,27 +6,35 @@ removal at main.py:630-645 — a crash between insert and label removal
 double-ingests) with the file source's checkpointed offset log plus
 ``cleanSource=archive``: a file is recorded in the checkpoint exactly
 once, and consumed files are moved out of the watch dir by Spark
-itself (L2's lifecycle rename, driven by the engine not the app).
+itself. That archival is this runner's whole lifecycle; there is no
+Processed/ or Failed/ move, and ``FileOutcome.state`` records the
+outcome instead.
 
-Shape: the checkpointed text stream serves as the FILE-ARRIVAL LOG —
-``foreachBatch`` reduces each micro-batch to its distinct
-``input_file_name()`` set (files land atomically in one batch) and
-runs the SAME per-file ingest as the batch runner against the file
-still sitting in the watch dir (archival happens after the batch
-commits). Per-file policy (partial success, quarantine,
-notifications, isolation) is identical; the driver loop iterates
-file PATHS only — all row-level work stays in Spark jobs.
+Shape: a checkpointed ``binaryFile`` stream, pruned to its ``path``
+column, is the file-arrival log — one row per newly landed file, no
+content read. ``foreachBatch`` hands each path to ``runner.process_file``,
+the per-file policy the batch runner uses, against the file still
+sitting in the watch dir (archival happens after the batch commits).
+
+Limitation: a 0-byte file yields no row to a file stream source, so
+it is checkpointed as consumed and left to ``cleanSource`` like any
+other file, with no outcome and no notification.
 """
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from etl_data_ingestion_spark.ingest.pipeline import ingest_ctb_file
-from etl_data_ingestion_spark.ingest.runner import FileOutcome, RunReport
+# Kept importable here: perfbench traces ``stream_runner.ingest_ctb_file``.
+from etl_data_ingestion_spark.ingest.pipeline import ingest_ctb_file  # noqa: F401
+from etl_data_ingestion_spark.ingest.runner import RunReport, finish_run, process_file
 from etl_data_ingestion_spark.ingest.sinks import ParquetWarehouseSink
 from etl_data_ingestion_spark.notify import Notifier
+
+# The binaryFile source's fixed schema; a stream source must be given it.
+BINARY_FILE_SCHEMA = (
+    "path STRING, modificationTime TIMESTAMP, length BIGINT, content BINARY"
+)
 
 
 def run_landing_zone_stream(
@@ -43,54 +51,20 @@ def run_landing_zone_stream(
     batch runner. Call repeatedly (or switch the trigger to a
     processingTime interval) for continuous ingestion."""
     report = RunReport()
-    stream = (
-        spark.readStream.option("cleanSource", "archive")
+    files = (
+        spark.readStream.format("binaryFile")
+        .schema(BINARY_FILE_SCHEMA)
+        .option("cleanSource", "archive")
         .option("sourceArchiveDir", archive_dir)
-        .text(unprocessed_dir)
+        .load(unprocessed_dir)
+        .select("path")
     )
-    files = stream.select(F.input_file_name().alias("path"))
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        paths = [r["path"] for r in batch_df.distinct().collect()]
-        for path in sorted(paths):  # one entry per newly-landed file
-            filename = path.rsplit("/", 1)[-1]
-            try:
-                res = ingest_ctb_file(spark, path)
-                if not res.ok:
-                    notifier.error(filename, res.file_error)
-                    report.outcomes.append(
-                        FileOutcome(path, "failed", error=res.file_error)
-                    )
-                    continue
-                warehouse.check_target(spark)
-                q_rows = quarantine.write(res.quarantine, load_id=filename)
-                v_rows = warehouse.write(res.valid, load_id=filename)
-                if v_rows > 0:
-                    if q_rows == 0:
-                        notifier.success(filename, v_rows)
-                    else:
-                        notifier.error(
-                            filename,
-                            f"Inserted {v_rows} valid rows from '{filename}'; "
-                            f"{q_rows} rows quarantined with row-level errors.",
-                        )
-                    report.outcomes.append(
-                        FileOutcome(path, "processed", v_rows, q_rows)
-                    )
-                else:
-                    msg = (
-                        f"No valid data rows found in '{filename}' to insert "
-                        f"({q_rows} quarantined)."
-                    )
-                    notifier.error(filename, msg)
-                    report.outcomes.append(
-                        FileOutcome(path, "failed", 0, q_rows, error=msg)
-                    )
-            except Exception as e:  # per-file isolation (main.py:674-677)
-                notifier.error(filename, f"Unexpected error: {e}")
-                report.outcomes.append(
-                    FileOutcome(path, "failed", error=str(e))
-                )
+        for path in sorted(r["path"] for r in batch_df.collect()):
+            report.outcomes.append(
+                process_file(spark, path, warehouse, quarantine, notifier)
+            )
 
     q = (
         files.writeStream.foreachBatch(process_batch)
@@ -99,6 +73,4 @@ def run_landing_zone_stream(
         .start()
     )
     q.awaitTermination()
-    if not report.outcomes:
-        notifier.no_data(unprocessed_dir)
-    return report
+    return finish_run(report, notifier, unprocessed_dir)

@@ -29,13 +29,14 @@ class Notification:
 
 @dataclass
 class CollectingNotifier:
-    """Accumulates notifications; the test/driver double."""
+    """Accumulates notifications; the test/driver double. Transports
+    subclass it and override only ``_deliver``."""
 
     events: list[Notification] = field(default_factory=list)
 
     def success(self, filename: str, inserted_rows: int) -> None:
         # subject/body shape mirrors send_success_email (main.py:591-598)
-        self.events.append(
+        self._record(
             Notification(
                 "success",
                 f"SUCCESS: CTB File Processed - {filename}",
@@ -45,7 +46,7 @@ class CollectingNotifier:
 
     def error(self, context: str, details: str) -> None:
         # mirrors send_error_email (main.py:601-620)
-        self.events.append(
+        self._record(
             Notification(
                 "error", f"ERROR: CTB Processing Failed - {context}", details
             )
@@ -53,7 +54,7 @@ class CollectingNotifier:
 
     def no_data(self, query: str) -> None:
         # mirrors send_no_ctb_email (main.py:623-627)
-        self.events.append(
+        self._record(
             Notification(
                 "no_data",
                 "No CTB files found",
@@ -61,21 +62,19 @@ class CollectingNotifier:
             )
         )
 
+    def _record(self, ev: Notification) -> None:
+        self.events.append(ev)
+        self._deliver(ev)
+
+    def _deliver(self, ev: Notification) -> None:
+        """Send ``ev`` after it is collected; collecting alone sends nothing."""
+
 
 class ConsoleNotifier(CollectingNotifier):
     """Prints as it collects — the local/dev default."""
 
-    def success(self, filename: str, inserted_rows: int) -> None:
-        super().success(filename, inserted_rows)
-        print(f"[notify] {self.events[-1].subject}")
-
-    def error(self, context: str, details: str) -> None:
-        super().error(context, details)
-        print(f"[notify] {self.events[-1].subject}")
-
-    def no_data(self, query: str) -> None:
-        super().no_data(query)
-        print(f"[notify] {self.events[-1].subject}")
+    def _deliver(self, ev: Notification) -> None:
+        print(f"[notify] {ev.subject}")
 
 
 @dataclass
@@ -106,17 +105,17 @@ class SmtpNotifier(CollectingNotifier):
     # returning an smtplib.SMTP-compatible object
     connection_factory: object | None = None
 
-    def _send(self, subject: str, body: str) -> None:
+    def _deliver(self, ev: Notification) -> None:
         if not self.recipients:
             return
         import smtplib
         from email.message import EmailMessage
 
         msg = EmailMessage()
-        msg["Subject"] = subject
+        msg["Subject"] = ev.subject
         msg["From"] = self.sender
         msg["To"] = ", ".join(self.recipients)
-        msg.set_content(body)
+        msg.set_content(ev.body)
 
         factory = self.connection_factory or (
             lambda: smtplib.SMTP(self.host, self.port, timeout=30)
@@ -130,15 +129,3 @@ class SmtpNotifier(CollectingNotifier):
             conn.send_message(msg)
         finally:
             conn.quit()
-
-    def success(self, filename: str, inserted_rows: int) -> None:
-        super().success(filename, inserted_rows)
-        self._send(self.events[-1].subject, self.events[-1].body)
-
-    def error(self, context: str, details: str) -> None:
-        super().error(context, details)
-        self._send(self.events[-1].subject, self.events[-1].body)
-
-    def no_data(self, query: str) -> None:
-        super().no_data(query)
-        self._send(self.events[-1].subject, self.events[-1].body)

@@ -3,11 +3,14 @@ policy, notifications, warehouse append (reference L1-L5 / O1-O6)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from etl_data_ingestion_spark.ingest.lifecycle import LandingZone
 from etl_data_ingestion_spark.ingest.runner import run_landing_zone
 from etl_data_ingestion_spark.ingest.sinks import ParquetWarehouseSink
+from etl_data_ingestion_spark.ingest.stream_runner import run_landing_zone_stream
 from etl_data_ingestion_spark.notify import CollectingNotifier
 from tests.test_ingest_ctb import GOOD, CANONICAL, header_line, row
 
@@ -93,21 +96,101 @@ def test_multi_file_isolation(spark, zone, sinks):
     assert report.total_inserted == 2
 
 
-def test_missing_target_fails_file(spark, zone, sinks):
+def test_missing_target_fails_file(spark, zone, tmp_path):
     """L3 (main.py:416-430): when the warehouse target must pre-exist
     and doesn't, the file fails with an error notification and no rows
     are written; lifecycle moves it to Failed/."""
-    from etl_data_ingestion_spark.ingest.runner import run_landing_zone
-    from etl_data_ingestion_spark.notify import CollectingNotifier
-
+    wh = ParquetWarehouseSink(str(tmp_path / "warehouse"), require_existing=True)
+    qr = ParquetWarehouseSink(str(tmp_path / "quarantine"))
     zone.put("CTB_ok.tsv", (header_line() + "\n" + row() + "\n").encode())
     notifier = CollectingNotifier()
-    report = run_landing_zone(
-        spark, zone, sinks[0], sinks[1], notifier, require_existing_target=True
-    )
+    report = run_landing_zone(spark, zone, wh, qr, notifier)
     assert report.outcomes[0].state == "failed"
     assert "does not exist" in notifier.events[0].body
     assert zone.list_unprocessed() == []
+    assert os.path.exists(zone.root + "/Failed/CTB_ok.tsv")
+    assert not os.path.exists(wh.path)
+
+
+def test_stream_missing_target_fails_file(spark, tmp_path):
+    """The streaming runner honours the sink's L3 target policy too."""
+    wh = ParquetWarehouseSink(str(tmp_path / "warehouse"), require_existing=True)
+    qr = ParquetWarehouseSink(str(tmp_path / "quarantine"))
+    unproc = tmp_path / "Unprocessed"
+    unproc.mkdir()
+    (unproc / "CTB_ok.tsv").write_text(header_line() + "\n" + row() + "\n")
+    notifier = CollectingNotifier()
+    report = run_landing_zone_stream(
+        spark, str(unproc), str(tmp_path / "Archived"), str(tmp_path / "ckpt"),
+        wh, qr, notifier,
+    )
+    assert [o.state for o in report.outcomes] == ["failed"]
+    assert "does not exist" in notifier.events[0].body
+    assert not os.path.exists(wh.path)
+
+
+def test_batch_and_stream_runners_agree(spark, zone, tmp_path):
+    """Both arrival loops apply one per-file policy: draining the same
+    landing set gives each file the same outcome and notification.
+    The set has no 0-byte file, which a file stream never sees."""
+    landing = {
+        "CTB_clean.tsv": [row(), row()],
+        "CTB_partial.tsv": [row(), row(DEMAND_QTY="bad")],
+        "CTB_allbad.tsv": [row(DEMAND_QTY="x"), row(SNAPSHOT_DATE="nope")],
+        "CTB_headeronly.tsv": [],
+    }
+
+    def land():
+        for name, rows in landing.items():
+            zone.put(name, "\n".join([header_line(), *rows, ""]).encode())
+        zone.put(
+            "CTB_unknown.tsv",
+            (header_line() + "\tEXTRA COL\n" + row() + "\tv\n").encode(),
+        )
+
+    def drained(report, notifier):
+        notes = {}
+        for ev in notifier.events:
+            notes.setdefault(ev.subject.rsplit(" - ", 1)[-1], []).append(
+                (ev.kind, ev.subject, ev.body)
+            )
+        return {
+            o.path.rsplit("/", 1)[-1]: (
+                (o.state, o.valid_rows, o.quarantined_rows, o.error),
+                notes.get(o.path.rsplit("/", 1)[-1]),
+            )
+            for o in report.outcomes
+        }
+
+    land()
+    batch_notes = CollectingNotifier()
+    batch = run_landing_zone(
+        spark, zone,
+        ParquetWarehouseSink(str(tmp_path / "b_wh")),
+        ParquetWarehouseSink(str(tmp_path / "b_q")),
+        batch_notes,
+    )
+    # the stream watches the same Unprocessed/ dir, so file paths (and
+    # the error texts that quote them) match the batch drain's
+    land()
+    stream_notes = CollectingNotifier()
+    stream = run_landing_zone_stream(
+        spark, zone.root + "/Unprocessed", str(tmp_path / "Archived"),
+        str(tmp_path / "ckpt"),
+        ParquetWarehouseSink(str(tmp_path / "s_wh")),
+        ParquetWarehouseSink(str(tmp_path / "s_q")),
+        stream_notes,
+    )
+    got = drained(batch, batch_notes)
+    assert len(got) == 5
+    assert got == drained(stream, stream_notes)
+    assert {k: v[0][0] for k, v in got.items()} == {
+        "CTB_clean.tsv": "processed",
+        "CTB_partial.tsv": "processed",
+        "CTB_allbad.tsv": "failed",
+        "CTB_headeronly.tsv": "failed",
+        "CTB_unknown.tsv": "failed",
+    }
 
 
 def test_run_sql_interface(spark, sf_dir):
