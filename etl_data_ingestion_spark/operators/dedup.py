@@ -25,6 +25,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from etl_data_ingestion_spark.catalog import load_table
+from etl_data_ingestion_spark.functions.arrays import ordered_pairs
 from etl_data_ingestion_spark.functions.minhash import minhash_signature_udf
 from etl_data_ingestion_spark.functions.text import tokens, word_ngrams_from
 from etl_data_ingestion_spark.functions.vectors import cosine_similarity
@@ -327,22 +328,13 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # all i<j pairs within the bucket: sort_array ordered items by
     # doc_id (first struct field), so position order IS id order
-    pair_expr = F.flatten(
-        F.transform(
-            "items",
-            lambda a, i: F.transform(
-                F.slice("items", i + 2, F.size("items")),
-                lambda b: F.struct(
-                    a.doc_id.alias("doc_a"),
-                    a.sig.alias("sig_a"),
-                    b.doc_id.alias("doc_b"),
-                    b.sig.alias("sig_b"),
-                ),
-            ),
-        )
-    )
-    pairs = buckets.select(F.explode(pair_expr).alias("p")).select(
-        "p.doc_a", "p.sig_a", "p.doc_b", "p.sig_b"
+    pairs = buckets.select(
+        F.explode(ordered_pairs("items", "a", "b")).alias("p")
+    ).select(
+        F.col("p.a.doc_id").alias("doc_a"),
+        F.col("p.a.sig").alias("sig_a"),
+        F.col("p.b.doc_id").alias("doc_b"),
+        F.col("p.b.sig").alias("sig_b"),
     )
     est = (
         F.aggregate(
@@ -1863,13 +1855,8 @@ def pipeline_dedup_threshold_curve(
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    _pair_expr = (
-        "flatten(transform(ds, (x, i) -> "
-        "transform(slice(ds, i + 2, size(ds)), "
-        "y -> struct(x as doc_a, y as doc_b))))"
-    )
     pairs = (
-        gsets.select(F.explode(F.expr(_pair_expr)).alias("p"))
+        gsets.select(F.explode(ordered_pairs("ds", "doc_a", "doc_b")).alias("p"))
         .select("p.doc_a", "p.doc_b")
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("c"))

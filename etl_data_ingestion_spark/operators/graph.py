@@ -15,18 +15,11 @@ pure so the oracle can mirror it exactly.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 
 from etl_data_ingestion_spark.catalog import load_table
+from etl_data_ingestion_spark.functions.arrays import ordered_pairs
 from etl_data_ingestion_spark.plans.registry import register
-
-# ordered (u < v) supplier pairs from the capped per-customer sorted
-# posting list — the codegen'd replacement for the cs self-join
-# (round 15; see graph_triangle_count's docstring)
-_PAIR_EXPR = (
-    "flatten(transform(ss, (x, i) -> "
-    "transform(slice(ss, i + 2, size(ss)), y -> struct(x as u, y as v))))"
-)
 
 PAGERANK_ORACLE = """
 -- Weighted PageRank, 3 unrolled iterations, damping 0.85, over the
@@ -216,6 +209,70 @@ def graph_reachability_recursive(
     return spark.sql(REACHABILITY_ORACLE)
 
 
+# ------------------------------------ supplier co-purchase edge build
+
+
+def posting_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-customer supplier posting lists (c, ss): ss is the sorted
+    set of suppliers (l_suppkey < 1000) customer c bought from,
+    capped at the 20 smallest ids. One groupBy(c) aggregation over
+    the orders-lineitem join: the partial collect_set dedups
+    map-side, and the slice is the cap, which bounds each customer's
+    pair expansion at C(20,2) pairs at any sf. The suppkey filter
+    bounds the per-key set before the cap."""
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    return (
+        orders.join(li, orders.o_orderkey == li.l_orderkey)
+        .filter(F.col("l_suppkey") < 1000)
+        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
+        .groupBy("c")
+        .agg(F.slice(F.sort_array(F.collect_set("s")), 1, 20).alias("ss"))
+    )
+
+
+def edge_build(spark: SparkSession, sf_dir: str):
+    """The supplier co-purchase graph every wedge query runs on,
+    returned as (pairs, und, deg):
+
+    - pairs (u < v): supplier pairs whose shared-customer count is at
+      or above the exact p90 order statistic of all pair counts
+      (engine-identical and scale-free, where a fixed count threshold
+      degenerates to a complete or empty graph as sf moves). The
+      pairs explode in-row from each posting list; pairs is
+      localCheckpointed because every caller reads it more than once.
+    - und: both orientations of pairs.
+    - deg: (n, d) node degrees.
+
+    This is the only fact-sized work of the wedge queries; all that
+    follows runs on the |E|-sized edge list. graph2.EDGE_BUILD_SQL
+    is the oracle form."""
+    allpairs = (
+        posting_lists(spark, sf_dir)
+        .select(F.explode(ordered_pairs("ss", "u", "v")).alias("p"))
+        .select("p.u", "p.v")
+        .groupBy("u", "v")
+        .agg(F.count(F.lit(1)).alias("shared"))
+    )
+    # 1-row aggregate broadcast onto the pair table
+    cut = allpairs.agg(
+        F.expr("percentile_disc(0.90) WITHIN GROUP (ORDER BY shared)").alias(
+            "thr"
+        )
+    )
+    pairs = (
+        allpairs.crossJoin(F.broadcast(cut))
+        .filter(F.col("shared") >= F.col("thr"))
+        .select("u", "v")
+        .localCheckpoint()
+    )
+    und = pairs.unionByName(
+        pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    )
+    deg = und.groupBy(F.col("u").alias("n")).agg(F.count(F.lit(1)).alias("d"))
+    return pairs, und, deg
+
+
 TRIANGLE_ORACLE = """
 -- Triangle counting with DEGREE-ORDERED edge orientation (the
 -- standard scalable formulation: orienting every edge from its
@@ -278,62 +335,12 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     counted exactly once, and out-degrees are O(sqrt(|E|))-bounded so
     the wedge self-join stays polynomial even with hub nodes — the
     formulation that survives power-law graphs at scale. The only
-    fact-sized work is the shared-customer edge build (one distinct
-    + one count aggregate); orientation, wedges, and closure checks
-    run on the |E|-sized edge list (checkpointed once for its three
-    consumers).
-
-    Round-14 kept repartition(c) + dropDuplicates + cap window +
-    self-join on one exchange; round-15 (guide §2.4, kept: −13%
-    sf0.1 / wash sf1 interleaved, values identical) collapses the
-    dedup, the posting-list cap, AND the per-customer self-join into
-    ONE aggregation: groupBy(c) + slice(sort_array(collect_set(s)),
-    1, 20) — the partial collect_set dedups map-side, the slice IS
-    the "20 smallest supplier ids" cap (same discipline as the
-    dedup inverted index: bounds the per-customer pair quadratic at
-    C(20,2); without it sf1's ~40-supplier customers emit ~120M
-    pair rows — OOMed local[32] in the sf1 sweep), and the ordered
-    pairs explode from the capped array with a codegen'd transform
-    instead of a join (exactly the s < s' pairs the self-join
-    produced). Per-key aggregation state is bounded by the suppkey
-    filter (<1000 distinct s per c) pre-cap."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    cs_sets = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .filter(F.col("l_suppkey") < 1000)
-        .select(
-            F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s")
-        )
-        .groupBy("c")
-        .agg(F.slice(F.sort_array(F.collect_set("s")), 1, 20).alias("ss"))
-    )
-    allpairs = (
-        cs_sets.select(F.explode(F.expr(_PAIR_EXPR)).alias("p"))
-        .select("p.u", "p.v")
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    # p90 cut: exact order statistic (engine-identical, scale-free —
-    # a fixed count threshold degenerates to complete/empty as sf
-    # moves); 1-row aggregate broadcast onto the pair table
-    cut = allpairs.agg(
-        F.expr(
-            "percentile_disc(0.90) WITHIN GROUP (ORDER BY shared)"
-        ).alias("thr")
-    )
-    pairs = (
-        allpairs.crossJoin(F.broadcast(cut))
-        .filter(F.col("shared") >= F.col("thr"))
-        .select("u", "v")
-        .localCheckpoint()
-    )
-    und = pairs.unionByName(
-        pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    deg = und.groupBy(F.col("u").alias("n")).agg(
-        F.count(F.lit(1)).alias("d")
-    )
+    fact-sized work is edge_build (one posting-list aggregation + one
+    pair-count aggregate; TRIANGLE_ORACLE states it as the DISTINCT +
+    ROW_NUMBER cap + self-join chain). Orientation, wedges and
+    closure checks run on the |E|-sized edge list, and the oriented
+    list is checkpointed once for its three consumers."""
+    pairs, und, deg = edge_build(spark, sf_dir)
     e = (
         pairs.join(
             F.broadcast(deg.select(F.col("n").alias("u"), F.col("d").alias("du"))),
@@ -427,40 +434,8 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same bounded edge build as graph_triangle_count (posting-list
     cap + p90 order-statistic cut), wedge aggregation through the
     shared endpoint, anti-join against existing edges, top-10 with
-    full tie-break. All post-edge-build work is |E|-sized. Round-15:
-    the one-aggregation collect_set edge build (dedup + cap +
-    self-join fused — see graph_triangle_count)."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    cs_sets = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .filter(F.col("l_suppkey") < 1000)
-        .select(
-            F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s")
-        )
-        .groupBy("c")
-        .agg(F.slice(F.sort_array(F.collect_set("s")), 1, 20).alias("ss"))
-    )
-    allpairs = (
-        cs_sets.select(F.explode(F.expr(_PAIR_EXPR)).alias("p"))
-        .select("p.u", "p.v")
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    cut = allpairs.agg(
-        F.expr(
-            "percentile_disc(0.90) WITHIN GROUP (ORDER BY shared)"
-        ).alias("thr")
-    )
-    pairs = (
-        allpairs.crossJoin(F.broadcast(cut))
-        .filter(F.col("shared") >= F.col("thr"))
-        .select("u", "v")
-        .localCheckpoint()
-    )
-    und = pairs.unionByName(
-        pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
+    full tie-break. All post-edge-build work is |E|-sized."""
+    pairs, und, _deg = edge_build(spark, sf_dir)
     e1 = und.alias("e1")
     e2 = und.alias("e2")
     wedges = (

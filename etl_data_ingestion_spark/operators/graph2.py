@@ -1,14 +1,14 @@
-"""Wave-20 graph analytics: local clustering coefficients,
-Adamic-Adar link prediction, deterministic 2-round label
-propagation, and HITS hubs/authorities.
+"""Graph analytics on the supplier co-purchase graph: local
+clustering coefficients, Adamic-Adar link prediction, deterministic
+2-round label propagation, HITS hubs/authorities and k-truss edge
+support.
 
-All four run on the supplier co-purchase graph family established by
-graph.py (graph_triangle_count's bounded edge build: distinct
-customer-supplier incidences, a 20-smallest-suppliers posting-list
-cap, pair counting, and an exact p90 order-statistic cut — the
-degenerate-free construction that survives every sf). The edge build
-is the ONLY fact-sized work; every algorithm below runs on the
-|E|-sized edge list.
+The graph comes from graph.edge_build, the edge build shared with
+graph_triangle_count and graph_link_prediction (capped per-customer
+posting lists, in-row pair explode, exact p90 cut); HITS reads the
+posting lists themselves through graph.posting_lists. That build is
+the ONLY fact-sized work; every algorithm below runs on the |E|-sized
+edge list. The oracles state it as EDGE_BUILD_SQL.
 
 Exactness discipline: clustering/LPA are pure integer math; the two
 score-accumulating algorithms (Adamic-Adar, HITS) pre-snap each term
@@ -22,13 +22,13 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from etl_data_ingestion_spark.catalog import load_table
-from etl_data_ingestion_spark.operators.graph import _PAIR_EXPR
+from etl_data_ingestion_spark.operators import graph
 from etl_data_ingestion_spark.plans.registry import register
 
-# Shared SQL prefix: the graph_triangle_count edge build, verbatim
-# (graph.py TRIANGLE_ORACLE) — cited rather than re-derived so the
-# two operator families stay on the same graph.
+# The oracle form of graph.edge_build, shared as the prefix of the
+# oracles below: cs0/cs state graph.posting_lists as DISTINCT + a
+# ROW_NUMBER cap, allpairs states the in-row pair explode as a
+# self-join, then the p90 cut, und and deg as edge_build returns them.
 EDGE_BUILD_SQL = """
 WITH cs0 AS (
   SELECT DISTINCT o.o_custkey AS c, l.l_suppkey AS s
@@ -52,58 +52,6 @@ WITH cs0 AS (
 ), deg AS (
   SELECT u AS n, COUNT(*) AS d FROM und GROUP BY u
 )"""
-
-
-def _edges(spark: SparkSession, sf_dir: str):
-    """The graph_triangle_count edge build (graph.py:247 family):
-    returns (pairs, und, deg) DataFrames. pairs is localCheckpointed
-    — it has multiple consumers in every caller.
-
-    Round-14 collapsed the chain onto one exchange (repartition(c));
-    round-15 (guide §2.4, kept: triangle A/B −13% sf0.1 / wash sf1,
-    values identical) fuses the (c,s) dedup, the 20-smallest cap,
-    and the per-customer self-join into ONE groupBy(c) aggregation:
-    slice(sort_array(collect_set(s)), 1, 20) + a codegen'd ordered-
-    pair transform replaces dropDuplicates + the row_number window +
-    the SMJ self-join (see graph_triangle_count for the full
-    rationale; per-key set size is bounded by the suppkey filter)."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    cs0 = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .filter(F.col("l_suppkey") < 1000)
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .repartition(F.col("c"))
-        .dropDuplicates(["c", "s"])
-    )
-    wcap = Window.partitionBy("c").orderBy("s")
-    cs = (
-        cs0.withColumn("rn", F.row_number().over(wcap))
-        .filter(F.col("rn") <= 20)
-        .select("c", "s")
-    )
-    a, b = cs.alias("a"), cs.alias("b")
-    allpairs = (
-        a.join(b, (F.col("a.c") == F.col("b.c")) & (F.col("a.s") < F.col("b.s")))
-        .groupBy(F.col("a.s").alias("u"), F.col("b.s").alias("v"))
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    cut = allpairs.agg(
-        F.expr("percentile_disc(0.90) WITHIN GROUP (ORDER BY shared)").alias(
-            "thr"
-        )
-    )
-    pairs = (
-        allpairs.crossJoin(F.broadcast(cut))
-        .filter(F.col("shared") >= F.col("thr"))
-        .select("u", "v")
-        .localCheckpoint()
-    )
-    und = pairs.unionByName(
-        pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    deg = und.groupBy(F.col("u").alias("n")).agg(F.count(F.lit(1)).alias("d"))
-    return pairs, und, deg
 
 
 # ------------------------------------- local clustering coefficient
@@ -149,7 +97,7 @@ def graph_local_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     How clustered is each supplier's neighborhood (the homophily /
     community-structure diagnostic under the modularity operator)?
     Pure integer math plus one final division per node."""
-    pairs, und, deg = _edges(spark, sf_dir)
+    pairs, und, deg = graph.edge_build(spark, sf_dir)
     e = pairs.join(
         F.broadcast(deg.select(F.col("n").alias("u"), F.col("d").alias("du"))),
         "u",
@@ -242,7 +190,7 @@ def graph_adamic_adar_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the shared endpoint (|E|-sized per the bounded build),
     anti-join against existing edges, exact-integer score sums
     (terms pre-snapped at 1e-9), top-10 with full tie-break."""
-    pairs, und, deg = _edges(spark, sf_dir)
+    pairs, und, deg = graph.edge_build(spark, sf_dir)
     a, b = und.alias("a"), und.alias("b")
     wedge = a.join(
         b, (F.col("a.v") == F.col("b.v")) & (F.col("a.u") < F.col("b.u"))
@@ -322,7 +270,7 @@ def graph_label_propagation_2round(spark: SparkSession, sf_dir: str) -> DataFram
     total-order tie-breaks: no randomness, no oscillation, identical
     in both engines. Per round: one join keyed on the node id + one
     (node, label) aggregation — |E|-sized, AQE-coalesced."""
-    pairs, und, deg = _edges(spark, sf_dir)
+    pairs, und, deg = graph.edge_build(spark, sf_dir)
     labels = deg.select("n", F.col("n").alias("lab"))
     for _round in range(2):
         votes = (
@@ -410,18 +358,10 @@ def graph_hits_fixed_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     max-normalization keeps every accumulation an order-free BIGINT
     sum). Scale shape: each half-round is one join keyed on the
     incidence edge + one aggregation; the 1-row MAX broadcasts."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    # round-15: dedup + 20-smallest cap fused into one groupBy(c)
-    # collect_set aggregation (see _edges / graph_triangle_count);
-    # hits consumes the capped (c, s) incidence list itself, so the
-    # capped sorted array just explodes back to rows
+    # the capped (c, s) incidence list: the shared posting lists
+    # exploded back to rows
     cs = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .filter(F.col("l_suppkey") < 1000)
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .groupBy("c")
-        .agg(F.slice(F.sort_array(F.collect_set("s")), 1, 20).alias("ss"))
+        graph.posting_lists(spark, sf_dir)
         .select("c", F.explode("ss").alias("s"))
         .localCheckpoint()  # four join consumers below
     )
@@ -459,7 +399,7 @@ def graph_hits_fixed_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------- wave 24: k-truss edge support
+# ------------------------------------------ k-truss edge support
 
 KTRUSS_ORACLE = EDGE_BUILD_SQL + """
 , oriented AS (
@@ -507,7 +447,7 @@ def graph_ktruss_edge_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a projection union, no join), support is one edge-keyed count,
     and the histogram is an |support-domain|-sized rollup. Pure
     integer math end to end."""
-    pairs, und, deg = _edges(spark, sf_dir)
+    pairs, und, deg = graph.edge_build(spark, sf_dir)
     e = (
         pairs.join(
             F.broadcast(

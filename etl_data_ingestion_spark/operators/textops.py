@@ -12,6 +12,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from etl_data_ingestion_spark.catalog import load_table
+from etl_data_ingestion_spark.functions.arrays import ordered_pairs
 from etl_data_ingestion_spark.functions.text import (
     BPE_ISH_PATTERN,
     rolling_fingerprint,
@@ -1464,13 +1465,8 @@ def text_source_vocab_jaccard(
     )
     # sorted srcs ⇒ x precedes y ⇔ x < y (binary string order, the
     # same `<` the oracle's self-join applies)
-    pair_expr = (
-        "flatten(transform(srcs, (x, i) -> "
-        "transform(slice(srcs, i + 2, size(srcs)), "
-        "y -> struct(x as src_a, y as src_b))))"
-    )
     inter = (
-        tsets.select(F.explode(F.expr(pair_expr)).alias("p"))
+        tsets.select(F.explode(ordered_pairs("srcs", "src_a", "src_b")).alias("p"))
         .select("p.src_a", "p.src_b")
         .groupBy("src_a", "src_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))

@@ -17,12 +17,13 @@ def _exec_plan(spark, name, sf_dir):
 
 
 def test_pair_expr_expands_ordered_pairs(spark):
-    """Device test for the codegen'd ordered-pair expansion that
-    replaced the per-customer/per-gram/per-token self-joins (wedge
-    edge build, vocab jaccard, threshold curve): over a sorted array
-    it must emit exactly the (x, y) pairs with x < y, in-order, and
-    nothing for arrays shorter than 2."""
-    from etl_data_ingestion_spark.operators.graph import _PAIR_EXPR
+    """Device test for functions.arrays.ordered_pairs, the in-row
+    ordered-pair expansion that replaced the per-customer/per-gram/
+    per-token/per-bucket self-joins (wedge edge build, vocab jaccard,
+    threshold curve, minhash buckets): over a sorted array it must
+    emit exactly the (x, y) pairs with x < y, in-order, and nothing
+    for arrays shorter than 2 — struct elements included."""
+    from etl_data_ingestion_spark.functions.arrays import ordered_pairs
 
     df = spark.createDataFrame(
         [(1, [3, 5, 9]), (2, [7]), (3, [])], "k int, ss array<int>"
@@ -30,12 +31,36 @@ def test_pair_expr_expands_ordered_pairs(spark):
     rows = sorted(
         tuple(r)
         for r in df.select(
-            "k", F.explode(F.expr(_PAIR_EXPR)).alias("p")
+            "k", F.explode(ordered_pairs("ss", "u", "v")).alias("p")
         )
         .select("k", "p.u", "p.v")
         .collect()
     )
     assert rows == [(1, 3, 5), (1, 3, 9), (1, 5, 9)], rows
+
+    # the dedup_minhash_lsh bucket shape: (doc_id, sig) structs
+    items = spark.createDataFrame(
+        [([(2, [1, 2]), (4, [3, 4]), (8, [5, 6])],)],
+        "items array<struct<doc_id:bigint, sig:array<int>>>",
+    )
+    rows = sorted(
+        (r.doc_a, list(r.sig_a), r.doc_b, list(r.sig_b))
+        for r in items.select(
+            F.explode(ordered_pairs("items", "a", "b")).alias("p")
+        )
+        .select(
+            F.col("p.a.doc_id").alias("doc_a"),
+            F.col("p.a.sig").alias("sig_a"),
+            F.col("p.b.doc_id").alias("doc_b"),
+            F.col("p.b.sig").alias("sig_b"),
+        )
+        .collect()
+    )
+    assert rows == [
+        (2, [1, 2], 4, [3, 4]),
+        (2, [1, 2], 8, [5, 6]),
+        (4, [3, 4], 8, [5, 6]),
+    ], rows
 
 
 def test_corr_matrix_has_no_literal_relation_or_crossjoin(spark, sf_dir):
@@ -91,34 +116,85 @@ def test_pq_rerank_shortlist_is_map_side(spark, sf_dir):
     spark.catalog.clearCache()
 
 
-def test_wedge_edge_build_is_one_aggregation(spark, sf_dir):
-    """The r15 keep (triangle −13% sf0.1 / wash sf1): the capped
-    per-customer posting list comes from one groupBy(c) collect_set
-    aggregation — no row_number cap window, no cs self-join. Pinned
-    on the pre-checkpoint subplan (the registered query's plan starts
-    at the localCheckpoint, which hides the edge build)."""
-    from etl_data_ingestion_spark.catalog import load_table
-    from etl_data_ingestion_spark.operators.graph import _PAIR_EXPR
+def _plan_joins(plan):
+    return sum(plan.count(j) for j in
+               ("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin"))
 
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    cs_sets = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .filter(F.col("l_suppkey") < 1000)
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .groupBy("c")
-        .agg(F.slice(F.sort_array(F.collect_set("s")), 1, 20).alias("ss"))
-    )
-    allpairs = (
-        cs_sets.select(F.explode(F.expr(_PAIR_EXPR)).alias("p"))
-        .select("p.u", "p.v")
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    plan = allpairs._jdf.queryExecution().executedPlan().toString()
+
+def test_wedge_edge_build_is_one_aggregation(spark, sf_dir, monkeypatch):
+    """The shared wedge edge build: the capped per-customer posting
+    list is one groupBy(c) collect_set aggregation over the
+    orders-lineitem join — no row_number cap window, no cs self-join.
+    Pinned on graph.posting_lists itself and on the subplan
+    graph.edge_build checkpoints (the registered queries' plans start
+    at that localCheckpoint, which hides the edge build)."""
+    from etl_data_ingestion_spark.operators import graph
+
+    plan = graph.posting_lists(spark, sf_dir)._jdf.queryExecution() \
+        .executedPlan().toString()
     assert "collect_set" in plan, plan[:3000]
     assert "row_number" not in plan, plan[:3000]
+    assert "Window" not in plan, plan[:3000]
     # the only join is the orders-lineitem fact join
-    n_joins = sum(plan.count(j) for j in
-                  ("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin"))
-    assert n_joins == 1, plan[:3000]
+    assert _plan_joins(plan) == 1, plan[:3000]
+
+    checkpointed = []
+    df_class = type(spark.range(1))
+    real_checkpoint = df_class.localCheckpoint
+
+    def spy(df, *args, **kwargs):
+        checkpointed.append(
+            df._jdf.queryExecution().executedPlan().toString()
+        )
+        return real_checkpoint(df, *args, **kwargs)
+
+    monkeypatch.setattr(df_class, "localCheckpoint", spy)
+    graph.edge_build(spark, sf_dir)
+    assert len(checkpointed) == 1, len(checkpointed)
+    (plan,) = checkpointed
+    assert "row_number" not in plan, plan[:3000]
+    assert "Window" not in plan, plan[:3000]
+    # the p90 cut re-reads the pair counts, so the subtree appears
+    # twice; in each copy the fact join is the only equi-join, under
+    # one collect_set aggregation
+    n_aggs = plan.count("functions=[collect_set(")
+    assert n_aggs >= 1, plan[:3000]
+    assert _plan_joins(plan) == n_aggs, plan[:3000]
+
+
+WEDGE_QUERIES = {
+    "graph_triangle_count": "edge_build",
+    "graph_link_prediction": "edge_build",
+    "graph_local_clustering_coeff": "edge_build",
+    "graph_adamic_adar_topk": "edge_build",
+    "graph_label_propagation_2round": "edge_build",
+    "graph_ktruss_edge_support": "edge_build",
+    "graph_hits_fixed_iter": "posting_lists",
+}
+
+
+def test_wedge_queries_use_the_shared_edge_build(spark, sf_dir, monkeypatch):
+    """Every wedge-family query builds its graph through exactly one
+    call of graph.edge_build (or, for HITS, graph.posting_lists) —
+    a private copy of the edge build in any caller fails here."""
+    from etl_data_ingestion_spark.operators import graph
+
+    calls = []
+    for name in ("edge_build", "posting_lists"):
+        real = getattr(graph, name)
+
+        def counting(*args, _name=name, _real=real, **kwargs):
+            calls.append(_name)
+            return _real(*args, **kwargs)
+
+        monkeypatch.setattr(graph, name, counting)
+    for query, helper in WEDGE_QUERIES.items():
+        calls.clear()
+        reg.QUERIES[query](spark, sf_dir)
+        # edge_build reads the posting lists once itself
+        expected = (
+            ["edge_build", "posting_lists"]
+            if helper == "edge_build"
+            else ["posting_lists"]
+        )
+        assert calls == expected, (query, calls)

@@ -1,5 +1,5 @@
 """Wave-20 tests: Python graph mirrors. The edge list is taken from
-the shared _edges build (collected once), and each algorithm is
+the shared graph.edge_build (collected once), and each algorithm is
 re-implemented independently in plain Python over that edge list."""
 
 from __future__ import annotations
@@ -7,14 +7,14 @@ from __future__ import annotations
 import math
 from collections import Counter, defaultdict
 
-from etl_data_ingestion_spark.operators.graph2 import _edges
+from etl_data_ingestion_spark.operators.graph import edge_build
 from etl_data_ingestion_spark.plans import registry
 
 registry.load_all()
 
 
 def _collect_graph(spark, sf_dir):
-    pairs, und, deg = _edges(spark, sf_dir)
+    pairs, und, deg = edge_build(spark, sf_dir)
     edges = [(r.u, r.v) for r in pairs.collect()]
     adj: dict = defaultdict(set)
     for u, v in edges:
