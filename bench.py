@@ -5,8 +5,12 @@ Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
 line: {"metric": ..., "value": N, "unit": "sec", "queries": {...},
 "sf": ...}.
 
-Each query executes via the no-op sink so timing covers the full
-distributed plan without driver-side materialization.
+That short line is the last stdout line. The full artifact (every
+tier: headline, resident, extended, DuckDB oracles, scale curve,
+bucketed q3) precedes it and is written to BENCH_FULL.json, the
+drift baseline. Each query executes via the no-op sink so timing
+covers the full distributed plan without driver-side
+materialization.
 """
 
 from __future__ import annotations
@@ -15,7 +19,9 @@ import json
 import os
 import re
 import sys
+import threading
 import time
+from typing import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -43,16 +49,13 @@ HEADLINE = [
     "pipeline_training_data_curation",
 ]
 
-# Tier policy (written down per round-4 verdict): HEADLINE is FROZEN
-# — it is the round-over-round comparable and never grows, so
-# "value" means the same work in every BENCH_r*.json. New operators
-# enter EXTENDED in the round they land and STAY there (min-of-2
-# each, reported under "extended" with their oracle times — perf
-# visibility without moving the baseline). If a future round ever
-# needs to re-baseline (e.g. HEADLINE queries removed), it must bump
-# the metric name, not silently change the set.
+# Tier policy: HEADLINE is FROZEN, so "value" means the same work in
+# every artifact; a re-baseline (e.g. a HEADLINE query removed) bumps
+# the metric name instead of silently changing the set. New operators
+# enter EXTENDED when they land and STAY there (min-of-2 each,
+# reported under "extended" with their oracle times: perf visibility
+# without moving the baseline). EXTENDED is in landing order.
 EXTENDED = [
-    # round 4
     "similarity_pq_rerank",
     "join_bloom_pruned",
     "dedup_bloom_incremental",
@@ -63,7 +66,6 @@ EXTENDED = [
     "window_cumulative_distinct_users",
     "events_transition_matrix",
     "pipeline_dsir_weights",
-    # round 5
     "graph_pagerank_bipartite",
     "dedup_end_to_end_canonical",
     "text_bigram_lm_perplexity",
@@ -91,7 +93,6 @@ EXTENDED = [
     "events_dau_wau_mau",
     "agg_winsorized_mean",
     "agg_quantile_histogram_rollup",
-    # round 5, third wave
     "multimodal_video_frames_real",
     "dedup_repeated_lines_corpus",
     "text_zipf_slope",
@@ -154,14 +155,12 @@ EXTENDED = [
     "agg_chi2_independence",
     "text_pmi_cooccurrence",
     "timeseries_max_drawdown",
-    # round 7
     "text_bm25_topk",
     "ml_confusion_matrix_metrics",
     "ml_ndcg_at_k",
     "ml_precision_recall_curve",
     "pipeline_tokenizer_fertility",
     "similarity_range_search",
-    # round 8
     "ml_cohen_kappa",
     "ml_gain_lift_deciles",
     "agg_ab_test_ztest",
@@ -175,7 +174,6 @@ EXTENDED = [
     "ml_brier_decomposition",
     "text_ngram_novelty",
     "text_source_vocab_jaccard",
-    # round 8 wave 3
     "ml_mcnemar_test",
     "ml_log_loss",
     "ml_kendall_tau_daily",
@@ -184,90 +182,69 @@ EXTENDED = [
     "text_rake_keywords",
     "timeseries_sax_symbols",
     "graph_degree_distribution",
-    # round 8 wave 4
     "text_kneser_ney_bigram",
     "timeseries_bollinger_bands",
     "agg_abc_classification",
     "pipeline_source_cap_sample",
     "graph_kcore_peel",
     "ml_expected_calibration_error",
-    # round 8 wave 5
     "ml_average_precision",
     "ml_logreg_newton_probe",
     "timeseries_ljung_box",
     "agg_theil_inequality",
-    # round 8 wave 6
     "graph_assortativity",
     "events_bot_regularity",
-    # round 8 wave 7
     "timeseries_rolling_zscore_by_key",
-    # round 8 wave 8
     "agg_pareto_frontier",
     "timeseries_cross_correlation",
     "embedding_pca_power_iteration",
     "ml_item_item_cf",
     "text_tfidf_cosine_pairs",
-    # round 8 wave 9
     "agg_corr_matrix_daily",
     "timeseries_granger_lag1",
     "text_inverted_index_phrase",
     "embedding_matryoshka_agreement",
-    # round 8 wave 10
     "graph_community_modularity",
     "ml_feature_hash_collisions",
     "agg_countmin_width_sweep",
-    # round 8 wave 11
     "timeseries_dtw_distance",
     "scan_csv_multiline_quoted",
-    # round 8 wave 12
     "events_anova_weekday",
     "pandas_cogroup_reconcile",
-    # round 8 wave 13
     "subquery_not_in_null_semantics",
     "stream_outer_interval_join",
     "quality_date_gaps",
-    # round 8 wave 14
     "ml_isotonic_calibration_bins",
     "agg_hill_tail_index",
     "timeseries_periodogram_fixed",
-    # round 8 wave 15
     "ml_mann_whitney_u",
     "ml_price_elasticity_by_brand",
-    # round 8 wave 16
     "timeseries_hurst_rs",
-    # round 8 wave 17
     "agg_lorenz_curve_deciles",
     "window_gaps_islands_dates",
-    # round 9 wave 18
     "agg_kruskal_wallis",
     "agg_benjamini_hochberg_fdr",
     "timeseries_runs_test",
     "timeseries_pacf_durbin",
     "agg_cochran_armitage_trend",
-    # round 9 wave 19
     "ml_mrr_at_10",
     "ml_recall_at_10",
     "ml_ols_normal_equations",
     "text_oov_rate_cross_source",
-    # round 9 wave 20
     "graph_local_clustering_coeff",
     "graph_adamic_adar_topk",
     "graph_label_propagation_2round",
     "graph_hits_fixed_iter",
-    # round 9 wave 21
     "quality_unreferenced_parents",
     "dedup_savings_by_source",
     "pipeline_token_budget_waterfill",
-    # round 9 wave 22
     "events_attribution_position_based",
     "timeseries_variance_ratio",
     "timeseries_wow_growth",
     "events_churn_rate_weekly",
-    # round 9 wave 23
     "ml_simplified_silhouette",
     "scalar_higher_order_funcs",
     "pandas_map_in_arrow_tokens",
-    # round 10 wave 24
     "agg_levene_variance_homogeneity",
     "agg_jarque_bera_normality",
     "agg_cramers_v",
@@ -276,100 +253,77 @@ EXTENDED = [
     "text_word_burstiness",
     "timeseries_spectral_entropy",
     "window_hampel_outliers",
-    # round 10 wave 25
     "agg_mann_kendall_trend",
     "agg_wilcoxon_signed_rank",
     "agg_robust_moments_octiles",
     "text_yule_k",
     "ml_ridge_normal_equations",
     "pipeline_neyman_allocation",
-    # round 10 wave 26
     "quality_l_diversity",
     "events_decayed_engagement",
     "agg_grubbs_outlier",
     "timeseries_var_expected_shortfall",
-    # round 10 wave 27
     "agg_hodges_lehmann_shift",
     "events_bounce_rate_by_entry",
-    # round 11 wave 28 (added late — the first round-11 session
-    # registered these but missed the enter-EXTENDED step; gap
-    # closed here per the tier policy above)
     "quality_t_closeness",
     "pipeline_train_test_split_hash",
     "timeseries_ewma_crossover",
     "text_mattr_lexical_diversity",
     "ml_roc_curve_points",
-    # round 11 wave 29
     "agg_friedman_test",
     "agg_cronbach_alpha",
     "ml_decision_stump_gini",
     "timeseries_permutation_entropy",
     "graph_rich_club_coefficient",
-    # round 11 wave 30
     "agg_gumbel_block_maxima",
     "agg_cochran_q_test",
     "ml_fisher_lda_closed_form",
     "timeseries_sample_entropy",
     "quality_functional_dependencies",
-    # round 11 wave 31
     "timeseries_engle_granger_coint",
     "ml_jackknife_ratio_variance",
     "agg_capture_recapture_chapman",
     "ml_poisson_deviance",
     "text_burrows_delta",
-    # round 11 wave 32
     "timeseries_kpss_stationarity",
     "ml_loo_1nn_embedding_accuracy",
     "ml_empirical_bayes_shrinkage",
     "ml_conformal_interval_coverage",
-    # round 11 wave 33
     "ml_logrank_test",
     "agg_energy_distance_weekend",
     "agg_circular_hour_stats",
     "events_post_stratified_lift",
-    # round 11 wave 34
     "ml_xi_correlation",
     "agg_tail_dependence_extremes",
     "agg_partial_correlation",
     "ml_sprt_sequential_test",
-    # round 11 wave 35
     "events_cuped_adjusted_lift",
     "agg_lmoments_daily",
     "pipeline_dedup_threshold_curve",
-    # round 11 wave 36
     "agg_ledoit_wolf_shrinkage",
     "ml_power_analysis_two_prop",
-    # round 11 wave 37
     "timeseries_turning_points_test",
     "timeseries_peak_prominence",
-    # round 12 wave 38
     "agg_wasserstein_weekend",
     "agg_cramer_von_mises_weekend",
     "agg_durbin_watson_daily",
     "text_good_turing_estimates",
     "ml_km_survival_curve",
-    # round 12 wave 39
     "agg_bartlett_variance_test",
     "agg_herfindahl_concentration",
     "agg_poisson_overdispersion",
     "events_page_hinkley_drift",
-    # round 12 wave 40
     "agg_jonckheere_terpstra",
     "agg_cmh_stratified_test",
     "agg_mood_median_test",
     "similarity_ratio_margin",
     "pipeline_length_weight_ess",
-    # round 13 wave 41
     "text_yule_k_characteristic",
     "pipeline_weighted_priority_sample",
     "agg_bh_fdr_source_drift",
     "similarity_label_mmd_drift",
-    # round 13 wave 42
     "ml_cooks_distance_topk",
     "agg_mahalanobis_outliers",
-    # round 14 wave 43 (added per the tier policy above: new operators
-    # enter EXTENDED in the round they land — the mid-build round-14
-    # session registered them but missed this step)
     "agg_cohens_d_weekend",
     "agg_chow_break_daily",
     "agg_breusch_pagan_order_size",
@@ -377,8 +331,85 @@ EXTENDED = [
 ]
 
 
-def run_query(spark, name: str, sf_dir: str, resident: bool = False) -> float:
-    fn = registry.QUERIES[name]
+HERE = os.path.dirname(os.path.abspath(__file__))
+
+
+def sample_interleaved(
+    keys: list[str],
+    run: Callable[[str], float | None],
+    passes: int,
+    retries: int = 0,
+    done: Callable[[list[float]], bool] | None = None,
+    warm: bool = True,
+) -> tuple[dict[str, float], dict[str, list[float]]]:
+    """Interleaved min-of-N: the one sampler behind every bench tier and
+    tool. Returns ({key: min sample}, {key: all samples}).
+
+    The host shows CPU contention in multi-minute bursts, and a single
+    sample inside one can read 2-3x high; the minimum is the
+    noise-robust estimator, and all samples are kept so a regression
+    (all high) can be told from a burst (high min, wide spread).
+
+    - An untimed warm pass (``warm``) runs every key once first: a
+      query's first execution also pays its own codegen, broadcast
+      threads and Python-worker start-up, which is per-process
+      overhead, not plan cost.
+    - Each of ``passes`` passes then takes one sample of every key in
+      turn, so a burst lasting one pass poisons at most one sample per
+      key instead of all samples of one key.
+    - Up to ``retries`` extra passes re-sample only the keys whose max
+      is >= 2x their min: a burst spanning every pass leaves the min
+      itself poisoned, and clean keys don't pay for the retry.
+
+    A key is skipped from the moment ``run`` returns None for it (timed
+    out, or nothing to run; it is then absent from the mins) and once
+    ``done(its samples)`` holds (e.g. a heavy oracle whose first sample
+    already costs more than a second one would buy).
+    """
+    samples: dict[str, list[float]] = {k: [] for k in keys}
+    dropped: set[str] = set()
+
+    def live(k: str) -> bool:
+        s = samples[k]
+        return k not in dropped and not (s and done and done(s))
+
+    def take(k: str, timed: bool = True) -> None:
+        v = run(k)
+        if v is None:
+            dropped.add(k)
+        elif timed:
+            samples[k].append(v)
+
+    if warm:
+        for k in keys:
+            take(k, timed=False)
+    for _pass in range(passes):
+        for k in keys:
+            if live(k):
+                take(k)
+    for _retry in range(retries):
+        flagged = [
+            k
+            for k in keys
+            if live(k)
+            and len(samples[k]) >= 2
+            and max(samples[k]) >= 2 * min(samples[k])
+        ]
+        if not flagged:
+            break
+        for k in flagged:
+            take(k)
+    best = {k: min(s) for k, s in samples.items() if s and k not in dropped}
+    return best, samples
+
+
+def run_query(
+    spark, name: str, sf_dir: str, resident: bool = False, fn=None
+) -> float:
+    """Seconds to run registry query ``name`` (or the builder ``fn``, an
+    A/B arm) through the no-op sink: the full distributed plan without
+    driver-side materialization."""
+    fn = fn or registry.QUERIES[name]
     # cold per sample: operators that persist intermediates (minhash
     # signatures, IVF assignment) must re-earn them each run, or the
     # second sample measures a cached different computation
@@ -397,99 +428,275 @@ def run_query(spark, name: str, sf_dir: str, resident: bool = False) -> float:
     return time.perf_counter() - t0
 
 
+def time_spark(
+    spark,
+    names: list[str],
+    sf_dir: str,
+    passes: int,
+    retries: int = 0,
+    resident: bool = False,
+) -> tuple[dict[str, float], dict[str, list[float]]]:
+    """Cold registry-query timings through the sampler, in ms-rounded
+    seconds."""
+    return sample_interleaved(
+        names,
+        lambda n: round(run_query(spark, n, sf_dir, resident), 3),
+        passes,
+        retries,
+    )
+
+
+def warm_up(spark, sf_dir: str, cpus: int) -> None:
+    """Warm the JVM/codegen once with a cheap query so timings reflect
+    steady-state execution, not first-call classloading; likewise spin
+    up the Python/Arrow workers (numpy import per worker) so UDF-stage
+    queries measure compute, not process forks."""
+    from pyspark.sql.functions import pandas_udf
+
+    run_query(spark, HEADLINE[0], sf_dir)
+    ones = pandas_udf(lambda x: x * 0 + 1, "long")
+    spark.range(0, cpus, 1, cpus).select(ones("id")).write.mode(
+        "overwrite"
+    ).format("noop").save()
+
+
+def duckdb_views(sf_dir: str, cpus: int | None = None):
+    """A DuckDB connection with one view per catalog table over the
+    parquet in ``sf_dir``; ``threads=cpus`` when given."""
+    import duckdb
+
+    from etl_data_ingestion_spark.catalog import TABLES, table_path
+
+    con = duckdb.connect()
+    if cpus:
+        con.execute(f"SET threads={cpus}")
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(sf_dir, t)}')"
+        )
+    return con
+
+
+def duckdb_run(con, sql: str, fetch: str = "fetchall"):
+    """Run ``sql`` to completion (``fetch`` forces materialization) and
+    return (seconds, result), or None if it is still running after
+    $SPARK_GRAFT_ORACLE_TIMEOUT seconds (default 180) and was
+    interrupted: brute-force ground-truth oracles are superlinear
+    (all-pairs Jaccard is O(docs²)) and stop terminating at the
+    scale-curve sfs long before the Spark side does."""
+    import duckdb
+
+    budget = float(os.environ.get("SPARK_GRAFT_ORACLE_TIMEOUT", "180"))
+    timer = threading.Timer(budget, con.interrupt)
+    timer.start()
+    t0 = time.perf_counter()
+    try:
+        out = getattr(con.execute(sql), fetch)()
+        return time.perf_counter() - t0, out
+    except duckdb.InterruptException:
+        return None
+    finally:
+        timer.cancel()
+
+
 def time_oracles(
     names: list[str], sf_dir: str, cpus: int
 ) -> tuple[dict[str, float | None], list[str]]:
     """Best-of-N DuckDB timings for each query's oracle SQL on the same
     parquet — the 2x perf gate is defined against these, so the artifact
-    should carry them instead of each judge re-timing by hand.
+    carries them instead of a reader re-timing them by hand.
 
-    Samples are INTERLEAVED across queries in passes — the SAME burst
-    protection the Spark samples get. Round 4 learned this the hard
-    way: back-to-back per-query sampling let one multi-minute host
-    contention burst poison all three DuckDB samples of every query it
-    covered, inflating the DuckDB side ~4x and making the artifact's
-    ratio_total_comparable flattering-but-wrong (2.33 reported vs 9.1
-    re-timed idle). Interleaving bounds a one-pass burst to one sample
-    per query; the adaptive tail below re-samples queries whose spread
-    says every pass was dirty.
+    Samples are interleaved across queries like the Spark samples:
+    back-to-back per-query sampling lets one contention burst poison
+    every sample of the queries it covers and makes the comparable
+    ratio flattering-but-wrong. There is no warm pass. Expensive
+    oracles (first sample >= 5s, e.g. the exact-Jaccard minhash ground
+    truth) get a single sample; cheap ones get best-of-3 plus up to 2
+    adaptive retries.
 
-    Expensive oracles (first sample >= 5s, e.g. the exact-Jaccard
-    minhash ground truth: ~93s at sf0.1) get a single sample; cheap
-    ones get best-of-3 (+ up to 2 adaptive retries when max >= 2x min).
-    Queries with no registered oracle map to None.
-
-    An oracle still running after $SPARK_GRAFT_ORACLE_TIMEOUT seconds
-    (default 180) is interrupted and reported as None AND returned in
-    the second element so the caller can list it as heavy/timed-out
-    (previously silently absent): brute-force ground-truth oracles are
-    superlinear (all-pairs Jaccard is O(docs²)) and stop terminating at
-    the scale-curve sfs (sf>=0.3) long before the Spark side breaks a
-    sweat.
-    """
-    import threading
-
-    import duckdb
-
-    from etl_data_ingestion_spark.catalog import TABLES, table_path
-
-    budget = float(os.environ.get("SPARK_GRAFT_ORACLE_TIMEOUT", "180"))
-    con = duckdb.connect()
-    con.execute(f"SET threads={cpus}")
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(sf_dir, t)}')"
-        )
+    Queries with no registered oracle map to None; so do oracles
+    interrupted by ``duckdb_run``'s timeout, which are also returned
+    in the second element so the caller can list them as heavy."""
+    con = duckdb_views(sf_dir, cpus)
     timed_out: set[str] = set()
-    samples: dict[str, list[float]] = {}
 
-    def one_sample(name: str) -> None:
+    def run(name: str) -> float | None:
         sql = registry.ORACLES.get(name)
-        if sql is None or name in timed_out:
-            return
-        timer = threading.Timer(budget, con.interrupt)
-        timer.start()
-        t0 = time.perf_counter()
-        try:
-            con.execute(sql).fetchall()
-            samples.setdefault(name, []).append(time.perf_counter() - t0)
-        except duckdb.InterruptException:
+        if sql is None:
+            return None
+        r = duckdb_run(con, sql)
+        if r is None:
             timed_out.add(name)
-        finally:
-            timer.cancel()
+            return None
+        return r[0]
 
-    def done(name: str) -> bool:
-        # timed out, no oracle, or heavy (first sample >= 5s -> single
-        # sample: a second 90s pass buys no precision worth its cost)
-        if name in timed_out or registry.ORACLES.get(name) is None:
-            return True
-        s = samples.get(name, [])
-        return bool(s) and s[0] >= 5.0
+    best, _ = sample_interleaved(
+        names, run, passes=3, retries=2, done=lambda s: s[0] >= 5.0, warm=False
+    )
+    con.close()
+    return (
+        {n: round(best[n], 3) if n in best else None for n in names},
+        sorted(timed_out),
+    )
 
-    for _pass in range(3):
-        for name in names:
-            if _pass == 0 or not done(name):
-                one_sample(name)
-    for _retry in range(2):
-        flagged = [
-            n
-            for n in names
-            if not done(n)
-            and len(samples.get(n, [])) >= 2
-            and max(samples[n]) >= 2 * min(samples[n])
-        ]
-        if not flagged:
+
+def resident_tier(spark, names: list[str], sf_dir: str) -> dict[str, float]:
+    """The SAME frozen headline set re-timed with base-table scans
+    persisted in executor memory — the warehouse serving posture, and
+    the symmetric counterpart of DuckDB's best-of-N reading warm OS
+    page cache. Reported separately (value_resident /
+    ratio_total_comparable_resident); the cold-scan "value" remains
+    the comparable. The warm pass builds and materializes the cache."""
+    from etl_data_ingestion_spark.catalog import drop_resident
+
+    spark.conf.set("spark.etl.scan.resident", "true")
+    try:
+        return time_spark(
+            spark, names, sf_dir, passes=2, retries=2, resident=True
+        )[0]
+    finally:
+        spark.conf.set("spark.etl.scan.resident", "false")
+        drop_resident(spark)
+
+
+def drift_baseline(
+    path: str, sf: float | None, cpus: int
+) -> dict[str, dict[str, float]]:
+    """Per-lane query timings of the previous full artifact at ``path``
+    ("0.1-main": headline + extended; scale-curve lanes by label), or
+    {} unless it was recorded at the same sf AND the same cpus: a query
+    timed on another core count moved for that reason, not for a plan
+    change."""
+    try:
+        with open(path) as fh:
+            prev = json.load(fh)
+    except (OSError, ValueError):
+        return {}
+    if prev.get("sf") != sf or prev.get("cpus") != cpus:
+        return {}
+    main_q = {n: v.get("spark") for n, v in prev.get("extended", {}).items()}
+    main_q.update(prev.get("queries", {}))
+    lanes = {"0.1-main": main_q}
+    lanes.update(
+        (label, lane.get("queries", {}))
+        for label, lane in prev.get("scale_curve", {}).items()
+    )
+    return lanes
+
+
+def _lane_drift(cur: dict, prev_q: dict) -> tuple[list[str], float | None]:
+    """Drift alarm for one lane: the queries in ``cur`` >=2x slower than
+    in ``prev_q``, and the lane's median movement.
+
+    A lane-wide shift (host contention moves every query alike) is not
+    a plan regression, so a query is flagged only if it also moved >=2x
+    RELATIVE to the lane median, and ran >=1s (sub-second jitter can't
+    trip it). The median itself is reported so a reader can see the
+    contention."""
+    moves = {
+        n: t / prev_q[n] for n, t in cur.items() if prev_q.get(n) and prev_q[n] > 0
+    }
+    if not moves:
+        return [], None
+    med = sorted(moves.values())[len(moves) // 2]
+    flagged = [
+        n for n, m in moves.items() if cur[n] >= 1.0 and m >= 2.0 and m >= 2.0 * med
+    ]
+    return flagged, round(med, 3)
+
+
+def scale_curve_tier(
+    spark, sf_dir: str, names: list[str], cpus: int, baseline: dict
+) -> tuple[dict[str, dict], list[str]]:
+    """The comparable headline subset re-run cold at the other scale
+    factors, with DuckDB timed on the same files: the "floor amortizes
+    at scale" claim as an artifact. sf0.01 is looked up next to
+    ``sf_dir``; sf0.3 / sf1 are deterministic local fixtures
+    (tools/gen_scale.py, .scaledata/). A lane whose fixture dir is
+    absent is skipped and named on stderr. Each lane has its own
+    drift alarm against the same lane of ``baseline`` (from
+    drift_baseline), because a plan regression at scale shows there
+    first. Returns (lanes, drift
+    entries as "sf<label>:<query>")."""
+    curve_dirs = [
+        ("0.01", os.path.join(os.path.dirname(os.path.abspath(sf_dir)), "sf0.01")),
+        ("0.3", os.path.join(HERE, ".scaledata/sf0.3")),
+        ("1", os.path.join(HERE, ".scaledata/sf1")),
+    ]
+    lanes: dict[str, dict] = {}
+    drift: list[str] = []
+    for label, cdir in curve_dirs:
+        if not names:
             break
-        for name in flagged:
-            one_sample(name)
+        if not os.path.isdir(cdir):
+            print(f"bench: scale lane sf{label} skipped, no {cdir}", file=sys.stderr)
+            continue
+        c_timings, _ = time_spark(spark, names, cdir, passes=2)
+        c_duck, c_to = time_oracles(names, cdir, cpus)
+        c_comp = [n for n in names if c_duck[n] and c_duck[n] < 5.0]
+        c_drift, c_med = _lane_drift(c_timings, baseline.get(label, {}))
+        drift.extend(f"sf{label}:{n}" for n in c_drift)
+        spark_total = sum(c_timings[n] for n in c_comp)
+        duck_total = sum(c_duck[n] for n in c_comp)
+        lanes[label] = {
+            "drift_over_2x": sorted(c_drift),
+            "lane_median_move": c_med,
+            "spark_total": round(spark_total, 3),
+            "duckdb_total": round(duck_total, 3),
+            "ratio": round(spark_total / duck_total, 2) if c_comp else None,
+            "n_queries": len(c_comp),
+            "queries": c_timings,
+            "duckdb": {n: c_duck[n] for n in names},
+            "timed_out_oracles": c_to,
+        }
+    return lanes, drift
 
-    out: dict[str, float | None] = {}
-    for name in names:
-        if name in timed_out or name not in samples:
-            out[name] = None
-        else:
-            out[name] = round(min(samples[name]), 3)
-    return out, sorted(timed_out)
+
+def bucketed_q3_tier(spark, sf_dir: str, sf: float | None) -> dict[str, dict]:
+    """tpch_q3 timed with lineitem/orders on stock parquet scans and
+    stored bucketed+sorted on orderkey (enable_bucketed_facts), the two
+    arms interleaved: the documented 100 TB default layout, where the
+    fact-fact shuffle is paid once at write time. The bucket WRITE is
+    untimed (reported separately). Runs at ``sf_dir`` and, when
+    present, .scaledata/sf1."""
+    from etl_data_ingestion_spark import catalog
+
+    qname = "tpch_q3_shipping_priority"
+    bkt_dirs = [(str(sf), sf_dir)]
+    sf1_dir = os.path.join(HERE, ".scaledata/sf1")
+    if os.path.isdir(sf1_dir) and os.path.abspath(sf_dir) != os.path.abspath(sf1_dir):
+        bkt_dirs.append(("1", sf1_dir))
+    out: dict[str, dict] = {}
+    for label, bdir in bkt_dirs:
+        try:
+            t0 = time.perf_counter()
+            catalog.enable_bucketed_facts(spark, bdir, 32)
+            write_sec = round(time.perf_counter() - t0, 3)
+            # re-enabling after a disable would rewrite the tables, so
+            # the bucketed arm restores the routing the write set up.
+            # This relies on catalog's private route registry
+            # (_BUCKETED[spark] = {(abs sf_dir, table): catalog table});
+            # test_bucketing.py::test_bench_bucketed_arms_switch_routing
+            # fails if that format changes.
+            routes = dict(catalog._BUCKETED[spark])
+
+            def arm(key: str) -> float:
+                if key == "bucketed":
+                    catalog._BUCKETED[spark] = dict(routes)
+                else:
+                    catalog.disable_bucketed_facts(spark)
+                return round(run_query(spark, qname, bdir), 3)
+
+            best, _ = sample_interleaved(["bucketed", "stock"], arm, passes=3)
+            out[label] = {
+                "stock": best["stock"],
+                "bucketed": best["bucketed"],
+                "n_buckets": 32,
+                "write_sec_untimed": write_sec,
+            }
+        finally:
+            catalog.disable_bucketed_facts(spark)
+    return out
 
 
 def main() -> None:
@@ -500,124 +707,28 @@ def main() -> None:
     registry.load_all()
     spark = get_spark(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus_effective = spark.sparkContext.defaultParallelism
 
     names = [n for n in HEADLINE if n in registry.QUERIES]
-    # Warm the JVM/codegen once with the cheapest query so timings
-    # reflect steady-state execution, not first-call classloading;
-    # likewise spin up the Python/Arrow workers (numpy import per
-    # worker) so UDF-stage queries measure compute, not process forks.
-    if names:
-        run_query(spark, names[0], sf_dir)
-    from pyspark.sql.functions import pandas_udf as _pudf
-
-    _warm = _pudf(lambda x: x * 0 + 1, "long")
-
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark.range(0, cpus, 1, cpus).select(_warm("id")).write.mode(
-        "overwrite"
-    ).format("noop").save()
-
-    # min of three runs per query: the host shows intermittent CPU
-    # contention in multi-minute bursts (identical code measured 11.1s
-    # and 17.5s totals minutes apart; round-3 caught an 8.2s min-of-3
-    # for a query that measures 1.5s outside the burst), and a single
-    # sample can read 2-3x high; the minimum is the standard
-    # noise-robust estimator for cold-cache-free work. ALL samples are
-    # recorded alongside the min so a regression (all samples high) is
-    # distinguishable from a contention burst (high min, wide spread)
-    # from the artifact alone.
-    #
-    # Samples are INTERLEAVED (pass over all queries, three passes),
-    # not back-to-back per query: a burst lasting one pass (~30-60s)
-    # then poisons at most one of each query's three samples instead
-    # of all three of one query's (round-3 measured ivf_topk min-of-3
-    # at 2.9s back-to-back inside a burst vs 1.4s clean). An untimed
-    # warm-up pass runs first: a query's first-ever execution also
-    # pays its own codegen/broadcast-thread/Python-worker setup
-    # (round-3 pass-1 measured 2-8x pass-3 on EVERY query), which is
-    # per-process overhead, not plan cost.
-    for name in names:
-        run_query(spark, name, sf_dir)
-    samples: dict[str, list[float]] = {name: [] for name in names}
-    for _pass in range(3):
-        for name in names:
-            samples[name].append(round(run_query(spark, name, sf_dir), 3))
-
-    # Adaptive tail: a query whose max sample is >=2x its min sat
-    # inside a contention burst for at least one pass — and a burst
-    # long enough to span all three passes leaves the min itself
-    # poisoned (round-3 observed min-of-3 2.1s for a query that
-    # measures 0.6s clean). Give exactly those queries up to two
-    # extra interleaved samples; clean queries don't pay for it.
-    for _retry in range(2):
-        flagged = [n for n in names if max(samples[n]) >= 2 * min(samples[n])]
-        if not flagged:
-            break
-        for name in flagged:
-            samples[name].append(round(run_query(spark, name, sf_dir), 3))
-    timings = {name: min(runs) for name, runs in samples.items()}
-
+    warm_up(spark, sf_dir, cpus)
+    timings, samples = time_spark(spark, names, sf_dir, passes=3, retries=2)
     total = round(sum(timings.values()), 3)
     spread = {
         name: round(max(runs) - min(runs), 3) for name, runs in samples.items()
     }
-
-    # Resident-scan tier (round-6, judge item: shave the per-query
-    # floor): the SAME frozen headline set re-timed with base-table
-    # scans persisted in executor memory — the warehouse serving
-    # posture, and the symmetric counterpart of DuckDB's best-of-N
-    # reading warm OS page cache. Reported SEPARATELY
-    # (value_resident / ratio_total_comparable_resident); the frozen
-    # cold-scan "value" above remains the round-over-round
-    # comparable.
-    spark.conf.set("spark.etl.scan.resident", "true")
-    try:
-        for name in names:  # warm pass builds + materializes the cache
-            run_query(spark, name, sf_dir, resident=True)
-        res_samples: dict[str, list[float]] = {name: [] for name in names}
-        for _pass in range(2):
-            for name in names:
-                res_samples[name].append(
-                    round(run_query(spark, name, sf_dir, resident=True), 3)
-                )
-        for _retry in range(2):
-            flagged = [
-                n
-                for n in names
-                if max(res_samples[n]) >= 2 * min(res_samples[n])
-            ]
-            if not flagged:
-                break
-            for name in flagged:
-                res_samples[name].append(
-                    round(run_query(spark, name, sf_dir, resident=True), 3)
-                )
-        res_timings = {n: min(s) for n, s in res_samples.items()}
-    finally:
-        spark.conf.set("spark.etl.scan.resident", "false")
-        from etl_data_ingestion_spark.catalog import drop_resident
-
-        drop_resident(spark)
+    res_timings = resident_tier(spark, names, sf_dir)
     total_resident = round(sum(res_timings.values()), 3)
+
+    ext_names = [n for n in EXTENDED if n in registry.QUERIES]
+    ext_timings, _ = time_spark(spark, ext_names, sf_dir, passes=2)
 
     # DuckDB oracle timings + ratios: the perf gate is spark/duckdb on
     # identical parquet, so the artifact carries both sides. Timed
     # after the Spark passes so the JVM is idle during DuckDB runs.
-    ext_names = [n for n in EXTENDED if n in registry.QUERIES]
-    ext_samples: dict[str, list[float]] = {n: [] for n in ext_names}
-    for n in ext_names:
-        run_query(spark, n, sf_dir)  # warm-up pass, untimed
-    for _pass in range(2):
-        for n in ext_names:
-            ext_samples[n].append(round(run_query(spark, n, sf_dir), 3))
-    ext_timings = {n: min(s) for n, s in ext_samples.items()}
-
-    # Extended-tier rollups (round-9, judge item: these timings were
-    # computed then LOST from the committed artifact, which is exactly
-    # how the O(tokens²) tokenizer recompute hid for several rounds —
-    # none of its victims are in the frozen headline). The totals and
-    # worst-offender tables below go into the SHORT tail-surviving
-    # line; the full per-query map goes to BENCH_FULL.json on disk.
+    # The extended totals and worst-offender tables go into the SHORT
+    # line too (an offender outside the frozen headline otherwise
+    # hides); the full per-query map goes to BENCH_FULL.json.
     duck, timed_out = time_oracles(names + ext_names, sf_dir, cpus)
     ext_total = round(sum(ext_timings.values()), 3)
     ext_duck_total = round(
@@ -641,57 +752,18 @@ def main() -> None:
     ext_worst_abs = dict(
         sorted(ext_timings.items(), key=lambda kv: -kv[1])[:5]
     )
-    # Round-over-round drift alarm: any extended/headline query >=2x
-    # slower than the previous committed full artifact (and >=1s
-    # absolute, so sub-second jitter can't trip it) is named in BOTH
-    # artifacts. This mechanism — not luck — is what should catch the
-    # next shared-helper regression.
-    # Round-11 host-noise fix (r10 verdict what's-wrong #1): the r10
-    # driver artifact's sf0.01 lane was UNIFORMLY ~2.5-3x slower
-    # (byte-identical code — host contention), and the raw >=2x rule
-    # printed four phantom regressions. A lane-wide shift is not a
-    # plan regression, so the per-query movement is now normalized by
-    # the LANE MEDIAN movement: flag only queries that moved >=2x
-    # RELATIVE to how the whole lane moved (still requiring >=2x
-    # absolute vs prior and >=1s, so a lane that got faster can't
-    # manufacture flags). The median movement itself is recorded per
-    # lane so a reader can see the contention.
-    here = os.path.dirname(os.path.abspath(__file__))
-    full_path = os.path.join(here, "BENCH_FULL.json")
-
-    def _lane_drift(
-        cur: dict, prev_q: dict
-    ) -> tuple[list[str], float | None]:
-        moves = {
-            n: t / prev_q[n]
-            for n, t in cur.items()
-            if prev_q.get(n) and prev_q[n] > 0
-        }
-        if not moves:
-            return [], None
-        med = sorted(moves.values())[len(moves) // 2]
-        flagged = [
-            n
-            for n, m in moves.items()
-            if cur[n] >= 1.0 and m >= 2.0 and m >= 2.0 * med
-        ]
-        return flagged, round(med, 3)
-
-    drift: list[str] = []
-    drift_lane_median: dict[str, float | None] = {}
-    try:
-        with open(full_path) as fh:
-            prev = json.load(fh)
-        prev_ext = {
-            n: v.get("spark") for n, v in prev.get("extended", {}).items()
-        }
-        prev_ext.update(prev.get("queries", {}))
-        if prev.get("sf") == sf:
-            flagged, med = _lane_drift({**timings, **ext_timings}, prev_ext)
-            drift.extend(flagged)
-            drift_lane_median["0.1-main"] = med
-    except (OSError, ValueError):
-        pass
+    # Drift alarm: any extended/headline query >=2x slower than the
+    # previous committed full artifact (same sf and cpus) is named in
+    # BOTH artifacts, so the next shared-helper regression is caught
+    # by mechanism, not luck.
+    full_path = os.path.join(HERE, "BENCH_FULL.json")
+    baseline = drift_baseline(full_path, sf, cpus)
+    drift, med = _lane_drift(
+        {**timings, **ext_timings}, baseline.get("0.1-main", {})
+    )
+    drift_lane_median: dict[str, float | None] = (
+        {"0.1-main": med} if baseline else {}
+    )
     ratio = {
         name: (round(timings[name] / duck[name], 2) if duck[name] else None)
         for name in names
@@ -736,75 +808,15 @@ def main() -> None:
         else None
     )
 
-    # Scale curve (round-6, judge item: make the "floor amortizes at
-    # scale" claim a driver-visible artifact): the comparable headline
-    # subset re-run COLD at the other scale factors, with DuckDB
-    # timed on the same files. sf0.01 ships with the driver; sf0.3 /
-    # sf1 are deterministic local fixtures (tools/gen_scale.py,
-    # .scaledata/) mirroring the fixture shape. Heavy/contract-oracle
-    # queries are excluded up front (same exclusions as the main
-    # rtc; the minhash ground-truth oracle is O(docs^2) and DNFs at
-    # sf>=0.3). Skipped gracefully when a fixture dir is absent.
     scale_curve: dict[str, dict] = {}
     if os.environ.get("SPARK_GRAFT_SCALE_CURVE", "1") == "1":
-        here = os.path.dirname(os.path.abspath(__file__))
-        curve_dirs = [
-            ("0.01", "/root/testdata/sf0.01"),
-            ("0.3", os.path.join(here, ".scaledata/sf0.3")),
-            ("1", os.path.join(here, ".scaledata/sf1")),
-        ]
-        curve_names = comparable
-        for label, cdir in curve_dirs:
-            if not os.path.isdir(cdir) or not curve_names:
-                continue
-            for n in curve_names:
-                run_query(spark, n, cdir)  # warm pass, untimed
-            c_samples: dict[str, list[float]] = {n: [] for n in curve_names}
-            for _pass in range(2):
-                for n in curve_names:
-                    c_samples[n].append(
-                        round(run_query(spark, n, cdir), 3)
-                    )
-            c_timings = {n: min(s) for n, s in c_samples.items()}
-            c_duck, c_to = time_oracles(curve_names, cdir, cpus)
-            c_comp = [
-                n for n in curve_names if c_duck[n] and c_duck[n] < 5.0
-            ]
-            # Scale-lane drift alarm (round-10, r9 verdict #2: the
-            # sf1 q5 regression went unflagged because the >=2x rule
-            # watched only the sf0.1 tiers — the scale lanes are
-            # where a plan regression at scale shows FIRST). Same
-            # rule as the main tier, lane-median-normalized (r11).
-            c_drift: list[str] = []
-            c_med: float | None = None
-            try:
-                prev_lane = prev.get("scale_curve", {}).get(label, {})
-                prev_q = prev_lane.get("queries", {})
-                if prev.get("sf") == sf:
-                    c_drift, c_med = _lane_drift(c_timings, prev_q)
-                    drift.extend(f"sf{label}:{n}" for n in c_drift)
-            except (NameError, AttributeError):
-                pass
-            drift_lane_median[label] = c_med
-            scale_curve[label] = {
-                "drift_over_2x": sorted(c_drift),
-                "lane_median_move": c_med,
-                "spark_total": round(sum(c_timings[n] for n in c_comp), 3),
-                "duckdb_total": round(sum(c_duck[n] for n in c_comp), 3),
-                "ratio": (
-                    round(
-                        sum(c_timings[n] for n in c_comp)
-                        / sum(c_duck[n] for n in c_comp),
-                        2,
-                    )
-                    if c_comp
-                    else None
-                ),
-                "n_queries": len(c_comp),
-                "queries": c_timings,
-                "duckdb": {n: c_duck[n] for n in curve_names},
-                "timed_out_oracles": c_to,
-            }
+        scale_curve, lane_drift = scale_curve_tier(
+            spark, sf_dir, comparable, cpus, baseline
+        )
+        drift.extend(lane_drift)
+        drift_lane_median.update(
+            (label, lane["lane_median_move"]) for label, lane in scale_curve.items()
+        )
         if comparable:
             scale_curve["0.1"] = {
                 "spark_total": round(sum(timings[n] for n in comparable), 3),
@@ -813,50 +825,9 @@ def main() -> None:
                 "n_queries": len(comparable),
             }
 
-    # Bucketed-storage tier (round-8, capacity-model item 2): tpch_q3
-    # re-timed with lineitem/orders stored bucketed+sorted on orderkey
-    # (enable_bucketed_facts) — the documented 100 TB default layout
-    # where the fact-fact shuffle is paid once at write time. The
-    # bucket WRITE is untimed (reported separately); the frozen cold
-    # "value"/"queries" above never see bucketed scans. NAMESPACED:
-    # these numbers live only under "bucketed_q3".
     bucketed_q3: dict[str, dict] = {}
     if os.environ.get("SPARK_GRAFT_BUCKETED", "1") == "1":
-        from etl_data_ingestion_spark.catalog import (
-            disable_bucketed_facts,
-            enable_bucketed_facts,
-        )
-
-        here = os.path.dirname(os.path.abspath(__file__))
-        bkt_dirs = [(str(sf), sf_dir)]
-        sf1_dir = os.path.join(here, ".scaledata/sf1")
-        if os.path.isdir(sf1_dir) and os.path.abspath(sf_dir) != os.path.abspath(sf1_dir):
-            bkt_dirs.append(("1", sf1_dir))
-        qname = "tpch_q3_shipping_priority"
-        for label, bdir in bkt_dirs:
-            try:
-                t0 = time.perf_counter()
-                enable_bucketed_facts(spark, bdir, 32)
-                write_sec = round(time.perf_counter() - t0, 3)
-                run_query(spark, qname, bdir)  # warm, untimed
-                b_samples = [
-                    round(run_query(spark, qname, bdir), 3)
-                    for _ in range(3)
-                ]
-                disable_bucketed_facts(spark)
-                run_query(spark, qname, bdir)  # warm stock path, untimed
-                s_samples = [
-                    round(run_query(spark, qname, bdir), 3)
-                    for _ in range(3)
-                ]
-                bucketed_q3[label] = {
-                    "stock": min(s_samples),
-                    "bucketed": min(b_samples),
-                    "n_buckets": 32,
-                    "write_sec_untimed": write_sec,
-                }
-            finally:
-                disable_bucketed_facts(spark)
+        bucketed_q3 = bucketed_q3_tier(spark, sf_dir, sf)
 
     summary = json.dumps(
         {
@@ -894,27 +865,23 @@ def main() -> None:
             "scale_curve": scale_curve,
             "bucketed_q3": bucketed_q3,
             "sf": sf,
+            "cpus": cpus,
+            "cpus_effective": cpus_effective,
         }
     )
-    # Persist the FULL artifact (committed per round as the
-    # round-over-round drift baseline and the judge's extended-tier
-    # record — stdout tail capture only keeps the short line below).
+    # Persist the FULL artifact (committed as the drift baseline and
+    # the extended-tier record — stdout tail capture only keeps the
+    # short line below).
     try:
         with open(full_path, "w") as fh:
             fh.write(summary + "\n")
     except OSError:
         pass
     # The full summary line is ~2600+ chars; the driver's tail capture
-    # keeps only the final 2000, so printing it (even twice — round 4)
-    # always clips. The LAST line is therefore a short (<200 char)
-    # summary that survives any tail capture; the full artifact
-    # precedes it for humans/judges reading the whole log.
-    # Round-15 (r14 verdict item 2, additions only): the driver keys
-    # its per-query round-over-round comparison on THIS line's
-    # "queries" map — the full line above always clips in tail
-    # capture, so PERF_r14.per_query came out empty. The 16-entry
-    # headline map adds ~550 chars; the line stays under the ~2000
-    # char tail window.
+    # keeps only the final 2000, so it always clips. The LAST line is
+    # therefore a short summary that survives any tail capture and
+    # carries the per-query headline map that per-query comparisons
+    # across runs key on (~550 chars; the line stays under 2000).
     short = json.dumps(
         {
             "metric": "headline_queries_total",
@@ -935,6 +902,8 @@ def main() -> None:
             "ext_worst_abs": ext_worst_abs,
             "drift_over_2x": sorted(drift),
             "sf": sf,
+            "cpus": cpus,
+            "cpus_effective": cpus_effective,
         }
     )
     sys.stdout.write("\n" + summary + "\n" + short + "\n")

@@ -182,6 +182,33 @@ def _encode_message(row) -> str:
     )
 
 
+def _stage(path: str, iterator) -> _StagedFiles:
+    """Task side of both writers: write each row as a staged
+    ``.staged-<task uuid>-<i>.json.tmp`` file in ``path``. A task that
+    runs twice (speculation / retry) stages under a fresh uuid."""
+    import uuid
+
+    os.makedirs(path, exist_ok=True)
+    task_id = uuid.uuid4().hex[:12]
+    staged = []
+    for i, row in enumerate(iterator):
+        fpath = os.path.join(path, f".staged-{task_id}-{i:06d}.json.tmp")
+        with open(fpath, "w", encoding="utf-8") as f:
+            f.write(_encode_message(row))
+        staged.append(fpath)
+    return _StagedFiles(paths=staged)
+
+
+def _discard(messages) -> None:
+    """Abort side of both writers: delete every staged file."""
+    for m in messages:
+        for staged in m.paths:
+            try:
+                os.remove(staged)
+            except FileNotFoundError:
+                pass
+
+
 class MailboxWriter(DataSourceWriter):
     """Batch writer with two-phase commit: tasks stage
     ``.staged-*.json.tmp`` files (invisible to the reader, which only
@@ -199,18 +226,7 @@ class MailboxWriter(DataSourceWriter):
         self.overwrite = overwrite
 
     def write(self, iterator):
-        import uuid
-
-        os.makedirs(self.path, exist_ok=True)
-        task_id = uuid.uuid4().hex[:12]
-        staged = []
-        for i, row in enumerate(iterator):
-            name = f".staged-{task_id}-{i:06d}.json.tmp"
-            fpath = os.path.join(self.path, name)
-            with open(fpath, "w", encoding="utf-8") as f:
-                f.write(_encode_message(row))
-            staged.append(fpath)
-        return _StagedFiles(paths=staged)
+        return _stage(self.path, iterator)
 
     def commit(self, messages):
         if self.overwrite:
@@ -234,12 +250,7 @@ class MailboxWriter(DataSourceWriter):
             json.dump({"files": sorted(published)}, f)
 
     def abort(self, messages):
-        for m in messages:
-            for staged in m.paths:
-                try:
-                    os.remove(staged)
-                except FileNotFoundError:
-                    pass
+        _discard(messages)
 
 
 class MailboxStreamWriter(DataSourceStreamWriter):
@@ -255,18 +266,7 @@ class MailboxStreamWriter(DataSourceStreamWriter):
             raise ValueError("mailbox sink requires a path")
 
     def write(self, iterator):
-        import uuid
-
-        os.makedirs(self.path, exist_ok=True)
-        task_id = uuid.uuid4().hex[:12]
-        staged = []
-        for i, row in enumerate(iterator):
-            name = f".staged-{task_id}-{i:06d}.json.tmp"
-            fpath = os.path.join(self.path, name)
-            with open(fpath, "w", encoding="utf-8") as f:
-                f.write(_encode_message(row))
-            staged.append(fpath)
-        return _StagedFiles(paths=staged)
+        return _stage(self.path, iterator)
 
     def commit(self, messages, batchId):
         published = []
@@ -286,9 +286,4 @@ class MailboxStreamWriter(DataSourceStreamWriter):
             json.dump({"epoch": batchId, "files": sorted(published)}, f)
 
     def abort(self, messages, batchId):
-        for m in messages:
-            for staged in m.paths:
-                try:
-                    os.remove(staged)
-                except FileNotFoundError:
-                    pass
+        _discard(messages)

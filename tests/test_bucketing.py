@@ -142,3 +142,26 @@ def test_bucketed_facts_catalog_mode(spark, sf_dir):
     assert tables["lineitem"] not in _plan(
         load_table(spark, sf_dir, "lineitem")
     )
+
+
+def test_bench_bucketed_arms_switch_routing(spark, sf_dir, monkeypatch, tmp_path):
+    """bench.bucketed_q3_tier's two arms alternate load_table between
+    the bucketed tables and stock parquet. The bucketed arm restores
+    catalog's private route registry, so a change to its format must
+    fail here rather than silently time stock twice."""
+    import bench
+    from etl_data_ingestion_spark.catalog import load_table
+
+    monkeypatch.setattr(bench, "HERE", str(tmp_path))  # no sf1 lane
+    routed: list[bool] = []
+
+    def fake_run_query(spark_, name, bdir):
+        routed.append("lineitem_bucketed_" in _plan(load_table(spark_, bdir, "lineitem")))
+        return 0.1
+
+    monkeypatch.setattr(bench, "run_query", fake_run_query)
+    out = bench.bucketed_q3_tier(spark, sf_dir, 0.001)
+    # warm pass + 3 interleaved passes, bucketed arm first
+    assert routed == [True, False] * 4
+    assert out["0.001"]["stock"] == out["0.001"]["bucketed"] == 0.1
+    assert "lineitem_bucketed_" not in _plan(load_table(spark, sf_dir, "lineitem"))

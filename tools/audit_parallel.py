@@ -100,16 +100,15 @@ def ab(spark, name: str, sf_dir: str, n: int = 3) -> tuple[float, float]:
     """Interleaved ON/OFF min-of-n at sf_dir. Returns (on, off)."""
     import bench
 
-    on: list[float] = []
-    off: list[float] = []
-    for _ in range(n):
-        for conf_val, acc in (("32", on), ("0", off)):
-            spark.conf.set("spark.etl.scan.minPartitions", conf_val)
-            catalog.drop_plan_cache(spark)
-            acc.append(bench.run_query(spark, name, sf_dir))
+    def arm(key: str) -> float:
+        spark.conf.set("spark.etl.scan.minPartitions", "32" if key == "on" else "0")
+        catalog.drop_plan_cache(spark)
+        return bench.run_query(spark, name, sf_dir)
+
+    best, _ = bench.sample_interleaved(["on", "off"], arm, passes=n, warm=False)
     spark.conf.set("spark.etl.scan.minPartitions", "32")
     catalog.drop_plan_cache(spark)
-    return min(on), min(off)
+    return best["on"], best["off"]
 
 
 def main() -> None:
@@ -130,7 +129,7 @@ def main() -> None:
 
     import bench
 
-    bench.run_query(spark, "tpch_q1_pricing_summary", SF01)  # warm JVM
+    bench.warm_up(spark, SF01, int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
 
     rows = []
     t_start = time.time()

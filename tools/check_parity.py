@@ -11,12 +11,14 @@ Usage: python tools/check_parity.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb
 import pandas as pd
+
+import bench  # noqa: E402
 
 
 def canon_cell(v):
@@ -64,28 +66,10 @@ def main() -> int:
 
     from etl_data_ingestion_spark.plans import registry
     from etl_data_ingestion_spark.session import get_spark
-    from etl_data_ingestion_spark.catalog import TABLES, table_path
 
     registry.load_all()
     spark = get_spark(app_name="check_parity")
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(sf_dir, t)}')"
-        )
-
-    # Brute-force ground-truth oracles are superlinear (all-pairs
-    # Jaccard/cosine) and stop terminating at scale-curve sfs while
-    # the Spark side answers in seconds; an oracle still running
-    # after $SPARK_GRAFT_ORACLE_TIMEOUT sec (default 180) is
-    # interrupted and the query counted ORACLE-TIMEOUT (value parity
-    # unverifiable at this sf — NOT a failure; the Spark side must
-    # still have executed).
-    import os
-    import threading
-
-    budget = float(os.environ.get("SPARK_GRAFT_ORACLE_TIMEOUT", "180"))
+    con = bench.duckdb_views(sf_dir)
 
     failures, passed, rows_only, oracle_timeout = [], [], [], []
     for name in registry.query_names():
@@ -133,21 +117,21 @@ def main() -> int:
                 f"HUGEINT/DECIMAL — CAST to BIGINT/DOUBLE in the oracle"
             )
             continue
-        timer = threading.Timer(budget, con.interrupt)
-        timer.start()
+        # an oracle interrupted by bench.duckdb_run's timeout counts
+        # ORACLE-TIMEOUT: value parity unverifiable at this sf, NOT a
+        # failure (the Spark side still executed)
         try:
-            odf = con.execute(sql).fetchdf()
-        except duckdb.InterruptException:
-            oracle_timeout.append(name)
-            print(f"ORACLE-TIMEOUT {name}: spark ran ({len(sdf)} rows), "
-                  f"oracle exceeded {budget:.0f}s")
-            continue
+            ran = bench.duckdb_run(con, sql, fetch="fetchdf")
         except Exception as e:
             failures.append((name, f"oracle raised: {e}"))
             print(f"FAIL {name}: oracle raised: {e}")
             continue
-        finally:
-            timer.cancel()
+        if ran is None:
+            oracle_timeout.append(name)
+            print(f"ORACLE-TIMEOUT {name}: spark ran ({len(sdf)} rows), "
+                  "oracle exceeded $SPARK_GRAFT_ORACLE_TIMEOUT")
+            continue
+        odf = ran[1]
         if sorted(sdf.columns) != sorted(odf.columns):
             failures.append(
                 (name, f"schema: spark={sorted(sdf.columns)} oracle={sorted(odf.columns)}")

@@ -58,14 +58,7 @@ def main() -> None:
     sc = spark.sparkContext
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-    # warm JVM/codegen + python workers exactly like bench.main
-    bench.run_query(spark, "tpch_q1_pricing_summary", sf_dir)
-    from pyspark.sql.functions import pandas_udf as _pudf
-
-    _warm = _pudf(lambda x: x * 0 + 1, "long")
-    spark.range(0, cpus, 1, cpus).select(_warm("id")).write.mode(
-        "overwrite"
-    ).format("noop").save()
+    bench.warm_up(spark, sf_dir, cpus)
 
     def floor_noop() -> float:
         t0 = time.perf_counter()
@@ -84,9 +77,12 @@ def main() -> None:
         ).format("noop").save()
         return time.perf_counter() - t0
 
-    floor_noop() and floor_scan()  # untimed warm pass each
-    f_noop = round(min(floor_noop() for _ in range(5)), 3)
-    f_scan = round(min(floor_scan() for _ in range(5)), 3)
+    floors, _ = bench.sample_interleaved(
+        ["noop", "scan"],
+        lambda k: {"noop": floor_noop, "scan": floor_scan}[k](),
+        passes=5,
+    )
+    f_noop, f_scan = round(floors["noop"], 3), round(floors["scan"], 3)
 
     def jobs_for(name: str) -> int:
         group = f"probe_{name}"
@@ -98,11 +94,12 @@ def main() -> None:
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
     n_jobs = {n: jobs_for(n) for n in names}  # also the warm pass
-    samples: dict[str, list[float]] = {n: [] for n in names}
-    for _pass in range(3):
-        for n in names:
-            samples[n].append(round(bench.run_query(spark, n, sf_dir), 3))
-    timings = {n: min(s) for n, s in samples.items()}
+    timings, _ = bench.sample_interleaved(
+        names,
+        lambda n: round(bench.run_query(spark, n, sf_dir), 3),
+        passes=3,
+        warm=False,
+    )
 
     duck, _ = bench.time_oracles(names, sf_dir, cpus)
 
