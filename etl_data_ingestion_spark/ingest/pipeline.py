@@ -16,10 +16,11 @@ File-level failures (empty file, unknown column) return an
 caller decides lifecycle disposition (→ Failed/), mirroring
 main.py:289-295 and main.py:353-364.
 
-Scale notes: the header is metadata — only its 1-line read happens on
-the driver; all row data flows through executors. The CSV scan is
-splittable; a 1 TB TSV becomes ~8000 tasks, each applying the same
-vectorized coercion projection.
+Scale notes: the header is metadata. One bounded probe job brings at
+most two lines to the driver — the header and the first data row —
+and all row data flows through executors. The CSV scan is splittable;
+a 1 TB TSV becomes ~8000 tasks, each applying the same vectorized
+coercion projection.
 """
 
 from __future__ import annotations
@@ -60,23 +61,37 @@ def _empty_result(spark: SparkSession, error: str) -> IngestResult:
     )
 
 
-def read_raw_header(spark: SparkSession, path: str) -> list[str]:
-    """Raw header tokens of a delimited file (driver-side, 1-line read)."""
-    first = spark.read.text(path).limit(1).collect()
-    if not first:
-        return []
-    return first[0][0].split("\t")
+def read_raw_header(spark: SparkSession, path: str) -> tuple[list[str], bool]:
+    """(raw header tokens, has a data row) of a delimited file, from one
+    bounded job that brings at most two lines to the driver.
+
+    The header is the raw first line, blank or not. A data row is any
+    later line that is not blank by the CSV reader's rule: it drops a
+    line whose ``trim`` is empty, and Scala's ``trim`` strips every char
+    <= U+0020 (tabs, VT and FF included, NBSP not). Row id 0 is the
+    file's first line because partition 0 starts at offset 0."""
+    lines = (
+        spark.read.text(path)
+        .filter(
+            (F.monotonically_increasing_id() == 0)
+            | F.col("value").rlike("[^\\x00-\\x20]")
+        )
+        .limit(2)
+        .collect()
+    )
+    if not lines:
+        return [], False
+    return lines[0][0].split("\t"), len(lines) > 1
 
 
 def ingest_ctb_file(
     spark: SparkSession, path: str, sep: str = "\t"
 ) -> IngestResult:
     """Ingest one landed delimited file with full reference semantics."""
-    header = read_raw_header(spark, path)
+    header, has_data = read_raw_header(spark, path)
+    empty = f"CTB file '{path}' is empty or has no data rows."
     if not header or header == [""]:
-        return _empty_result(
-            spark, f"CTB file '{path}' is empty or has no data rows."
-        )
+        return _empty_result(spark, empty)
 
     canonical = [canonical_name(h) for h in header]
     unknown = [c for c in canonical if c not in BQ_SCHEMA_TYPES]
@@ -87,18 +102,20 @@ def ingest_ctb_file(
             f"cleaning. Unknown columns: {unknown}. "
             f"File headers (cleaned): {canonical}",
         )
-
-    # CSV column pruning skips unreferenced tokens, which silently
-    # disables token-count (malformed-row) detection for pruned plans —
-    # the reference checks EVERY row's count (main.py:372). Runtime conf,
-    # so it also holds on a driver-provided session.
-    spark.conf.set("spark.sql.csv.parser.columnPruning.enabled", "false")
+    # Header-only file: no data rows at all → file-level failure
+    # (reference main.py:289-295, len(lines) < 2).
+    if not has_data:
+        return _empty_result(spark, empty)
 
     read_schema = StructType(
         [StructField(c, StringType(), nullable=True) for c in canonical]
         + [StructField(CORRUPT_COL, StringType(), nullable=True)]
     )
-    raw = spark.read.csv(
+    # Column pruning skips unreferenced tokens, which silently disables
+    # token-count (malformed-row) detection for pruned plans — the
+    # reference checks EVERY row's count (main.py:372). A read option,
+    # so the session's own setting is left alone.
+    raw = spark.read.option("columnPruning", "false").csv(
         path,
         sep=sep,
         header=True,
@@ -108,12 +125,6 @@ def ingest_ctb_file(
         encoding="UTF-8",
         quote="",  # the reference splits on tabs only — no quoting (main.py:370)
     )
-    # Header-only file: no data rows at all → file-level failure
-    # (reference main.py:289-295, len(lines) < 2).
-    if raw.isEmpty():
-        return _empty_result(
-            spark, f"CTB file '{path}' is empty or has no data rows."
-        )
 
     # Present columns in schema order; absent columns stay NULL-typed.
     types = {c: BQ_SCHEMA_TYPES[c] for c in canonical}

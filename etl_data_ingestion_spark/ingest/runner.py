@@ -13,7 +13,11 @@ runner and ``stream_runner``:
 - zero valid rows → file failed + error notification (main.py:435-446,
   496-511);
 - per-file isolation: an exception fails the file, never the run
-  (main.py:674-677).
+  (main.py:674-677);
+- observability: one INFO record per file on this module's logger,
+  carrying ``file``, ``state``, ``valid_rows``, ``quarantined_rows``,
+  ``error`` and ``seconds`` both in the message and as record
+  attributes (``extra=``).
 
 ``run_landing_zone`` is the batch arrival loop (main.py:648-687): it
 lists Unprocessed/ and moves each file to Processed/ or Failed/ after
@@ -26,6 +30,8 @@ appended row carries the file's load_id for downstream dedup
 
 from __future__ import annotations
 
+import logging
+import time
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -35,6 +41,8 @@ from etl_data_ingestion_spark.ingest.lifecycle import LandingZone
 from etl_data_ingestion_spark.ingest.pipeline import ingest_ctb_file
 from etl_data_ingestion_spark.ingest.sinks import ParquetWarehouseSink
 from etl_data_ingestion_spark.notify import Notifier
+
+log = logging.getLogger(__name__)
 
 
 @dataclass
@@ -71,6 +79,7 @@ def process_file(
     the file fails with an error notification and ``settle`` gets one
     best-effort call with the failed outcome."""
     filename = path.rsplit("/", 1)[-1]
+    t0 = time.perf_counter()
     try:
         res = ingest_ctb_file(spark, path)
         if not res.ok:
@@ -99,7 +108,6 @@ def process_file(
                 outcome = FileOutcome(path, "processed", v_rows, q_rows)
         if settle is not None:
             settle(outcome)
-        return outcome
     except Exception as e:  # per-file isolation (main.py:674-677)
         notifier.error(filename, f"Unexpected error: {e}")
         outcome = FileOutcome(path, "failed", error=str(e))
@@ -108,7 +116,18 @@ def process_file(
                 settle(outcome)
             except Exception:
                 pass
-        return outcome
+    record = {
+        "file": filename,
+        "state": outcome.state,
+        "valid_rows": outcome.valid_rows,
+        "quarantined_rows": outcome.quarantined_rows,
+        "error": outcome.error,
+        "seconds": round(time.perf_counter() - t0, 3),
+    }
+    log.info(
+        " ".join(f"{k}=%r" for k in record), *record.values(), extra=record
+    )
+    return outcome
 
 
 def finish_run(report: RunReport, notifier: Notifier, source: str) -> RunReport:

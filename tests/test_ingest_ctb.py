@@ -246,3 +246,65 @@ def test_canonical_name_examples():
     assert canonical_name("GATING M/B") == "MAKE_BUY"
     assert canonical_name("  SNAPSHOT_DATE  ") == "SNAPSHOT_DATE"
     assert canonical_name("weird col") == "WEIRD_COL"
+
+
+H = header_line()
+
+
+@pytest.mark.parametrize(
+    "text, want",
+    [
+        pytest.param("", "empty", id="0-byte"),
+        pytest.param("\n", "empty", id="lf-only"),
+        pytest.param("\r\n", "empty", id="crlf-only"),
+        pytest.param(H, "empty", id="header-no-newline"),
+        pytest.param(H + "\n", "empty", id="header-lf"),
+        pytest.param(H + "\r\n", "empty", id="header-crlf"),
+        pytest.param(H + "\n\n\n", "empty", id="header-blank-lines"),
+        pytest.param(H + "\n   \n\t\t\n", "empty", id="header-space-tab-lines"),
+        pytest.param(H + "\n\x0b\x0c\n", "empty", id="header-vt-ff-line"),
+        pytest.param(H + "\n" + "\t" * 20, "empty", id="header-20-tabs"),
+        pytest.param("\n" + H + "\n" + row() + "\n", "empty", id="blank-first-line"),
+        pytest.param("  \n" + H + "\n" + row() + "\n", "Headers in", id="spaces-first-line"),
+        pytest.param(H + "\n\n\n" + row() + "\n", (1, 0), id="blank-lines-then-row"),
+        pytest.param("\ufeff" + H + "\n" + row() + "\n", (1, 0), id="bom"),
+        pytest.param(H + "\r" + row() + "\r", (1, 0), id="cr-separators"),
+        pytest.param(H + "\n" + row(), (1, 0), id="row-no-newline"),
+        pytest.param(H + "\n" * 3001 + row() + "\n", (1, 0), id="3000-blank-lines-then-row"),
+        pytest.param(H + "\n\u00a0\n", (0, 1), id="nbsp-line"),
+    ],
+)
+def test_blank_lines_as_the_csv_reader_sees_them(spark, tmp_path, text, want):
+    """The header/data-row probe treats a line as blank exactly when
+    the CSV reader drops it: every char <= U+0020 (tabs, VT, FF) is
+    blank, NBSP is not. The header is the raw first line, so a blank
+    first line fails the file."""
+    res = ingest_ctb_file(spark, write_tsv(tmp_path, "ctb_blank.tsv", text))
+    if want == "empty":
+        assert res.file_error and "is empty or has no data rows" in res.file_error
+    elif want == "Headers in":
+        assert res.file_error and res.file_error.startswith("Headers in")
+    else:
+        assert res.ok
+        assert counts(res) == want
+
+
+def test_csv_column_pruning_scoped_to_the_read(spark, tmp_path):
+    """Malformed-row detection must survive a one-column projection
+    even when the session prunes CSV columns, and ingest must not
+    change that session setting."""
+    key = "spark.sql.csv.parser.columnPruning.enabled"
+    before = spark.conf.get(key, None)
+    spark.conf.set(key, "true")
+    try:
+        short = "\t".join([GOOD[c] for c in CANONICAL[:-1]])
+        text = header_line() + "\n" + row() + "\n" + row() + "\textra\n" + short + "\n"
+        res = ingest_ctb_file(spark, write_tsv(tmp_path, "ctb_prune.tsv", text))
+        assert spark.conf.get(key) == "true"
+        assert res.valid.select("ORG_CODE").count() == 1
+        assert res.quarantine.select("_raw").count() == 2
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)

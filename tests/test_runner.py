@@ -3,12 +3,13 @@ policy, notifications, warehouse append (reference L1-L5 / O1-O6)."""
 
 from __future__ import annotations
 
+import logging
 import os
 
 import pytest
 
 from etl_data_ingestion_spark.ingest.lifecycle import LandingZone
-from etl_data_ingestion_spark.ingest.runner import run_landing_zone
+from etl_data_ingestion_spark.ingest.runner import process_file, run_landing_zone
 from etl_data_ingestion_spark.ingest.sinks import ParquetWarehouseSink
 from etl_data_ingestion_spark.ingest.stream_runner import run_landing_zone_stream
 from etl_data_ingestion_spark.notify import CollectingNotifier
@@ -191,6 +192,83 @@ def test_batch_and_stream_runners_agree(spark, zone, tmp_path):
         "CTB_headeronly.tsv": "failed",
         "CTB_unknown.tsv": "failed",
     }
+
+
+def test_jobs_per_file_kind(spark, tmp_path):
+    """Each file kind costs a fixed number of Spark jobs: one probe
+    for header and data row, plus one job per sink write."""
+    sc = spark.sparkContext
+    wh = ParquetWarehouseSink(str(tmp_path / "wh"))
+    qr = ParquetWarehouseSink(str(tmp_path / "q"))
+    short = "\t".join(row().split("\t")[:-1])
+    kinds = {
+        "clean": [header_line(), row(), row()],
+        "defects": [header_line(), row(), row(DEMAND_QTY="x"), short, row() + "\tv"],
+        "headeronly": [header_line()],
+        "unknown": [header_line() + "\tEXTRA COL", row() + "\tv"],
+        "zerobyte": None,
+    }
+    jobs = {}
+    for kind, lines in kinds.items():
+        path = tmp_path / f"CTB_{kind}.tsv"
+        path.write_text("" if lines is None else "\n".join([*lines, ""]))
+        group = f"jobs_per_file_{kind}"
+        sc.setJobGroup(group, group)
+        try:
+            process_file(spark, str(path), wh, qr, CollectingNotifier())
+        finally:
+            sc.setJobGroup(None, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs[kind] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs == {
+        "clean": 3, "defects": 3, "headeronly": 1, "unknown": 1, "zerobyte": 0,
+    }
+
+
+def test_one_log_record_per_file(spark, zone, tmp_path, caplog):
+    """Batch and stream drains of one landing set log one structured
+    record per file, with the same fields apart from the timing."""
+    landing = {
+        "CTB_clean.tsv": [header_line(), row()],
+        "CTB_partial.tsv": [header_line(), row(), row(DEMAND_QTY="bad")],
+        "CTB_headeronly.tsv": [header_line()],
+    }
+    fields = ("file", "state", "valid_rows", "quarantined_rows", "error")
+
+    def drain(run_it):
+        for name, lines in landing.items():
+            zone.put(name, "\n".join([*lines, ""]).encode())
+        caplog.clear()
+        with caplog.at_level(logging.INFO, "etl_data_ingestion_spark.ingest.runner"):
+            run_it()
+        recs = [
+            r for r in caplog.records
+            if r.name == "etl_data_ingestion_spark.ingest.runner"
+        ]
+        for r in recs:
+            assert r.seconds >= 0
+            assert all(f"{f}={getattr(r, f)!r}" in r.getMessage() for f in fields)
+        return sorted(tuple(getattr(r, f) for f in fields) for r in recs)
+
+    batch = drain(lambda: run_landing_zone(
+        spark, zone,
+        ParquetWarehouseSink(str(tmp_path / "b_wh")),
+        ParquetWarehouseSink(str(tmp_path / "b_q")),
+        CollectingNotifier(),
+    ))
+    stream = drain(lambda: run_landing_zone_stream(
+        spark, zone.root + "/Unprocessed", str(tmp_path / "Archived"),
+        str(tmp_path / "ckpt"),
+        ParquetWarehouseSink(str(tmp_path / "s_wh")),
+        ParquetWarehouseSink(str(tmp_path / "s_q")),
+        CollectingNotifier(),
+    ))
+    assert [r[:4] for r in batch] == [
+        ("CTB_clean.tsv", "processed", 1, 0),
+        ("CTB_headeronly.tsv", "failed", 0, 0),
+        ("CTB_partial.tsv", "processed", 1, 1),
+    ]
+    assert batch == stream
 
 
 def test_run_sql_interface(spark, sf_dir):
