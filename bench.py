@@ -672,17 +672,11 @@ def bucketed_q3_tier(spark, sf_dir: str, sf: float | None) -> dict[str, dict]:
             t0 = time.perf_counter()
             catalog.enable_bucketed_facts(spark, bdir, 32)
             write_sec = round(time.perf_counter() - t0, 3)
-            # re-enabling after a disable would rewrite the tables, so
-            # the bucketed arm restores the routing the write set up.
-            # This relies on catalog's private route registry
-            # (_BUCKETED[spark] = {(abs sf_dir, table): catalog table});
-            # test_bucketing.py::test_bench_bucketed_arms_switch_routing
-            # fails if that format changes.
-            routes = dict(catalog._BUCKETED[spark])
 
             def arm(key: str) -> float:
+                # the tables are written once; re-enabling only routes
                 if key == "bucketed":
-                    catalog._BUCKETED[spark] = dict(routes)
+                    catalog.enable_bucketed_facts(spark, bdir, 32)
                 else:
                     catalog.disable_bucketed_facts(spark)
                 return round(run_query(spark, qname, bdir), 3)

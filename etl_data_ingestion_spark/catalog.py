@@ -4,14 +4,19 @@ The driver fixtures live at /root/testdata/sf{0.001,0.01,0.1}/ with one
 parquet file per table (TESTDATA.md). At 100 TB each "file" would be a
 partitioned parquet/iceberg dataset; nothing here assumes single-file
 inputs — ``spark.read.parquet`` takes directories just as happily.
+
+Every registry query reads its tables through ``load_table``, which
+keeps one per-session scan registry and writes no session conf.
 """
 
 from __future__ import annotations
 
 import contextlib
+import hashlib
 import os
 import weakref
 
+import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
@@ -33,136 +38,45 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # deliberately EXCLUDED so they stay one-partition broadcast builds.
 FACT_TABLES = {"lineitem", "orders", "events", "documents", "embeddings"}
 
-# Resident scan tier (round-6): when spark.etl.scan.resident=true the
-# catalog persists each table scan once per (session, sf_dir, name,
-# parallel) and returns the SAME DataFrame on every later call, so
-# downstream plans read InMemoryTableScan instead of re-decoding
-# parquet. This is the warehouse-serving posture — hot base tables
-# resident in executor memory — and the honest counterpart of DuckDB
-# re-reading warm OS page cache on every best-of-N sample. OFF by
-# default: vanilla driver sessions and correctness runs see stock
-# cold scans. InMemoryTableScan still prunes columns at read; the
-# cache materializes full width, which is the storage trade a
-# resident tier makes.
-# Keyed by the live SparkSession via weakref (round-6 advisor
-# finding: an id(spark) key can collide after GC reuses the address,
-# handing a new session DataFrames bound to a stopped one, and dead
-# sessions' cached plans were never evicted). WeakKeyDictionary
-# evicts a session's entries when the session object is collected.
-_RESIDENT: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str, bool], DataFrame]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-# Scan-PLAN cache (round-7): caches the ANALYZED scan DataFrame — the
-# logical plan with its resolved schema and file index — per (session,
-# sf_dir, name, parallel). NOT a data cache: nothing is persisted or
-# materialized; re-executing the cached plan re-reads parquet cold.
-# What it skips is per-call table REGISTRATION — parquet footer /
-# schema inference and file listing, one py4j+Hadoop round-trip per
-# load_table call that measured ~100ms/table (tpch_q5 at sf0.1: 0.62s
-# of its 1.0s was plan construction across 6 load_table calls, vs
-# 0.39s execution). This is metastore semantics, the posture every
-# real warehouse runs: tables are registered once per session (schema
-# + file index in the catalog), not re-listed per query — exactly
-# what spark.catalog table registration or a Hive metastore provides
-# at cluster scale. The fixture dirs are immutable for a session's
-# lifetime; a caller that rewrites a table path mid-session must call
-# drop_plan_cache(spark) (or set spark.etl.scan.planCache=false).
-# DataFrames are immutable plan descriptions, so sharing one across
-# queries is side-effect-free.
-_PLAN_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str, bool], DataFrame]]" = (
+# The scan registry: (abs sf_dir, table, parallel) -> the analyzed scan
+# DataFrame, per live session. Building a scan costs a footer read and
+# a file listing (~100 ms a table through py4j and Hadoop), so a
+# session registers each table once, as a metastore would, and every
+# later query reuses the plan. Re-executing it still reads parquet:
+# only while spark.etl.scan.resident=true is an entry persisted, which
+# keeps base tables in executor memory (the warehouse serving posture;
+# the cache holds full width, InMemoryTableScan still prunes columns
+# at read). The fixture dirs are immutable for a session's lifetime; a
+# caller that rewrites a table path must call drop_plan_cache(spark).
+# Keyed by the session object through a weak reference, so a stopped
+# session's entries go with it and a new session can never inherit
+# them through a reused id().
+_SCANS: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str, bool], DataFrame]]" = (
     weakref.WeakKeyDictionary()
 )
 
 
-def _plan_cache_enabled(spark: SparkSession) -> bool:
-    try:
-        return (
-            spark.conf.get("spark.etl.scan.planCache", "true") or "true"
-        ).lower() == "true"
-    except Exception:
-        return True
+def drop_resident(spark: SparkSession) -> None:
+    """Forget this session's registered scans, unpersisting the
+    resident ones. Call after rewriting a table path in place."""
+    for df in _SCANS.pop(spark, {}).values():
+        if df.is_cached:
+            df.unpersist()
 
 
-def drop_plan_cache(spark: SparkSession) -> None:
-    """Forget this session's registered scan plans (call after
-    rewriting a table path in place)."""
-    _PLAN_CACHE.pop(spark, None)
+drop_plan_cache = drop_resident
 
 
-# Bucketed-storage tier (round-8, capacity-model item 2): the q3-class
-# fact-fact shuffle disappears entirely when both facts are stored
-# bucketed on the join key — pay the Exchange ONCE at write time,
-# every subsequent orderkey join/agg is map-side. This is the
-# documented 100 TB default layout; locally it is OPT-IN
-# (enable_bucketed_facts) so vanilla driver sessions, correctness
-# runs, and the frozen cold headline all keep stock parquet scans.
-# The bucketed copies live under .scratch/<sf>/bucketed_* as
-# session-catalog external tables; the write is idempotent per
-# (session, sf_dir) and contains exactly the source rows (same
-# schema, full width), so every oracle contract is unchanged.
-BUCKETED_FACTS = {"lineitem": "l_orderkey", "orders": "o_orderkey"}
-
-_BUCKETED: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], str]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def enable_bucketed_facts(
-    spark: SparkSession, sf_dir: str, n_buckets: int = 32
-) -> dict[str, str]:
-    """Write lineitem/orders bucketed+sorted by orderkey (one file per
-    bucket) and route subsequent load_table calls for them to the
-    bucketed tables. Returns {table: catalog_name}. Idempotent per
-    (session, sf_dir): re-enabling reuses the already-written tables.
-
-    At 100 TB this is the metastore DDL step (CREATE TABLE ...
-    CLUSTERED BY (orderkey) INTO n BUCKETS + one INSERT OVERWRITE);
-    n_buckets scales with data (buckets ≈ fact_bytes / 1 GB), and the
-    repartition-to-bucket-count before the write keeps one file per
-    bucket so the bucketed SortMergeJoin needs neither Exchange nor
-    re-Sort."""
-    key_dir = os.path.abspath(sf_dir)
-    reg = _BUCKETED.setdefault(spark, {})
-    out: dict[str, str] = {}
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    for name, bucket_key in BUCKETED_FACTS.items():
-        k = (key_dir, name)
-        if k in reg:
-            out[name] = reg[k]
-            continue
-        tbl = f"{name}_bucketed_{tag}"
-        path = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            ".scratch",
-            os.path.basename(os.path.normpath(sf_dir)),
-            f"bucketed_{name}",
-        )
-        src = spark.read.parquet(table_path(sf_dir, name))
-        # one file per bucket: repartition on the bucket key into
-        # exactly n_buckets tasks, so each task writes one file into
-        # each bucket it owns — and owning exactly one bucket per
-        # task keeps the per-bucket file count at 1, which is what
-        # lets the scan report sorted output and skip the re-Sort
-        from pyspark.sql.functions import col
-
-        (
-            src.repartition(n_buckets, col(bucket_key))
-            .write.bucketBy(n_buckets, bucket_key)
-            .sortBy(bucket_key)
-            .option("path", path)
-            .mode("overwrite")
-            .saveAsTable(tbl)
-        )
-        reg[k] = tbl
-        out[name] = tbl
-    return out
-
-
-def disable_bucketed_facts(spark: SparkSession) -> None:
-    """Stop routing load_table to bucketed tables (the written tables
-    and files stay for re-enable)."""
-    _BUCKETED.pop(spark, None)
+def rematerialize_resident(spark: SparkSession) -> int:
+    """Re-persist and re-materialize this session's resident scans
+    (after a catalog.clearCache()); returns how many were warmed."""
+    n = 0
+    for df in _SCANS.get(spark, {}).values():
+        if df.is_cached:
+            df.persist()
+            df.count()
+            n += 1
+    return n
 
 
 def _resident_enabled(spark: SparkSession) -> bool:
@@ -174,43 +88,108 @@ def _resident_enabled(spark: SparkSession) -> bool:
         return False
 
 
-def rematerialize_resident(spark: SparkSession) -> int:
-    """Re-persist + re-materialize this session's resident tables
-    (after a catalog.clearCache()); returns how many were warmed."""
-    n = 0
-    for df in _RESIDENT.get(spark, {}).values():
-        df.persist()
-        df.count()
-        n += 1
-    return n
+# Bucketed storage: with lineitem and orders stored bucketed and sorted
+# on orderkey, every orderkey join or aggregate between them is
+# map-side; the Exchange is paid once, at write time. That is the
+# documented 100 TB layout. Locally it is opt-in (enable_bucketed_facts),
+# so vanilla driver sessions, correctness runs and the cold headline
+# keep stock parquet scans. The copies hold exactly the source rows
+# (same schema, full width), so every oracle still holds.
+BUCKETED_FACTS = {"lineitem": "l_orderkey", "orders": "o_orderkey"}
+
+# Per session: abs sf_dir -> (n_buckets written, routed). The record
+# outlives a disable, so re-enabling only routes again.
+_BUCKETED: "weakref.WeakKeyDictionary[SparkSession, dict[str, tuple[int, bool]]]" = (
+    weakref.WeakKeyDictionary()
+)
 
 
-def drop_resident(spark: SparkSession) -> None:
-    for df in _RESIDENT.pop(spark, {}).values():
-        df.unpersist()
+def _bucketed_table(key_dir: str, name: str) -> str:
+    # named after the absolute dir: two sf dirs that share a basename
+    # must not share a table or its files
+    return f"{name}_bucketed_{hashlib.sha1(key_dir.encode()).hexdigest()[:12]}"
+
+
+def enable_bucketed_facts(
+    spark: SparkSession, sf_dir: str, n_buckets: int = 32
+) -> dict[str, str]:
+    """Write lineitem/orders bucketed+sorted by orderkey (one file per
+    bucket) and route subsequent load_table calls for them to the
+    bucketed tables. Returns {table: catalog_name}. The write happens
+    once per (session, sf_dir, n_buckets); re-enabling after
+    disable_bucketed_facts only routes again.
+
+    At 100 TB this is the metastore DDL step (CREATE TABLE ...
+    CLUSTERED BY (orderkey) INTO n BUCKETS + one INSERT OVERWRITE);
+    n_buckets scales with data (buckets ≈ fact_bytes / 1 GB), and the
+    repartition-to-bucket-count before the write keeps one file per
+    bucket so the bucketed SortMergeJoin needs neither Exchange nor
+    re-Sort."""
+    key_dir = os.path.abspath(sf_dir)
+    reg = _BUCKETED.setdefault(spark, {})
+    out = {name: _bucketed_table(key_dir, name) for name in BUCKETED_FACTS}
+    if reg.get(key_dir, (0, False))[0] != n_buckets:
+        for name, bucket_key in BUCKETED_FACTS.items():
+            path = os.path.join(
+                os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                ".scratch",
+                out[name],
+            )
+            # one file per bucket: exactly n_buckets tasks, each owning
+            # one bucket, so the scan reports sorted output and the
+            # join skips the re-Sort
+            (
+                spark.read.parquet(table_path(sf_dir, name))
+                .repartition(n_buckets, F.col(bucket_key))
+                .write.bucketBy(n_buckets, bucket_key)
+                .sortBy(bucket_key)
+                .option("path", path)
+                .mode("overwrite")
+                .saveAsTable(out[name])
+            )
+    reg[key_dir] = (n_buckets, True)
+    return out
+
+
+def disable_bucketed_facts(spark: SparkSession) -> None:
+    """Stop routing load_table to bucketed tables (the written tables
+    and files stay for re-enable)."""
+    reg = _BUCKETED.get(spark, {})
+    for key_dir, (n_buckets, _) in reg.items():
+        reg[key_dir] = (n_buckets, False)
 
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+# Fact footprint under which small_fact_aqe_gate plans statically.
+SMALL_FACT_BYTES = 2_000_000_000
+# Fact input per static shuffle partition inside the gate.
+GATE_BYTES_PER_PARTITION = 4 << 20
+
+
 @contextlib.contextmanager
 def small_fact_aqe_gate(
-    spark: SparkSession, sf_dir: str, table: str = "lineitem",
-    threshold: int = 2_000_000_000, scale_shuffle: bool = False,
+    spark: SparkSession, sf_dir: str, table: str = "lineitem"
 ):
-    """AQE gate for iterative / multi-consumer small-input queries
-    (extracted from graph_kcore_peel's round-10 device, generalized in
-    round 11 after ml_item_item_cf measured the same effect: AQE's
-    per-stage materialization is pure overhead when the whole input
-    fits one executor's worth of work — kcore ~7.6s -> ~4.8s, item_cf
-    1.87 -> 1.40 at sf0.1 AND 3.81 -> 3.14 at sf1, min-of-4
-    interleaved). Gate A PRIORI on the fact-file footprint (known
-    driver-side for free): under `threshold` bytes fixed planning
-    wins; at cluster scale AQE stays ON for its runtime BHJ
-    conversion + skew handling. Non-local URIs, missing paths, and
+    """AQE gate for iterative / multi-consumer small-input queries:
+    AQE's per-stage materialization is pure overhead when the whole
+    input fits one executor's worth of work (graph_kcore_peel ~7.6s ->
+    ~4.8s, ml_item_item_cf 1.87 -> 1.40 at sf0.1 and 3.81 -> 3.14 at
+    sf1, min-of-4 interleaved). Gate A PRIORI on the fact-file
+    footprint (known driver-side for free): under SMALL_FACT_BYTES
+    fixed planning wins; at cluster scale AQE stays ON for its runtime
+    BHJ conversion + skew handling. Non-local URIs, missing paths, and
     0-byte walks are treated as unknown/LARGE so the gate can never
     silently disable AQE in the cluster-scale case it must protect.
+
+    With AQE off nothing coalesces partitions at runtime, so the gate
+    also sizes the static shuffle partition count from the footprint:
+    one per GATE_BYTES_PER_PARTITION of fact input, floor 8, never
+    above the session default (item_cf 1.46 -> 1.24s at sf0.1, 8
+    partitions; at sf1 it derives the session default and so retires
+    as data grows).
 
     The toggle must precede the first persist() (CacheManager
     compiles the cached plan eagerly at persist() under the conf
@@ -238,28 +217,17 @@ def small_fact_aqe_gate(
         fact_bytes = _tree_bytes(table_path(sf_dir, table))
     except OSError:
         fact_bytes = 1 << 60
-    toggle = fact_bytes < threshold and prev == "true"
+    toggle = fact_bytes < SMALL_FACT_BYTES and prev == "true"
     if toggle:
         spark.conf.set(aqe_key, "false")
-        # Opt-in (round 12): with AQE off there is no runtime
-        # coalescing, so a tiny fact under the static 32-partition
-        # default pays 32 shuffle tasks per Exchange for kilobyte
-        # partitions. Size the static partition count A PRIORI from
-        # the known fact footprint (~4 MiB of input per partition,
-        # never above the session default, floor 8): item_cf
-        # interleaved A/B measured 1.46 -> 1.24s at sf0.1 (10.8 MB
-        # -> 8 partitions) while sf1 (137 MB) derives the session
-        # default and measures stock — the override self-retires as
-        # data grows, which is the cluster-scale-safe direction.
-        if scale_shuffle and fact_bytes < (1 << 59):
-            try:
-                default_parts = int(spark.conf.get(parts_key, "32"))
-            except ValueError:
-                default_parts = 32
-            sized = max(8, min(default_parts, fact_bytes // (4 << 20)))
-            if sized < default_parts:
-                prev_parts = spark.conf.get(parts_key)
-                spark.conf.set(parts_key, str(sized))
+        try:
+            default_parts = int(spark.conf.get(parts_key, "32"))
+        except ValueError:
+            default_parts = 32
+        sized = max(8, min(default_parts, fact_bytes // GATE_BYTES_PER_PARTITION))
+        if sized < default_parts:
+            prev_parts = spark.conf.get(parts_key)
+            spark.conf.set(parts_key, str(sized))
     try:
         yield toggle
     finally:
@@ -270,14 +238,13 @@ def small_fact_aqe_gate(
 
 
 def _with_scan_parallelism(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Round-5 scale fix: the fixture parquet files are written as a
-    SINGLE row group, and Spark's file splitting is row-group-bound —
-    so every fact scan planned 1 task and ALL map-side work (regexp
-    token stats, minhash signatures, partial aggregation) serialized
-    on one core of local[32] (measured: dedup_duplicated_spans at sf1
-    ran 183s in 2 tasks; 32-way it's ~15s). A production dataset has
-    thousands of row groups and never hits this; a single-file
-    fixture always does.
+    """The fixture parquet files are written as a SINGLE row group, and
+    Spark's file splitting is row-group-bound — so every fact scan
+    plans 1 task and ALL map-side work (regexp token stats, minhash
+    signatures, partial aggregation) serializes on one core of
+    local[32] (measured: dedup_duplicated_spans at sf1 ran 183s in 2
+    tasks; 32-way it's ~15s). A production dataset has thousands of
+    row groups and never hits this; a single-file fixture always does.
 
     OPT-IN per call site (load_table(..., parallel=True)) AND gated
     on spark.etl.scan.minPartitions (set by session.get_spark, ABSENT
@@ -315,15 +282,16 @@ def load_table(
     receives them (verify via .explain: PushedFilters / ReadSchema).
 
     events.ts normalizes to TimestampType (LTZ) whatever the fixture
-    writer produced: older fixtures carry parquet TIMESTAMP(NANOS)
-    (unreadable by the vectorized reader — read as long via legacy
-    nanosAsLong, truncate ns→us exactly like DuckDB does), newer ones
-    read natively as TIMESTAMP_NTZ. The session timezone is pinned UTC
-    (session.py) so NTZ→LTZ is an identity on the values, and
-    ``withWatermark`` — which rejects NTZ event time — works on the
-    same column the batch oracles check. The cast is only
-    value-preserving under UTC, so a non-UTC session fails loudly here
-    rather than silently shifting every timestamp off the oracle.
+    writer produced: older fixtures carry parquet TIMESTAMP(NANOS),
+    which reads as long under spark.sql.legacy.parquet.nanosAsLong
+    (set by session.get_spark and session.tune_session) and truncates
+    ns→us exactly like DuckDB does; newer ones read natively as
+    TIMESTAMP_NTZ. The session timezone is pinned UTC (session.py) so
+    NTZ→LTZ is an identity on the values, and ``withWatermark`` —
+    which rejects NTZ event time — works on the same column the batch
+    oracles check. The cast is only value-preserving under UTC, so a
+    non-UTC session fails loudly here rather than silently shifting
+    every timestamp off the oracle.
 
     Pushdown exception: because ``ts`` is a derived column (withColumn
     cast), filters on it are evaluated post-scan, NOT pushed to the
@@ -335,67 +303,33 @@ def load_table(
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    bucketed = _BUCKETED.get(spark, {}).get((os.path.abspath(sf_dir), name))
-    if bucketed is not None:
-        # opt-in bucketed tier: the catalog table IS the registered
-        # plan (metastore-resident schema + bucket spec); parallel
-        # floors don't apply — bucket count fixes the scan tasks
-        return spark.table(bucketed)
-    resident = _resident_enabled(spark)
-    key = (os.path.abspath(sf_dir), name, bool(parallel))
-    if resident:
-        cached = _RESIDENT.get(spark, {}).get(key)
-        if cached is not None:
-            return cached
-    plan_cache = _plan_cache_enabled(spark)
-    if plan_cache and not resident:
-        cached = _PLAN_CACHE.get(spark, {}).get(key)
-        if cached is not None:
-            return cached
-    if name == "events":
-        import pyspark.sql.functions as F
-
-        tz = spark.conf.get("spark.sql.session.timeZone")
-        if tz != "UTC":
-            raise RuntimeError(
-                f"events.ts normalization requires spark.sql.session.timeZone"
-                f"=UTC (got {tz!r}); run session.tune_session(spark) first — "
-                "a non-UTC session would shift ts values away from the oracle"
-            )
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    key_dir = os.path.abspath(sf_dir)
+    if name in BUCKETED_FACTS and _BUCKETED.get(spark, {}).get(key_dir, (0, False))[1]:
+        # the catalog table is the registered plan (bucket spec
+        # included); the bucket count fixes the scan tasks, so the
+        # parallel floor does not apply
+        return spark.table(_bucketed_table(key_dir, name))
+    scans = _SCANS.setdefault(spark, {})
+    key = (key_dir, name, bool(parallel))
+    df = scans.get(key)
+    if df is None:
         df = spark.read.parquet(table_path(sf_dir, name))
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type == "timestamp_ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        if parallel:
-            df = _with_scan_parallelism(spark, df)
-    else:
-        df = spark.read.parquet(table_path(sf_dir, name))
+        if name == "events":
+            tz = spark.conf.get("spark.sql.session.timeZone")
+            if tz != "UTC":
+                raise RuntimeError(
+                    f"events.ts normalization requires spark.sql.session.timeZone"
+                    f"=UTC (got {tz!r}); run session.tune_session(spark) first — "
+                    "a non-UTC session would shift ts values away from the oracle"
+                )
+            ts_type = dict(df.dtypes).get("ts")
+            if ts_type == "bigint":
+                df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+            elif ts_type == "timestamp_ntz":
+                df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         if parallel and name in FACT_TABLES:
             df = _with_scan_parallelism(spark, df)
-    if resident:
-        df = df.persist()
-        _RESIDENT.setdefault(spark, {})[key] = df
-    elif plan_cache:
-        _PLAN_CACHE.setdefault(spark, {})[key] = df
+        scans[key] = df
+    if _resident_enabled(spark) and not df.is_cached:
+        df.persist()
     return df
-
-
-class Catalog:
-    """Lazy per-session table accessor: ``cat.lineitem`` -> DataFrame."""
-
-    def __init__(self, spark: SparkSession, sf_dir: str):
-        self._spark = spark
-        self._sf_dir = sf_dir
-
-    def __getattr__(self, name: str) -> DataFrame:
-        if name.startswith("_"):
-            raise AttributeError(name)
-        return load_table(self._spark, self._sf_dir, name)
-
-    def register_temp_views(self) -> None:
-        """Register every table as a temp view for the SQL API surface."""
-        for name in TABLES:
-            load_table(self._spark, self._sf_dir, name).createOrReplaceTempView(name)

@@ -20,9 +20,3 @@ def snap(col, decimals: int):
     """FLOOR(x*10^d + 0.5)/10^d — deterministic half-up decimal snap."""
     scale = float(10**decimals)
     return F.floor(col * scale + F.lit(0.5)) / scale
-
-
-def snap_sql(expr: str, decimals: int) -> str:
-    """The identical device as oracle SQL text."""
-    scale = 10**decimals
-    return f"FLOOR(({expr}) * {scale} + 0.5) / {scale}"

@@ -736,9 +736,9 @@ def dedup_repeated_lines_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     line-keyed shuffle join — that cutover is the documented scale
     path.
 
-    Round-13 floor work (tools/ab_repeated_lines.py, interleaved
-    min-of-4): the interpreted line-building HOF is per-row CPU —
-    exactly the r11 audit's KEEP family — but this query never
+    Floor work (interleaved min-of-4): the interpreted
+    line-building HOF is per-row CPU — exactly the r11 audit's KEEP
+    family — but this query never
     opted into the scan fan-out, so the HOF serialized on the
     fixture's 1-2 scan tasks. parallel=True: 2.11 -> 1.22s at
     sf0.1, 8.80 -> 2.04s at sf1 (4.3x). A drop-by-VALUE rewrite

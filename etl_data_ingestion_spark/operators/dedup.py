@@ -1376,7 +1376,7 @@ def dedup_end_to_end_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     footprint passes the threshold, so cluster scale keeps AQE."""
     from etl_data_ingestion_spark.catalog import small_fact_aqe_gate
 
-    with small_fact_aqe_gate(spark, sf_dir, "documents", scale_shuffle=True):
+    with small_fact_aqe_gate(spark, sf_dir, "documents"):
         comp, corpus = _end_to_end_components(spark, sf_dir)
     return (
         corpus.select("doc_id")

@@ -597,7 +597,7 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # precedes the first persist() and the collect runs inside it.
     from etl_data_ingestion_spark.catalog import small_fact_aqe_gate
 
-    with small_fact_aqe_gate(spark, sf_dir, "lineitem", scale_shuffle=True):
+    with small_fact_aqe_gate(spark, sf_dir, "lineitem"):
         li = load_table(spark, sf_dir, "lineitem", parallel=False).select(
             "l_orderkey", "l_suppkey"
         )
@@ -732,7 +732,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_data_ingestion_spark.catalog import small_fact_aqe_gate
     from etl_data_ingestion_spark.functions.numeric import snap
 
-    with small_fact_aqe_gate(spark, sf_dir, "lineitem", scale_shuffle=True):
+    with small_fact_aqe_gate(spark, sf_dir, "lineitem"):
         li = load_table(spark, sf_dir, "lineitem", parallel=False).select(
             "l_orderkey", "l_suppkey"
         )
@@ -1000,12 +1000,12 @@ def graph_rich_club_coefficient(
     Round-12 adjudication note: a basket-pair (collect_set + HOF
     expansion, the item_cf device) edge build was built and
     interleave-A/B'd — a -4% wash at sf0.1 but +74% SLOWER at sf1
-    (1.32 vs 2.30s min-of-4 on the isolated pair build,
-    tools/ab_pairbuild_sf1.py): for a DISTINCT-pair build the
-    self-join lets AQE pick the physical join while collect_set
-    always pays an array-aggregation corpus shuffle. item_cf's
-    basket win is for pair COUNTING (it replaces the pair groupBy,
-    not a distinct) — device selection is workload-specific.
+    (1.32 vs 2.30s min-of-4 on the isolated pair build): for a
+    DISTINCT-pair build the self-join lets AQE pick the physical
+    join while collect_set always pays an array-aggregation corpus
+    shuffle. item_cf's basket win is for pair COUNTING (it replaces
+    the pair groupBy, not a distinct) — device selection is
+    workload-specific.
     REJECTED, r11 form kept; AQE-gate variant also a wash, not
     kept."""
     from etl_data_ingestion_spark.functions.numeric import snap

@@ -1877,8 +1877,8 @@ def ml_item_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial hash-agg hashes one column; unpack is two bit ops after
     the c_ab>=2 filter. Bound: partkey < 2^31 (sf1 max 199,999;
     the struct form is the documented fallback past that).
-    Round-13 interleaved A/Bs (tools/ab_itemcf_pack.py): sf0.1 a
-    wash (1.41 vs 1.41 min-of-6), sf1 every packed sample beat
+    Interleaved A/Bs: sf0.1 a wash (1.41 vs 1.41
+    min-of-6), sf1 every packed sample beat
     every stock sample (3.53 vs 3.85 min-of-4, -8..12%) — kept on
     the sf1-is-the-direction-of-scale rule (the r11 KEEP(sf1)
     precedent). At 100 TB the same bound holds per basket;
@@ -1906,7 +1906,7 @@ def ml_item_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph_kcore_peel."""
     from etl_data_ingestion_spark.catalog import small_fact_aqe_gate
 
-    with small_fact_aqe_gate(spark, sf_dir, "lineitem", scale_shuffle=True):
+    with small_fact_aqe_gate(spark, sf_dir, "lineitem"):
         li = load_table(spark, sf_dir, "lineitem")
         # Loud guard for the 64-bit pair pack below: pb occupies the
         # low 32 bits, so any partkey outside [0, 2^31) would bleed

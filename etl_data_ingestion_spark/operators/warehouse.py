@@ -1049,8 +1049,8 @@ def quality_functional_dependencies(
     on its LHS with size(collect_set(RHS)) — a SINGLE LHS-keyed
     exchange with map-side partial sets, versus count_distinct's
     two-level rewrite (an (LHS,RHS)-keyed exchange plus an
-    LHS-keyed one). Interleaved A/B (tools/ab_fd_profile.py):
-    sf1 3.29 -> 1.94s with every variant sample beating every
+    LHS-keyed one). Interleaved A/B: sf1 3.29 -> 1.94s with
+    every variant sample beating every
     stock sample; sf0.1 a wash (1.43 vs 1.53) — KEEP(sf1).
     Rejected in the same probe: repartition-by-l_orderkey fusion
     of the two lineitem FDs (serializes the four pipelines behind

@@ -84,10 +84,10 @@ def register(name: str, oracle: Optional[str] = None):
 #                carry verdicts (changed code must not coast —
 #                the displacement rule every round since r9):
 #                graph_assortativity (degree-moment algebraic
-#                collapse -14..33% A/B'd, + scale_shuffle gate),
+#                collapse -14..33% A/B'd, + partition-sizing gate),
 #                graph_community_modularity (contingency-table
 #                fusion -3%), graph_kcore_peel and ml_item_item_cf
-#                (gate scale_shuffle=True — a priori static
+#                (gate partition sizing — a priori static
 #                shuffle-partition sizing from the fact footprint;
 #                kcore 7.9 -> 4.4s, item_cf 1.46 -> 1.28s
 #                interleaved at sf0.1, self-retiring at sf1).

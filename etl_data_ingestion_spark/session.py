@@ -15,6 +15,10 @@ for scale-readiness:
   explicit validity flags (SURVEY.md §7.4); we never want a mid-job
   exception from a malformed source value at scale.
 - Arrow on: every pandas_udf / applyInPandas transfer is vectorized.
+- `parquet.nanosAsLong`: a parquet TIMESTAMP(NANOS) column reads as
+  long instead of failing the vectorized reader; `catalog.load_table`
+  truncates it to microseconds, as DuckDB does. Set here, once per
+  session, because a table read must not write session conf.
 """
 
 from __future__ import annotations
@@ -56,6 +60,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.legacy.timeParserPolicy", "CORRECTED")
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         # Scan-parallelism floor for opt-in CPU-heavy operators
@@ -109,11 +114,13 @@ def tune_session(spark: SparkSession) -> SparkSession:
     The driver hands us its own SparkSession; these confs are the
     runtime-settable subset of ``get_spark``'s defaults that correctness
     depends on (timezone for oracle parity, non-ANSI casts for the
-    coercion path, strict date parsing).
+    coercion path, strict date parsing, nanosecond parquet timestamps
+    readable as long).
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.ansi.enabled", "false")
     spark.conf.set("spark.sql.legacy.timeParserPolicy", "CORRECTED")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     for k, v in (
         ("spark.sql.adaptive.enabled", "true"),
         ("spark.sql.execution.arrow.maxRecordsPerBatch", "65536"),

@@ -146,9 +146,8 @@ def test_bucketed_facts_catalog_mode(spark, sf_dir):
 
 def test_bench_bucketed_arms_switch_routing(spark, sf_dir, monkeypatch, tmp_path):
     """bench.bucketed_q3_tier's two arms alternate load_table between
-    the bucketed tables and stock parquet. The bucketed arm restores
-    catalog's private route registry, so a change to its format must
-    fail here rather than silently time stock twice."""
+    the bucketed tables and stock parquet, so a switch that stops
+    routing fails here rather than silently timing stock twice."""
     import bench
     from etl_data_ingestion_spark.catalog import load_table
 

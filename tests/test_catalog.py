@@ -1,0 +1,176 @@
+"""The catalog's front door: the per-session scan registry, resident
+persistence, bucketed routing and the small-fact AQE gate. Every
+registry builder reads its tables through ``catalog.load_table``."""
+
+from __future__ import annotations
+
+import os
+import shutil
+
+from pyspark.sql import DataFrameWriter
+
+from etl_data_ingestion_spark import catalog
+from etl_data_ingestion_spark.session import tune_session
+
+
+def _exec_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _copy_facts(spark, sf_dir, dst, lineitem_rows=None):
+    """lineitem (optionally its first ``lineitem_rows`` rows) and orders
+    of ``sf_dir`` under ``dst`` — enough for enable_bucketed_facts."""
+    os.makedirs(dst)
+    shutil.copyfile(
+        catalog.table_path(sf_dir, "orders"), catalog.table_path(dst, "orders")
+    )
+    src = catalog.table_path(sf_dir, "lineitem")
+    if lineitem_rows is None:
+        shutil.copyfile(src, catalog.table_path(dst, "lineitem"))
+    else:
+        spark.read.parquet(src).limit(lineitem_rows).coalesce(1).write.parquet(
+            catalog.table_path(dst, "lineitem")
+        )
+    return str(dst)
+
+
+def _drop_tables(spark, tables):
+    """Drop the bucketed catalog tables and delete their files."""
+    for tbl in tables:
+        loc = [
+            r.data_type
+            for r in spark.sql(f"DESCRIBE TABLE EXTENDED {tbl}").collect()
+            if r.col_name == "Location"
+        ]
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+        for uri in loc:
+            shutil.rmtree(uri.removeprefix("file:"), ignore_errors=True)
+
+
+def test_resident_cache_weakref_keyed(spark, sf_dir):
+    spark.conf.set("spark.etl.scan.resident", "true")
+    try:
+        a = catalog.load_table(spark, sf_dir, "nation")
+        b = catalog.load_table(spark, sf_dir, "nation")
+        assert a is b  # cached per live session object
+        assert spark in catalog._SCANS
+        catalog.drop_resident(spark)
+        assert spark not in catalog._SCANS
+        c = catalog.load_table(spark, sf_dir, "nation")
+        assert c is not a
+    finally:
+        spark.conf.set("spark.etl.scan.resident", "false")
+        catalog.drop_resident(spark)
+
+
+def test_plan_cache_semantics(spark, sf_dir):
+    """Scan registry: same plan object per (session, table);
+    drop_plan_cache invalidates."""
+    catalog.drop_plan_cache(spark)
+    a = catalog.load_table(spark, sf_dir, "region")
+    b = catalog.load_table(spark, sf_dir, "region")
+    assert a is b
+    catalog.drop_plan_cache(spark)
+    c = catalog.load_table(spark, sf_dir, "region")
+    assert c is not a
+
+
+def test_table_reads_leave_session_conf_alone(spark, sf_dir):
+    """Reading any table, with or without the scan fan-out, writes
+    nothing to the session's conf: a tuned session already carries
+    every conf a read depends on."""
+    s = tune_session(spark.newSession())
+    before = dict(s.conf.getAll)
+    for name in catalog.TABLES:
+        for parallel in (False, True):
+            catalog.load_table(s, sf_dir, name, parallel)
+    after = dict(s.conf.getAll)
+    changed = {
+        k: (before.get(k), after.get(k))
+        for k in before.keys() | after.keys()
+        if before.get(k) != after.get(k)
+    }
+    assert changed == {}
+
+
+def test_bucketed_reenable_routes_without_rewrite(spark, sf_dir, tmp_path, monkeypatch):
+    """disable_bucketed_facts keeps the written tables, so a second
+    enable routes load_table to them again without writing."""
+    bdir = _copy_facts(spark, sf_dir, tmp_path / "sf")
+    writes: list[str] = []
+    orig = DataFrameWriter.saveAsTable
+
+    def counted(self, name, *a, **kw):
+        writes.append(name)
+        return orig(self, name, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "saveAsTable", counted)
+    tables = catalog.enable_bucketed_facts(spark, bdir, n_buckets=4)
+    try:
+        assert len(writes) == 2
+        catalog.disable_bucketed_facts(spark)
+        li = catalog.load_table(spark, bdir, "lineitem")
+        assert tables["lineitem"] not in _exec_plan(li)
+        assert catalog.enable_bucketed_facts(spark, bdir, n_buckets=4) == tables
+        assert len(writes) == 2
+        li = catalog.load_table(spark, bdir, "lineitem")
+        assert tables["lineitem"] in _exec_plan(li)
+    finally:
+        catalog.disable_bucketed_facts(spark)
+        _drop_tables(spark, tables.values())
+
+
+def test_bucketed_tables_keyed_by_absolute_dir(spark, sf_dir, tmp_path):
+    """Two sf dirs with the same basename get their own bucketed
+    tables: enabling the second must not overwrite the first's."""
+    x = _copy_facts(spark, sf_dir, tmp_path / "x" / "sf0.001", lineitem_rows=50)
+    y = _copy_facts(spark, sf_dir, tmp_path / "y" / "sf0.001", lineitem_rows=70)
+    tables = set()
+    try:
+        tables |= set(catalog.enable_bucketed_facts(spark, x, n_buckets=4).values())
+        tables |= set(catalog.enable_bucketed_facts(spark, y, n_buckets=4).values())
+        assert catalog.load_table(spark, x, "lineitem").count() == 50
+        assert catalog.load_table(spark, y, "lineitem").count() == 70
+    finally:
+        catalog.disable_bucketed_facts(spark)
+        _drop_tables(spark, tables)
+
+
+def test_small_fact_aqe_gate_unknown_paths_keep_aqe_on(spark):
+    """The gate treats non-local URIs / missing paths / 0-byte walks
+    as unknown/LARGE: AQE must stay ON (os.walk yields nothing for
+    s3://, and reading that as 'tiny input' would turn AQE off at
+    cluster scale)."""
+    for bogus in ("s3://bucket/prefix", "/nonexistent/path"):
+        with catalog.small_fact_aqe_gate(spark, bogus, "lineitem") as toggled:
+            assert not toggled
+            assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+
+def test_gate_v2_sizes_partitions_from_footprint(spark, sf_dir):
+    """The gate derives static shuffle partitions from the fact
+    footprint (~4 MiB/partition, floor 8, NEVER above the session
+    default — so it self-disables when the default is already small
+    or the fact is large) and restores the conf on exit."""
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    fact = os.path.join(sf_dir, "lineitem.parquet")
+    fact_bytes = (
+        os.path.getsize(fact)
+        if os.path.isfile(fact)
+        else sum(
+            os.path.getsize(os.path.join(r, f))
+            for r, _, fs in os.walk(fact)
+            for f in fs
+        )
+    )
+    derived = max(8, min(int(before), fact_bytes // (4 << 20)))
+    with catalog.small_fact_aqe_gate(spark, sf_dir, "lineitem") as toggled:
+        if toggled:
+            inside = int(spark.conf.get(key))
+            if derived < int(before):
+                assert inside == derived
+            else:
+                assert inside == int(before)  # override self-disabled
+            assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
+    assert spark.conf.get(key) == before

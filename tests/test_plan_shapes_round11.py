@@ -77,19 +77,6 @@ def test_kcore_gate_restores_conf_and_materializes(spark, sf_dir):
     spark.catalog.clearCache()
 
 
-def test_small_fact_aqe_gate_unknown_paths_keep_aqe_on(spark):
-    """The gate treats non-local URIs / missing paths / 0-byte walks
-    as unknown/LARGE: AQE must stay ON (the advisor's cluster-scale
-    blindspot — os.walk yields nothing for s3:// and the old code
-    read that as 'tiny input')."""
-    from etl_data_ingestion_spark.catalog import small_fact_aqe_gate
-
-    for bogus in ("s3://bucket/prefix", "/nonexistent/path"):
-        with small_fact_aqe_gate(spark, bogus, "lineitem") as toggled:
-            assert not toggled
-            assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-
-
 def test_audit_flips_do_not_fan_out(spark, sf_dir):
     """Spot-pin three audit DROPs (kruskal's r10 precedent plus two
     r11 flips): constructing the query must NOT insert the

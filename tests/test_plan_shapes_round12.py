@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from etl_data_ingestion_spark.catalog import small_fact_aqe_gate
 from etl_data_ingestion_spark.plans import registry as reg
 
 reg.load_all()
@@ -45,40 +44,6 @@ def test_modularity_aggregates_contingency_not_edges(spark, sf_dir):
     assert "collect_set" not in plan, plan[:2000]
     assert "InMemoryTableScan" in plan, plan[:2000]
     spark.catalog.clearCache()
-
-
-def test_gate_v2_sizes_partitions_from_footprint(spark, sf_dir):
-    """scale_shuffle=True derives static shuffle partitions from the
-    fact footprint (~4 MiB/partition, floor 8, NEVER above the
-    session default — so it self-disables when the default is
-    already small or the fact is large) and restores the conf on
-    exit."""
-    import os
-
-    key = "spark.sql.shuffle.partitions"
-    before = spark.conf.get(key)
-    fact = os.path.join(sf_dir, "lineitem.parquet")
-    fact_bytes = (
-        os.path.getsize(fact)
-        if os.path.isfile(fact)
-        else sum(
-            os.path.getsize(os.path.join(r, f))
-            for r, _, fs in os.walk(fact)
-            for f in fs
-        )
-    )
-    derived = max(8, min(int(before), fact_bytes // (4 << 20)))
-    with small_fact_aqe_gate(
-        spark, sf_dir, "lineitem", scale_shuffle=True
-    ) as toggled:
-        if toggled:
-            inside = int(spark.conf.get(key))
-            if derived < int(before):
-                assert inside == derived
-            else:
-                assert inside == int(before)  # override self-disabled
-            assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-    assert spark.conf.get(key) == before
 
 
 def test_loo_and_ratio_margin_construct_without_collect(spark, sf_dir):

@@ -23,7 +23,7 @@ def test_fd_profile_uses_single_exchange_collect_set(spark, sf_dir):
     size(collect_set(RHS)) — ONE LHS-keyed exchange with map-side
     partial sets — not count_distinct's two-level rewrite (an extra
     (LHS,RHS)-keyed exchange per FD; measured sf1 3.29 vs 1.94s,
-    tools/ab_fd_profile.py)."""
+    interleaved A/B)."""
     plan = _exec_plan(
         spark, "quality_functional_dependencies", sf_dir
     )

@@ -1,6 +1,6 @@
 """Round-7 regression tests: markov keyset mirrors the oracle's inner
-join (source-only states drop out), BPE OOV char-fallback, resident
-cache keyed by live session via weakref."""
+join (source-only states drop out), BPE OOV char-fallback, sequence
+packing at window boundaries."""
 
 from __future__ import annotations
 
@@ -101,46 +101,6 @@ def test_bpe_apply_oov_char_fallback(spark, sf_dir):
     assert rows
     for r in rows:
         assert r.n_words <= r.n_bpe_tokens <= r.n_chars
-
-
-def test_resident_cache_weakref_keyed(spark, sf_dir):
-    from etl_data_ingestion_spark import catalog
-
-    spark.conf.set("spark.etl.scan.resident", "true")
-    try:
-        a = catalog.load_table(spark, sf_dir, "nation")
-        b = catalog.load_table(spark, sf_dir, "nation")
-        assert a is b  # cached per live session object
-        assert spark in catalog._RESIDENT
-        catalog.drop_resident(spark)
-        assert spark not in catalog._RESIDENT
-        c = catalog.load_table(spark, sf_dir, "nation")
-        assert c is not a
-    finally:
-        spark.conf.set("spark.etl.scan.resident", "false")
-        catalog.drop_resident(spark)
-
-
-def test_plan_cache_semantics(spark, sf_dir):
-    """Scan-plan cache: same plan object per (session, table) while
-    enabled; drop_plan_cache invalidates; conf=false bypasses."""
-    from etl_data_ingestion_spark import catalog
-
-    spark.conf.set("spark.etl.scan.planCache", "true")
-    catalog.drop_plan_cache(spark)
-    a = catalog.load_table(spark, sf_dir, "region")
-    b = catalog.load_table(spark, sf_dir, "region")
-    assert a is b
-    catalog.drop_plan_cache(spark)
-    c = catalog.load_table(spark, sf_dir, "region")
-    assert c is not a
-    spark.conf.set("spark.etl.scan.planCache", "false")
-    try:
-        d = catalog.load_table(spark, sf_dir, "region")
-        e = catalog.load_table(spark, sf_dir, "region")
-        assert d is not e
-    finally:
-        spark.conf.set("spark.etl.scan.planCache", "true")
 
 
 def test_pack_sequences_boundary_parity(spark, tmp_path):

@@ -56,7 +56,6 @@ def detect(spark) -> dict[str, list[tuple[str, str]]]:
     import inspect
 
     registry.load_all()
-    spark.conf.set("spark.etl.scan.planCache", "false")
     orig = catalog._with_scan_parallelism
     hits: list[tuple[str, str]] = []
 
@@ -83,6 +82,9 @@ def detect(spark) -> dict[str, list[tuple[str, str]]]:
     try:
         for name, fn in registry.QUERIES.items():
             hits.clear()
+            # a registered scan skips the build, and with it the
+            # fan-out call this records
+            catalog.drop_plan_cache(spark)
             try:
                 fn(spark, "/root/testdata/sf0.001")
             except Exception as e:  # plan-construction failure: report
@@ -92,7 +94,6 @@ def detect(spark) -> dict[str, list[tuple[str, str]]]:
                 out[name] = sorted(set(hits))
     finally:
         catalog._with_scan_parallelism = orig
-        spark.conf.set("spark.etl.scan.planCache", "true")
     return out
 
 
