@@ -16,19 +16,23 @@ File-level failures (empty file, unknown column) return an
 caller decides lifecycle disposition (→ Failed/), mirroring
 main.py:289-295 and main.py:353-364.
 
-Scale notes: the header is metadata. One bounded probe job brings at
-most two lines to the driver — the header and the first data row —
-and all row data flows through executors. The CSV scan is splittable;
-a 1 TB TSV becomes ~8000 tasks, each applying the same vectorized
-coercion projection.
+Scale notes: the header is metadata. The driver reads it through the
+Hadoop FileSystem API, as the landing zone moves files, and stops at
+the first data line, so a file that fails on its header costs no
+Spark job. All row data flows through executors. The CSV scan is
+splittable; a 1 TB TSV becomes ~8000 tasks, each applying the same
+vectorized coercion projection. An ``Observation`` on that scan
+counts the rows parsed, so a caller learns how many rows a sink
+rejected from the write that reads them.
 """
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
 
 from etl_data_ingestion_spark.schema import (
@@ -40,6 +44,9 @@ from etl_data_ingestion_spark.schema import (
 from etl_data_ingestion_spark.ingest.coerce import split_valid_quarantine
 
 CORRUPT_COL = "_corrupt_record"
+# The CSV reader drops a line whose Scala ``trim`` is empty, and that
+# trim strips every char <= U+0020 (tabs, VT and FF included, NBSP not).
+_NOT_BLANK = re.compile("[^\\x00-\\x20]")
 
 
 @dataclass
@@ -47,6 +54,9 @@ class IngestResult:
     valid: DataFrame
     quarantine: DataFrame
     file_error: str | None = None
+    # rows the CSV scan parsed (metric ``rows``), set once the first
+    # action over ``valid`` or ``quarantine`` has run
+    parsed: Observation | None = None
 
     @property
     def ok(self) -> bool:
@@ -62,26 +72,36 @@ def _empty_result(spark: SparkSession, error: str) -> IngestResult:
 
 
 def read_raw_header(spark: SparkSession, path: str) -> tuple[list[str], bool]:
-    """(raw header tokens, has a data row) of a delimited file, from one
-    bounded job that brings at most two lines to the driver.
+    """(raw header tokens, has a data row) of a delimited file, read on
+    the driver without a Spark job.
 
-    The header is the raw first line, blank or not. A data row is any
-    later line that is not blank by the CSV reader's rule: it drops a
-    line whose ``trim`` is empty, and Scala's ``trim`` strips every char
-    <= U+0020 (tabs, VT and FF included, NBSP not). Row id 0 is the
-    file's first line because partition 0 starts at offset 0."""
-    lines = (
-        spark.read.text(path)
-        .filter(
-            (F.monotonically_increasing_id() == 0)
-            | F.col("value").rlike("[^\\x00-\\x20]")
-        )
-        .limit(2)
-        .collect()
-    )
-    if not lines:
-        return [], False
-    return lines[0][0].split("\t"), len(lines) > 1
+    The file is opened through the Hadoop FileSystem API and decoded by
+    the codec its suffix names (``.gz`` …), then split by Hadoop's
+    ``LineReader``, the line splitter behind Spark's text source
+    (``\\n``, ``\\r\\n`` and ``\\r`` all end a line). The header is the
+    raw first line, blank or not. A data row is any later line that is
+    not blank by the CSV reader's rule; the read stops at the first."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    stream = hpath.getFileSystem(conf).open(hpath)
+    try:
+        codec = jvm.org.apache.hadoop.io.compress.CompressionCodecFactory(
+            conf
+        ).getCodec(hpath)
+        if codec is not None:
+            stream = codec.createInputStream(stream)
+        reader = jvm.org.apache.hadoop.util.LineReader(stream, conf)
+        line = jvm.org.apache.hadoop.io.Text()
+        if reader.readLine(line) == 0:
+            return [], False
+        header = line.toString().split("\t")
+        while reader.readLine(line) > 0:
+            if _NOT_BLANK.search(line.toString()):
+                return header, True
+        return header, False
+    finally:
+        stream.close()
 
 
 def ingest_ctb_file(
@@ -115,6 +135,7 @@ def ingest_ctb_file(
     # token-count (malformed-row) detection for pruned plans — the
     # reference checks EVERY row's count (main.py:372). A read option,
     # so the session's own setting is left alone.
+    parsed = Observation(f"parsed:{path}")
     raw = spark.read.option("columnPruning", "false").csv(
         path,
         sep=sep,
@@ -124,7 +145,7 @@ def ingest_ctb_file(
         columnNameOfCorruptRecord=CORRUPT_COL,
         encoding="UTF-8",
         quote="",  # the reference splits on tabs only — no quoting (main.py:370)
-    )
+    ).observe(parsed, F.count(F.lit(1)).alias("rows"))
 
     # Present columns in schema order; absent columns stay NULL-typed.
     types = {c: BQ_SCHEMA_TYPES[c] for c in canonical}
@@ -134,5 +155,5 @@ def ingest_ctb_file(
         corrupt_col=CORRUPT_COL,
         source_file_col=F.input_file_name(),
     )
-    return IngestResult(valid=valid, quarantine=quarantine)
+    return IngestResult(valid=valid, quarantine=quarantine, parsed=parsed)
 

@@ -7,6 +7,12 @@ runner and ``stream_runner``:
   an error notification (main.py:289-295, 353-364);
 - L3: the warehouse sink's ``check_target`` runs before any write
   (main.py:416-430);
+- the warehouse append runs first; the quarantine append runs only
+  when rows were rejected, i.e. when the rows parsed (an
+  ``Observation`` on the CSV scan, filled by the warehouse write)
+  exceed the rows appended (main.py:448-468). A clean file is one
+  Spark job and adds no empty quarantine file; a quarantine append
+  that writes another count fails the file;
 - partial success: ≥1 valid row → file processed, clean files get a
   success notification, partial ones an error report listing counts
   (main.py:470-495);
@@ -16,14 +22,16 @@ runner and ``stream_runner``:
   (main.py:674-677);
 - observability: one INFO record per file on this module's logger,
   carrying ``file``, ``state``, ``valid_rows``, ``quarantined_rows``,
-  ``error`` and ``seconds`` both in the message and as record
-  attributes (``extra=``).
+  ``error``, ``seconds`` and the per-step wall times ``read_s``
+  (``ingest_ctb_file``, header read included), ``warehouse_s``,
+  ``quarantine_s`` (0 when the append is skipped) and ``settle_s``
+  both in the message and as record attributes (``extra=``).
 
 ``run_landing_zone`` is the batch arrival loop (main.py:648-687): it
 lists Unprocessed/ and moves each file to Processed/ or Failed/ after
 its outcome is settled. Unlike the reference, consumption is
 effectively at-least-once + idempotent: the file moves out of
-Unprocessed/ only after the warehouse append commits, and every
+Unprocessed/ only after its appends commit, and every
 appended row carries the file's load_id for downstream dedup
 (SURVEY.md §4.1 deviation, documented).
 """
@@ -32,6 +40,7 @@ from __future__ import annotations
 
 import logging
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -80,15 +89,36 @@ def process_file(
     best-effort call with the failed outcome."""
     filename = path.rsplit("/", 1)[-1]
     t0 = time.perf_counter()
+    steps = dict.fromkeys(("read_s", "warehouse_s", "quarantine_s", "settle_s"), 0.0)
+
+    @contextmanager
+    def step(name: str):
+        t = time.perf_counter()
+        try:
+            yield
+        finally:
+            steps[name] += time.perf_counter() - t
+
     try:
-        res = ingest_ctb_file(spark, path)
+        with step("read_s"):
+            res = ingest_ctb_file(spark, path)
         if not res.ok:
             notifier.error(filename, res.file_error)
             outcome = FileOutcome(path, "failed", error=res.file_error)
         else:
             warehouse.check_target(spark)
-            q_rows = quarantine.write(res.quarantine, load_id=filename)
-            v_rows = warehouse.write(res.valid, load_id=filename)
+            with step("warehouse_s"):
+                v_rows = warehouse.write(res.valid, load_id=filename)
+            # _row_ok is never NULL, so the sinks split the parsed rows
+            q_rows = res.parsed.get["rows"] - v_rows
+            if q_rows > 0:
+                with step("quarantine_s"):
+                    wrote = quarantine.write(res.quarantine, load_id=filename)
+                if wrote != q_rows:
+                    raise RuntimeError(
+                        f"Quarantine append of '{filename}' wrote {wrote} rows, "
+                        f"expected {q_rows}."
+                    )
             if v_rows == 0:
                 msg = (
                     f"No valid data rows found in '{filename}' to insert "
@@ -107,13 +137,15 @@ def process_file(
                     )
                 outcome = FileOutcome(path, "processed", v_rows, q_rows)
         if settle is not None:
-            settle(outcome)
+            with step("settle_s"):
+                settle(outcome)
     except Exception as e:  # per-file isolation (main.py:674-677)
         notifier.error(filename, f"Unexpected error: {e}")
         outcome = FileOutcome(path, "failed", error=str(e))
         if settle is not None:
             try:
-                settle(outcome)
+                with step("settle_s"):
+                    settle(outcome)
             except Exception:
                 pass
     record = {
@@ -123,6 +155,7 @@ def process_file(
         "quarantined_rows": outcome.quarantined_rows,
         "error": outcome.error,
         "seconds": round(time.perf_counter() - t0, 3),
+        **{k: round(v, 3) for k, v in steps.items()},
     }
     log.info(
         " ".join(f"{k}=%r" for k in record), *record.values(), extra=record

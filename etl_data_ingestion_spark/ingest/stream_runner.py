@@ -16,9 +16,14 @@ content read. ``foreachBatch`` hands each path to ``runner.process_file``,
 the per-file policy the batch runner uses, against the file still
 sitting in the watch dir (archival happens after the batch commits).
 
+Spark archives a batch's files when it starts the next batch, so the
+files of a drain's last batch stay in the watch dir, already
+checkpointed, until a later drain finds new files.
+
 Limitation: a 0-byte file yields no row to a file stream source, so
 it is checkpointed as consumed and left to ``cleanSource`` like any
-other file, with no outcome and no notification.
+other file, with no outcome and no notification
+(``tests/test_streaming.py::test_streaming_landing_zone_zero_byte_file``).
 """
 
 from __future__ import annotations

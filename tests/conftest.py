@@ -1,10 +1,12 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this file lives in, not an installed or other copy
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from etl_data_ingestion_spark.session import get_spark
 

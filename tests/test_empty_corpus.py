@@ -29,18 +29,19 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-from etl_data_ingestion_spark.plans import registry
+from etl_data_ingestion_spark.plans import registry  # noqa: E402
 
-EMPTY_DIR = "/root/repo/.scaledata/sf_empty"
+EMPTY_DIR = os.path.join(REPO, ".scaledata", "sf_empty")
 
 
 @pytest.fixture(scope="module")
 def empty_dir():
     if not os.path.isdir(EMPTY_DIR):
         subprocess.run(
-            [sys.executable, "/root/repo/tools/gen_empty.py", EMPTY_DIR],
+            [sys.executable, os.path.join(REPO, "tools", "gen_empty.py"), EMPTY_DIR],
             check=True,
         )
     return EMPTY_DIR

@@ -4,6 +4,8 @@ each asserting the exact reference behavior it cites."""
 from __future__ import annotations
 
 import datetime
+import gzip
+import os
 
 import pytest
 
@@ -308,3 +310,86 @@ def test_csv_column_pruning_scoped_to_the_read(spark, tmp_path):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, before)
+
+
+def _outcome(res, path):
+    """(ok, valid, quarantined) or the file error without its path."""
+    if not res.ok:
+        return False, res.file_error.replace(path, "<path>")
+    return (True, *counts(res))
+
+
+@pytest.mark.parametrize(
+    "text",
+    [
+        pytest.param(H + "\r\n" + row() + "\r\n" + row(DEMAND_QTY="x") + "\r\n", id="rows"),
+        pytest.param(H + "\n\n \n" + row() + "\n", id="blank-lines-then-row"),
+        pytest.param(H + "\n\t\n", id="header-only"),
+        pytest.param(H + "\tEXTRA\n" + row() + "\tv\n", id="unknown-column"),
+    ],
+)
+def test_gzip_file_ingests_like_the_plain_file(spark, tmp_path, text):
+    """A landed ``.gz`` file decodes by its suffix's codec, for the
+    header read as for the CSV scan, so it ingests like the plain
+    file."""
+    plain = write_tsv(tmp_path, "CTB_x.tsv", text)
+    gz = str(tmp_path / "CTB_x.tsv.gz")
+    with open(gz, "wb") as f:
+        f.write(gzip.compress(text.encode("utf-8")))
+    want = _outcome(ingest_ctb_file(spark, plain), plain)
+    assert _outcome(ingest_ctb_file(spark, gz), gz) == want
+
+
+@pytest.mark.parametrize(
+    "raw, cleaned",
+    [
+        pytest.param(b"ORG\xffCODE", "ORG\ufffdCODE", id="ff"),
+        pytest.param(b"ORG\xe2\x82 CODE", "ORG\ufffd_CODE", id="truncated"),
+        pytest.param(b"\xc0\xafORG CODE", "\ufffd\ufffdORG_CODE", id="overlong"),
+        pytest.param(b"ORG CODE\xed\xa0\x80", "ORG_CODE\ufffd", id="surrogate"),
+    ],
+)
+def test_invalid_utf8_header_byte_fails_the_file(spark, tmp_path, raw, cleaned):
+    """A malformed UTF-8 sequence in the header decodes as Java's UTF-8
+    decoder replaces it, one U+FFFD per malformed sequence, and the
+    column it lands in fails the file as unknown."""
+    p = tmp_path / "CTB_bad_utf8.tsv"
+    header = b"\t".join([raw, *(h.encode("utf-8") for h in RAW_HEADERS[1:])])
+    p.write_bytes(header + b"\n" + row().encode("utf-8") + b"\n")
+    res = ingest_ctb_file(spark, str(p))
+    assert res.file_error == (
+        f"Headers in '{p}' do not match expected schema after cleaning. "
+        f"Unknown columns: [{cleaned!r}]. "
+        f"File headers (cleaned): {[cleaned, *CANONICAL[1:]]}"
+    )
+
+
+def test_file_deleted_after_listing_fails_alone(spark, tmp_path):
+    """A file that vanishes between the listing and its ingest fails
+    with one error notification; the other files still load."""
+    from etl_data_ingestion_spark.ingest.lifecycle import LandingZone
+    from etl_data_ingestion_spark.ingest.runner import run_landing_zone
+    from etl_data_ingestion_spark.ingest.sinks import ParquetWarehouseSink
+    from etl_data_ingestion_spark.notify import CollectingNotifier
+
+    zone = LandingZone(spark, str(tmp_path / "landing"))
+    zone.ensure_dirs()
+    names = ("CTB_a.tsv", "CTB_gone.tsv", "CTB_c.tsv")
+    for name in names:
+        zone.put(name, (header_line() + "\n" + row() + "\n").encode())
+    listed = zone.list_unprocessed()
+    os.remove(tmp_path / "landing" / "Unprocessed" / "CTB_gone.tsv")
+    zone.list_unprocessed = lambda: listed
+    notifier = CollectingNotifier()
+    report = run_landing_zone(
+        spark, zone,
+        ParquetWarehouseSink(str(tmp_path / "wh")),
+        ParquetWarehouseSink(str(tmp_path / "q")),
+        notifier,
+    )
+    assert {o.path.rsplit("/", 1)[-1]: o.state for o in report.outcomes} == {
+        "CTB_a.tsv": "processed", "CTB_gone.tsv": "failed", "CTB_c.tsv": "processed",
+    }
+    assert report.total_inserted == 2
+    gone = [e.kind for e in notifier.events if e.subject.endswith(" - CTB_gone.tsv")]
+    assert gone == ["error"]

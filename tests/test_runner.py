@@ -63,8 +63,72 @@ def test_all_bad_rows_failed(spark, zone, sinks):
     body = row(DEMAND_QTY="x") + "\n" + row(SNAPSHOT_DATE="nope") + "\n"
     zone.put("CTB_allbad.tsv", (header_line() + "\n" + body).encode())
     report, notifier = run(spark, zone, sinks)
-    assert report.outcomes[0].state == "failed"
+    o = report.outcomes[0]
+    assert (o.state, o.valid_rows, o.quarantined_rows) == ("failed", 0, 2)
     assert notifier.events[0].kind == "error"
+    assert "(2 quarantined)" in notifier.events[0].body
+    assert spark.read.parquet(sinks[1].path).count() == 2
+    assert os.path.exists(zone.root + "/Failed/CTB_allbad.tsv")
+
+
+def _parquet_files(path) -> int:
+    if not os.path.isdir(path):
+        return 0
+    return len([f for f in os.listdir(path) if f.endswith(".parquet")])
+
+
+def test_clean_file_adds_no_quarantine_file(spark, zone, sinks):
+    """Only rejected rows reach the quarantine sink: after a partial
+    file has created it, a clean file appends no (empty) parquet file."""
+    partial = [header_line(), row(DEMAND_QTY="x"), row(), ""]
+    zone.put("CTB_partial.tsv", "\n".join(partial).encode())
+    run(spark, zone, sinks)
+    before = _parquet_files(sinks[1].path)
+    assert before >= 1
+    zone.put("CTB_clean.tsv", "\n".join([header_line(), row(), row(), ""]).encode())
+    report, notifier = run(spark, zone, sinks)
+    assert [(o.state, o.valid_rows, o.quarantined_rows) for o in report.outcomes] == [
+        ("processed", 2, 0)
+    ]
+    assert [e.kind for e in notifier.events] == ["success"]
+    assert _parquet_files(sinks[1].path) == before
+
+
+def test_quarantine_holds_the_rows_parsed_minus_valid(spark, zone, sinks):
+    """Every parsed row lands in exactly one sink: the quarantine rows
+    read back are the data rows the warehouse did not take."""
+    short = "\t".join(row().split("\t")[:-1])
+    data = [
+        row(), row(DEMAND_QTY="x"), "", short, row() + "\tv", row(SNAPSHOT_DATE="no"),
+    ]
+    zone.put("CTB_defects.tsv", "\n".join([header_line(), *data, ""]).encode())
+    report, _ = run(spark, zone, sinks)
+    parsed = sum(1 for line in data if line.strip())
+    valid = spark.read.parquet(sinks[0].path).count()
+    quarantined = spark.read.parquet(sinks[1].path).count()
+    assert (valid, quarantined) == (1, parsed - 1)
+    o = report.outcomes[0]
+    assert (o.state, o.valid_rows, o.quarantined_rows) == ("processed", valid, quarantined)
+
+
+def test_quarantine_count_mismatch_fails_the_file(spark, zone, tmp_path):
+    """A quarantine append that writes another count than the rows the
+    warehouse rejected fails the file with an error notification."""
+
+    class ShortSink(ParquetWarehouseSink):
+        def write(self, df, load_id):
+            return super().write(df, load_id) - 1
+
+    partial = [header_line(), row(), row(DEMAND_QTY="x"), ""]
+    zone.put("CTB_partial.tsv", "\n".join(partial).encode())
+    report, notifier = run(spark, zone, (
+        ParquetWarehouseSink(str(tmp_path / "wh")),
+        ShortSink(str(tmp_path / "q")),
+    ))
+    assert report.outcomes[0].state == "failed"
+    assert [e.kind for e in notifier.events] == ["error"]
+    assert "wrote 0 rows, expected 1" in notifier.events[0].body
+    assert os.path.exists(zone.root + "/Failed/CTB_partial.tsv")
 
 
 def test_unknown_header_failed_file(spark, zone, sinks):
@@ -195,8 +259,10 @@ def test_batch_and_stream_runners_agree(spark, zone, tmp_path):
 
 
 def test_jobs_per_file_kind(spark, tmp_path):
-    """Each file kind costs a fixed number of Spark jobs: one probe
-    for header and data row, plus one job per sink write."""
+    """Each file kind costs a fixed number of Spark jobs: the header
+    and data-row probe runs on the driver, the warehouse append is one
+    job, and the quarantine append one more only when rows were
+    rejected."""
     sc = spark.sparkContext
     wh = ParquetWarehouseSink(str(tmp_path / "wh"))
     qr = ParquetWarehouseSink(str(tmp_path / "q"))
@@ -221,19 +287,22 @@ def test_jobs_per_file_kind(spark, tmp_path):
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         jobs[kind] = len(sc.statusTracker().getJobIdsForGroup(group))
     assert jobs == {
-        "clean": 3, "defects": 3, "headeronly": 1, "unknown": 1, "zerobyte": 0,
+        "clean": 1, "defects": 2, "headeronly": 0, "unknown": 0, "zerobyte": 0,
     }
 
 
 def test_one_log_record_per_file(spark, zone, tmp_path, caplog):
     """Batch and stream drains of one landing set log one structured
-    record per file, with the same fields apart from the timing."""
+    record per file, with the same fields apart from the timings. The
+    per-step wall times are there too, and a clean file spends none
+    on the quarantine append."""
     landing = {
         "CTB_clean.tsv": [header_line(), row()],
         "CTB_partial.tsv": [header_line(), row(), row(DEMAND_QTY="bad")],
         "CTB_headeronly.tsv": [header_line()],
     }
     fields = ("file", "state", "valid_rows", "quarantined_rows", "error")
+    steps = ("read_s", "warehouse_s", "quarantine_s", "settle_s")
 
     def drain(run_it):
         for name, lines in landing.items():
@@ -248,6 +317,10 @@ def test_one_log_record_per_file(spark, zone, tmp_path, caplog):
         for r in recs:
             assert r.seconds >= 0
             assert all(f"{f}={getattr(r, f)!r}" in r.getMessage() for f in fields)
+            assert all(getattr(r, f) >= 0 for f in steps)
+            assert all(f"{f}=" in r.getMessage() for f in steps)
+            if r.file == "CTB_clean.tsv":
+                assert r.quarantine_s == 0
         return sorted(tuple(getattr(r, f) for f in fields) for r in recs)
 
     batch = drain(lambda: run_landing_zone(

@@ -565,3 +565,49 @@ def test_windowed_topk_stream_matches_batch(spark, events_stream):
     want = windowed_topk(batch_df, 3).orderBy("window_start", "rnk").collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
     assert all(r.rnk <= 3 for r in got)
+
+
+def test_streaming_landing_zone_zero_byte_file(spark, tmp_path):
+    """A stated limitation of the streaming runner: a 0-byte file gives
+    the file stream no row, so it gets no outcome and no notification.
+    It is still checkpointed as consumed, and cleanSource archives it
+    with the rest of its batch once the next batch starts."""
+    import os
+    import time
+
+    from etl_data_ingestion_spark.ingest.sinks import ParquetWarehouseSink
+    from etl_data_ingestion_spark.ingest.stream_runner import run_landing_zone_stream
+    from etl_data_ingestion_spark.notify import CollectingNotifier
+
+    from tests.test_ingest_ctb import header_line, row
+
+    unproc = tmp_path / "Unprocessed"
+    unproc.mkdir()
+    (unproc / "CTB_zero.tsv").write_bytes(b"")
+    (unproc / "CTB_ok.tsv").write_text(header_line() + "\n" + row() + "\n")
+    notifier = CollectingNotifier()
+    args = (
+        spark, str(unproc), str(tmp_path / "Archived"), str(tmp_path / "ckpt"),
+        ParquetWarehouseSink(str(tmp_path / "wh")),
+        ParquetWarehouseSink(str(tmp_path / "quar")),
+        notifier,
+    )
+
+    def archived():
+        return sorted(f for _, _, fs in os.walk(tmp_path / "Archived") for f in fs)
+
+    report = run_landing_zone_stream(*args)
+    assert [o.path.rsplit("/", 1)[-1] for o in report.outcomes] == ["CTB_ok.tsv"]
+    assert [e.subject.rsplit(" - ", 1)[-1] for e in notifier.events] == ["CTB_ok.tsv"]
+
+    (unproc / "CTB_next.tsv").write_text(header_line() + "\n" + row() + "\n")
+    report = run_landing_zone_stream(*args)  # starts batch 1: batch 0 is archived
+    assert [o.path.rsplit("/", 1)[-1] for o in report.outcomes] == ["CTB_next.tsv"]
+    assert [e.subject.rsplit(" - ", 1)[-1] for e in notifier.events] == [
+        "CTB_ok.tsv", "CTB_next.tsv",
+    ]
+    deadline = time.monotonic() + 30
+    while archived() != ["CTB_ok.tsv", "CTB_zero.tsv"] and time.monotonic() < deadline:
+        time.sleep(0.2)
+    assert archived() == ["CTB_ok.tsv", "CTB_zero.tsv"]
+    assert os.listdir(unproc) == ["CTB_next.tsv"]
