@@ -14,6 +14,16 @@ the same code that passes the golden tests on 10 rows holds on 100 TB:
 - a row with ANY failed coercion goes to quarantine with its reasons;
   coerced-to-NULL *empty* fields do not reject (main.py:387-388)
 
+The expressions are SQL text, built by plain string formatting, and
+each projection is one ``selectExpr``: one JVM call parses a whole
+projection, where building it from ``Column`` objects costs a py4j
+round trip per function and operand (thousands per file). Only this
+module's constants and schema column names go into the text, every
+identifier backtick-quoted and every literal escaped; a file's unknown
+column fails the file before coercion runs, and no value read from a
+file ever enters the text. The literals parse the same on every engine
+session because ``session.py`` pins ``escapedStringLiterals=false``.
+
 Deviation from the reference (deliberate, documented): error reasons
 carry the source file and raw row instead of a 1-based line number —
 a distributed text scan has no global line order, and file+content is
@@ -34,17 +44,31 @@ INT_PATTERN = r"^[+-]?[0-9]+$"
 # strict otherwise (CORRECTED time-parser policy → real calendar check).
 DATE_FORMAT = "yyyy-M-d"
 
+_INT_ERROR = (
+    "Value error for column '%s': could not convert '%s' to INTEGER. "
+    "Setting to None."
+)
+_DATE_ERROR = (
+    "Value error for column '%s': could not convert '%s' to DATE "
+    "(expected %%Y-%%m-%%d). Setting to None."
+)
+_MALFORMED_ERROR = "Malformed row: column count mismatch. Row content: '%s'"
 
-def _base(col: str) -> Column:
-    """Trimmed value with ''→NULL applied — the universal prelude."""
-    t = F.trim(F.col(col))
-    return F.when(t == "", F.lit(None)).otherwise(t)
+
+def sql_ident(name: str) -> str:
+    """A backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_str(value: str) -> str:
+    """A SQL string literal (``escapedStringLiterals=false`` rules)."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def coercion_exprs(
     types: dict[str, str] | None = None,
-) -> tuple[dict[str, Column], dict[str, Column], list[Column]]:
-    """Build (casted-value, row-validity, error-reason) expressions.
+) -> tuple[dict[str, str], dict[str, str], list[str]]:
+    """Build (casted-value, row-validity, error-reason) SQL expressions.
 
     Returns ``(values, valid_flags, error_exprs)`` keyed/ordered by
     column. Generated from the schema map so adding a column is a
@@ -52,41 +76,30 @@ def coercion_exprs(
     from bq_schema_types (main.py:381-385).
     """
     types = types or BQ_SCHEMA_TYPES
-    values: dict[str, Column] = {}
-    valid: dict[str, Column] = {}
-    errors: list[Column] = []
+    values: dict[str, str] = {}
+    valid: dict[str, str] = {}
+    errors: list[str] = []
 
     for name, typ in types.items():
-        base = _base(name)
+        # trimmed value with ''→NULL applied — the universal prelude
+        base = f"nullif(trim({sql_ident(name)}), '')"
         if typ == "INTEGER":
-            cleaned = F.regexp_replace(base, ",", "")
-            ok = base.isNull() | cleaned.rlike(INT_PATTERN)
-            values[name] = F.when(ok, cleaned.cast("long"))
+            cleaned = f"regexp_replace({base}, ',', '')"
+            ok = f"({base} IS NULL OR {cleaned} RLIKE {sql_str(INT_PATTERN)})"
+            values[name] = f"CASE WHEN {ok} THEN CAST({cleaned} AS BIGINT) END"
             valid[name] = ok
             errors.append(
-                F.when(
-                    ~ok,
-                    F.format_string(
-                        "Value error for column '%s': could not convert '%s' to INTEGER. Setting to None.",
-                        F.lit(name),
-                        base,
-                    ),
-                )
+                f"CASE WHEN NOT {ok} THEN format_string("
+                f"{sql_str(_INT_ERROR)}, {sql_str(name)}, {base}) END"
             )
         elif typ == "DATE":
-            casted = F.to_date(base, DATE_FORMAT)
-            ok = base.isNull() | casted.isNotNull()
+            casted = f"to_date({base}, {sql_str(DATE_FORMAT)})"
+            ok = f"({base} IS NULL OR {casted} IS NOT NULL)"
             values[name] = casted
             valid[name] = ok
             errors.append(
-                F.when(
-                    ~ok,
-                    F.format_string(
-                        "Value error for column '%s': could not convert '%s' to DATE (expected %%Y-%%m-%%d). Setting to None.",
-                        F.lit(name),
-                        base,
-                    ),
-                )
+                f"CASE WHEN NOT {ok} THEN format_string("
+                f"{sql_str(_DATE_ERROR)}, {sql_str(name)}, {base}) END"
             )
         else:  # STRING
             values[name] = base
@@ -109,34 +122,31 @@ def split_valid_quarantine(
     types = types or BQ_SCHEMA_TYPES
     values, valid, error_exprs = coercion_exprs(types)
 
-    malformed = (
-        F.col(corrupt_col).isNotNull() if corrupt_col else F.lit(False)
-    )
-    all_errors = list(error_exprs)
-    all_errors.append(
-        F.when(
-            malformed,
-            F.format_string(
-                "Malformed row: column count mismatch. Row content: '%s'",
-                F.col(corrupt_col) if corrupt_col else F.lit(""),
-            ),
-        )
-    )
-    errors_arr = F.array_compact(F.array(*all_errors))
-    row_ok = ~malformed
-    for flag in valid.values():
-        row_ok = row_ok & flag
+    corrupt = sql_ident(corrupt_col) if corrupt_col else "CAST(NULL AS STRING)"
+    malformed = f"({corrupt} IS NOT NULL)"
+    errors = [
+        *error_exprs,
+        f"CASE WHEN {malformed} THEN format_string("
+        f"{sql_str(_MALFORMED_ERROR)}, {corrupt}) END",
+    ]
+    row_ok = " AND ".join([f"NOT {malformed}", *valid.values()])
 
-    annotated = df.withColumn("_errors", errors_arr).withColumn("_row_ok", row_ok)
-
-    valid_df = annotated.filter(F.col("_row_ok")).select(
-        *[values[name].alias(name) for name in types]
+    annotated = df.selectExpr(
+        "*",
+        f"array_compact(array({', '.join(errors)})) AS `_errors`",
+        f"{row_ok} AS `_row_ok`",
+    )
+    valid_df = annotated.filter("`_row_ok`").selectExpr(
+        *[f"{values[name]} AS {sql_ident(name)}" for name in types]
     )
     src = source_file_col if source_file_col is not None else F.lit(None).cast("string")
-    quarantine_df = annotated.filter(~F.col("_row_ok")).select(
-        *[F.trim(F.col(name)).alias(name) for name in types],
-        (F.col(corrupt_col) if corrupt_col else F.lit(None).cast("string")).alias("_raw"),
-        F.col("_errors").alias("_errors"),
-        src.alias("_source_file"),
+    quarantine_df = (
+        annotated.filter("NOT `_row_ok`")
+        .selectExpr(
+            *[f"trim({sql_ident(name)}) AS {sql_ident(name)}" for name in types],
+            f"{corrupt} AS `_raw`",
+            "`_errors`",
+        )
+        .withColumn("_source_file", src)
     )
     return valid_df, quarantine_df

@@ -24,6 +24,12 @@ splittable; a 1 TB TSV becomes ~8000 tasks, each applying the same
 vectorized coercion projection. An ``Observation`` on that scan
 counts the rows parsed, so a caller learns how many rows a sink
 rejected from the write that reads them.
+
+At email size a file's wait is fixed cost, not data: the plan build
+and one Spark job (the warehouse append). The coercion projections
+are SQL text (``coerce.py``), so building a clean 21-column file's
+plans takes about 150 py4j commands, not the ~3000 that ``Column``
+expressions cost.
 """
 
 from __future__ import annotations
@@ -72,8 +78,8 @@ def _empty_result(spark: SparkSession, error: str) -> IngestResult:
 
 
 def read_raw_header(spark: SparkSession, path: str) -> tuple[list[str], bool]:
-    """(raw header tokens, has a data row) of a delimited file, read on
-    the driver without a Spark job.
+    """(raw header tokens, has a data row) of a tab-separated file, read
+    on the driver without a Spark job.
 
     The file is opened through the Hadoop FileSystem API and decoded by
     the codec its suffix names (``.gz`` …), then split by Hadoop's
@@ -104,10 +110,9 @@ def read_raw_header(spark: SparkSession, path: str) -> tuple[list[str], bool]:
         stream.close()
 
 
-def ingest_ctb_file(
-    spark: SparkSession, path: str, sep: str = "\t"
-) -> IngestResult:
-    """Ingest one landed delimited file with full reference semantics."""
+def ingest_ctb_file(spark: SparkSession, path: str) -> IngestResult:
+    """Ingest one landed tab-separated file with full reference
+    semantics (the reference splits on tabs only, main.py:370)."""
     header, has_data = read_raw_header(spark, path)
     empty = f"CTB file '{path}' is empty or has no data rows."
     if not header or header == [""]:
@@ -138,7 +143,7 @@ def ingest_ctb_file(
     parsed = Observation(f"parsed:{path}")
     raw = spark.read.option("columnPruning", "false").csv(
         path,
-        sep=sep,
+        sep="\t",
         header=True,
         schema=read_schema,
         mode="PERMISSIVE",

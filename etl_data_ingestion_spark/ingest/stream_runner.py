@@ -16,6 +16,13 @@ content read. ``foreachBatch`` hands each path to ``runner.process_file``,
 the per-file policy the batch runner uses, against the file still
 sitting in the watch dir (archival happens after the batch commits).
 
+Listing a micro-batch's paths is one Spark job (a ``foreachBatch``
+frame has no ``inputFiles()``), coalesced to one task: ``binaryFile``
+charges every file the 4 MB open cost, so uncoalesced it would run a
+task per landed file. With ``content`` pruned a task only reads each
+file's status, and the driver then runs at least one job per file,
+one file at a time, so one listing task keeps up at any batch size.
+
 Spark archives a batch's files when it starts the next batch, so the
 files of a drain's last batch stay in the watch dir, already
 checkpointed, until a later drain finds new files.
@@ -63,6 +70,7 @@ def run_landing_zone_stream(
         .option("sourceArchiveDir", archive_dir)
         .load(unprocessed_dir)
         .select("path")
+        .coalesce(1)
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:

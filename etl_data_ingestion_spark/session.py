@@ -11,6 +11,9 @@ for scale-readiness:
   re-plans from runtime statistics.
 - `timeParserPolicy=CORRECTED`: strict `yyyy-MM-dd` parsing, matching
   the reference's strptime('%Y-%m-%d') (reference main.py:400-410).
+- `escapedStringLiterals=false`: SQL string literals unescape `\'` and
+  `\\`, so the coercion's SQL text (`ingest/coerce.py`) parses to the
+  same literals on every session.
 - ANSI off: the ingestion path relies on cast-failure -> NULL plus
   explicit validity flags (SURVEY.md §7.4); we never want a mid-job
   exception from a malformed source value at scale.
@@ -60,6 +63,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.legacy.timeParserPolicy", "CORRECTED")
+        .config("spark.sql.parser.escapedStringLiterals", "false")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
@@ -114,12 +118,13 @@ def tune_session(spark: SparkSession) -> SparkSession:
     The driver hands us its own SparkSession; these confs are the
     runtime-settable subset of ``get_spark``'s defaults that correctness
     depends on (timezone for oracle parity, non-ANSI casts for the
-    coercion path, strict date parsing, nanosecond parquet timestamps
-    readable as long).
+    coercion path, strict date parsing and SQL literal escapes,
+    nanosecond parquet timestamps readable as long).
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.ansi.enabled", "false")
     spark.conf.set("spark.sql.legacy.timeParserPolicy", "CORRECTED")
+    spark.conf.set("spark.sql.parser.escapedStringLiterals", "false")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     for k, v in (
         ("spark.sql.adaptive.enabled", "true"),

@@ -4,12 +4,14 @@ each asserting the exact reference behavior it cites."""
 from __future__ import annotations
 
 import datetime
+import gc
 import gzip
 import os
 
 import pytest
 
 from etl_data_ingestion_spark.ingest import ingest_ctb_file
+from etl_data_ingestion_spark.ingest.coerce import sql_str
 from etl_data_ingestion_spark.schema import (
     BQ_SCHEMA_MAP,
     BQ_SCHEMA_TYPES,
@@ -240,6 +242,67 @@ def test_negative_and_plus_ints(spark, tmp_path):
     assert counts(res) == (1, 0)
     r = res.valid.collect()[0]
     assert r["DAYS_LATE"] == -5 and r["LEAD_TIME"] == 3
+
+
+def test_plan_build_sends_few_jvm_calls(spark, tmp_path, monkeypatch):
+    """Building a clean 21-column file's plans is a few hundred py4j
+    commands, not thousands: each coercion projection is SQL text that
+    one ``selectExpr`` call parses."""
+    path = write_tsv(tmp_path, "ctb_calls.tsv", header_line() + "\n" + row() + "\n")
+    assert ingest_ctb_file(spark, path).ok  # warm: first-use lookups
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = []
+
+    def counted(command, *args, **kwargs):
+        sent.append(command)
+        return send(command, *args, **kwargs)
+
+    # no cyclic GC inside the window: it would release (and count)
+    # JVM references that earlier tests left behind
+    gc.collect()
+    gc.disable()
+    monkeypatch.setattr(client, "send_command", counted)
+    try:
+        res = ingest_ctb_file(spark, path)
+    finally:
+        monkeypatch.undo()
+        gc.enable()
+    assert res.ok
+    assert len(sent) <= 300
+
+
+@pytest.mark.parametrize(
+    "value",
+    ["it's", "back\\slash", "100%", "%s%%", "\\'", "'\\n'", "`x`"],
+)
+def test_sql_literal_round_trips(spark, value):
+    """A quote, backslash or percent sign in a coercion literal comes
+    back from ``selectExpr`` unchanged."""
+    assert spark.range(1).selectExpr(f"{sql_str(value)} AS v").first()["v"] == value
+
+
+def test_tuned_session_reads_coercion_literals_alike(spark, tmp_path):
+    """A session that reads SQL literals raw (escapedStringLiterals)
+    would keep the escapes in every error reason; ``tune_session``
+    pins the default, so its reasons match the engine session's."""
+    from etl_data_ingestion_spark.session import tune_session
+
+    short = "\t".join([GOOD[c] for c in CANONICAL[:-1]])
+    text = header_line() + "\n" + row(DEMAND_QTY="1'2", SNAPSHOT_DATE="x") + "\n" + short + "\n"
+    path = write_tsv(tmp_path, "ctb_literals.tsv", text)
+
+    def errors(session):
+        return sorted(
+            e for r in ingest_ctb_file(session, path).quarantine.collect() for e in r["_errors"]
+        )
+
+    want = errors(spark)
+    assert any("column 'DEMAND_QTY'" in e for e in want)
+    raw = spark.newSession()
+    raw.conf.set("spark.sql.parser.escapedStringLiterals", "true")
+    assert errors(raw) != want
+    assert errors(tune_session(raw)) == want
 
 
 def test_canonical_name_examples():

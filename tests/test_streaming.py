@@ -611,3 +611,49 @@ def test_streaming_landing_zone_zero_byte_file(spark, tmp_path):
         time.sleep(0.2)
     assert archived() == ["CTB_ok.tsv", "CTB_zero.tsv"]
     assert os.listdir(unproc) == ["CTB_next.tsv"]
+
+
+def test_stream_arrival_log_runs_one_task(spark, tmp_path, monkeypatch):
+    """The stream runner lists a micro-batch's landed files with one
+    Spark job of one task, however many files arrived. The job runs
+    under the query's job group; the jobs in that group before the
+    batch's first file is processed are the arrival log."""
+    from etl_data_ingestion_spark.ingest import stream_runner
+    from etl_data_ingestion_spark.ingest.sinks import ParquetWarehouseSink
+    from etl_data_ingestion_spark.notify import CollectingNotifier
+
+    from tests.test_ingest_ctb import header_line, row
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    unproc = tmp_path / "Unprocessed"
+    unproc.mkdir()
+    for i in range(3):
+        (unproc / f"CTB_{i}.tsv").write_text(header_line() + "\n" + row() + "\n")
+    seen = {}
+    process_file = stream_runner.process_file
+
+    def first_file_sees_jobs(*args, **kwargs):
+        if not seen:
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            seen["group"] = sc.getLocalProperty("spark.jobGroup.id")
+            seen["jobs"] = sorted(tracker.getJobIdsForGroup(seen["group"]))
+        return process_file(*args, **kwargs)
+
+    monkeypatch.setattr(stream_runner, "process_file", first_file_sees_jobs)
+    report = stream_runner.run_landing_zone_stream(
+        spark, str(unproc), str(tmp_path / "Archived"), str(tmp_path / "ckpt"),
+        ParquetWarehouseSink(str(tmp_path / "wh")),
+        ParquetWarehouseSink(str(tmp_path / "quar")),
+        CollectingNotifier(),
+    )
+    assert [o.state for o in report.outcomes] == ["processed"] * 3
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert seen["group"]
+    (arrival,) = seen["jobs"]
+    tasks = [
+        tracker.getStageInfo(s).numTasks for s in tracker.getJobInfo(arrival).stageIds
+    ]
+    assert tasks == [1]
+    # the arrival log plus one warehouse append per clean file
+    assert len(tracker.getJobIdsForGroup(seen["group"])) == 4
