@@ -960,6 +960,11 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignments themselves are quantizer-specific."""
     import numpy as np
 
+    from etl_data_ingestion_spark.operators.similarity import (
+        lloyd,
+        nearest_centroid_udf,
+    )
+
     k_centroids, n_iter, cos_floor = 8, 10, 0.97
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     perturbed = emb.filter(F.col("vec_id") % 10 == 0).select(
@@ -986,33 +991,8 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         # identical and the planted-recall contract degenerates to
         # the oracle's (0, TRUE, TRUE) row.
         sample = np.zeros((1, 1), dtype=np.float64)
-    cents = sample[:k_centroids].copy()
-    for _ in range(n_iter):
-        d2 = ((sample[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-        lab = d2.argmin(axis=1)
-        for c in range(k_centroids):
-            pts = sample[lab == c]
-            if len(pts):
-                cents[c] = pts.mean(axis=0)
-
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    cents64 = cents.copy()
-
-    def _nearest(embs):
-        if len(embs) == 0:
-            # Arrow can hand a 0-row batch; np.stack raises on it
-            return pd.Series([], dtype="int32")
-        X = np.stack(embs.to_numpy())
-        d2 = (
-            (X ** 2).sum(axis=1, keepdims=True)
-            - 2.0 * (X @ cents64.T)
-            + (cents64 ** 2).sum(axis=1)[None, :]
-        )
-        return pd.Series(d2.argmin(axis=1).astype("int32"))
-
-    nearest_centroid = pandas_udf(_nearest, "int")
+    # the corpus is cast to double above, so assignment runs in float64
+    nearest_centroid = nearest_centroid_udf(lloyd(sample, k_centroids, n_iter))
     assigned = corpus.select(
         "vec_id", "embedding", nearest_centroid("embedding").alias("cluster_id")
     )

@@ -2,9 +2,9 @@
 (SURVEY.md §2.2 T8-T13) against the driver fixtures.
 
 The ingestion golden tests (tests/test_ingest_ctb.py) pin the exact
-reference behavior on crafted TSVs; these queries re-express the same
-expressions over the shared parquet tables so the DuckDB oracle
-independently confirms the coercion rules:
+reference behavior on crafted TSVs; these queries run the ingest
+coercion's own SQL (``coerce.coercion_exprs``) over the shared parquet
+tables so the DuckDB oracle independently confirms the coercion rules:
 
 - T8/T9  trim + ''→NULL            → ingest_trim_empty_null
 - T10    comma-int parse + validity → ingest_comma_int_roundtrip
@@ -22,7 +22,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from etl_data_ingestion_spark.catalog import load_table
-from etl_data_ingestion_spark.ingest.coerce import INT_PATTERN
+from etl_data_ingestion_spark.ingest.coerce import coercion_exprs
 from etl_data_ingestion_spark.plans.registry import register
 
 TRIM_ORACLE = """
@@ -45,9 +45,10 @@ def ingest_trim_empty_null(spark: SparkSession, sf_dir: str) -> DataFrame:
     padded = F.when(F.col("doc_id") % 5 == 0, F.lit("   ")).otherwise(
         F.concat(F.lit("  "), F.col("source"), F.lit("  "))
     )
-    trimmed = F.trim(padded)
-    cleaned = F.when(trimmed == "", F.lit(None)).otherwise(trimmed)
-    return docs.select("doc_id", cleaned.alias("cleaned"))
+    values, _, _ = coercion_exprs({"padded": "STRING"})
+    return docs.select("doc_id", padded.alias("padded")).selectExpr(
+        "doc_id", f"{values['padded']} AS cleaned"
+    )
 
 
 COMMA_INT_ORACLE = """
@@ -76,14 +77,16 @@ def ingest_comma_int_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderkey") % 11 == 0,
         F.concat(F.col("o_orderkey").cast("string"), F.lit("x")),
     ).otherwise(F.format_number(F.col("o_orderkey"), 0))
-    df = orders.select("o_orderkey", formatted.alias("formatted"))
-    cleaned = F.regexp_replace("formatted", ",", "")
-    ok = cleaned.rlike(INT_PATTERN)
-    return df.select(
-        "o_orderkey",
-        "formatted",
-        F.when(ok, cleaned.cast("long")).alias("parsed"),
-        ok.alias("is_valid"),
+    values, _, _ = coercion_exprs({"formatted": "INTEGER"})
+    # the coercion passes NULL as valid; the oracle's regex test gives
+    # NULL on NULL input, so is_valid does too
+    return (
+        orders.select("o_orderkey", formatted.alias("formatted"))
+        .selectExpr("o_orderkey", "formatted", f"{values['formatted']} AS parsed")
+        .selectExpr(
+            "*",
+            "CASE WHEN formatted IS NOT NULL THEN parsed IS NOT NULL END AS is_valid",
+        )
     )
 
 
@@ -111,12 +114,12 @@ def ingest_strict_date_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = F.when(
         F.col("event_id") % 7 == 0, F.date_format("ts", "MM/dd/yyyy")
     ).otherwise(F.date_format("ts", "yyyy-MM-dd"))
-    df = events.select("event_id", raw.alias("raw"))
-    parsed = F.to_date("raw", "yyyy-M-d")
-    return df.select(
+    values, _, _ = coercion_exprs({"raw": "DATE"})
+    # the coercion passes NULL as valid; the oracle counts it invalid
+    return events.select("event_id", raw.alias("raw")).selectExpr(
         "event_id",
-        F.date_format(parsed, "yyyy-MM-dd").alias("parsed_date"),
-        parsed.isNotNull().alias("is_valid"),
+        f"date_format({values['raw']}, 'yyyy-MM-dd') AS parsed_date",
+        f"{values['raw']} IS NOT NULL AS is_valid",
     )
 
 

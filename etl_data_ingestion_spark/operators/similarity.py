@@ -266,8 +266,8 @@ def similarity_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _train_quantizer(emb: DataFrame, k_centroids: int, n_iter: int):
     """Deterministic coarse quantizer: bounded 2.5k sample (documented
     driver-side collect; production IVF trains on ~100k samples
-    regardless of corpus size), first-k init, numpy Lloyd loop.
-    Returns the (k, dim) float64 centroid matrix."""
+    regardless of corpus size) fed to ``lloyd``. Returns the (k, dim)
+    float64 centroid matrix."""
     import numpy as np
 
     sample = np.array(
@@ -286,34 +286,43 @@ def _train_quantizer(emb: DataFrame, k_centroids: int, n_iter: int):
             "IVF quantizer requires a non-empty corpus sample; "
             "got 0 embedding rows"
         )
-    cents = sample[:k_centroids].copy()
+    return lloyd(sample, k_centroids, n_iter)
+
+
+def lloyd(sample, k: int, n_iter: int):
+    """Driver-side k-means: first-k init, then ``n_iter`` numpy Lloyd
+    rounds over the (n, dim) ``sample``; a centroid that loses every
+    point keeps its place. Returns the (k, dim) centroids in the
+    sample's dtype. Deterministic for a given sample."""
+    cents = sample[:k].copy()
     for _ in range(n_iter):
         d2 = ((sample[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
         lab = d2.argmin(axis=1)
-        for c in range(k_centroids):
+        for c in range(k):
             pts = sample[lab == c]
             if len(pts):
                 cents[c] = pts.mean(axis=0)
     return cents
 
 
-def _nearest_centroid_udf(cents):
+def nearest_centroid_udf(cents):
     """Vectorized map-side assignment UDF: numpy argmin over the Arrow
     batch with the centroid matrix captured in the closure (=
-    broadcast). JVM higher-order lambdas would interpret k x dim ops
-    per row."""
+    broadcast), computed in the centroids' dtype. JVM higher-order
+    lambdas would interpret k x dim ops per row."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    cents_f32 = cents.astype(np.float32)
-
     def _nearest(embs):
+        if len(embs) == 0:
+            # Arrow can hand a 0-row batch; np.stack raises on it
+            return pd.Series([], dtype="int32")
         X = np.stack(embs.to_numpy())
         d2 = (
             (X ** 2).sum(axis=1, keepdims=True)
-            - 2.0 * (X @ cents_f32.T)
-            + (cents_f32 ** 2).sum(axis=1)[None, :]
+            - 2.0 * (X @ cents.T)
+            + (cents ** 2).sum(axis=1)[None, :]
         )
         return pd.Series(d2.argmin(axis=1).astype("int32"))
 
@@ -374,7 +383,7 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
         "centroid_id int, center array<double>",
     )
-    nearest_centroid = _nearest_centroid_udf(cents)
+    nearest_centroid = nearest_centroid_udf(cents.astype("float32"))
 
     # assignment feeds ONLY the probe-scoring side; query vectors come
     # straight from the corpus scan (no centroid needed), so the UDF
@@ -892,7 +901,7 @@ def similarity_index_persist_reuse(
         "vec_id", "embedding"
     )
     cents = _train_quantizer(emb, k_centroids, n_iter)
-    nearest_centroid = _nearest_centroid_udf(cents)
+    nearest_centroid = nearest_centroid_udf(cents.astype("float32"))
 
     idx_path = _scratch(sf_dir, "ivf_index")
     cent_path = _scratch(sf_dir, "ivf_centers")

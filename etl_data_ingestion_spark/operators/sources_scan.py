@@ -180,9 +180,10 @@ def mailbox_extract_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2-S5 under the oracle: MIME-shaped message JSON synthesized
     IN-PLAN from `documents` (even doc_ids get a CTB attachment nested
     under a wrapper part, urlsafe-base64-encoded; odd ones a decoy
-    'notes.txt' only), then the real extract path — mapInPandas tree
-    flatten (S5) → first-CTB-match selection (S5, main.py:518-523,571)
-    → urlsafe-base64 decode (S4, main.py:214). The oracle recomputes
+    'notes.txt' only), then the real extract path —
+    ``extract_ctb_attachments``: one mapInPandas over the shared walk,
+    first-CTB-match rule (S5, main.py:518-523,571) and urlsafe-base64
+    decode (S4, main.py:214). The oracle recomputes
     which messages yield an attachment and the decoded byte length
     straight from `documents`: a wrong traversal, filename predicate,
     or decode changes the result."""
@@ -230,16 +231,9 @@ def mailbox_extract_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     raw = docs.select(msg.alias("value"))
 
-    from etl_data_ingestion_spark.sources.mailbox import (
-        decode_attachment_data,
-        flatten_message_parts,
-        select_ctb_attachments,
-    )
+    from etl_data_ingestion_spark.sources.mailbox import extract_ctb_attachments
 
-    flat = flatten_message_parts(raw)
-    selected = select_ctb_attachments(flat, prefix="CTB")
-    decoded = decode_attachment_data(selected)
-    return decoded.select(
+    return extract_ctb_attachments(raw, prefix="CTB").select(
         "message_id",
         "filename",
         F.length("content").alias("content_bytes"),
@@ -345,9 +339,10 @@ def mailbox_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.read.format("mailbox") over a landing dir of message-JSON
     files (synthesized from `documents`: even doc_ids carry a CTB
     attachment, odd ones only a decoy). The reader's partitioned
-    scan, prefix filter, first-match rule and urlsafe decode all have
-    to be right for the byte counts to match the oracle's recompute
-    from `documents`."""
+    scan and its prefix filter, plus the shared first-match rule and
+    urlsafe decode (``mailbox.first_ctb_attachment``), all have to be
+    right for the byte counts to match the oracle's recompute from
+    `documents`."""
     import base64
     import json
 

@@ -182,10 +182,12 @@ CHECK_ORDER: list[str] = [
     # empty-corpus-sweep-touched queries whose plans changed in
     # e1f3f39 with only pre-fix driver verdicts (incl. the four
     # shared-helper members: _corpus_matrix guard reorder ->
-    # ratio_margin/loo_1nn; _train_quantizer empty-raise ->
-    # ivf_topk/index_persist_reuse), (3) the twice-drift-flagged
-    # resident, (4) the two round-15 FLOOR-row subjects, (5)
-    # refreshes of the r14 changed-code cohort. Exactly 50.
+    # ratio_margin/loo_1nn; similarity._train_quantizer's empty-
+    # sample raise, ahead of the shared similarity.lloyd loop that
+    # dedup_semantic_clusters also runs -> ivf_topk/index_persist_reuse),
+    # (3) the twice-drift-flagged resident, (4) the two round-15
+    # FLOOR-row subjects, (5) refreshes of the r14 changed-code
+    # cohort. Exactly 50.
     # slots 1-11: round-15 changed code (wave-1 rewrites)
     "agg_corr_matrix_daily",
     "text_source_vocab_jaccard",

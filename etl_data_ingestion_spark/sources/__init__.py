@@ -1,6 +1,6 @@
 from .mailbox import (  # noqa: F401
-    MESSAGE_SCHEMA,
-    flatten_message_parts,
-    select_ctb_attachments,
-    decode_attachment_data,
+    SCHEMA,
+    extract_ctb_attachments,
+    first_ctb_attachment,
+    iter_parts,
 )

@@ -10,8 +10,12 @@ service object (tests, alternative transports) or raises a clear
 ImportError naming the missing packages. The CONNECTOR logic —
 pagination, message fetch, attachment fetch, urlsafe-b64 payloads,
 INBOX-label commit — is real and unit-tested against a duck-typed
-fake service; only the OAuth dance and HTTP transport live behind
-the guard.
+fake service; only the OAuth dance (``build_gmail_service_web``,
+the reference's web-application flow) and HTTP transport live
+behind the guard.
+Attachment inlining walks the parts with the extract's own
+``mailbox.iter_parts``, so it fills exactly the parts the extract
+can match.
 
 Division of labor (why this is a landing-side driver component, not
 an operator): one mailbox is one API endpoint with per-user rate
@@ -31,6 +35,8 @@ import os
 from dataclasses import dataclass
 from typing import Any, Iterator, Optional
 
+from etl_data_ingestion_spark.sources.mailbox import iter_parts
+
 GMAIL_SCOPES = ("https://www.googleapis.com/auth/gmail.modify",)
 
 
@@ -38,7 +44,7 @@ def _require_google_libs():
     try:
         from google.auth.transport.requests import Request  # noqa: F401
         from google.oauth2.credentials import Credentials  # noqa: F401
-        from google_auth_oauthlib.flow import InstalledAppFlow  # noqa: F401
+        from google_auth_oauthlib.flow import Flow  # noqa: F401
         from googleapiclient.discovery import build  # noqa: F401
     except ImportError as e:  # pragma: no cover - absent in this env
         raise ImportError(
@@ -47,28 +53,7 @@ def _require_google_libs():
             "google-auth-oauthlib); alternatively inject a prebuilt "
             "`service` object."
         ) from e
-    return Request, Credentials, InstalledAppFlow, build
-
-
-def build_gmail_service(credentials_path: str, token_path: str):
-    """S1 (main.py:96-155): cached-token-first OAuth — reuse/refresh
-    token.json when possible, run the installed-app browser flow only
-    when no usable token exists, persist the refreshed token."""
-    Request, Credentials, InstalledAppFlow, build = _require_google_libs()
-    creds = None
-    if os.path.exists(token_path):
-        creds = Credentials.from_authorized_user_file(token_path, list(GMAIL_SCOPES))
-    if not creds or not creds.valid:
-        if creds and creds.expired and creds.refresh_token:
-            creds.refresh(Request())
-        else:
-            flow = InstalledAppFlow.from_client_secrets_file(
-                credentials_path, list(GMAIL_SCOPES)
-            )
-            creds = flow.run_local_server(port=0)
-        with open(token_path, "w") as f:
-            f.write(creds.to_json())
-    return build("gmail", "v1", credentials=creds, cache_discovery=False)
+    return Request, Credentials, Flow, build
 
 
 @dataclass
@@ -84,7 +69,7 @@ class GmailLiveSource:
     def connect(
         cls, credentials_path: str, token_path: str, user_id: str = "me"
     ) -> "GmailLiveSource":
-        return cls(build_gmail_service(credentials_path, token_path), user_id)
+        return cls(build_gmail_service_web(credentials_path, token_path), user_id)
 
     # -- S2: query-filtered listing with pagination (main.py:158-177)
     def list_message_ids(self, query: str) -> Iterator[str]:
@@ -153,25 +138,23 @@ class GmailLiveSource:
                 self.commit(msg_id)
         return landed
 
-    def _inline_attachments(self, msg_id: str, part: dict) -> None:
-        """Recursive MIME walk (S5 shape, main.py:514-572): any part
+    def _inline_attachments(self, msg_id: str, payload: dict) -> None:
+        """Every part the extract walk visits (``mailbox.iter_parts``)
         whose body carries only an attachmentId gets its data fetched
-        and inlined as the urlsafe-b64 string the extract path
-        expects."""
-        body = part.get("body", {})
-        if body.get("attachmentId") and not body.get("data"):
-            raw = self.fetch_attachment(msg_id, body["attachmentId"])
-            body["data"] = base64.urlsafe_b64encode(raw).decode("ascii")
-        for child in part.get("parts", []) or []:
-            self._inline_attachments(msg_id, child)
+        and inlined as the urlsafe-b64 string the extract decodes; the
+        attachmentId stays."""
+        for part in iter_parts(payload):
+            body = part.get("body", {})
+            if body.get("attachmentId") and not body.get("data"):
+                raw = self.fetch_attachment(msg_id, body["attachmentId"])
+                body["data"] = base64.urlsafe_b64encode(raw).decode("ascii")
 
 
-# ---------------------------------------------------------------- S1b
-# Web-application OAuth variant (reference main.py:53-93,123-135):
-# the reference does NOT use the installed-app console flow above —
-# it prints an authorization URL, opens a browser, and runs a
-# one-shot localhost HTTP server whose /callback handler exchanges
-# the returned ?code= for credentials and persists the token. The
+# ----------------------------------------------------------------- S1
+# OAuth, the reference's web-application flow (main.py:53-93,123-135):
+# print an authorization URL, open a browser, and run a one-shot
+# localhost HTTP server whose /callback handler exchanges the
+# returned ?code= for credentials and persists the token. The
 # handler/exchange logic below is transport-free (pure function over
 # the request path + a duck-typed flow), so it is unit-testable
 # without google libs or a network; only the real Flow construction
@@ -266,19 +249,18 @@ def build_gmail_service_web(
     _service_builder=None,
     _token_loader=None,
 ):
-    """S1, web-application flow (reference main.py:96-155 via the
-    callback server at main.py:53-93): cached-token-first like the
-    installed-app variant, but the interactive leg prints/opens an
-    authorization URL and blocks on ONE localhost callback request
-    instead of run_local_server's console flow.
+    """S1 (reference main.py:96-155 via the callback server at
+    main.py:53-93): cached-token-first OAuth — reuse/refresh
+    token.json when possible; otherwise open the authorization URL
+    and block on ONE localhost callback request, which persists the
+    new token.
 
     The underscore-keyword seams inject duck-typed fakes in tests
     (no google libs, no network); left at None they resolve to the
     real guarded google implementations."""
     if None in (_flow_factory, _serve_callback, _browser_open,
                 _service_builder, _token_loader):
-        Request, Credentials, _, build = _require_google_libs()
-        from google_auth_oauthlib.flow import Flow
+        Request, Credentials, Flow, build = _require_google_libs()
 
         _flow_factory = _flow_factory or (
             lambda secret, uri: Flow.from_client_secrets_file(

@@ -1,145 +1,102 @@
-"""Mailbox-style source: message documents → CTB attachments.
+"""Mailbox extract: message documents → the first CTB attachment.
 
-Spark-first re-expression of the reference's extract stage:
-- S2 (list_messages, main.py:158-177): the server-side query-string
-  filter becomes source-level pushdown — the caller reads only the
-  matching message documents (pathGlobFilter / partition predicate);
-  nothing here re-filters client-side.
-- S5 (process_part, main.py:514-572): the recursive MIME ``parts``
-  walk, the ``filename.startswith('CTB')`` predicate, and the
-  first-match-wins-per-message break (main.py:571) become: recursive
-  flatten → explode → filter → row_number()==1.
-- S4 (get_attachment, main.py:200-219): urlsafe-base64 payloads decode
-  JVM-side via translate('-_' → '+/') + unbase64.
+The reference's extract stage lives here once, as two pure functions
+that every mailbox surface calls:
 
-Messages arrive as JSON documents (one per line/file — exactly the
-Gmail API ``format='full'`` shape). The parts tree has unbounded
-depth, which a static Spark schema can't express, so flattening walks
-the tree in an Arrow-batched pandas UDF — the one genuinely
-non-relational step — and everything after it is plain DataFrame ops.
+- ``iter_parts`` (S5, main.py:514-572): the MIME ``parts`` tree,
+  depth-first preorder, leftmost child first — the reference's
+  recursion order.
+- ``first_ctb_attachment`` (S5 match + first-match break at
+  main.py:571, S4 decode at main.py:200-219): the first part whose
+  filename starts with the prefix and that carries an
+  ``attachmentId`` or inline ``data``, as one ``SCHEMA`` row.
+  ``content`` is the urlsafe-base64 decode of ``data`` with the
+  padding restored, NULL when the part has no inline data; a
+  malformed payload raises ``binascii.Error`` and fails the read.
+
+The surfaces over them: ``extract_ctb_attachments`` here (a DataFrame
+of message-JSON strings), ``spark.read.format("mailbox")``
+(``mailbox_datasource.py``, batch and streaming), and
+``gmail_live.land_messages``, which inlines ``data`` into the parts
+this walk visits.
+
+Messages are JSON documents in the Gmail API ``format='full'`` shape.
+S2 (list_messages, main.py:158-177): the server-side query-string
+filter is source-level pushdown — the caller reads only the matching
+message documents; nothing here re-filters them.
 """
 
 from __future__ import annotations
 
+import base64
 import json
 from collections.abc import Iterator
 
 import pandas as pd
-import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
-from pyspark.sql.types import (
-    ArrayType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql import DataFrame
+from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
-PART_SCHEMA = StructType(
+SCHEMA = StructType(
     [
+        StructField("message_id", StringType()),
         StructField("filename", StringType()),
         StructField("mime_type", StringType()),
         StructField("attachment_id", StringType()),
-        StructField("data", StringType()),  # urlsafe-base64 payload
-    ]
-)
-
-MESSAGE_SCHEMA = StructType(
-    [
-        StructField("message_id", StringType()),
-        StructField("parts", ArrayType(PART_SCHEMA)),
+        StructField("content", BinaryType()),
     ]
 )
 
 
-def flatten_message_parts(raw_json: DataFrame, json_col: str = "value") -> DataFrame:
-    """DataFrame of raw message-JSON strings → (message_id, parts array).
+def iter_parts(payload: dict) -> Iterator[dict]:
+    """Every part of a MIME tree, depth-first preorder, leftmost child
+    first."""
+    stack = [payload]
+    while stack:
+        part = stack.pop()
+        yield part
+        stack.extend(reversed(part.get("parts") or []))
 
-    Arrow-batched mapInPandas: the tree walk runs vectorized per batch,
-    scales with executors, and never materializes messages on the
-    driver. The closure is deliberately self-contained (no references
-    to module-level symbols) so cloudpickle ships it by value and the
-    workers never need this package importable.
-    """
 
-    def flatten(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import json as _json
+def first_ctb_attachment(msg: dict, prefix: str = "CTB") -> tuple | None:
+    """The message's first part named ``prefix*`` with an attachmentId
+    or inline data, as one ``SCHEMA`` row; None when there is none."""
+    for part in iter_parts(msg.get("payload") or {}):
+        body = part.get("body") or {}
+        attachment_id, data = body.get("attachmentId"), body.get("data")
+        filename = part.get("filename") or ""
+        if filename.startswith(prefix) and (
+            attachment_id is not None or data is not None
+        ):
+            content = (
+                None
+                if data is None
+                else base64.urlsafe_b64decode(data + "=" * (-len(data) % 4))
+            )
+            return (
+                msg.get("id"),
+                filename,
+                part.get("mimeType") or "",
+                attachment_id,
+                content,
+            )
+    return None
 
-        import pandas as _pd
 
-        def walk(payload: dict) -> list[dict]:
-            # depth-first part traversal (reference main.py:566-571);
-            # reversed → leftmost child explored first, like the recursion
-            found: list[dict] = []
-            stack = [payload]
-            while stack:
-                part = stack.pop()
-                found.append(
-                    {
-                        "filename": part.get("filename") or "",
-                        "mime_type": part.get("mimeType") or "",
-                        "attachment_id": (part.get("body") or {}).get("attachmentId"),
-                        "data": (part.get("body") or {}).get("data"),
-                    }
-                )
-                stack.extend(reversed(part.get("parts") or []))
-            return found
+def extract_ctb_attachments(raw_json: DataFrame, prefix: str = "CTB") -> DataFrame:
+    """DataFrame of message-JSON strings (column ``value``) → one
+    ``SCHEMA`` row per message that has a matching attachment.
 
+    One Arrow-batched mapInPandas: the walk runs per batch on the
+    executors, never materializes messages on the driver, and needs no
+    shuffle, since the first-match rule is per message."""
+
+    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = []
-            for doc in pdf[json_col]:
-                msg = _json.loads(doc)
-                out.append(
-                    {
-                        "message_id": msg.get("id"),
-                        "parts": walk(msg.get("payload") or {}),
-                    }
-                )
-            yield _pd.DataFrame(out, columns=["message_id", "parts"])
+            rows = (
+                first_ctb_attachment(json.loads(doc), prefix) for doc in pdf["value"]
+            )
+            yield pd.DataFrame(
+                [r for r in rows if r is not None], columns=SCHEMA.fieldNames()
+            )
 
-    return raw_json.mapInPandas(flatten, schema=MESSAGE_SCHEMA)
-
-
-def select_ctb_attachments(
-    messages: DataFrame, prefix: str = "CTB"
-) -> DataFrame:
-    """First matching attachment per message (reference main.py:518-523,
-    first-match break at main.py:571).
-
-    explode → filter(startswith) → row_number()==1 per message. The
-    window partitions by message_id — no skew risk (a message has few
-    parts) and the filter prunes before the shuffle.
-    """
-    parts = messages.select(
-        "message_id", F.posexplode_outer("parts").alias("pos", "part")
-    )
-    matches = parts.filter(
-        F.col("part.filename").startswith(prefix)
-        & (
-            F.col("part.attachment_id").isNotNull()
-            | F.col("part.data").isNotNull()
-        )
-    )
-    w = Window.partitionBy("message_id").orderBy("pos")
-    return (
-        matches.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(
-            "message_id",
-            F.col("part.filename").alias("filename"),
-            F.col("part.mime_type").alias("mime_type"),
-            F.col("part.attachment_id").alias("attachment_id"),
-            F.col("part.data").alias("data"),
-        )
-    )
-
-
-def decode_attachment_data(df: DataFrame, data_col: str = "data") -> DataFrame:
-    """urlsafe-base64 → bytes, JVM-side (reference main.py:214:
-    base64.urlsafe_b64decode). translate maps the urlsafe alphabet back
-    to standard before unbase64; padding is restored by rpad."""
-    std = F.translate(F.col(data_col), "-_", "+/")
-    # restore '=' padding to a multiple of 4
-    padded = F.rpad(
-        std, ((F.length(std) + F.lit(3)) / F.lit(4)).cast("int") * 4, "="
-    )
-    return df.withColumn("content", F.unbase64(padded))
+    return raw_json.mapInPandas(extract, schema=SCHEMA)

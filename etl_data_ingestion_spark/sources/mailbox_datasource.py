@@ -6,13 +6,12 @@ a landing directory of message-JSON files (one Gmail-style message per
 file: {id, payload:{..., parts:[...]}}) scanned as a DataFrame of
 decoded CTB attachments.
 
-Connector semantics mirrored from the reference:
-- ``filenamePrefix`` option = the pushed source filter (S2,
-  GMAIL_QUERY's filename predicate, .env:14) — applied inside the
-  reader, rows for other attachments never surface;
-- recursive MIME-tree walk, first matching attachment per message
-  (S5, first-match break at main.py:571);
-- urlsafe-base64 decode to bytes (S4, main.py:214).
+The reader is a thin wrapper over ``mailbox.first_ctb_attachment``,
+the one walk, match rule and decode that ``extract_ctb_attachments``
+also calls, and it declares the same ``mailbox.SCHEMA``. The
+``filenamePrefix`` option is the pushed source filter (S2,
+GMAIL_QUERY's filename predicate, .env:14): rows for other
+attachments never surface.
 
 Scale: ``partitions()`` splits the file listing across
 ``numPartitions`` input splits, so a million landed messages fan out
@@ -37,9 +36,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-SCHEMA = (
-    "message_id string, filename string, mime_type string, content binary"
-)
+from etl_data_ingestion_spark.sources.mailbox import SCHEMA, first_ctb_attachment
 
 
 @dataclass
@@ -47,12 +44,19 @@ class _FileSlice(InputPartition):
     paths: list
 
 
+def _json_files(path: str) -> list[str]:
+    """The landed message files in ``path``, sorted by name."""
+    return sorted(
+        os.path.join(path, f) for f in os.listdir(path) if f.endswith(".json")
+    )
+
+
 class MailboxDataSource(DataSource):
     @classmethod
     def name(cls) -> str:
         return "mailbox"
 
-    def schema(self) -> str:
+    def schema(self):
         return SCHEMA
 
     def reader(self, schema) -> "MailboxReader":
@@ -74,35 +78,16 @@ class MailboxReader(DataSourceReader):
         self.num_partitions = int(options.get("numpartitions", "8"))
 
     def partitions(self):
-        files = sorted(
-            os.path.join(self.path, f)
-            for f in os.listdir(self.path)
-            if f.endswith(".json")
-        )
+        files = _json_files(self.path)
         n = max(1, min(self.num_partitions, len(files) or 1))
         return [_FileSlice(files[i::n]) for i in range(n)]
 
     def read(self, partition):
-        prefix = self.prefix
         for path in partition.paths:
             with open(path, "r", encoding="utf-8") as f:
-                msg = json.load(f)
-            stack = [msg.get("payload") or {}]
-            while stack:
-                part = stack.pop()
-                filename = part.get("filename") or ""
-                body = part.get("body") or {}
-                data = body.get("data")
-                if filename.startswith(prefix) and data is not None:
-                    pad = "=" * (-len(data) % 4)
-                    yield (
-                        msg.get("id"),
-                        filename,
-                        part.get("mimeType") or "",
-                        base64.urlsafe_b64decode(data + pad),
-                    )
-                    break  # first match per message (main.py:571)
-                stack.extend(reversed(part.get("parts") or []))
+                row = first_ctb_attachment(json.load(f), self.prefix)
+            if row is not None:
+                yield row
 
 
 class MailboxStreamReader(SimpleDataSourceStreamReader):
@@ -121,24 +106,17 @@ class MailboxStreamReader(SimpleDataSourceStreamReader):
     def __init__(self, options):
         self._delegate = MailboxReader(options)
 
-    def _files(self):
-        return sorted(
-            os.path.join(self._delegate.path, f)
-            for f in os.listdir(self._delegate.path)
-            if f.endswith(".json")
-        )
-
     def initialOffset(self) -> dict:
         return {"n": 0}
 
     def read(self, start: dict):
-        files = self._files()
+        files = _json_files(self._delegate.path)
         new = files[start["n"] :]
         rows = list(self._delegate.read(_FileSlice(new)))
         return iter(rows), {"n": len(files)}
 
     def readBetweenOffsets(self, start: dict, end: dict):
-        files = self._files()
+        files = _json_files(self._delegate.path)
         return iter(
             list(self._delegate.read(_FileSlice(files[start["n"] : end["n"]])))
         )
@@ -163,8 +141,15 @@ class _StagedFiles(WriterCommitMessage):
 def _encode_message(row) -> str:
     """Inverse of MailboxReader.read: wrap one attachment row back
     into the Gmail-style message JSON (S4's urlsafe base64, S5's
-    parts tree) so written output is readable by the same source."""
-    data = base64.urlsafe_b64encode(bytes(row.content)).decode("ascii")
+    parts tree) so written output is readable by the same source.
+    A row without ``attachment_id`` (a plain 4-column frame) writes
+    none, and a NULL ``content`` writes no ``data``."""
+    fields = row.asDict()
+    body = {}
+    if fields.get("attachment_id") is not None:
+        body["attachmentId"] = fields["attachment_id"]
+    if row.content is not None:
+        body["data"] = base64.urlsafe_b64encode(bytes(row.content)).decode("ascii")
     return json.dumps(
         {
             "id": row.message_id,
@@ -174,7 +159,7 @@ def _encode_message(row) -> str:
                     {
                         "filename": row.filename,
                         "mimeType": row.mime_type,
-                        "body": {"data": data},
+                        "body": body,
                     }
                 ],
             },

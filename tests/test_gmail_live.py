@@ -122,14 +122,8 @@ def test_pagination_fetch_and_commit(store):
 def test_land_messages_inlines_attachments_and_feeds_engine(store, spark, tmp_path):
     """End-to-end bridge: landed JSON (attachment bodies inlined) is
     directly consumable by the engine's distributed extract path
-    (flatten -> first-CTB select -> urlsafe decode)."""
-    import pyspark.sql.functions as F
-
-    from etl_data_ingestion_spark.sources.mailbox import (
-        decode_attachment_data,
-        flatten_message_parts,
-        select_ctb_attachments,
-    )
+    (extract_ctb_attachments: walk, first-CTB match, urlsafe decode)."""
+    from etl_data_ingestion_spark.sources.mailbox import extract_ctb_attachments
 
     src = GmailLiveSource(service=FakeService(store))
     landing = tmp_path / "landed"
@@ -144,9 +138,7 @@ def test_land_messages_inlines_attachments_and_feeds_engine(store, spark, tmp_pa
             assert "attachmentId" not in part["body"] or part["body"].get("data")
 
     raw = spark.read.text(str(landing))
-    flat = flatten_message_parts(raw)
-    picked = select_ctb_attachments(flat)
-    decoded = decode_attachment_data(picked).select("message_id", "content")
+    decoded = extract_ctb_attachments(raw).select("message_id", "content")
     got = {
         r.message_id: bytes(r.content).decode() for r in decoded.collect()
     }
@@ -161,10 +153,10 @@ def test_missing_google_libs_raise_clear_error():
     from etl_data_ingestion_spark.sources import gmail_live
 
     with pytest.raises(ImportError, match="google-api-python-client"):
-        gmail_live.build_gmail_service("credentials.json", "token.json")
+        gmail_live.build_gmail_service_web("credentials.json", "token.json")
 
 
-# ------------------------------------------------- S1b web-app flow
+# ------------------------------------------------- S1 web-app flow
 
 
 class FakeCreds:

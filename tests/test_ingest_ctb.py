@@ -456,3 +456,28 @@ def test_file_deleted_after_listing_fails_alone(spark, tmp_path):
     assert report.total_inserted == 2
     gone = [e.kind for e in notifier.events if e.subject.endswith(" - CTB_gone.tsv")]
     assert gone == ["error"]
+
+
+def test_coercion_oracle_queries_run_the_ingest_coercion(spark, sf_dir, monkeypatch):
+    """The T8-T11 registry queries take their value columns from one
+    ``coerce.coercion_exprs`` call each, so their DuckDB oracles check
+    the ingest coercion itself, not a copy of it."""
+    from etl_data_ingestion_spark.operators import ingest_queries
+    from etl_data_ingestion_spark.plans import registry as reg
+
+    calls = []
+    real = ingest_queries.coercion_exprs
+
+    def counting(types=None):
+        calls.append(list(types.values()))
+        return real(types)
+
+    monkeypatch.setattr(ingest_queries, "coercion_exprs", counting)
+    for query, typ in {
+        "ingest_trim_empty_null": "STRING",
+        "ingest_comma_int_roundtrip": "INTEGER",
+        "ingest_strict_date_parse": "DATE",
+    }.items():
+        calls.clear()
+        reg.QUERIES[query](spark, sf_dir)
+        assert calls == [[typ]], (query, calls)

@@ -1,17 +1,15 @@
-"""Mailbox source: MIME-tree flatten, CTB selection, base64 decode
-(reference S2-S5 semantics)."""
+"""Mailbox extract: one MIME walk, match rule and decode
+(``sources/mailbox.py``) behind the DataFrame surface and the
+``mailbox`` DataSource (reference S2-S5 semantics)."""
 
 from __future__ import annotations
 
 import base64
 import json
 
+import pytest
 
-from etl_data_ingestion_spark.sources import (
-    decode_attachment_data,
-    flatten_message_parts,
-    select_ctb_attachments,
-)
+from etl_data_ingestion_spark.sources import SCHEMA, extract_ctb_attachments
 
 
 def b64url(data: bytes) -> str:
@@ -49,7 +47,7 @@ def test_nested_tree_first_ctb_match_wins(spark):
         ]
     )
     raw = spark.createDataFrame([(message("m1", payload),)], ["value"])
-    out = select_ctb_attachments(flatten_message_parts(raw)).collect()
+    out = extract_ctb_attachments(raw).collect()
     assert len(out) == 1
     assert out[0]["filename"] == "CTB_one.tsv"
     assert out[0]["attachment_id"] == "a1"
@@ -60,7 +58,7 @@ def test_no_match_yields_nothing(spark):
         [(message("m2", part(children=[part(filename="other.csv", attachment_id="x")])),)],
         ["value"],
     )
-    assert select_ctb_attachments(flatten_message_parts(raw)).count() == 0
+    assert extract_ctb_attachments(raw).count() == 0
 
 
 def test_one_match_per_message_across_messages(spark):
@@ -69,7 +67,7 @@ def test_one_match_per_message_across_messages(spark):
         (message("m2", part(children=[part(filename="CTB_b.tsv", attachment_id="b")])),),
     ]
     raw = spark.createDataFrame(rows, ["value"])
-    out = select_ctb_attachments(flatten_message_parts(raw))
+    out = extract_ctb_attachments(raw)
     assert {r["message_id"] for r in out.collect()} == {"m1", "m2"}
 
 
@@ -88,10 +86,114 @@ def test_urlsafe_base64_roundtrip(spark):
         ],
         ["value"],
     )
-    out = decode_attachment_data(
-        select_ctb_attachments(flatten_message_parts(raw))
-    ).collect()
+    out = extract_ctb_attachments(raw).collect()
     assert bytes(out[0]["content"]) == blob
+
+
+# One message set covering every branch of the shared rule: a nested
+# tree with a decoy, two CTB matches, a first match carrying only an
+# attachmentId, payloads whose encoded length is 0, 2 and 3 mod 4 (every
+# valid padding; 1 mod 4 is the malformed case below), non-ASCII
+# bytes, and no match at all.
+AGREE_MESSAGES = [
+    ("m-id-only", part(children=[
+        part(filename="CTB_first.tsv", attachment_id="x1"),
+        part(filename="CTB_second.tsv", data=b64url(b"two")),
+    ])),
+    ("m-nested", part(children=[
+        part(filename="notes.txt", data=b64url(b"decoy")),
+        part(mime="multipart/mixed", children=[
+            part(filename="CTB_n1.tsv", attachment_id="n1",
+                 data=b64url(bytes(range(240, 256)))),
+            part(filename="CTB_n2.tsv", data=b64url(b"later")),
+        ]),
+    ])),
+    *[
+        (f"m-pad{n}", part(children=[
+            part(filename=f"CTB_pad{n}.tsv", data=b64url(bytes(range(200, 200 + n)))),
+        ]))
+        for n in (3, 4, 5, 6)  # encoded lengths 4, 6, 7, 8
+    ],
+    ("m-none", part(children=[part(filename="other.csv", data=b64url(b"x"))])),
+]
+
+
+def _as_rows(df):
+    return sorted(
+        tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v for v in r)
+        for r in df.collect()
+    )
+
+
+def _land(tmp_path, messages):
+    inbox = tmp_path / "inbox"
+    inbox.mkdir()
+    for i, (msg_id, payload) in enumerate(messages):
+        (inbox / f"msg_{i:04d}.json").write_text(message(msg_id, payload))
+    return str(inbox)
+
+
+def test_surfaces_agree_on_one_message_set(spark, tmp_path):
+    """The DataFrame surface and spark.read.format("mailbox") return
+    the same rows under the same schema for the same messages."""
+    from etl_data_ingestion_spark.sources.mailbox_datasource import (
+        MailboxDataSource,
+    )
+
+    raw = spark.createDataFrame(
+        [(message(m, p),) for m, p in AGREE_MESSAGES], ["value"]
+    )
+    frame = extract_ctb_attachments(raw)
+    spark.dataSource.register(MailboxDataSource)
+    source = (
+        spark.read.format("mailbox")
+        .option("numPartitions", 2)
+        .load(_land(tmp_path, AGREE_MESSAGES))
+    )
+    assert frame.schema == source.schema == SCHEMA
+    rows = _as_rows(frame)
+    assert rows == _as_rows(source)
+    by_id = {r[0]: r for r in rows}
+    assert set(by_id) == {"m-id-only", "m-nested", "m-pad3", "m-pad4", "m-pad5", "m-pad6"}
+    assert by_id["m-id-only"][1:] == ("CTB_first.tsv", "text/plain", "x1", None)
+    assert by_id["m-nested"][1:] == (
+        "CTB_n1.tsv", "text/plain", "n1", bytes(range(240, 256))
+    )
+    for n in (3, 4, 5, 6):
+        assert by_id[f"m-pad{n}"][4] == bytes(range(200, 200 + n))
+
+
+def test_extract_plan_has_no_exchange_or_window(spark):
+    """The first-match rule is per message, so the extract is one
+    mapInPandas with no shuffle and no window."""
+    raw = spark.createDataFrame(
+        [(message(m, p),) for m, p in AGREE_MESSAGES], ["value"]
+    )
+    df = extract_ctb_attachments(raw)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan
+    assert "Exchange" not in plan
+    assert "Window" not in plan
+
+
+@pytest.mark.parametrize("bad", ["abcde", "ab$d"])
+def test_malformed_payload_fails_both_surfaces(spark, tmp_path, bad):
+    """A payload that is not urlsafe base64 fails the read on both
+    surfaces; it never becomes NULL or truncated content."""
+    from pyspark.errors import PySparkException
+
+    from etl_data_ingestion_spark.sources.mailbox_datasource import (
+        MailboxDataSource,
+    )
+
+    messages = [("m-bad", part(children=[part(filename="CTB_bad.tsv", data=bad)]))]
+    raw = spark.createDataFrame([(message(m, p),) for m, p in messages], ["value"])
+    with pytest.raises(PySparkException, match="binascii.Error"):
+        extract_ctb_attachments(raw).collect()
+    spark.dataSource.register(MailboxDataSource)
+    with pytest.raises(PySparkException, match="binascii.Error"):
+        spark.read.format("mailbox").load(_land(tmp_path, messages)).collect()
 
 
 def test_mailbox_datasource_format(spark, tmp_path):
@@ -306,3 +408,18 @@ def test_mailbox_stream_writer_epochs(spark, tmp_path):
         spark.read.format("mailbox").option("path", dest).load().collect()
     )
     assert sorted(r.message_id for r in back) == sorted(m for m, *_ in rows)
+
+
+def test_writer_roundtrips_what_the_reader_returns(spark, tmp_path):
+    """Every row the reader returns, the attachmentId-only match with
+    NULL content included, writes back and reads back unchanged."""
+    from etl_data_ingestion_spark.sources.mailbox_datasource import (
+        MailboxDataSource,
+    )
+
+    spark.dataSource.register(MailboxDataSource)
+    first = spark.read.format("mailbox").load(_land(tmp_path, AGREE_MESSAGES))
+    dest = str(tmp_path / "outbox")
+    first.write.format("mailbox").option("path", dest).mode("append").save()
+    back = spark.read.format("mailbox").load(dest)
+    assert _as_rows(back) == _as_rows(first)

@@ -198,3 +198,42 @@ def test_wedge_queries_use_the_shared_edge_build(spark, sf_dir, monkeypatch):
             else ["posting_lists"]
         )
         assert calls == expected, (query, calls)
+
+
+KMEANS_QUERIES = {
+    "similarity_ivf_topk": "float32",
+    "similarity_index_persist_reuse": "float32",
+    "dedup_semantic_clusters": "float64",
+}
+
+
+def test_kmeans_queries_use_the_shared_lloyd_and_assignment_udf(
+    spark, sf_dir, monkeypatch
+):
+    """Every driver-side k-means query trains through exactly one call
+    of similarity.lloyd and assigns through exactly one
+    similarity.nearest_centroid_udf, with centroids in the dtype its
+    corpus is assigned in — a private copy in any caller fails here."""
+    import numpy as np
+
+    from etl_data_ingestion_spark.operators import similarity
+
+    calls = []
+    real_lloyd = similarity.lloyd
+    real_udf = similarity.nearest_centroid_udf
+
+    def lloyd(*args, **kwargs):
+        calls.append("lloyd")
+        return real_lloyd(*args, **kwargs)
+
+    def nearest_centroid_udf(cents):
+        calls.append(("nearest_centroid_udf", cents.dtype))
+        return real_udf(cents)
+
+    monkeypatch.setattr(similarity, "lloyd", lloyd)
+    monkeypatch.setattr(similarity, "nearest_centroid_udf", nearest_centroid_udf)
+    for query, dtype in KMEANS_QUERIES.items():
+        calls.clear()
+        reg.QUERIES[query](spark, sf_dir)
+        expected = ["lloyd", ("nearest_centroid_udf", np.dtype(dtype))]
+        assert calls == expected, (query, calls)
