@@ -8,12 +8,13 @@ DuckDB oracle SQL string. See the registry module for parity rules.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from etl_data_ingestion_spark.plans import registry
 from etl_data_ingestion_spark.session import tune_session

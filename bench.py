@@ -26,7 +26,7 @@ from typing import Callable
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from etl_data_ingestion_spark.plans import registry
-from etl_data_ingestion_spark.session import get_spark
+from etl_data_ingestion_spark.session import DEFAULT_CPUS, get_spark
 
 # Representative spread: scan-agg, selective join+topk, multi-join,
 # scan-filter-agg, plus extension operators as they land.
@@ -420,9 +420,9 @@ def run_query(
         # OS page cache) — re-materialize them OUTSIDE the timed
         # window so the timing covers query compute over resident
         # data, while per-query intermediates stay cold per sample
-        from etl_data_ingestion_spark.catalog import rematerialize_resident
+        from etl_data_ingestion_spark.catalog import persist_scans
 
-        rematerialize_resident(spark)
+        persist_scans(spark)
     t0 = time.perf_counter()
     fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
     return time.perf_counter() - t0
@@ -546,17 +546,17 @@ def resident_tier(spark, names: list[str], sf_dir: str) -> dict[str, float]:
     the symmetric counterpart of DuckDB's best-of-N reading warm OS
     page cache. Reported separately (value_resident /
     ratio_total_comparable_resident); the cold-scan "value" remains
-    the comparable. The warm pass builds and materializes the cache."""
-    from etl_data_ingestion_spark.catalog import drop_resident
+    the comparable. The headline tier has registered exactly the scans
+    these queries read, and run_query persists them before each
+    sample."""
+    from etl_data_ingestion_spark.catalog import drop_plan_cache
 
-    spark.conf.set("spark.etl.scan.resident", "true")
     try:
         return time_spark(
             spark, names, sf_dir, passes=2, retries=2, resident=True
         )[0]
     finally:
-        spark.conf.set("spark.etl.scan.resident", "false")
-        drop_resident(spark)
+        drop_plan_cache(spark)
 
 
 def drift_baseline(
@@ -701,7 +701,7 @@ def main() -> None:
     registry.load_all()
     spark = get_spark(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = DEFAULT_CPUS
     cpus_effective = spark.sparkContext.defaultParallelism
 
     names = [n for n in HEADLINE if n in registry.QUERIES]

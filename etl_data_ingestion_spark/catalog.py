@@ -6,7 +6,10 @@ partitioned parquet/iceberg dataset; nothing here assumes single-file
 inputs — ``spark.read.parquet`` takes directories just as happily.
 
 Every registry query reads its tables through ``load_table``, which
-keeps one per-session scan registry and writes no session conf.
+keeps one per-session scan registry and writes no session conf. No
+private conf key steers it: an opted-in fact scan fans out to the
+session's default parallelism, so a driver's vanilla session and a
+``session.get_spark`` one with as many cores build the same plans.
 """
 
 from __future__ import annotations
@@ -18,6 +21,8 @@ import weakref
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+
+from etl_data_ingestion_spark.config import SCRATCH
 
 TABLES = (
     "region",
@@ -38,54 +43,39 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # deliberately EXCLUDED so they stay one-partition broadcast builds.
 FACT_TABLES = {"lineitem", "orders", "events", "documents", "embeddings"}
 
-# The scan registry: (abs sf_dir, table, parallel) -> the analyzed scan
-# DataFrame, per live session. Building a scan costs a footer read and
-# a file listing (~100 ms a table through py4j and Hadoop), so a
+# The scan registry: (abs sf_dir, table, fanned out) -> the analyzed
+# scan DataFrame, per live session. Building a scan costs a footer read
+# and a file listing (~100 ms a table through py4j and Hadoop), so a
 # session registers each table once, as a metastore would, and every
-# later query reuses the plan. Re-executing it still reads parquet:
-# only while spark.etl.scan.resident=true is an entry persisted, which
-# keeps base tables in executor memory (the warehouse serving posture;
-# the cache holds full width, InMemoryTableScan still prunes columns
-# at read). The fixture dirs are immutable for a session's lifetime; a
-# caller that rewrites a table path must call drop_plan_cache(spark).
-# Keyed by the session object through a weak reference, so a stopped
-# session's entries go with it and a new session can never inherit
-# them through a reused id().
+# later query reuses the plan. Re-executing it still reads parquet
+# unless persist_scans has pinned the session's scans in executor
+# memory (bench's resident tier; the cache holds full width,
+# InMemoryTableScan still prunes columns at read). The fixture dirs are
+# immutable for a session's lifetime; a caller that rewrites a table
+# path must call drop_plan_cache(spark). Keyed by the session object
+# through a weak reference, so a stopped session's entries go with it
+# and a new session can never inherit them through a reused id().
 _SCANS: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str, bool], DataFrame]]" = (
     weakref.WeakKeyDictionary()
 )
 
 
-def drop_resident(spark: SparkSession) -> None:
-    """Forget this session's registered scans, unpersisting the
-    resident ones. Call after rewriting a table path in place."""
+def drop_plan_cache(spark: SparkSession) -> None:
+    """Forget this session's registered scans, unpersisting any that
+    persist_scans pinned. Call after rewriting a table path in place."""
     for df in _SCANS.pop(spark, {}).values():
         if df.is_cached:
             df.unpersist()
 
 
-drop_plan_cache = drop_resident
-
-
-def rematerialize_resident(spark: SparkSession) -> int:
-    """Re-persist and re-materialize this session's resident scans
-    (after a catalog.clearCache()); returns how many were warmed."""
-    n = 0
-    for df in _SCANS.get(spark, {}).values():
-        if df.is_cached:
-            df.persist()
-            df.count()
-            n += 1
-    return n
-
-
-def _resident_enabled(spark: SparkSession) -> bool:
-    try:
-        return (
-            spark.conf.get("spark.etl.scan.resident", "false") or "false"
-        ).lower() == "true"
-    except Exception:
-        return False
+def persist_scans(spark: SparkSession) -> int:
+    """Persist and materialize every scan this session has registered
+    (again after a catalog.clearCache()); returns how many."""
+    scans = _SCANS.get(spark, {}).values()
+    for df in scans:
+        df.persist()
+        df.count()
+    return len(scans)
 
 
 # Bucketed storage: with lineitem and orders stored bucketed and sorted
@@ -104,10 +94,15 @@ _BUCKETED: "weakref.WeakKeyDictionary[SparkSession, dict[str, tuple[int, bool]]]
 )
 
 
+def dir_key(sf_dir: str) -> str:
+    """A name part for files derived from ``sf_dir``: a hash of the
+    absolute dir, so two sf dirs that share a basename never share a
+    table or its files."""
+    return hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
+
+
 def _bucketed_table(key_dir: str, name: str) -> str:
-    # named after the absolute dir: two sf dirs that share a basename
-    # must not share a table or its files
-    return f"{name}_bucketed_{hashlib.sha1(key_dir.encode()).hexdigest()[:12]}"
+    return f"{name}_bucketed_{dir_key(key_dir)}"
 
 
 def enable_bucketed_facts(
@@ -130,11 +125,7 @@ def enable_bucketed_facts(
     out = {name: _bucketed_table(key_dir, name) for name in BUCKETED_FACTS}
     if reg.get(key_dir, (0, False))[0] != n_buckets:
         for name, bucket_key in BUCKETED_FACTS.items():
-            path = os.path.join(
-                os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                ".scratch",
-                out[name],
-            )
+            path = os.path.join(SCRATCH, out[name])
             # one file per bucket: exactly n_buckets tasks, each owning
             # one bucket, so the scan reports sorted output and the
             # join skips the re-Sort
@@ -246,10 +237,10 @@ def _with_scan_parallelism(spark: SparkSession, df: DataFrame) -> DataFrame:
     tasks; 32-way it's ~15s). A production dataset has thousands of
     row groups and never hits this; a single-file fixture always does.
 
-    OPT-IN per call site (load_table(..., parallel=True)) AND gated
-    on spark.etl.scan.minPartitions (set by session.get_spark, ABSENT
-    in a vanilla driver session, so driver-contract correctness runs
-    see stock plans). A blanket floor was A/B'd and REJECTED: for
+    OPT-IN per call site (load_table(..., parallel=True)): the scan
+    fans out to the session's default parallelism, so a vanilla driver
+    session builds the same plan as a get_spark one with as many
+    cores. A blanket fan-out was A/B'd and REJECTED: for
     scan→partial-agg queries the extra Exchange moves raw rows and
     defeats map-side combine (net loss at sf0.1); only operators
     whose per-row CPU dwarfs a row's shuffle cost (interpreted-HOF
@@ -265,12 +256,9 @@ def _with_scan_parallelism(spark: SparkSession, df: DataFrame) -> DataFrame:
     narrow pre-exchange stage — structure such operators so the
     expensive expression only occurs after the exchange (see
     dedup_duplicated_spans for the shape)."""
-    try:
-        min_p = int(spark.conf.get("spark.etl.scan.minPartitions", "0") or 0)
-    except Exception:
-        min_p = 0
-    if min_p > 1 and df.rdd.getNumPartitions() < min_p:
-        return df.repartition(min_p)
+    n = spark.sparkContext.defaultParallelism
+    if n > 1 and df.rdd.getNumPartitions() < n:
+        return df.repartition(n)
     return df
 
 
@@ -309,8 +297,9 @@ def load_table(
         # included); the bucket count fixes the scan tasks, so the
         # parallel floor does not apply
         return spark.table(_bucketed_table(key_dir, name))
+    fan_out = bool(parallel) and name in FACT_TABLES
     scans = _SCANS.setdefault(spark, {})
-    key = (key_dir, name, bool(parallel))
+    key = (key_dir, name, fan_out)
     df = scans.get(key)
     if df is None:
         df = spark.read.parquet(table_path(sf_dir, name))
@@ -327,9 +316,7 @@ def load_table(
                 df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
             elif ts_type == "timestamp_ntz":
                 df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        if parallel and name in FACT_TABLES:
+        if fan_out:
             df = _with_scan_parallelism(spark, df)
         scans[key] = df
-    if _resident_enabled(spark) and not df.is_cached:
-        df.persist()
     return df

@@ -27,6 +27,13 @@ import os
 from dataclasses import dataclass, field
 
 
+# Scratch root of this checkout (gitignored): the default landing zone
+# and sinks, registry scratch tables and the bucketed fact copies.
+SCRATCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+)
+
+
 def _env(name: str, default: str) -> str:
     return os.environ.get(f"SPARKETL_{name}", default)
 
@@ -37,14 +44,14 @@ class EngineConfig:
         default_factory=lambda: _env("SOURCE_QUERY", "filename:CTB")
     )
     landing_root: str = field(
-        default_factory=lambda: _env("LANDING_ROOT", "/root/repo/.scratch/landing")
+        default_factory=lambda: _env("LANDING_ROOT", os.path.join(SCRATCH, "landing"))
     )
     warehouse_path: str = field(
-        default_factory=lambda: _env("WAREHOUSE_PATH", "/root/repo/.scratch/warehouse")
+        default_factory=lambda: _env("WAREHOUSE_PATH", os.path.join(SCRATCH, "warehouse"))
     )
     quarantine_path: str = field(
         default_factory=lambda: _env(
-            "QUARANTINE_PATH", "/root/repo/.scratch/quarantine"
+            "QUARANTINE_PATH", os.path.join(SCRATCH, "quarantine")
         )
     )
     batch_size: int = field(

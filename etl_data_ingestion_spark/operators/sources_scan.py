@@ -19,14 +19,13 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from etl_data_ingestion_spark.catalog import load_table, table_path
+from etl_data_ingestion_spark.catalog import dir_key, load_table, table_path
+from etl_data_ingestion_spark.config import SCRATCH
 from etl_data_ingestion_spark.plans.registry import register
-
-SCRATCH = "/root/repo/.scratch"  # repo-local, gitignored
 
 
 def _scratch(sf_dir: str, name: str) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir))
+    tag = f"{os.path.basename(os.path.normpath(sf_dir))}_{dir_key(sf_dir)}"
     return os.path.join(SCRATCH, tag, name)
 
 

@@ -279,7 +279,7 @@ def agg_benjamini_hochberg_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     literals in both engines (exp() is the one sub-ulp risk, same
     class as the periodogram's trig — the multi-scale sweep is the
     guard)."""
-    c = load_table(spark, sf_dir, "customer", parallel=True).select(
+    c = load_table(spark, sf_dir, "customer").select(
         F.col("c_nationkey").alias("nk"),
         F.floor(F.col("c_acctbal") * 100 + F.lit(0.5))
         .cast("long")
@@ -778,7 +778,7 @@ def agg_levene_variance_homogeneity(
     shuffles but the 5-row reductions. Cross-group sums run on
     snapped integer grids (1e-6 for mean |z|, 1e-2 for the SS
     terms) so no float summation depends on group order."""
-    c = load_table(spark, sf_dir, "customer", parallel=True).select(
+    c = load_table(spark, sf_dir, "customer").select(
         F.col("c_mktsegment").alias("g"),
         F.floor(F.col("c_acctbal") * 100 + F.lit(0.5))
         .cast("long")
@@ -919,7 +919,7 @@ def agg_jarque_bera_normality(spark: SparkSession, sf_dir: str) -> DataFrame:
     far from this column's regime (sd ~ mean); cross-engine parity
     is unconditional either way since both engines run the identical
     expansion."""
-    c = load_table(spark, sf_dir, "customer", parallel=True).select(
+    c = load_table(spark, sf_dir, "customer").select(
         F.floor(F.col("c_acctbal") * 100 + F.lit(0.5))
         .cast("long")
         .alias("x")
@@ -1308,7 +1308,7 @@ def agg_robust_moments_octiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     seven cut points in a single aggregate); at 100 TB exact order
     statistics go through the two-pass partition-offset device of
     agg_exact_percentiles — drop-in, documented there."""
-    c = load_table(spark, sf_dir, "customer", parallel=True).select(
+    c = load_table(spark, sf_dir, "customer").select(
         F.floor(F.col("c_acctbal") * 100 + F.lit(0.5))
         .cast("long")
         .alias("x")

@@ -22,6 +22,12 @@ for scale-readiness:
   long instead of failing the vectorized reader; `catalog.load_table`
   truncates it to microseconds, as DuckDB does. Set here, once per
   session, because a table read must not write session conf.
+
+``SESSION_CONFS`` is the whole contract; ``tune_session`` applies it to
+a driver's own session. No engine-private conf exists: the catalog's
+scan fan-out follows the session's default parallelism, so a tuned
+vanilla ``local[N]`` session builds the same scans as ``get_spark(cpus=N)``
+and only its shuffle partition count differs.
 """
 
 from __future__ import annotations
@@ -32,22 +38,36 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# The session contract: the confs correctness depends on, all settable
+# at runtime. get_spark's builder applies them (so child sessions
+# inherit them through SparkConf) and tune_session sets them on a
+# session somebody else built.
+SESSION_CONFS = (
+    ("spark.sql.session.timeZone", "UTC"),
+    ("spark.sql.ansi.enabled", "false"),
+    ("spark.sql.legacy.timeParserPolicy", "CORRECTED"),
+    ("spark.sql.parser.escapedStringLiterals", "false"),
+    ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+    ("spark.sql.adaptive.enabled", "true"),
+    # Arrow transfer in fewer, larger batches: pandas-UDF stages
+    # (minhash signatures, IVF assignment) pay per-batch Python
+    # dispatch; 64k rows/batch measured marginally faster than the
+    # 10k default at bounded memory (widest UDF row: 32-int sig).
+    ("spark.sql.execution.arrow.maxRecordsPerBatch", "65536"),
+)
+
 
 def get_spark(
     app_name: str = "etl_data_ingestion_spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
+    cpus: int = DEFAULT_CPUS,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession with engine defaults applied."""
-    master = master or f"local[{DEFAULT_CPUS}]"
-    shuffle_partitions = shuffle_partitions or DEFAULT_CPUS
+    """Build (or fetch) a ``local[cpus]`` SparkSession with the session
+    contract and ``cpus`` shuffle partitions."""
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
+        .master(f"local[{cpus}]")
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # parallelismFirst / advisoryPartitionSizeInBytes stay at
         # defaults: a round-3 interleaved A/B (8 queries x 4 rounds at
@@ -56,31 +76,12 @@ def get_spark(
         # fewer bigger ones; at cluster scale AQE's data-sized
         # coalescing matters and the defaults already provide it.
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Arrow transfer in fewer, larger batches: pandas-UDF stages
-        # (minhash signatures, IVF assignment) pay per-batch Python
-        # dispatch; 64k rows/batch measured marginally faster than the
-        # 10k default at bounded memory (widest UDF row: 32-int sig).
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.sql.legacy.timeParserPolicy", "CORRECTED")
-        .config("spark.sql.parser.escapedStringLiterals", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # Scan-parallelism floor for opt-in CPU-heavy operators
-        # (catalog.py::_with_scan_parallelism, load_table(...,
-        # parallel=True)): the fixture parquet is small enough that
-        # Spark plans 1-2 scan tasks, serializing interpreted-HOF
-        # work (measured: 8-gram build at sf1 146s on 1 task vs 12s
-        # on 32). A BLANKET floor was A/B'd and rejected (the extra
-        # Exchange defeats map-side combine: q1 0.49→0.93s at
-        # sf0.1); only flagged call sites repartition. Vanilla
-        # driver sessions lack this conf entirely → stock plans.
-        .config("spark.etl.scan.minPartitions", str(shuffle_partitions))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in SESSION_CONFS + tuple((extra_conf or {}).items()):
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     ship_package(spark)
@@ -113,26 +114,15 @@ def ship_package(spark: SparkSession) -> None:
 
 
 def tune_session(spark: SparkSession) -> SparkSession:
-    """Apply engine-required runtime confs to an externally-created session.
+    """Apply the session contract to an externally-created session.
 
-    The driver hands us its own SparkSession; these confs are the
-    runtime-settable subset of ``get_spark``'s defaults that correctness
-    depends on (timezone for oracle parity, non-ANSI casts for the
-    coercion path, strict date parsing and SQL literal escapes,
-    nanosecond parquet timestamps readable as long).
+    The driver hands us its own SparkSession; ``SESSION_CONFS`` are
+    the confs correctness depends on (timezone for oracle parity,
+    non-ANSI casts for the coercion path, strict date parsing and SQL
+    literal escapes, nanosecond parquet timestamps readable as long,
+    AQE, the Arrow batch size), all settable at runtime.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    spark.conf.set("spark.sql.legacy.timeParserPolicy", "CORRECTED")
-    spark.conf.set("spark.sql.parser.escapedStringLiterals", "false")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    for k, v in (
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.execution.arrow.maxRecordsPerBatch", "65536"),
-    ):
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass  # static conf on some builds; defaults still correct
+    for k, v in SESSION_CONFS:
+        spark.conf.set(k, v)
     ship_package(spark)
     return spark

@@ -13,7 +13,7 @@ from etl_data_ingestion_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark(app_name="tests", master="local[4]", shuffle_partitions=4)
+    spark = get_spark(app_name="tests", cpus=4)
     yield spark
 
 

@@ -48,19 +48,53 @@ def _drop_tables(spark, tables):
 
 
 def test_resident_cache_weakref_keyed(spark, sf_dir):
-    spark.conf.set("spark.etl.scan.resident", "true")
+    """persist_scans pins every scan the session registered;
+    drop_plan_cache forgets and unpersists them."""
+    catalog.drop_plan_cache(spark)
     try:
         a = catalog.load_table(spark, sf_dir, "nation")
         b = catalog.load_table(spark, sf_dir, "nation")
         assert a is b  # cached per live session object
         assert spark in catalog._SCANS
-        catalog.drop_resident(spark)
+        assert catalog.persist_scans(spark) == 1
+        assert a.is_cached
+        catalog.drop_plan_cache(spark)
         assert spark not in catalog._SCANS
+        assert not a.is_cached
         c = catalog.load_table(spark, sf_dir, "nation")
         assert c is not a
+        assert not c.is_cached
     finally:
-        spark.conf.set("spark.etl.scan.resident", "false")
-        catalog.drop_resident(spark)
+        catalog.drop_plan_cache(spark)
+
+
+def test_registry_keys_on_effective_fan_out(spark, sf_dir):
+    """parallel=True on a table the catalog never fans out returns the
+    one registered scan instead of building a second, identical one."""
+    s = tune_session(spark.newSession())
+    assert catalog.load_table(s, sf_dir, "customer", True) is catalog.load_table(
+        s, sf_dir, "customer"
+    )
+    assert len(catalog._SCANS[s]) == 1
+
+
+def test_no_private_conf_key_steers_the_engine():
+    """The engine reads and writes no conf of its own namespace: the
+    session contract is session.SESSION_CONFS, nothing else."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [os.path.join(repo, "bench.py"), os.path.join(repo, "__spark_entry__.py")]
+    for top in ("etl_data_ingestion_spark", "tools"):
+        for root, _, files in os.walk(os.path.join(repo, top)):
+            paths += [os.path.join(root, f) for f in files if not f.endswith(".pyc")]
+    hits = []
+    for path in paths:
+        with open(path, encoding="utf-8", errors="replace") as fh:
+            hits += [
+                f"{os.path.relpath(path, repo)}:{i}"
+                for i, line in enumerate(fh, 1)
+                if "spark.etl." in line
+            ]
+    assert hits == []
 
 
 def test_plan_cache_semantics(spark, sf_dir):

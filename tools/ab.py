@@ -40,7 +40,7 @@ sys.path[:0] = [REPO, os.path.join(REPO, "tools")]
 import bench  # noqa: E402
 from check_parity import canon_frame  # noqa: E402
 from etl_data_ingestion_spark.plans import registry  # noqa: E402
-from etl_data_ingestion_spark.session import get_spark  # noqa: E402
+from etl_data_ingestion_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
 
 
 def load_builder(spec: str):
@@ -90,7 +90,7 @@ def main(argv: list[str]) -> int:
     registry.load_all()
     if query not in registry.QUERIES:
         raise SystemExit(f"unknown query {query!r}")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = DEFAULT_CPUS
     spark = get_spark(app_name="ab")
     spark.sparkContext.setLogLevel("ERROR")
     cons = {d: bench.duckdb_views(d, cpus) for d in sf_dirs}

@@ -9,9 +9,10 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 KEYS = (
     "Scan parquet",

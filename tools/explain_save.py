@@ -9,7 +9,8 @@ Usage: python tools/explain_save.py <suffix> <query> [query ...]
        (suffix is 'before' or 'after'; sf dir from $SPARK_GRAFT_SF_DIR,
         default /root/testdata/sf0.1; plans subdir from $PLANS_ROUND,
         default r15)
-Writes /root/repo/plans/<round>/<query>_<suffix>.txt
+Writes plans/<round>/<query>_<suffix>.txt under the checkout this tool
+lives in
 """
 
 from __future__ import annotations
@@ -17,7 +18,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> int:
@@ -39,7 +41,7 @@ def main() -> int:
     registry.load_all()
     spark = get_spark(app_name="explain_save")
     spark.sparkContext.setLogLevel("ERROR")
-    out_dir = f"/root/repo/plans/{rnd}"
+    out_dir = os.path.join(REPO, "plans", rnd)
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         df = registry.QUERIES[name](spark, sf_dir)

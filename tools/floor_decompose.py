@@ -33,7 +33,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from etl_data_ingestion_spark.plans import registry
-from etl_data_ingestion_spark.session import get_spark
+from etl_data_ingestion_spark.session import DEFAULT_CPUS, get_spark
 
 DEFAULT_QUERIES = [
     "graph_kcore_peel",
@@ -56,7 +56,7 @@ def main() -> None:
     spark = get_spark(app_name="floor_decompose")
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = DEFAULT_CPUS
 
     bench.warm_up(spark, sf_dir, cpus)
 

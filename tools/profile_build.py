@@ -35,7 +35,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from etl_data_ingestion_spark.plans import registry
 from etl_data_ingestion_spark.session import get_spark
