@@ -17,6 +17,15 @@ def _c(col: str | Column) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
+def _starts(length: Column, n: int) -> Column:
+    """1-based start positions of every length-n window: [1 ..
+    length-n+1], empty when length < n. sequence(1, 0) DESCENDS in
+    Spark, so a short input needs the guard, not a clamp to zero."""
+    return F.when(length >= n, F.sequence(F.lit(1), length - (n - 1))).otherwise(
+        F.array().cast("array<int>")
+    )
+
+
 def tokens(col: str | Column) -> Column:
     """Whitespace tokens of trimmed text ('' → empty array)."""
     t = F.trim(_c(col))
@@ -39,23 +48,34 @@ def word_ngrams_from(tok_col: str | Column, n: int = 3) -> Column:
     common-subexpression elimination), so an inline expression would be
     re-evaluated by the ``element_at`` inside the lambda for EVERY gram
     of every document — O(tokens²) regex splits per row. Measured at
-    sf0.1 (round-9 A/B, bench protocol): trigram explosion 8.1s → 0.6s,
+    sf0.1 (interleaved A/B): trigram explosion 8.1s → 0.6s,
     contamination curve 16.5s → 1.3s just from materializing first.
     Because the token column is referenced ≥3 times here (two size()
     calls plus the lambda), Catalyst's CollapseProject keeps the
     producing projection separate — the split runs exactly once per row.
 
-    Guarded: sequence(1, 0) in Spark is a DESCENDING sequence, so the
-    index list must be empty-when-short, not clamped-to-zero.
+    Empty when the row has fewer than n tokens (see _starts).
     """
     toks = _c(tok_col)
-    idx = F.when(
-        F.size(toks) >= n, F.sequence(F.lit(1), F.size(toks) - (n - 1))
-    ).otherwise(F.array().cast("array<int>"))
     grams = F.transform(
-        idx, lambda i: F.concat_ws(" ", *[F.element_at(toks, i + k) for k in range(n)])
+        _starts(F.size(toks), n),
+        lambda i: F.concat_ws(" ", *[F.element_at(toks, i + k) for k in range(n)]),
     )
     return F.array_distinct(grams)
+
+
+def adjacent_bigrams(tok_col: str | Column) -> Column:
+    """struct(w1, w2) per adjacent token pair, in token order with
+    repeats kept, from an ALREADY-MATERIALIZED token-array column (the
+    word_ngrams_from hot-path contract); empty below two tokens."""
+    toks = _c(tok_col)
+    return F.transform(
+        _starts(F.size(toks), 2),
+        lambda i: F.struct(
+            F.element_at(toks, i).alias("w1"),
+            F.element_at(toks, i + 1).alias("w2"),
+        ),
+    )
 
 
 def word_ngrams(col: str | Column, n: int = 3) -> Column:
@@ -76,10 +96,9 @@ def char_shingles_from(trimmed_col: str | Column, k: int = 5) -> Column:
     inline trim(text) expression, or the substring in the lambda
     re-evaluates it per shingle."""
     t = _c(trimmed_col)
-    idx = F.when(
-        F.length(t) >= k, F.sequence(F.lit(1), F.length(t) - (k - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    return F.array_distinct(F.transform(idx, lambda i: F.substring(t, i, k)))
+    return F.array_distinct(
+        F.transform(_starts(F.length(t), k), lambda i: F.substring(t, i, k))
+    )
 
 
 def char_shingles(col: str | Column, k: int = 5) -> Column:

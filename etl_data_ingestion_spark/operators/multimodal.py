@@ -2,23 +2,29 @@
 audio / video payloads as opaque BinaryType columns with typed
 metadata, decoded/transformed through Arrow-batched pandas stages.
 
-Decode tiers: WAV audio (stdlib `wave`), grayscale filter-0 PNG,
-general PNG (all five scanline filters, grayscale + RGB —
-multimodal_image_decode_real), and animated GIF with real LZW
-(operators/video.py::multimodal_video_frames_real) are REAL decodes
-with pixel/sample-exact oracles. The featurize stage is REAL too
-(multimodal_patch_embed_real: decode -> NN-resize -> L2-normalized
-patch-mean embedding, the standard model-free baseline); no fake
-path remains in the multimodal family. A LEARNED vision encoder
-swaps into the same mapInPandas inner function without touching the
-dataflow — binary column handling, metadata schema, batch shapes,
-and per-partition behavior are all exercised by the real math.
+Each format has one codec here: `png_encode` / `png_decode` (8-bit
+gray or RGB, all five scanline filters) and `wav_encode` /
+`wav_decode` (mono 16-bit PCM via stdlib `wave`); animated GIF with
+real LZW lives in operators/video.py. The decoders are strict: a
+damaged stream or a layout they do not support raises ValueError.
+Every decode is real, with a pixel- or sample-exact oracle, and so is
+the featurize stage (multimodal_patch_embed_real: decode -> NN-resize
+-> L2-normalized patch-mean embedding, the standard model-free
+baseline). A LEARNED vision encoder swaps into the same mapInPandas
+inner function without touching the dataflow. The fixture carries no
+media, so `payload_stage` synthesizes each payload from its doc_id;
+at 100 TB a binary column read from storage replaces that stage.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import io
+import struct
+import wave
+import zlib
+from collections.abc import Callable, Iterable, Iterator, Sequence
 
+import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -151,77 +157,144 @@ def _png_filter_line(line: bytes, prior: bytes, ftype: int, bpp: int) -> bytes:
     return bytes(enc)
 
 
+PNG_SIGNATURE = b"\x89PNG\r\n\x1a\n"
+
+
+def png_encode(
+    width: int,
+    height: int,
+    channels: int,
+    rows: Iterable[bytes],
+    filters: Sequence[int] | None = None,
+) -> bytes:
+    """8-bit gray (1 channel) or RGB (3 channels) PNG from `height` raw
+    scanlines: row y is written with filter type ``filters[y]`` (0 for
+    every row when None), all rows in one IDAT chunk, no interlace."""
+    filtered = bytearray()
+    prior = bytes(width * channels)
+    for y, line in enumerate(rows):
+        ftype = filters[y] if filters else 0
+        filtered.append(ftype)
+        filtered += _png_filter_line(line, prior, ftype, channels) if ftype else line
+        prior = line
+    ihdr = struct.pack(
+        ">IIBBBBB", width, height, 8, 0 if channels == 1 else 2, 0, 0, 0
+    )
+    chunks = ((b"IHDR", ihdr), (b"IDAT", zlib.compress(filtered)), (b"IEND", b""))
+    return PNG_SIGNATURE + b"".join(
+        struct.pack(">I", len(body)) + tag + body
+        + struct.pack(">I", zlib.crc32(tag + body))
+        for tag, body in chunks
+    )
+
+
+def png_decode(data: bytes) -> tuple[int, int, int, bytearray]:
+    """CRC-checked chunk walk, inflate and defilter -> (width, height,
+    channels, flat pixel bytes). Accepts bit depth 8, gray or RGB, no
+    interlace; any other header or a damaged stream raises ValueError."""
+    if data[:8] != PNG_SIGNATURE:
+        raise ValueError("bad PNG signature")
+    pos, idat = 8, b""
+    width = height = color_type = None
+    while pos < len(data):
+        ln = int.from_bytes(data[pos : pos + 4], "big")
+        tag = data[pos + 4 : pos + 8]
+        body = data[pos + 8 : pos + 8 + ln]
+        crc = data[pos + 8 + ln : pos + 12 + ln]
+        if crc != struct.pack(">I", zlib.crc32(tag + body)):
+            raise ValueError(f"CRC mismatch in PNG chunk {tag!r}")
+        if tag == b"IHDR":
+            if len(body) != 13:
+                raise ValueError("IHDR is not 13 bytes")
+            width, height, depth, color_type = struct.unpack(">IIBB", body[:10])
+            if depth != 8 or color_type not in (0, 2) or any(body[10:]):
+                raise ValueError(
+                    f"unsupported PNG: bit depth {depth}, colour type "
+                    f"{color_type}, compression/filter/interlace {list(body[10:])}"
+                )
+        elif tag == b"IDAT":
+            idat += body
+        pos += 12 + ln
+    if width is None:
+        raise ValueError("PNG has no IHDR chunk")
+    ch = 1 if color_type == 0 else 3
+    try:
+        raw = zlib.decompress(idat)
+    except zlib.error as e:
+        raise ValueError(f"bad PNG IDAT stream: {e}") from e
+    if len(raw) != height * (1 + width * ch):
+        raise ValueError("PNG IDAT size does not match its IHDR")
+    return width, height, ch, _png_defilter(raw, width, height, ch)
+
+
+def wav_encode(pcm, rate: int = 8000) -> bytes:
+    """Mono 16-bit PCM WAV of the samples `pcm` (cast to int16)."""
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as w:
+        w.setnchannels(1)
+        w.setsampwidth(2)
+        w.setframerate(rate)
+        w.writeframes(np.asarray(pcm).astype("<i2").tobytes())
+    return buf.getvalue()
+
+
+def wav_decode(data: bytes) -> tuple[int, np.ndarray]:
+    """(sample rate, int16 samples) of a mono 16-bit PCM WAV; any other
+    layout, or a stream that is not a WAV, raises ValueError."""
+    try:
+        with wave.open(io.BytesIO(data), "rb") as w:
+            ch, width = w.getnchannels(), w.getsampwidth()
+            if ch != 1 or width != 2:
+                raise ValueError(
+                    f"unsupported WAV: {ch} channels, {8 * width}-bit samples"
+                )
+            return w.getframerate(), np.frombuffer(
+                w.readframes(w.getnframes()), dtype="<i2"
+            )
+    except (wave.Error, EOFError) as e:
+        raise ValueError(f"bad WAV: {e}") from e
+
+
+def payload_stage(
+    docs: DataFrame, column: str, encode: Callable[[int], bytes]
+) -> DataFrame:
+    """doc_id -> (doc_id, `column` binary = encode(doc_id)) as one
+    Arrow-batched mapInPandas stage. The fixture carries no media, so
+    this stage stands in for a binary column read from storage; the
+    decode stage after it runs unchanged on either."""
+
+    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"],
+                    column: [encode(int(d)) for d in pdf["doc_id"]],
+                }
+            )
+
+    return docs.mapInPandas(synth, schema=f"doc_id long, {column} binary")
+
+
 def _synth_png(d: int) -> bytes:
     """Deterministic PNG for doc_id d: dims/channels/pixels all pure
     functions of d (see IMAGE_DECODE_ORACLE), filter type cycling
     (d+y)%5 so every defilter branch is exercised."""
-    import struct
-    import zlib
-
-    def _chunk(tag: bytes, body: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(body))
-            + tag
-            + body
-            + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
-        )
-
     w, h = 8 + d % 8, 4 + d % 4
     ch = 1 if d % 2 == 0 else 3
-    prior = bytes(w * ch)
-    filtered = b""
-    for y in range(h):
-        line = bytes(
+    rows = [
+        bytes(
             (d * 7 + y * 3 + x * 5 + c * 11) % 256
             for x in range(w)
             for c in range(ch)
         )
-        ftype = (d + y) % 5
-        filtered += bytes([ftype]) + _png_filter_line(line, prior, ftype, ch)
-        prior = line
-    color_type = 0 if ch == 1 else 2
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + _chunk(b"IHDR", ihdr)
-        + _chunk(b"IDAT", zlib.compress(filtered))
-        + _chunk(b"IEND", b"")
-    )
-
-
-def _parse_png(data: bytes):
-    """CRC-checked chunk walk + inflate + defilter -> (w, h, ch,
-    flat pixel bytes). Depth-8 gray/truecolor, no interlace."""
-    import struct
-    import zlib
-
-    assert data[:8] == b"\x89PNG\r\n\x1a\n", "bad magic"
-    pos, idat = 8, b""
-    width = height = color_type = None
-    while pos < len(data):
-        (ln,) = struct.unpack(">I", data[pos : pos + 4])
-        tag = data[pos + 4 : pos + 8]
-        body = data[pos + 8 : pos + 8 + ln]
-        (crc,) = struct.unpack(">I", data[pos + 8 + ln : pos + 12 + ln])
-        assert crc == zlib.crc32(tag + body) & 0xFFFFFFFF
-        if tag == b"IHDR":
-            width, height, depth, color_type = struct.unpack(
-                ">IIBB", body[:10]
-            )
-            assert depth == 8 and color_type in (0, 2)
-            assert body[10:13] == b"\x00\x00\x00", "no interlace"
-        elif tag == b"IDAT":
-            idat += body
-        pos += 12 + ln
-    ch = 1 if color_type == 0 else 3
-    pixels = _png_defilter(zlib.decompress(idat), width, height, ch)
-    return width, height, ch, pixels
+        for y in range(h)
+    ]
+    return png_encode(w, h, ch, rows, [(d + y) % 5 for y in range(h)])
 
 
 @register("multimodal_image_decode_real", oracle=IMAGE_DECODE_ORACLE)
 def multimodal_image_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL general-PNG decode over opaque binary payloads — the
-    image-decode family's former digest-stub retired (round 5): full
+    """REAL general-PNG decode over opaque binary payloads: full
     chunk parse (CRC-checked), zlib inflate, and scanline DEFILTERING
     for all five filter types (None/Sub/Up/Average/Paeth) in both
     grayscale and RGB truecolor, pure stdlib (zlib/struct). Encoding
@@ -244,20 +317,11 @@ def multimodal_image_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") < 150
     ).select("doc_id")
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "png": [_synth_png(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for doc_id, data in zip(pdf["doc_id"], pdf["png"]):
-                width, height, ch, pixels = _parse_png(bytes(data))
+                width, height, ch, pixels = png_decode(bytes(data))
                 rows.append(
                     {
                         "doc_id": doc_id,
@@ -271,8 +335,7 @@ def multimodal_image_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             yield pd.DataFrame(rows)
 
-    pngs = docs.mapInPandas(synth, schema="doc_id long, png binary")
-    return pngs.mapInPandas(
+    return payload_stage(docs, "png", _synth_png).mapInPandas(
         decode,
         schema=(
             "doc_id long, width int, height int, channels int, "
@@ -325,17 +388,13 @@ FROM agg ORDER BY doc_id
 def multimodal_patch_embed_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decode -> resize -> featurize chained in ONE mapInPandas pass
     over genuinely encoded PNG bytes: real general-PNG decode
-    (_parse_png: CRC chunks, inflate, all five defilters), real 4x4
+    (png_decode: CRC chunks, inflate, all five defilters), real 4x4
     nearest-neighbor thumbnail, real model-free patch embedding
     (per-cell channel-mean gray, L2-normalized) — the standard
     baseline featurizer; a LEARNED vision encoder swaps into the same
-    inner function without touching the dataflow. Retires
-    multimodal_resize_featurize_stub: every multimodal stage now
-    computes real math end-to-end. The blob crosses the Python
-    boundary once and never shuffles; only doc_id + 16 floats and
-    typed accounting exit the scan stage."""
-    import numpy as np
-
+    inner function without touching the dataflow. The blob crosses
+    the Python boundary once and never shuffles; only doc_id + 16
+    floats and typed accounting exit the scan stage."""
     docs = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 150)
@@ -347,7 +406,7 @@ def multimodal_patch_embed_real(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             for doc_id in pdf["doc_id"]:
                 d = int(doc_id)
-                w, h, ch, pixels = _parse_png(_synth_png(d))
+                w, h, ch, pixels = png_decode(_synth_png(d))
                 mat = (
                     np.asarray(pixels, dtype=np.float64)
                     .reshape(h, w, ch)
@@ -418,8 +477,6 @@ def multimodal_byte_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     compressed media before wasting decode cycles on it. Map-only
     (mapInPandas), no shuffle; the 256-bin histogram is fixed memory
     per row regardless of payload size."""
-    import numpy as np
-
     docs = load_table(spark, sf_dir, "documents")
     payload = docs.select("doc_id", F.encode(F.col("text"), "utf-8").alias("data"))
 
@@ -573,8 +630,6 @@ def multimodal_cdc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import hashlib
 
-    import numpy as np
-
     rng = np.random.default_rng(42)
     gear = rng.integers(0, 1 << 63, size=256, dtype=np.int64).tolist()
     MINC, MAXC, MASK = 32, 256, 0x3F  # avg target 64B at 6 mask bits
@@ -693,64 +748,37 @@ ORDER BY doc_id
 
 @register("multimodal_wav_decode_real", oracle=WAV_DECODE_ORACLE)
 def multimodal_wav_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Real audio decode over opaque binary payloads — upgrades the
-    multimodal decode tier from stub to real for the modality that
-    needs no codec library: WAV/RIFF PCM via stdlib ``wave``. Two
+    """Real audio decode over opaque binary payloads for the modality
+    that needs no codec library: WAV/RIFF PCM via stdlib ``wave``. Two
     Arrow-batched mapInPandas stages: (1) synthesize a deterministic
-    WAV per doc (the fixture carries no media; synthesis parameters
-    are pure functions of doc_id so the oracle predicts every output
-    exactly), (2) DECODE — parse the RIFF header, read frames,
-    np.frombuffer the int16 PCM, compute peak and RMS from the actual
-    samples. Swap stage 1 for a binary column of crawled WAVs and
-    stage 2 runs unchanged — payloads never shuffle, only typed
-    metadata leaves the scan stage (same discipline as
+    WAV per doc (synthesis parameters are pure functions of doc_id so
+    the oracle predicts every output exactly), (2) DECODE — wav_decode
+    parses the RIFF header and reads the int16 PCM; peak and RMS come
+    from the actual samples. Swap stage 1 for a binary column of
+    crawled WAVs and stage 2 runs unchanged — payloads never shuffle,
+    only typed metadata leaves the scan stage (same discipline as
     multimodal_byte_entropy)."""
-    import io
-    import struct
-    import wave as wave_mod
-
-    import numpy as np
-
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") < 200
     ).select("doc_id")
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                amp = 100 + int(doc_id) % 900
-                n = 800 + 160 * (int(doc_id) % 5)
-                samples = np.where(
-                    np.arange(n) % 2 == 0, amp, -amp
-                ).astype("<i2")
-                buf = io.BytesIO()
-                with wave_mod.open(buf, "wb") as w:
-                    w.setnchannels(1)
-                    w.setsampwidth(2)
-                    w.setframerate(8000)
-                    w.writeframes(samples.tobytes())
-                payloads.append(buf.getvalue())
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "wav": payloads})
+    def square_wave(d: int) -> bytes:
+        amp, n = 100 + d % 900, 800 + 160 * (d % 5)
+        return wav_encode(np.where(np.arange(n) % 2 == 0, amp, -amp))
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for doc_id, data in zip(pdf["doc_id"], pdf["wav"]):
                 data = bytes(data)
-                with wave_mod.open(io.BytesIO(data), "rb") as w:
-                    rate = w.getframerate()
-                    ch = w.getnchannels()
-                    n = w.getnframes()
-                    pcm = np.frombuffer(
-                        w.readframes(n), dtype="<i2"
-                    ).astype(np.float64)
+                rate, pcm = wav_decode(data)
+                pcm = pcm.astype(np.float64)
                 rows.append(
                     {
                         "doc_id": doc_id,
                         "sample_rate": rate,
-                        "n_channels": ch,
-                        "n_samples": n,
+                        "n_channels": 1,  # wav_decode accepts mono only
+                        "n_samples": len(pcm),
                         "payload_bytes": len(data),
                         "peak": int(np.abs(pcm).max()),
                         "rms": int(round(np.sqrt((pcm ** 2).mean()))),
@@ -758,8 +786,7 @@ def multimodal_wav_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             yield pd.DataFrame(rows)
 
-    wavs = docs.mapInPandas(synth, schema="doc_id long, wav binary")
-    return wavs.mapInPandas(
+    return payload_stage(docs, "wav", square_wave).mapInPandas(
         decode,
         schema=(
             "doc_id long, sample_rate int, n_channels int, n_samples long, "
@@ -802,98 +829,40 @@ ORDER BY d.doc_id
 def multimodal_png_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real image decode over opaque binary payloads for the subset
     PNG that needs no imaging library: 8-bit grayscale, filter type
-    0 — magic + IHDR parse, CRC-checked chunks, zlib-inflated IDAT,
-    per-scanline filter strip, pixel math from the actual bytes
-    (stdlib zlib/struct + numpy). The general-PNG path (filter types
-    1-4, RGB) is multimodal_image_decode_real; this narrower tier
-    stays as the numpy-vectorized fast path for the filter-0 subset
-    and proves the dataflow END-TO-END on genuinely encoded bytes:
-    synthesize → compress → decode → verify, with the oracle
-    predicting every field exactly because synthesis is a pure
-    function of doc_id. Payloads never shuffle; only typed metadata
-    leaves the scan stage."""
-    import io
-    import struct
-    import zlib
-
-    import numpy as np
-
+    0. The payloads go through the same png_decode as the general
+    tier (multimodal_image_decode_real: filter types 1-4, RGB) —
+    signature and IHDR checks, CRC-checked chunks, zlib-inflated IDAT,
+    defilter — and the pixel math runs on the decoded bytes. It proves
+    the dataflow END-TO-END on genuinely encoded bytes: synthesize →
+    compress → decode → verify, with the oracle predicting every field
+    exactly because synthesis is a pure function of doc_id. Payloads
+    never shuffle; only typed metadata leaves the scan stage."""
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") < 150
     ).select("doc_id")
 
-    def _chunk(tag: bytes, body: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(body))
-            + tag
-            + body
-            + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
-        )
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 16 + d % 16, 8 + d % 8
-                raw = b"".join(
-                    b"\x00" + bytes([(y + d) % 256] * w) for y in range(h)
-                )
-                ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
-                png = (
-                    b"\x89PNG\r\n\x1a\n"
-                    + _chunk(b"IHDR", ihdr)
-                    + _chunk(b"IDAT", zlib.compress(raw))
-                    + _chunk(b"IEND", b"")
-                )
-                payloads.append(png)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "png": payloads})
+    def gray_rows_png(d: int) -> bytes:
+        w, h = 16 + d % 16, 8 + d % 8
+        return png_encode(w, h, 1, [bytes([(y + d) % 256]) * w for y in range(h)])
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for doc_id, data in zip(pdf["doc_id"], pdf["png"]):
-                data = bytes(data)
-                assert data[:8] == b"\x89PNG\r\n\x1a\n", "bad magic"
-                pos, idat = 8, b""
-                width = height = bit_depth = None
-                while pos < len(data):
-                    (ln,) = struct.unpack(">I", data[pos : pos + 4])
-                    tag = data[pos + 4 : pos + 8]
-                    body = data[pos + 8 : pos + 8 + ln]
-                    (crc,) = struct.unpack(
-                        ">I", data[pos + 8 + ln : pos + 12 + ln]
-                    )
-                    assert crc == zlib.crc32(tag + body) & 0xFFFFFFFF
-                    if tag == b"IHDR":
-                        width, height, bit_depth = struct.unpack(
-                            ">IIB", body[:9]
-                        )
-                        assert body[9] == 0, "grayscale only in this tier"
-                    elif tag == b"IDAT":
-                        idat += body
-                    pos += 12 + ln
-                raw = zlib.decompress(idat)
-                stride = width + 1
-                mat = np.frombuffer(raw, dtype=np.uint8).reshape(
-                    height, stride
-                )
-                assert (mat[:, 0] == 0).all(), "filter-0 only in this tier"
-                pixels = mat[:, 1:].astype(np.int64)
+                width, height, _, pixels = png_decode(bytes(data))
                 rows.append(
                     {
                         "doc_id": doc_id,
                         "width": width,
                         "height": height,
-                        "bit_depth": bit_depth,
+                        "bit_depth": 8,  # png_decode accepts depth 8 only
                         "n_pixels": width * height,
-                        "pixel_sum": int(pixels.sum()),
+                        "pixel_sum": sum(pixels),
                     }
                 )
             yield pd.DataFrame(rows)
 
-    pngs = docs.mapInPandas(synth, schema="doc_id long, png binary")
-    return pngs.mapInPandas(
+    return payload_stage(docs, "png", gray_rows_png).mapInPandas(
         decode,
         schema=(
             "doc_id long, width int, height int, bit_depth int, "
@@ -935,7 +904,7 @@ def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     20ms at 8kHz — the standard speech hop), per-frame RMS energy
     (sqrt mean square over int16 samples) and zero-crossing rate
     (sign-change count). Both are REAL DSP on genuinely encoded
-    bytes (stdlib `wave` + numpy); the synthesized two-segment
+    bytes (wav_decode + numpy); the synthesized two-segment
     square wave makes every output exactly predictable so the
     oracle pins real values, not bounds.
 
@@ -944,46 +913,22 @@ def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-payload features, the same plumbing a mel-spectrogram or
     VAD stage would use (swap the per-frame function, keep the
     dataflow)."""
-    import io
-    import wave as wave_mod
-
-    import numpy as np
-
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") < 200
     ).select("doc_id")
 
     FRAME = 160
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        payloads = []
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                amp_a, amp_b = 100 + d % 900, 200 + d % 700
-                i = np.arange(1600)
-                amp = np.where(i < 800, amp_a, amp_b)
-                sign = np.where((i // 8) % 2 == 0, 1, -1)
-                pcm = (amp * sign).astype("<i2")
-                buf = io.BytesIO()
-                with wave_mod.open(buf, "wb") as w:
-                    w.setnchannels(1)
-                    w.setsampwidth(2)
-                    w.setframerate(8000)
-                    w.writeframes(pcm.tobytes())
-                payloads.append(buf.getvalue())
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "wav": payloads})
+    def two_segment_wave(d: int) -> bytes:
+        i = np.arange(1600)
+        amp = np.where(i < 800, 100 + d % 900, 200 + d % 700)
+        return wav_encode(amp * np.where((i // 8) % 2 == 0, 1, -1))
 
     def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for doc_id, data in zip(pdf["doc_id"], pdf["wav"]):
-                with wave_mod.open(io.BytesIO(bytes(data)), "rb") as w:
-                    assert w.getnchannels() == 1 and w.getsampwidth() == 2
-                    pcm = np.frombuffer(
-                        w.readframes(w.getnframes()), dtype="<i2"
-                    ).astype(np.float64)
+                pcm = wav_decode(bytes(data))[1].astype(np.float64)
                 n_frames = len(pcm) // FRAME
                 frames = pcm[: n_frames * FRAME].reshape(n_frames, FRAME)
                 rms = np.sqrt((frames ** 2).mean(axis=1))
@@ -1004,8 +949,7 @@ def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             yield pd.DataFrame(rows)
 
-    wavs = docs.mapInPandas(synth, schema="doc_id long, wav binary")
-    return wavs.mapInPandas(
+    return payload_stage(docs, "wav", two_segment_wave).mapInPandas(
         featurize,
         schema=(
             "doc_id long, n_frames long, rms_first_half double, "
@@ -1066,7 +1010,6 @@ def multimodal_tar_shard_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     riding the archive rows. At 100 TB shards live in object
     storage and the parse stage reads byte ranges; the plumbing here
     (group → pack → parse → account) is identical."""
-    import io
     import math
     import tarfile
 
@@ -1191,8 +1134,6 @@ def multimodal_resize_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays the whole decode+resize from the pixel formula,
     so a coordinate-mapping off-by-one (the classic resize bug) is a
     value mismatch, not a silent pass."""
-    import numpy as np
-
     docs = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 150)
@@ -1200,20 +1141,11 @@ def multimodal_resize_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     TW, TH = 6, 4
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "png": [_synth_png(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
     def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for doc_id, data in zip(pdf["doc_id"], pdf["png"]):
-                w, h, ch, pixels = _parse_png(bytes(data))
+                w, h, ch, pixels = png_decode(bytes(data))
                 img = np.frombuffer(bytes(pixels), dtype=np.uint8).reshape(
                     h, w, ch
                 )
@@ -1233,8 +1165,7 @@ def multimodal_resize_real(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             yield pd.DataFrame(rows)
 
-    pngs = docs.mapInPandas(synth, schema="doc_id long, png binary")
-    return pngs.mapInPandas(
+    return payload_stage(docs, "png", _synth_png).mapInPandas(
         resize,
         schema=(
             "doc_id long, thumb_w int, thumb_h int, channels int, "
@@ -1277,8 +1208,6 @@ def multimodal_spectrogram_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scan stage. The integer-bin construction makes the DFT
     algebraically exact, so the oracle value-checks the whole
     frame->fft->argmax path instead of asserting it."""
-    import numpy as np
-
     docs = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 200)
@@ -1374,7 +1303,7 @@ ORDER BY doc_a, doc_b
 def multimodal_image_ahash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual image near-dup: REAL decode (synthesize PNG bytes
     incl. planted brightness-shifted re-encodes, parse via
-    _parse_png), 4x4 average-hash (cell > mean -> bit), then the
+    png_decode), 4x4 average-hash (cell > mean -> bit), then the
     SIMHASH BANDING trick applied to images: split the 16-bit hash
     into 4-bit bands — Hamming <= 2 guarantees >= 2 intact bands
     (pigeonhole), so candidates come from band-key equi-joins, not an
@@ -1386,51 +1315,28 @@ def multimodal_image_ahash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (band_key, doc_id) only; the quadratic exists solely inside
     shared 4-bit-band buckets — the image-side twin of
     dedup_simhash_banded."""
-    import struct
-    import zlib
-
-    import numpy as np
-
     docs = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 150)
         .select("doc_id")
     )
 
-    def _chunk(tag: bytes, body: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(body))
-            + tag
-            + body
-            + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
-        )
-
     def synth_img(doc_id: int) -> bytes:
         base = doc_id % 1000000
         shift = (base % 97) + (3 if doc_id >= 7000000 else 0)
         w, h = 8 + base % 8, 4 + base % 4
-        raw = b"".join(
-            b"\x00"
-            + bytes(
-                ((base * 7 + y * 3 + x * 5) % 156 + shift) & 0xFF
-                for x in range(w)
-            )
+        rows = [
+            bytes(((base * 7 + y * 3 + x * 5) % 156 + shift) & 0xFF for x in range(w))
             for y in range(h)
-        )
-        ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
-        return (
-            b"\x89PNG\r\n\x1a\n"
-            + _chunk(b"IHDR", ihdr)
-            + _chunk(b"IDAT", zlib.compress(raw))
-            + _chunk(b"IEND", b"")
-        )
+        ]
+        return png_encode(w, h, 1, rows)
 
     def hash_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         rows = []
         for pdf in batches:
             for doc_id in pdf["doc_id"]:
                 d = int(doc_id)
-                w, h, ch, pixels = _parse_png(synth_img(d))
+                w, h, ch, pixels = png_decode(synth_img(d))
                 mat = np.asarray(pixels, dtype=np.int64).reshape(h, w)
                 ys = (np.arange(4) * h) // 4
                 xs = (np.arange(4) * w) // 4
@@ -1534,24 +1440,18 @@ FROM frames f GROUP BY f.doc_id ORDER BY f.doc_id
 def multimodal_audio_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Energy-based voice-activity detection over genuinely encoded
     WAV bytes: synthesize PCM (speech frames carry a sinusoid,
-    silence frames zeros), roundtrip through stdlib `wave`, compute
+    silence frames zeros), roundtrip through wav_encode/wav_decode, compute
     per-frame RMS energy from the DECODED int16 samples, threshold at
     half the max frame energy, and reduce to speech segments with
     numpy gaps-and-islands — the segmentation stage an ASR-data
     pipeline runs before transcription. Payload bytes cross the
     Python boundary once; only per-asset segment accounting exits."""
-    import io
-    import struct
-    import wave
-
-    import numpy as np
-
     docs = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 150)
         .select("doc_id")
     )
-    nfft, nframes, sr = 64, 16, 8000
+    nfft, nframes = 64, 16
 
     def synth_wav(d: int) -> bytes:
         n = np.arange(nfft)
@@ -1564,25 +1464,14 @@ def multimodal_audio_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame
                 for f in range(nframes)
             ]
         )
-        pcm = (sig * 32767).astype("<i2").tobytes()
-        buf = io.BytesIO()
-        with wave.open(buf, "wb") as w:
-            w.setnchannels(1)
-            w.setsampwidth(2)
-            w.setframerate(sr)
-            w.writeframes(pcm)
-        return buf.getvalue()
+        return wav_encode(sig * 32767)
 
     def vad(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         rows = []
         for pdf in batches:
             for doc_id in pdf["doc_id"]:
                 d = int(doc_id)
-                with wave.open(io.BytesIO(synth_wav(d)), "rb") as w:
-                    assert w.getnchannels() == 1 and w.getsampwidth() == 2
-                    samples = np.frombuffer(
-                        w.readframes(w.getnframes()), dtype="<i2"
-                    ).astype(np.float64)
+                samples = wav_decode(synth_wav(d))[1].astype(np.float64)
                 frames = samples.reshape(nframes, nfft)
                 energy = np.sqrt((frames * frames).mean(axis=1))
                 mask = energy > energy.max() / 2

@@ -15,6 +15,7 @@ from etl_data_ingestion_spark.catalog import load_table
 from etl_data_ingestion_spark.functions.arrays import ordered_pairs
 from etl_data_ingestion_spark.functions.text import (
     BPE_ISH_PATTERN,
+    adjacent_bigrams,
     rolling_fingerprint,
     token_count,
     tokens,
@@ -101,6 +102,23 @@ ORDER BY doc_id
 """
 
 
+def stopword_lang(text: str) -> F.Column:
+    """Stopword-vote language guess over the whitespace tokens of
+    `text`: the first of en/de/es with at least two of its three
+    stopwords, else 'unknown' (LANG_ID_ORACLE's CASE)."""
+    toks = tokens(text)
+
+    def votes(words: list[str]) -> F.Column:
+        return F.size(F.filter(toks, lambda t: t.isin(*words)))
+
+    return (
+        F.when(votes(["the", "of", "and"]) >= 2, "en")
+        .when(votes(["der", "und", "die"]) >= 2, "de")
+        .when(votes(["el", "de", "la"]) >= 2, "es")
+        .otherwise("unknown")
+    )
+
+
 @register("text_lang_id_heuristic", oracle=LANG_ID_ORACLE)
 def text_lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-vote language ID — the n-gram-free heuristic tier; a
@@ -108,19 +126,10 @@ def text_lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture text is synthetic English-ish for every label, so the value
     here is the operator shape (votes → argmax), oracle-checked."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = tokens("text")
-
-    def votes(words: list[str]) -> F.Column:
-        return F.size(F.filter(toks, lambda t: t.isin(*words)))
-
-    guessed = (
-        F.when(votes(["the", "of", "and"]) >= 2, "en")
-        .when(votes(["der", "und", "die"]) >= 2, "de")
-        .when(votes(["el", "de", "la"]) >= 2, "es")
-        .otherwise("unknown")
-    )
     return docs.select(
-        "doc_id", F.col("lang").alias("labeled_lang"), guessed.alias("guessed_lang")
+        "doc_id",
+        F.col("lang").alias("labeled_lang"),
+        stopword_lang("text").alias("guessed_lang"),
     )
 
 
@@ -561,24 +570,16 @@ def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     lang column: (true, predicted) counts with row-normalized recall
     and column-normalized precision — the evaluation op every
     classifier-gated pipeline stage needs beside it. Scale shape: the
-    prediction is the same codegen'd expression as
-    text_lang_id_heuristic (map-side), one Exchange to the
+    prediction is stopword_lang, the expression
+    text_lang_id_heuristic emits (map-side), one Exchange to the
     |langs|²-sized matrix, and the normalizations are windows over
     that tiny result."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = tokens("text")
-
-    def votes(words: list[str]) -> F.Column:
-        return F.size(F.filter(toks, lambda t: t.isin(*words)))
-
-    pred = (
-        F.when(votes(["the", "of", "and"]) >= 2, "en")
-        .when(votes(["der", "und", "die"]) >= 2, "de")
-        .when(votes(["el", "de", "la"]) >= 2, "es")
-        .otherwise("unknown")
-    )
     m = (
-        docs.select(F.col("lang").alias("true_lang"), pred.alias("pred_lang"))
+        docs.select(
+            F.col("lang").alias("true_lang"),
+            stopword_lang("text").alias("pred_lang"),
+        )
         .groupBy("true_lang", "pred_lang")
         .agg(F.count(F.lit(1)).alias("n_docs"))
     )
@@ -644,27 +645,13 @@ def text_bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-sized Exchange is the final per-doc aggregation. Here
     they shuffle-join, which AQE converts to broadcast when small
     enough — same plan either way."""
-    from etl_data_ingestion_spark.functions.text import tokens
-
     docs = load_table(spark, sf_dir, "documents", parallel=True).filter(
         F.length(F.trim("text")) > 0
     )
     toks = docs.select("doc_id", tokens("text").alias("ts"))
     t = toks.select("doc_id", F.explode("ts").alias("tok"))
-    idx = F.when(
-        F.size("ts") >= 2, F.sequence(F.lit(1), F.size("ts") - 1)
-    ).otherwise(F.array().cast("array<int>"))
     b = toks.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                idx,
-                lambda i: F.struct(
-                    F.element_at(F.col("ts"), i).alias("w1"),
-                    F.element_at(F.col("ts"), i + 1).alias("w2"),
-                ),
-            )
-        ).alias("bg"),
+        "doc_id", F.explode(adjacent_bigrams("ts")).alias("bg")
     ).select("doc_id", "bg.w1", "bg.w2").persist()
     c1 = t.groupBy("tok").agg(F.count(F.lit(1)).alias("c1"))
     c2 = b.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2"))
@@ -1745,26 +1732,13 @@ def text_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     under AQE); the per-instance -log2 snaps to integer micro-units
     so per-doc means are exact BIGINT sums, order-independent."""
     from etl_data_ingestion_spark.functions.numeric import snap
-    from etl_data_ingestion_spark.functions.text import tokens
 
     docs = load_table(spark, sf_dir, "documents", parallel=True).filter(
         F.length(F.trim("text")) > 0
     )
     toks = docs.select("doc_id", tokens("text").alias("ts"))
-    idx = F.when(
-        F.size("ts") >= 2, F.sequence(F.lit(1), F.size("ts") - 1)
-    ).otherwise(F.array().cast("array<int>"))
     b = toks.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                idx,
-                lambda i: F.struct(
-                    F.element_at(F.col("ts"), i).alias("w1"),
-                    F.element_at(F.col("ts"), i + 1).alias("w2"),
-                ),
-            )
-        ).alias("bg"),
+        "doc_id", F.explode(adjacent_bigrams("ts")).alias("bg")
     ).select("doc_id", "bg.w1", "bg.w2").persist()
     # persist the bigram-type table too: c1/cont/bt all derive from
     # it, and without the persist each branch re-aggregates the full
@@ -1992,28 +1966,11 @@ def text_inverted_index_phrase(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms). The top-bigram stage derives from an array transform on
     the token arrays (no postings self-join needed engine-side).
     Integer counts + full tiebreaks = deterministic result."""
-    from etl_data_ingestion_spark.functions.text import tokens
-
     docs = load_table(spark, sf_dir, "documents")
     with_ts = docs.filter(F.trim("text") != "").select(
         "doc_id", tokens("text").alias("ts")
     )
-    # sequence(1, 0) DESCENDS in Spark (see functions.text.word_ngrams)
-    # — guard single-token docs to an empty index list, not a clamp
-    idx = F.when(
-        F.size("ts") >= 2, F.sequence(F.lit(1), F.size("ts") - 1)
-    ).otherwise(F.array().cast("array<int>"))
-    grams = with_ts.select(
-        F.explode(
-            F.transform(
-                idx,
-                lambda i: F.struct(
-                    F.element_at("ts", i).alias("w1"),
-                    F.element_at("ts", i + 1).alias("w2"),
-                ),
-            )
-        ).alias("g")
-    )
+    grams = with_ts.select(F.explode(adjacent_bigrams("ts")).alias("g"))
     top = (
         grams.groupBy(F.col("g.w1").alias("w1"), F.col("g.w2").alias("w2"))
         .agg(F.count(F.lit(1)).alias("c"))

@@ -1,11 +1,11 @@
 """Video tier: REAL animated-GIF decode + uniform frame sampling.
 
-Retires `multimodal_frame_sample_stub` (the last video-family fake):
-the sampling policy is unchanged, but it now runs over frames decoded
-from genuinely ENCODED bytes — a GIF89a container written and read
-with a real variable-code-width LZW codec (pure stdlib + numpy; GIF's
-LZW is public-spec, no imaging library needed). Same upgrade class as
-the WAV (stdlib `wave`) and PNG (zlib + filter math) decoders.
+The sampling policy runs over frames decoded from genuinely ENCODED
+bytes — a GIF89a container written and read with a real
+variable-code-width LZW codec (pure stdlib + numpy; GIF's LZW is
+public-spec, no imaging library needed). The container's codec lives
+here; the PNG and WAV codecs and the shared payload stage live in
+operators/multimodal.py.
 
 Reference parity: the reference's pipeline treats attachments as
 opaque blobs (main.py:200-219 fetches + base64-decodes, never looks
@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_data_ingestion_spark.catalog import load_table
+from etl_data_ingestion_spark.operators.multimodal import payload_stage
 from etl_data_ingestion_spark.plans.registry import register
 
 
@@ -305,10 +306,9 @@ def multimodal_video_frames_real(
     floor(n·(2i+1)/2k) — one typed row per sampled frame with its
     actual decoded pixel sum and its GCE-accumulated timestamp.
 
-    Replaces multimodal_frame_sample_stub: the byte-length≈duration
-    fake is gone; timestamps come from real per-frame delay fields and
-    pixel stats from real decoded indices. doc_id < 120 bounds the
-    pure-Python LZW work (~120 assets × ≤6 frames × ≤253 px)."""
+    Timestamps come from real per-frame delay fields and pixel stats
+    from real decoded indices. doc_id < 120 bounds the pure-Python LZW
+    work (~120 assets × ≤6 frames × ≤253 px)."""
     import numpy as np
 
     docs = (
@@ -316,17 +316,6 @@ def multimodal_video_frames_real(
         .filter(F.col("doc_id") < 120)
         .select("doc_id")
     )
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "gif": [synth_gif(int(d)) for d in pdf["doc_id"]],
-                }
-            )
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         k = 2
@@ -358,8 +347,7 @@ def multimodal_video_frames_real(
             if rows:
                 yield pd.DataFrame(rows)
 
-    gifs = docs.mapInPandas(synth, schema="doc_id long, gif binary")
-    return gifs.mapInPandas(
+    return payload_stage(docs, "gif", synth_gif).mapInPandas(
         decode,
         schema=(
             "doc_id long, frame_id string, sample_idx int, frame_idx int, "

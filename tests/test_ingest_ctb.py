@@ -7,6 +7,7 @@ import datetime
 import gc
 import gzip
 import os
+import threading
 
 import pytest
 
@@ -247,15 +248,19 @@ def test_negative_and_plus_ints(spark, tmp_path):
 def test_plan_build_sends_few_jvm_calls(spark, tmp_path, monkeypatch):
     """Building a clean 21-column file's plans is a few hundred py4j
     commands, not thousands: each coercion projection is SQL text that
-    one ``selectExpr`` call parses."""
+    one ``selectExpr`` call parses. Only this thread's commands count:
+    the gateway client is shared, and a thread an earlier test left
+    running may send commands inside the window."""
     path = write_tsv(tmp_path, "ctb_calls.tsv", header_line() + "\n" + row() + "\n")
     assert ingest_ctb_file(spark, path).ok  # warm: first-use lookups
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
+    caller = threading.get_ident()
     sent = []
 
     def counted(command, *args, **kwargs):
-        sent.append(command)
+        if threading.get_ident() == caller:
+            sent.append(command)
         return send(command, *args, **kwargs)
 
     # no cyclic GC inside the window: it would release (and count)
