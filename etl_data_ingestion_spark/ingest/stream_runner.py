@@ -10,30 +10,29 @@ itself. That archival is this runner's whole lifecycle; there is no
 Processed/ or Failed/ move, and ``FileOutcome.state`` records the
 outcome instead.
 
-Shape: a checkpointed ``binaryFile`` stream, pruned to its ``path``
-column, is the file-arrival log — one row per newly landed file, no
-content read. ``foreachBatch`` hands each path to ``runner.process_file``,
-the per-file policy the batch runner uses, against the file still
-sitting in the watch dir (archival happens after the batch commits).
+Shape: a checkpointed ``binaryFile`` stream drives ``foreachBatch``,
+and the arrival log is the file source's own checkpoint log. Before a
+micro-batch runs, the source writes the files it chose to
+``<checkpoint>/sources/0/<batchId>``. ``logged_paths`` reads that file
+on the driver, as ``pipeline.read_raw_header`` reads a landed file, and
+each path goes to ``runner.process_file``, the per-file policy the
+batch runner uses, against the file still sitting in the watch dir
+(archival happens after the batch commits). The batch's frame is never
+touched, so the stream runs no Spark job of its own: every job in a
+drain is a sink append. A 0-byte file, which ``binaryFile`` gives no
+row, is in the log too, so it fails like it does in the batch runner.
 
-Listing a micro-batch's paths is one Spark job (a ``foreachBatch``
-frame has no ``inputFiles()``), coalesced to one task: ``binaryFile``
-charges every file the 4 MB open cost, so uncoalesced it would run a
-task per landed file. With ``content`` pruned a task only reads each
-file's status, and the driver then runs at least one job per file,
-one file at a time, so one listing task keeps up at any batch size.
+A micro-batch re-run after a crash keeps its batch id and so reads the
+same log entry: the checkpoint's exactly-once consumption is unchanged.
 
 Spark archives a batch's files when it starts the next batch, so the
 files of a drain's last batch stay in the watch dir, already
 checkpointed, until a later drain finds new files.
-
-Limitation: a 0-byte file yields no row to a file stream source, so
-it is checkpointed as consumed and left to ``cleanSource`` like any
-other file, with no outcome and no notification
-(``tests/test_streaming.py::test_streaming_landing_zone_zero_byte_file``).
 """
 
 from __future__ import annotations
+
+import json
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -47,6 +46,53 @@ from etl_data_ingestion_spark.notify import Notifier
 BINARY_FILE_SCHEMA = (
     "path STRING, modificationTime TIMESTAMP, length BIGINT, content BINARY"
 )
+
+
+def logged_paths(spark: SparkSession, checkpoint_dir: str, batch_id: int) -> list[str]:
+    """The sorted paths the query's file source logged for micro-batch
+    ``batch_id``, read on the driver without a Spark job.
+
+    The log is ``<checkpoint_dir>/sources/0/<batch_id>``, opened through
+    the Hadoop FileSystem API and split by Hadoop's ``LineReader``: a
+    ``v1`` line, then one JSON entry per file. Every 10th batch is
+    written as ``<batch_id>.compact`` holding all earlier entries too,
+    so only the entries of ``batch_id`` are kept. An entry's path is a
+    URL-encoded ``file:///…`` URI; each is returned as the ``binaryFile``
+    ``path`` column spells it (``file:/…``, decoded), which is how the
+    batch runner's paths, and the error texts quoting them, read.
+    Raises when the batch has no log file or the log is not ``v1``."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    log_dir = f"{checkpoint_dir}/sources/0"
+    for name in (str(batch_id), f"{batch_id}.compact"):
+        hpath = jvm.org.apache.hadoop.fs.Path(log_dir, name)
+        fs = hpath.getFileSystem(conf)
+        if fs.exists(hpath):
+            break
+    else:
+        raise FileNotFoundError(
+            f"no file source log for batch {batch_id} under {log_dir}"
+        )
+    stream = fs.open(hpath)
+    try:
+        reader = jvm.org.apache.hadoop.util.LineReader(stream, conf)
+        line = jvm.org.apache.hadoop.io.Text()
+        reader.readLine(line)
+        if line.toString() != "v1":
+            raise ValueError(
+                f"file source log {hpath.toString()} has version "
+                f"{line.toString()!r}, expected 'v1'"
+            )
+        uris = []
+        while reader.readLine(line) > 0:
+            entry = json.loads(line.toString())
+            if entry["batchId"] == batch_id:
+                uris.append(entry["path"])
+    finally:
+        stream.close()
+    return sorted(
+        jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(u)).toString() for u in uris
+    )
 
 
 def run_landing_zone_stream(
@@ -69,12 +115,10 @@ def run_landing_zone_stream(
         .option("cleanSource", "archive")
         .option("sourceArchiveDir", archive_dir)
         .load(unprocessed_dir)
-        .select("path")
-        .coalesce(1)
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        for path in sorted(r["path"] for r in batch_df.collect()):
+        for path in logged_paths(spark, checkpoint_dir, batch_id):
             report.outcomes.append(
                 process_file(spark, path, warehouse, quarantine, notifier)
             )

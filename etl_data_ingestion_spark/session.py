@@ -95,12 +95,14 @@ def ship_package(spark: SparkSession) -> None:
     may import us from a path its executors' Python workers don't
     share. addPyFile-ing a zip of the package ships it through Spark's
     own file distribution, which works identically on a real cluster.
-    Idempotent per session.
+    Idempotent per SparkContext: every session over one context, a
+    ``newSession()`` included, shares its shipped files.
     """
     import shutil
     import tempfile
 
-    if getattr(spark, "_etl_pkg_shipped", False):
+    sc = spark.sparkContext
+    if getattr(sc, "_etl_pkg_shipped", False):
         return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     staging = tempfile.mkdtemp(prefix="etl_pkg_")
@@ -109,8 +111,8 @@ def ship_package(spark: SparkSession) -> None:
         zip_base, "zip", root_dir=os.path.dirname(pkg_dir),
         base_dir=os.path.basename(pkg_dir),
     )
-    spark.sparkContext.addPyFile(archive)
-    spark._etl_pkg_shipped = True
+    sc.addPyFile(archive)
+    sc._etl_pkg_shipped = True
 
 
 def tune_session(spark: SparkSession) -> SparkSession:

@@ -196,8 +196,8 @@ def test_stream_missing_target_fails_file(spark, tmp_path):
 
 def test_batch_and_stream_runners_agree(spark, zone, tmp_path):
     """Both arrival loops apply one per-file policy: draining the same
-    landing set gives each file the same outcome and notification.
-    The set has no 0-byte file, which a file stream never sees."""
+    landing set, a 0-byte file included, gives each file the same
+    outcome and notification."""
     landing = {
         "CTB_clean.tsv": [row(), row()],
         "CTB_partial.tsv": [row(), row(DEMAND_QTY="bad")],
@@ -212,6 +212,7 @@ def test_batch_and_stream_runners_agree(spark, zone, tmp_path):
             "CTB_unknown.tsv",
             (header_line() + "\tEXTRA COL\n" + row() + "\tv\n").encode(),
         )
+        zone.put("CTB_zero.tsv", b"")
 
     def drained(report, notifier):
         notes = {}
@@ -247,7 +248,7 @@ def test_batch_and_stream_runners_agree(spark, zone, tmp_path):
         stream_notes,
     )
     got = drained(batch, batch_notes)
-    assert len(got) == 5
+    assert len(got) == 6
     assert got == drained(stream, stream_notes)
     assert {k: v[0][0] for k, v in got.items()} == {
         "CTB_clean.tsv": "processed",
@@ -255,6 +256,7 @@ def test_batch_and_stream_runners_agree(spark, zone, tmp_path):
         "CTB_allbad.tsv": "failed",
         "CTB_headeronly.tsv": "failed",
         "CTB_unknown.tsv": "failed",
+        "CTB_zero.tsv": "failed",
     }
 
 

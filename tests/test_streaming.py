@@ -568,10 +568,10 @@ def test_windowed_topk_stream_matches_batch(spark, events_stream):
 
 
 def test_streaming_landing_zone_zero_byte_file(spark, tmp_path):
-    """A stated limitation of the streaming runner: a 0-byte file gives
-    the file stream no row, so it gets no outcome and no notification.
-    It is still checkpointed as consumed, and cleanSource archives it
-    with the rest of its batch once the next batch starts."""
+    """A 0-byte file gives the file stream no row, but the source still
+    logs it, so the streaming runner fails it as the batch runner does:
+    a failed outcome and the same error notification. cleanSource
+    archives it with the rest of its batch once the next batch starts."""
     import os
     import time
 
@@ -597,14 +597,22 @@ def test_streaming_landing_zone_zero_byte_file(spark, tmp_path):
         return sorted(f for _, _, fs in os.walk(tmp_path / "Archived") for f in fs)
 
     report = run_landing_zone_stream(*args)
-    assert [o.path.rsplit("/", 1)[-1] for o in report.outcomes] == ["CTB_ok.tsv"]
-    assert [e.subject.rsplit(" - ", 1)[-1] for e in notifier.events] == ["CTB_ok.tsv"]
+    zero_path = f"file:{unproc}/CTB_zero.tsv"
+    empty = f"CTB file '{zero_path}' is empty or has no data rows."
+    assert [(o.path.rsplit("/", 1)[-1], o.state, o.error) for o in report.outcomes] == [
+        ("CTB_ok.tsv", "processed", None),
+        ("CTB_zero.tsv", "failed", empty),
+    ]
+    assert [(e.kind, e.subject.rsplit(" - ", 1)[-1]) for e in notifier.events] == [
+        ("success", "CTB_ok.tsv"), ("error", "CTB_zero.tsv"),
+    ]
+    assert notifier.events[1].body == empty
 
     (unproc / "CTB_next.tsv").write_text(header_line() + "\n" + row() + "\n")
     report = run_landing_zone_stream(*args)  # starts batch 1: batch 0 is archived
     assert [o.path.rsplit("/", 1)[-1] for o in report.outcomes] == ["CTB_next.tsv"]
     assert [e.subject.rsplit(" - ", 1)[-1] for e in notifier.events] == [
-        "CTB_ok.tsv", "CTB_next.tsv",
+        "CTB_ok.tsv", "CTB_zero.tsv", "CTB_next.tsv",
     ]
     deadline = time.monotonic() + 30
     while archived() != ["CTB_ok.tsv", "CTB_zero.tsv"] and time.monotonic() < deadline:
@@ -613,11 +621,69 @@ def test_streaming_landing_zone_zero_byte_file(spark, tmp_path):
     assert os.listdir(unproc) == ["CTB_next.tsv"]
 
 
-def test_stream_arrival_log_runs_one_task(spark, tmp_path, monkeypatch):
-    """The stream runner lists a micro-batch's landed files with one
-    Spark job of one task, however many files arrived. The job runs
-    under the query's job group; the jobs in that group before the
-    batch's first file is processed are the arrival log."""
+def test_logged_paths_read_the_file_source_log(spark, tmp_path):
+    """``logged_paths`` gives each micro-batch the paths its frame
+    holds, spelled as the ``binaryFile`` path column spells them, across
+    the compacted ``9.compact`` entry, for a name with a space and a
+    ``%``, and for a 0-byte file the frame has no row for. A batch with
+    no log entry, and a log of another version, raise."""
+    from etl_data_ingestion_spark.ingest.stream_runner import (
+        BINARY_FILE_SCHEMA,
+        logged_paths,
+    )
+
+    src = tmp_path / "landing"
+    src.mkdir()
+    names = [f"CTB_{i:02d}.tsv" for i in range(12)] + ["CTB a%b.tsv", "CTB_zero.tsv"]
+    for name in names:
+        (src / name).write_text("" if name == "CTB_zero.tsv" else "a\tb\n1\t2\n")
+    zero = f"file:{src}/CTB_zero.tsv"
+    ckpt = str(tmp_path / "ckpt")
+    batches = []
+
+    def record(batch_df, batch_id):
+        batches.append((
+            batch_id,
+            logged_paths(spark, ckpt, batch_id),
+            sorted(r.path for r in batch_df.collect()),
+        ))
+
+    q = (
+        spark.readStream.format("binaryFile").schema(BINARY_FILE_SCHEMA)
+        .option("maxFilesPerTrigger", 1).load(str(src))
+        .writeStream.foreachBatch(record)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    assert [b for b, _, _ in batches] == list(range(len(names)))
+    assert (tmp_path / "ckpt" / "sources" / "0" / "9.compact").exists()
+    assert not (tmp_path / "ckpt" / "sources" / "0" / "9").exists()
+    for _, logged, rows in batches:
+        assert len(logged) == 1
+        assert [p for p in logged if p != zero] == rows
+    assert sorted(p for _, logged, _ in batches for p in logged) == sorted(
+        f"file:{src}/{name}" for name in names
+    )
+
+    with pytest.raises(FileNotFoundError):
+        logged_paths(spark, ckpt, len(names))
+    log_dir = tmp_path / "v2" / "sources" / "0"
+    log_dir.mkdir(parents=True)
+    (log_dir / "0").write_text(
+        'v2\n{"path":"file:///x.tsv","timestamp":0,"batchId":0}\n'
+    )
+    with pytest.raises(ValueError, match="v2"):
+        logged_paths(spark, str(tmp_path / "v2"), 0)
+
+
+def test_stream_jobs_per_file_kind(spark, tmp_path, monkeypatch):
+    """Draining every file kind through the stream runs, under the
+    query's job group, the jobs the per-file policy runs and no more:
+    clean 1, row defects 2, header-only 0, unknown column 0, 0-byte 0
+    (as ``test_runner.py::test_jobs_per_file_kind``). No job runs before
+    the first file is processed: the arrival log is read on the driver."""
     from etl_data_ingestion_spark.ingest import stream_runner
     from etl_data_ingestion_spark.ingest.sinks import ParquetWarehouseSink
     from etl_data_ingestion_spark.notify import CollectingNotifier
@@ -626,34 +692,52 @@ def test_stream_arrival_log_runs_one_task(spark, tmp_path, monkeypatch):
 
     sc = spark.sparkContext
     tracker = sc.statusTracker()
+    short = "\t".join(row().split("\t")[:-1])
+    kinds = {
+        "clean": [header_line(), row(), row()],
+        "defects": [header_line(), row(), row(DEMAND_QTY="x"), short, row() + "\tv"],
+        "headeronly": [header_line()],
+        "unknown": [header_line() + "\tEXTRA COL", row() + "\tv"],
+        "zerobyte": None,
+    }
     unproc = tmp_path / "Unprocessed"
     unproc.mkdir()
-    for i in range(3):
-        (unproc / f"CTB_{i}.tsv").write_text(header_line() + "\n" + row() + "\n")
-    seen = {}
+    for kind, lines in kinds.items():
+        (unproc / f"CTB_{kind}.tsv").write_text(
+            "" if lines is None else "\n".join([*lines, ""])
+        )
+
+    group = []
+
+    def group_jobs():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(tracker.getJobIdsForGroup(group[0]))
+
+    jobs = {}
     process_file = stream_runner.process_file
 
-    def first_file_sees_jobs(*args, **kwargs):
-        if not seen:
-            sc._jsc.sc().listenerBus().waitUntilEmpty()
-            seen["group"] = sc.getLocalProperty("spark.jobGroup.id")
-            seen["jobs"] = sorted(tracker.getJobIdsForGroup(seen["group"]))
-        return process_file(*args, **kwargs)
+    def count_jobs(spark, path, *args, **kwargs):
+        if not group:
+            group.append(sc.getLocalProperty("spark.jobGroup.id"))
+            jobs["before the first file"] = len(group_jobs())
+        before = group_jobs()
+        try:
+            return process_file(spark, path, *args, **kwargs)
+        finally:
+            kind = path.rsplit("/", 1)[-1][len("CTB_"):-len(".tsv")]
+            jobs[kind] = len(group_jobs() - before)
 
-    monkeypatch.setattr(stream_runner, "process_file", first_file_sees_jobs)
+    monkeypatch.setattr(stream_runner, "process_file", count_jobs)
     report = stream_runner.run_landing_zone_stream(
         spark, str(unproc), str(tmp_path / "Archived"), str(tmp_path / "ckpt"),
         ParquetWarehouseSink(str(tmp_path / "wh")),
-        ParquetWarehouseSink(str(tmp_path / "quar")),
+        ParquetWarehouseSink(str(tmp_path / "q")),
         CollectingNotifier(),
     )
-    assert [o.state for o in report.outcomes] == ["processed"] * 3
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert seen["group"]
-    (arrival,) = seen["jobs"]
-    tasks = [
-        tracker.getStageInfo(s).numTasks for s in tracker.getJobInfo(arrival).stageIds
-    ]
-    assert tasks == [1]
-    # the arrival log plus one warehouse append per clean file
-    assert len(tracker.getJobIdsForGroup(seen["group"])) == 4
+    assert len(report.outcomes) == len(kinds)
+    assert group[0]
+    assert jobs == {
+        "before the first file": 0,
+        "clean": 1, "defects": 2, "headeronly": 0, "unknown": 0, "zerobyte": 0,
+    }
+    assert len(group_jobs()) == 3
