@@ -12,7 +12,7 @@ The Spark-first re-expression of the reference's transform/load core
             and a quarantine side-channel
 
 File-level failures (empty file, unknown column) return an
-``IngestResult`` with ``file_error`` set and empty DataFrames — the
+``IngestResult`` with ``file_error`` set and no DataFrames — the
 caller decides lifecycle disposition (→ Failed/), mirroring
 main.py:289-295 and main.py:353-364.
 
@@ -41,12 +41,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
 
-from etl_data_ingestion_spark.schema import (
-    BQ_SCHEMA_TYPES,
-    canonical_name,
-    ctb_struct_type,
-    quarantine_struct_type,
-)
+from etl_data_ingestion_spark.schema import BQ_SCHEMA_TYPES, canonical_name
 from etl_data_ingestion_spark.ingest.coerce import split_valid_quarantine
 
 CORRUPT_COL = "_corrupt_record"
@@ -57,8 +52,9 @@ _NOT_BLANK = re.compile("[^\\x00-\\x20]")
 
 @dataclass
 class IngestResult:
-    valid: DataFrame
-    quarantine: DataFrame
+    # both frames are None when the file failed (``file_error`` set)
+    valid: DataFrame | None = None
+    quarantine: DataFrame | None = None
     file_error: str | None = None
     # rows the CSV scan parsed (metric ``rows``), set once the first
     # action over ``valid`` or ``quarantine`` has run
@@ -67,14 +63,6 @@ class IngestResult:
     @property
     def ok(self) -> bool:
         return self.file_error is None
-
-
-def _empty_result(spark: SparkSession, error: str) -> IngestResult:
-    return IngestResult(
-        valid=spark.createDataFrame([], ctb_struct_type()),
-        quarantine=spark.createDataFrame([], quarantine_struct_type()),
-        file_error=error,
-    )
 
 
 def read_raw_header(spark: SparkSession, path: str) -> tuple[list[str], bool]:
@@ -116,21 +104,20 @@ def ingest_ctb_file(spark: SparkSession, path: str) -> IngestResult:
     header, has_data = read_raw_header(spark, path)
     empty = f"CTB file '{path}' is empty or has no data rows."
     if not header or header == [""]:
-        return _empty_result(spark, empty)
+        return IngestResult(file_error=empty)
 
     canonical = [canonical_name(h) for h in header]
     unknown = [c for c in canonical if c not in BQ_SCHEMA_TYPES]
     if unknown:
-        return _empty_result(
-            spark,
-            f"Headers in '{path}' do not match expected schema after "
-            f"cleaning. Unknown columns: {unknown}. "
+        return IngestResult(
+            file_error=f"Headers in '{path}' do not match expected schema "
+            f"after cleaning. Unknown columns: {unknown}. "
             f"File headers (cleaned): {canonical}",
         )
     # Header-only file: no data rows at all → file-level failure
     # (reference main.py:289-295, len(lines) < 2).
     if not has_data:
-        return _empty_result(spark, empty)
+        return IngestResult(file_error=empty)
 
     read_schema = StructType(
         [StructField(c, StringType(), nullable=True) for c in canonical]

@@ -15,7 +15,7 @@ pure so the oracle can mirror it exactly.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 
 from etl_data_ingestion_spark.catalog import load_table
 from etl_data_ingestion_spark.functions.arrays import ordered_pairs
@@ -88,18 +88,14 @@ def graph_pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_cluster_components does. Emits pr*1000 rounded so float
     summation-order epsilon stays out of the value hash.
 
-    Round-12 adjudication of the r11 verdict's 'superstep actions
-    deserve the kcore treatment': a single-checkpoint fusion
-    (persist pairs, checkpoint only norm_edges, derive pr0/n from a
-    distinct over the checkpoint, AQE gate) was built and
-    interleave-A/B'd at sf0.1 — it measured +20% SLOWER min-of-4
-    (8.26 -> 9.89s first-position; the extra |E| distinct for pr0
-    and the in-job duplication of the edges union cost more than
-    the saved job submissions, and the gate itself measured +0.3s
-    on this query). REJECTED; this is the measured-best r11 action
-    structure, kept, with the residue ledgered as FLOOR-class in
-    PLANS.md (edge build dominates; DuckDB pays ~0.9s on the same
-    CTE chain)."""
+    A single-checkpoint fusion (persist pairs, checkpoint only
+    norm_edges, derive pr0/n from a distinct over the checkpoint, AQE
+    gate) measured +20% slower min-of-4 at sf0.1 (8.26 -> 9.89s; the
+    extra |E| distinct for pr0 and the in-job duplication of the
+    edges union cost more than the saved job submissions, and the
+    gate itself cost +0.3s on this query), so the two checkpoints
+    stay; the residue is ledgered as FLOOR-class in PLANS.md (edge
+    build dominates; DuckDB pays ~0.9s on the same CTE chain)."""
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     # Numeric node ids through the whole iteration (customers as-is,
@@ -139,11 +135,10 @@ def graph_pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     pr = outw.select("src", (F.lit(1.0) / n_nodes).alias("pr")).withColumnRenamed(
         "src", "node"
     )
-    # empty graph (empty-corpus sweep, round 14): every relation in
-    # the superstep chain is already 0 rows, so the result is the
-    # oracle's empty set — only this driver-side literal would
-    # divide by zero. Populated plans are bit-identical (base is the
-    # same literal whenever n_nodes > 0).
+    # empty graph: every relation in the superstep chain is already
+    # 0 rows, so the result is the oracle's empty set — only this
+    # driver-side literal would divide by zero. Populated plans are
+    # bit-identical (base is the same literal whenever n_nodes > 0).
     base = 0.15 / n_nodes if n_nodes else 0.0
     for _ in range(3):
         contribs = (
@@ -235,18 +230,31 @@ def edge_build(spark: SparkSession, sf_dir: str):
     """The supplier co-purchase graph every wedge query runs on,
     returned as (pairs, und, deg):
 
-    - pairs (u < v): supplier pairs whose shared-customer count is at
-      or above the exact p90 order statistic of all pair counts
-      (engine-identical and scale-free, where a fixed count threshold
-      degenerates to a complete or empty graph as sf moves). The
-      pairs explode in-row from each posting list; pairs is
-      localCheckpointed because every caller reads it more than once.
-    - und: both orientations of pairs.
-    - deg: (n, d) node degrees.
+    - pairs (u, v, du, dv) with u < v: each edge once, with the
+      degrees of both endpoints on the row;
+    - und (u, v, du, dv): both orientations;
+    - deg (n, d): node degrees, one row per node.
 
-    This is the only fact-sized work of the wedge queries; all that
-    follows runs on the |E|-sized edge list. graph2.EDGE_BUILD_SQL
-    is the oracle form."""
+    The edges are the supplier pairs whose shared-customer count is at
+    or above the exact p90 order statistic of all pair counts
+    (engine-identical and scale-free, where a fixed count threshold
+    degenerates to a complete or empty graph as sf moves). The pairs
+    explode in-row from each posting list and are counted by a
+    distributed (u, v) aggregation; that and the posting lists are the
+    only fact-sized work.
+
+    Nodes are suppliers with l_suppkey < 1000, so there are at most
+    999 nodes and C(999, 2) = 498,501 pairs at every sf. That bound
+    lets one Exchange SinglePartition above the (u, v) count carry the
+    rest: the cut is a window keyed on the partition id, which the
+    single partition satisfies, both orientations explode in-row,
+    and the degree windows partitioned by u and by v add no exchange.
+    One row per node is marked (its smallest neighbour) for deg. The
+    adjacency is localCheckpointed once, as one partition of at most
+    2 * 498,501 rows; pairs, und and deg are narrow projections of
+    it, and callers plan their joins against these node- and
+    edge-bounded tables as broadcasts. graph2.EDGE_BUILD_SQL is the
+    oracle form."""
     allpairs = (
         posting_lists(spark, sf_dir)
         .select(F.explode(ordered_pairs("ss", "u", "v")).alias("p"))
@@ -254,22 +262,40 @@ def edge_build(spark: SparkSession, sf_dir: str):
         .groupBy("u", "v")
         .agg(F.count(F.lit(1)).alias("shared"))
     )
-    # 1-row aggregate broadcast onto the pair table
-    cut = allpairs.agg(
-        F.expr("percentile_disc(0.90) WITHIN GROUP (ORDER BY shared)").alias(
-            "thr"
+    by_u, by_v = Window.partitionBy("u"), Window.partitionBy("v")
+    # After repartition(1) the partition id is one key for every row.
+    # A literal key would be optimized away, and a window with no key
+    # logs Spark's "No Partition Defined" warning on every build.
+    whole = Window.partitionBy(F.spark_partition_id())
+    adj = (
+        allpairs.repartition(1)
+        .withColumn(
+            "thr",
+            F.expr("percentile_disc(0.90) WITHIN GROUP (ORDER BY shared)")
+            .over(whole),
         )
-    )
-    pairs = (
-        allpairs.crossJoin(F.broadcast(cut))
         .filter(F.col("shared") >= F.col("thr"))
-        .select("u", "v")
+        .select(
+            F.explode(
+                F.array(
+                    F.struct("u", "v"),
+                    F.struct(F.col("v").alias("u"), F.col("u").alias("v")),
+                )
+            ).alias("e")
+        )
+        .select("e.u", "e.v")
+        .select(
+            "u",
+            "v",
+            F.count(F.lit(1)).over(by_u).alias("du"),
+            F.count(F.lit(1)).over(by_v).alias("dv"),
+            (F.col("v") == F.min("v").over(by_u)).alias("first"),
+        )
         .localCheckpoint()
     )
-    und = pairs.unionByName(
-        pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    deg = und.groupBy(F.col("u").alias("n")).agg(F.count(F.lit(1)).alias("d"))
+    und = adj.select("u", "v", "du", "dv")
+    pairs = und.filter(F.col("u") < F.col("v"))
+    deg = adj.filter("first").select(F.col("u").alias("n"), F.col("du").alias("d"))
     return pairs, und, deg
 
 
@@ -337,27 +363,20 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulation that survives power-law graphs at scale. The only
     fact-sized work is edge_build (one posting-list aggregation + one
     pair-count aggregate; TRIANGLE_ORACLE states it as the DISTINCT +
-    ROW_NUMBER cap + self-join chain). Orientation, wedges and
-    closure checks run on the |E|-sized edge list, and the oriented
-    list is checkpointed once for its three consumers."""
+    ROW_NUMBER cap + self-join chain). Scale shape: at most 999 nodes
+    and 498,501 edges at any sf; each edge row carries both endpoint
+    degrees, so the oriented list is a narrow projection of the
+    edge_build checkpoint: its three readers (the wedge and closure
+    joins) re-derive it with no degree join and no checkpoint of its
+    own."""
     pairs, und, deg = edge_build(spark, sf_dir)
-    e = (
-        pairs.join(
-            F.broadcast(deg.select(F.col("n").alias("u"), F.col("d").alias("du"))),
-            "u",
-        )
-        .join(
-            F.broadcast(deg.select(F.col("n").alias("v"), F.col("d").alias("dv"))),
-            "v",
-        )
-    )
     lower_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    oriented = e.select(
+    oriented = pairs.select(
         F.when(lower_first, F.col("u")).otherwise(F.col("v")).alias("a"),
         F.when(lower_first, F.col("v")).otherwise(F.col("u")).alias("b"),
-    ).localCheckpoint()
+    )
     e1 = oriented.alias("e1")
     e2 = oriented.alias("e2")
     e3 = oriented.alias("e3")
@@ -434,13 +453,16 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same bounded edge build as graph_triangle_count (posting-list
     cap + p90 order-statistic cut), wedge aggregation through the
     shared endpoint, anti-join against existing edges, top-10 with
-    full tie-break. All post-edge-build work is |E|-sized."""
+    full tie-break. Scale shape: at most 999 nodes and 498,501 edges
+    at any sf, so the wedge's build side and the anti-join's edge
+    list are planned as broadcasts; the (a, b) aggregation is the
+    one shuffle after the edge build."""
     pairs, und, _deg = edge_build(spark, sf_dir)
     e1 = und.alias("e1")
     e2 = und.alias("e2")
     wedges = (
         e1.join(
-            e2,
+            F.broadcast(e2),
             (F.col("e1.u") == F.col("e2.u"))
             & (F.col("e1.v") < F.col("e2.v")),
         )
@@ -448,7 +470,7 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("common"))
     )
     unlinked = wedges.join(
-        pairs,
+        F.broadcast(pairs.select("u", "v")),
         (F.col("u") == F.col("wa")) & (F.col("v") == F.col("wb")),
         "left_anti",
     )
@@ -577,24 +599,21 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineage short (an open-ended peel would localCheckpoint per
     round, as dedup.connected_components does).
 
-    Action count (round-10 rewrite, r9 verdict #3): the previous
-    form ran 8 driver-side .count() actions (two per round) + 4
-    persists to fill a 4-row result. Now each round derives BOTH its
-    counts (n_active x n_edges) in ONE job via a crossJoin of two
-    1-row aggregates over the persisted level — 4 logical actions
-    total. A fully-lazy union of all four count rows was measured
-    FIRST and rejected: without per-level persists AQE re-plans each
-    branch independently and re-materializes every upstream peel
-    stage per branch (494 jobs, 39.5s at sf0.1 vs 9.0s for the
-    8-action form — tools/floor_decompose.py), so the per-level
-    persist is load-bearing, not optional."""
+    Action count: each level derives both its counts (n_active x
+    n_edges) as a crossJoin of two 1-row aggregates over the
+    persisted level, and the four count rows are materialized by one
+    persist+count of their union. The per-level persist is
+    load-bearing: without it AQE re-plans each union branch
+    independently and re-materializes every upstream peel stage per
+    branch (494 jobs, 39.5s at sf0.1 against 9.0s —
+    tools/floor_decompose.py)."""
     # AQE gate (measured, tools/floor_decompose.py at sf0.1): the
     # peel rounds run shrinking node-domain aggregates where AQE's
     # per-stage materialization is pure overhead (min-of-3 ~7.6s
-    # with AQE vs ~4.8s without; ~50 stage-jobs vs ~12). Shared
-    # device since round 11: catalog.small_fact_aqe_gate (the same
-    # measured gate now also carries ml_item_item_cf); the toggle
-    # precedes the first persist() and the collect runs inside it.
+    # with AQE vs ~4.8s without; ~50 stage-jobs vs ~12). The shared
+    # device is catalog.small_fact_aqe_gate (the same measured gate
+    # carries ml_item_item_cf); the toggle precedes the first
+    # persist() and the collect runs inside it.
     from etl_data_ingestion_spark.catalog import small_fact_aqe_gate
 
     with small_fact_aqe_gate(spark, sf_dir, "lineitem"):
@@ -629,16 +648,12 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
 
-        # Round-11 fusion (r10 verdict #5): the four per-level count
-        # actions collapse into ONE collect over their union. The
-        # per-level persist() calls stay — they are what the r10
-        # lazy-union experiment showed to be load-bearing (without
-        # them AQE re-materialized every upstream peel stage per
-        # branch: 494 jobs, 39.5s) — and because every union branch
-        # references the SAME persisted DataFrame objects, the single
-        # job shares their shuffle/cache stages instead of
-        # recomputing them. Collected inside the gate so the whole
-        # peel executes under the measured AQE-off plan.
+        # The four per-level count rows are materialized together
+        # from their union. Every union branch references the SAME
+        # persisted DataFrame objects, so the branches share their
+        # shuffle/cache stages instead of recomputing them.
+        # Materialized inside the gate so the whole peel executes
+        # under the measured AQE-off plan.
         e = edges
         d = degrees(e)
         parts = [count_row(0, d.select("n"), e)]
@@ -711,8 +726,8 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (r>0) or to leaves (r<0), which predicts whether per-node joins
     will see correlated or anti-correlated skew.
 
-    Scale shape (round-12 algebraic rewrite of the oriented-union
-    form — same exact integers, so the oracle is UNCHANGED): over
+    Scale shape (an algebraic form of the oracle's oriented union,
+    with the same exact integers): over
     the oriented endpoint list, sum(j) = sum_n d^2, sum(j^2) =
     sum_n d^3, and the pair count n2 = sum_n d = 2m — three of the
     five moments (and both symmetric twins) collapse onto the
@@ -720,9 +735,9 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum(j*k) = 2 * sum_edges d_u*d_v still touches edges: one pass
     over the persisted edge list with the degree table
     broadcast-joined on both endpoints (deg is dim-domain here —
-    customers + suppliers). That removes the r11 form's two shuffle
-    joins, the 2|E|-row oriented union pass, and its persist. Edge
-    dedup remains the only corpus-sized Exchange. Degree moments
+    customers + suppliers), with no shuffle join and no 2|E|-row
+    oriented union pass. Edge dedup is the only corpus-sized
+    Exchange. Degree moments
     stay exact in int64 to d^3 ~ 2^63/|V| (the oracle's SUM(j*j)
     over pairs is the same Σd^3, so the bound is the estimator's,
     not this route's); beyond that the moments move to the
@@ -778,9 +793,8 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = (
             degm.crossJoin(F.broadcast(sjk))
             .select(
-                # coalesce: sum(d) over the 0-row degree table is NULL
-                # where the oracle's count is 0 (empty-corpus sweep,
-                # round 14)
+                # coalesce: sum(d) over the 0-row degree table of an
+                # empty corpus is NULL where the oracle's count is 0
                 F.coalesce((n2 / 2).cast("long"), F.lit(0)).alias(
                     "n_edges"
                 ),
@@ -846,22 +860,20 @@ def graph_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     real community structure before anything downstream trusts the
     label (Q near 0: nation-blind wiring; Q >> 0: real clustering).
 
-    Plan (round-12: contingency-table fusion): the edge build keeps
-    the r11 per-order self-join — bounded (<= 7 lines/order -> <= 21
-    pairs), DISTINCT shuffles 16-byte pairs with map-side partial
-    dedup, and at this input size AQE runtime-converts it to a
-    broadcast join with NO fact shuffle (a basket-pair
-    collect_set/HOF variant was built and interleave-A/B'd: +34%
-    at sf0.1, min-of-4 — the basket groupBy forces the fact
-    Exchange AQE avoids; measured and REJECTED, ledgered in
-    PLANS.md). What DID change: after the community labels
-    broadcast-join from the supplier dim, the WHOLE rest of the
-    query collapses onto the |nations|^2-row (c1,c2) contingency
-    table in one tiny groupBy — m and intra are sums over it, the
-    per-community degree rollup reads it twice (domain-sized), and
-    Q is one exact-integer formula on a single row — where the r11
-    form made three separate passes over the persisted |E|-row edge
-    list. Integer bound unchanged: sum(d_c^2) <= 4m^2 overflows
+    Plan (contingency-table fusion): the edge build is the per-order
+    self-join — bounded (<= 7 lines/order -> <= 21 pairs), DISTINCT
+    shuffles 16-byte pairs with map-side partial dedup, and at this
+    input size AQE runtime-converts it to a broadcast join with NO
+    fact shuffle (a basket-pair collect_set/HOF variant measured
+    +34% at sf0.1, min-of-4 — the basket groupBy forces the fact
+    Exchange AQE avoids; rejected, ledgered in PLANS.md). After the
+    community labels broadcast-join from the supplier dim, the WHOLE
+    rest of the query collapses onto the |nations|^2-row (c1,c2)
+    contingency table in one tiny groupBy — m and intra are sums
+    over it, the per-community degree rollup reads it twice
+    (domain-sized), and Q is one exact-integer formula on a single
+    row; no pass runs over an |E|-row edge list after the build.
+    Integer bound: sum(d_c^2) <= 4m^2 overflows
     int64 past m ~ 1.5e9 edges — the 4.0* float promotion below
     (mirrored in both engines) is exact to 2^53 and documented past
     that."""
@@ -925,9 +937,9 @@ def graph_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     mm, intra = F.col("m"), F.col("intra")
     q = (4.0 * mm * intra - F.col("sum_dc2")) / (4.0 * mm * mm)
     return m.crossJoin(F.broadcast(sq)).select(
-        # coalesce: sum(cnt) over the 0-row pair-count relation is
-        # NULL where the oracle's count is 0; intra stays NULL to
-        # match the oracle (empty-corpus sweep, round 14)
+        # coalesce: sum(cnt) over the 0-row pair-count relation of an
+        # empty corpus is NULL where the oracle's count is 0; intra
+        # stays NULL to match the oracle
         F.coalesce(mm.cast("long"), F.lit(0)).alias("n_edges"),
         intra.cast("long").alias("intra_edges"),
         F.col("n_communities"),
@@ -997,17 +1009,14 @@ def graph_rich_club_coefficient(
     rescanning edges. At 100 TB the DISTINCT on pairs is the only
     exchange that grows; phi itself is domain math.
 
-    Round-12 adjudication note: a basket-pair (collect_set + HOF
-    expansion, the item_cf device) edge build was built and
-    interleave-A/B'd — a -4% wash at sf0.1 but +74% SLOWER at sf1
+    A basket-pair (collect_set + HOF expansion, the item_cf device)
+    edge build measured a -4% wash at sf0.1 but +74% slower at sf1
     (1.32 vs 2.30s min-of-4 on the isolated pair build): for a
     DISTINCT-pair build the self-join lets AQE pick the physical
     join while collect_set always pays an array-aggregation corpus
     shuffle. item_cf's basket win is for pair COUNTING (it replaces
-    the pair groupBy, not a distinct) — device selection is
-    workload-specific.
-    REJECTED, r11 form kept; AQE-gate variant also a wash, not
-    kept."""
+    the pair groupBy, not a distinct). So the self-join stays; an
+    AQE-gate variant was also a wash."""
     from etl_data_ingestion_spark.functions.numeric import snap
 
     li = load_table(spark, sf_dir, "lineitem", parallel=False).select(

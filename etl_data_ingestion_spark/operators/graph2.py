@@ -5,10 +5,14 @@ support.
 
 The graph comes from graph.edge_build, the edge build shared with
 graph_triangle_count and graph_link_prediction (capped per-customer
-posting lists, in-row pair explode, exact p90 cut); HITS reads the
-posting lists themselves through graph.posting_lists. That build is
-the ONLY fact-sized work; every algorithm below runs on the |E|-sized
-edge list. The oracles state it as EDGE_BUILD_SQL.
+posting lists, in-row pair explode, exact p90 cut, both endpoint
+degrees on every edge row); HITS reads the posting lists themselves
+through graph.posting_lists. That build is the ONLY fact-sized work.
+Its nodes are suppliers with l_suppkey < 1000, so the graph has at
+most 999 nodes and C(999, 2) = 498,501 edges at every sf: the build
+runs its cut and degrees in one partition, and the algorithms below
+plan their joins against its node- and edge-bounded tables as
+broadcasts. The oracles state the build as EDGE_BUILD_SQL.
 
 Exactness discipline: clustering/LPA are pure integer math; the two
 score-accumulating algorithms (Adamic-Adar, HITS) pre-snap each term
@@ -28,7 +32,10 @@ from etl_data_ingestion_spark.plans.registry import register
 # The oracle form of graph.edge_build, shared as the prefix of the
 # oracles below: cs0/cs state graph.posting_lists as DISTINCT + a
 # ROW_NUMBER cap, allpairs states the in-row pair explode as a
-# self-join, then the p90 cut, und and deg as edge_build returns them.
+# self-join, then the p90 cut, und and deg. edge_build computes the
+# same cut and degrees as windows over one partition (at most
+# C(999, 2) = 498,501 pairs, suppliers with l_suppkey < 1000) and
+# carries du/dv on each edge row; the oracles join deg instead.
 EDGE_BUILD_SQL = """
 WITH cs0 AS (
   SELECT DISTINCT o.o_custkey AS c, l.l_suppkey AS s
@@ -96,22 +103,20 @@ def graph_local_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph_triangle_count — each triangle credits its three corners.
     How clustered is each supplier's neighborhood (the homophily /
     community-structure diagnostic under the modularity operator)?
-    Pure integer math plus one final division per node."""
+    Pure integer math plus one final division per node. Scale shape:
+    at most 999 nodes and 498,501 edges at any sf; orientation reads
+    both degrees off the edge row, so the oriented list is a narrow
+    projection of the edge_build checkpoint that the wedge and
+    closure joins re-derive (no degree join, no checkpoint of its
+    own)."""
     pairs, und, deg = graph.edge_build(spark, sf_dir)
-    e = pairs.join(
-        F.broadcast(deg.select(F.col("n").alias("u"), F.col("d").alias("du"))),
-        "u",
-    ).join(
-        F.broadcast(deg.select(F.col("n").alias("v"), F.col("d").alias("dv"))),
-        "v",
-    )
     lower_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    oriented = e.select(
+    oriented = pairs.select(
         F.when(lower_first, F.col("u")).otherwise(F.col("v")).alias("a"),
         F.when(lower_first, F.col("v")).otherwise(F.col("u")).alias("b"),
-    ).localCheckpoint()
+    )
     e1, e2, e3 = oriented.alias("e1"), oriented.alias("e2"), oriented.alias("e3")
     tri = (
         e1.join(e2, F.col("e2.a") == F.col("e1.b"))
@@ -187,23 +192,29 @@ def graph_adamic_adar_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum(1/ln(deg(w))) over shared neighbors w — the rare-neighbor
     weighting that beats the raw common-neighbor count
     (graph_link_prediction) on hubby graphs. Wedge aggregation
-    through the shared endpoint (|E|-sized per the bounded build),
-    anti-join against existing edges, exact-integer score sums
-    (terms pre-snapped at 1e-9), top-10 with full tie-break."""
-    pairs, und, deg = graph.edge_build(spark, sf_dir)
+    through the shared endpoint, anti-join against existing edges,
+    exact-integer score sums (terms pre-snapped at 1e-9), top-10 with
+    full tie-break. Scale shape: at most 999 nodes and 498,501 edges
+    at any sf, so the wedge's build side and the anti-join's edge
+    list are planned as broadcasts, and deg(w) is the du already on
+    the edge row: no degree join, and the (x, y) aggregation is the
+    one shuffle after the edge build."""
+    pairs, und, _deg = graph.edge_build(spark, sf_dir)
     a, b = und.alias("a"), und.alias("b")
+    # wedges x - w - y through the shared endpoint w = u; d = deg(w)
+    # rides on the edge row
     wedge = a.join(
-        b, (F.col("a.v") == F.col("b.v")) & (F.col("a.u") < F.col("b.u"))
+        F.broadcast(b),
+        (F.col("a.u") == F.col("b.u")) & (F.col("a.v") < F.col("b.v")),
     ).select(
-        F.col("a.u").alias("x"), F.col("b.u").alias("y"), F.col("a.v").alias("w")
+        F.col("a.v").alias("x"), F.col("b.v").alias("y"), F.col("a.du").alias("d")
     )
     term = F.floor(
         1000000000.0 / F.log(F.col("d")) + F.lit(0.5)
     ).cast("long")
     aa = (
-        wedge.join(F.broadcast(deg.select(F.col("n").alias("w"), "d")), "w")
-        .join(
-            pairs.select(F.col("u").alias("x"), F.col("v").alias("y")),
+        wedge.join(
+            F.broadcast(pairs.select(F.col("u").alias("x"), F.col("v").alias("y"))),
             ["x", "y"],
             "left_anti",
         )
@@ -269,13 +280,15 @@ def graph_label_propagation_2round(spark: SparkSession, sf_dir: str) -> DataFram
     modularity scorer. Fixed unrolled rounds, exact integer counts,
     total-order tie-breaks: no randomness, no oscillation, identical
     in both engines. Per round: one join keyed on the node id + one
-    (node, label) aggregation — |E|-sized, AQE-coalesced."""
-    pairs, und, deg = graph.edge_build(spark, sf_dir)
+    (node, label) aggregation. Scale shape: the labels are one row
+    per node (at most 999 at any sf), so each round's join is planned
+    as a broadcast and the aggregation is its only shuffle."""
+    _pairs, und, deg = graph.edge_build(spark, sf_dir)
     labels = deg.select("n", F.col("n").alias("lab"))
     for _round in range(2):
         votes = (
             und.join(
-                labels.select(F.col("n").alias("v"), "lab"), "v"
+                F.broadcast(labels.select(F.col("n").alias("v"), "lab")), "v"
             )
             .groupBy(F.col("u").alias("n"), "lab")
             .agg(F.count(F.lit(1)).alias("c"))
@@ -441,34 +454,23 @@ def graph_ktruss_edge_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-core (graph_kcore_peel peels NODES by degree; the truss peels
     EDGES by triangle membership).
 
-    Scale shape: same bounded edge build + degree-ordered oriented
-    wedge join as graph_triangle_count (the O(|E|^1.5)-bounded
-    enumeration); each triangle re-emits its THREE undirected edges
-    (a projection union, no join), support is one edge-keyed count,
-    and the histogram is an |support-domain|-sized rollup. Pure
-    integer math end to end."""
+    Scale shape: same bounded edge build (at most 999 nodes and
+    498,501 edges at any sf; both degrees on the edge row, so the
+    oriented list is a narrow projection with no join or checkpoint
+    of its own) and degree-ordered oriented wedge join as
+    graph_triangle_count (the
+    O(|E|^1.5)-bounded enumeration); each triangle re-emits its THREE
+    undirected edges (a projection union, no join), support is one
+    edge-keyed count, and the histogram is an |support-domain|-sized
+    rollup. Pure integer math end to end."""
     pairs, und, deg = graph.edge_build(spark, sf_dir)
-    e = (
-        pairs.join(
-            F.broadcast(
-                deg.select(F.col("n").alias("u"), F.col("d").alias("du"))
-            ),
-            "u",
-        )
-        .join(
-            F.broadcast(
-                deg.select(F.col("n").alias("v"), F.col("d").alias("dv"))
-            ),
-            "v",
-        )
-    )
     lower_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    oriented = e.select(
+    oriented = pairs.select(
         F.when(lower_first, F.col("u")).otherwise(F.col("v")).alias("a"),
         F.when(lower_first, F.col("v")).otherwise(F.col("u")).alias("b"),
-    ).localCheckpoint()
+    )
     e1, e2, e3 = oriented.alias("e1"), oriented.alias("e2"), oriented.alias("e3")
     tri = (
         e1.join(e2, F.col("e2.a") == F.col("e1.b"))

@@ -182,6 +182,7 @@ def ingest_ctb_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from etl_data_ingestion_spark.ingest.pipeline import ingest_ctb_file
     from etl_data_ingestion_spark.operators.sources_scan import _scratch
+    from etl_data_ingestion_spark.schema import ctb_struct_type
 
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
     # limit BEFORE collect: the fixture must stay email-attachment-
@@ -201,8 +202,11 @@ def ingest_ctb_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
         f.write("\r\n".join(lines) + "\r\n")
 
     res = ingest_ctb_file(spark, path)
+    # an empty customer table lands a header-only file, which fails as
+    # a file and carries no frames: no valid rows
+    valid = res.valid if res.ok else spark.createDataFrame([], ctb_struct_type())
     return (
-        res.valid.select(
+        valid.select(
             F.col("MASTER_CUST_NAME").alias("master_cust_name"),
             F.col("CUSTOMER_NUMBER").alias("customer_number"),
             F.col("DEMAND_QTY").alias("demand_qty"),

@@ -10,7 +10,6 @@ no inference, unknown columns fail the whole file.
 from __future__ import annotations
 
 from pyspark.sql.types import (
-    ArrayType,
     DateType,
     LongType,
     StringType,
@@ -114,18 +113,5 @@ def ctb_struct_type() -> StructType:
         [
             StructField(name, _SPARK_TYPE[typ], nullable=True)
             for name, typ in BQ_SCHEMA_TYPES.items()
-        ]
-    )
-
-
-def quarantine_struct_type() -> StructType:
-    """Schema of the quarantine side-channel: the raw row (all-string
-    columns) plus the accumulated error reasons."""
-    return StructType(
-        [StructField(name, StringType(), nullable=True) for name in BQ_SCHEMA_TYPES]
-        + [
-            StructField("_raw", StringType(), nullable=True),
-            StructField("_errors", ArrayType(StringType()), nullable=False),
-            StructField("_source_file", StringType(), nullable=True),
         ]
     )

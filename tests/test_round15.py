@@ -4,6 +4,8 @@ physical form so a refactor can't silently regress it)."""
 
 from __future__ import annotations
 
+import re
+
 import pyspark.sql.functions as F
 
 from etl_data_ingestion_spark.plans import registry as reg
@@ -127,7 +129,10 @@ def test_wedge_edge_build_is_one_aggregation(spark, sf_dir, monkeypatch):
     orders-lineitem join — no row_number cap window, no cs self-join.
     Pinned on graph.posting_lists itself and on the subplan
     graph.edge_build checkpoints (the registered queries' plans start
-    at that localCheckpoint, which hides the edge build)."""
+    at that localCheckpoint, which hides the edge build). Above the
+    (u, v) pair count, one Exchange SinglePartition carries the p90
+    cut and both degree windows: no broadcast or cartesian cut, and
+    no further exchange."""
     from etl_data_ingestion_spark.operators import graph
 
     plan = graph.posting_lists(spark, sf_dir)._jdf.queryExecution() \
@@ -153,13 +158,27 @@ def test_wedge_edge_build_is_one_aggregation(spark, sf_dir, monkeypatch):
     assert len(checkpointed) == 1, len(checkpointed)
     (plan,) = checkpointed
     assert "row_number" not in plan, plan[:3000]
-    assert "Window" not in plan, plan[:3000]
-    # the p90 cut re-reads the pair counts, so the subtree appears
-    # twice; in each copy the fact join is the only equi-join, under
-    # one collect_set aggregation
-    n_aggs = plan.count("functions=[collect_set(")
-    assert n_aggs >= 1, plan[:3000]
-    assert _plan_joins(plan) == n_aggs, plan[:3000]
+    # the plan prints top-down: what follows an operator is below it
+    agg = plan.index("functions=[collect_set(")
+    assert "Window" not in plan[agg:], plan[:3000]
+    count = re.search(
+        r"HashAggregate\(keys=\[u#\d+L?, v#\d+L?\], functions=\[count\(1\)\]",
+        plan,
+    )
+    assert count, plan[:3000]
+    above = plan[: count.start()]
+    assert plan.count("Exchange SinglePartition") == 1, plan[:3000]
+    assert "Exchange SinglePartition" in above, plan[:3000]
+    assert above.count("Exchange") == 1, plan[:3000]
+    (cut,) = [line for line in above.splitlines() if "percentile_disc" in line]
+    # a keyed window: a window with no key logs "No Partition Defined"
+    assert "windowspecdefinition(specifiedwindowframe" not in cut, cut
+    for bad in ("BroadcastExchange", "BroadcastNestedLoopJoin",
+                "CartesianProduct"):
+        assert bad not in above, (bad, plan[:3000])
+    # the fact join is the only equi-join
+    assert plan.count("functions=[collect_set(") == 1, plan[:3000]
+    assert _plan_joins(plan) == 1, plan[:3000]
 
 
 WEDGE_QUERIES = {
@@ -198,6 +217,42 @@ def test_wedge_queries_use_the_shared_edge_build(spark, sf_dir, monkeypatch):
             else ["posting_lists"]
         )
         assert calls == expected, (query, calls)
+
+
+# Spark jobs per run at sf0.001 (second run, so first-read jobs are
+# not counted). Five of each run in edge_build: the orders broadcast,
+# the posting-list and pair-count shuffles, the single-partition
+# exchange and the checkpoint.
+WEDGE_JOBS = {
+    "graph_triangle_count": 16,
+    "graph_link_prediction": 9,
+    "graph_local_clustering_coeff": 16,
+    "graph_adamic_adar_topk": 9,
+    "graph_label_propagation_2round": 15,
+    "graph_ktruss_edge_support": 17,
+}
+
+
+def test_wedge_jobs_per_query(spark, sf_dir):
+    """Each edge_build caller runs a fixed number of Spark jobs, counted
+    under a job group: an eager job that slips into the edge build or a
+    caller, or a planned broadcast that turns back into a shuffle join,
+    changes a count and fails here."""
+    sc = spark.sparkContext
+    jobs = {}
+    for query in WEDGE_JOBS:
+        reg.QUERIES[query](spark, sf_dir).collect()
+        spark.catalog.clearCache()
+        group = f"wedge_jobs_{query}"
+        sc.setJobGroup(group, group)
+        try:
+            reg.QUERIES[query](spark, sf_dir).collect()
+        finally:
+            sc.setJobGroup(None, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs[query] = len(sc.statusTracker().getJobIdsForGroup(group))
+        spark.catalog.clearCache()
+    assert jobs == WEDGE_JOBS
 
 
 KMEANS_QUERIES = {
