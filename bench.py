@@ -19,13 +19,13 @@ import json
 import os
 import re
 import sys
-import threading
 import time
 from typing import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from etl_data_ingestion_spark.plans import registry
+from etl_data_ingestion_spark.plans.parity import duckdb_run, duckdb_views
 from etl_data_ingestion_spark.session import DEFAULT_CPUS, get_spark
 
 # Representative spread: scan-agg, selective join+topk, multi-join,
@@ -458,45 +458,6 @@ def warm_up(spark, sf_dir: str, cpus: int) -> None:
     spark.range(0, cpus, 1, cpus).select(ones("id")).write.mode(
         "overwrite"
     ).format("noop").save()
-
-
-def duckdb_views(sf_dir: str, cpus: int | None = None):
-    """A DuckDB connection with one view per catalog table over the
-    parquet in ``sf_dir``; ``threads=cpus`` when given."""
-    import duckdb
-
-    from etl_data_ingestion_spark.catalog import TABLES, table_path
-
-    con = duckdb.connect()
-    if cpus:
-        con.execute(f"SET threads={cpus}")
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(sf_dir, t)}')"
-        )
-    return con
-
-
-def duckdb_run(con, sql: str, fetch: str = "fetchall"):
-    """Run ``sql`` to completion (``fetch`` forces materialization) and
-    return (seconds, result), or None if it is still running after
-    $SPARK_GRAFT_ORACLE_TIMEOUT seconds (default 180) and was
-    interrupted: brute-force ground-truth oracles are superlinear
-    (all-pairs Jaccard is O(docs²)) and stop terminating at the
-    scale-curve sfs long before the Spark side does."""
-    import duckdb
-
-    budget = float(os.environ.get("SPARK_GRAFT_ORACLE_TIMEOUT", "180"))
-    timer = threading.Timer(budget, con.interrupt)
-    timer.start()
-    t0 = time.perf_counter()
-    try:
-        out = getattr(con.execute(sql), fetch)()
-        return time.perf_counter() - t0, out
-    except duckdb.InterruptException:
-        return None
-    finally:
-        timer.cancel()
 
 
 def time_oracles(

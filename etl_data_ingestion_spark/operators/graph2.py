@@ -507,12 +507,14 @@ def graph_ktruss_edge_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     es = pairs.join(sup, ["u", "v"], "left").select(
         F.coalesce(F.col("s"), F.lit(0)).alias("support")
     )
+    # keyed on the partition id over one partition, like edge_build's
+    # cut: a window with no key logs "No Partition Defined" every run
     hist = es.groupBy("support").agg(
         F.count(F.lit(1)).cast("long").alias("n_edges")
-    )
-    w_desc = Window.orderBy(F.col("support").desc()).rangeBetween(
-        Window.unboundedPreceding, 0
-    )
+    ).repartition(1)
+    w_desc = Window.partitionBy(F.spark_partition_id()).orderBy(
+        F.col("support").desc()
+    ).rangeBetween(Window.unboundedPreceding, 0)
     return hist.select(
         F.col("support").cast("long").alias("support"),
         "n_edges",

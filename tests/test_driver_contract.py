@@ -21,7 +21,7 @@ import json
 import sys
 
 repo, sf_dir, names = sys.argv[1], sys.argv[2], sys.argv[3:]
-sys.path[:0] = [repo, repo + "/tools"]
+sys.path.insert(0, repo)
 
 from pyspark.sql import SparkSession
 
@@ -29,21 +29,16 @@ spark = SparkSession.builder.master("local[2]").getOrCreate()
 spark.sparkContext.setLogLevel("ERROR")
 
 import __spark_entry__ as E
-import bench
-from check_parity import canon_frame
+from etl_data_ingestion_spark.plans import parity
 
 qs, oracles = E.queries(), E.oracle_sql()
-con = bench.duckdb_views(sf_dir)
+con = parity.duckdb_views(sf_dir)
 out = {}
 for name in names:
     df = qs[name](spark, sf_dir)
-    got = df.toPandas()
-    ran = bench.duckdb_run(con, oracles[name], fetch="fetchdf")
-    want = ran[1] if ran else None
+    ran = parity.duckdb_run(con, oracles[name], fetch="fetchdf")
     out[name] = {
-        "columns": sorted(got.columns) == sorted(want.columns) if ran else None,
-        "values": canon_frame(got) == canon_frame(want) if ran else None,
-        "rows": len(got),
+        "mismatch": parity.compare(df.toPandas(), ran[1]) if ran else "oracle timed out",
         "plan": df._jdf.queryExecution().executedPlan().toString(),
         "aqe": spark.conf.get("spark.sql.adaptive.enabled"),
     }
@@ -64,8 +59,7 @@ def test_vanilla_session_fans_out_and_matches_oracles(sf_dir, tmp_path):
     assert proc.returncode == 0, proc.stderr[-4000:]
     out = json.loads(proc.stdout.strip().splitlines()[-1])
     for name in names:
-        assert out[name]["columns"] is True, name
-        assert out[name]["values"] is True, name
+        assert out[name]["mismatch"] is None, (name, out[name]["mismatch"])
     for name in FANNED:
         assert "RoundRobinPartitioning" in out[name]["plan"], name
     assert out[GATED]["aqe"] == "true"

@@ -1,11 +1,10 @@
-"""Empty-corpus robustness contracts (round 14).
+"""Empty-corpus robustness contracts.
 
-The r13 advisor's threshold-curve finding exposed a bug class that
-only fires when a whole intermediate relation is empty — invisible
-to every populated fixture. tools/check_empty.py sweeps the full
-registry against 0-row base tables; this file pins the CONTRACTS the
-sweep established so a future plan change cannot silently regress
-them:
+Some bugs fire only when a whole intermediate relation is empty, which
+no populated fixture exercises: the threshold-curve aggregates once
+returned NULL where the oracle emits 0. tools/check_empty.py sweeps the
+full registry against 0-row base tables; this file pins the CONTRACTS
+that sweep holds, so a plan change cannot silently regress them:
 
   1. summary queries emit the oracle's zero/NULL summary row (not
      zero rows, not NULL-where-0);
@@ -17,8 +16,9 @@ them:
   5. the engine-semantic ROLLUP/CUBE divergence the README documents
      (Spark emits no grand-total row over empty input; the SQL
      standard and DuckDB emit one) stays what the docs claim — if
-     Spark ever changes this, the pin flips and the README note must
-     be retired.
+     Spark ever changes this, the pin flips, and the README note and
+     tools/check_empty.py's ENGINE_SEMANTIC_DIVERGENCES must be
+     retired.
 """
 
 from __future__ import annotations
@@ -111,8 +111,8 @@ def test_index_builds_fail_loudly(spark, empty_dir):
 def test_rollup_engine_semantic_pin(spark, empty_dir):
     """The documented deviation's factual basis: Spark ROLLUP/CUBE
     over empty input emits zero rows (DuckDB emits the grand-total
-    row). If this ever flips, retire the README note and the
-    check_empty ENGINE_SEMANTIC_DIVERGENCES set."""
+    row). If this ever flips, retire the README note and
+    tools/check_empty.py's ENGINE_SEMANTIC_DIVERGENCES."""
     empty = spark.read.parquet(os.path.join(empty_dir, "orders.parquet"))
     empty.createOrReplaceTempView("_empty_orders_pin")
     n = spark.sql(

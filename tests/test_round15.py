@@ -181,6 +181,17 @@ def test_wedge_edge_build_is_one_aggregation(spark, sf_dir, monkeypatch):
     assert _plan_joins(plan) == 1, plan[:3000]
 
 
+def test_ktruss_cumulative_window_is_keyed(spark, sf_dir):
+    """k-truss's descending cumulative count runs over one partition,
+    keyed on the partition id like edge_build's cut: a window with no
+    key logs "No Partition Defined" on every run."""
+    plan = _exec_plan(spark, "graph_ktruss_edge_support", sf_dir)
+    (win,) = [ln for ln in plan.splitlines() if "Window [sum(n_edges" in ln]
+    # Window [functions], [partition spec], [order spec]
+    assert re.search(r"\], \[[^\]]+\], \[[^\]]+\]$", win), win
+    assert plan.count("Exchange SinglePartition") == 1, plan[:3000]
+
+
 WEDGE_QUERIES = {
     "graph_triangle_count": "edge_build",
     "graph_link_prediction": "edge_build",

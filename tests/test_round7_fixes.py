@@ -8,7 +8,7 @@ import datetime as dt
 
 import pytest
 
-from etl_data_ingestion_spark.plans import registry
+from etl_data_ingestion_spark.plans import parity, registry
 
 registry.load_all()
 
@@ -125,25 +125,15 @@ def test_pack_sequences_boundary_parity(spark, tmp_path):
     from etl_data_ingestion_spark.catalog import drop_plan_cache
 
     drop_plan_cache(spark)
-    got = (
-        registry.QUERIES["pipeline_pack_sequences"](spark, str(tmp_path))
-        .orderBy("seq_id")
-        .collect()
-    )
+    df = registry.QUERIES["pipeline_pack_sequences"](spark, str(tmp_path))
+    got = df.orderBy("seq_id").collect()
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM "
         f"read_parquet('{tmp_path}/documents.parquet/*.parquet')"
     )
-    want = con.execute(
-        registry.ORACLES["pipeline_pack_sequences"]
-    ).fetchall()
-    assert len(got) == len(want)
-    for g, w in zip(got, want):
-        assert (g.seq_id, g.docs_starting, g.window_tokens) == (
-            int(w[0]), int(w[1]), int(w[2])
-        )
-        assert g.fill_ratio == pytest.approx(float(w[3]), abs=0)
+    want = con.execute(registry.ORACLES["pipeline_pack_sequences"]).fetchdf()
+    assert parity.compare(df.toPandas(), want) is None
     # structural invariants: interior windows exactly full, only the
     # tail may be short; the last emitted window ends at the corpus
     # token total. (Windows no doc STARTS in — the interior of a

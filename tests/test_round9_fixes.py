@@ -26,7 +26,7 @@ from collections import defaultdict
 import duckdb
 import pyspark.sql.functions as F
 
-from etl_data_ingestion_spark.plans import registry
+from etl_data_ingestion_spark.plans import parity, registry
 
 registry.load_all()
 
@@ -246,7 +246,4 @@ def test_phrase_index_oracle_long_document(spark, tmp_path):
     odf = con.execute(
         registry.ORACLES["text_inverted_index_phrase"]
     ).fetchdf()
-    canon = lambda p: sorted(
-        tuple(str(r[k]) for k in sorted(p.columns)) for _, r in p.iterrows()
-    )
-    assert canon(sdf) == canon(odf)
+    assert parity.compare(sdf, odf) is None

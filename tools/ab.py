@@ -9,13 +9,13 @@ An arm is one of:
   duckdb             <query>'s oracle SQL on DuckDB over the same parquet.
 
 At every sf_dir both arms must return the same columns and the same
-rows under check_parity.canon_frame; otherwise the A/B is refused
+rows under plans.parity.compare; otherwise the A/B is refused
 (exit 1) before any timing. Both arms are then sampled cold through
 bench.sample_interleaved: one untimed warm pass, then `rounds`
 (default 5) passes that each take one sample of A and one of B, so a
 host-contention burst hits both arms alike. Spark arms run through
 bench.run_query on local[$SPARK_GRAFT_CPUS]; the DuckDB arm runs with
-threads=$SPARK_GRAFT_CPUS under bench.duckdb_run's timeout.
+threads=$SPARK_GRAFT_CPUS under parity.duckdb_run's timeout.
 
 Prints one JSON line:
   {"query", "rounds", "arms": {"a": armA, "b": armB},
@@ -35,11 +35,10 @@ import statistics
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path[:0] = [REPO, os.path.join(REPO, "tools")]
+sys.path.insert(0, REPO)
 
 import bench  # noqa: E402
-from check_parity import canon_frame  # noqa: E402
-from etl_data_ingestion_spark.plans import registry  # noqa: E402
+from etl_data_ingestion_spark.plans import parity, registry  # noqa: E402
 from etl_data_ingestion_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
 
 
@@ -64,13 +63,13 @@ def make_arm(spec: str, spark, query: str, cons: dict):
             raise SystemExit(f"{query} has no oracle SQL")
 
         def values(sf_dir):
-            r = bench.duckdb_run(cons[sf_dir], sql, fetch="fetchdf")
+            r = parity.duckdb_run(cons[sf_dir], sql, fetch="fetchdf")
             if r is None:
                 raise SystemExit(f"{query}: oracle timed out at {sf_dir}")
             return r[1]
 
         def sample(sf_dir):
-            r = bench.duckdb_run(cons[sf_dir], sql)
+            r = parity.duckdb_run(cons[sf_dir], sql)
             return None if r is None else round(r[0], 3)
 
         return values, sample
@@ -93,19 +92,18 @@ def main(argv: list[str]) -> int:
     cpus = DEFAULT_CPUS
     spark = get_spark(app_name="ab")
     spark.sparkContext.setLogLevel("ERROR")
-    cons = {d: bench.duckdb_views(d, cpus) for d in sf_dirs}
+    cons = {d: parity.duckdb_views(d, cpus) for d in sf_dirs}
     arms = {
         "a": make_arm(spec_a, spark, query, cons),
         "b": make_arm(spec_b, spark, query, cons),
     }
 
     for d in sf_dirs:
-        va, vb = arms["a"][0](d), arms["b"][0](d)
-        if sorted(va.columns) != sorted(vb.columns) or canon_frame(va) != canon_frame(vb):
+        reason = parity.compare(arms["a"][0](d), arms["b"][0](d))
+        if reason:
             print(
                 f"REFUSED {query} at {d}: {spec_a} and {spec_b} return "
-                f"different values ({len(va)} vs {len(vb)} rows, columns "
-                f"{sorted(va.columns)} vs {sorted(vb.columns)})",
+                f"different values: {reason}",
                 file=sys.stderr,
             )
             return 1

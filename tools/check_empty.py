@@ -1,26 +1,15 @@
-"""Empty-corpus robustness sweep — full registry vs DuckDB on 0-row
-base tables.
+"""Empty-corpus robustness sweep: the full registry against its DuckDB
+oracles on 0-row base tables (tools/gen_empty.py), judged in-process
+by plans.parity.check.
 
-Motivation: the r13 advisor caught a real empty-RELATION bug
-(threshold-curve aggregates returning NULL where the oracle emits 0
-once the scored pair relation is empty — fixed with coalesce). That
-bug class — F.sum/avg over zero rows yielding NULL vs the oracle's
-arithmetic, first()-of-nothing, division by zero counts, HOFs over
-empty arrays — fires only when an intermediate relation is empty,
-which no populated fixture exercises. Running the WHOLE registry on
-all-empty base tables drives every such site at once: each query
-must either agree with its DuckDB oracle on the empty input or fail
-loudly with a documented degenerate-input exception.
-
-Classification:
-  OK             both engines agree (usually both 0 rows, sometimes
-                 a fixed-shape domain result with NULL/0 measures)
-  DESIGNED-RAISE the Spark side raises one of the registry's
-                 documented degenerate-corpus loud failures (the
-                 repo's stated alternative to silently wrong output;
-                 matched against EXPECTED_RAISES below — anything
-                 not listed there stays FAIL)
-  FAIL           divergence or an undocumented exception — a bug.
+Some bugs fire only when an intermediate relation is empty, which no
+populated fixture exercises: F.sum/avg over zero rows yielding NULL
+where the oracle gives 0 (the threshold-curve aggregates had this one),
+first()-of-nothing, division by a zero count, HOFs over empty arrays.
+Each query must agree with its oracle on the empty input, raise the
+documented degenerate-input error EXPECTED_RAISES names for it
+(designed-raise), or be listed in ENGINE_SEMANTIC_DIVERGENCES
+(documented-divergence). Anything else is a FAIL.
 
 Usage: python tools/check_empty.py
 Writes tools/out/empty_sweep.json; exits nonzero on FAIL.
@@ -30,52 +19,44 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from etl_data_ingestion_spark.plans import parity, registry  # noqa: E402
+from etl_data_ingestion_spark.session import get_spark  # noqa: E402
+
 EMPTY_DIR = os.path.join(REPO, ".scaledata/sf_empty")
 
-# Documented loud-failure contracts on degenerate input: query name
-# -> substring that must appear in the raise text. Kept deliberately
-# narrow — a new query landing in here requires the docstring to
-# state the degenerate-input contract first. These are the ANN
-# index-build operators (an index over an empty corpus has no
-# meaningful self-check result) and the bounded-corpus GEMM device
-# (top-2 margin undefined under 3 vectors) — the same loud-failure
-# convention the README's degenerate-corpus exception list names.
+# Documented loud failures on degenerate input: query name -> text its
+# raise must contain. Kept narrow: a query enters only once its docstring
+# states the contract. These are the ANN index builds (an index over an
+# empty corpus has no meaningful self-check) and the bounded-corpus GEMM
+# device (top-2 margin undefined under 3 vectors), as in the README's
+# degenerate-corpus exception list.
 EXPECTED_RAISES: dict[str, str] = {
     "similarity_ivf_topk": "IVF quantizer requires a non-empty corpus",
-    "similarity_index_persist_reuse": (
-        "IVF quantizer requires a non-empty corpus"
-    ),
-    "similarity_pq_rerank": (
-        "PQ codebook training requires a non-empty corpus"
-    ),
+    "similarity_index_persist_reuse": "IVF quantizer requires a non-empty corpus",
+    "similarity_pq_rerank": "PQ codebook training requires a non-empty corpus",
     "similarity_topk_lsh": "requires a non-empty corpus to fit the LSH",
-    "similarity_ratio_margin": (
-        "GEMM devices require >= 3 corpus vectors"
-    ),
+    "similarity_ratio_margin": "GEMM devices require >= 3 corpus vectors",
 }
 
 # Documented engine-semantic divergences (README "deliberate
 # deviations"): Spark's ROLLUP/CUBE/GROUPING SETS emit NO rows over
 # an empty input, where the SQL standard (and DuckDB) emit the
-# grand-total grouping-set row with zero-valued aggregates. Verified
-# against spark.sql directly (round 14) — it is the engine, not the
-# plan shape; matching it would require a second scan or a persist
-# on hot rollup plans, rejected for an empty-input edge. These
-# classify as DOCUMENTED-DIVERGENCE, not FAIL.
+# grand-total grouping-set row with zero-valued aggregates. Plain
+# spark.sql does the same (tests/test_empty_corpus.py pins it), so it
+# is the engine, not the plan shape; matching it would need a second
+# scan or a persist on hot rollup plans, rejected for an empty-input
+# edge. These classify as DOCUMENTED-DIVERGENCE, not FAIL.
 ENGINE_SEMANTIC_DIVERGENCES: set[str] = {
     "agg_rollup_status_priority",
     "agg_cube_flag_status",
     "agg_grouping_id_rollup",
 }
-
-# Spark's console progress bar writes \r-terminated fragments, so a
-# status token is NOT always line-initial — search, don't anchor.
-LINE = re.compile(r"(OK|FAIL|ROWS-ONLY|ORACLE-TIMEOUT)\s{1,4}([\w.]+):?(.*)")
 
 
 def main() -> int:
@@ -85,64 +66,37 @@ def main() -> int:
             check=True,
             cwd=REPO,
         )
-    env = dict(os.environ)
-    env.setdefault("SPARK_GRAFT_ORACLE_TIMEOUT", "60")
-    proc = subprocess.run(
-        [
-            sys.executable,
-            os.path.join(REPO, "tools/check_parity.py"),
-            EMPTY_DIR,
-        ],
-        capture_output=True,
-        text=True,
-        cwd=REPO,
-        env=env,
-    )
-    # First pass: collect (status, name, start-line-index) triples;
-    # a FAIL's detail (executor tracebacks, value diffs) spans the
-    # lines up to the next status token.
-    lines = proc.stdout.replace("\r", "\n").splitlines()
-    marks: list[tuple[str, str, int]] = []
-    for i, raw in enumerate(lines):
-        m = LINE.search(raw)
-        if m and m.group(2) != "":
-            marks.append((m.group(1), m.group(2), i))
-    ok, fail, designed, rows_only, documented = [], [], [], [], []
-    for j, (status, name, i) in enumerate(marks):
-        if status == "OK":
-            ok.append(name)
-        elif status == "ROWS-ONLY":
-            rows_only.append(name)
-        elif status == "FAIL":
-            end = marks[j + 1][2] if j + 1 < len(marks) else len(lines)
-            detail = "\n".join(lines[i:end])
-            pat = EXPECTED_RAISES.get(name)
-            if pat and "spark raised" in detail and pat in detail:
-                designed.append(name)
-            elif name in ENGINE_SEMANTIC_DIVERGENCES:
-                documented.append(name)
-            else:
-                fail.append({"name": name, "detail": detail.strip()[:300]})
+    os.environ.setdefault("SPARK_GRAFT_ORACLE_TIMEOUT", "60")
+    registry.load_all()
+    spark = get_spark(app_name="check_empty")
+    con = parity.duckdb_views(EMPTY_DIR)
+    kinds = ("ok", "designed_raise", "documented_divergence", "rows_only", "oracle_timeout")
+    names: dict[str, list[str]] = {k: [] for k in kinds}
+    fail = []
+    for name in registry.query_names():
+        v = parity.check(spark, con, name, EMPTY_DIR)
+        pat = EXPECTED_RAISES.get(name)
+        if v.status != parity.FAIL:
+            names[v.status.replace("-", "_")].append(name)
+        elif pat and v.detail == "spark raised" and pat in v.error:
+            names["designed_raise"].append(name)
+        elif name in ENGINE_SEMANTIC_DIVERGENCES:
+            names["documented_divergence"].append(name)
+        else:
+            detail = f"{v.detail}: {v.error}" if v.error else v.detail
+            fail.append({"name": name, "detail": detail[:300]})
     out = {
         "tool": "check_empty",
-        "n_ok": len(ok),
-        "n_designed_raise": len(designed),
-        "n_documented_divergence": len(documented),
-        "n_rows_only": len(rows_only),
+        **{f"n_{k}": len(n) for k, n in names.items()},
         "n_fail": len(fail),
-        "designed_raise": designed,
-        "documented_divergence": documented,
-        "rows_only": rows_only,
+        **{k: n for k, n in names.items() if k != "ok"},
         "failures": fail,
     }
     os.makedirs(os.path.join(REPO, "tools/out"), exist_ok=True)
     with open(os.path.join(REPO, "tools/out/empty_sweep.json"), "w") as f:
         json.dump(out, f, indent=1)
-    print(
-        f"empty sweep: {len(ok)} ok, {len(designed)} designed-raise, "
-        f"{len(documented)} documented-divergence, "
-        f"{len(rows_only)} rows-only, {len(fail)} FAIL"
-    )
+    counts = ", ".join(f"{len(n)} {k.replace('_', '-')}" for k, n in names.items())
+    print(f"empty sweep: {counts}, {len(fail)} FAIL")
     for f_ in fail:
         print(f"  FAIL {f_['name']}: {f_['detail'][:160]}")
     return 1 if fail else 0

@@ -1,14 +1,14 @@
 """Zero-row fixture generator for the empty-corpus robustness sweep.
 
-The r13 advisor caught a real empty-relation bug (threshold-curve
-aggregates returning NULL where the oracle emits 0 once the scored
-pair relation is empty). That class — F.sum/F.avg over zero rows,
+Some bugs fire only on an empty relation: the threshold-curve
+aggregates once returned NULL where the oracle emits 0 because the
+scored pair relation was empty. That class — F.sum/F.avg over zero rows,
 head-of-empty, seq(1, size-1) on nothing, division by a zero count —
 only fires when a whole intermediate relation is empty, which no
 driver fixture exercises. This writes a fixture dir where EVERY base
 table is 0 rows with the exact parquet schema of the shipped
 sf0.001 fixtures, so every registered query and oracle can run on it
-unchanged via tools/check_parity.py.
+unchanged via tools/check_parity.py or tools/check_empty.py.
 
 Usage: python tools/gen_empty.py [OUT_DIR]   (default .scaledata/sf_empty)
 """

@@ -1,25 +1,22 @@
-"""Multi-scale parity sweep — the institutionalized version of the
-hand-run sweeps that caught six latent cross-engine bugs in round 7
-(fuzzy double ROUND at half boundaries, negative zero, ulp drift in
-coupled recursions, HUGEINT dtype reds, recall-floor breaks).
-
-The driver's correctness gate runs at sf0.01 only; these bug classes
-are float-BOUNDARY classes, so whether one fires depends on whether
-any value in the dataset lands on a boundary — more data = more dice
-rolls. This script rolls the dice at every scale point we have:
+"""Multi-scale parity sweep: the full registry against its oracles at
+every scale point we have:
 
     sf0.001 / sf0.01 / sf0.1   (driver fixtures, /root/testdata)
     sf0.3   / sf1              (.scaledata, tools/gen_scale.py)
 
-For each sf it runs the full registry through tools/check_parity.py
-in a FRESH subprocess (one Spark JVM at a time — two local JVMs
-contend; and a fresh process is what the driver does), with the
-standard oracle-timeout policy (superlinear brute-force oracles DNF
-at sf>=0.3 by design — counted oracle-timeout, not failure).
+The `__spark_entry__.py` correctness gate runs at sf0.01 only. The
+cross-engine bugs a sweep catches (fuzzy double ROUND at half
+boundaries, negative zero, ulp drift in coupled recursions, HUGEINT
+dtype reds, recall-floor breaks) are BOUNDARY classes: whether one
+fires depends on whether any value in the dataset lands on a boundary,
+so more data rolls more dice.
 
-Writes SWEEP_r{N}.json at the repo root: one entry per sf with
-ok/rows-only/oracle-timeout/failed counts and every non-OK query
-name — committed alongside BENCH_r{N}.json each round.
+Each sf runs tools/check_parity.py in a FRESH subprocess (one Spark JVM
+at a time — two local JVMs contend; and `__spark_entry__.py` is run
+from a fresh process too) and reads the JSON summary it prints last.
+Superlinear brute-force oracles outrun the oracle timeout at sf>=0.3
+by design and count oracle-timeout, not failure. Writes
+SWEEP_r{N}.json at the repo root: that summary per sf.
 
 Usage: python tools/sweep_scales.py [round_number] [sf ...]
   round_number defaults to 0 (writes SWEEP_r0.json)
@@ -30,7 +27,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import subprocess
 import sys
 
@@ -43,8 +39,6 @@ SF_DIRS = {
     "0.3": os.path.join(REPO, ".scaledata/sf0.3"),
     "1": os.path.join(REPO, ".scaledata/sf1"),
 }
-
-LINE = re.compile(r"^(OK|FAIL|ROWS-ONLY|ORACLE-TIMEOUT)\s+([\w.]+)")
 
 
 def ensure_scaledata(sf: str, path: str) -> bool:
@@ -62,48 +56,16 @@ def ensure_scaledata(sf: str, path: str) -> bool:
 
 
 def sweep_one(sf: str, path: str) -> dict:
-    env = dict(os.environ)
-    env.setdefault("SPARK_GRAFT_ORACLE_TIMEOUT", "180")
     proc = subprocess.run(
         [sys.executable, os.path.join(REPO, "tools/check_parity.py"), path],
         capture_output=True,
         text=True,
         cwd=REPO,
-        env=env,
     )
-    counts = {"ok": 0, "rows_only": 0, "oracle_timeout": 0, "failed": 0}
-    non_ok: dict[str, list[str]] = {
-        "failed": [],
-        "rows_only": [],
-        "oracle_timeout": [],
-    }
-    for raw in proc.stdout.splitlines():
-        m = LINE.match(raw.strip())
-        if not m:
-            continue
-        kind, name = m.groups()
-        key = {
-            "OK": "ok",
-            "FAIL": "failed",
-            "ROWS-ONLY": "rows_only",
-            "ORACLE-TIMEOUT": "oracle_timeout",
-        }[kind]
-        counts[key] += 1
-        if key != "ok":
-            non_ok[key].append(name)
-    return {
-        "sf": sf,
-        "sf_dir": path,
-        "rc": proc.returncode,
-        **counts,
-        "non_ok": non_ok,
-        # keep the first FAIL detail lines for triage without rerunning
-        "fail_detail": [
-            ln
-            for ln in proc.stdout.splitlines()
-            if ln.startswith("FAIL") or ln.startswith("   ")
-        ][:60],
-    }
+    last = (proc.stdout.splitlines() or [""])[-1]
+    if not last.startswith("{"):
+        raise SystemExit(f"check_parity at sf{sf} printed no summary:\n{proc.stderr[-2000:]}")
+    return {"sf": sf, "rc": proc.returncode, **json.loads(last)}
 
 
 def main() -> int:
