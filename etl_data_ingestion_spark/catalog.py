@@ -14,7 +14,6 @@ session's default parallelism, so a driver's vanilla session and a
 
 from __future__ import annotations
 
-import contextlib
 import hashlib
 import os
 import weakref
@@ -23,6 +22,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from etl_data_ingestion_spark.config import SCRATCH
+from etl_data_ingestion_spark.session import child_session
 
 TABLES = (
     "region",
@@ -61,8 +61,11 @@ _SCANS: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str, bool], Dat
 
 
 def drop_plan_cache(spark: SparkSession) -> None:
-    """Forget this session's registered scans, unpersisting any that
-    persist_scans pinned. Call after rewriting a table path in place."""
+    """Forget this session's registered scans and its small_fact_session
+    children with theirs, unpersisting any that persist_scans pinned.
+    Call after rewriting a table path in place."""
+    for child in _CHILDREN.pop(spark, {}).values():
+        drop_plan_cache(child)
     for df in _SCANS.pop(spark, {}).values():
         if df.is_cached:
             df.unpersist()
@@ -154,78 +157,83 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-# Fact footprint under which small_fact_aqe_gate plans statically.
+# Fact footprint under which small_fact_session plans statically.
 SMALL_FACT_BYTES = 2_000_000_000
-# Fact input per static shuffle partition inside the gate.
+# Fact input per static shuffle partition in the gate's child session.
 GATE_BYTES_PER_PARTITION = 4 << 20
 
+# The gate's child sessions: caller session -> {shuffle partitions:
+# child}. A child keeps its own scan registry, so a fresh child per
+# call would re-infer every parquet schema it reads (one extra job per
+# table read); one child per (caller, partition count) reads each once.
+_CHILDREN: "weakref.WeakKeyDictionary[SparkSession, dict[int, SparkSession]]" = (
+    weakref.WeakKeyDictionary()
+)
 
-@contextlib.contextmanager
-def small_fact_aqe_gate(
-    spark: SparkSession, sf_dir: str, table: str = "lineitem"
-):
-    """AQE gate for iterative / multi-consumer small-input queries:
-    AQE's per-stage materialization is pure overhead when the whole
-    input fits one executor's worth of work (graph_kcore_peel ~7.6s ->
-    ~4.8s, ml_item_item_cf 1.87 -> 1.40 at sf0.1 and 3.81 -> 3.14 at
-    sf1, min-of-4 interleaved). Gate A PRIORI on the fact-file
-    footprint (known driver-side for free): under SMALL_FACT_BYTES
-    fixed planning wins; at cluster scale AQE stays ON for its runtime
-    BHJ conversion + skew handling. Non-local URIs, missing paths, and
-    0-byte walks are treated as unknown/LARGE so the gate can never
-    silently disable AQE in the cluster-scale case it must protect.
 
-    With AQE off nothing coalesces partitions at runtime, so the gate
-    also sizes the static shuffle partition count from the footprint:
-    one per GATE_BYTES_PER_PARTITION of fact input, floor 8, never
-    above the session default (item_cf 1.46 -> 1.24s at sf0.1, 8
-    partitions; at sf1 it derives the session default and so retires
-    as data grows).
-
-    The toggle must precede the first persist() (CacheManager
-    compiles the cached plan eagerly at persist() under the conf
-    active then) and any ACTION must run inside the gate — a lazy
-    DataFrame returned through the gate would execute under the
-    restored session conf.
-    """
-    def _tree_bytes(p: str) -> int:
-        if os.path.isfile(p):
-            return os.path.getsize(p)
-        if not os.path.isdir(p):
-            return 1 << 60
+def _fact_bytes(path: str) -> int:
+    """Bytes under a local file or directory. A missing path, a
+    non-local URI (os.walk yields nothing for s3://) or a 0-byte walk
+    counts as unknown and LARGE."""
+    try:
+        if os.path.isfile(path):
+            return os.path.getsize(path)
         total = sum(
-            os.path.getsize(os.path.join(r, f))
-            for r, _, fs in os.walk(p)
-            for f in fs
+            os.path.getsize(os.path.join(r, f)) for r, _, fs in os.walk(path) for f in fs
         )
-        return total if total > 0 else 1 << 60
-
-    aqe_key = "spark.sql.adaptive.enabled"
-    parts_key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(aqe_key, "true")
-    prev_parts = None
-    try:
-        fact_bytes = _tree_bytes(table_path(sf_dir, table))
     except OSError:
-        fact_bytes = 1 << 60
-    toggle = fact_bytes < SMALL_FACT_BYTES and prev == "true"
-    if toggle:
-        spark.conf.set(aqe_key, "false")
-        try:
-            default_parts = int(spark.conf.get(parts_key, "32"))
-        except ValueError:
-            default_parts = 32
-        sized = max(8, min(default_parts, fact_bytes // GATE_BYTES_PER_PARTITION))
-        if sized < default_parts:
-            prev_parts = spark.conf.get(parts_key)
-            spark.conf.set(parts_key, str(sized))
-    try:
-        yield toggle
-    finally:
-        if toggle:
-            spark.conf.set(aqe_key, prev)
-            if prev_parts is not None:
-                spark.conf.set(parts_key, prev_parts)
+        return 1 << 60
+    return total or 1 << 60
+
+
+def small_fact_session(spark: SparkSession, sf_dir: str, table: str) -> SparkSession:
+    """The session an iterative / multi-consumer small-input query
+    builds on: ``spark`` itself, or a tuned child session that plans
+    statically. AQE's per-stage materialization is pure overhead when
+    the whole input fits one executor's worth of work (graph_kcore_peel
+    ~7.6s -> ~4.8s, ml_item_item_cf 1.87 -> 1.40 at sf0.1 and 3.81 ->
+    3.14 at sf1, min-of-4 interleaved). The gate decides A PRIORI on the
+    fact-file footprint (known driver-side for free): under
+    SMALL_FACT_BYTES fixed planning wins; at cluster scale AQE stays ON
+    for its runtime BHJ conversion + skew handling. Non-local URIs,
+    missing paths and 0-byte walks count as LARGE, so the gate can never
+    silently disable AQE in the cluster-scale case it must protect. It
+    acts only when the caller's AQE is on.
+
+    With AQE off nothing coalesces partitions at runtime, so the child
+    also gets a static shuffle partition count sized from the
+    footprint: one per GATE_BYTES_PER_PARTITION of fact input, floor 8,
+    never above the caller's (item_cf 1.46 -> 1.24s at sf0.1, 8
+    partitions; at sf1 it derives the caller's count and so retires as
+    data grows).
+
+    The caller's conf is never written: the values live on the child,
+    so a frame built on it plans the same way wherever and whenever it
+    is executed, and concurrent queries on the caller are unaffected.
+    The child shares the caller's CacheManager, so scans the caller
+    pinned with persist_scans serve it. Bucketed routing
+    (enable_bucketed_facts) is per session, so a gated builder reads
+    the stock parquet copy of lineitem/orders, which holds the same
+    rows.
+    """
+    fact_bytes = _fact_bytes(table_path(sf_dir, table))
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    if fact_bytes >= SMALL_FACT_BYTES or aqe != "true":
+        return spark
+    parts = min(
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+        max(8, fact_bytes // GATE_BYTES_PER_PARTITION),
+    )
+    children = _CHILDREN.setdefault(spark, {})
+    if parts not in children:
+        children[parts] = child_session(
+            spark,
+            {
+                "spark.sql.adaptive.enabled": "false",
+                "spark.sql.shuffle.partitions": str(parts),
+            },
+        )
+    return children[parts]
 
 
 def _with_scan_parallelism(spark: SparkSession, df: DataFrame) -> DataFrame:

@@ -38,6 +38,17 @@ def token_count(col: str | Column) -> Column:
     return F.size(tokens(col))
 
 
+def word_windows_from(tok_col: str | Column, n: int) -> Column:
+    """Every space-joined window of n adjacent tokens, in token order
+    with repeats kept, from an ALREADY-MATERIALIZED token-array column
+    (the word_ngrams_from hot-path contract); empty below n tokens."""
+    toks = _c(tok_col)
+    return F.transform(
+        _starts(F.size(toks), n),
+        lambda i: F.concat_ws(" ", *[F.element_at(toks, i + k) for k in range(n)]),
+    )
+
+
 def word_ngrams_from(tok_col: str | Column, n: int = 3) -> Column:
     """Distinct word n-grams from an ALREADY-MATERIALIZED token-array
     column (the unit for Jaccard dedup).
@@ -56,12 +67,7 @@ def word_ngrams_from(tok_col: str | Column, n: int = 3) -> Column:
 
     Empty when the row has fewer than n tokens (see _starts).
     """
-    toks = _c(tok_col)
-    grams = F.transform(
-        _starts(F.size(toks), n),
-        lambda i: F.concat_ws(" ", *[F.element_at(toks, i + k) for k in range(n)]),
-    )
-    return F.array_distinct(grams)
+    return F.array_distinct(word_windows_from(tok_col, n))
 
 
 def adjacent_bigrams(tok_col: str | Column) -> Column:

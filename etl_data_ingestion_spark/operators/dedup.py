@@ -24,7 +24,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from etl_data_ingestion_spark.catalog import load_table
+from etl_data_ingestion_spark.catalog import load_table, small_fact_session
 from etl_data_ingestion_spark.functions.arrays import ordered_pairs
 from etl_data_ingestion_spark.functions.minhash import minhash_signature_udf
 from etl_data_ingestion_spark.functions.text import tokens, word_ngrams_from
@@ -1345,19 +1345,16 @@ def dedup_end_to_end_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparison — the corpus text itself is scanned once and never
     shuffled.
 
-    Round-14: the gram build + CC loop run inside
-    catalog.small_fact_aqe_gate (the kcore/item_cf device) — every
-    per-round action on this fixed tiny composite paid AQE's
-    per-stage materialization job submissions; with the fused CC
-    check (see connected_components) the interleaved A/B reads
-    stock 3.16 → 2.39 (fused) → gate+fused 2.48 at sf0.1 and
-    2.89 → 2.12 → 1.94 at sf1 (min-of-5/4; gate kept on the
-    KEEP(sf1) rule). The gate self-retires once the documents
-    footprint passes the threshold, so cluster scale keeps AQE."""
-    from etl_data_ingestion_spark.catalog import small_fact_aqe_gate
-
-    with small_fact_aqe_gate(spark, sf_dir, "documents"):
-        comp, corpus = _end_to_end_components(spark, sf_dir)
+    Planned on catalog.small_fact_session, keyed on the documents
+    footprint: every per-round action of the components loop on this
+    fixed tiny composite would pay AQE's per-stage materialization
+    jobs (with the fused CC check, see connected_components, the
+    interleaved A/B read 2.89 -> 2.12 -> 1.94 at sf1 for stock ->
+    fused -> static plan; min-of-4). The gate self-retires once the
+    documents footprint passes the threshold, so cluster scale keeps
+    AQE."""
+    spark = small_fact_session(spark, sf_dir, "documents")
+    comp, corpus = _end_to_end_components(spark, sf_dir)
     return (
         corpus.select("doc_id")
         .join(comp, corpus.doc_id == comp.node, "left")
@@ -1373,8 +1370,8 @@ def dedup_end_to_end_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _end_to_end_components(spark: SparkSession, sf_dir: str):
     """The gram build + verified-pair + CC portion of
     dedup_end_to_end_canonical; every action it triggers (grams
-    localCheckpoint, the CC loop's per-round checkpoints) runs under
-    the caller's AQE gate. Returns (components, corpus)."""
+    localCheckpoint, the CC loop's per-round checkpoints) runs on the
+    session it is given. Returns (components, corpus)."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 150)
     seeded = docs.filter(F.col("doc_id") % 10 == 0)
     corpus = (
@@ -1812,16 +1809,7 @@ def pipeline_dedup_threshold_curve(
     # sorted doc list, preserving the doc_a < doc_b order.
     g0 = toks.select(
         "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(0), F.size("toks") - 3),
-                    lambda i: F.concat_ws(
-                        " ", F.slice(F.col("toks"), i + 1, 3)
-                    ),
-                )
-            )
-        ).alias("gram"),
+        F.explode(word_ngrams_from("toks", 3)).alias("gram"),
     )
     gsets = (
         g0.groupBy("gram")

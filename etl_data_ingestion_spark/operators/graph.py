@@ -17,7 +17,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from etl_data_ingestion_spark.catalog import load_table
+from etl_data_ingestion_spark.catalog import load_table, small_fact_session
 from etl_data_ingestion_spark.functions.arrays import ordered_pairs
 from etl_data_ingestion_spark.plans.registry import register
 
@@ -583,6 +583,25 @@ SELECT * FROM (
 """
 
 
+def customer_supplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct (u = o_custkey, v = -l_suppkey) edges of the
+    customer--supplier graph from one lineitem-orders join; suppliers
+    are negated so both node kinds share one id space. Edge dedup
+    (DISTINCT with partial aggregation) is its only corpus-sized
+    Exchange."""
+    li = load_table(spark, sf_dir, "lineitem", parallel=False).select(
+        "l_orderkey", "l_suppkey"
+    )
+    orders = load_table(spark, sf_dir, "orders", parallel=False).select(
+        "o_orderkey", "o_custkey"
+    )
+    return (
+        li.join(orders, li.l_orderkey == orders.o_orderkey)
+        .select(F.col("o_custkey").alias("u"), (-F.col("l_suppkey")).alias("v"))
+        .distinct()
+    )
+
+
 @register("graph_kcore_peel", oracle=KCORE_ORACLE)
 def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-core peeling (k=3, 3 rounds) on the customer--supplier
@@ -590,91 +609,54 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-core, the standard densification step before community/dense-
     subgraph algorithms.
 
-    Scale shape: the edge build is the only corpus-sized work
-    (DISTINCT dedup with partial aggregation); every peel round is
-    a node-domain groupBy plus two semi-joins of the shrinking edge
-    set against the shrinking active set — the same
-    contribution-join shape as connected components, with
-    monotonically DECREASING data per round. Fixed unroll keeps the
-    lineage short (an open-ended peel would localCheckpoint per
-    round, as dedup.connected_components does).
+    Scale shape: the edge build (customer_supplier_edges) is the only
+    corpus-sized work; every peel round is a node-domain groupBy plus
+    two semi-joins of the shrinking edge set against the shrinking
+    active set — the same contribution-join shape as connected
+    components, with monotonically DECREASING data per round. Fixed
+    unroll keeps the lineage short (an open-ended peel would
+    localCheckpoint per round, as dedup.connected_components does).
 
-    Action count: each level derives both its counts (n_active x
-    n_edges) as a crossJoin of two 1-row aggregates over the
-    persisted level, and the four count rows are materialized by one
-    persist+count of their union. The per-level persist is
-    load-bearing: without it AQE re-plans each union branch
-    independently and re-materializes every upstream peel stage per
-    branch (494 jobs, 39.5s at sf0.1 against 9.0s —
-    tools/floor_decompose.py)."""
-    # AQE gate (measured, tools/floor_decompose.py at sf0.1): the
-    # peel rounds run shrinking node-domain aggregates where AQE's
-    # per-stage materialization is pure overhead (min-of-3 ~7.6s
-    # with AQE vs ~4.8s without; ~50 stage-jobs vs ~12). The shared
-    # device is catalog.small_fact_aqe_gate (the same measured gate
-    # carries ml_item_item_cf); the toggle precedes the first
-    # persist() and the collect runs inside it.
-    from etl_data_ingestion_spark.catalog import small_fact_aqe_gate
+    Planned on catalog.small_fact_session: the peel rounds run
+    shrinking node-domain aggregates where AQE's per-stage
+    materialization is pure overhead (~7.6s with AQE vs ~4.8s without
+    at sf0.1; ~50 stage-jobs vs ~12). The result is lazy and runs in
+    one action: each level derives both its counts (n_active x
+    n_edges) as a crossJoin of two 1-row aggregates over the persisted
+    level, and the four count rows are one union. The per-level
+    persist is load-bearing: every union branch references the SAME
+    persisted DataFrame objects, so the branches share their cached
+    stages; without it AQE re-planned each branch independently and
+    re-ran every upstream peel stage per branch (494 jobs, 39.5s at
+    sf0.1 against 9.0s — tools/floor_decompose.py)."""
+    spark = small_fact_session(spark, sf_dir, "lineitem")
+    e = customer_supplier_edges(spark, sf_dir).persist()
 
-    with small_fact_aqe_gate(spark, sf_dir, "lineitem"):
-        li = load_table(spark, sf_dir, "lineitem", parallel=False).select(
-            "l_orderkey", "l_suppkey"
+    def degrees(e: DataFrame) -> DataFrame:
+        nodes = e.select(F.col("u").alias("n")).unionAll(
+            e.select(F.col("v").alias("n"))
         )
-        orders = load_table(spark, sf_dir, "orders", parallel=False).select(
-            "o_orderkey", "o_custkey"
+        return nodes.groupBy("n").agg(F.count(F.lit(1)).alias("deg"))
+
+    def count_row(it: int, nodes: DataFrame, e: DataFrame) -> DataFrame:
+        return (
+            nodes.agg(F.count(F.lit(1)).alias("n_nodes"))
+            .crossJoin(e.agg(F.count(F.lit(1)).alias("n_edges")))
+            .select(F.lit(it).alias("iteration"), "n_nodes", "n_edges")
         )
-        edges = (
-            li.join(orders, li.l_orderkey == orders.o_orderkey)
-            .select(
-                F.col("o_custkey").alias("u"),
-                (-F.col("l_suppkey")).alias("v"),
-            )
-            .distinct()
+
+    d = degrees(e)
+    out = count_row(0, d.select("n"), e)
+    for it in (1, 2, 3):
+        active = d.filter(F.col("deg") >= 3).select("n")
+        e = (
+            e.join(active.withColumnRenamed("n", "u"), "u", "left_semi")
+            .join(active.withColumnRenamed("n", "v"), "v", "left_semi")
+            .select("u", "v")
             .persist()
         )
-
-        def degrees(e: DataFrame) -> DataFrame:
-            nodes = e.select(F.col("u").alias("n")).unionAll(
-                e.select(F.col("v").alias("n"))
-            )
-            return nodes.groupBy("n").agg(F.count(F.lit(1)).alias("deg"))
-
-        def count_row(it: int, nodes: DataFrame, e: DataFrame) -> DataFrame:
-            return (
-                nodes.agg(F.count(F.lit(1)).alias("n_nodes"))
-                .crossJoin(e.agg(F.count(F.lit(1)).alias("n_edges")))
-                .select(
-                    F.lit(it).alias("iteration"), "n_nodes", "n_edges"
-                )
-            )
-
-        # The four per-level count rows are materialized together
-        # from their union. Every union branch references the SAME
-        # persisted DataFrame objects, so the branches share their
-        # shuffle/cache stages instead of recomputing them.
-        # Materialized inside the gate so the whole peel executes
-        # under the measured AQE-off plan.
-        e = edges
+        out = out.unionAll(count_row(it, active, e))
         d = degrees(e)
-        parts = [count_row(0, d.select("n"), e)]
-        for it in (1, 2, 3):
-            active = d.filter(F.col("deg") >= 3).select("n")
-            e = (
-                e.join(active.withColumnRenamed("n", "u"), "u", "left_semi")
-                .join(active.withColumnRenamed("n", "v"), "v", "left_semi")
-                .select("u", "v")
-                .persist()
-            )
-            parts.append(count_row(it, active, e))
-            d = degrees(e)
-        lazy = parts[0]
-        for p in parts[1:]:
-            lazy = lazy.unionAll(p)
-        # persist+count INSIDE the gate (collect + createDataFrame
-        # measured ~0.55s of py4j local-relation overhead on the
-        # item_cf A/B; the 4-row cache read is free)
-        out = lazy.persist()
-        out.count()
     return out.orderBy("iteration")
 
 
@@ -727,86 +709,60 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     will see correlated or anti-correlated skew.
 
     Scale shape (an algebraic form of the oracle's oriented union,
-    with the same exact integers): over
-    the oriented endpoint list, sum(j) = sum_n d^2, sum(j^2) =
-    sum_n d^3, and the pair count n2 = sum_n d = 2m — three of the
-    five moments (and both symmetric twins) collapse onto the
-    node-domain degree table, read in ONE tiny aggregation. Only
-    sum(j*k) = 2 * sum_edges d_u*d_v still touches edges: one pass
-    over the persisted edge list with the degree table
-    broadcast-joined on both endpoints (deg is dim-domain here —
-    customers + suppliers), with no shuffle join and no 2|E|-row
-    oriented union pass. Edge dedup is the only corpus-sized
-    Exchange. Degree moments
-    stay exact in int64 to d^3 ~ 2^63/|V| (the oracle's SUM(j*j)
-    over pairs is the same Σd^3, so the bound is the estimator's,
-    not this route's); beyond that the moments move to the
-    oracle-mirrored double path (documented cutover). Executed
-    under the small-fact AQE gate with the 1-row result
-    materialized inside it (the kcore/item_cf posture)."""
-    from etl_data_ingestion_spark.catalog import small_fact_aqe_gate
+    with the same exact integers): over the oriented endpoint list,
+    sum(j) = sum_n d^2, sum(j^2) = sum_n d^3, and the pair count
+    n2 = sum_n d = 2m — three of the five moments (and both symmetric
+    twins) collapse onto the node-domain degree table, read in ONE
+    tiny aggregation. Only sum(j*k) = 2 * sum_edges d_u*d_v still
+    touches edges: one pass over the persisted edge list with the
+    degree table broadcast-joined on both endpoints (deg is
+    dim-domain here — customers + suppliers), with no shuffle join
+    and no 2|E|-row oriented union pass. Edge dedup
+    (customer_supplier_edges) is the only corpus-sized Exchange.
+    Degree moments stay exact in int64 to d^3 ~ 2^63/|V| (the
+    oracle's SUM(j*j) over pairs is the same Σd^3, so the bound is
+    the estimator's, not this route's); beyond that the moments move
+    to the oracle-mirrored double path (documented cutover). Planned
+    on catalog.small_fact_session, like graph_kcore_peel. The edge
+    list and the degree table stay persisted after the result runs:
+    without them the plan recomputes both per consumer (2.9s against
+    1.3s at sf0.1)."""
     from etl_data_ingestion_spark.functions.numeric import snap
 
-    with small_fact_aqe_gate(spark, sf_dir, "lineitem"):
-        li = load_table(spark, sf_dir, "lineitem", parallel=False).select(
-            "l_orderkey", "l_suppkey"
-        )
-        orders = load_table(spark, sf_dir, "orders", parallel=False).select(
-            "o_orderkey", "o_custkey"
-        )
-        e = (
-            li.join(orders, li.l_orderkey == orders.o_orderkey)
-            .select(
-                F.col("o_custkey").alias("u"),
-                (-F.col("l_suppkey")).alias("v"),
-            )
-            .distinct()
-            .persist()
-        )
-        deg = (
-            e.select(F.col("u").alias("n"))
-            .unionAll(e.select(F.col("v").alias("n")))
-            .groupBy("n")
-            .agg(F.count(F.lit(1)).alias("d"))
-            .persist()
-        )
-        d = F.col("d")
-        degm = deg.agg(
-            F.count(F.lit(1)).alias("n_nodes"),
-            F.sum(d).alias("n2"),
-            F.sum(d * d).alias("s2"),
-            F.sum(d * d * d).alias("s3"),
-        )
-        du = deg.select(F.col("n").alias("u"), F.col("d").alias("dj"))
-        dv = deg.select(F.col("n").alias("v"), F.col("d").alias("dk"))
-        sjk = (
-            e.join(F.broadcast(du), "u")
-            .join(F.broadcast(dv), "v")
-            .agg(
-                (2 * F.sum(F.col("dj") * F.col("dk"))).alias("sjk")
-            )
-        )
-        n2 = F.col("n2")
-        mj = F.col("s2") * 1.0 / n2
-        num = F.col("sjk") * 1.0 / n2 - mj * mj
-        den = F.sqrt(F.col("s3") * 1.0 / n2 - mj * mj)
-        out = (
-            degm.crossJoin(F.broadcast(sjk))
-            .select(
-                # coalesce: sum(d) over the 0-row degree table of an
-                # empty corpus is NULL where the oracle's count is 0
-                F.coalesce((n2 / 2).cast("long"), F.lit(0)).alias(
-                    "n_edges"
-                ),
-                "n_nodes",
-                snap(num / (den * den), 6).alias("assortativity"),
-            )
-            .persist()
-        )
-        out.count()
-        e.unpersist()
-        deg.unpersist()
-    return out
+    spark = small_fact_session(spark, sf_dir, "lineitem")
+    e = customer_supplier_edges(spark, sf_dir).persist()
+    deg = (
+        e.select(F.col("u").alias("n"))
+        .unionAll(e.select(F.col("v").alias("n")))
+        .groupBy("n")
+        .agg(F.count(F.lit(1)).alias("d"))
+        .persist()
+    )
+    d = F.col("d")
+    degm = deg.agg(
+        F.count(F.lit(1)).alias("n_nodes"),
+        F.sum(d).alias("n2"),
+        F.sum(d * d).alias("s2"),
+        F.sum(d * d * d).alias("s3"),
+    )
+    du = deg.select(F.col("n").alias("u"), F.col("d").alias("dj"))
+    dv = deg.select(F.col("n").alias("v"), F.col("d").alias("dk"))
+    sjk = (
+        e.join(F.broadcast(du), "u")
+        .join(F.broadcast(dv), "v")
+        .agg((2 * F.sum(F.col("dj") * F.col("dk"))).alias("sjk"))
+    )
+    n2 = F.col("n2")
+    mj = F.col("s2") * 1.0 / n2
+    num = F.col("sjk") * 1.0 / n2 - mj * mj
+    den = F.sqrt(F.col("s3") * 1.0 / n2 - mj * mj)
+    return degm.crossJoin(F.broadcast(sjk)).select(
+        # coalesce: sum(d) over the 0-row degree table of an empty
+        # corpus is NULL where the oracle's count is 0
+        F.coalesce((n2 / 2).cast("long"), F.lit(0)).alias("n_edges"),
+        "n_nodes",
+        snap(num / (den * den), 6).alias("assortativity"),
+    )
 
 
 MODULARITY_ORACLE = """

@@ -20,7 +20,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from etl_data_ingestion_spark.catalog import load_table
+from etl_data_ingestion_spark.catalog import load_table, small_fact_session
 from etl_data_ingestion_spark.plans.registry import register
 
 AUC_ORACLE = """
@@ -1862,145 +1862,115 @@ def ml_item_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
     recommender primitive the basket-rules operator's support/lift
     view doesn't give (cosine normalizes by BOTH margins).
 
-    Plan (round-10 map-side pair expansion + round-11 AQE gate +
-    round-13 packed pair key): ONE corpus shuffle groups each
+    Plan: ONE corpus shuffle groups each
     order's distinct parts into a sorted array (collect_set;
     lineitem orders carry <= 7 lines), then the <= C(7,2)=21 pairs
     per basket expand MAP-SIDE from the array via a nested
     transform/flatten HOF — no distinct exchange, no sort-merge
     self-join, no second corpus shuffle; the pair count and the
     per-item margins both aggregate from that one persisted grouped
-    relation. The pair key is PACKED into one long before the
+    relation, which stays cached after the result runs (dropping the
+    persist measured a wash at sf0.1: min 1.72 s either way). The pair key is PACKED into one long before the
     Exchange — shiftleft(pa,32)|pb — so the named residual cost
     (the ~3M-row pair Exchange, floor table PLANS.md r12) carries a
     single 8-byte key instead of a two-long struct row and the
     partial hash-agg hashes one column; unpack is two bit ops after
     the c_ab>=2 filter. Bound: partkey < 2^31 (sf1 max 199,999;
     the struct form is the documented fallback past that).
-    Interleaved A/Bs: sf0.1 a wash (1.41 vs 1.41
-    min-of-6), sf1 every packed sample beat
-    every stock sample (3.53 vs 3.85 min-of-4, -8..12%) — kept on
-    the sf1-is-the-direction-of-scale rule (the r11 KEEP(sf1)
-    precedent). At 100 TB the same bound holds per basket;
+    Interleaved A/Bs of the packed key: sf0.1 a wash (1.41 vs 1.41
+    min-of-6), sf1 every packed sample beat every struct-key sample
+    (3.53 vs 3.85 min-of-4, -8..12%) — kept on the
+    sf1-is-the-direction-of-scale rule. At 100 TB the same bound holds per basket;
     heavy-hitter baskets (retail carts of 1000s) would cap or
     sample per basket before pairing — slice(parts, 1, K) on the
     sorted array is the documented cap. Integer counts -> one
     fixed-order cosine chain -> snapped ordering with full key
     tiebreak: deterministic top-20 in both engines. NO scan fan-out
-    (parallel=False; A/B'd round 10: 2.23 -> 1.63 at sf0.1,
-    3.77 -> 3.12 at sf1).
+    (parallel=False; A/B: 2.23 -> 1.63 at sf0.1, 3.77 -> 3.12 at
+    sf1).
 
-    Round-11 A/B ledger (min-of-4 interleaved, this form vs a
-    single-aggregation "diagonal" variant that folded the margins
-    into the pair groupBy): diagonal was 0.3s SLOWER at sf0.1
-    (2.63 vs 2.33 — persisting the c_ab=1 pair tail costs more than
-    the corpus-sized basket cache it saved) — measured and
-    REJECTED. What did move the number: the kcore AQE gate
-    (catalog.small_fact_aqe_gate, 1.87 -> 1.40 at sf0.1 and
-    3.81 -> 3.14 at sf1) — the r10 "two-phase hash agg latency"
-    residue was substantially AQE per-stage materialization. The
-    20-row result is persist+count-materialized INSIDE the gate (a
-    plain lazy return would execute under the restored session
-    conf; collect+createDataFrame paid ~0.55s of py4j
-    local-relation overhead) — same eager posture as
-    graph_kcore_peel."""
-    from etl_data_ingestion_spark.catalog import small_fact_aqe_gate
-
-    with small_fact_aqe_gate(spark, sf_dir, "lineitem"):
-        li = load_table(spark, sf_dir, "lineitem")
-        # Loud guard for the 64-bit pair pack below: pb occupies the
-        # low 32 bits, so any partkey outside [0, 2^31) would bleed
-        # into pa's bits and corrupt co-occurrence counts. raise_error
-        # inside the consumed column makes an out-of-range corpus FAIL
-        # the job (single codegen comparison, no extra Spark job)
-        # instead of returning wrong answers.
-        pk_guarded = F.when(
-            (F.col("l_partkey") >= 0)
-            & (F.col("l_partkey") < F.lit(2147483648)),
-            F.col("l_partkey"),
-        ).otherwise(
-            F.raise_error(
-                F.lit(
-                    "ml_item_item_cf: l_partkey outside [0, 2^31) breaks"
-                    " the packed pair key; repartition to wider keys"
+    A single-aggregation "diagonal" variant that folded the margins
+    into the pair groupBy was 0.3s SLOWER at sf0.1 (2.63 vs 2.33
+    min-of-4 interleaved — persisting the c_ab=1 pair tail costs more
+    than the corpus-sized basket cache it saved) — measured and
+    REJECTED. Planned on catalog.small_fact_session (1.87 -> 1.40 at
+    sf0.1 and 3.81 -> 3.14 at sf1): the two-phase hash-agg residue was
+    mostly AQE per-stage materialization. The top-20 is returned
+    lazily and runs in the caller's action."""
+    spark = small_fact_session(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
+    # Loud guard for the 64-bit pair pack below: pb occupies the
+    # low 32 bits, so any partkey outside [0, 2^31) would bleed
+    # into pa's bits and corrupt co-occurrence counts. raise_error
+    # inside the consumed column makes an out-of-range corpus FAIL
+    # the job (single codegen comparison, no extra Spark job)
+    # instead of returning wrong answers.
+    pk_guarded = F.when(
+        (F.col("l_partkey") >= 0) & (F.col("l_partkey") < F.lit(2147483648)),
+        F.col("l_partkey"),
+    ).otherwise(
+        F.raise_error(
+            F.lit(
+                "ml_item_item_cf: l_partkey outside [0, 2^31) breaks"
+                " the packed pair key; repartition to wider keys"
+            )
+        )
+    )
+    baskets = (
+        li.groupBy("l_orderkey")
+        .agg(F.sort_array(F.collect_set(pk_guarded)).alias("parts"))
+        .persist()
+    )
+    item = (
+        baskets.select(F.explode("parts").alias("l_partkey"))
+        .groupBy("l_partkey")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    pair_arr = F.flatten(
+        F.transform(
+            F.col("parts"),
+            lambda x, i: F.transform(
+                F.slice(F.col("parts"), i + F.lit(2), F.size(F.col("parts"))),
+                lambda y: F.shiftleft(x, 32) + y,
+            ),
+        )
+    )
+    pair = (
+        baskets.select(F.explode(pair_arr).alias("pk"))
+        .groupBy("pk")
+        .agg(F.count(F.lit(1)).alias("c_ab"))
+        .filter(F.col("c_ab") >= 2)
+        .select(
+            F.shiftright(F.col("pk"), 32).alias("pa"),
+            F.col("pk").bitwiseAND(F.lit(4294967295)).alias("pb"),
+            "c_ab",
+        )
+    )
+    scored = (
+        pair.join(
+            item.select(F.col("l_partkey").alias("pa"), F.col("c").alias("ca")),
+            "pa",
+        )
+        .join(
+            item.select(F.col("l_partkey").alias("pb"), F.col("c").alias("cb")),
+            "pb",
+        )
+        .select(
+            F.col("pa").alias("part_a"),
+            F.col("pb").alias("part_b"),
+            F.col("c_ab").cast("long").alias("co_orders"),
+            F.col("ca").cast("long").alias("n_a"),
+            F.col("cb").cast("long").alias("n_b"),
+            (
+                F.floor(
+                    F.col("c_ab") / F.sqrt(F.col("ca") * 1.0 * F.col("cb")) * 1000000
+                    + F.lit(0.5)
                 )
-            )
+                / 1000000
+            ).alias("cosine"),
         )
-        baskets = (
-            li.groupBy("l_orderkey")
-            .agg(F.sort_array(F.collect_set(pk_guarded)).alias("parts"))
-            .persist()
-        )
-        item = (
-            baskets.select(F.explode("parts").alias("l_partkey"))
-            .groupBy("l_partkey")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        pair_arr = F.flatten(
-            F.transform(
-                F.col("parts"),
-                lambda x, i: F.transform(
-                    F.slice(
-                        F.col("parts"),
-                        i + F.lit(2),
-                        F.size(F.col("parts")),
-                    ),
-                    lambda y: F.shiftleft(x, 32) + y,
-                ),
-            )
-        )
-        pair = (
-            baskets.select(F.explode(pair_arr).alias("pk"))
-            .groupBy("pk")
-            .agg(F.count(F.lit(1)).alias("c_ab"))
-            .filter(F.col("c_ab") >= 2)
-            .select(
-                F.shiftright(F.col("pk"), 32).alias("pa"),
-                F.col("pk").bitwiseAND(F.lit(4294967295)).alias("pb"),
-                "c_ab",
-            )
-        )
-        scored = (
-            pair.join(
-                item.select(
-                    F.col("l_partkey").alias("pa"), F.col("c").alias("ca")
-                ),
-                "pa",
-            )
-            .join(
-                item.select(
-                    F.col("l_partkey").alias("pb"), F.col("c").alias("cb")
-                ),
-                "pb",
-            )
-            .select(
-                F.col("pa").alias("part_a"),
-                F.col("pb").alias("part_b"),
-                F.col("c_ab").cast("long").alias("co_orders"),
-                F.col("ca").cast("long").alias("n_a"),
-                F.col("cb").cast("long").alias("n_b"),
-                (
-                    F.floor(
-                        F.col("c_ab")
-                        / F.sqrt(F.col("ca") * 1.0 * F.col("cb"))
-                        * 1000000
-                        + F.lit(0.5)
-                    )
-                    / 1000000
-                ).alias("cosine"),
-            )
-        )
-        # materialize the 20-row result INSIDE the gate (persist +
-        # count; a lazy return would execute under the restored
-        # session conf, and collect+createDataFrame measured ~0.55s
-        # of py4j local-relation overhead) — the caller reads the
-        # tiny cached relation
-        top = scored.orderBy(
-            F.col("cosine").desc(), "part_a", "part_b"
-        ).limit(20).persist()
-        top.count()
-        baskets.unpersist()
-    return top
+    )
+    return scored.orderBy(F.col("cosine").desc(), "part_a", "part_b").limit(20)
 
 
 FEATURE_HASH_ORACLE = """

@@ -19,6 +19,7 @@ from etl_data_ingestion_spark.functions.text import (
     rolling_fingerprint,
     token_count,
     tokens,
+    word_windows_from,
 )
 from etl_data_ingestion_spark.plans.registry import register
 
@@ -448,10 +449,7 @@ def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda u: F.size(F.filter("ts", lambda t: t == u)),
         )
     )
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size("ts") - 2),
-        lambda i: F.concat_ws(" ", F.element_at("ts", i + 1), F.element_at("ts", i + 2)),
-    )
+    grams = word_windows_from("ts", 2)
     return with_ts.select(
         "doc_id",
         F.round(top_c / F.size("ts"), 4).alias("top_word_frac"),
@@ -2571,14 +2569,7 @@ def text_good_turing_estimates(
     ).filter(F.size("a") >= 3)
     tf = (
         toks.select(
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.size("a") - 3),
-                    lambda i: F.concat_ws(
-                        " ", F.slice(F.col("a"), i + 1, 3)
-                    ),
-                )
-            ).alias("term")
+            F.explode(word_windows_from("a", 3)).alias("term")
         )
         .groupBy("term")
         .agg(F.count(F.lit(1)).cast("long").alias("freq"))
@@ -2740,9 +2731,8 @@ def text_distinct_ngram_diversity(
     count-distinct aggregation keyed on (source, n). The exchange
     carries (source, n, gram) distinct pairs, i.e. per-source
     VOCABULARY size, not corpus size — the same envelope as TF-IDF's
-    document-frequency exchange. The bigram HOF guards size >= 2
-    (Spark's sequence() would DESCEND on a negative stop and emit
-    phantom grams)."""
+    document-frequency exchange. Bigrams come from
+    functions/text.word_windows_from (repeats kept)."""
     docs = load_table(spark, sf_dir, "documents", parallel=False)
     toks = docs.filter(F.length(F.trim("text")) > 0).select(
         "source", F.split(F.trim("text"), r"\s+").alias("tk")
@@ -2753,14 +2743,7 @@ def text_distinct_ngram_diversity(
     bi = toks.filter(F.size("tk") >= 2).select(
         "source",
         F.lit(2).alias("n"),
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("tk") - 2),
-                lambda i: F.concat_ws(
-                    " ", F.slice(F.col("tk"), i + 1, 2)
-                ),
-            )
-        ).alias("gram"),
+        F.explode(word_windows_from("tk", 2)).alias("gram"),
     )
     rel = uni.unionByName(bi)
     return (

@@ -196,8 +196,8 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 Q6_ORACLE = """
 SELECT ROUND(SUM(l_extendedprice * l_discount), 2) AS revenue
 FROM lineitem
-WHERE CAST(l_shipdate AS DATE) >= DATE '1994-01-01'
-  AND CAST(l_shipdate AS DATE) <  DATE '1995-01-01'
+WHERE CAST(l_shipdate AS DATE) >= DATE '1995-01-01'
+  AND CAST(l_shipdate AS DATE) <  DATE '1996-01-01'
   AND l_discount BETWEEN 0.05 AND 0.07
   AND l_quantity < 24
 """
@@ -205,7 +205,9 @@ WHERE CAST(l_shipdate AS DATE) >= DATE '1994-01-01'
 
 @register("tpch_q6_forecast_revenue", oracle=Q6_ORACLE)
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6: pure scan-filter-aggregate, no grouping.
+    """TPC-H Q6: pure scan-filter-aggregate, no grouping. DATE is
+    1995-01-01 (TPC-H draws it from 1 January of 1993-1997), a year
+    the fixtures' l_shipdate range covers.
 
     Scale: every predicate pushes to parquet (row-group skipping on
     l_shipdate/l_discount/l_quantity stats); single global agg is a
@@ -214,8 +216,8 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(
-            (F.col("l_shipdate").cast("date") >= F.lit("1994-01-01").cast("date"))
-            & (F.col("l_shipdate").cast("date") < F.lit("1995-01-01").cast("date"))
+            (F.col("l_shipdate").cast("date") >= F.lit("1995-01-01").cast("date"))
+            & (F.col("l_shipdate").cast("date") < F.lit("1996-01-01").cast("date"))
             & (F.col("l_discount").between(0.05, 0.07))
             & (F.col("l_quantity") < 24)
         )

@@ -24,7 +24,9 @@ for scale-readiness:
   session, because a table read must not write session conf.
 
 ``SESSION_CONFS`` is the whole contract; ``tune_session`` applies it to
-a driver's own session. No engine-private conf exists: the catalog's
+a driver's own session, and ``child_session`` to a new session that
+carries further confs of its own (the only other conf writer). No
+engine-private conf exists: the catalog's
 scan fan-out follows the session's default parallelism, so a tuned
 vanilla ``local[N]`` session builds the same scans as ``get_spark(cpus=N)``
 and only its shuffle partition count differs.
@@ -128,3 +130,20 @@ def tune_session(spark: SparkSession) -> SparkSession:
         spark.conf.set(k, v)
     ship_package(spark)
     return spark
+
+
+def child_session(spark: SparkSession, confs: dict[str, str]) -> SparkSession:
+    """A new session over ``spark``'s context with the session contract
+    and then ``confs`` applied: the way to run a query under other SQL
+    confs without writing the caller's.
+
+    ``newSession()`` carries no runtime conf of its parent (only the
+    SparkConf), hence the re-tune. The child shares the parent's
+    SparkContext, shipped files and CacheManager, so a relation the
+    parent persisted serves the child's plans; temp views and the
+    catalog's per-session registries are its own.
+    """
+    child = tune_session(spark.newSession())
+    for k, v in confs.items():
+        child.conf.set(k, v)
+    return child

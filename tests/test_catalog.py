@@ -10,7 +10,9 @@ import shutil
 from pyspark.sql import DataFrameWriter
 
 from etl_data_ingestion_spark import catalog
-from etl_data_ingestion_spark.session import tune_session
+from etl_data_ingestion_spark.session import child_session, tune_session
+
+AQE = "spark.sql.adaptive.enabled"
 
 
 def _exec_plan(df) -> str:
@@ -97,6 +99,25 @@ def test_no_private_conf_key_steers_the_engine():
     assert hits == []
 
 
+def test_only_session_py_writes_conf():
+    """Session conf is written in one module: session.py
+    (tune_session and child_session). Anything else that needs other
+    confs runs on a child session."""
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "etl_data_ingestion_spark",
+    )
+    hits = []
+    for root, _, files in os.walk(pkg):
+        for f in files:
+            if f.endswith(".py"):
+                path = os.path.join(root, f)
+                with open(path, encoding="utf-8") as fh:
+                    if ".conf.set(" in fh.read():
+                        hits.append(os.path.relpath(path, pkg))
+    assert hits == ["session.py"]
+
+
 def test_plan_cache_semantics(spark, sf_dir):
     """Scan registry: same plan object per (session, table);
     drop_plan_cache invalidates."""
@@ -170,24 +191,25 @@ def test_bucketed_tables_keyed_by_absolute_dir(spark, sf_dir, tmp_path):
         _drop_tables(spark, tables)
 
 
-def test_small_fact_aqe_gate_unknown_paths_keep_aqe_on(spark):
+def test_small_fact_aqe_gate_unknown_paths_keep_aqe_on(spark, tmp_path):
     """The gate treats non-local URIs / missing paths / 0-byte walks
-    as unknown/LARGE: AQE must stay ON (os.walk yields nothing for
-    s3://, and reading that as 'tiny input' would turn AQE off at
-    cluster scale)."""
-    for bogus in ("s3://bucket/prefix", "/nonexistent/path"):
-        with catalog.small_fact_aqe_gate(spark, bogus, "lineitem") as toggled:
-            assert not toggled
-            assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    as unknown/LARGE and hands back the caller's own session, AQE on
+    (os.walk yields nothing for s3://, and reading that as 'tiny
+    input' would turn AQE off at cluster scale)."""
+    empty = tmp_path / "lineitem.parquet"
+    empty.mkdir()
+    for bogus in ("s3://bucket/prefix", "/nonexistent/path", str(tmp_path)):
+        assert catalog.small_fact_session(spark, bogus, "lineitem") is spark
+    assert spark.conf.get(AQE) == "true"
 
 
 def test_gate_v2_sizes_partitions_from_footprint(spark, sf_dir):
-    """The gate derives static shuffle partitions from the fact
-    footprint (~4 MiB/partition, floor 8, NEVER above the session
-    default — so it self-disables when the default is already small
-    or the fact is large) and restores the conf on exit."""
+    """The gate's child plans statically with shuffle partitions sized
+    from the fact footprint (~4 MiB/partition, floor 8, NEVER above
+    the caller's), one child per (caller, count); a caller with AQE
+    already off keeps its own session; no caller conf is written."""
     key = "spark.sql.shuffle.partitions"
-    before = spark.conf.get(key)
+    before = spark.conf.getAll
     fact = os.path.join(sf_dir, "lineitem.parquet")
     fact_bytes = (
         os.path.getsize(fact)
@@ -198,13 +220,87 @@ def test_gate_v2_sizes_partitions_from_footprint(spark, sf_dir):
             for f in fs
         )
     )
-    derived = max(8, min(int(before), fact_bytes // (4 << 20)))
-    with catalog.small_fact_aqe_gate(spark, sf_dir, "lineitem") as toggled:
-        if toggled:
-            inside = int(spark.conf.get(key))
-            if derived < int(before):
-                assert inside == derived
-            else:
-                assert inside == int(before)  # override self-disabled
-            assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-    assert spark.conf.get(key) == before
+    derived = min(int(spark.conf.get(key)), max(8, fact_bytes // (4 << 20)))
+    child = catalog.small_fact_session(spark, sf_dir, "lineitem")
+    assert child is not spark
+    assert child.conf.get(AQE) == "false"
+    assert child.conf.get(key) == str(derived)
+    assert child.conf.get("spark.sql.session.timeZone") == "UTC"
+    assert catalog.small_fact_session(spark, sf_dir, "lineitem") is child
+    narrow = child_session(spark, {key: "3"})
+    assert catalog.small_fact_session(narrow, sf_dir, "lineitem").conf.get(key) == "3"
+    static = child_session(spark, {AQE: "false"})
+    assert catalog.small_fact_session(static, sf_dir, "lineitem") is static
+    assert spark.conf.getAll == before
+
+
+def test_drop_plan_cache_drops_the_gate_children(spark, sf_dir):
+    """drop_plan_cache forgets the caller's gate children and their
+    scans; the next gated call builds a new child."""
+    caller = child_session(spark, {})
+    child = catalog.small_fact_session(caller, sf_dir, "lineitem")
+    catalog.load_table(child, sf_dir, "lineitem")
+    assert child in catalog._SCANS
+    catalog.drop_plan_cache(caller)
+    assert caller not in catalog._CHILDREN and child not in catalog._SCANS
+    assert catalog.small_fact_session(caller, sf_dir, "lineitem") is not child
+
+
+# The builders planned on catalog.small_fact_session, with their Spark
+# jobs per query at sf0.001 on a second call (first-read
+# jobs are not counted), the builder's own eager jobs included.
+GATED_JOBS = {
+    "graph_kcore_peel": 6,
+    "ml_item_item_cf": 2,
+    "graph_assortativity": 4,
+    "dedup_end_to_end_canonical": 18,
+}
+
+
+def test_gated_builders_leave_the_caller_adaptive(spark, sf_dir, monkeypatch):
+    """While a gated builder reads its tables the caller's AQE stays
+    on, and the frame it returns, collected after it returned, runs a
+    non-adaptive plan."""
+    from etl_data_ingestion_spark.operators import dedup, graph, mlops
+    from etl_data_ingestion_spark.plans import registry
+
+    registry.load_all()
+    seen = []
+    for mod in (graph, mlops, dedup):
+
+        def recording(*args, _real=mod.load_table, **kwargs):
+            seen.append(spark.conf.get(AQE))
+            return _real(*args, **kwargs)
+
+        monkeypatch.setattr(mod, "load_table", recording)
+    for name in GATED_JOBS:
+        seen.clear()
+        df = registry.QUERIES[name](spark, sf_dir)
+        assert seen and set(seen) == {"true"}, (name, seen)
+        df.collect()
+        assert "AdaptiveSparkPlan" not in _exec_plan(df), name
+        spark.catalog.clearCache()
+
+
+def test_gated_jobs_per_query(spark, sf_dir):
+    """Each gated query runs a fixed number of Spark jobs, counted
+    under a job group: an eager job that slips back into a builder, or
+    a child session that re-reads a schema per call, fails here."""
+    from etl_data_ingestion_spark.plans import registry
+
+    registry.load_all()
+    sc = spark.sparkContext
+    jobs = {}
+    for query in GATED_JOBS:
+        registry.QUERIES[query](spark, sf_dir).collect()
+        spark.catalog.clearCache()
+        group = f"gated_jobs_{query}"
+        sc.setJobGroup(group, group)
+        try:
+            registry.QUERIES[query](spark, sf_dir).collect()
+        finally:
+            sc.setJobGroup(None, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs[query] = len(sc.statusTracker().getJobIdsForGroup(group))
+        spark.catalog.clearCache()
+    assert jobs == GATED_JOBS

@@ -1,6 +1,7 @@
 """The oracle check in plans/parity.py: its canon and comparison without
 Spark, then whole queries against their oracles on a non-default
-layout (AQE off, 3 shuffle partitions) in a child session."""
+layout (AQE off, 3 shuffle partitions) in a child session, and the
+small-fact-gated queries on an AQE-on caller, where the gate engages."""
 
 from __future__ import annotations
 
@@ -10,8 +11,9 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from etl_data_ingestion_spark import catalog
 from etl_data_ingestion_spark.plans import parity, registry
-from etl_data_ingestion_spark.session import tune_session
+from etl_data_ingestion_spark.session import child_session
 
 canon = parity.canon_cell
 LONG = np.arange(2000.0)
@@ -49,36 +51,59 @@ def test_compare_reasons():
 
 
 # The analytics workload's nine queries, the other edge_build callers
-# and the four builders that run under catalog.small_fact_aqe_gate, on
-# a layout no builder was tuned for.
+# and the four builders planned on catalog.small_fact_session, on a
+# layout no builder was tuned for.
+GATED_QUERIES = [
+    "graph_kcore_peel", "ml_item_item_cf", "graph_assortativity", "dedup_end_to_end_canonical",
+]
 LAYOUT_QUERIES = [
     "tpch_q1_pricing_summary", "tpch_q3_shipping_priority", "tpch_q6_forecast_revenue",
     "window_running_total", "join_asof_purchase_view", "stream_tumbling_hourly",
     "subquery_correlated_avg_qty", "dedup_minhash_lsh", "graph_adamic_adar_topk",
     "graph_triangle_count", "graph_link_prediction", "graph_local_clustering_coeff",
-    "graph_label_propagation_2round", "graph_ktruss_edge_support",
-    "graph_kcore_peel", "ml_item_item_cf", "graph_assortativity", "dedup_end_to_end_canonical",
+    "graph_label_propagation_2round", "graph_ktruss_edge_support", *GATED_QUERIES,
 ]
 LAYOUT = {"spark.sql.adaptive.enabled": "false", "spark.sql.shuffle.partitions": "3"}
 
 
 @pytest.fixture(scope="module")
-def layout(spark, sf_dir):
+def con(sf_dir):
     registry.load_all()
-    child = tune_session(spark.newSession())
-    for k, v in LAYOUT.items():
-        child.conf.set(k, v)
     con = parity.duckdb_views(sf_dir)
-    yield child, con
+    yield con
     con.close()
 
 
+@pytest.fixture(scope="module")
+def layout(spark):
+    return child_session(spark, LAYOUT)
+
+
 @pytest.mark.parametrize("name", LAYOUT_QUERIES)
-def test_query_matches_oracle_on_a_non_default_layout(spark, sf_dir, layout, name):
-    child, con = layout
+def test_query_matches_oracle_on_a_non_default_layout(spark, sf_dir, con, layout, name):
     parent = {k: spark.conf.get(k) for k in LAYOUT}
-    before = child.conf.getAll
-    v = parity.check(child, con, name, sf_dir)
+    before = layout.conf.getAll
+    v = parity.check(layout, con, name, sf_dir)
     assert v.status == parity.OK, (v.detail, v.error)
-    assert child.conf.getAll == before
+    assert layout.conf.getAll == before
     assert {k: spark.conf.get(k) for k in LAYOUT} == parent
+
+
+@pytest.fixture(scope="module")
+def adaptive(spark):
+    """A tuned caller on the default layout (AQE on) that no gated
+    builder has run on yet."""
+    return child_session(spark, {})
+
+
+@pytest.mark.parametrize("name", GATED_QUERIES)
+def test_gated_query_matches_oracle_with_the_gate_engaged(sf_dir, con, adaptive, name):
+    """On an AQE-on caller the gate plans on its own child session: the
+    result still matches the oracle and the caller's conf is the same
+    after the query's first call as before it."""
+    assert adaptive.conf.get("spark.sql.adaptive.enabled") == "true"
+    before = adaptive.conf.getAll
+    v = parity.check(adaptive, con, name, sf_dir)
+    assert v.status == parity.OK, (v.detail, v.error)
+    assert adaptive.conf.getAll == before
+    assert catalog._CHILDREN.get(adaptive), "the gate did not engage"

@@ -61,8 +61,8 @@ def test_repeated_lines_scans_documents_once(spark, sf_dir):
 
 
 def test_kcore_restores_aqe_conf(spark, sf_dir):
-    """The small-graph AQE gate must restore the session conf even
-    though the operator runs driver-side actions internally."""
+    """The small-graph AQE gate leaves the caller's conf as it found
+    it: the static plan runs on its own child session."""
     before = spark.conf.get("spark.sql.adaptive.enabled", "true")
     rows = registry.QUERIES["graph_kcore_peel"](spark, sf_dir).collect()
     after = spark.conf.get("spark.sql.adaptive.enabled", "true")

@@ -54,10 +54,9 @@ def test_naive_bayes_has_no_window_argmax(spark, sf_dir):
 
 
 def test_item_cf_returns_materialized_top20(spark, sf_dir):
-    """ml_item_item_cf materializes its 20-row result inside the AQE
-    gate (persist+count — a lazy return would execute under the
-    restored session conf). The returned plan must therefore read an
-    InMemoryRelation, and the session AQE conf must be restored."""
+    """ml_item_item_cf's returned top-20 plan reads its persisted
+    baskets (an InMemoryRelation), and building it on the small-fact
+    gate's child session leaves the caller's AQE conf as it was."""
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     plan = _plan(spark, "ml_item_item_cf", sf_dir)
     assert "InMemoryTableScan" in plan, plan[:2000]
@@ -66,9 +65,10 @@ def test_item_cf_returns_materialized_top20(spark, sf_dir):
 
 
 def test_kcore_gate_restores_conf_and_materializes(spark, sf_dir):
-    """graph_kcore_peel fuses its four per-level count actions into
-    one collect inside the shared AQE gate; the conf must be restored
-    after construction and the result must be 4 deterministic rows."""
+    """graph_kcore_peel fuses its four per-level counts into one union
+    built on the small-fact gate's child session; the caller's conf is
+    unchanged after construction and the result is 4 deterministic
+    rows."""
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     df = registry.QUERIES["graph_kcore_peel"](spark, sf_dir)
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"

@@ -71,7 +71,7 @@ def test_item_cf_packed_key_guard_raises(spark, tmp_path):
         str(tmp_path / "lineitem.parquet")
     )
     with pytest.raises(Exception, match="l_partkey outside"):
-        registry.QUERIES["ml_item_item_cf"](spark, str(tmp_path))
+        registry.QUERIES["ml_item_item_cf"](spark, str(tmp_path)).collect()
 
 
 def test_item_cf_guard_passes_in_range(spark):
