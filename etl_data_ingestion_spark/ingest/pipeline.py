@@ -26,10 +26,16 @@ counts the rows parsed, so a caller learns how many rows a sink
 rejected from the write that reads them.
 
 At email size a file's wait is fixed cost, not data: the plan build
-and one Spark job (the warehouse append). The coercion projections
-are SQL text (``coerce.py``), so building a clean 21-column file's
-plans takes about 150 py4j commands, not the ~3000 that ``Column``
-expressions cost.
+and a share of one Spark job (``runner.process_files`` lands a set of
+files in one warehouse append). The coercion projections are SQL text
+(``coerce.py``), so building a clean 21-column file's plans takes
+about 150 py4j commands, not the ~3000 that ``Column`` expressions
+cost.
+
+Both frames carry every ``BQ_SCHEMA_TYPES`` column in schema order,
+whatever the file's header order; a column the file lacks is a typed
+NULL. So every file's frames have one shape: the warehouse directory's
+part files share one schema, and a set of files unions by position.
 """
 
 from __future__ import annotations
@@ -42,7 +48,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
 
 from etl_data_ingestion_spark.schema import BQ_SCHEMA_TYPES, canonical_name
-from etl_data_ingestion_spark.ingest.coerce import split_valid_quarantine
+from etl_data_ingestion_spark.ingest.coerce import sql_ident, split_valid_quarantine
 
 CORRUPT_COL = "_corrupt_record"
 # The CSV reader drops a line whose Scala ``trim`` is empty, and that
@@ -139,11 +145,15 @@ def ingest_ctb_file(spark: SparkSession, path: str) -> IngestResult:
         quote="",  # the reference splits on tabs only — no quoting (main.py:370)
     ).observe(parsed, F.count(F.lit(1)).alias("rows"))
 
-    # Present columns in schema order; absent columns stay NULL-typed.
-    types = {c: BQ_SCHEMA_TYPES[c] for c in canonical}
+    # A column the file lacks reads as NULL, which coerces to a typed
+    # NULL; the projections then list every column in schema order.
+    absent = [c for c in BQ_SCHEMA_TYPES if c not in canonical]
+    if absent:
+        raw = raw.selectExpr(
+            "*", *[f"CAST(NULL AS STRING) AS {sql_ident(c)}" for c in absent]
+        )
     valid, quarantine = split_valid_quarantine(
         raw,
-        types=types,
         corrupt_col=CORRUPT_COL,
         source_file_col=F.input_file_name(),
     )

@@ -7,30 +7,44 @@ same way while every partition writes in parallel. Appends are
 idempotent-friendly: load_id identifies a source file's batch so a
 replay can be deduplicated downstream (fixes the reference's
 at-most-once gap, SURVEY.md §4.1).
+
+Every sink's ``write(parts)`` takes ``(load_id, DataFrame)`` pairs and
+appends them all in one Spark job, returning ``{load_id: rows}``. The
+frames must have the same columns in the same order: the union is
+positional.
 """
 
 from __future__ import annotations
 
-from typing import Callable
+from functools import reduce
+from typing import Callable, Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, DataFrameWriter, Observation
 
+Parts = Sequence[tuple[str, DataFrame]]
+
 
 def _append_counted(
-    df: DataFrame, load_id: str, tail: Callable[[DataFrameWriter], object]
-) -> int:
-    """Append ``df`` tagged with load_id; ``tail`` finishes the append
-    ``DataFrameWriter`` (format, options, save). Returns rows written,
-    counted via an Observation on the write itself (no second scan, no
-    driver collect)."""
-    obs = Observation(f"write:{load_id}")
-    tail(
-        df.withColumn("_load_id", F.lit(load_id))
-        .observe(obs, F.count(F.lit(1)).alias("rows"))
-        .write.mode("append")
-    )
-    return int(obs.get["rows"])
+    parts: Parts, tail: Callable[[DataFrameWriter], object]
+) -> dict[str, int]:
+    """Append the union of ``parts``, each frame tagged with its
+    load_id, in one write; ``tail`` finishes the append
+    ``DataFrameWriter`` (format, options, save). Returns rows written
+    per load_id, counted by one Observation per branch of the write
+    itself (no second scan, no driver collect). The load_ids must be
+    distinct: they name the Observations."""
+    tagged, counted = [], []
+    for load_id, df in parts:
+        obs = Observation(f"write:{load_id}")
+        tagged.append(
+            df.withColumn("_load_id", F.lit(load_id)).observe(
+                obs, F.count(F.lit(1)).alias("rows")
+            )
+        )
+        counted.append((load_id, obs))
+    tail(reduce(DataFrame.union, tagged).write.mode("append"))
+    return {load_id: int(obs.get["rows"]) for load_id, obs in counted}
 
 
 class ParquetWarehouseSink:
@@ -62,10 +76,9 @@ class ParquetWarehouseSink:
                 f"Target table/path does not exist or is not accessible: {self.path}"
             )
 
-    def write(self, df: DataFrame, load_id: str) -> int:
+    def write(self, parts: Parts) -> dict[str, int]:
         return _append_counted(
-            df,
-            load_id,
+            parts,
             lambda w: w.option("maxRecordsPerFile", self.batch_size).parquet(self.path),
         )
 
@@ -109,10 +122,9 @@ class BigQueryWarehouseSink:
                 "use make_warehouse_sink() for guarded fallback"
             )
 
-    def write(self, df: DataFrame, load_id: str) -> int:
+    def write(self, parts: Parts) -> dict[str, int]:
         return _append_counted(
-            df,
-            load_id,
+            parts,
             lambda w: w.format("bigquery").option("table", self.table).save(),
         )
 
@@ -167,10 +179,9 @@ class BucketedWarehouseSink:
         self.bucket_cols = list(bucket_cols)
         self.n_buckets = n_buckets
 
-    def write(self, df: DataFrame, load_id: str) -> int:
+    def write(self, parts: Parts) -> dict[str, int]:
         return _append_counted(
-            df,
-            load_id,
+            parts,
             lambda w: w.bucketBy(self.n_buckets, *self.bucket_cols)
             .sortBy(*self.bucket_cols)
             .format("parquet")

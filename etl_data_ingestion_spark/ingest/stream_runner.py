@@ -15,12 +15,14 @@ and the arrival log is the file source's own checkpoint log. Before a
 micro-batch runs, the source writes the files it chose to
 ``<checkpoint>/sources/0/<batchId>``. ``logged_paths`` reads that file
 on the driver, as ``pipeline.read_raw_header`` reads a landed file, and
-each path goes to ``runner.process_file``, the per-file policy the
-batch runner uses, against the file still sitting in the watch dir
-(archival happens after the batch commits). The batch's frame is never
-touched, so the stream runs no Spark job of its own: every job in a
-drain is a sink append. A 0-byte file, which ``binaryFile`` gives no
-row, is in the log too, so it fails like it does in the batch runner.
+the batch's paths go to ``runner.process_files``, the policy the batch
+runner lands its listing with, against the files still sitting in the
+watch dir (archival happens after the batch commits). The batch's frame
+is never touched, so the stream runs no Spark job of its own: a
+micro-batch's jobs are the appends of ``process_files`` (two for a
+batch of up to ``runner.GROUP_FILES`` files with rejected rows). A
+0-byte file, which ``binaryFile`` gives no row, is in the log too, so
+it fails like it does in the batch runner.
 
 A micro-batch re-run after a crash keeps its batch id and so reads the
 same log entry: the checkpoint's exactly-once consumption is unchanged.
@@ -38,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 # Kept importable here: perfbench traces ``stream_runner.ingest_ctb_file``.
 from etl_data_ingestion_spark.ingest.pipeline import ingest_ctb_file  # noqa: F401
-from etl_data_ingestion_spark.ingest.runner import RunReport, finish_run, process_file
+from etl_data_ingestion_spark.ingest.runner import RunReport, finish_run, process_files
 from etl_data_ingestion_spark.ingest.sinks import ParquetWarehouseSink
 from etl_data_ingestion_spark.notify import Notifier
 
@@ -118,10 +120,12 @@ def run_landing_zone_stream(
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        for path in logged_paths(spark, checkpoint_dir, batch_id):
-            report.outcomes.append(
-                process_file(spark, path, warehouse, quarantine, notifier)
+        report.outcomes.extend(
+            process_files(
+                spark, logged_paths(spark, checkpoint_dir, batch_id),
+                warehouse, quarantine, notifier,
             )
+        )
 
     q = (
         files.writeStream.foreachBatch(process_batch)

@@ -69,8 +69,8 @@ def test_bucketed_sink_joins_without_shuffle(spark, sf_dir):
     spark.sql("DROP TABLE IF EXISTS wh_bucketed")
     sink = BucketedWarehouseSink("wh_bucketed", ["l_orderkey"], n_buckets=4)
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    n1 = sink.write(li, load_id="file_a")
-    n2 = sink.write(li.limit(100), load_id="file_b")
+    n1 = sink.write([("file_a", li)])["file_a"]
+    n2 = sink.write([("file_b", li.limit(100))])["file_b"]
     t = spark.table("wh_bucketed")
     assert t.count() == n1 + n2
     assert set(t.columns) == {"l_orderkey", "l_quantity", "_load_id"}

@@ -3,17 +3,36 @@ policy, notifications, warehouse append (reference L1-L5 / O1-O6)."""
 
 from __future__ import annotations
 
+import gzip
+import importlib.util
 import logging
 import os
+import shutil
+import sys
 
 import pytest
 
+from etl_data_ingestion_spark.ingest import runner
 from etl_data_ingestion_spark.ingest.lifecycle import LandingZone
-from etl_data_ingestion_spark.ingest.runner import process_file, run_landing_zone
+from etl_data_ingestion_spark.ingest.runner import (
+    process_file,
+    process_files,
+    run_landing_zone,
+)
 from etl_data_ingestion_spark.ingest.sinks import ParquetWarehouseSink
 from etl_data_ingestion_spark.ingest.stream_runner import run_landing_zone_stream
 from etl_data_ingestion_spark.notify import CollectingNotifier
+from etl_data_ingestion_spark.schema import BQ_SCHEMA_TYPES
 from tests.test_ingest_ctb import GOOD, CANONICAL, header_line, row
+
+# the benchmark's seeded landing-set generator, loaded by path so that
+# perfbench's other modules stay off sys.path
+_spec = importlib.util.spec_from_file_location(
+    "ctbgen",
+    os.path.join(os.path.dirname(os.path.dirname(__file__)), "perfbench", "ctbgen.py"),
+)
+ctbgen = sys.modules["ctbgen"] = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(ctbgen)
 
 
 @pytest.fixture
@@ -116,8 +135,8 @@ def test_quarantine_count_mismatch_fails_the_file(spark, zone, tmp_path):
     warehouse rejected fails the file with an error notification."""
 
     class ShortSink(ParquetWarehouseSink):
-        def write(self, df, load_id):
-            return super().write(df, load_id) - 1
+        def write(self, parts):
+            return {k: n - 1 for k, n in super().write(parts).items()}
 
     partial = [header_line(), row(), row(DEMAND_QTY="x"), ""]
     zone.put("CTB_partial.tsv", "\n".join(partial).encode())
@@ -260,37 +279,293 @@ def test_batch_and_stream_runners_agree(spark, zone, tmp_path):
     }
 
 
-def test_jobs_per_file_kind(spark, tmp_path):
-    """Each file kind costs a fixed number of Spark jobs: the header
-    and data-row probe runs on the driver, the warehouse append is one
-    job, and the quarantine append one more only when rows were
-    rejected."""
+SHORT = "\t".join(row().split("\t")[:-1])
+# one landed file of each kind; None is a 0-byte file
+FILE_KINDS = {
+    "clean": [header_line(), row(), row()],
+    "defects": [header_line(), row(), row(DEMAND_QTY="x"), SHORT, row() + "\tv"],
+    "headeronly": [header_line()],
+    "unknown": [header_line() + "\tEXTRA COL", row() + "\tv"],
+    "zerobyte": None,
+}
+
+
+def land_kinds(directory) -> None:
+    for kind, lines in FILE_KINDS.items():
+        (directory / f"CTB_{kind}.tsv").write_text(
+            "" if lines is None else "\n".join([*lines, ""])
+        )
+
+
+def jobs_run(spark, group: str, fn) -> int:
+    """The Spark jobs ``fn()`` runs, counted under a job group."""
     sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_jobs_per_file_kind(spark, zone, tmp_path):
+    """Each file kind costs a fixed number of Spark jobs alone: the
+    header and data-row probe runs on the driver, the warehouse append
+    is one job, and the quarantine append one more only when rows were
+    rejected. A drain of all five kinds costs the same two jobs: one
+    warehouse append for every file and one quarantine append."""
     wh = ParquetWarehouseSink(str(tmp_path / "wh"))
     qr = ParquetWarehouseSink(str(tmp_path / "q"))
-    short = "\t".join(row().split("\t")[:-1])
-    kinds = {
-        "clean": [header_line(), row(), row()],
-        "defects": [header_line(), row(), row(DEMAND_QTY="x"), short, row() + "\tv"],
-        "headeronly": [header_line()],
-        "unknown": [header_line() + "\tEXTRA COL", row() + "\tv"],
-        "zerobyte": None,
+    alone = tmp_path / "alone"
+    alone.mkdir()
+    land_kinds(alone)
+    jobs = {
+        kind: jobs_run(
+            spark, f"jobs_per_file_{kind}",
+            lambda: process_file(
+                spark, str(alone / f"CTB_{kind}.tsv"), wh, qr, CollectingNotifier()
+            ),
+        )
+        for kind in FILE_KINDS
     }
-    jobs = {}
-    for kind, lines in kinds.items():
-        path = tmp_path / f"CTB_{kind}.tsv"
-        path.write_text("" if lines is None else "\n".join([*lines, ""]))
-        group = f"jobs_per_file_{kind}"
-        sc.setJobGroup(group, group)
-        try:
-            process_file(spark, str(path), wh, qr, CollectingNotifier())
-        finally:
-            sc.setJobGroup(None, None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        jobs[kind] = len(sc.statusTracker().getJobIdsForGroup(group))
     assert jobs == {
         "clean": 1, "defects": 2, "headeronly": 0, "unknown": 0, "zerobyte": 0,
     }
+    land_kinds(tmp_path / "landing" / "Unprocessed")
+    reports = []
+    drain = jobs_run(spark, "jobs_per_drain", lambda: reports.append(run_landing_zone(
+        spark, zone,
+        ParquetWarehouseSink(str(tmp_path / "d_wh")),
+        ParquetWarehouseSink(str(tmp_path / "d_q")),
+        CollectingNotifier(),
+    )))
+    assert [o.state for o in reports[0].outcomes] == [
+        "processed", "processed", "failed", "failed", "failed",
+    ]
+    assert drain == 2
+
+
+@pytest.mark.parametrize("n, group, want", [(4, None, 2), (16, None, 2), (4, 3, 4)])
+def test_jobs_per_drain_do_not_grow_with_files(spark, tmp_path, monkeypatch, n, group, want):
+    """A drain of up to ``GROUP_FILES`` generated files with row defects
+    costs two Spark jobs whatever their number, and each file's outcome
+    is the generator's. A larger drain costs two jobs per group."""
+    if group is not None:
+        monkeypatch.setattr(runner, "GROUP_FILES", group)
+    assert n <= runner.GROUP_FILES or group is not None
+    zone = LandingZone(spark, str(tmp_path / "landing"))
+    zone.ensure_dirs()
+    truths = ctbgen.generate(
+        str(tmp_path / "landing" / "Unprocessed"), 17, n, 40, planted_failures=False
+    )
+    assert sum(t.quarantined_rows for t in truths) > 0
+    reports = []
+    jobs = jobs_run(spark, f"jobs_per_drain_{n}_{group}", lambda: reports.append(run_landing_zone(
+        spark, zone,
+        ParquetWarehouseSink(str(tmp_path / "wh")),
+        ParquetWarehouseSink(str(tmp_path / "q")),
+        CollectingNotifier(),
+    )))
+    assert [(o.state, o.valid_rows, o.quarantined_rows) for o in reports[0].outcomes] == [
+        (t.state, t.valid_rows, t.quarantined_rows) for t in truths
+    ]
+    assert jobs == want
+
+
+def settle_in(zone):
+    """The batch runner's lifecycle move, for a loop over single files."""
+    return lambda o: (
+        zone.mark_processed if o.state == "processed" else zone.mark_failed
+    )(o.path)
+
+
+def sink_rows(spark, path) -> list[tuple]:
+    """Every row of a parquet sink, sorted over all columns."""
+    if not os.path.isdir(path):
+        return []
+    return sorted((tuple(r) for r in spark.read.parquet(path).collect()), key=repr)
+
+
+def test_drains_equal_the_per_file_loop(spark, zone, tmp_path, caplog):
+    """A batch drain and a stream drain of a generated landing set
+    (planted file-level failures included) give the same outcomes,
+    notifications, log records (timings and ``group_files`` aside)
+    and sink rows as landing each file alone with ``process_files``."""
+    unprocessed = zone.root + "/Unprocessed"
+    src = str(tmp_path / "src")
+    truths = ctbgen.generate(src, 23, 8, 40)
+    fields = ("file", "state", "valid_rows", "quarantined_rows", "error")
+
+    def drain(name, run_it):
+        for t in truths:
+            shutil.copyfile(os.path.join(src, t.name), os.path.join(unprocessed, t.name))
+        wh = ParquetWarehouseSink(str(tmp_path / f"{name}_wh"))
+        qr = ParquetWarehouseSink(str(tmp_path / f"{name}_q"))
+        notifier = CollectingNotifier()
+        caplog.clear()
+        with caplog.at_level(logging.INFO, "etl_data_ingestion_spark.ingest.runner"):
+            outcomes = run_it(wh, qr, notifier)
+        records = [
+            tuple(getattr(r, f) for f in fields) for r in caplog.records
+            if r.name == "etl_data_ingestion_spark.ingest.runner"
+        ]
+        return (
+            [(o.path, o.state, o.valid_rows, o.quarantined_rows, o.error)
+             for o in outcomes],
+            [(e.kind, e.subject, e.body) for e in notifier.events],
+            records,
+            sink_rows(spark, wh.path),
+            sink_rows(spark, qr.path),
+        )
+
+    def per_file(wh, qr, notifier):
+        return [
+            o for p in zone.list_unprocessed()
+            for o in process_files(spark, [p], wh, qr, notifier, settle_in(zone))
+        ]
+
+    alone = drain("alone", per_file)
+    batch = drain("batch", lambda wh, qr, notifier: run_landing_zone(
+        spark, zone, wh, qr, notifier).outcomes)
+    stream = drain("stream", lambda wh, qr, notifier: run_landing_zone_stream(
+        spark, unprocessed, str(tmp_path / "Archived"), str(tmp_path / "ckpt"),
+        wh, qr, notifier).outcomes)
+    assert [o[1:4] for o in alone[0]] == [
+        (t.state, t.valid_rows, t.quarantined_rows) for t in truths
+    ]
+    assert len(alone[3]) == sum(t.valid_rows for t in truths)
+    assert len(alone[4]) == sum(t.quarantined_rows for t in truths)
+    assert batch == alone
+    assert stream == alone
+
+
+def test_poisoned_file_fails_alone_in_a_group(spark, zone, tmp_path):
+    """A truncated ``.gz`` whose header reads fine fails the group's
+    warehouse append. The aborted append commits nothing; the gz then
+    fails alone with an error notification and moves to Failed/, and
+    the other files land as they do alone, each row once."""
+    unprocessed = tmp_path / "landing" / "Unprocessed"
+    lines = [header_line()] + [row(ORG_CODE=f"ORG{i}") for i in range(3000)]
+    packed = gzip.compress("\n".join([*lines, ""]).encode())
+
+    def land():
+        (unprocessed / "CTB_a_clean.tsv").write_text("\n".join([header_line(), row(), ""]))
+        (unprocessed / "CTB_b_defects.tsv").write_text(
+            "\n".join([*FILE_KINDS["defects"], ""])
+        )
+        (unprocessed / "CTB_c_cut.tsv.gz").write_bytes(packed[: len(packed) // 2])
+
+    appends = []
+
+    class RecordingSink(ParquetWarehouseSink):
+        def write(self, parts):
+            appends.append([k for k, _ in parts])
+            return super().write(parts)
+
+    def drain(name, run_it):
+        land()
+        wh = RecordingSink(str(tmp_path / f"{name}_wh"))
+        qr = ParquetWarehouseSink(str(tmp_path / f"{name}_q"))
+        notifier = CollectingNotifier()
+        outcomes = run_it(wh, qr, notifier)
+        return outcomes, notifier, sink_rows(spark, wh.path), sink_rows(spark, qr.path)
+
+    outcomes, notifier, wh_rows, q_rows = drain(
+        "batch", lambda wh, qr, n: run_landing_zone(spark, zone, wh, qr, n).outcomes)
+    names = ["CTB_a_clean.tsv", "CTB_b_defects.tsv", "CTB_c_cut.tsv.gz"]
+    assert appends == [names, *([n] for n in names)]
+    assert [(o.state, o.valid_rows, o.quarantined_rows) for o in outcomes] == [
+        ("processed", 1, 0), ("processed", 1, 3), ("failed", 0, 0),
+    ]
+    assert [e.kind for e in notifier.events] == ["success", "error", "error"]
+    assert notifier.events[2].body.startswith("Unexpected error: ")
+    assert sorted(os.listdir(tmp_path / "landing" / "Failed")) == ["CTB_c_cut.tsv.gz"]
+    assert [r[-1] for r in wh_rows] == ["CTB_a_clean.tsv", "CTB_b_defects.tsv"]
+    assert {r[-1] for r in q_rows} == {"CTB_b_defects.tsv"} and len(q_rows) == 3
+
+    alone = drain("alone", lambda wh, qr, n: [
+        process_file(spark, p, wh, qr, n, settle_in(zone)) for p in zone.list_unprocessed()
+    ])
+    assert [(o.state, o.valid_rows, o.quarantined_rows) for o in alone[0]] == [
+        (o.state, o.valid_rows, o.quarantined_rows) for o in outcomes
+    ]
+    assert (alone[2], alone[3]) == (wh_rows, q_rows)
+
+
+@pytest.mark.parametrize("fault", ["undercount", "raise"])
+def test_quarantine_fault_fails_only_its_file(spark, zone, tmp_path, fault):
+    """A quarantine append that miscounts or raises for one load_id
+    fails only that file; the other file is processed, and the
+    warehouse append runs once, each file's valid rows landing once."""
+    bad = "CTB_b.tsv"
+
+    class FaultySink(ParquetWarehouseSink):
+        def write(self, parts):
+            if fault == "raise" and any(k == bad for k, _ in parts):
+                raise RuntimeError(f"quarantine refused {bad}")
+            got = super().write(parts)
+            return {k: n - (fault == "undercount" and k == bad) for k, n in got.items()}
+
+    class CountingSink(ParquetWarehouseSink):
+        calls = 0
+
+        def write(self, parts):
+            CountingSink.calls += 1
+            return super().write(parts)
+
+    for name in ("CTB_a.tsv", bad):
+        zone.put(name, "\n".join([*FILE_KINDS["defects"], ""]).encode())
+    wh = CountingSink(str(tmp_path / "wh"))
+    notifier = CollectingNotifier()
+    report = run_landing_zone(
+        spark, zone, wh, FaultySink(str(tmp_path / "q")), notifier
+    )
+    assert [(o.state, o.valid_rows, o.quarantined_rows) for o in report.outcomes] == [
+        ("processed", 1, 3), ("failed", 0, 0),
+    ]
+    assert [e.kind for e in notifier.events] == ["error", "error"]
+    want = {
+        "undercount": f"Unexpected error: Quarantine append of '{bad}' wrote 2 rows, expected 3.",
+        "raise": f"Unexpected error: quarantine refused {bad}",
+    }[fault]
+    assert notifier.events[1].body == want
+    assert os.path.exists(zone.root + "/Failed/" + bad)
+    assert CountingSink.calls == 1
+    assert sorted(r[-1] for r in sink_rows(spark, wh.path)) == ["CTB_a.tsv", bad]
+
+
+def test_part_files_hold_every_column_in_schema_order(spark, zone, sinks):
+    """A file with a subset of the columns, in another order, lands
+    before a full one: every warehouse and quarantine part file holds
+    all schema columns in schema order (the missing ones NULL), so a
+    read of the directory loses no column."""
+    subset = ["SNAPSHOT_DATE", "DEMAND QTY", "ORG CODE"]
+    values = {"SNAPSHOT_DATE": "2025-07-01", "DEMAND QTY": "7", "ORG CODE": "ORG9"}
+    zone.put("CTB_1_subset.tsv", "\n".join([
+        "\t".join(subset),
+        "\t".join(values[h] for h in subset),
+        "\t".join(dict(values, **{"DEMAND QTY": "x"})[h] for h in subset),
+        "",
+    ]).encode())
+    report, _ = run(spark, zone, sinks)
+    assert [(o.valid_rows, o.quarantined_rows) for o in report.outcomes] == [(1, 1)]
+    zone.put("CTB_2_full.tsv", "\n".join(FILE_KINDS["defects"] + [""]).encode())
+    report, _ = run(spark, zone, sinks)
+    assert [(o.valid_rows, o.quarantined_rows) for o in report.outcomes] == [(1, 3)]
+    schema = list(BQ_SCHEMA_TYPES)
+    for sink, tail in (
+        (sinks[0], ["_load_id"]),
+        (sinks[1], ["_raw", "_errors", "_source_file", "_load_id"]),
+    ):
+        parts = sorted(f for f in os.listdir(sink.path) if f.endswith(".parquet"))
+        assert len(parts) == 2
+        for part in parts:
+            assert spark.read.parquet(os.path.join(sink.path, part)).columns == schema + tail
+    got = spark.read.parquet(sinks[0].path).filter("_load_id = 'CTB_1_subset.tsv'").collect()
+    assert [(r.ORG_CODE, r.DEMAND_QTY, str(r.SNAPSHOT_DATE), r.ITEM_NUMBER) for r in got] == [
+        ("ORG9", 7, "2025-07-01", None)
+    ]
 
 
 def test_one_log_record_per_file(spark, zone, tmp_path, caplog):

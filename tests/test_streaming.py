@@ -679,33 +679,22 @@ def test_logged_paths_read_the_file_source_log(spark, tmp_path):
 
 
 def test_stream_jobs_per_file_kind(spark, tmp_path, monkeypatch):
-    """Draining every file kind through the stream runs, under the
-    query's job group, the jobs the per-file policy runs and no more:
-    clean 1, row defects 2, header-only 0, unknown column 0, 0-byte 0
-    (as ``test_runner.py::test_jobs_per_file_kind``). No job runs before
-    the first file is processed: the arrival log is read on the driver."""
+    """A micro-batch of every file kind runs, under the query's job
+    group, the two jobs the batch drain of the same files runs (as
+    ``test_runner.py::test_jobs_per_file_kind``): one warehouse append
+    and one quarantine append. No job runs before the batch's files are
+    processed: the arrival log is read on the driver."""
     from etl_data_ingestion_spark.ingest import stream_runner
     from etl_data_ingestion_spark.ingest.sinks import ParquetWarehouseSink
     from etl_data_ingestion_spark.notify import CollectingNotifier
 
-    from tests.test_ingest_ctb import header_line, row
+    from tests.test_runner import FILE_KINDS, land_kinds
 
     sc = spark.sparkContext
     tracker = sc.statusTracker()
-    short = "\t".join(row().split("\t")[:-1])
-    kinds = {
-        "clean": [header_line(), row(), row()],
-        "defects": [header_line(), row(), row(DEMAND_QTY="x"), short, row() + "\tv"],
-        "headeronly": [header_line()],
-        "unknown": [header_line() + "\tEXTRA COL", row() + "\tv"],
-        "zerobyte": None,
-    }
     unproc = tmp_path / "Unprocessed"
     unproc.mkdir()
-    for kind, lines in kinds.items():
-        (unproc / f"CTB_{kind}.tsv").write_text(
-            "" if lines is None else "\n".join([*lines, ""])
-        )
+    land_kinds(unproc)
 
     group = []
 
@@ -713,31 +702,29 @@ def test_stream_jobs_per_file_kind(spark, tmp_path, monkeypatch):
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         return set(tracker.getJobIdsForGroup(group[0]))
 
-    jobs = {}
-    process_file = stream_runner.process_file
+    jobs = []
+    process_files = stream_runner.process_files
 
-    def count_jobs(spark, path, *args, **kwargs):
+    def count_jobs(spark, paths, *args, **kwargs):
         if not group:
             group.append(sc.getLocalProperty("spark.jobGroup.id"))
-            jobs["before the first file"] = len(group_jobs())
         before = group_jobs()
+        jobs.append(("before", len(before)))
         try:
-            return process_file(spark, path, *args, **kwargs)
+            return process_files(spark, paths, *args, **kwargs)
         finally:
-            kind = path.rsplit("/", 1)[-1][len("CTB_"):-len(".tsv")]
-            jobs[kind] = len(group_jobs() - before)
+            jobs.append((len(paths), len(group_jobs() - before)))
 
-    monkeypatch.setattr(stream_runner, "process_file", count_jobs)
+    monkeypatch.setattr(stream_runner, "process_files", count_jobs)
     report = stream_runner.run_landing_zone_stream(
         spark, str(unproc), str(tmp_path / "Archived"), str(tmp_path / "ckpt"),
         ParquetWarehouseSink(str(tmp_path / "wh")),
         ParquetWarehouseSink(str(tmp_path / "q")),
         CollectingNotifier(),
     )
-    assert len(report.outcomes) == len(kinds)
+    assert [o.state for o in report.outcomes] == [
+        "processed", "processed", "failed", "failed", "failed",
+    ]
     assert group[0]
-    assert jobs == {
-        "before the first file": 0,
-        "clean": 1, "defects": 2, "headeronly": 0, "unknown": 0, "zerobyte": 0,
-    }
-    assert len(group_jobs()) == 3
+    assert jobs == [("before", 0), (len(FILE_KINDS), 2)]
+    assert len(group_jobs()) == 2
