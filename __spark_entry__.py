@@ -40,17 +40,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         run.__doc__ = fn.__doc__
         return run
 
-    # Dict order = driver verification order (the CORRECTNESS run
-    # checks a fixed-size front window): never-verified queries first,
-    # round-1 greens at the tail. See registry.CHECK_ORDER.
-    return {name: wrap(registry.QUERIES[name]) for name in registry.check_ordered_names()}
+    # Registration order: tier-1 checks every query against its oracle,
+    # so the driver's window does not need to be scheduled.
+    return {name: wrap(fn) for name, fn in registry.QUERIES.items()}
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB oracle SQL per query; non-SQL-expressible ops are omitted
     (driver records a rows-only check for those)."""
-    return {
-        name: registry.ORACLES[name]
-        for name in registry.check_ordered_names()
-        if name in registry.ORACLES
-    }
+    return dict(registry.ORACLES)

@@ -1,12 +1,14 @@
 from __future__ import annotations
 
 import os
+import subprocess
 import sys
 
 import pytest
 
 # the checkout this file lives in, not an installed or other copy
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from etl_data_ingestion_spark.session import get_spark
 
@@ -20,3 +22,13 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return "/root/testdata/sf0.001"
+
+
+@pytest.fixture(scope="session")
+def empty_dir():
+    """Every base table with 0 rows and the sf0.001 schema; written by
+    tools/gen_empty.py when missing."""
+    path = os.path.join(REPO, ".scaledata", "sf_empty")
+    if not os.path.isdir(path):
+        subprocess.run([sys.executable, os.path.join(REPO, "tools", "gen_empty.py"), path], check=True)
+    return path

@@ -2,49 +2,32 @@
 
 Some bugs fire only when a whole intermediate relation is empty, which
 no populated fixture exercises: the threshold-curve aggregates once
-returned NULL where the oracle emits 0. tools/check_empty.py sweeps the
-full registry against 0-row base tables; this file pins the CONTRACTS
-that sweep holds, so a plan change cannot silently regress them:
+returned NULL where the oracle emits 0. tests/test_parity.py checks the
+full registry against its oracles on 0-row base tables, with the
+designed raises and the divergence below as its named exceptions; this
+file pins the CONTRACTS behind that sweep's values, so a plan change
+cannot silently regress them:
 
   1. summary queries emit the oracle's zero/NULL summary row (not
      zero rows, not NULL-where-0);
   2. per-row report queries emit zero rows (not all-NULL anchors);
   3. pure-contract domains (decile report) emit their full literal
      domain with vacuous TRUE;
-  4. index-build operators fail LOUDLY with the documented
-     degenerate-corpus message, never a numpy shape error;
-  5. the engine-semantic ROLLUP/CUBE divergence the README documents
+  4. the engine-semantic ROLLUP/CUBE divergence the README documents
      (Spark emits no grand-total row over empty input; the SQL
      standard and DuckDB emit one) stays what the docs claim — if
      Spark ever changes this, the pin flips, and the README note and
-     tools/check_empty.py's ENGINE_SEMANTIC_DIVERGENCES must be
+     tests/test_parity.py's ENGINE_SEMANTIC_DIVERGENCES must be
      retired.
 """
 
 from __future__ import annotations
 
 import os
-import subprocess
-import sys
 
 import pytest
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-
-from etl_data_ingestion_spark.plans import registry  # noqa: E402
-
-EMPTY_DIR = os.path.join(REPO, ".scaledata", "sf_empty")
-
-
-@pytest.fixture(scope="module")
-def empty_dir():
-    if not os.path.isdir(EMPTY_DIR):
-        subprocess.run(
-            [sys.executable, os.path.join(REPO, "tools", "gen_empty.py"), EMPTY_DIR],
-            check=True,
-        )
-    return EMPTY_DIR
+from etl_data_ingestion_spark.plans import registry
 
 
 @pytest.fixture(scope="module", autouse=True)
@@ -99,20 +82,11 @@ def test_contract_domain_queries_emit_full_domain(spark, empty_dir):
     assert all(r["loading"] is None for r in rows)
 
 
-def test_index_builds_fail_loudly(spark, empty_dir):
-    with pytest.raises(Exception, match="IVF quantizer requires"):
-        _run(spark, "similarity_ivf_topk", empty_dir)
-    with pytest.raises(Exception, match="PQ codebook training requires"):
-        _run(spark, "similarity_pq_rerank", empty_dir)
-    with pytest.raises(Exception, match="non-empty corpus to fit the LSH"):
-        _run(spark, "similarity_topk_lsh", empty_dir)
-
-
 def test_rollup_engine_semantic_pin(spark, empty_dir):
     """The documented deviation's factual basis: Spark ROLLUP/CUBE
     over empty input emits zero rows (DuckDB emits the grand-total
     row). If this ever flips, retire the README note and
-    tools/check_empty.py's ENGINE_SEMANTIC_DIVERGENCES."""
+    tests/test_parity.py's ENGINE_SEMANTIC_DIVERGENCES."""
     empty = spark.read.parquet(os.path.join(empty_dir, "orders.parquet"))
     empty.createOrReplaceTempView("_empty_orders_pin")
     n = spark.sql(

@@ -1,7 +1,10 @@
 """The oracle check in plans/parity.py: its canon and comparison without
-Spark, then whole queries against their oracles on a non-default
-layout (AQE off, 3 shuffle partitions) in a child session, and the
-small-fact-gated queries on an AQE-on caller, where the gate engages."""
+Spark, then every registered query against its oracle twice: on the
+populated fixture in a child session with a layout no builder was
+tuned for (AQE off, 3 shuffle partitions), and on 0-row base tables in
+the tuned session. Last, the small-fact-gated queries on an AQE-on
+caller, where the gate engages. ``pytest tests/test_parity.py -k
+<query>`` checks one query."""
 
 from __future__ import annotations
 
@@ -14,6 +17,8 @@ import pytest
 from etl_data_ingestion_spark import catalog
 from etl_data_ingestion_spark.plans import parity, registry
 from etl_data_ingestion_spark.session import child_session
+
+registry.load_all()
 
 canon = parity.canon_cell
 LONG = np.arange(2000.0)
@@ -50,25 +55,43 @@ def test_compare_reasons():
     assert reason == "values differ, first: ('1', '0.25') != ('1', '0.5')"
 
 
-# The analytics workload's nine queries, the other edge_build callers
-# and the four builders planned on catalog.small_fact_session, on a
-# layout no builder was tuned for.
+# The four builders planned on catalog.small_fact_session.
 GATED_QUERIES = [
     "graph_kcore_peel", "ml_item_item_cf", "graph_assortativity", "dedup_end_to_end_canonical",
 ]
-LAYOUT_QUERIES = [
-    "tpch_q1_pricing_summary", "tpch_q3_shipping_priority", "tpch_q6_forecast_revenue",
-    "window_running_total", "join_asof_purchase_view", "stream_tumbling_hourly",
-    "subquery_correlated_avg_qty", "dedup_minhash_lsh", "graph_adamic_adar_topk",
-    "graph_triangle_count", "graph_link_prediction", "graph_local_clustering_coeff",
-    "graph_label_propagation_2round", "graph_ktruss_edge_support", *GATED_QUERIES,
-]
 LAYOUT = {"spark.sql.adaptive.enabled": "false", "spark.sql.shuffle.partitions": "3"}
+NAMES = [pytest.param(name, id=name) for name in registry.query_names()]
+
+# On 0-row base tables (tools/gen_empty.py) a query matches its oracle,
+# with these exceptions.
+# Documented loud failures on degenerate input: query name -> text its
+# raise must contain. A query enters only once its docstring states the
+# contract: the ANN index builds (an index over an empty corpus has no
+# meaningful self-check) and the bounded-corpus GEMM device (top-2
+# margin undefined under 3 vectors), as in the README's
+# degenerate-corpus exception list.
+EXPECTED_RAISES: dict[str, str] = {
+    "similarity_ivf_topk": "IVF quantizer requires a non-empty corpus",
+    "similarity_index_persist_reuse": "IVF quantizer requires a non-empty corpus",
+    "similarity_pq_rerank": "PQ codebook training requires a non-empty corpus",
+    "similarity_topk_lsh": "requires a non-empty corpus to fit the LSH",
+    "similarity_ratio_margin": "GEMM devices require >= 3 corpus vectors",
+}
+# Documented engine-semantic divergences (README "deliberate
+# deviations"): Spark's ROLLUP/CUBE/GROUPING SETS emit NO rows over an
+# empty input, where the SQL standard (and DuckDB) emit the grand-total
+# row. Plain spark.sql does the same (tests/test_empty_corpus.py pins
+# it), so it is the engine, not the plan shape; matching it would need a
+# second scan or a persist on hot rollup plans.
+ENGINE_SEMANTIC_DIVERGENCES: set[str] = {
+    "agg_rollup_status_priority",
+    "agg_cube_flag_status",
+    "agg_grouping_id_rollup",
+}
 
 
 @pytest.fixture(scope="module")
 def con(sf_dir):
-    registry.load_all()
     con = parity.duckdb_views(sf_dir)
     yield con
     con.close()
@@ -79,7 +102,7 @@ def layout(spark):
     return child_session(spark, LAYOUT)
 
 
-@pytest.mark.parametrize("name", LAYOUT_QUERIES)
+@pytest.mark.parametrize("name", NAMES)
 def test_query_matches_oracle_on_a_non_default_layout(spark, sf_dir, con, layout, name):
     parent = {k: spark.conf.get(k) for k in LAYOUT}
     before = layout.conf.getAll
@@ -87,6 +110,27 @@ def test_query_matches_oracle_on_a_non_default_layout(spark, sf_dir, con, layout
     assert v.status == parity.OK, (v.detail, v.error)
     assert layout.conf.getAll == before
     assert {k: spark.conf.get(k) for k in LAYOUT} == parent
+
+
+@pytest.fixture(scope="module")
+def empty_con(empty_dir):
+    con = parity.duckdb_views(empty_dir)
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize("name", NAMES)
+def test_query_matches_oracle_on_empty_tables(spark, empty_dir, empty_con, name):
+    before = spark.conf.getAll
+    v = parity.check(spark, empty_con, name, empty_dir)
+    if name in EXPECTED_RAISES:
+        assert (v.status, v.detail) == (parity.FAIL, "spark raised"), v
+        assert EXPECTED_RAISES[name] in v.error
+    elif name in ENGINE_SEMANTIC_DIVERGENCES:
+        assert (v.status, v.rows, v.detail) == (parity.FAIL, 0, "rows 0 != 1"), v
+    else:
+        assert v.status == parity.OK, (v.detail, v.error)
+    assert spark.conf.getAll == before
 
 
 @pytest.fixture(scope="module")

@@ -1,6 +1,6 @@
-"""Registry integrity: the driver-check window is defined by
-CHECK_ORDER, so a stale or duplicated name there silently reorders
-verification — pin it."""
+"""Registry integrity: every registered query carries a DuckDB oracle,
+so tests/test_parity.py judges each one instead of only counting its
+rows."""
 
 from __future__ import annotations
 
@@ -9,25 +9,6 @@ from etl_data_ingestion_spark.plans import registry
 registry.load_all()
 
 
-def test_check_order_names_all_exist():
-    stale = [n for n in registry.CHECK_ORDER if n not in registry.QUERIES]
-    assert stale == [], f"CHECK_ORDER references unknown queries: {stale}"
-
-
-def test_check_order_no_duplicates():
-    seen, dupes = set(), []
-    for n in registry.CHECK_ORDER:
-        if n in seen:
-            dupes.append(n)
-        seen.add(n)
-    assert dupes == []
-
-
 def test_every_query_has_an_oracle():
     missing = [n for n in registry.QUERIES if n not in registry.ORACLES]
     assert missing == [], f"queries without oracles regress to ERR rows: {missing}"
-
-
-def test_ordering_covers_all_queries_exactly_once():
-    names = registry.check_ordered_names()
-    assert sorted(names) == sorted(registry.QUERIES)

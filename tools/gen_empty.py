@@ -1,4 +1,4 @@
-"""Zero-row fixture generator for the empty-corpus robustness sweep.
+"""Zero-row fixture generator for the empty-input parity check.
 
 Some bugs fire only on an empty relation: the threshold-curve
 aggregates once returned NULL where the oracle emits 0 because the
@@ -7,8 +7,10 @@ head-of-empty, seq(1, size-1) on nothing, division by a zero count —
 only fires when a whole intermediate relation is empty, which no
 driver fixture exercises. This writes a fixture dir where EVERY base
 table is 0 rows with the exact parquet schema of the shipped
-sf0.001 fixtures, so every registered query and oracle can run on it
-unchanged via tools/check_parity.py or tools/check_empty.py.
+sf0.001 fixtures, so every registered query and oracle runs on it
+unchanged: tests/test_parity.py checks each one there (its fixture in
+tests/conftest.py runs this script when the dir is missing), and
+tools/check_parity.py takes it as a fixture.
 
 Usage: python tools/gen_empty.py [OUT_DIR]   (default .scaledata/sf_empty)
 """
