@@ -403,29 +403,12 @@ def sample_interleaved(
     return best, samples
 
 
-def run_query(
-    spark, name: str, sf_dir: str, resident: bool = False, fn=None
-) -> float:
-    """Seconds to run registry query ``name`` (or the builder ``fn``, an
-    A/B arm) through the no-op sink: the full distributed plan without
-    driver-side materialization."""
-    fn = fn or registry.QUERIES[name]
-    # cold per sample: operators that persist intermediates (minhash
-    # signatures, IVF assignment) must re-earn them each run, or the
-    # second sample measures a cached different computation
-    spark.catalog.clearCache()
-    if resident:
-        # resident tier: base-table scans stay hot (the warehouse
-        # serving posture; DuckDB's best-of-N likewise re-reads warm
-        # OS page cache) — re-materialize them OUTSIDE the timed
-        # window so the timing covers query compute over resident
-        # data, while per-query intermediates stay cold per sample
-        from etl_data_ingestion_spark.catalog import persist_scans
-
-        persist_scans(spark)
-    t0 = time.perf_counter()
-    fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-    return time.perf_counter() - t0
+def run_query(spark, name: str, sf_dir: str) -> float:
+    """Seconds to build and run registry query ``name`` through the
+    no-op sink (``registry.run``): the full distributed plan without
+    driver-side materialization. The runner releases what the query
+    persisted or checkpointed, so the next sample re-earns it."""
+    return registry.run(spark, name, sf_dir, registry.NOOP).seconds
 
 
 def time_spark(
@@ -434,13 +417,12 @@ def time_spark(
     sf_dir: str,
     passes: int,
     retries: int = 0,
-    resident: bool = False,
 ) -> tuple[dict[str, float], dict[str, list[float]]]:
-    """Cold registry-query timings through the sampler, in ms-rounded
+    """Registry-query timings through the sampler, in ms-rounded
     seconds."""
     return sample_interleaved(
         names,
-        lambda n: round(run_query(spark, n, sf_dir, resident), 3),
+        lambda n: round(run_query(spark, n, sf_dir), 3),
         passes,
         retries,
     )
@@ -508,14 +490,13 @@ def resident_tier(spark, names: list[str], sf_dir: str) -> dict[str, float]:
     page cache. Reported separately (value_resident /
     ratio_total_comparable_resident); the cold-scan "value" remains
     the comparable. The headline tier has registered exactly the scans
-    these queries read, and run_query persists them before each
-    sample."""
-    from etl_data_ingestion_spark.catalog import drop_plan_cache
+    these queries read; they are pinned once, before the first sample,
+    and stay pinned: the runner releases only what a query pinned."""
+    from etl_data_ingestion_spark.catalog import drop_plan_cache, persist_scans
 
     try:
-        return time_spark(
-            spark, names, sf_dir, passes=2, retries=2, resident=True
-        )[0]
+        persist_scans(spark)
+        return time_spark(spark, names, sf_dir, passes=2, retries=2)[0]
     finally:
         drop_plan_cache(spark)
 

@@ -10,6 +10,10 @@ keeps one per-session scan registry and writes no session conf. No
 private conf key steers it: an opted-in fact scan fans out to the
 session's default parallelism, so a driver's vanilla session and a
 ``session.get_spark`` one with as many cores build the same plans.
+
+Every builder persists or checkpoints an intermediate through
+``cached`` and ``checkpointed``. Inside a ``query_scope`` they record
+what they pinned, and the scope releases it on exit.
 """
 
 from __future__ import annotations
@@ -17,8 +21,12 @@ from __future__ import annotations
 import hashlib
 import os
 import weakref
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
+from contextvars import ContextVar
 
 import pyspark.sql.functions as F
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 from etl_data_ingestion_spark.config import SCRATCH
@@ -72,13 +80,58 @@ def drop_plan_cache(spark: SparkSession) -> None:
 
 
 def persist_scans(spark: SparkSession) -> int:
-    """Persist and materialize every scan this session has registered
-    (again after a catalog.clearCache()); returns how many."""
+    """Persist and materialize every scan this session has registered;
+    returns how many. They stay pinned across registry.run calls until
+    drop_plan_cache (or a session-wide clearCache)."""
     scans = _SCANS.get(spark, {}).values()
     for df in scans:
         df.persist()
         df.count()
     return len(scans)
+
+
+# How to release what the running query has pinned, in pinning order.
+# None outside a query_scope, where nothing is recorded.
+_PINNED: ContextVar[list[Callable[[], object]] | None] = ContextVar(
+    "catalog_pinned", default=None
+)
+
+
+def cached(df: DataFrame) -> DataFrame:
+    """``df.persist()``: a relation several consumers of one query read.
+    Inside a query_scope it is recorded for release, unless the
+    CacheManager already held its plan (a scan persist_scans pinned)."""
+    pinned = _PINNED.get()
+    if pinned is not None and df.storageLevel == StorageLevel.NONE:
+        pinned.append(df.unpersist)
+    return df.persist()
+
+
+def checkpointed(df: DataFrame) -> DataFrame:
+    """``df.localCheckpoint()``: an eager job that materializes ``df``
+    and truncates its lineage. Inside a query_scope the checkpoint's
+    RDD is recorded for release."""
+    out = df.localCheckpoint()
+    pinned = _PINNED.get()
+    if pinned is not None:
+        rdd = out._jdf.queryExecution().analyzed().rdd()
+        pinned.append(lambda: rdd.unpersist(False))
+    return out
+
+
+@contextmanager
+def query_scope() -> Iterator[None]:
+    """Record what ``cached`` and ``checkpointed`` pin in the block and
+    release it on exit, last pinned first. A released checkpoint can no
+    longer be read, so the block must run the query's action."""
+    pinned: list[Callable[[], object]] = []
+    token = _PINNED.set(pinned)
+    try:
+        yield
+    finally:
+        _PINNED.reset(token)
+        for release in reversed(pinned):
+            release()
 
 
 # Bucketed storage: with lineitem and orders stored bucketed and sorted

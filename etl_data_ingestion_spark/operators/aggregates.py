@@ -11,7 +11,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from etl_data_ingestion_spark.catalog import load_table
+from etl_data_ingestion_spark.catalog import cached, load_table
 from etl_data_ingestion_spark.plans.registry import register
 
 DISTINCT_ORACLE = """
@@ -2511,13 +2511,12 @@ def agg_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     # <=15 persisted rows (without the persist, Catalyst re-expands
     # each of the 8 downstream branches into its own parquet scan —
     # the plan audit that motivated this shape)
-    joint = (
+    joint = cached(
         orders.groupBy(
             F.col("o_orderpriority").alias("x"),
             F.col("o_orderstatus").alias("y"),
         )
         .agg(F.count(F.lit(1)).alias("c"))
-        .persist()
     )
     n_df = joint.agg(F.sum("c").alias("n"))
     mx = joint.groupBy("x").agg(F.sum("c").alias("cx"))
@@ -2700,11 +2699,11 @@ def agg_theil_inequality(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders", parallel=False)
     # persist the customer rollup: tot and the term pass both read it,
     # and without the persist each branch re-scans the fact table
-    cust = orders.groupBy("o_custkey").agg(
+    cust = cached(orders.groupBy("o_custkey").agg(
         F.sum(
             F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
         ).alias("cents")
-    ).persist()
+    ))
     tot = cust.agg(
         F.count(F.lit(1)).alias("n"), F.sum("cents").alias("s")
     )
@@ -3023,7 +3022,7 @@ def agg_countmin_width_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem", parallel=False).select(
         F.col("l_suppkey").alias("key")
     )
-    keyed = li.groupBy("key").agg(F.count(F.lit(1)).alias("kc")).persist()
+    keyed = cached(li.groupBy("key").agg(F.count(F.lit(1)).alias("kc")))
     # the 9 (row, width) sketch planes as a LITERAL array explode —
     # an inline generator, not a joined DataFrame: no extra query
     # stages, no broadcast jobs (AQE stage-scheduling floor dominates
@@ -3321,12 +3320,11 @@ def agg_herfindahl_concentration(
     cents = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast(
         "long"
     )
-    rev = (
+    rev = cached(
         li.select("l_suppkey", cents.alias("c"))
         .join(F.broadcast(sup), "l_suppkey")
         .groupBy("nation", F.col("l_suppkey").alias("sk"))
         .agg(F.sum("c").cast("long").alias("r"))
-        .persist()
     )
     r = F.col("r")
     agg = rev.groupBy("nation").agg(

@@ -17,7 +17,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from etl_data_ingestion_spark.catalog import load_table
+from etl_data_ingestion_spark.catalog import cached, load_table
 from etl_data_ingestion_spark.functions.text import (
     BPE_ISH_PATTERN,
     tokens,
@@ -153,10 +153,10 @@ def dedup_duplicated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the scalable stand-in for suffix-array substring dedup,
     which has no distributed-friendly formulation."""
     docs = load_table(spark, sf_dir, "documents", parallel=True)
-    grams = (
+    # three consumers below; the HOF must not re-run
+    grams = cached(
         docs.select("doc_id", tokens("text").alias("toks"))
         .select("doc_id", F.explode(word_ngrams_from("toks", 8)).alias("g"))
-        .persist()  # three consumers below; the HOF must not re-run
     )
     tot = grams.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_grams")
@@ -756,9 +756,9 @@ def dedup_repeated_lines_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two consumers (count + survivor join): persist so the
     # interpreted line-building HOF runs once (same discipline as
     # dedup_duplicated_spans' gram table)
-    ex = docs.select(
+    ex = cached(docs.select(
         "doc_id", F.posexplode(lines).alias("idx", "line")
-    ).persist()
+    ))
     boiler = (
         ex.groupBy("line")
         .agg(F.count_distinct("doc_id").alias("ndocs"))

@@ -17,7 +17,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from etl_data_ingestion_spark.catalog import load_table
+from etl_data_ingestion_spark.catalog import cached, checkpointed, load_table
 from etl_data_ingestion_spark.functions.text import tokens, word_ngrams_from
 from etl_data_ingestion_spark.plans.registry import register
 
@@ -985,7 +985,7 @@ def pipeline_naive_bayes_spam(spark: SparkSession, sf_dir: str) -> DataFrame:
     spam_toks = F.when(
         F.length(F.trim(F.col("text"))) == 0, suffix
     ).otherwise(F.concat(toks0, suffix))
-    var_docs = docs.select(
+    var_docs = cached(docs.select(
         F.explode(
             F.array(
                 F.struct(
@@ -1000,13 +1000,13 @@ def pipeline_naive_bayes_spam(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
         ).alias("r")
-    ).select("r.doc_id", "r.label", "r.toks").persist()
+    ).select("r.doc_id", "r.label", "r.toks"))
     train = var_docs.filter(F.col("doc_id") % 2 == 0).select(
         "label", F.explode("toks").alias("w")
     )
-    cnt = train.groupBy("label", "w").agg(
+    cnt = cached(train.groupBy("label", "w").agg(
         F.count(F.lit(1)).alias("c")
-    ).persist()
+    ))
     vocab = cnt.select("w").distinct()
     tot = cnt.groupBy("label").agg(F.sum("c").cast("long").alias("n"))
     scalars = (
@@ -1488,9 +1488,9 @@ def pipeline_source_cap_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # persist the 3-column projection: the corpus count and the
     # ranked pass both read it (else two parquet scans)
-    docs = load_table(spark, sf_dir, "documents", parallel=False).select(
+    docs = cached(load_table(spark, sf_dir, "documents", parallel=False).select(
         "source", "n_chars", "doc_id"
-    ).persist()
+    ))
     tot = docs.agg(F.count(F.lit(1)).alias("n"))
     w = Window.partitionBy("source").orderBy(F.desc("n_chars"), "doc_id")
     ranked = docs.select(
@@ -1590,12 +1590,12 @@ def pipeline_token_budget_waterfill(spark: SparkSession, sf_dir: str) -> DataFra
         F.count(F.lit(1)).alias("m"),
     )
     wj = Window.orderBy("t", "source")
-    ranked = tok.select(
+    ranked = checkpointed(tok.select(
         "source",
         "t",
         F.row_number().over(wj).alias("j"),
         F.sum("t").over(wj.rowsBetween(Window.unboundedPreceding, 0)).alias("p"),
-    ).localCheckpoint()  # two consumers: segment solve + final projection
+    ))  # two consumers: segment solve + final projection
     seg = (
         ranked.crossJoin(F.broadcast(tot))
         .agg(
@@ -2110,12 +2110,12 @@ def pipeline_length_weight_ess(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every published number is a snapped division of exact
     integers."""
     docs = load_table(spark, sf_dir, "documents")
-    w = docs.select(
+    w = cached(docs.select(
         "doc_id",
         F.size(F.split(F.trim(F.col("text")), r"\s+"))
         .cast("long")
         .alias("tok"),
-    ).persist()
+    ))
     tok = F.col("tok")
     tot = w.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),

@@ -24,7 +24,12 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from etl_data_ingestion_spark.catalog import load_table, small_fact_session
+from etl_data_ingestion_spark.catalog import (
+    cached,
+    checkpointed,
+    load_table,
+    small_fact_session,
+)
 from etl_data_ingestion_spark.functions.arrays import ordered_pairs
 from etl_data_ingestion_spark.functions.minhash import minhash_signature_udf
 from etl_data_ingestion_spark.functions.text import tokens, word_ngrams_from
@@ -667,14 +672,13 @@ def connected_components(
     Returns (node, label) with label = min node id of the component.
     """
     und = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    und = und.unionByName(
+    und = cached(und.unionByName(
         und.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).persist()
-    labels = (
+    ))
+    labels = checkpointed(
         und.select(F.col("a").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
-        .localCheckpoint()
     )
     converged = False
     for _ in range(max_rounds):
@@ -683,7 +687,7 @@ def connected_components(
             .groupBy("a")
             .agg(F.min("label").alias("nbr_label"))
         )
-        chk = labels.join(
+        chk = checkpointed(labels.join(
             neighbor_min, labels.node == neighbor_min.a, "left"
         ).select(
             "node",
@@ -693,7 +697,7 @@ def connected_components(
             (
                 F.coalesce(F.col("nbr_label"), F.col("label")) < F.col("label")
             ).alias("chg"),
-        ).localCheckpoint()
+        ))
         labels = chk.select("node", "label")
         if chk.filter("chg").limit(1).count() == 0:
             converged = True
@@ -750,16 +754,15 @@ def connected_components_star(
             out = out.unionByName(m.select(F.col("u").alias("a"), F.col("m").alias("b")))
         return out.filter(F.col("a") != F.col("b")).distinct()
 
-    e = (
+    e = checkpointed(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint()
     )
     prev_sig, prev_e, converged = None, None, False
     for _ in range(max_rounds):
-        e = half_round(e, large=True).localCheckpoint()
-        e = half_round(e, large=False).localCheckpoint()
+        e = checkpointed(half_round(e, large=True))
+        e = checkpointed(half_round(e, large=False))
         sig = e.agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.hash("a", "b").cast("long")).alias("h"),
@@ -1413,7 +1416,7 @@ def _end_to_end_components(spark: SparkSession, sf_dir: str):
     # grams feeds THREE consumers (sizes + both sides of the pair
     # self-join): checkpoint the small post-cap relation once instead
     # of re-running scan->gram->distinct->df-filter per consumer.
-    grams = grams_all.join(rare, "gram").localCheckpoint()
+    grams = checkpointed(grams_all.join(rare, "gram"))
     sizes = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a = grams.alias("ga")
     b = grams.alias("gb")
@@ -1539,7 +1542,7 @@ def dedup_containment_quotes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("df") <= 50)
         .select("g")
     )
-    kept = grams_all.join(rare, "g").localCheckpoint()
+    kept = checkpointed(grams_all.join(rare, "g"))
     sizes = kept.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a = kept.alias("ka")
     b = kept.alias("kb")
@@ -1790,7 +1793,7 @@ def pipeline_dedup_threshold_curve(
             ).alias("text"),
         )
     )
-    corpus = base.unionByName(near).persist()
+    corpus = cached(base.unionByName(near))
     toks = corpus.select(
         "doc_id", F.split(F.trim("text"), r"\s+").alias("toks")
     ).filter(F.size("toks") >= 3)
@@ -1811,12 +1814,11 @@ def pipeline_dedup_threshold_curve(
         "doc_id",
         F.explode(word_ngrams_from("toks", 3)).alias("gram"),
     )
-    gsets = (
+    gsets = checkpointed(
         g0.groupBy("gram")
         .agg(F.sort_array(F.collect_set("doc_id")).alias("ds"))
         .filter(F.size("ds") <= 50)
         # |grams|-sized; two consumers (sizes + pair expansion)
-        .localCheckpoint()
     )
     sizes = (
         gsets.select(F.explode("ds").alias("doc_id"))

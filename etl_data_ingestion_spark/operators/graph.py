@@ -7,7 +7,7 @@ iterate on node/edge-domain tables — each superstep is a
 contribution join + a partial-aggregated groupBy, i.e. a sparse
 mat-vec. At 100 TB the edge build dominates; supersteps shuffle only
 |E| contribution rows keyed by destination. For long iteration
-chains, localCheckpoint() per superstep truncates lineage (see
+chains, catalog.checkpointed per superstep truncates lineage (see
 connected_components); the fixed-k unrolled form here keeps the plan
 pure so the oracle can mirror it exactly.
 """
@@ -17,7 +17,12 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from etl_data_ingestion_spark.catalog import load_table, small_fact_session
+from etl_data_ingestion_spark.catalog import (
+    cached,
+    checkpointed,
+    load_table,
+    small_fact_session,
+)
 from etl_data_ingestion_spark.functions.arrays import ordered_pairs
 from etl_data_ingestion_spark.plans.registry import register
 
@@ -84,7 +89,7 @@ def graph_pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     dst. The symmetric edge set means no dangling-mass correction
     term, keeping each superstep a pure join+agg both engines can
     state identically. Fixed k=3 unrolled; for convergence loops at
-    scale, add localCheckpoint() per superstep exactly as
+    scale, add catalog.checkpointed per superstep exactly as
     dedup_cluster_components does. Emits pr*1000 rounded so float
     summation-order epsilon stays out of the value hash.
 
@@ -116,21 +121,20 @@ def graph_pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # for every superstep (4-5x the only expensive stage; measured
     # 8.4s -> ~2s at sf0.1). localCheckpoint also truncates the
     # superstep lineage chain, the convergence-loop posture at scale.
-    edges = pairs.unionByName(
+    edges = checkpointed(pairs.unionByName(
         pairs.select(
             F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
         )
-    ).localCheckpoint()
+    ))
     outw = edges.groupBy("src").agg(F.sum("w").alias("ow"))
     n_nodes = outw.count()  # node-domain count, one small job
     # Row-normalize ONCE (w/ow folded into the edge list) so each
     # superstep is a single broadcast-join + agg instead of two joins;
     # pr is node-sized, so F.broadcast keeps every superstep shuffle-
     # free on the edge side (the groupBy on dst is the only Exchange).
-    norm_edges = (
+    norm_edges = checkpointed(
         edges.join(outw, "src")
         .select("src", "dst", (F.col("w") / F.col("ow")).alias("nw"))
-        .localCheckpoint()
     )
     pr = outw.select("src", (F.lit(1.0) / n_nodes).alias("pr")).withColumnRenamed(
         "src", "node"
@@ -267,7 +271,7 @@ def edge_build(spark: SparkSession, sf_dir: str):
     # A literal key would be optimized away, and a window with no key
     # logs Spark's "No Partition Defined" warning on every build.
     whole = Window.partitionBy(F.spark_partition_id())
-    adj = (
+    adj = checkpointed(
         allpairs.repartition(1)
         .withColumn(
             "thr",
@@ -291,7 +295,6 @@ def edge_build(spark: SparkSession, sf_dir: str):
             F.count(F.lit(1)).over(by_v).alias("dv"),
             (F.col("v") == F.min("v").over(by_u)).alias("first"),
         )
-        .localCheckpoint()
     )
     und = adj.select("u", "v", "du", "dv")
     pairs = und.filter(F.col("u") < F.col("v"))
@@ -630,7 +633,7 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-ran every upstream peel stage per branch (494 jobs, 39.5s at
     sf0.1 against 9.0s — tools/floor_decompose.py)."""
     spark = small_fact_session(spark, sf_dir, "lineitem")
-    e = customer_supplier_edges(spark, sf_dir).persist()
+    e = cached(customer_supplier_edges(spark, sf_dir))
 
     def degrees(e: DataFrame) -> DataFrame:
         nodes = e.select(F.col("u").alias("n")).unionAll(
@@ -649,11 +652,10 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = count_row(0, d.select("n"), e)
     for it in (1, 2, 3):
         active = d.filter(F.col("deg") >= 3).select("n")
-        e = (
+        e = cached(
             e.join(active.withColumnRenamed("n", "u"), "u", "left_semi")
             .join(active.withColumnRenamed("n", "v"), "v", "left_semi")
             .select("u", "v")
-            .persist()
         )
         out = out.unionAll(count_row(it, active, e))
         d = degrees(e)
@@ -730,13 +732,12 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_data_ingestion_spark.functions.numeric import snap
 
     spark = small_fact_session(spark, sf_dir, "lineitem")
-    e = customer_supplier_edges(spark, sf_dir).persist()
-    deg = (
+    e = cached(customer_supplier_edges(spark, sf_dir))
+    deg = cached(
         e.select(F.col("u").alias("n"))
         .unionAll(e.select(F.col("v").alias("n")))
         .groupBy("n")
         .agg(F.count(F.lit(1)).alias("d"))
-        .persist()
     )
     d = F.col("d")
     degm = deg.agg(
@@ -853,7 +854,7 @@ def graph_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     comm = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey", F.col("s_nationkey").alias("c")
     )
-    cc = (
+    cc = cached(
         pairs.join(
             F.broadcast(
                 comm.select(
@@ -872,7 +873,6 @@ def graph_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("c1", "c2")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .persist()
     )
     m = cc.agg(
         F.sum("cnt").alias("m"),
@@ -979,7 +979,7 @@ def graph_rich_club_coefficient(
         "l_orderkey", "l_suppkey"
     )
     a, b = li.alias("a"), li.alias("b")
-    pairs = (
+    pairs = cached(
         a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -989,14 +989,12 @@ def graph_rich_club_coefficient(
             F.col("a.l_suppkey").alias("s1"), F.col("b.l_suppkey").alias("s2")
         )
         .distinct()
-        .persist()
     )
-    deg = (
+    deg = cached(
         pairs.select(F.col("s1").alias("n"))
         .unionAll(pairs.select(F.col("s2").alias("n")))
         .groupBy("n")
         .agg(F.count(F.lit(1)).alias("d"))
-        .persist()
     )
     node_hist = deg.groupBy("d").agg(F.count(F.lit(1)).alias("cn"))
     emin = (

@@ -26,6 +26,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from etl_data_ingestion_spark.catalog import checkpointed
 from etl_data_ingestion_spark.operators import graph
 from etl_data_ingestion_spark.plans.registry import register
 
@@ -372,11 +373,10 @@ def graph_hits_fixed_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum). Scale shape: each half-round is one join keyed on the
     incidence edge + one aggregation; the 1-row MAX broadcasts."""
     # the capped (c, s) incidence list: the shared posting lists
-    # exploded back to rows
-    cs = (
+    # exploded back to rows; four join consumers below
+    cs = checkpointed(
         graph.posting_lists(spark, sf_dir)
         .select("c", F.explode("ss").alias("s"))
-        .localCheckpoint()  # four join consumers below
     )
     auth = cs.select("s").distinct().select(
         "s", F.lit(1000000000).cast("long").alias("a9")
@@ -472,7 +472,7 @@ def graph_ktruss_edge_support(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(lower_first, F.col("v")).otherwise(F.col("u")).alias("b"),
     )
     e1, e2, e3 = oriented.alias("e1"), oriented.alias("e2"), oriented.alias("e3")
-    tri = (
+    tri = checkpointed(
         e1.join(e2, F.col("e2.a") == F.col("e1.b"))
         .join(
             e3,
@@ -484,7 +484,6 @@ def graph_ktruss_edge_support(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("e1.b").alias("y"),
             F.col("e2.b").alias("z"),
         )
-        .localCheckpoint()
     )
     tedges = (
         tri.select(

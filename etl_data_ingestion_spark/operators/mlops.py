@@ -20,7 +20,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from etl_data_ingestion_spark.catalog import load_table, small_fact_session
+from etl_data_ingestion_spark.catalog import cached, load_table, small_fact_session
 from etl_data_ingestion_spark.plans.registry import register
 
 AUC_ORACLE = """
@@ -1510,12 +1510,12 @@ def ml_kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders", parallel=False)
     # persist the date rollup: the self-join reads it twice and would
     # otherwise scan the fact table once per side
-    daily = orders.groupBy(F.col("o_orderdate").alias("d")).agg(
+    daily = cached(orders.groupBy(F.col("o_orderdate").alias("d")).agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.sum(
             F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
         ).alias("rev_cents"),
-    ).persist()
+    ))
     a = daily.alias("a")
     b = daily.alias("b")
     dx = F.col("a.n_orders") - F.col("b.n_orders")
@@ -1916,10 +1916,9 @@ def ml_item_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    baskets = (
+    baskets = cached(
         li.groupBy("l_orderkey")
         .agg(F.sort_array(F.collect_set(pk_guarded)).alias("parts"))
-        .persist()
     )
     item = (
         baskets.select(F.explode("parts").alias("l_partkey"))
@@ -2158,7 +2157,7 @@ def ml_isotonic_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rate(j..k) range wrongly reaches back past the gap (round-8
     # advisor finding; oracle mirrored)
     wl = Window.orderBy("bin")
-    pre = (
+    pre = cached(
         bins.select(
             "bin",
             "n",
@@ -2179,7 +2178,6 @@ def ml_isotonic_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("pcs"),
         )
-        .persist()
     )
     j = pre.select(F.col("bin").alias("j"), "pcn", "pcs")
     k = pre.select(F.col("bin").alias("k"), F.col("cn").alias("kcn"), F.col("cs").alias("kcs"))
@@ -3385,9 +3383,9 @@ def ml_poisson_deviance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_data_ingestion_spark.functions.numeric import snap
 
     ev = load_table(spark, sf_dir, "events", parallel=False)
-    cnt = ev.groupBy(
+    cnt = cached(ev.groupBy(
         "event_type", F.to_date("ts").alias("d")
-    ).agg(F.count(F.lit(1)).alias("y")).persist()
+    ).agg(F.count(F.lit(1)).alias("y")))
     mu = cnt.groupBy("event_type").agg(
         (
             F.sum(
@@ -3650,13 +3648,12 @@ def ml_conformal_interval_coverage(
     )
     days = ev.select(F.to_date("ts").alias("d")).distinct()
     types = ev.select("event_type").distinct()
-    grid = (
+    grid = cached(
         types.crossJoin(F.broadcast(days))
         .join(cnt, ["event_type", "d"], "left")
         .select(
             "event_type", "d", F.coalesce(F.col("y"), F.lit(0)).alias("y")
         )
-        .persist()
     )
     mu = grid.groupBy("event_type").agg(
         (
@@ -4010,12 +4007,12 @@ def ml_sprt_sequential_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     b9 = F.floor(
         F.log(F.lit(0.05) / F.lit(0.95)) * 1000000000 + F.lit(0.5)
     ).cast("long")
-    walk = daily.select(
+    walk = cached(daily.select(
         "d",
         F.sum(i9).over(Window.orderBy("d")).alias("c9"),
         a9.alias("a9"),
         b9.alias("b9"),
-    ).persist()
+    ))
     crossed = walk.filter(
         (F.col("c9") >= F.col("a9")) | (F.col("c9") <= F.col("b9"))
     )

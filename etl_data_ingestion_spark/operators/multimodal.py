@@ -29,7 +29,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from etl_data_ingestion_spark.catalog import load_table
+from etl_data_ingestion_spark.catalog import checkpointed, load_table
 from etl_data_ingestion_spark.plans.registry import register
 
 BINARY_META_ORACLE = """
@@ -1353,9 +1353,9 @@ def multimodal_image_ahash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("doc_id") + 7000000).alias("doc_id")
         )
     )
-    hashes = ids.mapInPandas(
+    hashes = checkpointed(ids.mapInPandas(
         hash_batch, schema="doc_id long, ahash long"
-    ).localCheckpoint()
+    ))
     # banded candidate generation: 4 bands x 4 bits; hamming <= 2
     # leaves >= 2 intact bands, so every true pair shares a band key
     bands = hashes.select(

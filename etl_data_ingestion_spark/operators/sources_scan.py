@@ -19,7 +19,7 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from etl_data_ingestion_spark.catalog import dir_key, load_table, table_path
+from etl_data_ingestion_spark.catalog import cached, dir_key, load_table, table_path
 from etl_data_ingestion_spark.config import SCRATCH
 from etl_data_ingestion_spark.plans.registry import register
 
@@ -580,10 +580,10 @@ def scan_csv_permissive_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .csv(path)
     )
-    # cache() before splitting on _corrupt_record: Spark documents that
+    # cached() before splitting on _corrupt_record: Spark documents that
     # querying ONLY the corrupt column of a lazy CSV relation is
     # disallowed/unreliable without materializing alongside data cols
-    back = back.cache()
+    back = cached(back)
     return back.agg(
         F.sum(
             F.when(F.col("_corrupt_record").isNotNull(), 1).otherwise(0)

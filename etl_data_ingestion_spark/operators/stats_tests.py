@@ -41,7 +41,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from etl_data_ingestion_spark.catalog import load_table
+from etl_data_ingestion_spark.catalog import cached, load_table
 from etl_data_ingestion_spark.functions.numeric import snap
 from etl_data_ingestion_spark.plans.registry import register
 
@@ -1105,9 +1105,9 @@ def agg_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(n log n) rank formulation (S = sum of concordances via
     mergesort inversions) — documented cutover."""
     ev = load_table(spark, sf_dir, "events", parallel=False)
-    daily = ev.groupBy(F.to_date("ts").alias("d")).agg(
+    daily = cached(ev.groupBy(F.to_date("ts").alias("d")).agg(
         F.floor(F.sum("value") * 100 + F.lit(0.5)).cast("long").alias("y")
-    ).persist()
+    ))
     a, b = daily.alias("a"), daily.alias("b")
     s_row = (
         a.join(F.broadcast(b), F.col("a.d") < F.col("b.d"))
@@ -1488,10 +1488,10 @@ def agg_hodges_lehmann_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("we"),
     )
-    d = wk.select(
+    d = cached(wk.select(
         F.row_number().over(Window.orderBy("w")).alias("i"),
         (F.col("wd") - F.col("we")).alias("d"),
-    ).persist()
+    ))
     a, b = d.alias("a"), d.alias("b")
     walsh = a.join(F.broadcast(b), F.col("a.i") <= F.col("b.i")).select(
         (F.col("a.d") + F.col("b.d")).alias("w2")
@@ -1581,22 +1581,21 @@ def agg_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(
         F.floor(F.sum("value") * 100 + F.lit(0.5)).cast("long").alias("y")
     )
-    c2 = (
+    c2 = cached(
         cell.withColumn(
             "ndow", F.count(F.lit(1)).over(Window.partitionBy("w"))
         )
         .filter(F.col("ndow") == 7)
         .drop("ndow")
-        .persist()
     )
-    ranked = c2.select(
+    ranked = cached(c2.select(
         "dow",
         (
             2 * F.rank().over(Window.partitionBy("w").orderBy("y"))
             + F.count(F.lit(1)).over(Window.partitionBy("w", "y"))
             - 1
         ).alias("r2"),
-    ).persist()
+    ))
     nst = c2.select(F.count_distinct("w").alias("n"))
     rj = ranked.groupBy("dow").agg(F.sum("r2").cast("long").alias("r2j"))
     a4 = ranked.agg(
@@ -2043,12 +2042,12 @@ def agg_energy_distance_weekend(
     ~1e5 days x 1e12-cent days (documented WIDE cutover past
     that)."""
     ev = load_table(spark, sf_dir, "events", parallel=False)
-    daily = ev.groupBy(F.to_date("ts").alias("d")).agg(
+    daily = cached(ev.groupBy(F.to_date("ts").alias("d")).agg(
         F.floor(F.sum("value") * 100 + F.lit(0.5)).cast("long").alias("y")
     ).select(
         F.when(F.expr("weekday(d)") >= 5, 1).otherwise(0).alias("we"),
         "y",
-    ).persist()
+    ))
     a = daily.select(
         F.col("we").alias("wa"), F.col("y").alias("ya")
     )
@@ -2339,12 +2338,12 @@ def agg_tail_dependence_extremes(
     thresholds; exact conditional counts; 1-row chain. Nothing
     grows past the first aggregation at any corpus size."""
     ev = load_table(spark, sf_dir, "events", parallel=False)
-    daily = ev.groupBy(F.to_date("ts").alias("d")).agg(
+    daily = cached(ev.groupBy(F.to_date("ts").alias("d")).agg(
         F.sum(
             F.when(F.col("event_type") == "view", 1).otherwise(0)
         ).alias("x"),
         F.floor(F.sum("value") * 100 + F.lit(0.5)).cast("long").alias("y"),
-    ).persist()
+    ))
     cuts = daily.agg(
         F.expr("percentile_disc(0.9) WITHIN GROUP (ORDER BY x)").alias(
             "qx_hi"
@@ -2836,7 +2835,7 @@ def agg_wasserstein_weekend(spark: SparkSession, sf_dir: str) -> DataFrame:
     by n1*n2*gap and the sum telescopes to n1*n2*range, ~1e13 at
     fixture scale but WIDE keeps the headroom explicit."""
     ev = load_table(spark, sf_dir, "events", parallel=False)
-    daily = (
+    daily = cached(
         ev.groupBy(F.to_date("ts").alias("d"))
         .agg(
             F.floor(F.sum("value") * 100 + F.lit(0.5))
@@ -2847,7 +2846,6 @@ def agg_wasserstein_weekend(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.expr("weekday(d)") >= 5, 1).otherwise(0).alias("we"),
             "y",
         )
-        .persist()
     )
     ns = daily.agg(
         F.sum(1 - F.col("we")).cast("long").alias("n1"),
@@ -3782,12 +3780,12 @@ def agg_mood_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     1e-6 snap with terms O(1e2) the boundary risk is the module-
     docstring epsilon assumption."""
     orders = load_table(spark, sf_dir, "orders", parallel=False)
-    s = orders.select(
+    s = cached(orders.select(
         F.substring("o_orderpriority", 1, 1).cast("int").alias("g"),
         F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
         .cast("long")
         .alias("v"),
-    ).persist()
+    ))
     w = Window.orderBy("v")
     med = (
         s.select(
@@ -4568,7 +4566,7 @@ def agg_breusch_pagan_order_size(
     cnt = li.groupBy(F.col("l_orderkey").alias("ok")).agg(
         F.count(F.lit(1)).alias("x")
     )
-    j = per.join(cnt, "ok").select("x", "y").persist()
+    j = cached(per.join(cnt, "ok").select("x", "y"))
     m = j.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("x").cast("long").alias("sx"),

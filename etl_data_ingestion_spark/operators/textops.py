@@ -11,7 +11,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from etl_data_ingestion_spark.catalog import load_table
+from etl_data_ingestion_spark.catalog import cached, checkpointed, load_table
 from etl_data_ingestion_spark.functions.arrays import ordered_pairs
 from etl_data_ingestion_spark.functions.text import (
     BPE_ISH_PATTERN,
@@ -648,9 +648,9 @@ def text_bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     toks = docs.select("doc_id", tokens("text").alias("ts"))
     t = toks.select("doc_id", F.explode("ts").alias("tok"))
-    b = toks.select(
+    b = cached(toks.select(
         "doc_id", F.explode(adjacent_bigrams("ts")).alias("bg")
-    ).select("doc_id", "bg.w1", "bg.w2").persist()
+    ).select("doc_id", "bg.w1", "bg.w2"))
     c1 = t.groupBy("tok").agg(F.count(F.lit(1)).alias("c1"))
     c2 = b.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2"))
     vocab = t.select(F.countDistinct("tok").alias("vs"))
@@ -1069,7 +1069,8 @@ def text_pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    counts = (
+    # domain-sized; feeds nd, df, and pairs
+    counts = checkpointed(
         docs.select(F.explode(F.concat(marker, singles, pairs)).alias("t"))
         .groupBy(
             F.col("t.k").alias("k"),
@@ -1077,7 +1078,6 @@ def text_pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("t.y").alias("y"),
         )
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint()  # domain-sized; feeds nd, df, and pairs
     )
     nd = counts.filter(F.col("k") == 0).select(F.col("c").alias("nd"))
     df = counts.filter(F.col("k") == 1).select(
@@ -1431,7 +1431,7 @@ def text_source_vocab_jaccard(
     from etl_data_ingestion_spark.functions.numeric import snap
 
     docs = load_table(spark, sf_dir, "documents", parallel=True)
-    tsets = (
+    tsets = checkpointed(
         docs.select(
             "source",
             F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("tok"),
@@ -1441,7 +1441,6 @@ def text_source_vocab_jaccard(
         .agg(F.sort_array(F.collect_set("source")).alias("srcs"))
         # |vocab|-sized; two consumers (sizes + pair expansion) — the
         # checkpoint stops a second full scan+explode+aggregation
-        .localCheckpoint()
     )
     sizes = (
         tsets.select(F.explode("srcs").alias("source"))
@@ -1626,7 +1625,7 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist the phrase-occurrence stream: word stats and phrase
     # counts both consume it, and recomputing means a second corpus
     # scan plus a second pass of the regexp pipeline
-    occ = (
+    occ = cached(
         docs.select("doc_id", s.alias("s"))
         .select("doc_id", F.explode(F.split(F.col("s"), r"\|")).alias("p"))
         .select("doc_id", F.trim(F.col("p")).alias("phrase"))
@@ -1634,7 +1633,6 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.length("phrase") > 0)
             & F.size(F.split(F.col("phrase"), " +")).between(1, 3)
         )
-        .persist()
     )
     occ_words = occ.select(
         "phrase",
@@ -1735,13 +1733,13 @@ def text_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length(F.trim("text")) > 0
     )
     toks = docs.select("doc_id", tokens("text").alias("ts"))
-    b = toks.select(
+    b = cached(toks.select(
         "doc_id", F.explode(adjacent_bigrams("ts")).alias("bg")
-    ).select("doc_id", "bg.w1", "bg.w2").persist()
+    ).select("doc_id", "bg.w1", "bg.w2"))
     # persist the bigram-type table too: c1/cont/bt all derive from
     # it, and without the persist each branch re-aggregates the full
     # bigram stream (plan-audit finding: 5 fact scans -> 1)
-    c2 = b.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12")).persist()
+    c2 = cached(b.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12")))
     c1 = c2.groupBy("w1").agg(
         F.sum("c12").alias("c1"), F.count(F.lit(1)).alias("t1")
     )
@@ -2415,12 +2413,12 @@ def text_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH-bucketed blocking on the z-vectors (the house similarity
     machinery); stated cutover, same statistic."""
     docs = load_table(spark, sf_dir, "documents", parallel=False)
-    toks = docs.select(
+    toks = cached(docs.select(
         "source",
         F.explode(
             F.regexp_extract_all(F.lower("text"), F.lit("[a-z]+"), 0)
         ).alias("w"),
-    ).persist()
+    ))
     top = (
         toks.groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -2436,7 +2434,7 @@ def text_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sources = docs.select("source").distinct()
     grid = sources.crossJoin(F.broadcast(top))
-    f = (
+    f = cached(
         grid.join(cnt, ["source", "w"], "left")
         .join(tot, "source")
         .select(
@@ -2452,7 +2450,6 @@ def text_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("f9"),
         )
-        .persist()
     )
     stats = f.groupBy("w").agg(
         F.count(F.lit(1)).alias("ns"),
@@ -2574,10 +2571,9 @@ def text_good_turing_estimates(
         .groupBy("term")
         .agg(F.count(F.lit(1)).cast("long").alias("freq"))
     )
-    fof = (
+    fof = cached(
         tf.groupBy(F.col("freq").alias("r"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_types"))
-        .persist()
     )
     total = fof.agg(
         F.sum(F.col("r") * F.col("n_types")).cast("long").alias("n_tokens")

@@ -12,7 +12,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from etl_data_ingestion_spark.catalog import load_table
+from etl_data_ingestion_spark.catalog import cached, load_table
 from etl_data_ingestion_spark.plans.registry import register
 
 RANK_ORACLE = """
@@ -1784,14 +1784,14 @@ def timeseries_sax_symbols(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # persist the 53-row segment table: the stats aggregate and the
     # z-score projection both read it (else two fact scans)
-    seg = daily.groupBy(
+    seg = cached(daily.groupBy(
         F.floor((F.col("doy") - 1) / 7).cast("long").alias("segment")
     ).agg(
         F.count(F.lit(1)).alias("n_days"),
         F.floor(F.sum("day_cents") * 1.0 / F.count(F.lit(1)) + F.lit(0.5))
         .cast("long")
         .alias("v"),
-    ).persist()
+    ))
     stats = seg.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("v").alias("sv"),
@@ -2875,7 +2875,7 @@ def timeseries_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("mean_micro"),
     )
-    pts = mean_rs.select(
+    pts = cached(mean_rs.select(
         "m",
         "n_blocks",
         "mean_micro",
@@ -2887,7 +2887,7 @@ def timeseries_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("long")
         .alias("v"),
-    ).persist()
+    ))
     slope = pts.agg(
         (
             (
@@ -3778,9 +3778,9 @@ def timeseries_sample_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     minute-grained series the standard KD-bucketing on floor(x0/r)
     bounds the pair join to neighbor buckets (documented cutover)."""
     ev = load_table(spark, sf_dir, "events", parallel=False)
-    daily = ev.groupBy(F.to_date("ts").alias("d")).agg(
+    daily = cached(ev.groupBy(F.to_date("ts").alias("d")).agg(
         F.floor(F.sum("value") * 100 + F.lit(0.5)).cast("long").alias("y")
-    ).persist()
+    ))
     y, cnt = F.col("y"), F.count(F.lit(1))
     var_ = daily.agg(
         (
@@ -3792,7 +3792,7 @@ def timeseries_sample_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("r")
     )
     w = Window.orderBy("d")
-    tpl = (
+    tpl = cached(
         daily.select(
             F.row_number().over(w).alias("i"),
             y.alias("x0"),
@@ -3800,7 +3800,6 @@ def timeseries_sample_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lead("y", 2).over(w).alias("x2"),
         )
         .filter(F.col("x2").isNotNull())
-        .persist()
     )
     a, b = tpl.alias("a"), tpl.alias("b")
     r = F.col("r")
@@ -3923,11 +3922,11 @@ def timeseries_engle_granger_coint(
         ).alias("dp"),
     )
     w = Window.orderBy("d")
-    lvl = daily.select(
+    lvl = cached(daily.select(
         "d",
         F.sum("dv").over(w).cast("long").alias("x"),
         F.sum("dp").over(w).cast("long").alias("y"),
-    ).persist()
+    ))
     ols = lvl.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("x").cast("long").alias("sx"),
@@ -4254,9 +4253,9 @@ def timeseries_peak_prominence(
         F.floor(F.sum("value") * 100 + F.lit(0.5)).cast("long").alias("y")
     )
     w = Window.orderBy("d")
-    idx = daily.select(
+    idx = cached(daily.select(
         F.row_number().over(w).alias("i"), "d", "y"
-    ).persist()
+    ))
     peaks = (
         idx.select(
             "i",

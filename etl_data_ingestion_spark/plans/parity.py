@@ -18,10 +18,11 @@ import os
 import threading
 import time
 from dataclasses import dataclass
+from operator import methodcaller
 
 import pandas as pd
 
-from .registry import ORACLES, QUERIES
+from .registry import ORACLES, run
 
 OK, FAIL, ROWS_ONLY, ORACLE_TIMEOUT = "ok", "fail", "rows-only", "oracle-timeout"
 
@@ -123,10 +124,11 @@ class Verdict:
 
 
 def check(spark, con, name: str, sf_dir: str) -> Verdict:
-    """Run query ``name`` on ``spark`` and its oracle on ``con`` (see
-    ``duckdb_views``) over ``sf_dir``, and judge the results."""
+    """Run query ``name`` on ``spark`` through ``registry.run`` and its
+    oracle on ``con`` (see ``duckdb_views``) over ``sf_dir``, and judge
+    the results."""
     try:
-        got = QUERIES[name](spark, sf_dir).toPandas()
+        got = run(spark, name, sf_dir, methodcaller("toPandas")).result
     except Exception as e:  # the query's own failure is the verdict
         return Verdict(name, FAIL, detail="spark raised", error=str(e))
     sql = ORACLES.get(name)

@@ -4,7 +4,9 @@ Every implemented operator/query gets one entry: a builder
 ``(spark, sf_dir) -> DataFrame`` and, when the semantics are
 ANSI-SQL-expressible, a DuckDB oracle SQL string run against the same
 parquet tables. The driver contract (__spark_entry__.py) is a thin
-view over this registry; tests iterate it too.
+view over this registry; tests iterate it too. ``run`` is the one way
+a tool, bench or test runs a registered query: under a job group named
+after it, timed, with what it pinned released afterwards.
 
 Parity rules (SURVEY.md §7.4):
 - alias every computed column identically in Spark and SQL;
@@ -15,10 +17,15 @@ Parity rules (SURVEY.md §7.4):
 
 from __future__ import annotations
 
+import time
 from collections.abc import Callable
-from typing import Optional
+from dataclasses import dataclass
+from typing import Any, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+
+from etl_data_ingestion_spark.catalog import query_scope
+from etl_data_ingestion_spark.session import job_group
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -38,6 +45,45 @@ def register(name: str, oracle: Optional[str] = None):
         return fn
 
     return deco
+
+
+def _noop(df: DataFrame) -> None:
+    df.write.mode("overwrite").format("noop").save()
+
+
+# The no-op sink action: the full distributed plan runs and nothing is
+# materialized on the driver.
+NOOP: Callable[[DataFrame], None] = _noop
+
+
+@dataclass(frozen=True)
+class Run:
+    """``result`` is what the action returned; ``seconds`` times the
+    build and the action; ``jobs`` counts the Spark jobs both ran."""
+
+    result: Any
+    seconds: float
+    jobs: int
+
+
+def run(
+    spark: SparkSession,
+    name: str,
+    sf_dir: str,
+    action: Callable[[DataFrame], Any],
+    build: QueryFn | None = None,
+) -> Run:
+    """Build query ``name`` (or ``build``, an A/B arm standing in for
+    it) on ``sf_dir`` and run ``action`` on the frame, under job group
+    ``name``. What the build pinned with ``catalog.cached`` or
+    ``catalog.checkpointed`` is released afterwards, outside the timed
+    window, whether or not the query raised."""
+    build = build or QUERIES[name]
+    with job_group(spark, name) as group, query_scope():
+        t0 = time.perf_counter()
+        result = action(build(spark, sf_dir))
+        seconds = time.perf_counter() - t0
+    return Run(result, seconds, group.jobs)
 
 
 def query_names() -> list[str]:

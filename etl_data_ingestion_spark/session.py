@@ -29,12 +29,16 @@ carries further confs of its own (the only other conf writer). No
 engine-private conf exists: the catalog's
 scan fan-out follows the session's default parallelism, so a tuned
 vanilla ``local[N]`` session builds the same scans as ``get_spark(cpus=N)``
-and only its shuffle partition count differs.
+and only its shuffle partition count differs. ``job_group`` is the one
+place that names and counts a caller's Spark jobs.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
+from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
@@ -147,3 +151,35 @@ def child_session(spark: SparkSession, confs: dict[str, str]) -> SparkSession:
     for k, v in confs.items():
         child.conf.set(k, v)
     return child
+
+
+@dataclass
+class JobGroup:
+    """Once its block has exited, ``jobs``: the Spark jobs run under the
+    group in that block."""
+
+    jobs: int | None = None
+
+
+@contextmanager
+def job_group(spark: SparkSession, name: str) -> Iterator[JobGroup]:
+    """Run the block's Spark jobs under job group ``name`` (cleared on
+    exit) and count them. Jobs an earlier block ran under the same name
+    are not counted: the group's job ids are read, after the listener
+    bus has delivered every posted event, once before the block and
+    once after it. AQE stage materializations are jobs too."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+
+    def ids() -> set[int]:
+        bus.waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup(name))
+
+    group = JobGroup()
+    before = ids()
+    sc.setJobGroup(name, name)
+    try:
+        yield group
+    finally:
+        sc.setJobGroup(None, None)
+        group.jobs = len(ids() - before)

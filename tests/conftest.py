@@ -32,3 +32,15 @@ def empty_dir():
     if not os.path.isdir(path):
         subprocess.run([sys.executable, os.path.join(REPO, "tools", "gen_empty.py"), path], check=True)
     return path
+
+
+@pytest.fixture
+def no_persisted(spark):
+    """The shared context with nothing persisted. Tests that call
+    builders directly, outside ``registry.run``, leave their persists
+    and checkpoints behind, and Spark's context cleaner unpersists
+    those whenever the JVM collects them; a test that counts persisted
+    RDDs starts from none, so that no such drop lands in its count."""
+    spark.catalog.clearCache()
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist(False)

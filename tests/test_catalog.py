@@ -6,7 +6,10 @@ from __future__ import annotations
 
 import os
 import shutil
+from operator import methodcaller
 
+import pytest
+from pyspark import StorageLevel
 from pyspark.sql import DataFrameWriter
 
 from etl_data_ingestion_spark import catalog
@@ -116,6 +119,24 @@ def test_only_session_py_writes_conf():
                     if ".conf.set(" in fh.read():
                         hits.append(os.path.relpath(path, pkg))
     assert hits == ["session.py"]
+
+
+def test_operators_pin_through_the_catalog():
+    """Builders persist and checkpoint only through catalog.cached and
+    catalog.checkpointed, the calls a query scope records for release."""
+    import re
+
+    ops = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "etl_data_ingestion_spark", "operators",
+    )
+    pin = re.compile(r"\.persist\(|\.cache\(|localCheckpoint\(")
+    hits = []
+    for f in sorted(os.listdir(ops)):
+        if f.endswith(".py"):
+            with open(os.path.join(ops, f), encoding="utf-8") as fh:
+                hits += [f"{f}:{n}" for n, line in enumerate(fh, 1) if pin.search(line)]
+    assert hits == []
 
 
 def test_plan_cache_semantics(spark, sf_dir):
@@ -282,25 +303,72 @@ def test_gated_builders_leave_the_caller_adaptive(spark, sf_dir, monkeypatch):
         spark.catalog.clearCache()
 
 
+@pytest.mark.usefixtures("no_persisted")
 def test_gated_jobs_per_query(spark, sf_dir):
-    """Each gated query runs a fixed number of Spark jobs, counted
-    under a job group: an eager job that slips back into a builder, or
-    a child session that re-reads a schema per call, fails here."""
+    """Each gated query runs a fixed number of Spark jobs, counted by
+    registry.run on its second run: an eager job that slips back into a
+    builder, or a child session that re-reads a schema per call, fails
+    here."""
     from etl_data_ingestion_spark.plans import registry
 
     registry.load_all()
-    sc = spark.sparkContext
     jobs = {}
     for query in GATED_JOBS:
-        registry.QUERIES[query](spark, sf_dir).collect()
-        spark.catalog.clearCache()
-        group = f"gated_jobs_{query}"
-        sc.setJobGroup(group, group)
-        try:
-            registry.QUERIES[query](spark, sf_dir).collect()
-        finally:
-            sc.setJobGroup(None, None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        jobs[query] = len(sc.statusTracker().getJobIdsForGroup(group))
-        spark.catalog.clearCache()
+        registry.run(spark, query, sf_dir, methodcaller("collect"))
+        jobs[query] = registry.run(spark, query, sf_dir, methodcaller("collect")).jobs
     assert jobs == GATED_JOBS
+
+
+def _stored_rdds(spark) -> set[int]:
+    return {info.id() for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+@pytest.mark.usefixtures("no_persisted")
+def test_run_keeps_the_resident_scans(spark, sf_dir):
+    """registry.run releases only what its query pinned: the scans
+    persist_scans pinned stay cached and stored after a headline query
+    and a query that persists its own intermediates."""
+    from etl_data_ingestion_spark.plans import registry
+
+    registry.load_all()
+    session = child_session(spark, {})  # a scan registry of its own
+    try:
+        registry.run(session, "tpch_q3_shipping_priority", sf_dir, registry.NOOP)
+        assert catalog.persist_scans(session) == 3
+        scans = list(catalog._SCANS[session].values())
+        stored = _stored_rdds(session)
+        for name in ("tpch_q3_shipping_priority", "agg_theil_inequality"):
+            registry.run(session, name, sf_dir, registry.NOOP)
+        assert all(df.is_cached for df in scans)
+        assert all(df.storageLevel != StorageLevel.NONE for df in scans)
+        assert stored <= _stored_rdds(session)
+    finally:
+        catalog.drop_plan_cache(session)
+
+
+@pytest.mark.usefixtures("no_persisted")
+def test_run_releases_only_what_it_cached(spark, sf_dir):
+    """A builder's cached() relation is released after the run, unless
+    the CacheManager already held its plan before the run: that entry
+    stays in place."""
+    from etl_data_ingestion_spark.plans import registry
+
+    def nation(s, d):
+        return s.read.parquet(catalog.table_path(d, "nation"))
+
+    def build(s, d):
+        return catalog.cached(nation(s, d)).groupBy("n_regionkey").count()
+
+    collect = methodcaller("collect")
+    registry.run(spark, "cached_probe", sf_dir, collect, build)
+    assert nation(spark, sf_dir).storageLevel == StorageLevel.NONE
+
+    held = catalog.cached(nation(spark, sf_dir))  # outside a scope
+    held.count()
+    try:
+        stored = _stored_rdds(spark)
+        registry.run(spark, "cached_probe", sf_dir, collect, build)
+        assert held.storageLevel != StorageLevel.NONE
+        assert _stored_rdds(spark) == stored
+    finally:
+        held.unpersist()

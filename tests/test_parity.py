@@ -3,8 +3,9 @@ Spark, then every registered query against its oracle twice: on the
 populated fixture in a child session with a layout no builder was
 tuned for (AQE off, 3 shuffle partitions), and on 0-row base tables in
 the tuned session. Last, the small-fact-gated queries on an AQE-on
-caller, where the gate engages. ``pytest tests/test_parity.py -k
-<query>`` checks one query."""
+caller, where the gate engages. Every query leaves as many persisted
+RDDs as it found: ``registry.run`` releases what it pinned. ``pytest
+tests/test_parity.py -k <query>`` checks one query."""
 
 from __future__ import annotations
 
@@ -90,6 +91,11 @@ ENGINE_SEMANTIC_DIVERGENCES: set[str] = {
 }
 
 
+def persisted(spark) -> int:
+    """Persisted RDDs on the session's context."""
+    return len(spark.sparkContext._jsc.getPersistentRDDs())
+
+
 @pytest.fixture(scope="module")
 def con(sf_dir):
     con = parity.duckdb_views(sf_dir)
@@ -102,14 +108,16 @@ def layout(spark):
     return child_session(spark, LAYOUT)
 
 
+@pytest.mark.usefixtures("no_persisted")
 @pytest.mark.parametrize("name", NAMES)
 def test_query_matches_oracle_on_a_non_default_layout(spark, sf_dir, con, layout, name):
     parent = {k: spark.conf.get(k) for k in LAYOUT}
-    before = layout.conf.getAll
+    before, rdds = layout.conf.getAll, persisted(spark)
     v = parity.check(layout, con, name, sf_dir)
     assert v.status == parity.OK, (v.detail, v.error)
     assert layout.conf.getAll == before
     assert {k: spark.conf.get(k) for k in LAYOUT} == parent
+    assert persisted(spark) == rdds
 
 
 @pytest.fixture(scope="module")
@@ -119,9 +127,10 @@ def empty_con(empty_dir):
     con.close()
 
 
+@pytest.mark.usefixtures("no_persisted")
 @pytest.mark.parametrize("name", NAMES)
 def test_query_matches_oracle_on_empty_tables(spark, empty_dir, empty_con, name):
-    before = spark.conf.getAll
+    before, rdds = spark.conf.getAll, persisted(spark)
     v = parity.check(spark, empty_con, name, empty_dir)
     if name in EXPECTED_RAISES:
         assert (v.status, v.detail) == (parity.FAIL, "spark raised"), v
@@ -131,6 +140,7 @@ def test_query_matches_oracle_on_empty_tables(spark, empty_dir, empty_con, name)
     else:
         assert v.status == parity.OK, (v.detail, v.error)
     assert spark.conf.getAll == before
+    assert persisted(spark) == rdds
 
 
 @pytest.fixture(scope="module")
@@ -140,14 +150,17 @@ def adaptive(spark):
     return child_session(spark, {})
 
 
+@pytest.mark.usefixtures("no_persisted")
 @pytest.mark.parametrize("name", GATED_QUERIES)
 def test_gated_query_matches_oracle_with_the_gate_engaged(sf_dir, con, adaptive, name):
     """On an AQE-on caller the gate plans on its own child session: the
-    result still matches the oracle and the caller's conf is the same
-    after the query's first call as before it."""
+    result still matches the oracle, the caller's conf is the same
+    after the query's first call as before it, and the persists the
+    builder made on the child are released."""
     assert adaptive.conf.get("spark.sql.adaptive.enabled") == "true"
-    before = adaptive.conf.getAll
+    before, rdds = adaptive.conf.getAll, persisted(adaptive)
     v = parity.check(adaptive, con, name, sf_dir)
     assert v.status == parity.OK, (v.detail, v.error)
     assert adaptive.conf.getAll == before
+    assert persisted(adaptive) == rdds
     assert catalog._CHILDREN.get(adaptive), "the gate did not engage"

@@ -5,8 +5,10 @@ physical form so a refactor can't silently regress it)."""
 from __future__ import annotations
 
 import re
+from operator import methodcaller
 
 import pyspark.sql.functions as F
+import pytest
 
 from etl_data_ingestion_spark.plans import registry as reg
 
@@ -244,25 +246,17 @@ WEDGE_JOBS = {
 }
 
 
+@pytest.mark.usefixtures("no_persisted")
 def test_wedge_jobs_per_query(spark, sf_dir):
     """Each edge_build caller runs a fixed number of Spark jobs, counted
-    under a job group: an eager job that slips into the edge build or a
-    caller, or a planned broadcast that turns back into a shuffle join,
-    changes a count and fails here."""
-    sc = spark.sparkContext
+    by registry.run on its second run (the first reads schemas): an
+    eager job that slips into the edge build or a caller, or a planned
+    broadcast that turns back into a shuffle join, changes a count and
+    fails here."""
     jobs = {}
     for query in WEDGE_JOBS:
-        reg.QUERIES[query](spark, sf_dir).collect()
-        spark.catalog.clearCache()
-        group = f"wedge_jobs_{query}"
-        sc.setJobGroup(group, group)
-        try:
-            reg.QUERIES[query](spark, sf_dir).collect()
-        finally:
-            sc.setJobGroup(None, None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        jobs[query] = len(sc.statusTracker().getJobIdsForGroup(group))
-        spark.catalog.clearCache()
+        reg.run(spark, query, sf_dir, methodcaller("collect"))
+        jobs[query] = reg.run(spark, query, sf_dir, methodcaller("collect")).jobs
     assert jobs == WEDGE_JOBS
 
 

@@ -14,7 +14,8 @@ rows under plans.parity.compare; otherwise the A/B is refused
 bench.sample_interleaved: one untimed warm pass, then `rounds`
 (default 5) passes that each take one sample of A and one of B, so a
 host-contention burst hits both arms alike. Spark arms run through
-bench.run_query on local[$SPARK_GRAFT_CPUS]; the DuckDB arm runs with
+registry.run (values through toPandas, samples through the no-op sink)
+on local[$SPARK_GRAFT_CPUS]; the DuckDB arm runs with
 threads=$SPARK_GRAFT_CPUS under parity.duckdb_run's timeout.
 
 Prints one JSON line:
@@ -33,6 +34,7 @@ import json
 import os
 import statistics
 import sys
+from operator import methodcaller
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -73,10 +75,14 @@ def make_arm(spec: str, spark, query: str, cons: dict):
             return None if r is None else round(r[0], 3)
 
         return values, sample
-    fn = registry.QUERIES[query] if spec == "stock" else load_builder(spec)
+    build = None if spec == "stock" else load_builder(spec)
+
+    def spark_run(sf_dir, action):
+        return registry.run(spark, query, sf_dir, action, build)
+
     return (
-        lambda sf_dir: fn(spark, sf_dir).toPandas(),
-        lambda sf_dir: round(bench.run_query(spark, query, sf_dir, fn=fn), 3),
+        lambda sf_dir: spark_run(sf_dir, methodcaller("toPandas")).result,
+        lambda sf_dir: round(spark_run(sf_dir, registry.NOOP).seconds, 3),
     )
 
 

@@ -12,9 +12,9 @@ measures it:
   (min-of-5) — the per-QUERY floor including one scan setup and one
   Exchange.
 - per query: min-of-3 cold timing under bench.run_query, the number
-  of Spark JOBS the action tree submits (statusTracker per job
-  group — AQE stage materializations each count, which is the honest
-  number), best-of-3 DuckDB oracle time, and the decomposition
+  of Spark JOBS the query runs (registry.run's job group — AQE stage
+  materializations each count, which is the honest number), best-of-3
+  DuckDB oracle time, and the decomposition
       compute_over_floor = spark_sec - n_jobs * floor_noop_sec
   Anything still >3x the oracle after floor subtraction is flagged
   PLAN (needs a plan fix); the rest report FLOOR.
@@ -55,7 +55,6 @@ def main() -> None:
 
     spark = get_spark(app_name="floor_decompose")
     spark.sparkContext.setLogLevel("ERROR")
-    sc = spark.sparkContext
     cpus = DEFAULT_CPUS
 
     bench.warm_up(spark, sf_dir, cpus)
@@ -68,7 +67,6 @@ def main() -> None:
         return time.perf_counter() - t0
 
     def floor_scan() -> float:
-        spark.catalog.clearCache()
         from etl_data_ingestion_spark.catalog import load_table
 
         t0 = time.perf_counter()
@@ -84,16 +82,8 @@ def main() -> None:
     )
     f_noop, f_scan = round(floors["noop"], 3), round(floors["scan"], 3)
 
-    def jobs_for(name: str) -> int:
-        group = f"probe_{name}"
-        sc.setJobGroup(group, name)
-        try:
-            bench.run_query(spark, name, sf_dir)
-        finally:
-            sc.setJobGroup(None, None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
-    n_jobs = {n: jobs_for(n) for n in names}  # also the warm pass
+    # also the warm pass
+    n_jobs = {n: registry.run(spark, n, sf_dir, registry.NOOP).jobs for n in names}
     timings, _ = bench.sample_interleaved(
         names,
         lambda n: round(bench.run_query(spark, n, sf_dir), 3),

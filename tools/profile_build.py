@@ -37,6 +37,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from etl_data_ingestion_spark.catalog import query_scope
 from etl_data_ingestion_spark.plans import registry
 from etl_data_ingestion_spark.session import get_spark
 
@@ -45,20 +46,21 @@ SF = os.environ.get("AB_SF", "/root/testdata/sf0.1")
 
 def profile_one(spark, name, fn):
     # warmup call end-to-end (build + run) so parquet footers,
-    # load_table caches and codegen are hot
+    # load_table caches and codegen are hot; each call's scope releases
+    # what the builder persisted or checkpointed
     try:
-        fn(spark, SF).write.mode("overwrite").format("noop").save()
+        with query_scope():
+            registry.NOOP(fn(spark, SF))
     except Exception as e:  # noqa: BLE001
         return {"name": name, "err": f"{type(e).__name__}: {e}"[:200]}
-    spark.catalog.clearCache()
-    t0 = time.perf_counter()
-    df = fn(spark, SF)
-    t1 = time.perf_counter()
-    df._jdf.queryExecution().optimizedPlan()
-    t2 = time.perf_counter()
-    df.write.mode("overwrite").format("noop").save()
-    t3 = time.perf_counter()
-    spark.catalog.clearCache()
+    with query_scope():
+        t0 = time.perf_counter()
+        df = fn(spark, SF)
+        t1 = time.perf_counter()
+        df._jdf.queryExecution().optimizedPlan()
+        t2 = time.perf_counter()
+        registry.NOOP(df)
+        t3 = time.perf_counter()
     out = {
         "name": name,
         "build": round(t1 - t0, 4),
