@@ -744,26 +744,22 @@ def main() -> None:
         else None
     )
 
-    scale_curve: dict[str, dict] = {}
-    if os.environ.get("SPARK_GRAFT_SCALE_CURVE", "1") == "1":
-        scale_curve, lane_drift = scale_curve_tier(
-            spark, sf_dir, comparable, cpus, baseline
-        )
-        drift.extend(lane_drift)
-        drift_lane_median.update(
-            (label, lane["lane_median_move"]) for label, lane in scale_curve.items()
-        )
-        if comparable:
-            scale_curve["0.1"] = {
-                "spark_total": round(sum(timings[n] for n in comparable), 3),
-                "duckdb_total": round(sum(duck[n] for n in comparable), 3),
-                "ratio": rtc,
-                "n_queries": len(comparable),
-            }
+    scale_curve, lane_drift = scale_curve_tier(
+        spark, sf_dir, comparable, cpus, baseline
+    )
+    drift.extend(lane_drift)
+    drift_lane_median.update(
+        (label, lane["lane_median_move"]) for label, lane in scale_curve.items()
+    )
+    if comparable:
+        scale_curve["0.1"] = {
+            "spark_total": round(sum(timings[n] for n in comparable), 3),
+            "duckdb_total": round(sum(duck[n] for n in comparable), 3),
+            "ratio": rtc,
+            "n_queries": len(comparable),
+        }
 
-    bucketed_q3: dict[str, dict] = {}
-    if os.environ.get("SPARK_GRAFT_BUCKETED", "1") == "1":
-        bucketed_q3 = bucketed_q3_tier(spark, sf_dir, sf)
+    bucketed_q3 = bucketed_q3_tier(spark, sf_dir, sf)
 
     summary = json.dumps(
         {

@@ -312,7 +312,7 @@ def _with_scan_parallelism(spark: SparkSession, df: DataFrame) -> DataFrame:
     PushedFilters in .explain), so pruning is unaffected.
 
     Pushdown trap for callers: a .filter() whose predicate embeds an
-    expensive expression (e.g. size(word_ngrams(...)) > 0) is ALSO
+    expensive expression (e.g. size(word_ngrams_from(...)) > 0) is ALSO
     pushed through the repartition and then evaluates in the
     narrow pre-exchange stage — structure such operators so the
     expensive expression only occurs after the exchange (see

@@ -84,17 +84,6 @@ def adjacent_bigrams(tok_col: str | Column) -> Column:
     )
 
 
-def word_ngrams(col: str | Column, n: int = 3) -> Column:
-    """Distinct word n-grams straight from a TEXT column.
-
-    SLOW PATH — tokenizes inline, so the split expression re-runs per
-    gram (see word_ngrams_from). Kept for tests and tiny inputs only;
-    every operator hot path must materialize ``tokens(text)`` into a
-    column and call ``word_ngrams_from`` instead.
-    """
-    return word_ngrams_from(tokens(col), n)
-
-
 def char_shingles_from(trimmed_col: str | Column, k: int = 5) -> Column:
     """Distinct k-char shingles from an ALREADY-MATERIALIZED trimmed-text
     column (MinHash input); same empty-when-short guard — and the same
@@ -105,12 +94,6 @@ def char_shingles_from(trimmed_col: str | Column, k: int = 5) -> Column:
     return F.array_distinct(
         F.transform(_starts(F.length(t), k), lambda i: F.substring(t, i, k))
     )
-
-
-def char_shingles(col: str | Column, k: int = 5) -> Column:
-    """Distinct k-char shingles straight from a text column — SLOW PATH
-    (inline trim re-evaluated per shingle); see char_shingles_from."""
-    return char_shingles_from(F.trim(_c(col)), k)
 
 
 def rolling_fingerprint(col: str | Column) -> Column:

@@ -38,11 +38,3 @@ def l2_norm(a: str | Column) -> Column:
 
 def cosine_similarity(a: str | Column, b: str | Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
-def l2_normalize(a: str | Column) -> Column:
-    """Unit-normalize so euclidean distance becomes monotone in cosine
-    (the trick that lets BucketedRandomProjectionLSH serve cosine
-    queries)."""
-    norm = l2_norm(a)
-    return F.transform(_c(a), lambda x: x.cast("double") / norm)

@@ -89,13 +89,12 @@ class BigQueryWarehouseSink:
     append through ``format("bigquery")`` when the spark-bigquery
     connector jar is on the classpath.
 
-    The connector is NOT bundled here (no Google services in this
-    environment), so construction is guarded: ``is_available`` probes
-    the JVM classpath for the connector's relation provider, and
-    ``make_warehouse_sink`` falls back to ParquetWarehouseSink when
-    the probe fails — a deployment with the jar gets BigQuery writes
-    with no code change, one without gets a working local warehouse
-    instead of a classpath stacktrace."""
+    The connector is not bundled, so a deployment that wants BigQuery
+    constructs this sink and ships the jar. ``is_available`` probes the
+    JVM classpath for the connector's relation provider, and
+    ``check_target`` (which the runners call before any write) raises
+    naming the missing connector instead of failing mid-write with a
+    classpath stacktrace."""
 
     CONNECTOR_CLASS = "com.google.cloud.spark.bigquery.BigQueryRelationProvider"
 
@@ -118,8 +117,8 @@ class BigQueryWarehouseSink:
     def check_target(self, spark) -> None:
         if not self.is_available(spark):
             raise RuntimeError(
-                "spark-bigquery connector not on classpath; "
-                "use make_warehouse_sink() for guarded fallback"
+                "spark-bigquery connector not on classpath; add the jar or "
+                "write through ParquetWarehouseSink"
             )
 
     def write(self, parts: Parts) -> dict[str, int]:
@@ -127,36 +126,6 @@ class BigQueryWarehouseSink:
             parts,
             lambda w: w.format("bigquery").option("table", self.table).save(),
         )
-
-
-def make_warehouse_sink(spark, config, strict: bool = False):
-    """Config-driven sink selection (EngineConfig.warehouse_format):
-    'bigquery' + connector present → BigQueryWarehouseSink; otherwise
-    the parquet warehouse at config.warehouse_path.
-
-    A fallback away from an explicitly requested BigQuery target is
-    never silent: it logs a warning at selection time, and with
-    ``strict=True`` it raises instead — so a production deployment
-    that demands BigQuery fails fast rather than quietly landing data
-    in a local path (tests/test_runner.py asserts both behaviors)."""
-    if config.warehouse_format == "bigquery":
-        if BigQueryWarehouseSink.is_available(spark):
-            return BigQueryWarehouseSink(config.bigquery_table, config.batch_size)
-        msg = (
-            "warehouse_format='bigquery' requested but the spark-bigquery "
-            "connector is not on the classpath; "
-            + (
-                "strict mode: refusing to fall back"
-                if strict
-                else f"falling back to parquet warehouse at {config.warehouse_path!r}"
-            )
-        )
-        if strict:
-            raise RuntimeError(msg)
-        import logging
-
-        logging.getLogger(__name__).warning(msg)
-    return ParquetWarehouseSink(config.warehouse_path, config.batch_size)
 
 
 class BucketedWarehouseSink:

@@ -70,13 +70,6 @@ class CollectingNotifier:
         """Send ``ev`` after it is collected; collecting alone sends nothing."""
 
 
-class ConsoleNotifier(CollectingNotifier):
-    """Prints as it collects — the local/dev default."""
-
-    def _deliver(self, ev: Notification) -> None:
-        print(f"[notify] {ev.subject}")
-
-
 @dataclass
 class SmtpNotifier(CollectingNotifier):
     """Real email transport (reference O1, main.py:575-588: SMTP over

@@ -12,6 +12,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from etl_data_ingestion_spark.catalog import cached, load_table
+from etl_data_ingestion_spark.functions.numeric import fixed, snap
 from etl_data_ingestion_spark.plans.registry import register
 
 DISTINCT_ORACLE = """
@@ -261,7 +262,7 @@ def _pctl_col(q: float):
     vhi = F.sum(
         F.when(F.col("rn") == F.least(lo_row + 1, F.col("n")), F.col("v"))
     )
-    return F.floor((vlo + frac * (vhi - vlo)) * 100 + 0.5) / 100
+    return snap(vlo + frac * (vhi - vlo), 2)
 
 
 @register("agg_exact_percentiles", oracle=EXACT_PCTL_ORACLE)
@@ -475,29 +476,21 @@ def agg_median_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             # floor(x*100+0.5)/100: deterministic half-up on the same
             # doubles in both engines (see MEDIAN_ORACLE comment)
-            (
-                F.floor(
-                    F.sum(F.when(is_mid, F.col("o_totalprice")))
-                    / F.sum(F.when(is_mid, F.lit(1)))
-                    * 100
-                    + 0.5
-                )
-                / 100
+            snap(
+                F.sum(F.when(is_mid, F.col("o_totalprice")))
+                / F.sum(F.when(is_mid, F.lit(1))),
+                2,
             ).alias("median_price"),
             # exact-integer-cents mean (see MEDIAN_ORACLE comment):
             # per-row cent recovery is lossless on 2dp prices, the
             # integer SUM is order-independent, and the one final
             # division is the same IEEE op in both engines
             (
-                F.floor(
-                    F.sum(
-                        F.floor(F.col("o_totalprice") * 100 + 0.5).cast(
-                            "long"
-                        )
-                    )
+                fixed(
+                    F.sum(fixed(F.col("o_totalprice"), 2))
                     * 1.0
-                    / F.count(F.lit(1))
-                    + 0.5
+                    / F.count(F.lit(1)),
+                    0,
                 )
                 / 100
             ).alias("mean_price"),
@@ -2413,8 +2406,6 @@ def agg_spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate to six sufficient statistics and a fixed scalar chain.
     Fractional ranks are exact integers via the doubled-rank trick
     (see SPEARMAN_ORACLE)."""
-    from etl_data_ingestion_spark.functions.numeric import snap
-
     orders = load_table(spark, sf_dir, "orders")
     wx = Window.orderBy("o_totalprice")
     wxp = Window.partitionBy("o_totalprice")
@@ -2526,44 +2517,39 @@ def agg_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(my), "y")
         .crossJoin(F.broadcast(n_df))
     )
-    nano = 100000000
-    mi_t = F.floor(
+    mi_t = fixed(
         (F.col("c") * 1.0 / F.col("n"))
-        * F.log((F.col("c") * 1.0 * F.col("n")) / (F.col("cx") * 1.0 * F.col("cy")))
-        * nano
-        + F.lit(0.5)
-    ).cast("long")
+        * F.log((F.col("c") * 1.0 * F.col("n")) / (F.col("cx") * 1.0 * F.col("cy"))),
+        8,
+    )
     mi_sum = terms.agg(
         F.sum(mi_t).alias("mi_n"), F.count(F.lit(1)).alias("n_cells")
     )
     hx_sum = mx.crossJoin(F.broadcast(n_df)).agg(
         F.sum(
-            F.floor(
+            fixed(
                 -(F.col("cx") * 1.0 / F.col("n"))
-                * F.log(F.col("cx") * 1.0 / F.col("n"))
-                * nano
-                + F.lit(0.5)
-            ).cast("long")
+                * F.log(F.col("cx") * 1.0 / F.col("n")),
+                8,
+            )
         ).alias("hx_n")
     )
     hy_sum = my.crossJoin(F.broadcast(n_df)).agg(
         F.sum(
-            F.floor(
+            fixed(
                 -(F.col("cy") * 1.0 / F.col("n"))
-                * F.log(F.col("cy") * 1.0 / F.col("n"))
-                * nano
-                + F.lit(0.5)
-            ).cast("long")
+                * F.log(F.col("cy") * 1.0 / F.col("n")),
+                8,
+            )
         ).alias("hy_n")
     )
     s = mi_sum.crossJoin(hx_sum).crossJoin(hy_sum)
-    snap6 = lambda c: F.floor(c * 1000000 + F.lit(0.5)) / 1000000  # noqa: E731
     return s.select(
         "n_cells",
-        snap6(F.col("mi_n") / float(nano)).alias("mutual_info_nats"),
-        snap6(F.col("hx_n") / float(nano)).alias("entropy_priority"),
-        snap6(F.col("hy_n") / float(nano)).alias("entropy_status"),
-        snap6(F.col("mi_n") * 1.0 / F.least(F.col("hx_n"), F.col("hy_n"))).alias(
+        snap(F.col("mi_n") / 1e8, 6).alias("mutual_info_nats"),
+        snap(F.col("hx_n") / 1e8, 6).alias("entropy_priority"),
+        snap(F.col("hy_n") / 1e8, 6).alias("entropy_status"),
+        snap(F.col("mi_n") * 1.0 / F.least(F.col("hx_n"), F.col("hy_n")), 6).alias(
             "normalized_mi"
         ),
     )
@@ -2613,15 +2599,9 @@ def agg_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     brand sums and the running share are exact integer math; the
     |brands| rollup (~25 rows) runs its cumulative window on one
     executor trivially."""
-    from etl_data_ingestion_spark.functions.numeric import snap
-
     li = load_table(spark, sf_dir, "lineitem", parallel=False).select(
         "l_partkey",
-        F.floor(
-            F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
-            + F.lit(0.5)
-        )
-        .cast("long")
+        fixed(F.col("l_extendedprice") * (1 - F.col("l_discount")), 2)
         .alias("net_cents"),
     )
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
@@ -2694,15 +2674,11 @@ def agg_theil_inequality(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean broadcasts as two longs; per-customer entropy terms snap
     to exact NANO integers before the final sums, so the indices
     are summation-order independent at any scale."""
-    from etl_data_ingestion_spark.functions.numeric import snap
-
     orders = load_table(spark, sf_dir, "orders", parallel=False)
     # persist the customer rollup: tot and the term pass both read it,
     # and without the persist each branch re-scans the fact table
     cust = cached(orders.groupBy("o_custkey").agg(
-        F.sum(
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-        ).alias("cents")
+        F.sum(fixed(F.col("o_totalprice"), 2)).alias("cents")
     ))
     tot = cust.agg(
         F.count(F.lit(1)).alias("n"), F.sum("cents").alias("s")
@@ -2710,12 +2686,8 @@ def agg_theil_inequality(spark: SparkSession, sf_dir: str) -> DataFrame:
     mu = F.col("s") * 1.0 / F.col("n")
     ratio = F.col("cents") * 1.0 / mu
     terms = cust.crossJoin(F.broadcast(tot)).select(
-        F.floor(ratio * F.log(ratio) * 1000000000 + F.lit(0.5))
-        .cast("long")
-        .alias("t_nano"),
-        F.floor(F.log(mu / (F.col("cents") * 1.0)) * 1000000000 + F.lit(0.5))
-        .cast("long")
-        .alias("l_nano"),
+        fixed(ratio * F.log(ratio), 9).alias("t_nano"),
+        fixed(F.log(mu / (F.col("cents") * 1.0)), 9).alias("l_nano"),
         F.col("n"),
     )
     # coalesce: max(n) over the 0-row term relation is NULL where the
@@ -2787,9 +2759,7 @@ def agg_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     frontier set."""
     orders = load_table(spark, sf_dir, "orders", parallel=False)
     spend = orders.groupBy("o_custkey").agg(
-        F.sum(
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-        ).alias("cents"),
+        F.sum(fixed(F.col("o_totalprice"), 2)).alias("cents"),
         F.count(F.lit(1)).alias("n_orders"),
     )
     w_above = (
@@ -2924,13 +2894,11 @@ def agg_corr_matrix_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         qa, qb = F.col(f"q{i}"), F.col(f"q{j}")
         pab = F.col(f"p{i}{j}")
         return (
-            F.floor(
+            snap(
                 (n * pab - sa * sb)
-                / F.sqrt((n * qa - sa * sa) * 1.0 * (n * qb - sb * sb))
-                * 1000000
-                + F.lit(0.5)
+                / F.sqrt((n * qa - sa * sa) * 1.0 * (n * qb - sb * sb)),
+                6,
             )
-            / 1000000
         )
 
     rows = F.array(
@@ -3075,12 +3043,11 @@ def agg_countmin_width_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("cnt").alias("est_cnt"))
     )
     over = (F.col("est_cnt") - F.col("true_cnt")) * 1.0 / F.col("true_cnt")
-    snap6 = lambda c: F.floor(c * 1000000 + F.lit(0.5)) / 1000000
     return (
         est.groupBy(F.col("w").alias("width"))
         .agg(
-            snap6(F.avg(over)).alias("avg_over_frac"),
-            snap6(F.max(over)).alias("max_over_frac"),
+            snap(F.avg(over), 6).alias("avg_over_frac"),
+            snap(F.max(over), 6).alias("max_over_frac"),
         )
         .orderBy("width")
     )
@@ -3137,9 +3104,7 @@ def agg_hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     with ties at the boundary."""
     orders = load_table(spark, sf_dir, "orders", parallel=False)
     spend = orders.groupBy("o_custkey").agg(
-        F.sum(
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-        ).alias("cents")
+        F.sum(fixed(F.col("o_totalprice"), 2)).alias("cents")
     )
     topk = spend.select("cents").orderBy(F.col("cents").desc()).limit(200)
     kth = topk.agg(F.min("cents").alias("xk"), F.count(F.lit(1)).alias("k"))
@@ -3149,25 +3114,16 @@ def agg_hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "k",
             "xk",
-            F.floor(
-                F.log(F.col("cents") * 1.0 / F.col("xk")) * 1000000000
-                + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("l_nano"),
+            fixed(F.log(F.col("cents") * 1.0 / F.col("xk")), 9).alias("l_nano"),
         )
     )
     return terms.groupBy("k", F.col("xk").alias("kth_value_cents")).agg(
         F.count(F.lit(1)).cast("long").alias("n_tail_terms"),
-        (
-            F.floor(
-                F.count(F.lit(1))
-                * 1.0
-                / (F.sum("l_nano") / 1000000000.0)
-                * 1000000
-                + F.lit(0.5)
-            )
-            / 1000000
+        snap(
+            F.count(F.lit(1))
+            * 1.0
+            / (F.sum("l_nano") / 1000000000.0),
+            6,
         ).alias("hill_alpha"),
     ).select("k", "kth_value_cents", "n_tail_terms", "hill_alpha")
 
@@ -3221,9 +3177,7 @@ def agg_lorenz_curve_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys)."""
     orders = load_table(spark, sf_dir, "orders", parallel=False)
     spend = orders.groupBy("o_custkey").agg(
-        F.sum(
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-        ).alias("cents")
+        F.sum(fixed(F.col("o_totalprice"), 2)).alias("cents")
     )
     tiled = spend.select(
         "cents",
@@ -3241,13 +3195,7 @@ def agg_lorenz_curve_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
             "decile",
             F.col("n_customers").cast("long").alias("n_customers"),
             F.col("cents").alias("decile_cents"),
-            (
-                F.floor(
-                    F.sum("cents").over(w) * 1.0 / F.col("t") * 1000000
-                    + F.lit(0.5)
-                )
-                / 1000000
-            ).alias("cum_share"),
+            snap(F.sum("cents").over(w) * 1.0 / F.col("t"), 6).alias("cum_share"),
         )
         .orderBy("decile")
     )
@@ -3317,9 +3265,7 @@ def agg_herfindahl_concentration(
         F.col("s_suppkey").alias("l_suppkey"),
         F.col("s_nationkey").alias("nation"),
     )
-    cents = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast(
-        "long"
-    )
+    cents = fixed(F.col("l_extendedprice"), 2)
     rev = cached(
         li.select("l_suppkey", cents.alias("c"))
         .join(F.broadcast(sup), "l_suppkey")
@@ -3345,19 +3291,8 @@ def agg_herfindahl_concentration(
         .select(
             F.col("nation").cast("long").alias("nation"),
             "n_suppliers",
-            (
-                F.floor(
-                    F.col("sum_r2").cast("double") / (tot * tot) * 1000000
-                    + F.lit(0.5)
-                )
-                / 1000000
-            ).alias("hhi"),
-            (
-                F.floor(
-                    F.col("r4").cast("double") / tot * 1000000 + F.lit(0.5)
-                )
-                / 1000000
-            ).alias("cr4"),
+            snap(F.col("sum_r2").cast("double") / (tot * tot), 6).alias("hhi"),
+            snap(F.col("r4").cast("double") / tot, 6).alias("cr4"),
         )
         .orderBy("nation")
     )

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.window import Window
 
 from etl_data_ingestion_spark.catalog import load_table
+from etl_data_ingestion_spark.functions.numeric import fixed, snap
 from etl_data_ingestion_spark.plans.registry import register
 
 LAST_TOUCH_ORACLE = """
@@ -407,8 +408,6 @@ def events_session_gap_histogram(
     FLOOR(LOG2(gap + 0.5)) is engine-stable on integer gaps (the
     half-integer argument can never sit on a power of two, so libm
     ulp differences cannot flip the floor — see oracle header)."""
-    from etl_data_ingestion_spark.functions.numeric import snap
-
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gaps = ev.select(
@@ -537,9 +536,7 @@ def events_attribution_position_based(
             (F.col("p") == 1) | (F.col("p") == F.col("k")),
             F.lit(400000000),
         )
-        .otherwise(
-            F.floor(200000000.0 / (F.col("k") - 2) + F.lit(0.5))
-        )
+        .otherwise(fixed(200000000.0 / (F.col("k") - 2), 0))
         .cast("long")
     )
     credited = pos.select(F.col("event_type").alias("channel"), c9.alias("c9"))
@@ -555,12 +552,7 @@ def events_attribution_position_based(
         .groupBy("channel")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_touches"),
-            (
-                F.floor(
-                    F.sum("c9") / 1000000000.0 * 10000 + F.lit(0.5)
-                )
-                / 10000
-            ).alias("attributed_conversions"),
+            snap(F.sum("c9") / 1000000000.0, 4).alias("attributed_conversions"),
         )
         .orderBy("channel")
     )

@@ -18,6 +18,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from etl_data_ingestion_spark.catalog import cached, load_table
+from etl_data_ingestion_spark.functions.numeric import fixed
 from etl_data_ingestion_spark.functions.text import (
     BPE_ISH_PATTERN,
     tokens,
@@ -136,7 +137,7 @@ def dedup_duplicated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape (restructured round 5 after profiling at sf1): the
     8-gram build (interpreted HOF — transform isn't codegen'd) is
     the dominant cost, so it must (a) run exactly ONCE and (b) run
-    WIDE. The original shape evaluated word_ngrams in two branches
+    WIDE. The original shape evaluated the n-gram build in two branches
     (explode + a map-only array-size total) and its size()>0 filter
     was predicate-pushed through the repartition back into the
     narrow scan stage — 167s at sf1 with the HOF running twice on
@@ -161,7 +162,7 @@ def dedup_duplicated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = grams.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_grams")
     )
-    # (doc_id, g) pairs are distinct by construction (word_ngrams
+    # (doc_id, g) pairs are distinct by construction (word_ngrams_from
     # dedups per doc), so plain count == count_distinct(doc_id) minus
     # the expand + extra aggregation level a distinct agg would plan
     shared = (
@@ -334,10 +335,7 @@ def pipeline_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "window_tokens"
             ),
             (
-                F.floor(
-                    (win_end - F.col("seq_id") * 2048) * 10000.0 / 2048.0
-                    + 0.5
-                ).cast("long")
+                fixed((win_end - F.col("seq_id") * 2048) * 10000.0 / 2048.0, 0)
                 / F.lit(10000.0)
             ).alias("fill_ratio"),
         )

@@ -18,6 +18,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from etl_data_ingestion_spark.catalog import cached, checkpointed, load_table
+from etl_data_ingestion_spark.functions.numeric import fixed, snap
 from etl_data_ingestion_spark.functions.text import tokens, word_ngrams_from
 from etl_data_ingestion_spark.plans.registry import register
 
@@ -1484,8 +1485,6 @@ def pipeline_source_cap_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     the report aggregation reuses the same source partitioning. Cap
     arithmetic is exact integer math (ceil via (n+19)/20 under
     FLOOR) so the kept set is identical across engines."""
-    from etl_data_ingestion_spark.functions.numeric import snap
-
     # persist the 3-column projection: the corpus count and the
     # ranked pass both read it (else two parquet scans)
     docs = cached(load_table(spark, sf_dir, "documents", parallel=False).select(
@@ -1629,13 +1628,7 @@ def pipeline_token_budget_waterfill(spark: SparkSession, sf_dir: str) -> DataFra
         .select(
             "source",
             F.col("t").cast("long").alias("n_tokens"),
-            (
-                F.floor(
-                    F.least(F.col("t") * 1.0, F.col("lam")) * 10000
-                    + F.lit(0.5)
-                )
-                / 10000
-            ).alias("allocation"),
+            snap(F.least(F.col("t") * 1.0, F.col("lam")), 4).alias("allocation"),
             F.when(F.col("t") * 1.0 <= F.col("lam"), 1)
             .otherwise(0)
             .alias("kept_whole"),
@@ -1715,12 +1708,7 @@ def pipeline_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = s.select(
         "source",
         "nh",
-        F.floor(
-            nh
-            * F.sqrt(qx * 1.0 / nh - (sx * 1.0 / nh) * (sx * 1.0 / nh))
-            * 1000000000
-            + F.lit(0.5)
-        )
+        fixed(nh * F.sqrt(qx * 1.0 / nh - (sx * 1.0 / nh) * (sx * 1.0 / nh)), 9)
         .cast("decimal(38,0)")
         .alias("w9"),
     )
@@ -1946,18 +1934,15 @@ def quality_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     cls = wd.groupBy(
         "c_nationkey", "bal_band", "c_mktsegment", "ngw", "nn"
     ).agg(F.sum(term).alias("adj"))
-    tvd = F.floor(
+    tvd = snap(
         (
-            (
-                F.col("nn").cast("decimal(38,0)") * F.col("ngw")
-                + F.col("adj")
-            )
-            * 1.0
-            / (2.0 * F.col("ngw") * F.col("nn"))
+            F.col("nn").cast("decimal(38,0)") * F.col("ngw")
+            + F.col("adj")
         )
-        * 1000000
-        + F.lit(0.5)
-    ) / 1000000
+        * 1.0
+        / (2.0 * F.col("ngw") * F.col("nn")),
+        6,
+    )
     tv = cls.select(
         "c_nationkey", tvd.alias("tvd"), F.col("ngw").alias("ng")
     )
@@ -1971,9 +1956,7 @@ def quality_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(F.col("tvd") > 0.2, F.col("ng")).otherwise(0))
             .cast("long")
             .alias("n_exposed_rows"),
-            (F.floor(F.max("tvd") * 1000000 + F.lit(0.5)) / 1000000).alias(
-                "max_tvd"
-            ),
+            snap(F.max("tvd"), 6).alias("max_tvd"),
         )
         .orderBy("c_nationkey")
     )
@@ -2040,15 +2023,11 @@ def pipeline_train_test_split_hash(
             F.sum(F.when(F.col("is_train"), F.col("n_chars")).otherwise(0))
             .cast("long")
             .alias("train_chars"),
-            (
-                F.floor(
-                    F.sum(F.when(F.col("is_train"), 1).otherwise(0))
-                    * 1.0
-                    / F.count(F.lit(1))
-                    * 1000000
-                    + F.lit(0.5)
-                )
-                / 1000000
+            snap(
+                F.sum(F.when(F.col("is_train"), 1).otherwise(0))
+                * 1.0
+                / F.count(F.lit(1)),
+                6,
             ).alias("train_frac"),
         )
         .orderBy("source")
@@ -2134,19 +2113,10 @@ def pipeline_length_weight_ess(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tot.crossJoin(F.broadcast(top10)).select(
         "n_docs",
         F.col("s").cast("long").alias("total_tokens"),
-        (F.floor(ess * 10000 + F.lit(0.5)) / 10000).alias("ess"),
-        (
-            F.floor(ess / F.col("n_docs") * 1000000 + F.lit(0.5)) / 1000000
-        ).alias("ess_ratio"),
-        (
-            F.floor(F.col("mx") * 1.0 / s * 1000000 + F.lit(0.5)) / 1000000
-        ).alias("max_doc_share"),
-        (
-            F.floor(
-                F.col("t10").cast("double") / s * 1000000 + F.lit(0.5)
-            )
-            / 1000000
-        ).alias("top10_share"),
+        snap(ess, 4).alias("ess"),
+        snap(ess / F.col("n_docs"), 6).alias("ess_ratio"),
+        snap(F.col("mx") * 1.0 / s, 6).alias("max_doc_share"),
+        snap(F.col("t10").cast("double") / s, 6).alias("top10_share"),
     )
 
 
@@ -2217,12 +2187,6 @@ def pipeline_weighted_priority_sample(
         "doc_id",
         "source",
         n_tokens.cast("long").alias("n_tokens"),
-        F.floor(
-            F.pow((h + 1) / 2147483648.0, 1.0 / n_tokens)
-            * 1000000000
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("priority9"),
+        fixed(F.pow((h + 1) / 2147483648.0, 1.0 / n_tokens), 9).alias("priority9"),
     )
     return keyed.orderBy(F.col("priority9").desc(), "doc_id").limit(20)

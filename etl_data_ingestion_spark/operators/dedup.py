@@ -32,6 +32,7 @@ from etl_data_ingestion_spark.catalog import (
 )
 from etl_data_ingestion_spark.functions.arrays import ordered_pairs
 from etl_data_ingestion_spark.functions.minhash import minhash_signature_udf
+from etl_data_ingestion_spark.functions.numeric import snap
 from etl_data_ingestion_spark.functions.text import tokens, word_ngrams_from
 from etl_data_ingestion_spark.functions.vectors import cosine_similarity
 from etl_data_ingestion_spark.plans.registry import register
@@ -653,9 +654,7 @@ def connected_components(
     Each round is one shuffle-join (edges ⋈ labels) + one aggregate;
     localCheckpoint truncates the otherwise exponentially deepening
     lineage (the classic iterative-Spark failure mode). max_rounds
-    bounds a pathological diameter; for chain-heavy graphs at 100 TB
-    use connected_components_star below — O(log d) rounds of the same
-    shuffle primitive, equivalence-tested against this loop.
+    bounds a pathological diameter.
 
     Round-14 (optimization guide §1/§2.4, interleaved A/B −24% sf0.1
     / −27% sf1 on dedup_end_to_end_canonical): the per-round changed
@@ -707,88 +706,9 @@ def connected_components(
         raise RuntimeError(
             f"connected_components: no fixpoint after max_rounds={max_rounds} "
             "(graph diameter exceeds the cap); labels would be silently "
-            "under-merged. Raise max_rounds or use connected_components_star."
+            "under-merged. Raise max_rounds."
         )
     return labels
-
-
-def connected_components_star(
-    edges: DataFrame, src: str = "doc_a", dst: str = "doc_b", max_rounds: int = 25
-) -> DataFrame:
-    """Connected components by alternating large-star / small-star
-    edge rewriting (Kiveris et al., "Connected Components in
-    MapReduce and Beyond", SoCC'14) — converges in O(log d) rounds
-    where plain min-label propagation needs O(d), which is the
-    difference that matters on chain-heavy graphs at 100 TB.
-
-    Each round:
-      large-star: every node u links its LARGER neighbors to
-                  m(u) = min(N(u) ∪ {u});
-      small-star: every node u links its smaller-or-equal neighbors
-                  (and itself) to m(u).
-    Both are one groupBy(min) + one join per half-round — the same
-    shuffle primitive as label propagation, just with edge rewriting
-    that contracts star centers exponentially faster. Fixpoint check:
-    a cheap (count, sum-of-hash) signature as the screen, CONFIRMED by
-    an exact set compare (exceptAll, short-circuited at one row) so a
-    signature collision can't end iteration early with wrong
-    components. Raises if max_rounds is exhausted without a fixpoint
-    instead of returning silently-incomplete labels. Returns
-    (node, label) with label = the component's minimum node id."""
-
-    def half_round(e: DataFrame, large: bool) -> DataFrame:
-        # neighbors of u (undirected view)
-        nbrs = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
-            e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        )
-        m = nbrs.groupBy("u").agg(F.min("v").alias("mn")).select(
-            "u", F.least(F.col("u"), F.col("mn")).alias("m")
-        )
-        joined = nbrs.join(m, "u")
-        if large:
-            kept = joined.filter(F.col("v") > F.col("u"))
-        else:
-            kept = joined.filter(F.col("v") <= F.col("u"))
-        out = kept.select(F.col("v").alias("a"), F.col("m").alias("b"))
-        if not large:
-            out = out.unionByName(m.select(F.col("u").alias("a"), F.col("m").alias("b")))
-        return out.filter(F.col("a") != F.col("b")).distinct()
-
-    e = checkpointed(
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    prev_sig, prev_e, converged = None, None, False
-    for _ in range(max_rounds):
-        e = checkpointed(half_round(e, large=True))
-        e = checkpointed(half_round(e, large=False))
-        sig = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.hash("a", "b").cast("long")).alias("h"),
-        ).collect()[0]
-        sig = (sig["n"], sig["h"])
-        if sig == prev_sig:
-            # signature match is necessary, not sufficient: confirm the
-            # edge SETS are equal (both sides are distinct(), and equal
-            # counts + one-sided emptiness ⇒ set equality)
-            if e.exceptAll(prev_e).limit(1).count() == 0:
-                converged = True
-                break
-        prev_sig, prev_e = sig, e
-    if not converged:
-        raise RuntimeError(
-            f"connected_components_star: no fixpoint after max_rounds="
-            f"{max_rounds}; labels would be silently incomplete. "
-            "Raise max_rounds (rounds needed grow as O(log diameter))."
-        )
-    # at fixpoint every edge is (node -> its component min); add roots
-    roots = e.select(F.col("b").alias("node")).distinct().withColumn(
-        "label", F.col("node")
-    )
-    return e.select(F.col("a").alias("node"), F.col("b").alias("label")).unionByName(
-        roots
-    ).distinct()
 
 
 CLUSTER_ORACLE = """
@@ -1653,12 +1573,7 @@ def dedup_savings_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(dup).cast("long").alias("n_removable"),
             F.sum("ch").cast("long").alias("chars_total"),
             F.sum(dup_ch).cast("long").alias("chars_removable"),
-            (
-                F.floor(
-                    F.sum(dup_ch) * 1.0 / F.sum("ch") * 1000000 + F.lit(0.5)
-                )
-                / 1000000
-            ).alias("savings_rate"),
+            snap(F.sum(dup_ch) * 1.0 / F.sum("ch"), 6).alias("savings_rate"),
         )
         .orderBy("source")
     )

@@ -15,6 +15,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from etl_data_ingestion_spark.catalog import load_table
+from etl_data_ingestion_spark.functions.numeric import fixed, snap
 from etl_data_ingestion_spark.plans.registry import register
 
 FUNNEL_ORACLE = """
@@ -659,8 +660,6 @@ def events_survival_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a rollup to 15 rows. The cross join is |users|×15 of 8-byte
     ints — bounded expansion of the already-reduced grid, the
     events_dau_wau_mau doctrine."""
-    from etl_data_ingestion_spark.functions.numeric import snap
-
     ev = load_table(spark, sf_dir, "events")
     lifetimes = ev.groupBy("user_id").agg(
         F.datediff(
@@ -745,13 +744,7 @@ def events_churn_rate_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format("wk", "yyyy-MM-dd").alias("week_start"),
             F.col("active").cast("long").alias("active_users"),
             F.col("churned").cast("long").alias("churned_users"),
-            (
-                F.floor(
-                    F.col("churned") * 1.0 / F.col("active") * 1000000
-                    + F.lit(0.5)
-                )
-                / 1000000
-            ).alias("churn_rate"),
+            snap(F.col("churned") * 1.0 / F.col("active"), 6).alias("churn_rate"),
         )
         .orderBy("week_start")
     )
@@ -853,30 +846,16 @@ def events_exp_gap_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ks = cum.agg(
         F.max("n").alias("n"),
         F.max("s").alias("s"),
-        F.max(
-            F.floor((cumc * 1.0 / n - fexp) * 1000000000 + F.lit(0.5)).cast(
-                "long"
-            )
-        ).alias("dplus9"),
-        F.max(
-            F.floor(
-                (fexp - (cumc - c) * 1.0 / n) * 1000000000 + F.lit(0.5)
-            ).cast("long")
-        ).alias("dminus9"),
+        F.max(fixed(cumc * 1.0 / n - fexp, 9)).alias("dplus9"),
+        F.max(fixed(fexp - (cumc - c) * 1.0 / n, 9)).alias("dminus9"),
     )
     return ks.select(
         F.coalesce(n.cast("long"), F.lit(0)).alias("n_gaps"),
-        (F.floor(n * 3600.0 / s * 1000000 + F.lit(0.5)) / 1000000).alias(
-            "lambda_per_hour"
-        ),
-        (
-            F.floor(
-                F.greatest(F.col("dplus9"), F.col("dminus9"))
-                / 1000000000.0
-                * 1000000
-                + F.lit(0.5)
-            )
-            / 1000000
+        snap(n * 3600.0 / s, 6).alias("lambda_per_hour"),
+        snap(
+            F.greatest(F.col("dplus9"), F.col("dminus9"))
+            / 1000000000.0,
+            6,
         ).alias("ks_stat"),
     )
 
@@ -931,9 +910,7 @@ def events_decayed_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
     age_days = (
         F.unix_timestamp("t") - F.unix_timestamp("ts")
     ) / 86400.0
-    d9 = F.floor(
-        F.pow(F.lit(0.5), age_days / 7.0) * 1000000000 + F.lit(0.5)
-    ).cast("long")
+    d9 = fixed(F.pow(F.lit(0.5), age_days / 7.0), 9)
     agg = (
         ev.crossJoin(F.broadcast(mx))
         .select("user_id", d9.alias("d9"))
@@ -949,10 +926,7 @@ def events_decayed_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("user_id").cast("long").alias("user_id"),
             F.col("n_events").cast("long").alias("n_events"),
-            (
-                F.floor(F.col("s9") / 1000000000.0 * 1000000 + F.lit(0.5))
-                / 1000000
-            ).alias("engagement_score"),
+            snap(F.col("s9") / 1000000000.0, 6).alias("engagement_score"),
         )
     )
 
@@ -1169,14 +1143,11 @@ def events_post_stratified_lift(
     p1 = F.col("x1") * 1.0 / F.col("n1")
     p0 = F.col("x0") * 1.0 / F.col("n0")
     w = F.col("ns") * 1.0 / F.col("nn")
-    lift12 = F.floor(
-        w * (p1 - p0) * 1000000000000 + F.lit(0.5)
-    ).cast("long")
-    var12 = F.floor(
-        w * w * (p1 * (1 - p1) / F.col("n1") + p0 * (1 - p0) / F.col("n0"))
-        * 1000000000000
-        + F.lit(0.5)
-    ).cast("long")
+    lift12 = fixed(w * (p1 - p0), 12)
+    var12 = fixed(
+        w * w * (p1 * (1 - p1) / F.col("n1") + p0 * (1 - p0) / F.col("n0")),
+        12,
+    )
     s = cells.select(
         "n1", "x1", "n0", "x0",
         lift12.alias("lift12"),
@@ -1196,21 +1167,10 @@ def events_post_stratified_lift(
     sv = F.col("v12") / 1000000000000.0
     return s.select(
         (tn1 + tn0).alias("n_users"),
-        (
-            F.floor(
-                (tx1 * 1.0 / tn1 - tx0 * 1.0 / tn0) * 1000000 + F.lit(0.5)
-            )
-            / 1000000
-        ).alias("naive_lift"),
-        (F.floor(sl * 1000000 + F.lit(0.5)) / 1000000).alias(
-            "stratified_lift"
-        ),
-        (F.floor(F.sqrt(sv) * 1000000 + F.lit(0.5)) / 1000000).alias(
-            "stratified_se"
-        ),
-        (F.floor(sl / F.sqrt(sv) * 10000 + F.lit(0.5)) / 10000).alias(
-            "z_score"
-        ),
+        snap(tx1 * 1.0 / tn1 - tx0 * 1.0 / tn0, 6).alias("naive_lift"),
+        snap(sl, 6).alias("stratified_lift"),
+        snap(F.sqrt(sv), 6).alias("stratified_se"),
+        snap(sl / F.sqrt(sv), 4).alias("z_score"),
     )
 
 
@@ -1329,15 +1289,8 @@ def events_cuped_adjusted_lift(
     ) / (n * 1.0 * n)
     return m.select(
         n.cast("long").alias("n_users"),
-        (F.floor(theta * 1000000 + F.lit(0.5)) / 1000000).alias("theta"),
-        (F.floor(naive * 1000000 + F.lit(0.5)) / 1000000).alias(
-            "naive_lift"
-        ),
-        (
-            F.floor((naive - theta * x_gap) * 1000000 + F.lit(0.5))
-            / 1000000
-        ).alias("cuped_lift"),
-        (
-            F.floor((1.0 - var_resid / var_y) * 10000 + F.lit(0.5)) / 100
-        ).alias("var_reduction_pct"),
+        snap(theta, 6).alias("theta"),
+        snap(naive, 6).alias("naive_lift"),
+        snap(naive - theta * x_gap, 6).alias("cuped_lift"),
+        (fixed(1.0 - var_resid / var_y, 4) / 100).alias("var_reduction_pct"),
     )

@@ -24,6 +24,7 @@ from etl_data_ingestion_spark.catalog import (
     small_fact_session,
 )
 from etl_data_ingestion_spark.functions.arrays import ordered_pairs
+from etl_data_ingestion_spark.functions.numeric import snap
 from etl_data_ingestion_spark.plans.registry import register
 
 PAGERANK_ORACLE = """
@@ -729,8 +730,6 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     list and the degree table stay persisted after the result runs:
     without them the plan recomputes both per consumer (2.9s against
     1.3s at sf0.1)."""
-    from etl_data_ingestion_spark.functions.numeric import snap
-
     spark = small_fact_session(spark, sf_dir, "lineitem")
     e = cached(customer_supplier_edges(spark, sf_dir))
     deg = cached(
@@ -834,8 +833,6 @@ def graph_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     int64 past m ~ 1.5e9 edges — the 4.0* float promotion below
     (mirrored in both engines) is exact to 2^53 and documented past
     that."""
-    from etl_data_ingestion_spark.functions.numeric import snap
-
     li = load_table(spark, sf_dir, "lineitem", parallel=True).select(
         "l_orderkey", "l_suppkey"
     )
@@ -973,8 +970,6 @@ def graph_rich_club_coefficient(
     shuffle. item_cf's basket win is for pair COUNTING (it replaces
     the pair groupBy, not a distinct). So the self-join stays; an
     AQE-gate variant was also a wash."""
-    from etl_data_ingestion_spark.functions.numeric import snap
-
     li = load_table(spark, sf_dir, "lineitem", parallel=False).select(
         "l_orderkey", "l_suppkey"
     )

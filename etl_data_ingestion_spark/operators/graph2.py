@@ -27,6 +27,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from etl_data_ingestion_spark.catalog import checkpointed
+from etl_data_ingestion_spark.functions.numeric import fixed, snap
 from etl_data_ingestion_spark.operators import graph
 from etl_data_ingestion_spark.plans.registry import register
 
@@ -144,14 +145,10 @@ def graph_local_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n").cast("long").alias("node"),
             d.cast("long").alias("degree"),
             t.cast("long").alias("n_triangles"),
-            (
-                F.floor(
-                    F.when(d >= 2, 2.0 * t / (d * (d - 1)))
-                    .otherwise(0.0)
-                    * 1000000
-                    + F.lit(0.5)
-                )
-                / 1000000
+            snap(
+                F.when(d >= 2, 2.0 * t / (d * (d - 1)))
+                .otherwise(0.0),
+                6,
             ).alias("local_cc"),
         )
         .orderBy("node")
@@ -210,9 +207,7 @@ def graph_adamic_adar_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         F.col("a.v").alias("x"), F.col("b.v").alias("y"), F.col("a.du").alias("d")
     )
-    term = F.floor(
-        1000000000.0 / F.log(F.col("d")) + F.lit(0.5)
-    ).cast("long")
+    term = fixed(1000000000.0 / F.log(F.col("d")), 0)
     aa = (
         wedge.join(
             F.broadcast(pairs.select(F.col("u").alias("x"), F.col("v").alias("y"))),
@@ -386,9 +381,7 @@ def graph_hits_fixed_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
         m = df.agg(F.max(col).alias("m"))
         return df.crossJoin(F.broadcast(m)).select(
             keep,
-            F.floor(F.col(col) * 1000000000.0 / F.col("m") + F.lit(0.5))
-            .cast("long")
-            .alias(col),
+            fixed(F.col(col) * 1000000000.0 / F.col("m"), 0).alias(col),
         )
 
     for _round in range(2):

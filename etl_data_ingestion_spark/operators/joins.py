@@ -12,6 +12,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from etl_data_ingestion_spark.catalog import load_table
+from etl_data_ingestion_spark.functions.numeric import fixed
 from etl_data_ingestion_spark.plans.registry import register
 
 BROADCAST_DIMS_ORACLE = """
@@ -306,14 +307,7 @@ def join_sortmerge_fact_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
             # arithmetic instead of order-dependent float SUM+ROUND —
             # the float form flipped a cent vs the oracle at sf1
             (
-                F.sum(
-                    F.floor(
-                        F.col("l_extendedprice")
-                        * (1 - F.col("l_discount"))
-                        * 100
-                        + F.lit(0.5)
-                    ).cast("long")
-                )
+                F.sum(fixed(F.col("l_extendedprice") * (1 - F.col("l_discount")), 2))
                 / 100.0
             ).alias("revenue"),
         )
@@ -519,14 +513,7 @@ def join_bloom_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_lines"),
             # exact-cents sum (same device and rationale as SMJ_ORACLE)
             (
-                F.sum(
-                    F.floor(
-                        F.col("l_extendedprice")
-                        * (1 - F.col("l_discount"))
-                        * 100
-                        + F.lit(0.5)
-                    ).cast("long")
-                )
+                F.sum(fixed(F.col("l_extendedprice") * (1 - F.col("l_discount")), 2))
                 / 100.0
             ).alias("revenue"),
         )

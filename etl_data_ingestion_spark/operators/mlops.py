@@ -21,6 +21,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from etl_data_ingestion_spark.catalog import cached, load_table, small_fact_session
+from etl_data_ingestion_spark.functions.numeric import fixed, snap
 from etl_data_ingestion_spark.plans.registry import register
 
 AUC_ORACLE = """
@@ -287,19 +288,18 @@ def basket_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
             pairs.append((a, b, c))
     import math
 
-    # half-up to 6 decimals via floor(x*1e6 + 0.5): Python's round()
+    # half-up to 6 decimals with the floor snap: Python's round()
     # is banker's (half-even) while the oracle's ROUND is half-away —
     # for positive ratios floor(v + 0.5) reproduces the oracle's
     # multiply-round-divide double arithmetic exactly
-    r6 = lambda x: math.floor(x * 1e6 + 0.5) / 1e6  # noqa: E731
     out = [
         (
             a,
             b,
             c,
-            r6(c / n),
-            r6(c / single[a]),
-            r6(c * n / (single[a] * single[b])),
+            snap(c / n, 6, math.floor),
+            snap(c / single[a], 6, math.floor),
+            snap(c * n / (single[a] * single[b]), 6, math.floor),
         )
         for a, b, c in pairs
     ]
@@ -1005,8 +1005,6 @@ def ml_cohen_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exact through ~9e15, identical beyond — the
     ml_confusion_matrix_metrics discipline), outputs snapped with
     the floor device."""
-    from etl_data_ingestion_spark.functions.numeric import snap
-
     docs = load_table(spark, sf_dir, "documents", parallel=True)
     a = F.col("n_chars") >= 300
     b = F.size(F.split(F.trim(F.col("text")), r"\s+")) >= 50
@@ -1086,8 +1084,6 @@ def ml_gain_lift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     direct window IS the right plan (one Exchange); the decile
     reduction leaves 10 rows, and gain/lift are integer ratios under
     the floor device — no data-dependent float summation anywhere."""
-    from etl_data_ingestion_spark.functions.numeric import snap
-
     ev = load_table(spark, sf_dir, "events")
     w = Window.orderBy(F.desc("value"), "event_id")
     ranked = ev.select(
@@ -1170,8 +1166,6 @@ def agg_ab_test_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined conditional aggregate; everything after is a
     fixed-order scalar chain (the confusion-matrix discipline), so
     the result is bit-stable across engines and scales."""
-    from etl_data_ingestion_spark.functions.numeric import snap
-
     ev = load_table(spark, sf_dir, "events")
     a = F.col("user_id") % 2 == 0
     pos = F.col("event_type") == "purchase"
@@ -1257,8 +1251,6 @@ def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     the decomposition is fixed scalar math on those rows. The bin
     means are float averages over identical inputs (same residual
     class as ml_calibration_brier, accepted there since round 5)."""
-    from etl_data_ingestion_spark.functions.numeric import snap
-
     ev = load_table(spark, sf_dir, "events")
     ph = 1.0 / (1.0 + F.exp(-(F.col("value") - 250.0) / 50.0))
     y = (F.col("event_type") == "purchase").cast("double")
@@ -1361,8 +1353,6 @@ def ml_mcnemar_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     on exact integers snapped with the floor device — identical in
     both engines by construction. The same plan at 100 TB is still
     one corpus pass."""
-    from etl_data_ingestion_spark.functions.numeric import snap
-
     ev = load_table(spark, sf_dir, "events", parallel=False)
     y = (F.col("event_type") == "purchase").cast("int")
     pa = (F.col("value") >= 50).cast("int")
@@ -1425,8 +1415,6 @@ def ml_log_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     Loss <= ~13.8 micro-snapped => per-row <= 1.4e7; 1e11 rows sum to
     ~1.4e18, inside int64. The clamp at 1e-6 bounds the loss exactly
     like the oracle's GREATEST."""
-    from etl_data_ingestion_spark.functions.numeric import snap
-
     ev = load_table(spark, sf_dir, "events", parallel=False).filter(
         F.col("value").isNotNull() & (F.col("value") >= 0)
     )
@@ -1437,7 +1425,7 @@ def ml_log_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise(-F.log(F.greatest(1.0 - F.col("p"), F.lit(0.000001))))
     per_row = ev.select(y.alias("y"), p.alias("p")).select(
         "y",
-        F.floor(loss * 1000000 + F.lit(0.5)).cast("long").alias("loss_micro"),
+        fixed(loss, 6).alias("loss_micro"),
     )
     agg = per_row.agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -1505,16 +1493,12 @@ def ml_kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join, and revenue is exact integer cents so every
     concordance test is integer math. tau-b itself is fixed-order
     double math on five exact integers, snapped."""
-    from etl_data_ingestion_spark.functions.numeric import snap
-
     orders = load_table(spark, sf_dir, "orders", parallel=False)
     # persist the date rollup: the self-join reads it twice and would
     # otherwise scan the fact table once per side
     daily = cached(orders.groupBy(F.col("o_orderdate").alias("d")).agg(
         F.count(F.lit(1)).alias("n_orders"),
-        F.sum(
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-        ).alias("rev_cents"),
+        F.sum(fixed(F.col("o_totalprice"), 2)).alias("rev_cents"),
     ))
     a = daily.alias("a")
     b = daily.alias("b")
@@ -1595,12 +1579,10 @@ def ml_expected_calibration_error(spark: SparkSession, sf_dir: str) -> DataFrame
     sums and each bin's weighted gap snaps to nano-units before the
     cross-bin sum, so the metric has zero order-dependent float
     summation at any scale."""
-    from etl_data_ingestion_spark.functions.numeric import snap
-
     ev = load_table(spark, sf_dir, "events", parallel=False)
     ph = 1.0 / (1.0 + F.exp(-(F.col("value") - 250.0) / 50.0))
     scored = ev.select(
-        F.floor(ph * 1000000 + F.lit(0.5)).cast("long").alias("p_micro"),
+        fixed(ph, 6).alias("p_micro"),
         (F.col("event_type") == "purchase").cast("long").alias("y"),
     )
     binned = scored.groupBy(
@@ -1617,10 +1599,8 @@ def ml_expected_calibration_error(spark: SparkSession, sf_dir: str) -> DataFrame
         F.col("sp") * 1.0 / F.col("n") / 1000000 - F.col("sy") * 1.0 / F.col("n")
     )
     terms = binned.crossJoin(F.broadcast(nn)).select(
-        F.floor((F.col("n") * 1.0 / F.col("nn")) * gap * 1000000000 + F.lit(0.5))
-        .cast("long")
-        .alias("t_nano"),
-        F.floor(gap * 1000000 + F.lit(0.5)).cast("long").alias("gap_micro"),
+        fixed((F.col("n") * 1.0 / F.col("nn")) * gap, 9).alias("t_nano"),
+        fixed(gap, 6).alias("gap_micro"),
     )
     return terms.agg(
         F.count(F.lit(1)).alias("n_bins_used"),
@@ -1674,8 +1654,6 @@ def ml_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-prefix scan). Precision@rank terms snap to exact NANO
     integers before the final sum, so the metric is summation-order
     independent."""
-    from etl_data_ingestion_spark.functions.numeric import snap
-
     ev = load_table(spark, sf_dir, "events", parallel=False)
     ranked = ev.select(
         (F.col("event_type") == "purchase").cast("long").alias("pos"),
@@ -1693,10 +1671,7 @@ def ml_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = cum.select(
         F.when(
             F.col("pos") == 1,
-            F.floor(
-                (F.col("cum_pos") * 1.0 / F.col("rn")) * 1000000000
-                + F.lit(0.5)
-            ).cast("long"),
+            fixed(F.col("cum_pos") * 1.0 / F.col("rn"), 9),
         ).alias("t_nano")
     )
     return terms.agg(
@@ -1782,12 +1757,10 @@ def ml_logreg_newton_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     features keep every moment exact through ~1e10 rows (cents^2 *
     rows ~ 2.5e19 caps int64 — rescale to decicents past that,
     noted here for the 100 TB config)."""
-    from etl_data_ingestion_spark.functions.numeric import snap
-
     ev = load_table(spark, sf_dir, "events", parallel=False).filter(
         F.col("value").isNotNull()
     )
-    x = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+    x = fixed(F.col("value"), 2)
     h = F.hour("ts").cast("long")
     z = F.when(F.col("event_type") == "purchase", 1).otherwise(-1).cast("long")
     m = ev.agg(
@@ -1960,12 +1933,9 @@ def ml_item_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_ab").cast("long").alias("co_orders"),
             F.col("ca").cast("long").alias("n_a"),
             F.col("cb").cast("long").alias("n_b"),
-            (
-                F.floor(
-                    F.col("c_ab") / F.sqrt(F.col("ca") * 1.0 * F.col("cb")) * 1000000
-                    + F.lit(0.5)
-                )
-                / 1000000
+            snap(
+                F.col("c_ab") / F.sqrt(F.col("ca") * 1.0 * F.col("cb")),
+                6,
             ).alias("cosine"),
         )
     )
@@ -2051,15 +2021,10 @@ def ml_feature_hash_collisions(spark: SparkSession, sf_dir: str) -> DataFrame:
         s.cast("long").alias("n_terms"),
         used.alias("buckets_used"),
         F.max("load").cast("long").alias("max_load"),
-        (F.floor((s - used) * 1.0 / s * 1000000 + F.lit(0.5)) / 1000000).alias(
-            "collision_rate"
-        ),
-        (
-            F.floor(
-                512.0 * (1.0 - F.pow(F.lit(511.0 / 512.0), s)) * 10000
-                + F.lit(0.5)
-            )
-            / 10000
+        snap((s - used) * 1.0 / s, 6).alias("collision_rate"),
+        snap(
+            512.0 * (1.0 - F.pow(F.lit(511.0 / 512.0), s)),
+            4,
         ).alias("expected_buckets_used"),
     )
 
@@ -2202,14 +2167,13 @@ def ml_isotonic_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     fitted = inner_min.groupBy(F.col("i").alias("bin")).agg(
         F.max("m").alias("iso")
     )
-    snap6 = lambda c: F.floor(c * 1000000 + F.lit(0.5)) / 1000000
     return (
         bins.join(fitted, "bin")
         .select(
             "bin",
             F.col("n").cast("long").alias("n_events"),
-            snap6(F.col("s") * 1.0 / F.col("n")).alias("raw_rate"),
-            snap6(F.col("iso")).alias("isotonic_rate"),
+            snap(F.col("s") * 1.0 / F.col("n"), 6).alias("raw_rate"),
+            snap(F.col("iso"), 6).alias("isotonic_rate"),
         )
         .orderBy("bin")
     )
@@ -2312,7 +2276,7 @@ def ml_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n1",
         "n2",
         ((r1_2x - n1 * (n1 + 1)).cast("long") / 2.0).alias("u1"),
-        (F.floor(z * 1000000 + F.lit(0.5)) / 1000000).alias("z_score"),
+        snap(z, 6).alias("z_score"),
     )
 
 
@@ -2370,12 +2334,8 @@ def ml_price_elasticity_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(part), li.l_partkey == part.p_partkey
     ).select(
         "p_brand",
-        F.floor(F.log("l_quantity") * 10000 + F.lit(0.5))
-        .cast("long")
-        .alias("x"),
-        F.floor(F.log("p_retailprice") * 10000 + F.lit(0.5))
-        .cast("long")
-        .alias("y"),
+        fixed(F.log("l_quantity"), 4).alias("x"),
+        fixed(F.log("p_retailprice"), 4).alias("y"),
     )
     mom = t.groupBy("p_brand").agg(
         F.count(F.lit(1)).alias("n"),
@@ -2391,9 +2351,7 @@ def ml_price_elasticity_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mom.select(
         "p_brand",
         n.cast("long").alias("n_lines"),
-        (F.floor(slope * 10000 + F.lit(0.5)) / 10000).alias(
-            "elasticity_slope"
-        ),
+        snap(slope, 4).alias("elasticity_slope"),
     ).orderBy("p_brand")
 
 
@@ -2596,9 +2554,7 @@ def ml_ols_normal_equations(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = per.join(o, per.ok == o.o_orderkey).select(
         "x1",
         "x2",
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("y"),
+        fixed(F.col("o_totalprice"), 2).alias("y"),
     )
     m = j.agg(
         F.count(F.lit(1)).alias("n"),
@@ -2642,32 +2598,18 @@ def ml_ols_normal_equations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return b.select(
         n.cast("long").alias("n_orders"),
-        (F.floor(F.col("b1") * 1000000 + F.lit(0.5)) / 1000000).alias(
-            "beta_lines"
-        ),
-        (F.floor(F.col("b2") * 1000000 + F.lit(0.5)) / 1000000).alias(
-            "beta_qty"
-        ),
-        (
-            F.floor(
-                (
-                    F.col("my")
-                    - F.col("b1") * F.col("m1")
-                    - F.col("b2") * F.col("m2")
-                )
-                * 10000
-                + F.lit(0.5)
-            )
-            / 10000
+        snap(F.col("b1"), 6).alias("beta_lines"),
+        snap(F.col("b2"), 6).alias("beta_qty"),
+        snap(
+            F.col("my")
+            - F.col("b1") * F.col("m1")
+            - F.col("b2") * F.col("m2"),
+            4,
         ).alias("intercept_cents"),
-        (
-            F.floor(
-                (F.col("b1") * F.col("s1y") + F.col("b2") * F.col("s2y"))
-                / F.col("syy")
-                * 1000000
-                + F.lit(0.5)
-            )
-            / 1000000
+        snap(
+            (F.col("b1") * F.col("s1y") + F.col("b2") * F.col("s2y"))
+            / F.col("syy"),
+            6,
         ).alias("r_squared"),
     )
 
@@ -2751,9 +2693,7 @@ def ml_ridge_normal_equations(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = per.join(o, per.ok == o.o_orderkey).select(
         "x1",
         "x2",
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("y"),
+        fixed(F.col("o_totalprice"), 2).alias("y"),
     )
     m = j.agg(
         F.count(F.lit(1)).alias("n"),
@@ -2812,23 +2752,13 @@ def ml_ridge_normal_equations(spark: SparkSession, sf_dir: str) -> DataFrame:
     return b.select(
         F.col("c_lam").alias("lambda_per_obs"),
         n.cast("long").alias("n_orders"),
-        (F.floor(F.col("b1") * 1000000 + F.lit(0.5)) / 1000000).alias(
-            "beta_lines"
-        ),
-        (F.floor(F.col("b2") * 1000000 + F.lit(0.5)) / 1000000).alias(
-            "beta_qty"
-        ),
-        (
-            F.floor(
-                (
-                    F.col("my")
-                    - F.col("b1") * F.col("m1")
-                    - F.col("b2") * F.col("m2")
-                )
-                * 10000
-                + F.lit(0.5)
-            )
-            / 10000
+        snap(F.col("b1"), 6).alias("beta_lines"),
+        snap(F.col("b2"), 6).alias("beta_qty"),
+        snap(
+            F.col("my")
+            - F.col("b1") * F.col("m1")
+            - F.col("b2") * F.col("m2"),
+            4,
         ).alias("intercept_cents"),
     ).orderBy("lambda_per_obs")
 
@@ -2924,25 +2854,11 @@ def ml_roc_curve_points(spark: SparkSession, sf_dir: str) -> DataFrame:
         m.filter(F.col("pos").isNotNull())
         .select("pos", "neg", F.explode(rows).alias("r"))
         .select(
-            (F.floor(F.col("r.threshold") * 10 + F.lit(0.5)) / 10).alias(
-                "threshold"
-            ),
+            snap(F.col("r.threshold"), 1).alias("threshold"),
             F.col("r.n_tp").alias("n_tp"),
             F.col("r.n_fp").alias("n_fp"),
-            (
-                F.floor(
-                    F.col("r.n_tp") * 1.0 / F.col("pos") * 1000000
-                    + F.lit(0.5)
-                )
-                / 1000000
-            ).alias("tpr"),
-            (
-                F.floor(
-                    F.col("r.n_fp") * 1.0 / F.col("neg") * 1000000
-                    + F.lit(0.5)
-                )
-                / 1000000
-            ).alias("fpr"),
+            snap(F.col("r.n_tp") * 1.0 / F.col("pos"), 6).alias("tpr"),
+            snap(F.col("r.n_fp") * 1.0 / F.col("neg"), 6).alias("fpr"),
         )
         .orderBy("threshold")
     )
@@ -3010,8 +2926,6 @@ def ml_decision_stump_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator), same shape. Count products stay inside int64 to
     ~3e9 rows per side; past that the impurity terms move to the
     oracle-mirrored double path (documented cutover)."""
-    from etl_data_ingestion_spark.functions.numeric import snap
-
     li = load_table(spark, sf_dir, "lineitem", parallel=False)
     hist = li.groupBy(F.col("l_quantity").cast("long").alias("q")).agg(
         F.count(F.lit(1)).alias("nq"),
@@ -3132,8 +3046,6 @@ def ml_fisher_lda_closed_form(spark: SparkSession, sf_dir: str) -> DataFrame:
     summed-WIDE rule; the scalar chain is written in the identical
     fixed order in both engines, and the direction is published as
     a unit vector so the statistic is scale-free."""
-    from etl_data_ingestion_spark.functions.numeric import snap
-
     od = load_table(spark, sf_dir, "orders", parallel=False)
     li = load_table(spark, sf_dir, "lineitem", parallel=False)
     cnt = li.groupBy("l_orderkey").agg(F.count(F.lit(1)).alias("cnt"))
@@ -3143,9 +3055,7 @@ def ml_fisher_lda_closed_form(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .otherwise(0)
         .alias("y"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("f1"),
+        fixed(F.col("o_totalprice"), 2).alias("f1"),
         F.col("cnt").alias("f2"),
     )
     wide = lambda c: F.col(c).cast("decimal(38,0)")
@@ -3256,16 +3166,9 @@ def ml_jackknife_ratio_variance(
     deviations keep |d9| ~ 1e7, so sd fits int64 to ~1e11 rows and
     sd2 accumulates WIDE (decimal(38,0)/HUGEINT) — exact at any
     scale the engines reach."""
-    from etl_data_ingestion_spark.functions.numeric import snap
-
     li = load_table(spark, sf_dir, "lineitem", parallel=False)
     it = li.select(
-        F.floor(
-            F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("rev"),
+        fixed(F.col("l_extendedprice") * (1 - F.col("l_discount")), 2).alias("rev"),
         F.col("l_quantity").cast("long").alias("qty"),
     )
     tot = it.agg(
@@ -3277,26 +3180,19 @@ def ml_jackknife_ratio_variance(
         "n",
         "a",
         "b",
-        (
-            F.floor(F.col("a") * 1.0 / F.col("b") * 1000000 + F.lit(0.5))
-            / 1000000
-        ).alias("c"),
+        snap(F.col("a") * 1.0 / F.col("b"), 6).alias("c"),
     )
     dev = it.crossJoin(F.broadcast(center)).select(
         "n",
         "a",
         "b",
-        F.floor(
-            (
-                (F.col("a") - F.col("rev"))
-                * 1.0
-                / (F.col("b") - F.col("qty"))
-                - F.col("c")
-            )
-            * 1000000000
-            + F.lit(0.5)
+        fixed(
+            (F.col("a") - F.col("rev"))
+            * 1.0
+            / (F.col("b") - F.col("qty"))
+            - F.col("c"),
+            9,
         )
-        .cast("long")
         .alias("d9"),
     )
     s = dev.agg(
@@ -3312,12 +3208,8 @@ def ml_jackknife_ratio_variance(
     ) / 1000000000
     return s.select(
         n.cast("long").alias("n_items"),
-        (F.floor(a * 1.0 / b * 1000000 + F.lit(0.5)) / 1000000).alias(
-            "theta_ratio"
-        ),
-        (F.floor(se * 1000000000 + F.lit(0.5)) / 1000000000).alias(
-            "jackknife_se"
-        ),
+        snap(a * 1.0 / b, 6).alias("theta_ratio"),
+        snap(se, 9).alias("jackknife_se"),
     )
 
 
@@ -3380,8 +3272,6 @@ def ml_poisson_deviance(spark: SparkSession, sf_dir: str) -> DataFrame:
     y=0 EVIDENCE for a rate model, not absence of data — and is
     bounded by the calendar times the type domain at any corpus
     size."""
-    from etl_data_ingestion_spark.functions.numeric import snap
-
     ev = load_table(spark, sf_dir, "events", parallel=False)
     cnt = cached(ev.groupBy(
         "event_type", F.to_date("ts").alias("d")
@@ -3408,21 +3298,14 @@ def ml_poisson_deviance(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = scored.select(
         "event_type",
         "mu",
-        F.floor(term * 1000000000 + F.lit(0.5)).cast("long").alias("t9"),
+        fixed(term, 9).alias("t9"),
     )
     return (
         terms.groupBy("event_type")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_eval_days"),
-            (F.floor(F.max("mu") * 1000000 + F.lit(0.5)) / 1000000).alias(
-                "mu_daily"
-            ),
-            (
-                F.floor(
-                    F.sum("t9") / 1000000000.0 * 1000000 + F.lit(0.5)
-                )
-                / 1000000
-            ).alias("poisson_deviance"),
+            snap(F.max("mu"), 6).alias("mu_daily"),
+            snap(F.sum("t9") / 1000000000.0, 6).alias("poisson_deviance"),
         )
         .orderBy("event_type")
     )
@@ -3487,8 +3370,6 @@ def ml_empirical_bayes_shrinkage(
     integers before the cross-brand sums so the prior is order-free;
     r9^2 accumulates WIDE. The brand-domain 1-row prior broadcasts
     back — no second fact scan."""
-    from etl_data_ingestion_spark.functions.numeric import snap
-
     li = load_table(spark, sf_dir, "lineitem", parallel=False).select(
         "l_partkey", "l_returnflag"
     )
@@ -3511,9 +3392,7 @@ def ml_empirical_bayes_shrinkage(
         "brand",
         "n",
         "pos",
-        F.floor(F.col("pos") * 1.0 / F.col("n") * 1000000000 + F.lit(0.5))
-        .cast("long")
-        .alias("r9"),
+        fixed(F.col("pos") * 1.0 / F.col("n"), 9).alias("r9"),
     )
     mom = snapped.agg(
         F.count(F.lit(1)).alias("k"),
@@ -3537,20 +3416,11 @@ def ml_empirical_bayes_shrinkage(
         .select(
             "brand",
             F.col("n").cast("long").alias("n_items"),
-            (
-                F.floor(
-                    F.col("pos") * 1.0 / F.col("n") * 1000000 + F.lit(0.5)
-                )
-                / 1000000
-            ).alias("raw_rate"),
-            (
-                F.floor(
-                    (F.col("pos") + ab * F.col("m"))
-                    / (F.col("n") + ab)
-                    * 1000000
-                    + F.lit(0.5)
-                )
-                / 1000000
+            snap(F.col("pos") * 1.0 / F.col("n"), 6).alias("raw_rate"),
+            snap(
+                (F.col("pos") + ab * F.col("m"))
+                / (F.col("n") + ab),
+                6,
             ).alias("shrunk_rate"),
         )
         .orderBy("brand")
@@ -3661,9 +3531,7 @@ def ml_conformal_interval_coverage(
             / 15.0
         ).alias("mu")
     )
-    r6 = F.floor(
-        F.abs(F.col("y") - F.col("mu")) * 1000000 + F.lit(0.5)
-    ).cast("long")
+    r6 = fixed(F.abs(F.col("y") - F.col("mu")), 6)
     calib = (
         grid.join(F.broadcast(mu), "event_type")
         .filter(F.dayofmonth("d").between(16, 23))
@@ -3703,22 +3571,11 @@ def ml_conformal_interval_coverage(
     )
     return ev_.select(
         "event_type",
-        (F.floor(F.col("mu") * 1000000 + F.lit(0.5)) / 1000000).alias(
-            "mu_daily"
-        ),
-        (
-            F.floor(F.col("q6") / 1000000.0 * 1000000 + F.lit(0.5))
-            / 1000000
-        ).alias("conformal_radius"),
+        snap(F.col("mu"), 6).alias("mu_daily"),
+        snap(F.col("q6") / 1000000.0, 6).alias("conformal_radius"),
         F.col("n_eval").alias("n_eval_days"),
         "n_covered",
-        (
-            F.floor(
-                F.col("n_covered") * 1.0 / F.col("n_eval") * 10000
-                + F.lit(0.5)
-            )
-            / 10000
-        ).alias("coverage"),
+        snap(F.col("n_covered") * 1.0 / F.col("n_eval"), 4).alias("coverage"),
     ).orderBy("event_type")
 
 
@@ -3885,21 +3742,10 @@ def ml_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("dt") > 0)
     )
     dt, n1, nt = F.col("dt"), F.col("n1"), F.col("nt")
-    e9 = F.floor(
-        dt * 1.0 * n1 / nt * 1000000000 + F.lit(0.5)
-    ).cast("long")
+    e9 = fixed(dt * 1.0 * n1 / nt, 9)
     v9 = F.when(
         nt > 1,
-        F.floor(
-            dt
-            * 1.0
-            * n1
-            * (nt - n1)
-            * (nt - dt)
-            / (nt * 1.0 * nt * (nt - 1))
-            * 1000000000
-            + F.lit(0.5)
-        ).cast("long"),
+        fixed(dt * 1.0 * n1 * (nt - n1) * (nt - dt) / (nt * 1.0 * nt * (nt - 1)), 9),
     ).otherwise(F.lit(0))
     s = byday.select(F.col("d1"), e9.alias("e9"), v9.alias("v9")).agg(
         F.sum("d1").cast("long").alias("o1"),
@@ -3913,8 +3759,8 @@ def ml_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.crossJoin(F.broadcast(nu)).select(
         "n_users",
         o1.alias("observed_g1"),
-        (F.floor(e1 * 1000000 + F.lit(0.5)) / 1000000).alias("expected_g1"),
-        (F.floor(chi2 * 10000 + F.lit(0.5)) / 10000).alias("chi2_logrank"),
+        snap(e1, 6).alias("expected_g1"),
+        snap(chi2, 4).alias("chi2_logrank"),
     )
 
 
@@ -3993,20 +3839,13 @@ def ml_sprt_sequential_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("s"),
         F.count(F.lit(1)).alias("t"),
     )
-    i9 = F.floor(
-        (
-            F.col("s") * F.log(F.lit(0.21) / F.lit(0.19))
-            + (F.col("t") - F.col("s")) * F.log(F.lit(0.79) / F.lit(0.81))
-        )
-        * 1000000000
-        + F.lit(0.5)
-    ).cast("long")
-    a9 = F.floor(
-        F.log(F.lit(0.95) / F.lit(0.05)) * 1000000000 + F.lit(0.5)
-    ).cast("long")
-    b9 = F.floor(
-        F.log(F.lit(0.05) / F.lit(0.95)) * 1000000000 + F.lit(0.5)
-    ).cast("long")
+    i9 = fixed(
+        F.col("s") * F.log(F.lit(0.21) / F.lit(0.19))
+        + (F.col("t") - F.col("s")) * F.log(F.lit(0.79) / F.lit(0.81)),
+        9,
+    )
+    a9 = fixed(F.log(F.lit(0.95) / F.lit(0.05)), 9)
+    b9 = fixed(F.log(F.lit(0.05) / F.lit(0.95)), 9)
     walk = cached(daily.select(
         "d",
         F.sum(i9).over(Window.orderBy("d")).alias("c9"),
@@ -4046,10 +3885,7 @@ def ml_sprt_sequential_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(nd))
         .select(
             "n_days",
-            (
-                F.floor(F.col("f9") / 1000000000.0 * 1000000 + F.lit(0.5))
-                / 1000000
-            ).alias("final_llr"),
+            snap(F.col("f9") / 1000000000.0, 6).alias("final_llr"),
             decision.alias("decision"),
             F.when(
                 F.col("cross_day").isNull(), F.lit(None).cast("string")
@@ -4183,18 +4019,12 @@ def ml_power_analysis_two_prop(
     )
     return m.select(
         (n0 + n1).cast("long").alias("n_events"),
-        (F.floor(p0 * 1000000 + F.lit(0.5)) / 1000000).alias(
-            "rate_control"
-        ),
-        (F.floor(p1 * 1000000 + F.lit(0.5)) / 1000000).alias(
-            "rate_treatment"
-        ),
+        snap(p0, 6).alias("rate_control"),
+        snap(p1, 6).alias("rate_treatment"),
         F.when(
             delta > 0, F.ceil(num * num / (delta * delta)).cast("long")
         ).alias("n_per_arm_for_80pct_power"),
-        (F.floor(power * 10000 + F.lit(0.5)) / 10000).alias(
-            "posthoc_power"
-        ),
+        snap(power, 4).alias("posthoc_power"),
     )
 
 
@@ -4286,11 +4116,7 @@ def ml_km_survival_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "d",
         "n_at_risk",
         F.when(d >= n, F.lit(-100000000000))
-        .otherwise(
-            F.floor(
-                F.log(1.0 - d * 1.0 / n) * 1000000000 + F.lit(0.5)
-            ).cast("long")
-        )
+        .otherwise(fixed(F.log(1.0 - d * 1.0 / n), 9))
         .alias("lterm"),
     )
     curve = evd.select(
@@ -4304,13 +4130,7 @@ def ml_km_survival_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("t").alias("t_days"),
             "n_at_risk",
             F.col("d").alias("d_events"),
-            (
-                F.floor(
-                    F.exp(F.col("cum") / 1000000000.0) * 1000000
-                    + F.lit(0.5)
-                )
-                / 1000000
-            ).alias("survival"),
+            snap(F.exp(F.col("cum") / 1000000000.0), 6).alias("survival"),
         )
         .orderBy("t_days")
         .limit(30)
@@ -4399,7 +4219,7 @@ def ml_cooks_distance_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the SNAPPED statistic (rank key identical across engines).
     Nothing fact-sized survives the first Exchange."""
     orders = load_table(spark, sf_dir, "orders", parallel=False)
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
+    cents = fixed(F.col("o_totalprice"), 2)
     day = orders.groupBy("o_orderdate").agg(
         F.sum(cents).alias("y")
     ).select(
@@ -4455,15 +4275,8 @@ def ml_cooks_distance_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = day.crossJoin(F.broadcast(fit2)).select(
         F.col("d").alias("day"),
         F.col("y").cast("long").alias("revenue_cents"),
-        (F.floor(e / 100.0 * 100 + F.lit(0.5)) / 100).alias(
-            "residual_dollars"
-        ),
-        F.floor(
-            e * e * h
-            / (2.0 * F.col("s2") * (1.0 - h) * (1.0 - h))
-            * 1000000
-            + F.lit(0.5)
-        ).alias("d6"),
+        snap(e / 100.0, 2).alias("residual_dollars"),
+        fixed(e * e * h / (2.0 * F.col("s2") * (1.0 - h) * (1.0 - h)), 6).alias("d6"),
     )
     return (
         scored.orderBy(F.col("d6").desc(), "day")

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.functions import pandas_udf
 
 from etl_data_ingestion_spark.catalog import load_table
+from etl_data_ingestion_spark.functions.numeric import fixed
 from etl_data_ingestion_spark.plans.registry import register
 
 PANDAS_SCALAR_ORACLE = """
@@ -274,11 +275,7 @@ def pandas_cogroup_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("l_orderkey") < 4000)
         .select(
             "l_orderkey",
-            F.floor(
-                F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
-                + F.lit(0.5)
-            )
-            .cast("long")
+            fixed(F.col("l_extendedprice") * (1 - F.col("l_discount")), 2)
             .alias("net_cents"),
         )
     )
@@ -288,9 +285,7 @@ def pandas_cogroup_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "o_orderkey",
             "o_orderpriority",
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("total_cents"),
+            fixed(F.col("o_totalprice"), 2).alias("total_cents"),
         )
     )
 

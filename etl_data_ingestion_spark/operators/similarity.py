@@ -22,6 +22,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from etl_data_ingestion_spark.catalog import load_table, table_path
+from etl_data_ingestion_spark.functions.numeric import fixed, snap, units
 from etl_data_ingestion_spark.functions.vectors import cosine_similarity
 from etl_data_ingestion_spark.plans.registry import register
 
@@ -1141,9 +1142,7 @@ def embedding_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame
             F.posexplode("x").alias("pos", "xj"), F.col("s")
         ).select(
             "pos",
-            F.floor(F.col("xj") * F.col("s") * 1000000 + F.lit(0.5))
-            .cast("long")
-            .alias("c"),
+            fixed(F.col("xj") * F.col("s"), 6).alias("c"),
         )
         u = contrib.groupBy("pos").agg(F.sum("c").alias("u"))
         return u.agg(
@@ -1185,12 +1184,8 @@ def embedding_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         .select(
             F.col("pos").alias("component"),
-            (F.floor(F.col("c") / F.col("nrm") * 1000000 + F.lit(0.5)) / 1000000).alias(
-                "loading"
-            ),
-            (F.floor(F.col("nrm") * 1000 + F.lit(0.5)) / 1000).alias(
-                "eigenvalue_est"
-            ),
+            snap(F.col("c") / F.col("nrm"), 6).alias("loading"),
+            snap(F.col("nrm"), 3).alias("eigenvalue_est"),
         )
         .orderBy("component")
     )
@@ -1295,15 +1290,14 @@ def embedding_matryoshka_agreement(spark: SparkSession, sf_dir: str) -> DataFram
     fold = lambda a, b: F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
     )
-    snap6 = lambda c: F.floor(c * 1000000 + F.lit(0.5)) / 1000000
     scored = (
         n.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("q_id"))
         .select(
             "q_id",
             "vec_id",
-            snap6(fold("qf", "full") / (F.col("qnf") * F.col("nf"))).alias("cf"),
-            snap6(fold("qp", "pre") / (F.col("qnp") * F.col("np"))).alias("cp"),
+            snap(fold("qf", "full") / (F.col("qnf") * F.col("nf")), 6).alias("cf"),
+            snap(fold("qp", "pre") / (F.col("qnp") * F.col("np")), 6).alias("cp"),
         )
     )
     from pyspark.sql import Window
@@ -1418,7 +1412,7 @@ def ml_simplified_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "label",
         "i",
-        F.floor(F.col("x") * 1000000000 + F.lit(0.5)).cast("long").alias("x9"),
+        fixed(F.col("x"), 9).alias("x9"),
     )
     per_dim = dims.groupBy("label", "i").agg(
         F.sum("x9").alias("s9"), F.count(F.lit(1)).alias("n")
@@ -1456,20 +1450,15 @@ def ml_simplified_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min(F.when(F.col("clab") != F.col("label"), F.col("d2"))).alias("b2"),
     )
     a, b = F.sqrt("a2"), F.sqrt("b2")
-    s9 = F.floor(
-        (b - a) / F.greatest(a, b) * 1000000000 + F.lit(0.5)
-    ).cast("long")
+    s9 = fixed((b - a) / F.greatest(a, b), 9)
     return (
         ab.select("label", s9.alias("s9"))
         .groupBy("label")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_points"),
-            (
-                F.floor(
-                    F.sum("s9") / F.count(F.lit(1)) / 1000000000.0 * 1000000
-                    + F.lit(0.5)
-                )
-                / 1000000
+            snap(
+                F.sum("s9") / F.count(F.lit(1)) / 1000000000.0,
+                6,
             ).alias("mean_silhouette"),
         )
         .select(
@@ -1586,7 +1575,7 @@ def _ivf_top2_other(Xn, self_col, qids, Qn, index):
         if lo == hi or len(M) == 0:
             continue
         q = rows[lo:hi]
-        S = np.floor(Xn[q] @ Qn[M].T * 1e9 + 0.5)
+        S = units(Xn[q] @ Qn[M].T, 9, np.floor)
         # mask self where it lives in this cluster (M is ascending)
         pos = np.searchsorted(M, self_col[q])
         hs = np.where(pos < len(M))[0]
@@ -1632,7 +1621,7 @@ def _top2_other_stream(it, emb_path: str, exact_max_rows: int):
         ids = pdf["vec_id"].to_numpy()
         self_col = np.searchsorted(qids, ids)
         if index is None:
-            S = np.floor(Xn @ Qn.T * 1e9 + 0.5)
+            S = units(Xn @ Qn.T, 9, np.floor)
             # argmax takes the FIRST max and Q columns are
             # vec_id-ascending, so ties break on the smaller id
             S[np.arange(len(ids)), self_col] = -np.inf
@@ -1744,12 +1733,7 @@ def ml_loo_1nn_embedding_accuracy(
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_vectors"),
             hit.cast("long").alias("n_correct"),
-            (
-                F.floor(
-                    hit * 1.0 / F.count(F.lit(1)) * 10000 + F.lit(0.5)
-                )
-                / 10000
-            ).alias("loo_accuracy"),
+            snap(hit * 1.0 / F.count(F.lit(1)), 4).alias("loo_accuracy"),
         )
         .orderBy("label")
     )
@@ -1841,22 +1825,13 @@ def similarity_ratio_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
         m.groupBy("label")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_vectors"),
-            (
-                F.floor(
-                    F.sum("margin9") * 1.0
-                    / F.count(F.lit(1))
-                    / 1000000000
-                    * 1000000
-                    + F.lit(0.5)
-                )
-                / 1000000
+            snap(
+                F.sum("margin9") * 1.0
+                / F.count(F.lit(1))
+                / 1000000000,
+                6,
             ).alias("mean_margin"),
-            (
-                F.floor(
-                    F.min("margin9") / 1000000000.0 * 1000000 + F.lit(0.5)
-                )
-                / 1000000
-            ).alias("min_margin"),
+            snap(F.min("margin9") / 1000000000.0, 6).alias("min_margin"),
         )
         .orderBy("label")
     )
@@ -1932,9 +1907,7 @@ def similarity_label_mmd_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "label",
         "dim",
-        F.floor(F.col("v") * 10000000 + F.lit(0.5))
-        .cast("long")
-        .alias("v7"),
+        fixed(F.col("v"), 7).alias("v7"),
     )
     per = comp.groupBy("label", "dim").agg(
         F.sum("v7").alias("s"), F.count(F.lit(1)).alias("n")
@@ -1963,21 +1936,17 @@ def similarity_label_mmd_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         num2.groupBy("label")
         .agg(
             F.max("n").cast("long").alias("n_vectors"),
-            (
-                F.floor(
-                    F.sum(F.col("nm") * F.col("nm")).cast("double")
-                    / (n_d * n_d)
-                    # two SEQUENTIAL divisions, matching the oracle's
-                    # chain ulp-for-ulp (fixed-order-chain discipline;
-                    # the (x*x) product form can differ in the last
-                    # ulp and flip the 1e-6 snap at a boundary)
-                    / (n_all_d - n_d)
-                    / (n_all_d - n_d)
-                    / 1e14
-                    * 1000000
-                    + F.lit(0.5)
-                )
-                / 1000000
+            snap(
+                F.sum(F.col("nm") * F.col("nm")).cast("double")
+                / (n_d * n_d)
+                # two SEQUENTIAL divisions, matching the oracle's
+                # chain ulp-for-ulp (fixed-order-chain discipline;
+                # the (x*x) product form can differ in the last
+                # ulp and flip the 1e-6 snap at a boundary)
+                / (n_all_d - n_d)
+                / (n_all_d - n_d)
+                / 1e14,
+                6,
             ).alias("mmd2_linear"),
         )
         .orderBy("label")

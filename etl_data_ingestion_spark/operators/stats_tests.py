@@ -14,26 +14,9 @@ waves applies throughout:
   engines — and anything that can exceed int64 is summed WIDE
   (DECIMAL(38,0) in Spark, HUGEINT naturally in DuckDB);
 - the final scalar chain is written as the SAME fixed-order IEEE
-  expression in the operator and its oracle, snapped with the floor
-  device at a fixed scale.
-
-On the FLOOR(x*scale + 0.5) snap device (stated once here rather
-than per operator — this is the house-wide assumption every
-cent-snap and output-snap in the repo relies on): the snapped input
-is a partition-order-dependent double sum, so a value landing
-within one ulp of a half-unit boundary could floor differently in
-the two engines (or across Spark shuffle orders). The device does
-not remove that residual nondeterminism; it narrows it to the
-measure-zero boundary set. The repo's mitigations, in order of
-preference: (1) sum exact INTEGERS upstream (cents, counts,
-2x-scaled ranks) so the snapped quantity is order-free and the
-snap is exact — the stats waves do this everywhere a sufficient
-statistic allows; (2) where a double sum is unavoidable (revenue
-aggregates feeding a ratio), snap at a scale coarse enough that
-both engines' sums agree to well under half a unit at every sweep
-scale — verified empirically by the 5-scale parity sweep, not
-proven; a boundary hit would surface as a hash mismatch there
-first. No operator treats the snap as a proof.
+  expression in the operator and its oracle, snapped at a fixed scale
+  with ``functions/numeric.py``'s floor snap (whose docstring states
+  what the snap does and does not guarantee).
 """
 
 from __future__ import annotations
@@ -42,7 +25,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from etl_data_ingestion_spark.catalog import cached, load_table
-from etl_data_ingestion_spark.functions.numeric import snap
+from etl_data_ingestion_spark.functions.numeric import fixed, snap
 from etl_data_ingestion_spark.plans.registry import register
 
 # ------------------------------------------------- Kruskal-Wallis H
@@ -141,9 +124,7 @@ def agg_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     s = o.select(
         F.col("o_orderpriority").alias("g"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("v"),
+        fixed(F.col("o_totalprice"), 2).alias("v"),
     )
     gv = s.groupBy("g", "v").agg(F.count(F.lit(1)).alias("tg"))
     wv = Window.partitionBy("v")
@@ -181,9 +162,9 @@ def agg_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unnormalized 1e-4-scale term tops int64 at sf0.3 — DuckDB's
     # CAST raised, Spark's floor-to-long wrapped silently); magnitude
     # ~100*ng*N keeps the snapped integer exact to ~sf300
-    term = F.floor(
-        F.col("r2g") * 1.0 * F.col("r2g") / F.col("ng") / F.col("n") * 100
-        + F.lit(0.5)
+    term = fixed(
+        F.col("r2g") * 1.0 * F.col("r2g") / F.col("ng") / F.col("n"),
+        2,
     ).cast("decimal(38,0)")
     tot = rg2.agg(
         F.count(F.lit(1)).alias("k"),
@@ -281,9 +262,7 @@ def agg_benjamini_hochberg_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     guard)."""
     c = load_table(spark, sf_dir, "customer").select(
         F.col("c_nationkey").alias("nk"),
-        F.floor(F.col("c_acctbal") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("b"),
+        fixed(F.col("c_acctbal"), 2).alias("b"),
     )
     g = c.groupBy("nk").agg(
         F.count(F.lit(1)).alias("n"), F.sum("b").alias("s")
@@ -553,7 +532,7 @@ def timeseries_pacf_durbin(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         load_table(spark, sf_dir, "events")
         .groupBy(F.date_trunc("day", "ts").alias("d"))
-        .agg(F.floor(F.sum("value") * 100 + 0.5).cast("long").alias("y"))
+        .agg(fixed(F.sum("value"), 2).alias("y"))
     )
     w = Window.orderBy("d")
     led = daily.select(
@@ -780,9 +759,7 @@ def agg_levene_variance_homogeneity(
     terms) so no float summation depends on group order."""
     c = load_table(spark, sf_dir, "customer").select(
         F.col("c_mktsegment").alias("g"),
-        F.floor(F.col("c_acctbal") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("x"),
+        fixed(F.col("c_acctbal"), 2).alias("x"),
     )
     gs = c.groupBy("g").agg(
         F.count(F.lit(1)).alias("ni"), F.sum("x").alias("si")
@@ -805,9 +782,7 @@ def agg_levene_variance_homogeneity(
         "ni",
         "ui",
         "qi",
-        F.floor(F.col("ui") * 1.0 / F.col("ni") * 1000000 + F.lit(0.5))
-        .cast("long")
-        .alias("zi6"),
+        fixed(F.col("ui") * 1.0 / F.col("ni"), 6).alias("zi6"),
     )
     w_all = Window.partitionBy(F.lit(1))
     t2 = t.select(
@@ -820,12 +795,10 @@ def agg_levene_variance_homogeneity(
     n, k, sz6 = F.col("n"), F.col("k"), F.col("sz6")
     zbar_i = ui * 1.0 / ni / ni
     zbar = sz6 / 1000000.0 / n
-    num2 = F.floor(
-        ni * (zbar_i - zbar) * (zbar_i - zbar) * 100 + F.lit(0.5)
-    ).cast("decimal(38,0)")
-    den2 = F.floor(
-        (qi * 1.0 / ni / ni - (ui * 1.0 / ni) * (ui * 1.0 / ni) / ni) * 100
-        + F.lit(0.5)
+    num2 = fixed(ni * (zbar_i - zbar) * (zbar_i - zbar), 2).cast("decimal(38,0)")
+    den2 = fixed(
+        qi * 1.0 / ni / ni - (ui * 1.0 / ni) * (ui * 1.0 / ni) / ni,
+        2,
     ).cast("decimal(38,0)")
     # global aggregation, NOT groupBy(n, k): both are window
     # constants (1 group on any populated input, identical values),
@@ -841,14 +814,10 @@ def agg_levene_variance_homogeneity(
     return f.select(
         n.cast("long").alias("n_customers"),
         F.coalesce(k.cast("long"), F.lit(0)).alias("n_groups"),
-        (
-            F.floor(
-                (n - k) * 1.0 / (k - 1)
-                * (F.col("num") * 1.0 / F.col("den"))
-                * 1000000
-                + F.lit(0.5)
-            )
-            / 1000000
+        snap(
+            (n - k) * 1.0 / (k - 1)
+            * (F.col("num") * 1.0 / F.col("den")),
+            6,
         ).alias("w_stat"),
     )
 
@@ -920,9 +889,7 @@ def agg_jarque_bera_normality(spark: SparkSession, sf_dir: str) -> DataFrame:
     is unconditional either way since both engines run the identical
     expansion."""
     c = load_table(spark, sf_dir, "customer").select(
-        F.floor(F.col("c_acctbal") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("x")
+        fixed(F.col("c_acctbal"), 2).alias("x")
     )
     xw = F.col("x").cast("decimal(38,0)")
     m = c.agg(
@@ -951,17 +918,9 @@ def agg_jarque_bera_normality(spark: SparkSession, sf_dir: str) -> DataFrame:
     exkurt = m4 / (m2 * m2) - 3.0
     return mom.select(
         n.cast("long").alias("n_customers"),
-        (F.floor(skew * 1000000 + F.lit(0.5)) / 1000000).alias("skewness"),
-        (F.floor(exkurt * 1000000 + F.lit(0.5)) / 1000000).alias(
-            "excess_kurtosis"
-        ),
-        (
-            F.floor(
-                n / 6.0 * (skew * skew + exkurt * exkurt / 4.0) * 10000
-                + F.lit(0.5)
-            )
-            / 10000
-        ).alias("jarque_bera"),
+        snap(skew, 6).alias("skewness"),
+        snap(exkurt, 6).alias("excess_kurtosis"),
+        snap(n / 6.0 * (skew * skew + exkurt * exkurt / 4.0), 4).alias("jarque_bera"),
     )
 
 
@@ -1106,7 +1065,7 @@ def agg_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     mergesort inversions) — documented cutover."""
     ev = load_table(spark, sf_dir, "events", parallel=False)
     daily = cached(ev.groupBy(F.to_date("ts").alias("d")).agg(
-        F.floor(F.sum("value") * 100 + F.lit(0.5)).cast("long").alias("y")
+        fixed(F.sum("value"), 2).alias("y")
     ))
     a, b = daily.alias("a"), daily.alias("b")
     s_row = (
@@ -1146,7 +1105,7 @@ def agg_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     return v.select(
         n.cast("long").alias("n_days"),
         s.alias("s_stat"),
-        (F.floor(z * 1000000 + F.lit(0.5)) / 1000000).alias("z_score"),
+        snap(z, 6).alias("z_score"),
     )
 
 
@@ -1213,17 +1172,9 @@ def agg_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events", parallel=False)
     is_we = F.dayofweek("ts").isin(1, 7)
     wk = ev.groupBy(F.date_trunc("week", "ts").alias("w")).agg(
-        F.floor(
-            F.sum(F.when(is_we, F.lit(0.0)).otherwise(F.col("value"))) * 100
-            + F.lit(0.5)
-        )
-        .cast("long")
+        fixed(F.sum(F.when(is_we, F.lit(0.0)).otherwise(F.col("value"))), 2)
         .alias("wd"),
-        F.floor(
-            F.sum(F.when(is_we, F.col("value")).otherwise(F.lit(0.0))) * 100
-            + F.lit(0.5)
-        )
-        .cast("long")
+        fixed(F.sum(F.when(is_we, F.col("value")).otherwise(F.lit(0.0))), 2)
         .alias("we"),
     )
     d = wk.filter(F.col("wd") != F.col("we")).select(
@@ -1252,16 +1203,12 @@ def agg_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return j.select(
         n.cast("long").alias("n_pairs"),
         (w2 / 2.0).alias("w_plus"),
-        (
-            F.floor(
-                (w2 - n * (n + 1.0) / 2)
-                / F.sqrt(
-                    n * (n + 1.0) * (2 * n + 1) / 6 - tie / 12.0
-                )
-                * 1000000
-                + F.lit(0.5)
-            )
-            / 1000000
+        snap(
+            (w2 - n * (n + 1.0) / 2)
+            / F.sqrt(
+                n * (n + 1.0) * (2 * n + 1) / 6 - tie / 12.0
+            ),
+            6,
         ).alias("z_score"),
     )
 
@@ -1309,9 +1256,7 @@ def agg_robust_moments_octiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistics go through the two-pass partition-offset device of
     agg_exact_percentiles — drop-in, documented there."""
     c = load_table(spark, sf_dir, "customer").select(
-        F.floor(F.col("c_acctbal") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("x")
+        fixed(F.col("c_acctbal"), 2).alias("x")
     )
     cuts = [
         F.expr(
@@ -1328,19 +1273,8 @@ def agg_robust_moments_octiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n").cast("long").alias("n_customers"),
         e4.cast("long").alias("median_cents"),
         (e6 - e2).cast("long").alias("iqr_cents"),
-        (
-            F.floor(
-                (e6 + e2 - 2.0 * e4) / (e6 - e2) * 1000000 + F.lit(0.5)
-            )
-            / 1000000
-        ).alias("bowley_skew"),
-        (
-            F.floor(
-                ((e7 - e5) + (e3 - e1)) * 1.0 / (e6 - e2) * 1000000
-                + F.lit(0.5)
-            )
-            / 1000000
-        ).alias("moors_kurtosis"),
+        snap((e6 + e2 - 2.0 * e4) / (e6 - e2), 6).alias("bowley_skew"),
+        snap(((e7 - e5) + (e3 - e1)) * 1.0 / (e6 - e2), 6).alias("moors_kurtosis"),
     )
 
 
@@ -1390,7 +1324,7 @@ def agg_grubbs_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer deviation with date tie-break; G is one fixed chain."""
     ev = load_table(spark, sf_dir, "events", parallel=False)
     daily = ev.groupBy(F.to_date("ts").alias("d")).agg(
-        F.floor(F.sum("value") * 100 + F.lit(0.5)).cast("long").alias("y")
+        fixed(F.sum("value"), 2).alias("y")
     )
     m = daily.agg(
         F.count(F.lit(1)).alias("n"),
@@ -1413,14 +1347,10 @@ def agg_grubbs_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
         n.cast("long").alias("n_days"),
         F.date_format("d", "yyyy-MM-dd").alias("suspect_day"),
         F.col("y").alias("suspect_revenue_cents"),
-        (
-            F.floor(
-                (F.col("udev") * 1.0 / n)
-                / F.sqrt((q * 1.0 - s * 1.0 * s / n) / (n - 1))
-                * 1000000
-                + F.lit(0.5)
-            )
-            / 1000000
+        snap(
+            (F.col("udev") * 1.0 / n)
+            / F.sqrt((q * 1.0 - s * 1.0 * s / n) / (n - 1)),
+            6,
         ).alias("g_stat"),
     )
 
@@ -1475,17 +1405,9 @@ def agg_hodges_lehmann_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events", parallel=False)
     is_we = F.dayofweek("ts").isin(1, 7)
     wk = ev.groupBy(F.date_trunc("week", "ts").alias("w")).agg(
-        F.floor(
-            F.sum(F.when(is_we, F.lit(0.0)).otherwise(F.col("value"))) * 100
-            + F.lit(0.5)
-        )
-        .cast("long")
+        fixed(F.sum(F.when(is_we, F.lit(0.0)).otherwise(F.col("value"))), 2)
         .alias("wd"),
-        F.floor(
-            F.sum(F.when(is_we, F.col("value")).otherwise(F.lit(0.0))) * 100
-            + F.lit(0.5)
-        )
-        .cast("long")
+        fixed(F.sum(F.when(is_we, F.col("value")).otherwise(F.lit(0.0))), 2)
         .alias("we"),
     )
     d = cached(wk.select(
@@ -1507,9 +1429,7 @@ def agg_hodges_lehmann_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nw").cast("long").alias("n_weeks"),
         F.col("n_walsh").cast("long").alias("n_walsh_averages"),
         F.col("hl2").cast("long").alias("hl_shift_2x_cents"),
-        (F.floor(F.col("hl2") / 2.0 * 100 + F.lit(0.5)) / 100).alias(
-            "hl_shift_cents"
-        ),
+        snap(F.col("hl2") / 2.0, 2).alias("hl_shift_cents"),
     )
 
 
@@ -1578,9 +1498,7 @@ def agg_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell = ev.groupBy(
         F.date_trunc("week", "ts").alias("w"),
         (F.expr("weekday(ts)") + F.lit(1)).alias("dow"),
-    ).agg(
-        F.floor(F.sum("value") * 100 + F.lit(0.5)).cast("long").alias("y")
-    )
+    ).agg(fixed(F.sum("value"), 2).alias("y"))
     c2 = cached(
         cell.withColumn(
             "ndow", F.count(F.lit(1)).over(Window.partitionBy("w"))
@@ -1680,16 +1598,14 @@ def agg_cronbach_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def bucket(status: str):
         return (
-            F.floor(
+            fixed(
                 F.sum(
                     F.when(
                         F.col("o_orderstatus") == status, F.col("o_totalprice")
                     ).otherwise(0.0)
-                )
-                * 100
-                + F.lit(0.5)
+                ),
+                2,
             )
-            .cast("long")
         )
 
     items = od.groupBy("o_custkey").agg(
@@ -1785,7 +1701,7 @@ def agg_gumbel_block_maxima(spark: SparkSession, sf_dir: str) -> DataFrame:
     conversions feed identical exact integers to both engines."""
     ev = load_table(spark, sf_dir, "events", parallel=False)
     daily = ev.groupBy(F.to_date("ts").alias("d")).agg(
-        F.floor(F.sum("value") * 100 + F.lit(0.5)).cast("long").alias("y")
+        fixed(F.sum("value"), 2).alias("y")
     )
     blocks = daily.groupBy(F.date_trunc("week", "d").alias("w")).agg(
         F.max("y").alias("mx")
@@ -1806,15 +1722,9 @@ def agg_gumbel_block_maxima(spark: SparkSession, sf_dir: str) -> DataFrame:
     mu = mean_mx - 0.5772156649015329 * beta
     return stats.select(
         n.cast("long").alias("n_weeks"),
-        F.floor(mu * 1.0 + F.lit(0.5)).alias("mu_cents"),
-        F.floor(beta + F.lit(0.5)).alias("beta_cents"),
-        (
-            F.floor(
-                (1.0 - F.exp(-F.exp(-(worst - mu) / beta))) * 1000000
-                + F.lit(0.5)
-            )
-            / 1000000
-        ).alias("p_exceed_worst"),
+        fixed(mu * 1.0, 0).alias("mu_cents"),
+        fixed(beta, 0).alias("beta_cents"),
+        snap(1.0 - F.exp(-F.exp(-(worst - mu) / beta)), 6).alias("p_exceed_worst"),
     )
 
 
@@ -1976,8 +1886,8 @@ def agg_capture_recapture_chapman(
         n2.alias("n_second"),
         b.alias("n_both"),
         total.cast("long").alias("n_true_distinct"),
-        (F.floor(n_hat * 100 + F.lit(0.5)) / 100).alias("n_hat_chapman"),
-        (F.floor(se * 100 + F.lit(0.5)) / 100).alias("se_chapman"),
+        snap(n_hat, 2).alias("n_hat_chapman"),
+        snap(se, 2).alias("se_chapman"),
     )
 
 
@@ -2043,7 +1953,7 @@ def agg_energy_distance_weekend(
     that)."""
     ev = load_table(spark, sf_dir, "events", parallel=False)
     daily = cached(ev.groupBy(F.to_date("ts").alias("d")).agg(
-        F.floor(F.sum("value") * 100 + F.lit(0.5)).cast("long").alias("y")
+        fixed(F.sum("value"), 2).alias("y")
     ).select(
         F.when(F.expr("weekday(d)") >= 5, 1).otherwise(0).alias("we"),
         "y",
@@ -2079,15 +1989,8 @@ def agg_energy_distance_weekend(
     return sums.crossJoin(F.broadcast(ns)).select(
         n1.alias("n_weekday"),
         n2.alias("n_weekend"),
-        (F.floor(d2 / 100 * 10000 + F.lit(0.5)) / 10000).alias(
-            "energy_dist_dollars"
-        ),
-        (
-            F.floor(
-                n1 * 1.0 * n2 / (n1 + n2) * d2 / 100 * 10000 + F.lit(0.5)
-            )
-            / 10000
-        ).alias("energy_test_stat_dollars"),
+        snap(d2 / 100, 4).alias("energy_dist_dollars"),
+        snap(n1 * 1.0 * n2 / (n1 + n2) * d2 / 100, 4).alias("energy_test_stat_dollars"),
     )
 
 
@@ -2163,8 +2066,8 @@ def agg_circular_hour_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     theta = 2 * F.lit(3.141592653589793) * F.col("m") / 1440.0
     trig = mins.select(
         "cnt",
-        F.floor(F.cos(theta) * 1000000 + F.lit(0.5)).cast("long").alias("c6"),
-        F.floor(F.sin(theta) * 1000000 + F.lit(0.5)).cast("long").alias("s6"),
+        fixed(F.cos(theta), 6).alias("c6"),
+        fixed(F.sin(theta), 6).alias("s6"),
     )
     s = trig.agg(
         F.sum("cnt").cast("long").alias("n"),
@@ -2177,18 +2080,14 @@ def agg_circular_hour_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     two_pi = 2 * F.lit(3.141592653589793)
     return s.select(
         n.alias("n_events"),
-        (
-            F.floor(
-                (aa + F.when(aa < 0, two_pi).otherwise(F.lit(0.0)))
-                / two_pi
-                * 24
-                * 10000
-                + F.lit(0.5)
-            )
-            / 10000
+        snap(
+            (aa + F.when(aa < 0, two_pi).otherwise(F.lit(0.0)))
+            / two_pi
+            * 24,
+            4,
         ).alias("mean_hour"),
-        (F.floor(r * 1000000 + F.lit(0.5)) / 1000000).alias("resultant_r"),
-        (F.floor(n * r * r * 100 + F.lit(0.5)) / 100).alias("rayleigh_z"),
+        snap(r, 6).alias("resultant_r"),
+        snap(n * r * r, 2).alias("rayleigh_z"),
     )
 
 
@@ -2247,7 +2146,7 @@ def ml_xi_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(
             F.when(F.col("event_type") == "view", 1).otherwise(0)
         ).alias("x"),
-        F.floor(F.sum("value") * 100 + F.lit(0.5)).cast("long").alias("y"),
+        fixed(F.sum("value"), 2).alias("y"),
     )
     wr = (
         Window.orderBy("y")
@@ -2268,13 +2167,7 @@ def ml_xi_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     n, sdr = F.col("n"), F.col("sdr")
     return s.select(
         n.cast("long").alias("n_days"),
-        (
-            F.floor(
-                (1.0 - 3.0 * sdr / (n * 1.0 * n - 1)) * 1000000
-                + F.lit(0.5)
-            )
-            / 1000000
-        ).alias("xi_coefficient"),
+        snap(1.0 - 3.0 * sdr / (n * 1.0 * n - 1), 6).alias("xi_coefficient"),
     )
 
 
@@ -2342,7 +2235,7 @@ def agg_tail_dependence_extremes(
         F.sum(
             F.when(F.col("event_type") == "view", 1).otherwise(0)
         ).alias("x"),
-        F.floor(F.sum("value") * 100 + F.lit(0.5)).cast("long").alias("y"),
+        fixed(F.sum("value"), 2).alias("y"),
     ))
     cuts = daily.agg(
         F.expr("percentile_disc(0.9) WITHIN GROUP (ORDER BY x)").alias(
@@ -2380,7 +2273,7 @@ def agg_tail_dependence_extremes(
     )
     lam = lambda nj, nx: F.when(
         F.col(nx) > 0,
-        F.floor(F.col(nj) * 1.0 / F.col(nx) * 10000 + F.lit(0.5)) / 10000,
+        snap(F.col(nj) * 1.0 / F.col(nx), 4),
     )
     return m.select(
         F.col("n").cast("long").alias("n_days"),
@@ -2495,12 +2388,8 @@ def agg_partial_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return m.select(
         n.cast("long").alias("n_days"),
-        (F.floor(rxy * 1000000 + F.lit(0.5)) / 1000000).alias(
-            "r_view_purchase"
-        ),
-        (F.floor(partial * 1000000 + F.lit(0.5)) / 1000000).alias(
-            "r_partial_given_clicks"
-        ),
+        snap(rxy, 6).alias("r_view_purchase"),
+        snap(partial, 6).alias("r_partial_given_clicks"),
     )
 
 
@@ -2567,7 +2456,7 @@ def agg_lmoments_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     (WIDE cutover documented for minute grains)."""
     ev = load_table(spark, sf_dir, "events", parallel=False)
     daily = ev.groupBy(F.to_date("ts").alias("d")).agg(
-        F.floor(F.sum("value") * 100 + F.lit(0.5)).cast("long").alias("y")
+        fixed(F.sum("value"), 2).alias("y")
     )
     ranked = daily.select(
         "y", F.row_number().over(Window.orderBy("y")).alias("r")
@@ -2591,15 +2480,11 @@ def agg_lmoments_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     l4 = 20 * b3 - 30 * b2 + 12 * b1 - b0
     return s.select(
         n.cast("long").alias("n_days"),
-        (F.floor(l1 + F.lit(0.5)) / 100).alias("l1_dollars"),
-        (F.floor(l2 + F.lit(0.5)) / 100).alias("l2_dollars"),
-        (F.floor(l2 / l1 * 1000000 + F.lit(0.5)) / 1000000).alias("l_cv"),
-        (F.floor(l3 / l2 * 1000000 + F.lit(0.5)) / 1000000).alias(
-            "l_skewness"
-        ),
-        (F.floor(l4 / l2 * 1000000 + F.lit(0.5)) / 1000000).alias(
-            "l_kurtosis"
-        ),
+        (fixed(l1, 0) / 100).alias("l1_dollars"),
+        (fixed(l2, 0) / 100).alias("l2_dollars"),
+        snap(l2 / l1, 6).alias("l_cv"),
+        snap(l3 / l2, 6).alias("l_skewness"),
+        snap(l4 / l2, 6).alias("l_kurtosis"),
     )
 
 
@@ -2759,17 +2644,10 @@ def agg_ledoit_wolf_shrinkage(
     bbar2 = sumq2 - frob2 / n
     return m.select(
         n.cast("long").alias("n_days"),
-        (F.floor(mu * 1000000 + F.lit(0.5)) / 1000000).alias("mu_diag"),
-        (F.floor(d2 * 1000000 + F.lit(0.5)) / 1000000).alias("d2"),
-        (F.floor(bbar2 * 1000000 + F.lit(0.5)) / 1000000).alias(
-            "bbar2_uncapped"
-        ),
-        (
-            F.floor(
-                F.least(F.lit(1.0), bbar2 / d2) * 1000000 + F.lit(0.5)
-            )
-            / 1000000
-        ).alias("shrinkage_lambda"),
+        snap(mu, 6).alias("mu_diag"),
+        snap(d2, 6).alias("d2"),
+        snap(bbar2, 6).alias("bbar2_uncapped"),
+        snap(F.least(F.lit(1.0), bbar2 / d2), 6).alias("shrinkage_lambda"),
     )
 
 
@@ -2837,11 +2715,7 @@ def agg_wasserstein_weekend(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events", parallel=False)
     daily = cached(
         ev.groupBy(F.to_date("ts").alias("d"))
-        .agg(
-            F.floor(F.sum("value") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("y")
-        )
+        .agg(fixed(F.sum("value"), 2).alias("y"))
         .select(
             F.when(F.expr("weekday(d)") >= 5, 1).otherwise(0).alias("we"),
             "y",
@@ -2886,15 +2760,11 @@ def agg_wasserstein_weekend(spark: SparkSession, sf_dir: str) -> DataFrame:
     return segs.agg(
         F.max("n1").alias("n1"),
         F.max("n2").alias("n2"),
-        (
-            F.floor(
-                F.sum("seg").cast("double")
-                / (F.max("n1") * 1.0 * F.max("n2"))
-                / 100
-                * 10000
-                + F.lit(0.5)
-            )
-            / 10000
+        snap(
+            F.sum("seg").cast("double")
+            / (F.max("n1") * 1.0 * F.max("n2"))
+            / 100,
+            4,
         ).alias("wasserstein_dollars"),
     ).select(
         F.col("n1").alias("n_weekday"),
@@ -2975,7 +2845,7 @@ def agg_cramer_von_mises_weekend(
     bound as every rank operator in this module."""
     ev = load_table(spark, sf_dir, "events", parallel=False)
     daily = ev.groupBy(F.to_date("ts").alias("d")).agg(
-        F.floor(F.sum("value") * 100 + F.lit(0.5)).cast("long").alias("y")
+        fixed(F.sum("value"), 2).alias("y")
     ).select(
         F.when(F.expr("weekday(d)") >= 5, 1).otherwise(0).alias("we"),
         "y",
@@ -3032,7 +2902,7 @@ def agg_cramer_von_mises_weekend(
     return ns.crossJoin(F.broadcast(s)).select(
         n.alias("n_weekday"),
         m.alias("n_weekend"),
-        (F.floor(t_stat * 1000000 + F.lit(0.5)) / 1000000).alias("cvm_t"),
+        snap(t_stat, 6).alias("cvm_t"),
     )
 
 
@@ -3103,7 +2973,7 @@ def agg_durbin_watson_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same fixed-order chain in both engines."""
     ev = load_table(spark, sf_dir, "events", parallel=False)
     daily = ev.groupBy(F.to_date("ts").alias("d")).agg(
-        F.floor(F.sum("value") * 100 + F.lit(0.5)).cast("long").alias("y")
+        fixed(F.sum("value"), 2).alias("y")
     )
     w = Window.orderBy("d")
     idx = daily.select(
@@ -3132,9 +3002,7 @@ def agg_durbin_watson_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         "t",
         "n",
         "b",
-        F.floor((y - F.col("a") - F.col("b") * t) * 1000 + F.lit(0.5))
-        .cast("long")
-        .alias("e"),
+        fixed(y - F.col("a") - F.col("b") * t, 3).alias("e"),
     )
     lw = Window.orderBy("t")
     lagged = res.select(
@@ -3160,17 +3028,11 @@ def agg_durbin_watson_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return out.select(
         F.coalesce(F.col("n"), F.lit(0).cast("long")).alias("n_days"),
-        (F.floor(F.col("b") / 100 * 10000 + F.lit(0.5)) / 10000).alias(
-            "slope_dollars_per_day"
-        ),
-        (
-            F.floor(
-                F.col("sd2").cast("double")
-                / F.col("se2").cast("double")
-                * 1000000
-                + F.lit(0.5)
-            )
-            / 1000000
+        snap(F.col("b") / 100, 4).alias("slope_dollars_per_day"),
+        snap(
+            F.col("sd2").cast("double")
+            / F.col("se2").cast("double"),
+            6,
         ).alias("dw_stat"),
     )
 
@@ -3239,7 +3101,7 @@ def agg_bartlett_variance_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders); all logs are per-GROUP, snapped at 1e-9; the chi2 is a
     1-row fixed chain on order-free integers and snapped logs."""
     orders = load_table(spark, sf_dir, "orders", parallel=False)
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
+    cents = fixed(F.col("o_totalprice"), 2)
     g = orders.groupBy(F.col("o_orderpriority").alias("grp")).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(cents.cast("decimal(38,0)")).alias("s"),
@@ -3259,7 +3121,7 @@ def agg_bartlett_variance_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         # integer chain must not saturate int64 (oracle mirrors
         # with HUGEINT).
         F.sum(
-            F.floor(F.log(si2) * 1000000000 + F.lit(0.5)).cast(
+            fixed(F.log(si2), 9).cast(
                 "decimal(38,0)"
             )
             * (n - 1)
@@ -3268,9 +3130,7 @@ def agg_bartlett_variance_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     nn, k = F.col("nn"), F.col("k")
     num = (
         (nn - k).cast("decimal(38,0)")
-        * F.floor(
-            F.log(F.col("sse") / (nn - k)) * 1000000000 + F.lit(0.5)
-        )
+        * fixed(F.log(F.col("sse") / (nn - k)), 9)
     ).cast("double") / 1000000000.0 - F.col("wlog").cast(
         "double"
     ) / 1000000000.0
@@ -3278,9 +3138,7 @@ def agg_bartlett_variance_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tot.select(
         k.alias("n_groups"),
         nn.alias("n_orders"),
-        (F.floor(num / c * 1000000 + F.lit(0.5)) / 1000000).alias(
-            "bartlett_chi2"
-        ),
+        snap(num / c, 6).alias("bartlett_chi2"),
     )
 
 
@@ -3347,15 +3205,9 @@ def agg_poisson_overdispersion(
     d = s2 / mean
     return mom.select(
         n.alias("n_days"),
-        (F.floor(mean * 10000 + F.lit(0.5)) / 10000).alias(
-            "mean_orders_per_day"
-        ),
-        (F.floor(d * 1000000 + F.lit(0.5)) / 1000000).alias(
-            "dispersion_index"
-        ),
-        (F.floor((n - 1) * d * 10000 + F.lit(0.5)) / 10000).alias(
-            "dispersion_chi2"
-        ),
+        snap(mean, 4).alias("mean_orders_per_day"),
+        snap(d, 6).alias("dispersion_index"),
+        snap((n - 1) * d, 4).alias("dispersion_chi2"),
     )
 
 
@@ -3412,7 +3264,7 @@ def events_page_hinkley_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer arithmetic — order-free in both engines."""
     ev = load_table(spark, sf_dir, "events", parallel=False)
     daily = ev.groupBy(F.to_date("ts").alias("d")).agg(
-        F.floor(F.sum("value") * 100 + F.lit(0.5)).cast("long").alias("y")
+        fixed(F.sum("value"), 2).alias("y")
     )
     ns = daily.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -3438,12 +3290,9 @@ def events_page_hinkley_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("n").alias("n_days"),
             F.date_format("d", "yyyy-MM-dd").alias("detection_day"),
-            (
-                F.floor(
-                    F.col("gap").cast("double") / F.col("n") / 100 * 10000
-                    + F.lit(0.5)
-                )
-                / 10000
+            snap(
+                F.col("gap").cast("double") / F.col("n") / 100,
+                4,
             ).alias("ph_stat_dollars"),
         )
     )
@@ -3535,9 +3384,7 @@ def agg_jonckheere_terpstra(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders", parallel=False)
     s = orders.select(
         F.substring("o_orderpriority", 1, 1).cast("int").alias("g"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("v"),
+        fixed(F.col("o_totalprice"), 2).alias("v"),
     )
     piv = s.groupBy("v").agg(
         *[
@@ -3589,7 +3436,7 @@ def agg_jonckheere_terpstra(spark: SparkSession, sf_dir: str) -> DataFrame:
     return jt.crossJoin(F.broadcast(ns)).select(
         n.alias("n_orders"),
         F.col("jt2").cast("long").alias("jt2_stat"),
-        (F.floor(z * 1000000 + F.lit(0.5)) / 1000000).alias("jt_z"),
+        snap(z, 6).alias("jt_z"),
     )
 
 
@@ -3693,23 +3540,18 @@ def agg_cmh_stratified_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a, r1, k1, n = F.col("a"), F.col("r1"), F.col("k1"), F.col("n")
     terms = strata.filter(n >= 2).select(
-        F.floor((a - r1 * 1.0 * k1 / n) * 1000000000 + F.lit(0.5)).alias(
-            "num9"
-        ),
-        F.floor(
+        fixed(a - r1 * 1.0 * k1 / n, 9).alias("num9"),
+        fixed(
             r1 * 1.0 * (n - r1) * k1 * (n - k1)
-            / (n * 1.0 * n * (n - 1))
-            * 1000000000
-            + F.lit(0.5)
+            / (n * 1.0 * n * (n - 1)),
+            9,
         ).alias("v9"),
     )
     sn = F.sum("num9") / 1000000000.0
     sv = F.sum("v9") / 1000000000.0
     return terms.agg(
         F.count(F.lit(1)).cast("long").alias("n_strata"),
-        (F.floor(sn * sn / sv * 1000000 + F.lit(0.5)) / 1000000).alias(
-            "cmh_chi2"
-        ),
+        snap(sn * sn / sv, 6).alias("cmh_chi2"),
     )
 
 
@@ -3782,9 +3624,7 @@ def agg_mood_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders", parallel=False)
     s = cached(orders.select(
         F.substring("o_orderpriority", 1, 1).cast("int").alias("g"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("v"),
+        fixed(F.col("o_totalprice"), 2).alias("v"),
     ))
     w = Window.orderBy("v")
     med = (
@@ -3817,11 +3657,7 @@ def agg_mood_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cells.crossJoin(F.broadcast(tot))
         .groupBy("k", "ta", "nn")
-        .agg(
-            (F.floor(F.sum(term) * 1000000 + F.lit(0.5)) / 1000000).alias(
-                "mood_chi2"
-            )
-        )
+        .agg(snap(F.sum(term), 6).alias("mood_chi2"))
         .select(
             k.alias("n_groups"),
             ta.alias("n_above_total"),
@@ -3999,7 +3835,7 @@ def agg_bh_fdr_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ns, nn = F.col("n_s").cast("double"), F.col("nn")
     neff_denom = ns * (nn - F.col("n_s"))
-    p9 = F.floor(
+    p9 = fixed(
         F.least(
             F.lit(1.0),
             2.0
@@ -4011,32 +3847,22 @@ def agg_bh_fdr_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / neff_denom
                 * (neff_denom / nn)
             ),
-        )
-        * 1000000000
-        + F.lit(0.5)
+        ),
+        9,
     )
     pval = dnum.select(
         "source",
         "n_s",
         "m",
         p9.alias("p9"),
-        (
-            F.floor(
-                F.col("d_num").cast("double") / neff_denom * 1000000
-                + F.lit(0.5)
-            )
-            / 1000000
-        ).alias("ks_d"),
+        snap(F.col("d_num").cast("double") / neff_denom, 6).alias("ks_d"),
     )
     w = Window.orderBy("p9", "source")
     ranked = pval.withColumn("bh_rank", F.row_number().over(w)).withColumn(
         "under",
         F.when(
             F.col("p9")
-            <= F.floor(
-                F.col("bh_rank") * 0.10 / F.col("m") * 1000000000
-                + F.lit(0.5)
-            ),
+            <= fixed(F.col("bh_rank") * 0.10 / F.col("m"), 9),
             1,
         ).otherwise(0),
     )
@@ -4058,12 +3884,7 @@ def agg_bh_fdr_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source",
             F.col("n_s").cast("long").alias("n_docs"),
             "ks_d",
-            (
-                F.floor(
-                    F.col("p9") / 1000000000.0 * 1000000 + F.lit(0.5)
-                )
-                / 1000000
-            ).alias("p_value"),
+            snap(F.col("p9") / 1000000000.0, 6).alias("p_value"),
             F.col("bh_rank").cast("long").alias("bh_rank"),
             (F.col("bh_rank") <= F.col("k")).alias("rejected"),
         )
@@ -4140,7 +3961,7 @@ def agg_mahalanobis_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     a p-feature version swaps the closed-form inverse for a
     broadcast p x p solve — still one Exchange."""
     orders = load_table(spark, sf_dir, "orders", parallel=False)
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
+    cents = fixed(F.col("o_totalprice"), 2)
     feat = orders.groupBy(F.col("o_custkey").alias("custkey")).agg(
         F.count(F.lit(1)).cast("long").alias("x"),
         F.sum(cents).cast("long").alias("y"),
@@ -4165,15 +3986,14 @@ def agg_mahalanobis_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dx = F.col("x") - F.col("mx")
     dy = F.col("y") - F.col("my")
-    d6 = F.floor(
+    d6 = fixed(
         (
             dx * dx * F.col("cyy")
             - 2.0 * dx * dy * F.col("cxy")
             + dy * dy * F.col("cxx")
         )
-        / (F.col("cxx") * F.col("cyy") - F.col("cxy") * F.col("cxy"))
-        * 1000000
-        + F.lit(0.5)
+        / (F.col("cxx") * F.col("cyy") - F.col("cxy") * F.col("cxy")),
+        6,
     )
     scored = feat.crossJoin(F.broadcast(cov)).select(
         "custkey",
@@ -4249,11 +4069,7 @@ def agg_cohens_d_weekend(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events", parallel=False)
     daily = (
         ev.groupBy(F.to_date("ts").alias("d"))
-        .agg(
-            F.floor(F.sum("value") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("y")
-        )
+        .agg(fixed(F.sum("value"), 2).alias("y"))
         .select(
             F.when(F.expr("weekday(d)") >= 5, 1).otherwise(0).alias("we"),
             "y",
@@ -4304,24 +4120,16 @@ def agg_cohens_d_weekend(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.select(
         F.col("n0").alias("n_weekday"),
         F.col("n1").alias("n_weekend"),
-        (F.floor(F.col("diff") / 100 * 10000 + F.lit(0.5)) / 10000).alias(
-            "mean_diff_dollars"
-        ),
-        (F.floor(F.col("d") * 1000000 + F.lit(0.5)) / 1000000).alias(
-            "cohens_d"
-        ),
-        (
-            F.floor(
-                F.col("d")
-                * (
-                    F.lit(1.0)
-                    - F.lit(3.0)
-                    / (4.0 * (F.col("n0") + F.col("n1")) - F.lit(9.0))
-                )
-                * 1000000
-                + F.lit(0.5)
-            )
-            / 1000000
+        snap(F.col("diff") / 100, 4).alias("mean_diff_dollars"),
+        snap(F.col("d"), 6).alias("cohens_d"),
+        snap(
+            F.col("d")
+            * (
+                F.lit(1.0)
+                - F.lit(3.0)
+                / (4.0 * (F.col("n0") + F.col("n1")) - F.lit(9.0))
+            ),
+            6,
         ).alias("hedges_g"),
     )
 
@@ -4404,7 +4212,7 @@ def agg_chow_break_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     square past int64 at warehouse scale."""
     ev = load_table(spark, sf_dir, "events", parallel=False)
     daily = ev.groupBy(F.to_date("ts").alias("d")).agg(
-        F.floor(F.sum("value") * 100 + F.lit(0.5)).cast("long").alias("y")
+        fixed(F.sum("value"), 2).alias("y")
     )
     w = Window.orderBy("d")
     idx = daily.select(
@@ -4458,14 +4266,10 @@ def agg_chow_break_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     return f.select(
         F.col("n0").cast("long").alias("n_pre"),
         F.col("n1").cast("long").alias("n_post"),
-        (
-            F.floor(
-                ((F.col("sp") - F.col("s01")) / 2)
-                / (F.col("s01") / (F.col("n") - 4))
-                * 1000000
-                + F.lit(0.5)
-            )
-            / 1000000
+        snap(
+            ((F.col("sp") - F.col("s01")) / 2)
+            / (F.col("s01") / (F.col("n") - 4)),
+            6,
         ).alias("chow_f"),
     )
 
@@ -4559,9 +4363,7 @@ def agg_breusch_pagan_order_size(
     li = load_table(spark, sf_dir, "lineitem", parallel=False)
     per = o.select(
         F.col("o_orderkey").alias("ok"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("y"),
+        fixed(F.col("o_totalprice"), 2).alias("y"),
     )
     cnt = li.groupBy(F.col("l_orderkey").alias("ok")).agg(
         F.count(F.lit(1)).alias("x")
@@ -4591,7 +4393,7 @@ def agg_breusch_pagan_order_size(
     e = F.col("y") * 1.0 - F.col("a") - F.col("b") * F.col("x")
     scored = j.crossJoin(F.broadcast(fit.select("a", "b"))).select(
         "x",
-        F.floor(e * e + F.lit(0.5)).cast("long").alias("e2"),
+        fixed(e * e, 0).alias("e2"),
     )
     aux = scored.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -4611,18 +4413,14 @@ def agg_breusch_pagan_order_size(
     sxe2_c = axe2_d - ax_d * ae2_d / F.col("n")
     return aux.select(
         F.col("n").alias("n_orders"),
-        (
-            F.floor(
-                sxe2_c
-                * sxe2_c
-                / (
-                    (axx_d - ax_d * ax_d / F.col("n"))
-                    * (ae2e2_d - ae2_d * ae2_d / F.col("n"))
-                )
-                * F.col("n")
-                * 1000000
-                + F.lit(0.5)
+        snap(
+            sxe2_c
+            * sxe2_c
+            / (
+                (axx_d - ax_d * ax_d / F.col("n"))
+                * (ae2e2_d - ae2_d * ae2_d / F.col("n"))
             )
-            / 1000000
+            * F.col("n"),
+            6,
         ).alias("lm_koenker"),
     )

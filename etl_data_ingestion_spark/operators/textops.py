@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from etl_data_ingestion_spark.catalog import cached, checkpointed, load_table
 from etl_data_ingestion_spark.functions.arrays import ordered_pairs
+from etl_data_ingestion_spark.functions.numeric import fixed, snap
 from etl_data_ingestion_spark.functions.text import (
     BPE_ISH_PATTERN,
     adjacent_bigrams,
@@ -1272,8 +1273,6 @@ def text_hapax_legomena(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary (~10⁷ rows/source), not the corpus; shuffling hashed
     tokens instead of strings (the contamination-curve trick) is
     the documented width optimization if token strings dominate."""
-    from etl_data_ingestion_spark.functions.numeric import snap
-
     docs = load_table(spark, sf_dir, "documents", parallel=True)
     toks = docs.select(
         "source",
@@ -1340,8 +1339,6 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     token string here for oracle parity; at 100 TB the key narrows
     to xxhash64(gram) (the contamination-curve width trick — 8 bytes
     vs ~50), identical results modulo 2^-64 collisions."""
-    from etl_data_ingestion_spark.functions.numeric import snap
-
     docs = load_table(spark, sf_dir, "documents", parallel=True)
     toks = docs.select(
         "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("a")
@@ -1428,8 +1425,6 @@ def text_source_vocab_jaccard(
     by |sources-per-token|² exactly like the old join. The 100 TB
     width trick (hash the token key) applies as in
     text_ngram_novelty; per-token set size is bounded by |sources|."""
-    from etl_data_ingestion_spark.functions.numeric import snap
-
     docs = load_table(spark, sf_dir, "documents", parallel=True)
     tsets = checkpointed(
         docs.select(
@@ -1510,8 +1505,6 @@ def text_readability_flesch(spark: SparkSession, sf_dir: str) -> DataFrame:
     |sources| domain; the formula is fixed-order math on exact
     integer sums, snapped. 100 TB cost = one scan, one
     domain-sized Exchange."""
-    from etl_data_ingestion_spark.functions.numeric import snap
-
     docs = load_table(spark, sf_dir, "documents", parallel=True).filter(
         F.length(F.trim("text")) > 0
     )
@@ -1727,8 +1720,6 @@ def text_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables are vocabulary-sized (Zipf-bounded, broadcast-eligible
     under AQE); the per-instance -log2 snaps to integer micro-units
     so per-doc means are exact BIGINT sums, order-independent."""
-    from etl_data_ingestion_spark.functions.numeric import snap
-
     docs = load_table(spark, sf_dir, "documents", parallel=True).filter(
         F.length(F.trim("text")) > 0
     )
@@ -1757,7 +1748,7 @@ def text_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(bt))
         .select(
             "doc_id",
-            F.floor(-F.log2(p) * 1000000 + F.lit(0.5)).cast("long").alias("nl_micro"),
+            fixed(-F.log2(p), 6).alias("nl_micro"),
         )
     )
     return (
@@ -1854,10 +1845,7 @@ def text_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "term",
             (
                 F.col("tf")
-                * F.floor(
-                    F.log(F.col("n_docs") * 1.0 / F.col("df")) * 10000
-                    + F.lit(0.5)
-                ).cast("long")
+                * fixed(F.log(F.col("n_docs") * 1.0 / F.col("df")), 4)
             ).alias("w"),
         )
     )
@@ -1886,14 +1874,10 @@ def text_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_a",
             "doc_b",
             F.col("shared_terms").cast("long").alias("shared_terms"),
-            (
-                F.floor(
-                    F.col("dot")
-                    / (F.sqrt(F.col("na")) * F.sqrt(F.col("nb")))
-                    * 1000000
-                    + F.lit(0.5)
-                )
-                / 1000000
+            snap(
+                F.col("dot")
+                / (F.sqrt(F.col("na")) * F.sqrt(F.col("nb"))),
+                6,
             ).alias("cosine"),
         )
         .orderBy(F.col("cosine").desc(), "doc_a", "doc_b")
@@ -2078,12 +2062,7 @@ def text_oov_rate_cross_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(F.col("ns") == 1, 1).otherwise(0))
             .cast("long")
             .alias("oov_types"),
-            (
-                F.floor(
-                    F.sum(oov) * 1.0 / F.sum("c") * 1000000 + F.lit(0.5)
-                )
-                / 1000000
-            ).alias("oov_rate"),
+            snap(F.sum(oov) * 1.0 / F.sum("c"), 6).alias("oov_rate"),
         )
         .orderBy("source")
     )
@@ -2160,13 +2139,7 @@ def text_word_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("w").alias("word"),
             s.alias("total_count"),
             F.col("df").cast("long").alias("doc_freq"),
-            (
-                F.floor(
-                    (q * 1.0 / d - mean * mean) / mean * 1000000
-                    + F.lit(0.5)
-                )
-                / 1000000
-            ).alias("burstiness"),
+            snap((q * 1.0 / d - mean * mean) / mean, 6).alias("burstiness"),
         )
         .orderBy(F.desc("total_count"), "word")
         .limit(20)
@@ -2230,12 +2203,7 @@ def text_yule_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         n.alias("n_tokens"),
         v.cast("long").alias("n_types"),
-        (
-            F.floor(
-                10000.0 * (q - n) / (n * 1.0 * n) * 10000 + F.lit(0.5)
-            )
-            / 10000
-        ).alias("yule_k"),
+        snap(10000.0 * (q - n) / (n * 1.0 * n), 4).alias("yule_k"),
     ).orderBy("source")
 
 
@@ -2318,16 +2286,12 @@ def text_mattr_lexical_diversity(
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_segments"),
             F.count_distinct("doc_id").cast("long").alias("n_docs"),
-            (
-                F.floor(
-                    F.sum(F.col("d") * 20000)
-                    * 1.0
-                    / F.count(F.lit(1))
-                    / 1000000
-                    * 1000000
-                    + F.lit(0.5)
-                )
-                / 1000000
+            snap(
+                F.sum(F.col("d") * 20000)
+                * 1.0
+                / F.count(F.lit(1))
+                / 1000000,
+                6,
             ).alias("mean_mattr_micro"),
         )
         .orderBy("source")
@@ -2440,15 +2404,7 @@ def text_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "source",
             "w",
-            F.floor(
-                F.coalesce(F.col("c"), F.lit(0))
-                * 1.0
-                / F.col("tot")
-                * 1000000000
-                + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("f9"),
+            fixed(F.coalesce(F.col("c"), F.lit(0)) * 1.0 / F.col("tot"), 9).alias("f9"),
         )
     )
     stats = f.groupBy("w").agg(
@@ -2477,24 +2433,13 @@ def text_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("b.source").alias("source_b"),
         )
         .agg(
-            F.sum(
-                F.floor(
-                    F.abs(F.col("a.z") - F.col("b.z")) * 1000000000
-                    + F.lit(0.5)
-                ).cast("long")
-            )
+            F.sum(fixed(F.abs(F.col("a.z") - F.col("b.z")), 9))
             .cast("long")
             .alias("d9"),
             F.count(F.lit(1)).alias("nw"),
         )
     )
-    delta = (
-        F.floor(
-            F.col("d9") / F.col("nw") / 1000000000.0 * 1000000
-            + F.lit(0.5)
-        )
-        / 1000000
-    )
+    delta = snap(F.col("d9") / F.col("nw") / 1000000000.0, 6)
     return (
         pairs.select("source_a", "source_b", delta.alias("burrows_delta"))
         .orderBy("burrows_delta", "source_a", "source_b")
@@ -2591,15 +2536,8 @@ def text_good_turing_estimates(
             "r",
             "n_types",
             (r * n_types).cast("long").alias("tokens_at_r"),
-            (F.floor(rstar * 1000000 + F.lit(0.5)) / 1000000).alias(
-                "turing_rstar"
-            ),
-            (
-                F.floor(
-                    rstar / F.col("n_tokens") * 1000000000 + F.lit(0.5)
-                )
-                / 1000000000
-            ).alias("smoothed_prob"),
+            snap(rstar, 6).alias("turing_rstar"),
+            snap(rstar / F.col("n_tokens"), 9).alias("smoothed_prob"),
         )
         .orderBy("r")
     )
@@ -2667,15 +2605,11 @@ def text_yule_k_characteristic(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             s1.alias("n_tokens"),
             F.count(F.lit(1)).cast("long").alias("n_types"),
-            (
-                F.floor(
-                    10000.0
-                    * (s2 - F.sum(c)).cast("double")
-                    / (F.sum(c).cast("double") * F.sum(c))
-                    * 1000000
-                    + F.lit(0.5)
-                )
-                / 1000000
+            snap(
+                10000.0
+                * (s2 - F.sum(c)).cast("double")
+                / (F.sum(c).cast("double") * F.sum(c)),
+                6,
             ).alias("yule_k"),
         )
         .orderBy("source")
@@ -2753,15 +2687,11 @@ def text_distinct_ngram_diversity(
             F.col("n").cast("long").alias("ngram_n"),
             "total_ngrams",
             "distinct_ngrams",
-            (
-                F.floor(
-                    F.col("distinct_ngrams")
-                    * 1.0
-                    / F.col("total_ngrams")
-                    * 1000000
-                    + F.lit(0.5)
-                )
-                / 1000000
+            snap(
+                F.col("distinct_ngrams")
+                * 1.0
+                / F.col("total_ngrams"),
+                6,
             ).alias("diversity"),
         )
         .orderBy("source", "ngram_n")

@@ -13,6 +13,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from etl_data_ingestion_spark.catalog import cached, load_table
+from etl_data_ingestion_spark.functions.numeric import fixed, snap
 from etl_data_ingestion_spark.plans.registry import register
 
 RANK_ORACLE = """
@@ -765,18 +766,6 @@ FROM hw ORDER BY day
 """
 
 
-def _snap(col, decimals: int):
-    """Deterministic half-up decimal snap: FLOOR(x*10^d + 0.5)/10^d.
-
-    Pure IEEE multiply/add/floor — bit-identical between Spark and
-    DuckDB on the same input double, unlike ROUND (DuckDB's fuzzy
-    double ROUND vs Spark's HALF_UP can flip at half boundaries).
-    Halves of negative values snap toward +inf; applied identically
-    in both engines so the published quantity is well-defined."""
-    scale = float(10 ** decimals)
-    return F.floor(col * scale + F.lit(0.5)) / scale
-
-
 @register("timeseries_holt_trend", oracle=HOLT_ORACLE)
 def timeseries_holt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Holt double-exponential smoothing (level + trend) of the daily
@@ -788,8 +777,8 @@ def timeseries_holt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     |days| in one map-side-combined groupBy; the coupled recursion
     folds over the sorted day array in a JVM F.aggregate carrying a
     (level, trend) struct accumulator. Bit-parity discipline: fold
-    inputs and (l, b) state snapped to the 6dp grid via _snap's
-    floor device (NOT ROUND — see HOLT_ORACLE header); identical
+    inputs and (l, b) state snapped to the 6dp grid via the floor
+    snap (NOT ROUND — see HOLT_ORACLE header); identical
     literal arithmetic in identical order both engines (trend init
     b_1 = x_2 - x_1 via LEAD)."""
     daily = (
@@ -797,7 +786,7 @@ def timeseries_holt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(
             F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("d")
         )
-        .agg(_snap(F.sum("value"), 6).alias("x"))
+        .agg(snap(F.sum("value"), 6).alias("x"))
     )
     series = daily.groupBy().agg(
         F.sort_array(F.collect_list(F.struct("d", "x"))).alias("s")
@@ -806,10 +795,10 @@ def timeseries_holt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         prev_l = F.element_at(acc, -1)["l"]
         prev_b = F.element_at(acc, -1)["b"]
         # 6dp floor-device state snap each step — see HOLT_ORACLE
-        new_l = _snap(
+        new_l = snap(
             F.lit(0.5) * e["x"] + F.lit(0.5) * (prev_l + prev_b), 6
         )
-        new_b = _snap(
+        new_b = snap(
             F.lit(0.3) * (new_l - prev_l) + F.lit(0.7) * prev_b, 6
         )
         return F.concat(
@@ -845,7 +834,7 @@ def timeseries_holt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.element_at("s", 1)["x"].alias("l"),
                     F.when(
                         F.size("s") >= 2,
-                        _snap(
+                        snap(
                             F.element_at("s", 2)["x"]
                             - F.element_at("s", 1)["x"],
                             6,
@@ -860,10 +849,10 @@ def timeseries_holt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return seeded.select(F.explode("hw").alias("r")).select(
         F.col("r.d").alias("day"),
-        _snap(F.col("r.x"), 2).alias("daily_total"),
-        _snap(F.col("r.l"), 4).alias("level"),
-        _snap(F.col("r.b"), 4).alias("trend"),
-        _snap(F.col("r.l") + F.col("r.b"), 4).alias("forecast_next"),
+        snap(F.col("r.x"), 2).alias("daily_total"),
+        snap(F.col("r.l"), 4).alias("level"),
+        snap(F.col("r.b"), 4).alias("trend"),
+        snap(F.col("r.l") + F.col("r.b"), 4).alias("forecast_next"),
     )
 
 
@@ -1203,12 +1192,14 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         v = nxt
     # residual over v4 INNER JOIN v3, as the oracle computes it
     res = sum(abs(v[s] - prev[s]) for s in v if s in prev)
-    # half-up to 6 decimals (floor(x*1e6+0.5)) — Python round() is
+    # half-up to 6 decimals with the floor snap — Python round() is
     # banker's while the oracle's ROUND is half-away from zero
     import math
 
-    r6 = lambda x: math.floor(x * 1e6 + 0.5) / 1e6  # noqa: E731
-    out = [(s, r6(v[s]), r6(res)) for s in sorted(v)]
+    out = [
+        (s, snap(v[s], 6, math.floor), snap(res, 6, math.floor))
+        for s in sorted(v)
+    ]
     return spark.createDataFrame(
         out, "event_type string, stationary_prob double, l1_residual double"
     )
@@ -1432,14 +1423,10 @@ def timeseries_acf_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     row — the ACF math never touches anything fact-sized. All sums
     are exact integer cents (see ACF_ORACLE) so the estimator is a
     fixed-order scalar chain, floor-device snapped."""
-    from etl_data_ingestion_spark.functions.numeric import snap
-
     daily = (
         load_table(spark, sf_dir, "events")
         .groupBy(F.date_trunc("day", "ts").alias("d"))
-        .agg(
-            F.floor(F.sum("value") * 100 + 0.5).cast("long").alias("y")
-        )
+        .agg(fixed(F.sum("value"), 2).alias("y"))
     )
     w = Window.orderBy("d")
     led = daily.select(
@@ -1537,14 +1524,10 @@ def timeseries_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     one executor's lunch). Slopes are single IEEE divisions of
     exact integer cents/day-offsets; the median uses the explicit
     middle-element selection device, floor-device snapped."""
-    from etl_data_ingestion_spark.functions.numeric import snap
-
     daily = (
         load_table(spark, sf_dir, "events")
         .groupBy(F.date_trunc("day", "ts").alias("d"))
-        .agg(
-            F.floor(F.sum("value") * 100 + 0.5).cast("long").alias("y")
-        )
+        .agg(fixed(F.sum("value"), 2).alias("y"))
     )
     w = Window.orderBy("d")
     idx = daily.select(
@@ -1698,9 +1681,15 @@ def events_markov_entropy_rate(
         for f in row_tot
     }
     hr = sum(v[s] * rowh[s] for s in sorted(v) if s in rowh)
-    r6 = lambda x: math.floor(x * 1e6 + 0.5) / 1e6  # noqa: E731
     out = [
-        (s, r6(v[s]), r6(rowh[s]), r6(hr)) for s in sorted(v) if s in rowh
+        (
+            s,
+            snap(v[s], 6, math.floor),
+            snap(rowh[s], 6, math.floor),
+            snap(hr, 6, math.floor),
+        )
+        for s in sorted(v)
+        if s in rowh
     ]
     return spark.createDataFrame(
         out,
@@ -1767,19 +1756,11 @@ def timeseries_sax_symbols(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integers before any cross-row sum, so both engines
     symbolize identically; z at a breakpoint boundary is a
     deterministic fixed-order comparison, not a float-sum race."""
-    from etl_data_ingestion_spark.functions.numeric import snap
-
     orders = load_table(spark, sf_dir, "orders", parallel=False).filter(
         F.year("o_orderdate") == 1996
     )
     daily = orders.groupBy(F.dayofyear("o_orderdate").alias("doy")).agg(
-        F.floor(
-            F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long"))
-            * 1.0
-            / F.count(F.lit(1))
-            + F.lit(0.5)
-        )
-        .cast("long")
+        fixed(F.sum(fixed(F.col("o_totalprice"), 2)) * 1.0 / F.count(F.lit(1)), 0)
         .alias("day_cents")
     )
     # persist the 53-row segment table: the stats aggregate and the
@@ -1788,9 +1769,7 @@ def timeseries_sax_symbols(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor((F.col("doy") - 1) / 7).cast("long").alias("segment")
     ).agg(
         F.count(F.lit(1)).alias("n_days"),
-        F.floor(F.sum("day_cents") * 1.0 / F.count(F.lit(1)) + F.lit(0.5))
-        .cast("long")
-        .alias("v"),
+        fixed(F.sum("day_cents") * 1.0 / F.count(F.lit(1)), 0).alias("v"),
     ))
     stats = seg.agg(
         F.count(F.lit(1)).alias("n"),
@@ -1874,17 +1853,9 @@ def timeseries_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     a per-entity variant would partition by the entity key). All
     band math is fixed-order scalar on exact integers, so the
     above/below classification is bit-deterministic."""
-    from etl_data_ingestion_spark.functions.numeric import snap
-
     orders = load_table(spark, sf_dir, "orders", parallel=False)
     daily = orders.groupBy(F.col("o_orderdate").alias("d")).agg(
-        F.floor(
-            F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long"))
-            * 1.0
-            / F.count(F.lit(1))
-            + F.lit(0.5)
-        )
-        .cast("long")
+        fixed(F.sum(fixed(F.col("o_totalprice"), 2)) * 1.0 / F.count(F.lit(1)), 0)
         .alias("day_cents")
     )
     w = Window.orderBy("d").rowsBetween(-20, 0)
@@ -1982,11 +1953,9 @@ def timeseries_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistics; Q's 7-term sum is a literal fixed-order expression,
     never an aggregate, so cross-engine bit-parity holds with no
     snapping before the final floor device."""
-    from etl_data_ingestion_spark.functions.numeric import snap
-
     ev = load_table(spark, sf_dir, "events", parallel=False)
     daily = ev.groupBy(F.date_trunc("day", "ts").alias("d")).agg(
-        F.floor(F.sum("value") * 100 + F.lit(0.5)).cast("long").alias("y")
+        fixed(F.sum("value"), 2).alias("y")
     )
     w = Window.orderBy("d")
     led = daily.select(
@@ -2079,8 +2048,6 @@ def events_bot_regularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a fixed-order chain on exact BIGINTs; the top-10 is
     TakeOrderedAndProject on the snapped score with a user_id
     tie-break."""
-    from etl_data_ingestion_spark.functions.numeric import snap
-
     ev = load_table(spark, sf_dir, "events", parallel=False)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     us = F.unix_micros("ts")
@@ -2164,8 +2131,6 @@ def timeseries_rolling_zscore_by_key(spark: SparkSession, sf_dir: str) -> DataFr
     window sums over integer cents, so the |z|>2 flag is a
     deterministic fixed-order comparison. Zero-variance windows are
     excluded in both engines before the division."""
-    from etl_data_ingestion_spark.functions.numeric import snap
-
     li = load_table(spark, sf_dir, "lineitem", parallel=False)
     weekly = li.groupBy(
         "l_suppkey",
@@ -2174,10 +2139,7 @@ def timeseries_rolling_zscore_by_key(spark: SparkSession, sf_dir: str) -> DataFr
         ),
     ).agg(
         F.sum(
-            F.floor(
-                F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
-                + F.lit(0.5)
-            ).cast("long")
+            fixed(F.col("l_extendedprice") * (1 - F.col("l_discount")), 2)
         ).alias("cents")
     )
     w = Window.partitionBy("l_suppkey").orderBy("wk").rowsBetween(-7, 0)
@@ -2291,7 +2253,7 @@ def timeseries_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mom.select(
         "lag",
         n.cast("long").alias("n_pairs"),
-        (F.floor(num / den * 1000000 + F.lit(0.5)) / 1000000).alias("ccf"),
+        snap(num / den, 6).alias("ccf"),
     ).orderBy("lag")
 
 
@@ -2398,12 +2360,11 @@ def timeseries_granger_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
     r2b = (s1y * (s22 * s1y - s12 * s2y) + s2y * (s11 * s2y - s12 * s1y)) / (
         (s11 * s22 - s12 * s12) * sy2
     )
-    snap6 = lambda c: F.floor(c * 1000000 + F.lit(0.5)) / 1000000
     return mom.select(
         n.cast("long").alias("n_pairs"),
-        snap6(r2a).alias("r2_ar1"),
-        snap6(r2b).alias("r2_with_views"),
-        snap6(r2b - r2a).alias("delta_r2"),
+        snap(r2a, 6).alias("r2_ar1"),
+        snap(r2b, 6).alias("r2_with_views"),
+        snap(r2b - r2a, 6).alias("delta_r2"),
     )
 
 
@@ -2618,14 +2579,13 @@ def events_anova_weekday(spark: SparkSession, sf_dir: str) -> DataFrame:
         # cross-engine summation-order class)
         (
             F.sum(
-                F.floor(
-                    # promote BEFORE squaring: int64 sg*sg*10000 wraps
-                    # silently (non-ANSI) past sg ~ 3e7 — round-8
-                    # advisor fix, mirrored in the oracle; the SUM is
-                    # DECIMAL(38,0) (oracle: HUGEINT) because the
-                    # snapped terms exceed int64 at the same point
-                    F.col("sg") * 1.0 * F.col("sg") * 10000 / F.col("ng")
-                    + F.lit(0.5)
+                # promote BEFORE squaring: int64 sg*sg*10000 wraps
+                # silently (non-ANSI) past sg ~ 3e7 — round-8 advisor
+                # fix, mirrored in the oracle; the SUM is DECIMAL(38,0)
+                # (oracle: HUGEINT) because the snapped terms exceed
+                # int64 at the same point
+                fixed(
+                    F.col("sg") * 1.0 * F.col("sg") * 10000 / F.col("ng"), 0
                 ).cast("decimal(38,0)")
             )
             / 10000.0
@@ -2637,12 +2597,9 @@ def events_anova_weekday(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tot.select(
         k.cast("long").alias("n_groups"),
         n.alias("n_days"),
-        (F.floor(ssb * 10000 + F.lit(0.5)) / 10000).alias("ss_between"),
-        (F.floor(ssw * 10000 + F.lit(0.5)) / 10000).alias("ss_within"),
-        (
-            F.floor((ssb / (k - 1)) / (ssw / (n - k)) * 1000000 + F.lit(0.5))
-            / 1000000
-        ).alias("f_stat"),
+        snap(ssb, 4).alias("ss_between"),
+        snap(ssw, 4).alias("ss_within"),
+        snap((ssb / (k - 1)) / (ssw / (n - k)), 6).alias("f_stat"),
     )
 
 
@@ -2715,26 +2672,15 @@ def timeseries_periodogram_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     expanded = idx.select("x", "t", periods.alias("p"))
     ang = two_pi * F.col("t") / F.col("p")
     acc = expanded.groupBy("p").agg(
-        F.sum(
-            F.floor(F.col("x") * F.cos(ang) * 1000000 + F.lit(0.5)).cast(
-                "long"
-            )
-        ).alias("a"),
-        F.sum(
-            F.floor(F.col("x") * F.sin(ang) * 1000000 + F.lit(0.5)).cast(
-                "long"
-            )
-        ).alias("b"),
+        F.sum(fixed(F.col("x") * F.cos(ang), 6)).alias("a"),
+        F.sum(fixed(F.col("x") * F.sin(ang), 6)).alias("b"),
         F.count(F.lit(1)).alias("n"),
     )
     af, bf = F.col("a") / 1000000.0, F.col("b") / 1000000.0
     return acc.select(
         F.col("p").alias("period_days"),
         F.col("n").cast("long").alias("n_days"),
-        (
-            F.floor((af * af + bf * bf) / F.col("n") * 10000 + F.lit(0.5))
-            / 10000
-        ).alias("power_per_day"),
+        snap((af * af + bf * bf) / F.col("n"), 4).alias("power_per_day"),
     ).orderBy("period_days")
 
 
@@ -2860,33 +2806,23 @@ def timeseries_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("m") * F.col("q") - F.col("s") * F.col("s") > 0)
     ).select(
         "m",
-        F.floor(
+        fixed(
             (F.col("mx") - F.col("mn"))
-            / F.sqrt(F.col("m") * F.col("q") - F.col("s") * F.col("s"))
-            * 1000000
-            + F.lit(0.5)
+            / F.sqrt(F.col("m") * F.col("q") - F.col("s") * F.col("s")),
+            6,
         )
-        .cast("long")
         .alias("rs_micro"),
     )
     mean_rs = rs.groupBy("m").agg(
         F.count(F.lit(1)).alias("n_blocks"),
-        F.floor(F.sum("rs_micro") * 1.0 / F.count(F.lit(1)) + F.lit(0.5))
-        .cast("long")
-        .alias("mean_micro"),
+        fixed(F.sum("rs_micro") * 1.0 / F.count(F.lit(1)), 0).alias("mean_micro"),
     )
     pts = cached(mean_rs.select(
         "m",
         "n_blocks",
         "mean_micro",
-        F.floor(F.log(F.col("m") * 1.0) * 1000000 + F.lit(0.5))
-        .cast("long")
-        .alias("u"),
-        F.floor(
-            F.log(F.col("mean_micro") / 1000000.0) * 1000000 + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("v"),
+        fixed(F.log(F.col("m") * 1.0), 6).alias("u"),
+        fixed(F.log(F.col("mean_micro") / 1000000.0), 6).alias("v"),
     ))
     slope = pts.agg(
         (
@@ -2907,9 +2843,7 @@ def timeseries_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("m").alias("block_size"),
             F.col("n_blocks").cast("long").alias("n_blocks"),
             (F.col("mean_micro") / 1000000.0).alias("mean_rs"),
-            (F.floor(F.col("h") * 10000 + F.lit(0.5)) / 10000).alias(
-                "hurst_h"
-            ),
+            snap(F.col("h"), 4).alias("hurst_h"),
         )
         .orderBy("block_size")
     )
@@ -3039,7 +2973,7 @@ def timeseries_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     share one window sort; the test is a single-row scalar chain."""
     ev = load_table(spark, sf_dir, "events", parallel=False)
     daily = ev.groupBy(F.to_date("ts").alias("d")).agg(
-        F.floor(F.sum("value") * 100 + 0.5).cast("long").alias("y")
+        fixed(F.sum("value"), 2).alias("y")
     )
     w = Window.orderBy("d")
     seq = daily.select(
@@ -3069,17 +3003,11 @@ def timeseries_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     vr = v5 / v1
     return agg.select(
         n.cast("long").alias("n_diffs"),
-        (F.floor(vr * 1000000 + F.lit(0.5)) / 1000000).alias(
-            "variance_ratio"
-        ),
-        (
-            F.floor(
-                (vr - 1.0)
-                / F.sqrt(2.0 * (2 * 5 - 1) * (5 - 1) / (3.0 * 5 * n))
-                * 1000000
-                + F.lit(0.5)
-            )
-            / 1000000
+        snap(vr, 6).alias("variance_ratio"),
+        snap(
+            (vr - 1.0)
+            / F.sqrt(2.0 * (2 * 5 - 1) * (5 - 1) / (3.0 * 5 * n)),
+            6,
         ).alias("z_score"),
     )
 
@@ -3123,7 +3051,7 @@ def timeseries_wow_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the weeks table serves LAG and both trailing frames."""
     ev = load_table(spark, sf_dir, "events", parallel=False)
     weekly = ev.groupBy(F.date_trunc("week", "ts").alias("wk")).agg(
-        F.floor(F.sum("value") * 100 + 0.5).cast("long").alias("rev")
+        fixed(F.sum("value"), 2).alias("rev")
     )
     w = Window.orderBy("wk")
     wf = w.rowsBetween(-3, 0)
@@ -3144,13 +3072,8 @@ def timeseries_wow_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     return seq.select(
         F.date_format("wk", "yyyy-MM-dd").alias("week_start"),
         F.col("rev").alias("revenue_cents"),
-        (F.floor(growth * 1000000 + F.lit(0.5)) / 1000000).alias(
-            "wow_growth"
-        ),
-        (
-            F.floor(F.col("s4") * 1.0 / F.col("c4") * 10000 + F.lit(0.5))
-            / 10000
-        ).alias("trailing4_mean"),
+        snap(growth, 6).alias("wow_growth"),
+        snap(F.col("s4") * 1.0 / F.col("c4"), 4).alias("trailing4_mean"),
     ).orderBy("week_start")
 
 
@@ -3242,24 +3165,14 @@ def timeseries_spectral_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     expanded = idx.select("x", "t", periods.alias("p"))
     ang = two_pi * F.col("t") / F.col("p")
     acc = expanded.groupBy("p").agg(
-        F.sum(
-            F.floor(F.col("x") * F.cos(ang) * 1000000 + F.lit(0.5)).cast(
-                "long"
-            )
-        ).alias("a"),
-        F.sum(
-            F.floor(F.col("x") * F.sin(ang) * 1000000 + F.lit(0.5)).cast(
-                "long"
-            )
-        ).alias("b"),
+        F.sum(fixed(F.col("x") * F.cos(ang), 6)).alias("a"),
+        F.sum(fixed(F.col("x") * F.sin(ang), 6)).alias("b"),
         F.count(F.lit(1)).alias("n"),
     )
     af, bf = F.col("a") / 1000000.0, F.col("b") / 1000000.0
     pw = acc.select(
         "p",
-        F.floor((af * af + bf * bf) / F.col("n") * 1000000 + F.lit(0.5))
-        .cast("long")
-        .alias("p6"),
+        fixed((af * af + bf * bf) / F.col("n"), 6).alias("p6"),
     )
     w_all = Window.partitionBy(F.lit(1))
     pw2 = pw.select(
@@ -3277,13 +3190,9 @@ def timeseries_spectral_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ent.select(
         F.col("k").cast("long").alias("n_periods"),
         F.col("s6").cast("long").alias("total_power6"),
-        (
-            F.floor(
-                -(F.col("e9") / 1000000000.0) / F.log(F.col("k") * 1.0)
-                * 1000000
-                + F.lit(0.5)
-            )
-            / 1000000
+        snap(
+            -(F.col("e9") / 1000000000.0) / F.log(F.col("k") * 1.0),
+            6,
         ).alias("spectral_entropy"),
     )
 
@@ -3351,7 +3260,7 @@ def window_hampel_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines)."""
     ev = load_table(spark, sf_dir, "events", parallel=False)
     daily = ev.groupBy(F.to_date("ts").alias("d")).agg(
-        F.floor(F.sum("value") * 100 + F.lit(0.5)).cast("long").alias("rev")
+        fixed(F.sum("value"), 2).alias("rev")
     )
     wf = Window.orderBy("d").rowsBetween(-3, 3)
     fr = daily.select(
@@ -3449,7 +3358,7 @@ def timeseries_var_expected_shortfall(
     mean is a filtered 1-row reduction against the broadcast cut."""
     ev = load_table(spark, sf_dir, "events", parallel=False)
     daily = ev.groupBy(F.to_date("ts").alias("d")).agg(
-        F.floor(F.sum("value") * 100 + F.lit(0.5)).cast("long").alias("y")
+        fixed(F.sum("value"), 2).alias("y")
     )
     w = Window.orderBy("d")
     dd = daily.select(
@@ -3477,12 +3386,7 @@ def timeseries_var_expected_shortfall(
         F.coalesce(F.col("n").cast("long"), F.lit(0)).alias("n_diffs"),
         F.col("var95").cast("long").alias("var95_cents"),
         F.col("n_tail").cast("long").alias("n_tail"),
-        (
-            F.floor(
-                F.col("s_tail") * 1.0 / F.col("n_tail") * 100 + F.lit(0.5)
-            )
-            / 100
-        ).alias("es95_cents"),
+        snap(F.col("s_tail") * 1.0 / F.col("n_tail"), 2).alias("es95_cents"),
     )
 
 
@@ -3554,25 +3458,28 @@ def timeseries_ewma_crossover(spark: SparkSession, sf_dir: str) -> DataFrame:
     precedent."""
     ev = load_table(spark, sf_dir, "events", parallel=False)
     daily = ev.groupBy(F.to_date("ts").alias("d")).agg(
-        F.floor(F.sum("value") * 100 + F.lit(0.5)).cast("long").alias("y")
+        fixed(F.sum("value"), 2).alias("y")
     )
     idx = daily.select(
         "d", "y", F.row_number().over(Window.orderBy("d")).cast("long").alias("k")
     )
     a = idx.select(F.col("d").alias("da"), F.col("k").alias("ka"))
     b = idx.select(F.col("y").alias("yb"), F.col("k").alias("kb"))
-    snap4 = lambda c: F.floor(c / 100 * 10000 + F.lit(0.5)) / 10000
     ew = (
         a.join(b, F.col("kb") <= F.col("ka"))
         .groupBy("ka", "da")
         .agg(
-            snap4(
+            snap(
                 F.sum(F.col("yb") * F.pow(F.lit(0.5), F.col("ka") - F.col("kb")))
                 / F.sum(F.pow(F.lit(0.5), F.col("ka") - F.col("kb")))
+                / 100,
+                4,
             ).alias("fast"),
-            snap4(
+            snap(
                 F.sum(F.col("yb") * F.pow(F.lit(0.9), F.col("ka") - F.col("kb")))
                 / F.sum(F.pow(F.lit(0.9), F.col("ka") - F.col("kb")))
+                / 100,
+                4,
             ).alias("slow"),
         )
     )
@@ -3672,7 +3579,7 @@ def timeseries_permutation_entropy(
     same family as the sessionize operator's)."""
     ev = load_table(spark, sf_dir, "events", parallel=False)
     daily = ev.groupBy(F.to_date("ts").alias("d")).agg(
-        F.floor(F.sum("value") * 100 + F.lit(0.5)).cast("long").alias("y")
+        fixed(F.sum("value"), 2).alias("y")
     )
     w = Window.orderBy("d")
     tri = daily.select(
@@ -3703,15 +3610,8 @@ def timeseries_permutation_entropy(
     return cnt.agg(
         F.max("n").cast("long").alias("n_triples"),
         F.count(F.lit(1)).cast("long").alias("n_patterns"),
-        (F.floor(-F.sum(pterm) * 1000000 + F.lit(0.5)) / 1000000).alias(
-            "entropy_nats"
-        ),
-        (
-            F.floor(
-                -F.sum(pterm) / F.log(F.lit(6.0)) * 1000000 + F.lit(0.5)
-            )
-            / 1000000
-        ).alias("entropy_normalized"),
+        snap(-F.sum(pterm), 6).alias("entropy_nats"),
+        snap(-F.sum(pterm) / F.log(F.lit(6.0)), 6).alias("entropy_normalized"),
     )
 
 
@@ -3779,7 +3679,7 @@ def timeseries_sample_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds the pair join to neighbor buckets (documented cutover)."""
     ev = load_table(spark, sf_dir, "events", parallel=False)
     daily = cached(ev.groupBy(F.to_date("ts").alias("d")).agg(
-        F.floor(F.sum("value") * 100 + F.lit(0.5)).cast("long").alias("y")
+        fixed(F.sum("value"), 2).alias("y")
     ))
     y, cnt = F.col("y"), F.count(F.lit(1))
     var_ = daily.agg(
@@ -3825,8 +3725,7 @@ def timeseries_sample_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(a_c, F.lit(0)).alias("a_matches"),
         F.when(
             (a_c > 0) & (b_c > 0),
-            F.floor(-F.log(a_c * 1.0 / b_c) * 1000000 + F.lit(0.5))
-            / 1000000,
+            snap(-F.log(a_c * 1.0 / b_c), 6),
         ).alias("sampen"),
     )
 
@@ -3942,13 +3841,7 @@ def timeseries_engle_granger_coint(
         "d",
         "n",
         "beta",
-        F.floor(
-            (F.col("y") - F.col("alpha") - F.col("beta") * F.col("x"))
-            * 1000000
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("e6"),
+        fixed(F.col("y") - F.col("alpha") - F.col("beta") * F.col("x"), 6).alias("e6"),
     )
     adf = resid.select(
         "n",
@@ -3979,11 +3872,9 @@ def timeseries_engle_granger_coint(
     )
     return s.select(
         F.coalesce(F.col("n").cast("long"), F.lit(0)).alias("n_days"),
-        (F.floor(F.col("beta") * 1000000 + F.lit(0.5)) / 1000000).alias(
-            "beta"
-        ),
-        (F.floor(rho * 1000000 + F.lit(0.5)) / 1000000).alias("rho"),
-        (F.floor(adf_t * 10000 + F.lit(0.5)) / 10000).alias("adf_t"),
+        snap(F.col("beta"), 6).alias("beta"),
+        snap(rho, 6).alias("rho"),
+        snap(adf_t, 4).alias("adf_t"),
     )
 
 
@@ -4053,7 +3944,7 @@ def timeseries_kpss_stationarity(
     the multiplicands, not the sums); eta is one snapped division."""
     ev = load_table(spark, sf_dir, "events", parallel=False)
     daily = ev.groupBy(F.to_date("ts").alias("d")).agg(
-        F.floor(F.sum("value") * 100 + F.lit(0.5)).cast("long").alias("y")
+        fixed(F.sum("value"), 2).alias("y")
     )
     tot = daily.agg(
         F.count(F.lit(1)).alias("n"), F.sum("y").cast("long").alias("sy")
@@ -4102,7 +3993,7 @@ def timeseries_kpss_stationarity(
     )
     return m.select(
         n.cast("long").alias("n_days"),
-        (F.floor(eta * 1000000 + F.lit(0.5)) / 1000000).alias("kpss_eta"),
+        snap(eta, 6).alias("kpss_eta"),
     )
 
 
@@ -4155,7 +4046,7 @@ def timeseries_turning_points_test(
     chain."""
     ev = load_table(spark, sf_dir, "events", parallel=False)
     daily = ev.groupBy(F.to_date("ts").alias("d")).agg(
-        F.floor(F.sum("value") * 100 + F.lit(0.5)).cast("long").alias("y")
+        fixed(F.sum("value"), 2).alias("y")
     )
     w = Window.orderBy("d")
     mid = daily.select(
@@ -4179,8 +4070,8 @@ def timeseries_turning_points_test(
     return t.select(
         n.cast("long").alias("n_days"),
         turns.alias("n_turning_points"),
-        (F.floor(exp_ * 10000 + F.lit(0.5)) / 10000).alias("expected"),
-        (F.floor(z * 10000 + F.lit(0.5)) / 10000).alias("z_score"),
+        snap(exp_, 4).alias("expected"),
+        snap(z, 4).alias("z_score"),
     )
 
 
@@ -4250,7 +4141,7 @@ def timeseries_peak_prominence(
     peaks."""
     ev = load_table(spark, sf_dir, "events", parallel=False)
     daily = ev.groupBy(F.to_date("ts").alias("d")).agg(
-        F.floor(F.sum("value") * 100 + F.lit(0.5)).cast("long").alias("y")
+        fixed(F.sum("value"), 2).alias("y")
     )
     w = Window.orderBy("d")
     idx = cached(daily.select(
@@ -4332,12 +4223,8 @@ def timeseries_peak_prominence(
     return (
         saddles.select(
             F.date_format("d", "yyyy-MM-dd").alias("day"),
-            (
-                F.floor(F.col("y") / 100.0 * 100 + F.lit(0.5)) / 100
-            ).alias("height_dollars"),
-            (F.floor(prom / 100.0 * 100 + F.lit(0.5)) / 100).alias(
-                "prominence_dollars"
-            ),
+            snap(F.col("y") / 100.0, 2).alias("height_dollars"),
+            snap(prom / 100.0, 2).alias("prominence_dollars"),
         )
         .orderBy(F.desc("prominence_dollars"), "day")
         .limit(5)

@@ -11,7 +11,9 @@ after it, timed, with what it pinned released afterwards.
 Parity rules (SURVEY.md §7.4):
 - alias every computed column identically in Spark and SQL;
 - round floating aggregates to a fixed scale in BOTH engines so
-  summation-order epsilon differences can't flip the value hash;
+  summation-order epsilon differences can't flip the value hash
+  (``functions.numeric.snap`` / ``fixed``: FLOOR(x*10^d + 0.5), never
+  ROUND);
 - avoid nondeterministic functions; break ordering ties explicitly.
 """
 

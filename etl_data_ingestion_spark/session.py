@@ -13,7 +13,11 @@ for scale-readiness:
   the reference's strptime('%Y-%m-%d') (reference main.py:400-410).
 - `escapedStringLiterals=false`: SQL string literals unescape `\'` and
   `\\`, so the coercion's SQL text (`ingest/coerce.py`) parses to the
-  same literals on every session.
+  same literals on every session. Spark 4 deprecates the key and logs
+  a warning each time it is set, but the pin stays: on pyspark 4.1.2
+  no spelling of a literal holding `'` (backslash-escaped, `r"..."`,
+  doubled `''`, or `concat(r'...', chr(39), ...)`) parses to the same
+  string under both settings.
 - ANSI off: the ingestion path relies on cast-failure -> NULL plus
   explicit validity flags (SURVEY.md §7.4); we never want a mid-job
   exception from a malformed source value at scale.

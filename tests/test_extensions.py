@@ -112,32 +112,3 @@ def test_simhash_banded_recovers_perturbed_copies(spark, sf_dir):
     row = q("dedup_simhash_banded", spark, sf_dir).collect()[0]
     assert row.planted_total > 0
     assert row.recall_floor_ok
-
-
-def test_star_components_match_label_propagation(spark):
-    """large-star/small-star (O(log d) rounds) must produce the same
-    (node, component-min) labeling as convergence-checked label
-    propagation on a diameter-20 chain and a random graph — the scale
-    path and the simple path agree."""
-    import random
-
-    from etl_data_ingestion_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
-
-    def labels(fn, edges):
-        df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-        return {(r.node, r.label) for r in fn(df).collect()}
-
-    chain = [(i, i + 1) for i in range(100, 120)]
-    assert labels(connected_components_star, chain) == labels(
-        connected_components, chain
-    )
-
-    rnd = random.Random(7)
-    raw = [(rnd.randrange(0, 300), rnd.randrange(0, 300)) for _ in range(200)]
-    graph = [(a, b) for a, b in raw if a != b]
-    assert labels(connected_components_star, graph) == labels(
-        connected_components, graph
-    )

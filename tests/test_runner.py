@@ -637,56 +637,22 @@ def test_run_sql_interface(spark, sf_dir):
     assert sum(r.n_customers for r in rows) == spark.table("customer").count()
 
 
-def test_engine_config_env_overrides(monkeypatch):
-    """§2.6: the .env surface as a typed, validated config object."""
-    from etl_data_ingestion_spark.config import EngineConfig
-
-    cfg = EngineConfig()
-    assert cfg.batch_size == 500  # reference default (.env:25)
-
-    monkeypatch.setenv("SPARKETL_BATCH_SIZE", "250")
-    cfg2 = EngineConfig()
-    assert cfg2.batch_size == 250
-
-    monkeypatch.setenv("SPARKETL_BATCH_SIZE", "0")
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        EngineConfig()
-
-
-def test_bigquery_sink_fallback_when_connector_absent(spark, monkeypatch):
-    """Backlog #4: warehouse_format='bigquery' without the connector
-    jar must fall back to the parquet warehouse cleanly — sink
-    selection is probe-driven, never a classpath stacktrace."""
-    from etl_data_ingestion_spark.config import EngineConfig
-    from etl_data_ingestion_spark.ingest.sinks import (
-        BigQueryWarehouseSink,
-        ParquetWarehouseSink,
-        make_warehouse_sink,
-    )
+def test_bigquery_sink_reports_missing_connector(spark):
+    """Backlog #4: without the spark-bigquery jar the BigQuery sink's
+    pre-write check raises naming the connector, never a classpath
+    stacktrace mid-write."""
+    from etl_data_ingestion_spark.ingest.sinks import BigQueryWarehouseSink
 
     # this container has no spark-bigquery jar
     assert BigQueryWarehouseSink.is_available(spark) is False
 
-    monkeypatch.setenv("SPARKETL_WAREHOUSE_FORMAT", "bigquery")
-    monkeypatch.setenv("SPARKETL_BIGQUERY_TABLE", "dataset.ctb")
-    cfg = EngineConfig()
-    sink = make_warehouse_sink(spark, cfg)
-    assert isinstance(sink, ParquetWarehouseSink)
-
     # direct construction still validates, and its pre-write check
     # reports the missing connector explicitly
+    with pytest.raises(ValueError, match="non-empty"):
+        BigQueryWarehouseSink("")
     bq = BigQueryWarehouseSink("dataset.ctb")
-    import pytest as _pytest
-
-    with _pytest.raises(RuntimeError, match="connector"):
+    with pytest.raises(RuntimeError, match="connector"):
         bq.check_target(spark)
-
-    # config validation: bigquery format requires a table
-    monkeypatch.setenv("SPARKETL_BIGQUERY_TABLE", "")
-    with _pytest.raises(ValueError, match="bigquery_table"):
-        EngineConfig()
 
 
 def test_smtp_notifier_sends_through_injected_transport():
