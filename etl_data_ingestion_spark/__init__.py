@@ -11,13 +11,16 @@ LLM-training-data operators (dedup, similarity search, text analysis,
 multimodal columns) designed for 100 TB scale.
 
 Layout:
-  config.py    typed runtime configuration (replaces the .env surface)
+  config.py    SCRATCH, the checkout's scratch root (default warehouse,
+               scratch tables, bucketed fact copies)
   session.py   SparkSession builder (AQE, UTC, Arrow on)
   schema.py    CTB schema constants (alias map + types)
-  ingest/      normalize -> validate -> coerce -> (valid, quarantine)
+  ingest/      normalize -> validate -> coerce -> (valid, quarantine);
+               lifecycle.py is the landing zone; runner.py (batch) and
+               stream_runner.py drain it into sinks.py
   operators/   relational analytics: joins, aggs, windows, set ops, top-k
   functions/   scalar/vector/text function library (JVM-side first)
-  sources/     connectors: delimited landing zone, mailbox-style source
+  sources/     connectors: mailbox extract and data source, live Gmail
   plans/       query registry (name -> builder + DuckDB oracle SQL)
   streaming/   structured-streaming windows, watermarks, dedup
 """

@@ -33,7 +33,7 @@ def main(argv: list[str]) -> int:
         if name not in registry.QUERIES:
             print(f"unknown query {name!r}; see `list`", file=sys.stderr)
             return 2
-        registry.QUERIES[name](spark, sf_dir).show(50, truncate=False)
+        registry.run(spark, name, sf_dir, lambda df: df.show(50, truncate=False))
     else:
         from etl_data_ingestion_spark.sql import run_sql
 

@@ -10,6 +10,7 @@ import pytest
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from etl_data_ingestion_spark import catalog
 from etl_data_ingestion_spark.session import get_spark
 
 
@@ -34,13 +35,25 @@ def empty_dir():
     return path
 
 
+@pytest.fixture(autouse=True)
+def release_pins():
+    """Each test body runs inside ``catalog.query_scope()``: what the
+    builders it calls directly pin through ``catalog.cached`` and
+    ``catalog.checkpointed`` is released when the test ends, not
+    whenever Spark's context cleaner collects it. Each released
+    checkpoint logs one ``RDD.unpersist`` WARN."""
+    with catalog.query_scope():
+        yield
+
+
 @pytest.fixture
 def no_persisted(spark):
-    """The shared context with nothing persisted. Tests that call
-    builders directly, outside ``registry.run``, leave their persists
-    and checkpoints behind, and Spark's context cleaner unpersists
-    those whenever the JVM collects them; a test that counts persisted
-    RDDs starts from none, so that no such drop lands in its count."""
+    """The shared context with nothing persisted. Builders called
+    outside a test body (module- and session-scoped fixtures) leave
+    their persists and checkpoints behind, and Spark's context cleaner
+    unpersists those whenever the JVM collects them; a test that counts
+    persisted RDDs starts from none, so that no such drop lands in its
+    count."""
     spark.catalog.clearCache()
     for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
         rdd.unpersist(False)

@@ -16,8 +16,6 @@ from etl_data_ingestion_spark.plans import registry
 
 registry.load_all()
 
-SF = "/root/testdata/sf0.001"
-
 
 def _reference_bpe(word_freq: dict[str, int], k: int):
     seqs = {w: list(w) for w in word_freq}
@@ -45,14 +43,14 @@ def _reference_bpe(word_freq: dict[str, int], k: int):
     return merges
 
 
-def test_bpe_merges_match_reference_trainer(spark):
+def test_bpe_merges_match_reference_trainer(spark, sf_dir):
     rows = (
-        registry.QUERIES["text_bpe_train_merges"](spark, SF)
+        registry.QUERIES["text_bpe_train_merges"](spark, sf_dir)
         .orderBy("round")
         .collect()
     )
     assert len(rows) == 8
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     wf = {
         r.word: r.cnt
         for r in docs.select(
@@ -73,8 +71,8 @@ def test_bpe_merges_match_reference_trainer(spark):
     assert got == ref
 
 
-def test_spectrogram_bins_exact(spark):
-    rows = registry.QUERIES["multimodal_spectrogram_real"](spark, SF).collect()
+def test_spectrogram_bins_exact(spark, sf_dir):
+    rows = registry.QUERIES["multimodal_spectrogram_real"](spark, sf_dir).collect()
     assert rows
     for r in rows:
         d = r.doc_id
@@ -84,14 +82,14 @@ def test_spectrogram_bins_exact(spark):
         assert abs(r.frame_power - amp * amp * 32) < 1e-3
 
 
-def test_mean_pool_matches_numpy(spark):
+def test_mean_pool_matches_numpy(spark, sf_dir):
     pooled = {
         r.doc_id: r
         for r in registry.QUERIES["embedding_chunk_mean_pool"](
-            spark, SF
+            spark, sf_dir
         ).collect()
     }
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet").collect()
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").collect()
     groups = {}
     for r in emb:
         groups.setdefault(r.vec_id // 4, []).append(r.embedding)

@@ -363,7 +363,7 @@ def test_run_releases_only_what_it_cached(spark, sf_dir):
     registry.run(spark, "cached_probe", sf_dir, collect, build)
     assert nation(spark, sf_dir).storageLevel == StorageLevel.NONE
 
-    held = catalog.cached(nation(spark, sf_dir))  # outside a scope
+    held = catalog.cached(nation(spark, sf_dir))  # outside the run's scope
     held.count()
     try:
         stored = _stored_rdds(spark)
@@ -372,3 +372,9 @@ def test_run_releases_only_what_it_cached(spark, sf_dir):
         assert _stored_rdds(spark) == stored
     finally:
         held.unpersist()
+
+
+def test_each_test_body_runs_in_a_query_scope():
+    """conftest's autouse release_pins: builders a test calls directly
+    record their pins, which are released when the test ends."""
+    assert catalog._PINNED.get() is not None

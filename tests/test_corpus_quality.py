@@ -4,15 +4,11 @@ URL canonicalization collapse rules."""
 
 from __future__ import annotations
 
-import datetime as dt
-
 import pyspark.sql.functions as F
 
 from etl_data_ingestion_spark.plans import registry
 
 registry.load_all()
-
-SF = "/root/testdata/sf0.001"
 
 
 def test_repeated_lines_drops_cross_doc_boilerplate(spark):
@@ -48,15 +44,15 @@ def test_repeated_lines_drops_cross_doc_boilerplate(spark):
     assert (4, "rare one two") in kept_lines
 
 
-def test_zipf_slope_fixture(spark):
-    row = registry.QUERIES["text_zipf_slope"](spark, SF).collect()[0]
+def test_zipf_slope_fixture(spark, sf_dir):
+    row = registry.QUERIES["text_zipf_slope"](spark, sf_dir).collect()[0]
     assert row.n_terms <= 30 and row.n_terms > 0
     assert row.zipf_slope < 0  # frequency decreases with rank
     assert 0.0 <= row.fit_r2 <= 1.0
 
 
-def test_psi_drift_fixture_and_flag_semantics(spark):
-    rows = registry.QUERIES["quality_psi_drift"](spark, SF).collect()
+def test_psi_drift_fixture_and_flag_semantics(spark, sf_dir):
+    rows = registry.QUERIES["quality_psi_drift"](spark, sf_dir).collect()
     assert rows, "no event types"
     for r in rows:
         # PSI is nonnegative by construction (sum of (p-q)ln(p/q))
@@ -64,8 +60,8 @@ def test_psi_drift_fixture_and_flag_semantics(spark):
         assert r.drift_flag == (r.psi > 0.2)
 
 
-def test_url_canonical_collapses_variants(spark):
-    df = registry.QUERIES["dedup_url_canonical"](spark, SF)
+def test_url_canonical_collapses_variants(spark, sf_dir):
+    df = registry.QUERIES["dedup_url_canonical"](spark, sf_dir)
     rows = df.collect()
     assert rows, "no duplicate groups found"
     for r in rows:

@@ -4,15 +4,11 @@ oracle can't express (the driver records rows-only checks for these)."""
 
 from __future__ import annotations
 
-import pytest
-
 from etl_data_ingestion_spark.plans import registry
 
+from tests.helpers import q
+
 registry.load_all()
-
-
-def q(name, spark, sf_dir):
-    return registry.QUERIES[name](spark, sf_dir)
 
 
 def test_minhash_finds_all_injected_near_dups(spark, sf_dir):

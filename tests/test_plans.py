@@ -17,35 +17,32 @@ import pytest
 from etl_data_ingestion_spark.functions.numeric import fixed, snap, units
 from etl_data_ingestion_spark.plans import registry
 
+from tests.helpers import executed_plan
+
 registry.load_all()
 
-SF = "/root/testdata/sf0.001"
 
-
-def plan_of(spark, name: str) -> str:
-    df = registry.QUERIES[name](spark, SF)
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_q6_predicates_reach_scan(spark):
-    plan = plan_of(spark, "tpch_q6_forecast_revenue")
+def test_q6_predicates_reach_scan(spark, sf_dir):
+    plan = executed_plan(spark, "tpch_q6_forecast_revenue", sf_dir)
     assert "PushedFilters:" in plan
     # the revenue filter's range predicates must be in the scan node
     assert "l_discount" in plan.split("PushedFilters:")[1][:400]
 
 
-def test_topk_is_take_ordered(spark):
-    assert "TakeOrderedAndProject" in plan_of(spark, "topk_orders_by_price")
+def test_topk_is_take_ordered(spark, sf_dir):
+    assert "TakeOrderedAndProject" in executed_plan(
+        spark, "topk_orders_by_price", sf_dir
+    )
 
 
-def test_dims_broadcast(spark):
-    plan = plan_of(spark, "join_broadcast_dims")
+def test_dims_broadcast(spark, sf_dir):
+    plan = executed_plan(spark, "join_broadcast_dims", sf_dir)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
 
-def test_upsert_uses_window_group_limit(spark):
-    plan = plan_of(spark, "warehouse_upsert_latest")
+def test_upsert_uses_window_group_limit(spark, sf_dir):
+    plan = executed_plan(spark, "warehouse_upsert_latest", sf_dir)
     assert "WindowGroupLimit" in plan
 
 
@@ -60,8 +57,8 @@ def test_upsert_uses_window_group_limit(spark):
         "warehouse_upsert_latest",
     ],
 )
-def test_no_cartesian_product(spark, name):
-    assert "CartesianProduct" not in plan_of(spark, name)
+def test_no_cartesian_product(spark, name, sf_dir):
+    assert "CartesianProduct" not in executed_plan(spark, name, sf_dir)
 
 
 PKG = os.path.join(

@@ -6,6 +6,7 @@ detection, and the registered frame-sampling query's shape."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from etl_data_ingestion_spark.operators.video import (
     lzw_decode,
@@ -16,8 +17,6 @@ from etl_data_ingestion_spark.operators.video import (
 from etl_data_ingestion_spark.plans import registry
 
 registry.load_all()
-
-SF = "/root/testdata/sf0.001"
 
 
 def test_lzw_roundtrip_paths():
@@ -63,8 +62,8 @@ def test_gif_rejects_bad_magic():
         parse_gif(b"NOTGIF" + b"\x00" * 20)
 
 
-def test_video_frames_query_shape(spark):
-    df = registry.QUERIES["multimodal_video_frames_real"](spark, SF)
+def test_video_frames_query_shape(spark, sf_dir):
+    df = registry.QUERIES["multimodal_video_frames_real"](spark, sf_dir)
     rows = df.collect()
     by_doc = {}
     for r in rows:
@@ -83,3 +82,9 @@ def test_video_frames_query_shape(spark):
             p = f.width * f.height
             expect = sum((a + i) % 256 for i in range(p))
             assert f.pixel_sum == expect
+
+
+@settings(max_examples=60, deadline=None)
+@given(st.binary(min_size=0, max_size=4000))
+def test_lzw_roundtrip_arbitrary_bytes(data):
+    assert lzw_decode(lzw_encode(data)) == data

@@ -37,6 +37,13 @@ KEYS = (
 )
 
 
+def formatted(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -52,12 +59,9 @@ def main() -> int:
         if only and name not in only:
             continue
         try:
-            df = registry.QUERIES[name](spark, sf_dir)
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain("formatted")
+            plan = registry.run(spark, name, sf_dir, formatted).result
             print(f"==== {name}")
-            for line in buf.getvalue().splitlines():
+            for line in plan.splitlines():
                 s = line.strip()
                 if any(k in s for k in KEYS):
                     print(f"  {s[:150]}")

@@ -22,6 +22,12 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
+def formatted(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
 def main() -> int:
     if len(sys.argv) < 3 or sys.argv[1] not in ("before", "after"):
         print(
@@ -44,10 +50,7 @@ def main() -> int:
     out_dir = os.path.join(REPO, "plans", rnd)
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
-        df = registry.QUERIES[name](spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = registry.run(spark, name, sf_dir, formatted).result
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(f"-- {name} ({suffix}) sf_dir={sf_dir}\n")

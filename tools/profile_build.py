@@ -37,35 +37,35 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from etl_data_ingestion_spark.catalog import query_scope
 from etl_data_ingestion_spark.plans import registry
 from etl_data_ingestion_spark.session import get_spark
 
 SF = os.environ.get("AB_SF", "/root/testdata/sf0.1")
 
 
-def profile_one(spark, name, fn):
-    # warmup call end-to-end (build + run) so parquet footers,
-    # load_table caches and codegen are hot; each call's scope releases
+def profile_one(spark, name):
+    # warmup run end-to-end (build + run) so parquet footers,
+    # load_table caches and codegen are hot; each registry.run releases
     # what the builder persisted or checkpointed
     try:
-        with query_scope():
-            registry.NOOP(fn(spark, SF))
+        registry.run(spark, name, SF, registry.NOOP)
     except Exception as e:  # noqa: BLE001
         return {"name": name, "err": f"{type(e).__name__}: {e}"[:200]}
-    with query_scope():
+
+    def optimize_and_execute(df):
         t0 = time.perf_counter()
-        df = fn(spark, SF)
-        t1 = time.perf_counter()
         df._jdf.queryExecution().optimizedPlan()
-        t2 = time.perf_counter()
+        t1 = time.perf_counter()
         registry.NOOP(df)
-        t3 = time.perf_counter()
+        return t1 - t0, time.perf_counter() - t1
+
+    run = registry.run(spark, name, SF, optimize_and_execute)
+    optimize, execute = run.result
     out = {
         "name": name,
-        "build": round(t1 - t0, 4),
-        "optimize": round(t2 - t1, 4),
-        "execute": round(t3 - t2, 4),
+        "build": round(run.seconds - optimize - execute, 4),
+        "optimize": round(optimize, 4),
+        "execute": round(execute, 4),
     }
     out["eager"] = out["build"] > 0.5 and out["execute"] < 0.05
     return out
@@ -86,7 +86,7 @@ def main() -> None:
         out_path = f"tools/out/build_profile_{i}of{n}.json"
     rows = []
     for name in names:
-        rows.append(profile_one(spark, name, registry.QUERIES[name]))
+        rows.append(profile_one(spark, name))
     os.makedirs("tools/out", exist_ok=True)
     with open(out_path, "w") as f:
         json.dump({"sf": SF, "rows": rows}, f, indent=1)
