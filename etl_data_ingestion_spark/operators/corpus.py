@@ -804,7 +804,7 @@ def _bpe_ctes(k: int) -> tuple[str, list[str], str]:
     every sequence by 3-pass literal space-guarded replace — the same
     string algebra the Spark side runs, so counts match exactly.
 
-    Equivalence contract (tests/test_corpus_ops.py): the replace
+    Equivalence contract (tests/test_property_round5.py): the replace
     algebra equals textbook left-to-right greedy merging for words
     with no same-symbol run of length >= 3 (hypothesis-verified);
     on longer runs it arranges the same NUMBER of merges at different

@@ -1485,7 +1485,7 @@ def ml_simplified_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the standard recall-for-cost trade (documented in README's
 # deliberate-exception list). The swap threshold is captured at
 # plan-build time so tests can force the IVF path on fixture data
-# (tests/test_similarity.py) and measure its recall against the exact
+# (tests/test_round13.py) and measure its recall against the exact
 # path.
 
 GEMM_EXACT_MAX_ROWS = 32768

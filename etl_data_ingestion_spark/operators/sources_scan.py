@@ -449,7 +449,7 @@ def scan_partitioned_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a scan+filter, not a literal), so Catalyst can only prune the
     partitioned fact via a DPP subquery (PartitionFilters:
     [dynamicpruningexpression(...)], asserted by
-    tests/test_sources_scan.py::test_dpp_fires_on_partitioned_join).
+    tests/test_round4_ops.py::test_dpp_fires_on_partitioned_join).
 
     At 100 TB this is THE mechanism that makes star-schema joins on a
     date/tenant-partitioned fact cheap: the dim filter runs first and

@@ -882,7 +882,7 @@ def agg_jarque_bera_normality(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition); the moment/JB chain is a single-row fixed-order
     scalar sequence. skew's m2^1.5 is written SQRT(m2) cubed so both
     engines run the same IEEE ops (no pow). Accuracy boundary
-    (tests/test_stats_tests.py pins the model): the raw-power
+    (tests/test_property_wave24.py pins the model): the raw-power
     expansion's absolute error is a few ulps of the RAW moments, so
     it degrades vs the true central moments only when sd << mean —
     far from this column's regime (sd ~ mean); cross-engine parity

@@ -1,27 +1,19 @@
-"""The registered queries of operators/corpus.py and the corpus-shaping
-additions beside it (embedding quantize, z-score outliers, HLL,
-funnels): exact Python recomputation for the per-document and
-per-vector ops, planted-structure checks for the cross-document span
-detector, sequence packing and sharding, BPE application, and the
-repeated-lines plan pins, plus hypothesis properties of the BPE merge
-algebra and FFD packing."""
+"""Tests for the corpus-shaping batch (corpus.py + the embedding
+quantize and z-score additions): exact Python recomputation for the
+per-document/per-vector ops, planted-structure checks for the
+cross-document span detector, invariant checks for z-score."""
 
 from __future__ import annotations
 
-import datetime as dt
 import math
-import os
 import re
-from collections import Counter
 
 import numpy as np
-import pyspark.sql.functions as F
-from hypothesis import given, settings, strategies as st
 
 from etl_data_ingestion_spark.catalog import drop_plan_cache
-from etl_data_ingestion_spark.plans import parity, registry
+from etl_data_ingestion_spark.plans import registry
 
-from tests.helpers import distinct_filescans, executed_plan, q
+from tests.helpers import q
 
 registry.load_all()
 
@@ -355,275 +347,3 @@ def test_hash_sample_stable_under_append(spark, tmp_path):
     for ev_id in before - after:
         h = hashlib.md5(str(ev_id).encode()).hexdigest()
         assert h > max_h_after
-
-
-def test_pack_sequences_sharded_bounds(spark, sf_dir):
-    rows = registry.QUERIES["pipeline_pack_sequences_sharded"](
-        spark, sf_dir
-    ).collect()
-    assert len(rows) == 8  # doc_id % 8 shards, all populated
-    for r in rows:
-        # every shard honors the remainder bound: at most one short
-        # (tail) window, and window accounting reconciles exactly
-        assert r["remainder_bound_ok"]
-        assert r["short_windows"] <= 1
-        full = r["n_windows"] - r["short_windows"]
-        assert r["shard_tokens"] >= full * 2048
-        assert r["shard_tokens"] <= r["n_windows"] * 2048
-
-
-def test_shard_assignment_manifest(spark, sf_dir):
-    rows = registry.QUERIES["pipeline_shard_assignment"](spark, sf_dir).collect()
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    assert sum(r["n_docs"] for r in rows) == docs.count()
-    assert {r["shard"] for r in rows} == set(range(16))
-    total_chars = docs.agg(F.sum("n_chars")).collect()[0][0]
-    assert sum(r["total_chars"] for r in rows) == total_chars
-
-
-def test_length_bucket_bounds(spark, sf_dir):
-    rows = registry.QUERIES["pipeline_length_bucket_batching"](
-        spark, sf_dir
-    ).collect()
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    assert sum(r["n_docs"] for r in rows) == docs.count()
-    for r in rows:
-        # pow2 buckets and the >= 0.5 padding-efficiency bound
-        assert r["bucket"] & (r["bucket"] - 1) == 0
-        assert r["pad_efficiency"] > 0.5
-        assert r["real_tokens"] <= r["padded_tokens"]
-        assert r["n_batches"] >= 1
-
-
-def test_ffd_bounds_and_exact_packing_small_case(spark, sf_dir):
-    rows = registry.QUERIES["pipeline_pack_binpack_ffd"](spark, sf_dir).collect()
-    assert rows
-    for r in rows:
-        assert r.bins_within_bounds and r.all_bins_fit
-        assert r.lower_bound_bins == math.ceil(r.total_tokens / 2048)
-
-    # FFD reference on a crafted case: sizes where first-fit-decreasing
-    # is known optimal
-    def ffd(sizes, cap):
-        bins = []
-        for s in sorted(sizes, reverse=True):
-            for i, b in enumerate(bins):
-                if b + s <= cap:
-                    bins[i] = b + s
-                    break
-            else:
-                bins.append(s)
-        return bins
-
-    assert len(ffd([5, 5, 4, 3, 2, 1], 10)) == 2
-
-
-def test_bpe_apply_consistent_with_training(spark, sf_dir):
-    # every word's BPE token count is between 1 and its char count,
-    # and doc totals respect n_bpe_tokens <= n_chars, >= n_words
-    rows = registry.QUERIES["text_bpe_apply_tokenize"](spark, sf_dir).collect()
-    assert rows
-    for r in rows:
-        assert r.n_words <= r.n_bpe_tokens <= r.n_chars
-
-
-def test_bpe_apply_oov_char_fallback(spark, sf_dir):
-    """Words pruned by the min-frequency floor tokenize as bare
-    characters: n_bpe_tokens >= n_chars is impossible, and for any
-    doc, n_bpe_tokens must be between n_words (every word >= 1
-    token) and n_chars (char fallback upper bound)."""
-    rows = registry.QUERIES["text_bpe_apply_tokenize"](
-        spark, sf_dir
-    ).collect()
-    assert rows
-    for r in rows:
-        assert r.n_words <= r.n_bpe_tokens <= r.n_chars
-
-
-def test_pack_sequences_boundary_parity(spark, tmp_path):
-    """pipeline_pack_sequences engine-vs-oracle on a crafted corpus
-    that straddles window boundaries: docs of exactly 2048 tokens,
-    docs spanning several windows, a 1-token doc landing at an exact
-    boundary, and an empty doc. Guards the r5-r7 HUGEINT/seq_id fix
-    with values the fixture corpus never produces."""
-    import duckdb
-
-    sizes = [2048, 1, 4096, 0, 2047, 3, 2048, 10]
-    rows = [
-        (i, " ".join(["tok"] * n), "en", "synthetic", 3 * n)
-        for i, n in enumerate(sizes)
-    ]
-    df = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "documents.parquet")
-    )
-    from etl_data_ingestion_spark.catalog import drop_plan_cache
-
-    drop_plan_cache(spark)
-    df = registry.QUERIES["pipeline_pack_sequences"](spark, str(tmp_path))
-    got = df.orderBy("seq_id").collect()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{tmp_path}/documents.parquet/*.parquet')"
-    )
-    want = con.execute(registry.ORACLES["pipeline_pack_sequences"]).fetchdf()
-    assert parity.compare(df.toPandas(), want) is None
-    # structural invariants: interior windows exactly full, only the
-    # tail may be short; the last emitted window ends at the corpus
-    # token total. (Windows no doc STARTS in — the interior of a
-    # multi-window doc — are absent from the output by design, so
-    # sum(window_tokens) over emitted rows is NOT the token total.)
-    for g in got[:-1]:
-        assert g.window_tokens == 2048 and g.fill_ratio == 1.0
-    last = got[-1]
-    assert last.seq_id * 2048 + last.window_tokens == sum(sizes)
-    assert all(g.docs_starting >= 1 for g in got)
-
-
-def test_repeated_lines_scans_documents_once(spark, sf_dir):
-    """The tot-table re-scan was folded into the single doc-keyed
-    aggregation; the persisted explode is the only text consumer, so
-    only one DISTINCT scan subtree may exist."""
-    plan = executed_plan(spark, "dedup_repeated_lines_corpus", sf_dir)
-    assert len(distinct_filescans(plan)) == 1, plan[:2000]
-    # clean up the persist the operator leaves behind
-    spark.catalog.clearCache()
-
-
-def test_repeated_lines_boilerplate_join_broadcasts(spark, sf_dir):
-    """The r11 rewrite replaced the line-keyed corpus shuffle join
-    with a broadcast of the (>=3-doc) boilerplate set: the executed
-    plan must carry a BroadcastHashJoin and NO SortMergeJoin — a
-    regression to the shuffle join re-adds a corpus Exchange."""
-    plan = executed_plan(spark, "dedup_repeated_lines_corpus", sf_dir)
-    assert "BroadcastHashJoin" in plan, plan[:2000]
-    assert "SortMergeJoin" not in plan, plan[:2000]
-    spark.catalog.clearCache()
-
-
-def test_repeated_lines_hof_is_fanned_out(spark, sf_dir):
-    """The r13 keep: the interpreted line-building HOF runs over the
-    fanned-out scan (parallel=True — the r11 KEEP family), so the
-    plan carries the round-robin repartition the scan-parallelism
-    floor inserts; and the two-consumer persist stays (the
-    no-persist variant measured slower at sf1)."""
-    plan = executed_plan(spark, "dedup_repeated_lines_corpus", sf_dir)
-    assert "ROUND_ROBIN" in plan or "RoundRobin" in plan, plan[:3000]
-    assert "InMemoryTableScan" in plan, plan[:3000]
-    spark.catalog.clearCache()
-
-
-def _no_triple_run(w: str) -> bool:
-    return all(not (a == b == c) for a, b, c in zip(w, w[1:], w[2:]))
-
-
-@settings(max_examples=30, deadline=None)
-@given(
-    st.lists(
-        st.text(alphabet="abcde", min_size=1, max_size=8).filter(
-            _no_triple_run
-        ),
-        min_size=1,
-        max_size=30,
-    )
-)
-def test_bpe_replace_algebra_equals_reference(words):
-    """The 3-pass replace merge equals the reference left-to-right
-    merge at EVERY round of a full BPE training run, for vocabularies
-    whose words have no same-symbol run of length >= 3 — the
-    documented precondition (see _bpe_ctes): hypothesis found that
-    'eeeee' merging (e,e) arranges the two merges as [ee, e, ee]
-    under replace vs greedy's [ee, ee, e]. Cross-engine parity is
-    unconditional either way (both engines execute the identical
-    replace algebra); this property pins the stronger textbook-
-    equivalence claim on its actual domain, and the fixture
-    vocabulary satisfies the precondition (asserted below)."""
-    freq = Counter(words)
-    seqs = {w: list(w) for w in freq}
-    for _round in range(6):
-        pc = Counter()
-        for w, s in seqs.items():
-            for i in range(len(s) - 1):
-                pc[(s[i], s[i + 1])] += freq[w]
-        if not pc:
-            break
-        (a, b), _ = sorted(pc.items(), key=lambda kv: (-kv[1], kv[0]))[0]
-        for w, s in seqs.items():
-            # reference merge
-            ref, i = [], 0
-            while i < len(s):
-                if i + 1 < len(s) and s[i] == a and s[i + 1] == b:
-                    ref.append(a + b)
-                    i += 2
-                else:
-                    ref.append(s[i])
-                    i += 1
-            # replace algebra (what both engines execute)
-            txt = " " + " ".join(s) + " "
-            search, repl = f" {a} {b} ", f" {a}{b} "
-            for _ in range(3):
-                txt = txt.replace(search, repl)
-            assert txt.split() == ref, (w, s, (a, b))
-            seqs[w] = ref
-
-
-@settings(max_examples=50, deadline=None)
-@given(
-    st.lists(st.integers(min_value=1, max_value=2048), min_size=1, max_size=200)
-)
-def test_ffd_bounds_hold(sizes):
-    import math
-
-    cap = 2048
-    bins: list[int] = []
-    for s in sorted(sizes, reverse=True):
-        for i, b in enumerate(bins):
-            if b + s <= cap:
-                bins[i] = b + s
-                break
-        else:
-            bins.append(s)
-    lower = math.ceil(sum(sizes) / cap)
-    assert all(b <= cap for b in bins)
-    assert lower <= len(bins) <= math.ceil(11 / 9 * lower) + 1
-
-
-def test_known_divergence_example_is_understood():
-    """Document the boundary: odd same-symbol runs arrange merges
-    differently under replace vs greedy (same merge COUNT, different
-    positions). If this test ever FAILS, the algebra changed and
-    the _bpe_ctes contract note must be revisited."""
-    s = ["e"] * 5
-    txt = " " + " ".join(s) + " "
-    for _ in range(3):
-        txt = txt.replace(" e e ", " ee ")
-    assert txt.split() == ["ee", "e", "ee"]  # replace arrangement
-    # reference greedy arrangement differs:
-    ref, i = [], 0
-    while i < len(s):
-        if i + 1 < len(s) and s[i] == s[i + 1] == "e":
-            ref.append("ee")
-            i += 2
-        else:
-            ref.append(s[i])
-            i += 1
-    assert ref == ["ee", "ee", "e"]
-
-
-def test_fixture_vocabulary_satisfies_precondition(sf_dir):
-    import duckdb
-
-    docs = os.path.join(os.path.dirname(sf_dir), "sf0.01", "documents.parquet")
-    words = [
-        r[0]
-        for r in duckdb.sql(
-            "SELECT DISTINCT w FROM "
-            f"read_parquet('{docs}'), "
-            "UNNEST(regexp_split_to_array(trim(text), '\\s+')) t(w)"
-        ).fetchall()
-    ]
-    assert words
-    assert all(_no_triple_run(w) for w in words)

@@ -1,26 +1,12 @@
-"""The registered queries of operators/mlops.py: classification and
-ranking metrics, calibration, regression and survival fits,
-experiment statistics and dataset-construction audits, each against
-a brute-force recomputation of the fixture, plus the item-item CF
-plan-shape pins."""
+"""ML-evaluation / dataset-construction operator tests: AUC against
+a brute-force rank computation, calibration bin algebra, ES-sampling
+weight bias, association-rule identities, and grouped-fold leakage."""
 
 from __future__ import annotations
 
-import math
-import os
-import re
-from collections import Counter, defaultdict
+from collections import defaultdict
 
-import duckdb
-import numpy as np
-import pyspark.sql.functions as F
-import pytest
-
-from etl_data_ingestion_spark.catalog import load_table
-from etl_data_ingestion_spark.functions.numeric import snap
 from etl_data_ingestion_spark.plans import registry
-
-from tests.helpers import executed_plan, q
 
 registry.load_all()
 
@@ -218,1159 +204,3 @@ def test_max_drawdown_nonnegative(spark, sf_dir):
     assert row.max_drawdown >= 0
     assert row.n_days > 0
     assert row.trough_day is not None
-
-
-def test_cohen_kappa_matches_recompute(spark, sf_dir):
-    import re
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").collect()
-    yy = yn = ny = nn = 0
-    for r in docs:
-        a = r.n_chars >= 300
-        b = len(re.split(r"\s+", r.text.strip())) >= 50
-        yy += a and b
-        yn += a and not b
-        ny += (not a) and b
-        nn += (not a) and (not b)
-    n = yy + yn + ny + nn
-    po = (yy + nn) / n
-    pe = ((yy + yn) * (yy + ny) + (ny + nn) * (yn + nn)) / (n * n)
-    row = q("ml_cohen_kappa", spark, sf_dir).collect()[0]
-    assert (row.both_pos, row.a_only, row.b_only, row.both_neg) == (
-        yy,
-        yn,
-        ny,
-        nn,
-    )
-    assert abs(row.kappa - (po - pe) / (1 - pe)) < 5e-6
-
-
-def test_ztest_matches_recompute(spark, sf_dir):
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").collect()
-    n_a = sum(1 for r in ev if r.user_id % 2 == 0)
-    x_a = sum(
-        1 for r in ev if r.user_id % 2 == 0 and r.event_type == "purchase"
-    )
-    n_b = len(ev) - n_a
-    x_b = sum(
-        1 for r in ev if r.user_id % 2 == 1 and r.event_type == "purchase"
-    )
-    p = (x_a + x_b) / (n_a + n_b)
-    z = (x_a / n_a - x_b / n_b) / math.sqrt(
-        p * (1 - p) * (1 / n_a + 1 / n_b)
-    )
-    row = q("agg_ab_test_ztest", spark, sf_dir).collect()[0]
-    assert (row.n_a, row.x_a, row.n_b, row.x_b) == (n_a, x_a, n_b, x_b)
-    assert abs(row.z_score - z) < 5e-4
-
-
-def test_gain_lift_anchors(spark, sf_dir):
-    rows = sorted(
-        q("ml_gain_lift_deciles", spark, sf_dir).collect(),
-        key=lambda r: r.decile,
-    )
-    assert [r.decile for r in rows] == list(range(10))
-    # final decile: gain reaches 1, lift reaches 1 (all rows included)
-    assert rows[-1].cum_gain == 1.0 and rows[-1].cum_lift == 1.0
-    gains = [r.cum_gain for r in rows]
-    assert all(a <= b for a, b in zip(gains, gains[1:]))
-
-
-def test_brier_decomposition_identity(spark, sf_dir):
-    """brier == reliability - resolution + uncertainty + within_bin_gap
-    by construction; REL/RES are non-negative sums of squares; UNC is
-    ybar(1-ybar) <= 1/4; the gap (WithinVar(p) - 2*WithinCov(p,y)) is
-    sign-indefinite but bounded by the bin width scale."""
-    r = q("ml_brier_decomposition", spark, sf_dir).collect()[0]
-    assert r.reliability >= 0 and r.resolution >= 0
-    assert 0 <= r.uncertainty <= 0.25 + 1e-9
-    assert abs(r.within_bin_gap) < 0.05  # within-bin terms ~ (bin width)^2
-    lhs = r.brier
-    rhs = r.reliability - r.resolution + r.uncertainty + r.within_bin_gap
-    assert abs(lhs - rhs) < 5e-6
-
-
-def _write_events(spark, tmp_path, rows):
-    """Write a minimal events.parquet (full fixture schema) into a
-    temp sf-dir; rows = list of (value, event_type)."""
-    df = spark.createDataFrame(
-        [
-            (i, None, i % 97, et, float(v), None)
-            for i, (v, et) in enumerate(rows)
-        ],
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string",
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(str(tmp_path), "events.parquet")
-    )
-    return str(tmp_path)
-
-
-def _sequential_pav(bins):
-    """True sequential pool-adjacent-violators over present bins."""
-    order = sorted(bins)
-    pools = [[bins[b][0], bins[b][1], [b]] for b in order]
-    i = 0
-    while i < len(pools) - 1:
-        n1, s1, _ = pools[i]
-        n2, s2, _ = pools[i + 1]
-        if s1 * n2 > s2 * n1:
-            pools[i] = [n1 + n2, s1 + s2, pools[i][2] + pools[i + 1][2]]
-            del pools[i + 1]
-            i = max(i - 1, 0)
-        else:
-            i += 1
-    iso = {}
-    for n, s, members in pools:
-        for b in members:
-            iso[b] = s / n
-    return iso
-
-
-def _v_for_bin(b, frac=0.5):
-    """value whose sigmoid score falls at the given fraction of bin b."""
-    ph = (b + frac) / 20.0
-    return 250.0 - 50.0 * math.log(1.0 / ph - 1.0)
-
-
-def test_isotonic_gappy_bins(spark, tmp_path):
-    rows = []
-    # bin 3: 10 events, 9 purchases (rate 0.9 — a violator upstream)
-    rows += [(_v_for_bin(3), "purchase")] * 9 + [(_v_for_bin(3), "view")]
-    # bins 4..6 empty is impossible for 4 (adjacent) — leave 4-6 EMPTY
-    # bin 7: 10 events, 1 purchase (rate 0.1 — violation across gap)
-    rows += [(_v_for_bin(7), "purchase")] + [(_v_for_bin(7), "view")] * 9
-    # bin 9: 8 events, 6 purchases (rate 0.75)
-    rows += [(_v_for_bin(9), "purchase")] * 6 + [(_v_for_bin(9), "view")] * 2
-    # bin 12: 5 events, 5 purchases (rate 1.0)
-    rows += [(_v_for_bin(12), "purchase")] * 5
-    sf_dir = _write_events(spark, tmp_path, rows)
-
-    bins: dict = defaultdict(lambda: [0, 0])
-    for v, et in rows:
-        ph = 1.0 / (1.0 + math.exp(-(v - 250.0) / 50.0))
-        b = min(int(ph * 20), 19)
-        bins[b][0] += 1
-        bins[b][1] += 1 if et == "purchase" else 0
-    assert 5 not in bins and 6 not in bins  # the interior gap is real
-    iso = _sequential_pav(bins)
-
-    got = {
-        r.bin: r.isotonic_rate
-        for r in registry.QUERIES["ml_isotonic_calibration_bins"](
-            spark, sf_dir
-        ).collect()
-    }
-    assert set(got) == set(bins)
-    for b in bins:
-        assert got[b] == math.floor(iso[b] * 1e6 + 0.5) / 1e6, (
-            b,
-            got[b],
-            iso[b],
-        )
-    fit = [got[b] for b in sorted(got)]
-    assert fit == sorted(fit)
-
-
-def test_isotonic_gappy_oracle_matches_pav(spark, tmp_path):
-    """The ORACLE must also produce true PAV on the gappy fixture
-    (both engines previously shared the bin-1 defect, so parity alone
-    proved nothing)."""
-    rows = (
-        [(_v_for_bin(3), "purchase")] * 9
-        + [(_v_for_bin(3), "view")]
-        + [(_v_for_bin(7), "purchase")]
-        + [(_v_for_bin(7), "view")] * 9
-        + [(_v_for_bin(9), "purchase")] * 6
-        + [(_v_for_bin(9), "view")] * 2
-        + [(_v_for_bin(12), "purchase")] * 5
-    )
-    sf_dir = _write_events(spark, tmp_path, rows)
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM read_parquet("
-        f"'{os.path.join(sf_dir, 'events.parquet')}/*.parquet')"
-    )
-    out = {
-        r[0]: r[3]
-        for r in con.execute(
-            registry.ORACLES["ml_isotonic_calibration_bins"]
-        ).fetchall()
-    }
-    bins: dict = defaultdict(lambda: [0, 0])
-    for v, et in rows:
-        ph = 1.0 / (1.0 + math.exp(-(v - 250.0) / 50.0))
-        b = min(int(ph * 20), 19)
-        bins[b][0] += 1
-        bins[b][1] += 1 if et == "purchase" else 0
-    iso = _sequential_pav(bins)
-    for b in bins:
-        assert out[b] == math.floor(iso[b] * 1e6 + 0.5) / 1e6
-
-
-def test_item_cf_packed_key_guard_raises(spark, tmp_path):
-    # a partkey at 2^31 would bleed into pa's bits under the 64-bit
-    # pack; the raise_error guard must fail the job loudly
-    li = spark.createDataFrame(
-        [
-            (1, 1, 2147483648, 1),
-            (1, 2, 7, 1),
-            (2, 1, 2147483648, 1),
-            (2, 2, 7, 1),
-        ],
-        "l_orderkey long, l_linenumber long, l_partkey long, l_suppkey long",
-    )
-    li.coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "lineitem.parquet")
-    )
-    with pytest.raises(Exception, match="l_partkey outside"):
-        registry.QUERIES["ml_item_item_cf"](spark, str(tmp_path)).collect()
-
-
-def test_item_cf_guard_passes_in_range(spark, sf_dir):
-    # fixture partkeys are in range: the guarded plan still answers
-    rows = registry.QUERIES["ml_item_item_cf"](spark, sf_dir).collect()
-    assert len(rows) > 0
-
-
-def test_mcnemar_matches_python(spark, sf_dir):
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .selectExpr("event_type", "value", "hour(ts) AS h")
-        .collect()
-    )
-    b = c = 0
-    for r in rows:
-        y = r.event_type == "purchase"
-        pa = r.value >= 50
-        pb = r.h >= 12
-        if pa == y and pb != y:
-            b += 1
-        if pa != y and pb == y:
-            c += 1
-    got = q("ml_mcnemar_test", spark, sf_dir).collect()[0]
-    assert got.a_only_ok == b and got.b_only_ok == c
-    expect = (abs(b - c) - 1.0) ** 2 / (b + c)
-    assert abs(got.mcnemar_chi2 - expect) < 2e-6
-
-
-def test_log_loss_matches_python(spark, sf_dir):
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .selectExpr("event_type", "value")
-        .where("value IS NOT NULL AND value >= 0")
-        .collect()
-    )
-    total = 0
-    for r in rows:
-        p = r.value / (r.value + 50.0)
-        y = r.event_type == "purchase"
-        loss = -math.log(max(p, 1e-6)) if y else -math.log(max(1 - p, 1e-6))
-        total += math.floor(loss * 1e6 + 0.5)
-    got = q("ml_log_loss", spark, sf_dir).collect()[0]
-    assert got.n_rows == len(rows)
-    assert abs(got.mean_log_loss - total / len(rows) / 1e6) < 2e-6
-
-
-def test_kendall_tau_matches_python(spark, sf_dir):
-    rows = (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
-        .selectExpr("o_orderdate AS d", "o_totalprice AS p")
-        .collect()
-    )
-    daily = {}
-    for r in rows:
-        n, cents = daily.get(r.d, (0, 0))
-        daily[r.d] = (n + 1, cents + math.floor(r.p * 100 + 0.5))
-    vals = [daily[k] for k in sorted(daily)]
-    n = len(vals)
-    conc = disc = tx = ty = 0
-    for i in range(n):
-        for j in range(i + 1, n):
-            dx = vals[i][0] - vals[j][0]
-            dy = vals[i][1] - vals[j][1]
-            if dx * dy > 0:
-                conc += 1
-            elif dx * dy < 0:
-                disc += 1
-            if dx == 0:
-                tx += 1
-            if dy == 0:
-                ty += 1
-    n0 = n * (n - 1) // 2
-    got = q("ml_kendall_tau_daily", spark, sf_dir).collect()[0]
-    assert (got.concordant, got.discordant) == (conc, disc)
-    assert (got.ties_x, got.ties_y) == (tx, ty)
-    expect = (conc - disc) / math.sqrt((n0 - tx) * (n0 - ty))
-    assert abs(got.kendall_tau_b - expect) < 2e-6
-
-
-def test_ece_matches_python(spark, sf_dir):
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .selectExpr("event_type", "value")
-        .collect()
-    )
-    bins: dict = {}
-    for r in rows:
-        p = 1.0 / (1.0 + math.exp(-(r.value - 250.0) / 50.0))
-        pm = math.floor(p * 1e6 + 0.5)
-        b = min(pm // 100000, 9)
-        n, sp, sy = bins.get(b, (0, 0, 0))
-        bins[b] = (n + 1, sp + pm, sy + (r.event_type == "purchase"))
-    nn = sum(n for n, _, _ in bins.values())
-    ece_nano = 0
-    max_gap = 0
-    for n, sp, sy in bins.values():
-        gap = abs(sp / n / 1e6 - sy / n)
-        ece_nano += math.floor((n / nn) * gap * 1e9 + 0.5)
-        max_gap = max(max_gap, math.floor(gap * 1e6 + 0.5))
-    got = q("ml_expected_calibration_error", spark, sf_dir).collect()[0]
-    assert got.n_bins_used == len(bins)
-    assert abs(got.ece - ece_nano / 1e9) < 2e-6
-    assert abs(got.max_bin_gap - max_gap / 1e6) < 2e-6
-
-
-def test_average_precision_matches_python(spark, sf_dir):
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .selectExpr("event_id", "event_type", "value")
-        .collect()
-    )
-    ranked = sorted(rows, key=lambda r: (-r.value, r.event_id))
-    cum = 0
-    total_nano = 0
-    n_pos = 0
-    for i, r in enumerate(ranked, start=1):
-        if r.event_type == "purchase":
-            cum += 1
-            n_pos += 1
-            total_nano += math.floor((cum / i) * 1e9 + 0.5)
-    got = q("ml_average_precision", spark, sf_dir).collect()[0]
-    assert got.n_rows == len(rows) and got.n_pos == n_pos
-    assert abs(got.average_precision - total_nano / n_pos / 1e9) < 2e-6
-
-
-def test_logreg_probe_matches_numpy(spark, sf_dir):
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .selectExpr("event_type", "value", "hour(ts) AS h")
-        .where("value IS NOT NULL")
-        .collect()
-    )
-    X = np.array(
-        [[1.0, math.floor(r.value * 100 + 0.5), r.h] for r in rows]
-    )
-    z = np.array([1.0 if r.event_type == "purchase" else -1.0 for r in rows])
-    beta = 2.0 * np.linalg.solve(X.T @ X, X.T @ z)
-    got = q("ml_logreg_newton_probe", spark, sf_dir).collect()[0]
-    assert got.n_rows == len(rows)
-    assert abs(got.beta_intercept - beta[0]) < 1e-5
-    assert abs(got.beta_value_cents - beta[1]) < 1e-8
-    assert abs(got.beta_hour - beta[2]) < 1e-5
-    # the probe must be an ascent direction of the log-likelihood at
-    # beta=0: beta . X'z > 0 (X'z is the score direction there)
-    score = X.T @ z
-    assert float(np.array([got.beta_intercept, got.beta_value_cents, got.beta_hour]) @ score) > 0
-
-
-def test_item_item_cf_matches_bruteforce(spark, sf_dir):
-    rows = (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        .selectExpr("l_orderkey", "l_partkey")
-        .collect()
-    )
-    baskets: dict = defaultdict(set)
-    for r in rows:
-        baskets[r.l_orderkey].add(r.l_partkey)
-    item: Counter = Counter()
-    pair: Counter = Counter()
-    for parts in baskets.values():
-        for pk in parts:
-            item[pk] += 1
-        sp = sorted(parts)
-        for i in range(len(sp)):
-            for j in range(i + 1, len(sp)):
-                pair[(sp[i], sp[j])] += 1
-    scored = [
-        (
-            a,
-            b,
-            c,
-            item[a],
-            item[b],
-            math.floor(c / math.sqrt(item[a] * 1.0 * item[b]) * 1e6 + 0.5) / 1e6,
-        )
-        for (a, b), c in pair.items()
-        if c >= 2
-    ]
-    scored.sort(key=lambda t: (-t[5], t[0], t[1]))
-    got = [
-        (r.part_a, r.part_b, r.co_orders, r.n_a, r.n_b, r.cosine)
-        for r in registry.QUERIES["ml_item_item_cf"](spark, sf_dir).collect()
-    ]
-    assert got == scored[:20]
-
-
-def _poly_hash(term: str) -> int:
-    acc = 0
-    for ch in term:
-        acc = (acc * 31 + ord(ch)) % 2147483647
-    return acc % 512
-
-
-def test_feature_hash_collisions_matches_python(spark, sf_dir):
-    rows = spark.read.parquet(f"{sf_dir}/documents.parquet").collect()
-    vocab = set()
-    for r in rows:
-        vocab.update(r.text.strip().split())
-    loads: Counter = Counter(_poly_hash(t) for t in vocab)
-    n, used = len(vocab), len(loads)
-    [row] = registry.QUERIES["ml_feature_hash_collisions"](
-        spark, sf_dir
-    ).collect()
-    assert (row.n_terms, row.buckets_used, row.max_load) == (
-        n, used, max(loads.values()),
-    )
-    assert row.collision_rate == math.floor((n - used) / n * 1e6 + 0.5) / 1e6
-    expected = 512.0 * (1.0 - (511.0 / 512.0) ** n)
-    assert row.expected_buckets_used == math.floor(expected * 1e4 + 0.5) / 1e4
-
-
-def test_isotonic_matches_sequential_pav(spark, sf_dir):
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .selectExpr("value", "event_type")
-        .collect()
-    )
-    bins: dict = defaultdict(lambda: [0, 0])
-    for r in rows:
-        ph = 1.0 / (1.0 + math.exp(-(r.value - 250.0) / 50.0))
-        b = min(int(ph * 20), 19)
-        bins[b][0] += 1
-        bins[b][1] += 1 if r.event_type == "purchase" else 0
-    order = sorted(bins)
-    # the actual sequential PAV: merge adjacent violating pools
-    pools = [[bins[b][0], bins[b][1], [b]] for b in order]
-    i = 0
-    while i < len(pools) - 1:
-        n1, s1, _ = pools[i]
-        n2, s2, _ = pools[i + 1]
-        if s1 * n2 > s2 * n1:  # rate decreases: merge (exact rational cmp)
-            pools[i] = [n1 + n2, s1 + s2, pools[i][2] + pools[i + 1][2]]
-            del pools[i + 1]
-            i = max(i - 1, 0)
-        else:
-            i += 1
-    iso = {}
-    for n, s, members in pools:
-        for b in members:
-            iso[b] = s / n
-    got = {
-        r.bin: (r.n_events, r.raw_rate, r.isotonic_rate)
-        for r in registry.QUERIES["ml_isotonic_calibration_bins"](
-            spark, sf_dir
-        ).collect()
-    }
-    assert set(got) == set(order)
-    for b in order:
-        n, s = bins[b]
-        assert got[b][0] == n
-        assert got[b][1] == math.floor(s / n * 1e6 + 0.5) / 1e6
-        assert got[b][2] == math.floor(iso[b] * 1e6 + 0.5) / 1e6
-    # the fit must be monotone nondecreasing over bins
-    fit = [got[b][2] for b in sorted(got)]
-    assert fit == sorted(fit)
-
-
-def test_mann_whitney_matches_python(spark, sf_dir):
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .selectExpr("value", "event_type")
-        .collect()
-    )
-    byv: dict = defaultdict(lambda: [0, 0])  # value -> [t, t1]
-    for r in rows:
-        if r.event_type == "purchase":
-            byv[r.value][0] += 1
-            byv[r.value][1] += 1
-        elif r.event_type == "view":
-            byv[r.value][0] += 1
-    n1 = sum(t1 for _, t1 in byv.values())
-    n2 = sum(t - t1 for t, t1 in byv.values())
-    cb = 0
-    r1_2x = 0
-    tie3 = 0
-    for v in sorted(byv):
-        t, t1 = byv[v]
-        r1_2x += t1 * (2 * cb + t + 1)
-        tie3 += t * t * t - t
-        cb += t
-    N = n1 + n2
-    var = n1 * 1.0 * n2 / 12.0 * ((N + 1) - tie3 * 1.0 / (N * 1.0 * (N - 1)))
-    z = (r1_2x - n1 * (n1 + 1) - n1 * n2) / (2.0 * math.sqrt(var))
-    [row] = registry.QUERIES["ml_mann_whitney_u"](spark, sf_dir).collect()
-    assert (row.n1, row.n2) == (n1, n2)
-    assert row.u1 == (r1_2x - n1 * (n1 + 1)) / 2.0
-    assert row.z_score == math.floor(z * 1e6 + 0.5) / 1e6
-    # U must sit inside its exact bounds
-    assert 0 <= row.u1 <= n1 * n2
-
-
-def test_price_elasticity_matches_python(spark, sf_dir):
-    price = {
-        r.p_partkey: (r.p_brand, r.p_retailprice)
-        for r in spark.read.parquet(f"{sf_dir}/part.parquet").collect()
-    }
-    mom: dict = defaultdict(lambda: [0, 0, 0, 0, 0])  # n, sx, sy, sxx, sxy
-    for r in (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        .selectExpr("l_partkey", "l_quantity")
-        .collect()
-    ):
-        brand, p = price[r.l_partkey]
-        x = math.floor(math.log(r.l_quantity) * 1e4 + 0.5)
-        y = math.floor(math.log(p) * 1e4 + 0.5)
-        m = mom[brand]
-        m[0] += 1
-        m[1] += x
-        m[2] += y
-        m[3] += x * x
-        m[4] += x * y
-    expect = []
-    for brand in sorted(mom):
-        n, sx, sy, sxx, sxy = mom[brand]
-        slope = (n * 1.0 * sxy - sx * 1.0 * sy) / (
-            n * 1.0 * sxx - sx * 1.0 * sx
-        )
-        expect.append((brand, n, math.floor(slope * 1e4 + 0.5) / 1e4))
-    got = [
-        (r.p_brand, r.n_lines, r.elasticity_slope)
-        for r in registry.QUERIES["ml_price_elasticity_by_brand"](
-            spark, sf_dir
-        ).collect()
-    ]
-    assert got == expect
-    # synthetic quantities are price-independent → slopes hover near 0
-    assert all(abs(s) < 0.5 for _, _, s in got)
-
-
-def _ranked_days(spark, sf_dir):
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .selectExpr(
-            "cast(to_date(ts) as string) AS day",
-            "event_type",
-            "value",
-            "event_id",
-        )
-        .collect()
-    )
-    per_day: dict = defaultdict(list)
-    for r in rows:
-        per_day[r.day].append((-r.value, r.event_id, r.event_type))
-    for d in per_day:
-        per_day[d].sort()
-    return per_day
-
-
-def test_mrr_at_10_matches_python(spark, sf_dir):
-    per_day = _ranked_days(spark, sf_dir)
-    got = {
-        r.day: (r.first_pos_top10, r.reciprocal_rank)
-        for r in registry.QUERIES["ml_mrr_at_10"](spark, sf_dir).collect()
-    }
-    assert set(got) == set(per_day)
-    for d, evs in per_day.items():
-        first = 0
-        for pos, (_, _, et) in enumerate(evs[:10], 1):
-            if et == "purchase":
-                first = pos
-                break
-        rr = round(1.0 / first, 6) if first else 0.0
-        assert got[d] == (first, rr), d
-
-
-def test_recall_at_10_matches_python(spark, sf_dir):
-    per_day = _ranked_days(spark, sf_dir)
-    got = {
-        r.day: (r.n_relevant, r.hits_top10, r.recall_at_10)
-        for r in registry.QUERIES["ml_recall_at_10"](spark, sf_dir).collect()
-    }
-    for d, evs in per_day.items():
-        n_rel = sum(1 for _, _, et in evs if et == "purchase")
-        hits = sum(1 for _, _, et in evs[:10] if et == "purchase")
-        if n_rel == 0:
-            assert d not in got
-            continue
-        assert got[d] == (n_rel, hits, round(hits * 1.0 / n_rel, 6)), d
-
-
-def test_ols_matches_numpy(spark, sf_dir):
-    import numpy as np
-
-    li = (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        .selectExpr("l_orderkey", "l_quantity")
-        .collect()
-    )
-    o = (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
-        .selectExpr("o_orderkey", "o_totalprice")
-        .collect()
-    )
-    per: dict = defaultdict(lambda: [0, 0])
-    for r in li:
-        per[r.l_orderkey][0] += 1
-        per[r.l_orderkey][1] += int(r.l_quantity)
-    X, Y = [], []
-    for r in o:
-        if r.o_orderkey in per:
-            x1, x2 = per[r.o_orderkey]
-            X.append([1.0, x1, x2])
-            Y.append(math.floor(r.o_totalprice * 100 + 0.5))
-    beta, *_ = np.linalg.lstsq(
-        np.array(X), np.array(Y, dtype=float), rcond=None
-    )
-    [row] = registry.QUERIES["ml_ols_normal_equations"](
-        spark, sf_dir
-    ).collect()
-    assert row.n_orders == len(Y)
-    # numpy solves by SVD, ours by exact normal equations — agree to
-    # well inside the snap scale on this well-conditioned design
-    assert abs(row.beta_lines - beta[1]) < 1e-3
-    assert abs(row.beta_qty - beta[2]) < 1e-3
-    assert abs(row.intercept_cents - beta[0]) < 1.0
-    assert 0.0 <= row.r_squared <= 1.0
-
-
-def test_ridge_lambda_zero_is_ols(spark, sf_dir):
-    ols = registry.QUERIES["ml_ols_normal_equations"](spark, sf_dir).collect()[
-        0
-    ]
-    path = {
-        r.lambda_per_obs: r
-        for r in registry.QUERIES["ml_ridge_normal_equations"](
-            spark, sf_dir
-        ).collect()
-    }
-    r0 = path[0.0]
-    assert (r0.beta_lines, r0.beta_qty, r0.intercept_cents) == (
-        ols.beta_lines,
-        ols.beta_qty,
-        ols.intercept_cents,
-    )
-    # shrinkage: |beta| non-increasing along the path
-    b = [path[lam] for lam in sorted(path)]
-    for a, c in zip(b, b[1:]):
-        assert abs(c.beta_lines) <= abs(a.beta_lines) + 1e-9
-        assert abs(c.beta_qty) <= abs(a.beta_qty) + 1e-9
-
-
-def test_roc_points_margins_consistent(spark, sf_dir):
-    """TPR/FPR are exact count ratios: monotone non-increasing in
-    the threshold, and tp <= pos / fp <= neg via the snapped ratios
-    staying in [0, 1]."""
-    rows = registry.QUERIES["ml_roc_curve_points"](spark, sf_dir).collect()
-    assert [r.threshold for r in rows] == [
-        round(0.1 * i, 1) for i in range(1, 10)
-    ]
-    tprs = [r.tpr for r in rows]
-    fprs = [r.fpr for r in rows]
-    assert all(0.0 <= v <= 1.0 for v in tprs + fprs)
-    assert tprs == sorted(tprs, reverse=True)
-    assert fprs == sorted(fprs, reverse=True)
-
-
-def test_decision_stump_is_argmin_over_all_thresholds(spark, sf_dir):
-    """Brute-force every quantity threshold; the operator's split
-    must achieve the global minimum weighted Gini with the
-    smallest-threshold tie-break, and the max-quantity split must
-    be excluded."""
-    out = registry.QUERIES["ml_decision_stump_gini"](spark, sf_dir).collect()[0]
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select(
-            F.col("l_quantity").cast("long").alias("q"),
-            (F.col("l_returnflag") == "R").cast("int").alias("y"),
-        )
-        .collect()
-    )
-    nq, pq = Counter(), Counter()
-    for r in li:
-        nq[r.q] += 1
-        pq[r.q] += r.y
-    qs = sorted(nq)
-    N, P = sum(nq.values()), sum(pq.values())
-    best = None
-    nl = pl = 0
-    for q in qs:
-        nl += nq[q]
-        pl += pq[q]
-        if nl == N:
-            continue  # empty right side: excluded split
-        nr, pr = N - nl, P - pl
-        g = 2.0 * (pl * (nl - pl) / nl + pr * (nr - pr) / nr) / N
-        if best is None or (g, q) < best:
-            best = (g, q)
-    assert out.threshold_qty == best[1]
-    assert abs(out.weighted_gini - snap(best[0], 6, math.floor)) < 1e-9
-    assert out.n_left + out.n_right == N
-    assert out.pos_left + out.pos_right == P
-
-
-def test_fisher_lda_direction_and_separation(spark, sf_dir):
-    """The closed-form w must solve cov_pooled @ w = d exactly, the
-    published direction is unit-norm, and the Mahalanobis value is
-    d . w."""
-    out = registry.QUERIES["ml_fisher_lda_closed_form"](spark, sf_dir).collect()[
-        0
-    ]
-    od = load_table(spark, sf_dir, "orders").collect()
-    li = load_table(spark, sf_dir, "lineitem").collect()
-    lc = Counter(r.l_orderkey for r in li)
-    feats = {0: [], 1: []}
-    for r in od:
-        if r.o_orderkey not in lc:
-            continue
-        y = 1 if r.o_orderpriority in ("1-URGENT", "2-HIGH") else 0
-        f1 = math.floor(r.o_totalprice * 100 + 0.5)
-        feats[y].append((f1, lc[r.o_orderkey]))
-    assert out.n_class0 == len(feats[0])
-    assert out.n_class1 == len(feats[1])
-    n = len(feats[0]) + len(feats[1])
-
-    def moments(fs):
-        n_ = len(fs)
-        s1 = sum(f[0] for f in fs)
-        s2 = sum(f[1] for f in fs)
-        return (
-            n_,
-            s1 / n_,
-            s2 / n_,
-            sum(f[0] * f[0] for f in fs) - s1 * s1 / n_,
-            sum(f[1] * f[1] for f in fs) - s2 * s2 / n_,
-            sum(f[0] * f[1] for f in fs) - s1 * s2 / n_,
-        )
-
-    m0, m1 = moments(feats[0]), moments(feats[1])
-    c11 = (m0[3] + m1[3]) / (n - 2)
-    c22 = (m0[4] + m1[4]) / (n - 2)
-    c12 = (m0[5] + m1[5]) / (n - 2)
-    d1, d2 = m1[1] - m0[1], m1[2] - m0[2]
-    det = c11 * c22 - c12 * c12
-    w1 = (c22 * d1 - c12 * d2) / det
-    w2 = (c11 * d2 - c12 * d1) / det
-    norm = math.hypot(w1, w2)
-    assert abs(out.unit_w1 - w1 / norm) < 1e-4
-    assert abs(out.unit_w2 - w2 / norm) < 1e-4
-    assert abs(out.mahalanobis_sq - (d1 * w1 + d2 * w2)) < 1e-3
-    # unit vector really is unit
-    assert abs(out.unit_w1**2 + out.unit_w2**2 - 1.0) < 1e-4
-
-
-def test_jackknife_ratio_matches_bruteforce(spark, sf_dir):
-    """Every delete-1 replicate in closed form; the centered-integer
-    variance equals the direct sum of squared deviations."""
-    out = registry.QUERIES["ml_jackknife_ratio_variance"](
-        spark, sf_dir
-    ).collect()[0]
-    li = load_table(spark, sf_dir, "lineitem").collect()
-    revs = [
-        math.floor(r.l_extendedprice * (1 - r.l_discount) * 100 + 0.5)
-        for r in li
-    ]
-    qtys = [int(r.l_quantity) for r in li]
-    n, A, B = len(revs), sum(revs), sum(qtys)
-    c = math.floor(A / B * 1e6 + 0.5) / 1e6
-    d9 = [
-        math.floor(((A - a) / (B - b) - c) * 1e9 + 0.5)
-        for a, b in zip(revs, qtys)
-    ]
-    sd, sd2 = sum(d9), sum(v * v for v in d9)
-    se = math.sqrt((n - 1.0) / n * (sd2 * 1.0 - (sd * 1.0 / n) * sd)) / 1e9
-    assert out.n_items == n
-    assert abs(out.theta_ratio - c) < 1e-9
-    assert abs(out.jackknife_se - se) < 1e-6
-    # sanity: the jackknife SE is positive and far below theta
-    assert 0 < out.jackknife_se < out.theta_ratio
-
-
-def test_poisson_deviance_dense_grid(spark, sf_dir):
-    """mu from the fixed 20-day train window; the eval grid must be
-    dense (5 types x eval days) with y=0 terms contributing 2*mu."""
-    rows = registry.QUERIES["ml_poisson_deviance"](spark, sf_dir).collect()
-    ev = load_table(spark, sf_dir, "events").collect()
-    cnt = Counter()
-    eval_days = set()
-    for r in ev:
-        d = r.ts.date()
-        cnt[(r.event_type, d)] += 1
-        if d.day >= 21:
-            eval_days.add(d)
-    types = sorted({t for t, _ in cnt})
-    assert [r.event_type for r in rows] == types
-    for r in rows:
-        mu = (
-            sum(v for (t, d), v in cnt.items()
-                if t == r.event_type and d.day <= 20)
-            / 20.0
-        )
-        assert abs(r.mu_daily - snap(mu, 6, math.floor)) < 1e-9
-        assert r.n_eval_days == len(eval_days)
-        dev = 0
-        for d in eval_days:
-            yv = cnt.get((r.event_type, d), 0)
-            term = (
-                2.0 * (yv * math.log(yv / mu) - (yv - mu))
-                if yv > 0
-                else 2.0 * mu
-            )
-            dev += math.floor(term * 1e9 + 0.5)
-        assert abs(r.poisson_deviance - snap(dev / 1e9, 6, math.floor)) < 1e-9
-
-
-def test_eb_shrinkage_pulls_toward_prior_mean(spark, sf_dir):
-    """The moment-fit prior and the shrinkage identity: every shrunk
-    rate lies strictly between its raw rate and the prior mean (or
-    equals both when they coincide), and small-n brands move more."""
-    rows = registry.QUERIES["ml_empirical_bayes_shrinkage"](
-        spark, sf_dir
-    ).collect()
-    li = load_table(spark, sf_dir, "lineitem").collect()
-    pt = {
-        r.p_partkey: r.p_brand
-        for r in load_table(spark, sf_dir, "part").collect()
-    }
-    n, pos = Counter(), Counter()
-    for r in li:
-        b = pt[r.l_partkey]
-        n[b] += 1
-        pos[b] += 1 if r.l_returnflag == "R" else 0
-    r9 = {b: math.floor(pos[b] / n[b] * 1e9 + 0.5) for b in n}
-    k = len(r9)
-    s1 = sum(r9.values())
-    s2 = sum(v * v for v in r9.values())
-    m = (s1 / k) / 1e9
-    v = (s2 / k - (s1 / k) ** 2) / 1e9 / 1e9
-    ab = m * (1 - m) / v - 1
-    assert ab > 0  # the prior is proper on this fixture
-    for r in rows:
-        raw = pos[r.brand] / n[r.brand]
-        shrunk = (pos[r.brand] + ab * m) / (n[r.brand] + ab)
-        assert abs(r.raw_rate - snap(raw, 6, math.floor)) < 1e-9
-        assert abs(r.shrunk_rate - snap(shrunk, 6, math.floor)) < 1e-9
-        lo, hi = sorted((raw, m))
-        assert lo - 1e-9 <= shrunk <= hi + 1e-9
-
-
-def test_conformal_order_statistic_and_coverage(spark, sf_dir):
-    """The radius is exactly the ceil((n+1)*0.75)-th smallest snapped
-    calibration residual, and coverage counts eval days inside it."""
-    rows = registry.QUERIES["ml_conformal_interval_coverage"](
-        spark, sf_dir
-    ).collect()
-    ev = load_table(spark, sf_dir, "events").collect()
-    cnt = Counter()
-    days = set()
-    for r in ev:
-        d = r.ts.date()
-        days.add(d)
-        cnt[(r.event_type, d)] += 1
-    types = sorted({t for t, _ in cnt})
-    assert [r.event_type for r in rows] == types
-    for r in rows:
-        mu = (
-            sum(
-                cnt.get((r.event_type, d), 0)
-                for d in days
-                if d.day <= 15
-            )
-            / 15.0
-        )
-        assert abs(r.mu_daily - snap(mu, 6, math.floor)) < 1e-9
-        cal = sorted(
-            (
-                math.floor(
-                    abs(cnt.get((r.event_type, d), 0) - mu) * 1e6 + 0.5
-                ),
-                d,
-            )
-            for d in days
-            if 16 <= d.day <= 23
-        )
-        kth = math.ceil((len(cal) + 1) * 0.75)
-        q6 = cal[kth - 1][0]
-        assert abs(r.conformal_radius - snap(q6 / 1e6, 6, math.floor)) < 1e-9
-        ev_days = [d for d in days if d.day >= 24]
-        cov = sum(
-            1
-            for d in ev_days
-            if math.floor(
-                abs(cnt.get((r.event_type, d), 0) - mu) * 1e6 + 0.5
-            )
-            <= q6
-        )
-        assert r.n_eval_days == len(ev_days)
-        assert r.n_covered == cov
-
-
-def test_logrank_matches_bruteforce(spark, sf_dir):
-    """Censored lifetimes, dense at-risk suffix sums, snapped E/V
-    terms, and the O-E chi-square."""
-    out = registry.QUERIES["ml_logrank_test"](spark, sf_dir).collect()[0]
-    ev = load_table(spark, sf_dir, "events").collect()
-    first, firstp = {}, {}
-    mx = max(r.ts.date() for r in ev)
-    for r in ev:
-        d = r.ts.date()
-        u = r.user_id
-        first[u] = min(first.get(u, d), d)
-        if r.event_type == "purchase":
-            firstp[u] = min(firstp.get(u, d), d)
-    lives = []
-    for u, f in first.items():
-        if u in firstp:
-            lives.append((u % 2, (firstp[u] - f).days, 1))
-        else:
-            lives.append((u % 2, (mx - f).days, 0))
-    assert out.n_users == len(lives)
-    o1 = e1_9 = v_9 = 0
-    tmax = max(t for _, t, _ in lives)
-    for t in range(tmax + 1):
-        n1 = sum(1 for g, tt, _ in lives if g == 1 and tt >= t)
-        n0 = sum(1 for g, tt, _ in lives if g == 0 and tt >= t)
-        d1 = sum(1 for g, tt, e in lives if g == 1 and tt == t and e)
-        d0 = sum(1 for g, tt, e in lives if g == 0 and tt == t and e)
-        dt, nt = d1 + d0, n1 + n0
-        if dt == 0:
-            continue
-        o1 += d1
-        e1_9 += math.floor(dt * 1.0 * n1 / nt * 1e9 + 0.5)
-        if nt > 1:
-            v_9 += math.floor(
-                dt * 1.0 * n1 * (nt - n1) * (nt - dt)
-                / (nt * 1.0 * nt * (nt - 1)) * 1e9 + 0.5
-            )
-    assert out.observed_g1 == o1
-    assert abs(out.expected_g1 - snap(e1_9 / 1e9, 6, math.floor)) < 1e-9
-    chi2 = (o1 - e1_9 / 1e9) ** 2 / (v_9 / 1e9)
-    assert abs(out.chi2_logrank - math.floor(chi2 * 1e4 + 0.5) / 1e4) < 1e-9
-
-
-def test_sprt_walk_and_decision(spark, sf_dir):
-    """The snapped-increment walk, the Wald boundaries, and the
-    first-crossing decision rule."""
-    out = registry.QUERIES["ml_sprt_sequential_test"](spark, sf_dir).collect()[
-        0
-    ]
-    ev = load_table(spark, sf_dir, "events").collect()
-    s, t = Counter(), Counter()
-    for r in ev:
-        d = r.ts.date()
-        t[d] += 1
-        if r.event_type == "purchase":
-            s[d] += 1
-    days = sorted(t)
-    l1 = math.log(0.21 / 0.19)
-    l0 = math.log(0.79 / 0.81)
-    a9 = math.floor(math.log(0.95 / 0.05) * 1e9 + 0.5)
-    b9 = math.floor(math.log(0.05 / 0.95) * 1e9 + 0.5)
-    c9 = 0
-    cross = None
-    for d in days:
-        c9 += math.floor((s[d] * l1 + (t[d] - s[d]) * l0) * 1e9 + 0.5)
-        if cross is None and (c9 >= a9 or c9 <= b9):
-            cross = (d, "accept_h1" if c9 >= a9 else "accept_h0")
-    assert out.n_days == len(days)
-    assert abs(out.final_llr - snap(c9 / 1e9, 6, math.floor)) < 1e-9
-    if cross is None:
-        assert out.decision == "continue"
-        assert out.crossing_day is None
-    else:
-        assert out.decision == cross[1]
-        assert out.crossing_day == cross[0].strftime("%Y-%m-%d")
-
-
-def test_power_analysis_matches_bruteforce(spark, sf_dir):
-    """Observed rates, the closed-form n-per-arm, and the A&S
-    polynomial power evaluated the same way."""
-    out = registry.QUERIES["ml_power_analysis_two_prop"](
-        spark, sf_dir
-    ).collect()[0]
-    ev = load_table(spark, sf_dir, "events").collect()
-    g = {0: [0, 0], 1: [0, 0]}
-    for r in ev:
-        c = g[r.user_id % 2]
-        c[0] += 1
-        if r.event_type == "purchase":
-            c[1] += 1
-    n0, x0 = g[0]
-    n1, x1 = g[1]
-    p0, p1 = x0 / n0, x1 / n1
-    pbar = (x0 + x1) / (n0 + n1)
-    delta = abs(p1 - p0)
-    za, zb = 1.959963984540054, 0.8416212335729143
-    num = za * math.sqrt(2 * pbar * (1 - pbar)) + zb * math.sqrt(
-        p0 * (1 - p0) + p1 * (1 - p1)
-    )
-    se = math.sqrt(p0 * (1 - p0) / n0 + p1 * (1 - p1) / n1)
-    assert out.n_events == n0 + n1
-    assert abs(out.rate_control - snap(p0, 6, math.floor)) < 1e-9
-    assert abs(out.rate_treatment - snap(p1, 6, math.floor)) < 1e-9
-    if delta > 0:
-        assert out.n_per_arm_for_80pct_power == math.ceil(
-            num * num / (delta * delta)
-        )
-        z = delta / se - za
-        # reference power via math.erf — the operator's A&S
-        # polynomial is accurate to ~1.5e-7, far under the 1e-4 snap
-        power = 0.5 * (1 + math.erf(z / math.sqrt(2)))
-        assert abs(out.posthoc_power - power) < 1e-3
-        assert 0.0 <= out.posthoc_power <= 1.0
-    else:
-        assert out.n_per_arm_for_80pct_power is None
-
-
-def test_km_curve_matches_bruteforce(spark, sf_dir):
-    orders = load_table(spark, sf_dir, "orders").collect()
-    per = {}
-    for r in orders:
-        f, l = per.get(r.o_custkey, (r.o_orderdate, r.o_orderdate))
-        per[r.o_custkey] = (min(f, r.o_orderdate), max(l, r.o_orderdate))
-    mx = max(l for _, l in per.values())
-    life = [
-        ((l - f).days, 1 if (mx - l).days > 90 else 0)
-        for f, l in per.values()
-    ]
-    cells = defaultdict(lambda: [0, 0])  # t -> [deaths, all]
-    for t, ev in life:
-        cells[t][0] += ev
-        cells[t][1] += 1
-    surv, rows_exp = 1.0, []
-    at_risk = len(life)
-    for t in sorted(cells):
-        d, a = cells[t]
-        if d > 0:
-            # mirror the operator's snapped-log product device
-            if d >= at_risk:
-                lterm = -100000000000
-            else:
-                lterm = math.floor(
-                    math.log(1.0 - d / at_risk) * 1e9 + 0.5
-                )
-            rows_exp.append((t, at_risk, d, lterm))
-        at_risk -= a
-    out = registry.QUERIES["ml_km_survival_curve"](spark, sf_dir).collect()
-    assert len(out) == min(30, len(rows_exp))
-    cum = 0
-    for row, (t, nr, d, lterm) in zip(out, rows_exp):
-        cum += lterm
-        assert (row.t_days, row.n_at_risk, row.d_events) == (t, nr, d)
-        s = math.exp(cum / 1e9)
-        assert abs(row.survival - math.floor(s * 1e6 + 0.5) / 1e6) < 2e-6
-    # survival is a [0,1] non-increasing step function
-    ss = [r.survival for r in out]
-    assert all(0.0 <= s <= 1.0 for s in ss)
-    assert all(a >= b for a, b in zip(ss, ss[1:]))
-
-
-def test_cooks_distance_matches_bruteforce(spark, sf_dir):
-    import datetime
-
-    orders = load_table(spark, sf_dir, "orders").collect()
-    day = defaultdict(int)
-    for r in orders:
-        d = r.o_orderdate
-        if isinstance(d, datetime.datetime):
-            d = d.date()
-        day[d] += math.floor(r.o_totalprice * 100 + 0.5)
-    pts = sorted(
-        ((d - datetime.date(1970, 1, 1)).days, y, d.isoformat())
-        for d, y in day.items()
-    )
-    n = len(pts)
-    sx = sum(p[0] for p in pts)
-    sy = sum(p[1] for p in pts)
-    sxx = sum(p[0] * p[0] for p in pts)
-    sxy = sum(p[0] * p[1] for p in pts)
-    syy = sum(p[1] * p[1] for p in pts)
-    b = (n * sxy - sx * sy) / (n * sxx - sx * sx)
-    sxx_c = sxx - sx * sx / n
-    xbar = sx / n
-    a = (sy - b * sx) / n
-    s2 = (syy - a * sy - b * sxy) / (n - 2)
-    scored = []
-    for x, y, d in pts:
-        e = y - a - b * x
-        h = 1.0 / n + (x - xbar) * (x - xbar) / sxx_c
-        d6 = math.floor(e * e * h / (2.0 * s2 * (1 - h) * (1 - h)) * 1e6 + 0.5)
-        scored.append((-d6, d, y, e))
-    scored.sort()
-    out = registry.QUERIES["ml_cooks_distance_topk"](spark, sf_dir).collect()
-    assert len(out) == 20
-    for row, (negd6, d, y, e) in zip(out, scored[:20]):
-        assert row.day == d
-        assert row.revenue_cents == y
-        assert abs(row.cooks_d - (-negd6) / 1e6) < 2e-6
-        assert abs(
-            row.residual_dollars - math.floor(e / 100.0 * 100 + 0.5) / 100
-        ) < 1e-9
-
-
-def test_item_cf_has_no_fact_self_join(spark, sf_dir):
-    """The basket self-join was replaced by map-side pair expansion.
-    NOTE: the explain string re-renders a cached relation's child
-    per InMemoryTableScan reference, so counting 'lineitem.parquet'
-    substrings overcounts; the structural signals are (a) the
-    grouped baskets ARE cached and shared (InMemoryTableScan
-    present) and (b) no raw-column self-join condition
-    'l_partkey < l_partkey' survives anywhere in the plan."""
-    import re
-
-    plan = executed_plan(spark, "ml_item_item_cf", sf_dir)
-    assert "InMemoryTableScan" in plan, plan[:2000]
-    assert not re.search(r"l_partkey#\d+L? < l_partkey#", plan), plan[:2000]
-    spark.catalog.clearCache()
-
-
-def test_item_cf_returns_materialized_top20(spark, sf_dir):
-    """ml_item_item_cf's returned top-20 plan reads its persisted
-    baskets (an InMemoryRelation), and building it on the small-fact
-    gate's child session leaves the caller's AQE conf as it was."""
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    plan = executed_plan(spark, "ml_item_item_cf", sf_dir)
-    assert "InMemoryTableScan" in plan, plan[:2000]
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    spark.catalog.clearCache()
-
-
-def test_item_cf_pair_exchange_carries_one_packed_long(spark, sf_dir):
-    """The r13 keep: the pair key is packed into ONE long
-    (shiftleft(pa,32)|pb) BEFORE the Exchange — the shuffled
-    aggregate keys on `pk`, and the struct pair row (pa, pb) must
-    not reappear upstream of the count. Unpack (shiftright /
-    bitwiseAND) happens only after the c_ab filter."""
-    plan = executed_plan(spark, "ml_item_item_cf", sf_dir)
-    # the HOF builds longs via shiftleft; the post-agg unpack uses
-    # shiftright — both must be present
-    assert "shiftleft" in plan, plan[:3000]
-    assert "shiftright" in plan, plan[:3000]
-    # the rejected struct form grouped on two key columns
-    # (pa, pb) straight from a struct explode; the kept form's
-    # hash aggregate keys are [pk]
-    assert "keys=[pk" in plan.replace("#", "").replace(" ", "")[
-        : len(plan)
-    ] or "keys=[pk" in "".join(plan.split("#")), plan[:3000]
-    spark.catalog.clearCache()
-
-
-def test_item_cf_plan_carries_packed_key_guard(spark, sf_dir):
-    """The r14 advisor fix: the packed pair key's 2^31 bound is
-    ENFORCED in-plan via raise_error (an out-of-range corpus fails
-    the job instead of silently corrupting co-occurrence counts).
-    The guard must survive optimization into the executed plan."""
-    plan = executed_plan(spark, "ml_item_item_cf", sf_dir)
-    assert "raise_error" in plan, plan[:3000]
-    spark.catalog.clearCache()

@@ -1,14 +1,11 @@
-"""operators/multimodal.py: the codecs without Spark (png_encode /
-png_decode and wav_encode / wav_decode round-trip, and the decoders
-reject damaged or unsupported input with ValueError, not an assert,
-which `python -O` strips), content-defined chunking, and the
-registered decode, feature and dedup queries against numpy and
-Python recomputations."""
+"""The multimodal codecs without Spark: png_encode/png_decode and
+wav_encode/wav_decode round-trip, and the decoders reject damaged or
+unsupported input with ValueError (not an assert, which `python -O`
+strips)."""
 
 from __future__ import annotations
 
 import io
-import math
 import struct
 import wave
 import zlib
@@ -17,18 +14,11 @@ import numpy as np
 import pytest
 
 from etl_data_ingestion_spark.operators.multimodal import (
-    _png_defilter,
-    _png_filter_line,
     png_decode,
     png_encode,
     wav_decode,
     wav_encode,
 )
-from etl_data_ingestion_spark.plans import registry
-
-from tests.helpers import q, round4
-
-registry.load_all()
 
 
 def _rows(width: int, height: int, channels: int) -> list[bytes]:
@@ -133,214 +123,3 @@ def test_wav_stereo_raises():
 def test_wav_not_riff_raises():
     with pytest.raises(ValueError, match="bad WAV"):
         wav_decode(b"NOTAWAVE" * 8)
-
-
-def test_byte_entropy_matches_python(spark, sf_dir):
-    """Entropy recomputed from the raw utf-8 bytes with math.log2
-    must match to rounding, and bounds must hold:
-    0 <= H <= log2(distinct bytes)."""
-    import math
-    from collections import Counter
-
-    docs = {
-        r.doc_id: r.text
-        for r in spark.read.parquet(f"{sf_dir}/documents.parquet").collect()
-    }
-    rows = q("multimodal_byte_entropy", spark, sf_dir).collect()
-    assert len(rows) == len(docs)
-    for r in rows:
-        data = docs[r.doc_id].encode("utf-8")
-        counts = Counter(data)
-        n = len(data)
-        ent = -sum((c / n) * math.log2(c / n) for c in counts.values())
-        assert r.n_bytes == n
-        assert r.n_distinct_bytes == len(counts)
-        assert abs(r.entropy_bits - round4(ent)) < 1e-9, r
-        assert 0.0 <= r.entropy_bits <= math.log2(max(len(counts), 2))
-        assert not r.looks_compressed  # ascii text sits near 4 bits
-
-
-def test_cdc_chunking_contract(spark, sf_dir):
-    rows = registry.QUERIES["multimodal_cdc_chunking"](spark, sf_dir).collect()
-    assert rows, "planted duplicates must produce groups"
-    for r in rows:
-        assert r["n_copies"] >= 2
-        assert r["distinct_chunkings"] == 1
-        assert r["sizes_ok"] and r["bounds_ok"] and r["count_ok"]
-
-
-def test_cdc_chunking_boundary_shift_locality(spark):
-    """Content-defined (not fixed-size) chunking: prepending bytes to
-    a payload must leave the TAIL chunks identical once the rolling
-    hash resynchronizes — the property that makes CDC dedup robust to
-    insertions, and the reason it beats fixed-size blocks for media
-    re-muxed with different-length headers."""
-    import hashlib
-
-    import numpy as np
-
-    rng = np.random.default_rng(42)
-    gear = rng.integers(0, 1 << 63, size=256, dtype=np.int64).tolist()
-    MINC, MAXC, MASK = 32, 256, 0x3F
-
-    def chunks(data: bytes) -> list[bytes]:
-        out, h, start = [], 0, 0
-        for i, b in enumerate(data):
-            h = ((h << 1) + gear[b]) & 0xFFFFFFFFFFFFFFFF
-            clen = i - start + 1
-            if clen >= MINC and ((h & MASK) == 0 or clen >= MAXC):
-                out.append(data[start : i + 1])
-                start, h = i + 1, 0
-        if start < len(data):
-            out.append(data[start:])
-        return out
-
-    body = bytes(rng.integers(0, 256, 4000, dtype=np.uint8))
-    a = chunks(body)
-    b = chunks(b"HDR" * 7 + body)
-    a_tail = {hashlib.sha256(c).hexdigest() for c in a[2:]}
-    b_set = {hashlib.sha256(c).hexdigest() for c in b}
-    # most tail chunks of the original reappear despite the 21-byte shift
-    assert len(a_tail & b_set) >= len(a_tail) * 0.6
-
-
-def test_cdc_chunker_invariants_property():
-    """Property test over random byte strings: for ANY payload the
-    chunker must (a) partition the bytes exactly, (b) respect
-    [MINC, MAXC] for every non-final chunk and MAXC for the final
-    one, (c) be deterministic."""
-    import numpy as np
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    rng = np.random.default_rng(42)
-    gear = rng.integers(0, 1 << 63, size=256, dtype=np.int64).tolist()
-    MINC, MAXC, MASK = 32, 256, 0x3F
-
-    def chunk_sizes(data: bytes) -> list[int]:
-        sizes, h, start = [], 0, 0
-        for i, b in enumerate(data):
-            h = ((h << 1) + gear[b]) & 0xFFFFFFFFFFFFFFFF
-            clen = i - start + 1
-            if clen >= MINC and ((h & MASK) == 0 or clen >= MAXC):
-                sizes.append(clen)
-                start, h = i + 1, 0
-        if start < len(data):
-            sizes.append(len(data) - start)
-        return sizes
-
-    @settings(max_examples=60, deadline=None)
-    @given(st.binary(min_size=0, max_size=3000))
-    def check(data):
-        sizes = chunk_sizes(data)
-        assert sum(sizes) == len(data)
-        assert all(MINC <= s <= MAXC for s in sizes[:-1])
-        if sizes:
-            assert sizes[-1] <= MAXC
-        assert chunk_sizes(data) == sizes
-
-    check()
-
-
-def test_png_filter_roundtrip_all_types():
-    # every filter type, both channel counts, adversarial content:
-    # ramps, constants, and alternating extremes exercise the
-    # Sub/Up/Average/Paeth predictors differently
-    patterns = [
-        lambda x: x % 256,
-        lambda x: 0,
-        lambda x: 255 if x % 2 == 0 else 0,
-        lambda x: (x * 37 + 11) % 256,
-    ]
-    for ch in (1, 3):
-        for pat in patterns:
-            w, h = 9, 7
-            prior = bytes(w * ch)
-            filtered = b""
-            src = []
-            for y in range(h):
-                line = bytes(pat(y * w * ch + i) for i in range(w * ch))
-                src.append(line)
-                ftype = y % 5
-                filtered += bytes([ftype]) + _png_filter_line(
-                    line, prior, ftype, ch
-                )
-                prior = line
-            out = _png_defilter(filtered, w, h, ch)
-            assert bytes(out) == b"".join(src)
-
-
-def test_audio_features_exact(spark, sf_dir):
-    rows = registry.QUERIES["multimodal_audio_features"](spark, sf_dir).collect()
-    assert len(rows) == 200
-    for r in rows:
-        d = r["doc_id"]
-        assert r["n_frames"] == 10
-        assert r["rms_first_half"] == 100 + d % 900
-        assert r["rms_second_half"] == 200 + d % 700
-        assert r["peak"] == max(100 + d % 900, 200 + d % 700)
-        assert r["zcr_per_frame_ok"]
-
-
-def test_resize_real_matches_numpy_reference(spark, sf_dir):
-    import numpy as np
-
-    rows = registry.QUERIES["multimodal_resize_real"](spark, sf_dir).collect()
-    assert len(rows) == 150
-    for r in rows[:20]:
-        d = r["doc_id"]
-        w, h = 8 + d % 8, 4 + d % 4
-        ch = 1 if d % 2 == 0 else 3
-        img = np.array(
-            [
-                [
-                    [(d * 7 + y * 3 + x * 5 + c * 11) % 256 for c in range(ch)]
-                    for x in range(w)
-                ]
-                for y in range(h)
-            ],
-            dtype=np.int64,
-        )
-        ys = (np.arange(4) * h) // 4
-        xs = (np.arange(6) * w) // 6
-        assert r["resized_sum"] == int(img[np.ix_(ys, xs)].sum())
-        assert (r["thumb_w"], r["thumb_h"], r["channels"]) == (6, 4, ch)
-
-
-def test_patch_embed_replaces_stub(spark, sf_dir):
-    assert "multimodal_resize_featurize_stub" not in registry.QUERIES
-    rows = registry.QUERIES["multimodal_patch_embed_real"](spark, sf_dir).collect()
-    assert rows
-    for r in rows[:20]:
-        assert r.feat_dim == 16
-        # normalized components bounded
-        assert -1.0 <= r.f0 <= 1.0 and -1.0 <= r.f5 <= 1.0
-
-
-def test_ahash_finds_planted_brightness_copies(spark, sf_dir):
-    rows = registry.QUERIES["multimodal_image_ahash_dedup"](spark, sf_dir).collect()
-    assert rows, "no planted near-dup image pairs found"
-    for r in rows:
-        assert r.doc_b == r.doc_a + 7000000
-        assert r.hamming <= 2  # brightness shift barely moves aHash
-
-
-def test_vad_segments_match_mask_pattern(spark, sf_dir):
-    rows = registry.QUERIES["multimodal_audio_vad_segments"](spark, sf_dir).collect()
-    assert rows
-    for r in rows[:20]:
-        d = r.doc_id
-        mask = [(d + f) % 4 != 0 for f in range(16)]
-        assert r.n_speech_frames == sum(mask)
-        segs = []
-        run = 0
-        for m in mask:
-            if m:
-                run += 1
-            elif run:
-                segs.append(run)
-                run = 0
-        if run:
-            segs.append(run)
-        assert r.n_segments == len(segs)
-        assert r.longest_segment == max(segs)

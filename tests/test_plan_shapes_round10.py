@@ -7,12 +7,9 @@ from __future__ import annotations
 
 from etl_data_ingestion_spark.plans import registry
 
+from tests.helpers import distinct_filescans, executed_plan
+
 registry.load_all()
-
-
-def _plan(spark, name, sf_dir):
-    df = registry.QUERIES[name](spark, sf_dir)
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_item_cf_has_no_fact_self_join(spark, sf_dir):
@@ -25,20 +22,10 @@ def test_item_cf_has_no_fact_self_join(spark, sf_dir):
     'l_partkey < l_partkey' survives anywhere in the plan."""
     import re
 
-    plan = _plan(spark, "ml_item_item_cf", sf_dir)
+    plan = executed_plan(spark, "ml_item_item_cf", sf_dir)
     assert "InMemoryTableScan" in plan, plan[:2000]
     assert not re.search(r"l_partkey#\d+L? < l_partkey#", plan), plan[:2000]
     spark.catalog.clearCache()
-
-
-def _distinct_filescans(plan: str) -> set[str]:
-    """The explain string re-renders a cached relation's child once
-    per InMemoryTableScan reference, so raw substring counts
-    overcount; distinct FileScan lines (expression ids included)
-    identify genuinely separate scan subtrees."""
-    import re
-
-    return set(re.findall(r"FileScan parquet \[[^\]]*\]", plan))
 
 
 def test_kruskal_scans_orders_once(spark, sf_dir):
@@ -46,16 +33,16 @@ def test_kruskal_scans_orders_once(spark, sf_dir):
     so exactly ONE fact scan subtree exists (the earlier join-back
     form compiled gv twice with fresh expression ids that
     ReusedExchange could not deduplicate — two real scans)."""
-    plan = _plan(spark, "agg_kruskal_wallis", sf_dir)
-    assert len(_distinct_filescans(plan)) == 1, plan[:2000]
+    plan = executed_plan(spark, "agg_kruskal_wallis", sf_dir)
+    assert len(distinct_filescans(plan)) == 1, plan[:2000]
 
 
 def test_repeated_lines_scans_documents_once(spark, sf_dir):
     """The tot-table re-scan was folded into the single doc-keyed
     aggregation; the persisted explode is the only text consumer, so
     only one DISTINCT scan subtree may exist."""
-    plan = _plan(spark, "dedup_repeated_lines_corpus", sf_dir)
-    assert len(_distinct_filescans(plan)) == 1, plan[:2000]
+    plan = executed_plan(spark, "dedup_repeated_lines_corpus", sf_dir)
+    assert len(distinct_filescans(plan)) == 1, plan[:2000]
     # clean up the persist the operator leaves behind
     spark.catalog.clearCache()
 
@@ -82,9 +69,9 @@ def test_naive_bayes_single_token_explosion(spark, sf_dir):
     doubled-corpus union reads documents once per label branch, for
     both the cached token explosion and the doc-count prior
     (<= 4 distinct scans; the pre-fix plan compiled more)."""
-    plan = _plan(spark, "pipeline_naive_bayes_spam", sf_dir)
+    plan = executed_plan(spark, "pipeline_naive_bayes_spam", sf_dir)
     assert "InMemoryTableScan" in plan, plan[:2000]
-    assert len(_distinct_filescans(plan)) <= 4, sorted(
-        _distinct_filescans(plan)
+    assert len(distinct_filescans(plan)) <= 4, sorted(
+        distinct_filescans(plan)
     )
     spark.catalog.clearCache()

@@ -5,20 +5,11 @@ silently reintroduces the waste fails a test, not a benchmark read."""
 
 from __future__ import annotations
 
-import re
-
 from etl_data_ingestion_spark.plans import registry
 
+from tests.helpers import distinct_filescans, executed_plan
+
 registry.load_all()
-
-
-def _plan(spark, name, sf_dir):
-    df = registry.QUERIES[name](spark, sf_dir)
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def _distinct_filescans(plan: str) -> set[str]:
-    return set(re.findall(r"FileScan parquet \[[^\]]*\]", plan))
 
 
 def test_repeated_lines_boilerplate_join_broadcasts(spark, sf_dir):
@@ -26,7 +17,7 @@ def test_repeated_lines_boilerplate_join_broadcasts(spark, sf_dir):
     with a broadcast of the (>=3-doc) boilerplate set: the executed
     plan must carry a BroadcastHashJoin and NO SortMergeJoin — a
     regression to the shuffle join re-adds a corpus Exchange."""
-    plan = _plan(spark, "dedup_repeated_lines_corpus", sf_dir)
+    plan = executed_plan(spark, "dedup_repeated_lines_corpus", sf_dir)
     assert "BroadcastHashJoin" in plan, plan[:2000]
     assert "SortMergeJoin" not in plan, plan[:2000]
     spark.catalog.clearCache()
@@ -38,8 +29,8 @@ def test_naive_bayes_scans_documents_once(spark, sf_dir):
     a literal token array; prior from the scalar collect). The final
     accuracy plan reads the doc-level cache — at most one distinct
     FileScan subtree may survive anywhere in it."""
-    plan = _plan(spark, "pipeline_naive_bayes_spam", sf_dir)
-    assert len(_distinct_filescans(plan)) <= 1, plan[:3000]
+    plan = executed_plan(spark, "pipeline_naive_bayes_spam", sf_dir)
+    assert len(distinct_filescans(plan)) <= 1, plan[:3000]
     assert "InMemoryTableScan" in plan, plan[:2000]
     spark.catalog.clearCache()
 
@@ -48,7 +39,7 @@ def test_naive_bayes_has_no_window_argmax(spark, sf_dir):
     """The 2-row-per-doc ROW_NUMBER argmax was replaced by a
     conditional-sum pivot inside the doc-keyed aggregation — no
     Window operator may appear in the executed plan."""
-    plan = _plan(spark, "pipeline_naive_bayes_spam", sf_dir)
+    plan = executed_plan(spark, "pipeline_naive_bayes_spam", sf_dir)
     assert "Window" not in plan, plan[:3000]
     spark.catalog.clearCache()
 
@@ -58,7 +49,7 @@ def test_item_cf_returns_materialized_top20(spark, sf_dir):
     baskets (an InMemoryRelation), and building it on the small-fact
     gate's child session leaves the caller's AQE conf as it was."""
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    plan = _plan(spark, "ml_item_item_cf", sf_dir)
+    plan = executed_plan(spark, "ml_item_item_cf", sf_dir)
     assert "InMemoryTableScan" in plan, plan[:2000]
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     spark.catalog.clearCache()
@@ -86,7 +77,7 @@ def test_audit_flips_do_not_fan_out(spark, sf_dir):
         "timeseries_runs_test",
         "events_churn_rate_weekly",
     ):
-        plan = _plan(spark, name, sf_dir)
+        plan = executed_plan(spark, name, sf_dir)
         assert "RoundRobinPartitioning" not in plan, (name, plan[:2000])
     spark.catalog.clearCache()
 
@@ -95,7 +86,7 @@ def test_audit_keeps_still_fan_out(spark, sf_dir):
     """And the KEEPs must still opt in (the per-row-CPU family the
     fan-out exists for): text_lang_bigram_score is 1.1s with it and
     15.0s without at sf0.1."""
-    plan = _plan(spark, "text_lang_bigram_score", sf_dir)
+    plan = executed_plan(spark, "text_lang_bigram_score", sf_dir)
     assert "RoundRobinPartitioning" in plan, plan[:2000]
     spark.catalog.clearCache()
 

@@ -4,16 +4,11 @@ so a refactor can't silently regress it)."""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
+from etl_data_ingestion_spark.plans import registry
 
-from etl_data_ingestion_spark.plans import registry as reg
+from tests.helpers import executed_plan
 
-reg.load_all()
-
-
-def _plan(spark, name, sf_dir):
-    df = reg.QUERIES[name](spark, sf_dir)
-    return df._jdf.queryExecution().executedPlan().toString()
+registry.load_all()
 
 
 def test_assortativity_moments_come_from_degree_table(spark, sf_dir):
@@ -22,7 +17,7 @@ def test_assortativity_moments_come_from_degree_table(spark, sf_dir):
     old form aggregated j/k moments over a 2|E|-row oriented union.
     Pin the degree-moment aggregate and the broadcast endpoint
     joins."""
-    plan = _plan(spark, "graph_assortativity", sf_dir)
+    plan = executed_plan(spark, "graph_assortativity", sf_dir)
     assert "sum((d#" in plan.replace(" ", "").replace("*", "") or (
         "sum((d" in plan
     ), plan[:2000]
@@ -40,7 +35,7 @@ def test_modularity_aggregates_contingency_not_edges(spark, sf_dir):
     contingency table: the persisted relation must be the tiny
     groupBy(c1,c2) count, and the edge build must remain a join
     (AQE picks the physical form), not a basket collect_set."""
-    plan = _plan(spark, "graph_community_modularity", sf_dir)
+    plan = executed_plan(spark, "graph_community_modularity", sf_dir)
     assert "collect_set" not in plan, plan[:2000]
     assert "InMemoryTableScan" in plan, plan[:2000]
     spark.catalog.clearCache()
@@ -66,7 +61,7 @@ def test_loo_and_ratio_margin_construct_without_collect(spark, sf_dir):
             "ml_loo_1nn_embedding_accuracy",
             "similarity_ratio_margin",
         ):
-            df = reg.QUERIES[name](spark, sf_dir)
+            df = registry.QUERIES[name](spark, sf_dir)
             assert "MapInPandas" in (
                 df._jdf.queryExecution().executedPlan().toString()
             )

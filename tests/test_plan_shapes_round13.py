@@ -4,14 +4,11 @@ form so a refactor can't silently regress it)."""
 
 from __future__ import annotations
 
-from etl_data_ingestion_spark.plans import registry as reg
+from etl_data_ingestion_spark.plans import registry
 
-reg.load_all()
+from tests.helpers import executed_plan
 
-
-def _plan(spark, name, sf_dir):
-    df = reg.QUERIES[name](spark, sf_dir)
-    return df._jdf.queryExecution().executedPlan().toString()
+registry.load_all()
 
 
 def test_item_cf_pair_exchange_carries_one_packed_long(spark, sf_dir):
@@ -20,7 +17,7 @@ def test_item_cf_pair_exchange_carries_one_packed_long(spark, sf_dir):
     aggregate keys on `pk`, and the struct pair row (pa, pb) must
     not reappear upstream of the count. Unpack (shiftright /
     bitwiseAND) happens only after the c_ab filter."""
-    plan = _plan(spark, "ml_item_item_cf", sf_dir)
+    plan = executed_plan(spark, "ml_item_item_cf", sf_dir)
     # the HOF builds longs via shiftleft; the post-agg unpack uses
     # shiftright — both must be present
     assert "shiftleft" in plan, plan[:3000]
@@ -40,7 +37,7 @@ def test_repeated_lines_hof_is_fanned_out(spark, sf_dir):
     plan carries the round-robin repartition the scan-parallelism
     floor inserts; and the two-consumer persist stays (the
     no-persist variant measured slower at sf1)."""
-    plan = _plan(spark, "dedup_repeated_lines_corpus", sf_dir)
+    plan = executed_plan(spark, "dedup_repeated_lines_corpus", sf_dir)
     assert "ROUND_ROBIN" in plan or "RoundRobin" in plan, plan[:3000]
     assert "InMemoryTableScan" in plan, plan[:3000]
     spark.catalog.clearCache()

@@ -8,14 +8,11 @@ import re
 
 import pyspark.sql.functions as F
 
-from etl_data_ingestion_spark.plans import registry as reg
+from etl_data_ingestion_spark.plans import registry
 
-reg.load_all()
+from tests.helpers import executed_plan
 
-
-def _exec_plan(spark, name, sf_dir):
-    df = reg.QUERIES[name](spark, sf_dir)
-    return df._jdf.queryExecution().executedPlan().toString()
+registry.load_all()
 
 
 def test_fd_profile_uses_single_exchange_collect_set(spark, sf_dir):
@@ -24,7 +21,7 @@ def test_fd_profile_uses_single_exchange_collect_set(spark, sf_dir):
     partial sets — not count_distinct's two-level rewrite (an extra
     (LHS,RHS)-keyed exchange per FD; measured sf1 3.29 vs 1.94s,
     interleaved A/B)."""
-    plan = _exec_plan(
+    plan = executed_plan(
         spark, "quality_functional_dependencies", sf_dir
     )
     assert plan.count("collect_set") >= 4, plan[:3000]
@@ -36,7 +33,7 @@ def test_item_cf_plan_carries_packed_key_guard(spark, sf_dir):
     ENFORCED in-plan via raise_error (an out-of-range corpus fails
     the job instead of silently corrupting co-occurrence counts).
     The guard must survive optimization into the executed plan."""
-    plan = _exec_plan(spark, "ml_item_item_cf", sf_dir)
+    plan = executed_plan(spark, "ml_item_item_cf", sf_dir)
     assert "raise_error" in plan, plan[:3000]
     spark.catalog.clearCache()
 
@@ -48,7 +45,7 @@ def test_threshold_curve_aggs_coalesce_to_zero(spark, sf_dir):
     aggregate outputs must carry the coalesce (pinned on the
     OPTIMIZED plan — the executed-plan printer elides aggregate
     expression trees)."""
-    df = reg.QUERIES["pipeline_dedup_threshold_curve"](spark, sf_dir)
+    df = registry.QUERIES["pipeline_dedup_threshold_curve"](spark, sf_dir)
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("coalesce") >= 15, plan[:3000]
     spark.catalog.clearCache()

@@ -30,9 +30,7 @@ def test_q6_predicates_reach_scan(spark, sf_dir):
 
 
 def test_topk_is_take_ordered(spark, sf_dir):
-    assert "TakeOrderedAndProject" in executed_plan(
-        spark, "topk_orders_by_price", sf_dir
-    )
+    assert "TakeOrderedAndProject" in executed_plan(spark, "topk_orders_by_price", sf_dir)
 
 
 def test_dims_broadcast(spark, sf_dir):

@@ -6,10 +6,10 @@ FFD packing bounds, and Morton-code bit-interleave locality."""
 
 from __future__ import annotations
 
+import os
 from collections import Counter
 
-from hypothesis import given, settings
-from hypothesis import strategies as st
+from hypothesis import given, settings, strategies as st
 
 from etl_data_ingestion_spark.operators.video import lzw_decode, lzw_encode
 
@@ -146,14 +146,16 @@ def test_known_divergence_example_is_understood():
     assert ref == ["ee", "ee", "e"]
 
 
-def test_fixture_vocabulary_satisfies_precondition():
+def test_fixture_vocabulary_satisfies_precondition(sf_dir):
     import duckdb
+
+    docs = os.path.join(os.path.dirname(sf_dir), "sf0.01", "documents.parquet")
 
     words = [
         r[0]
         for r in duckdb.sql(
             "SELECT DISTINCT w FROM "
-            "read_parquet('/root/testdata/sf0.01/documents.parquet'), "
+            f"read_parquet('{docs}'), "
             "UNNEST(regexp_split_to_array(trim(text), '\\s+')) t(w)"
         ).fetchall()
     ]

@@ -7,13 +7,11 @@ implement).
 
 from __future__ import annotations
 
-import math
 from collections import Counter
 
-from hypothesis import given, settings
-from hypothesis import strategies as st
+from hypothesis import given, settings, strategies as st
 
-ints = st.integers(min_value=-10**9, max_value=10**9)
+from tests.helpers import ints
 
 
 def _med2(win: list[int]) -> int:

@@ -22,8 +22,6 @@ from etl_data_ingestion_spark.plans import registry
 
 registry.load_all()
 
-SF = "/root/testdata/sf0.001"
-
 
 def _exact_top2(sf_dir):
     """Brute-force snapped top-2 OTHER neighbors for every corpus
@@ -38,15 +36,15 @@ def _exact_top2(sf_dir):
     return qids, qids[best], part[:, -1], part[:, -2]
 
 
-def test_exact_path_matches_bruteforce(spark):
-    qids, nbr, top1, top2 = _exact_top2(SF)
-    rows = registry.QUERIES["similarity_ratio_margin"](spark, SF).collect()
+def test_exact_path_matches_bruteforce(spark, sf_dir):
+    qids, nbr, top1, top2 = _exact_top2(sf_dir)
+    rows = registry.QUERIES["similarity_ratio_margin"](spark, sf_dir).collect()
     margins = (top1 - top2).astype(np.int64)
     # recompute the per-label rollup brute-force
     import pyarrow.parquet as pq
 
     labels = pq.read_table(
-        SF + "/embeddings.parquet", columns=["vec_id", "label"]
+        sf_dir + "/embeddings.parquet", columns=["vec_id", "label"]
     ).to_pydict()
     lab = dict(zip(labels["vec_id"], labels["label"]))
     by_label = {}
@@ -61,15 +59,15 @@ def test_exact_path_matches_bruteforce(spark):
         assert abs(r.min_margin - want_min) < 1e-9
 
 
-def test_ivf_path_runs_and_tracks_exact(spark, monkeypatch):
+def test_ivf_path_runs_and_tracks_exact(spark, monkeypatch, sf_dir):
     """Force the IVF candidate path on the 500-vector fixture and pin
     its agreement with the exact path. The cap is read at plan-BUILD
     time (driver side) and serialized into the closure, so the
     monkeypatch takes effect without touching workers."""
-    qids, nbr_exact, top1, top2 = _exact_top2(SF)
+    qids, nbr_exact, top1, top2 = _exact_top2(sf_dir)
     monkeypatch.setattr(sim, "GEMM_EXACT_MAX_ROWS", 64)
 
-    loo = registry.QUERIES["ml_loo_1nn_embedding_accuracy"](spark, SF)
+    loo = registry.QUERIES["ml_loo_1nn_embedding_accuracy"](spark, sf_dir)
     rows = loo.collect()
     assert [f.name for f in loo.schema.fields] == [
         "label",
@@ -83,7 +81,7 @@ def test_ivf_path_runs_and_tracks_exact(spark, monkeypatch):
     import pyarrow.parquet as pq
 
     labels = pq.read_table(
-        SF + "/embeddings.parquet", columns=["vec_id", "label"]
+        sf_dir + "/embeddings.parquet", columns=["vec_id", "label"]
     ).to_pydict()
     lab = dict(zip(labels["vec_id"], labels["label"]))
     exact_correct = sum(
@@ -95,7 +93,7 @@ def test_ivf_path_runs_and_tracks_exact(spark, monkeypatch):
     # neighbors mostly intra-cluster, which IVF probing preserves)
     assert ivf_correct >= 0.8 * exact_correct
 
-    margins = registry.QUERIES["similarity_ratio_margin"](spark, SF)
+    margins = registry.QUERIES["similarity_ratio_margin"](spark, sf_dir)
     mrows = margins.collect()
     assert sum(r.n_vectors for r in mrows) == len(qids)
     # IVF margins are >= exact margins per label on average is NOT

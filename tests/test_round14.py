@@ -23,8 +23,6 @@ from etl_data_ingestion_spark.plans import registry
 
 registry.load_all()
 
-SF = "/root/testdata/sf0.001"
-
 
 def _write_documents(spark, out_dir, rows):
     df = spark.createDataFrame(rows, "doc_id long, source string, text string")
@@ -74,13 +72,13 @@ def test_item_cf_packed_key_guard_raises(spark, tmp_path):
         registry.QUERIES["ml_item_item_cf"](spark, str(tmp_path)).collect()
 
 
-def test_item_cf_guard_passes_in_range(spark):
+def test_item_cf_guard_passes_in_range(spark, sf_dir):
     # fixture partkeys are in range: the guarded plan still answers
-    rows = registry.QUERIES["ml_item_item_cf"](spark, SF).collect()
+    rows = registry.QUERIES["ml_item_item_cf"](spark, sf_dir).collect()
     assert len(rows) > 0
 
 
-def test_simhash_expr_form_matches_column_api(spark):
+def test_simhash_expr_form_matches_column_api(spark, sf_dir):
     # r14 construction-cost conversion: the F.expr-string form of
     # _simhash_fingerprints must produce bit-identical fingerprints
     # to the original Column-API tree (same SQL semantics)
@@ -89,7 +87,7 @@ def test_simhash_expr_form_matches_column_api(spark):
         _simhash_fingerprints,
     )
 
-    corpus = load_table(spark, SF, "documents").select("doc_id", "text")
+    corpus = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     got = {
         r.doc_id: r.simhash
         for r in _simhash_fingerprints(corpus).collect()
@@ -123,13 +121,13 @@ def test_simhash_expr_form_matches_column_api(spark):
     assert got == want
 
 
-def test_fd_profile_collect_set_matches_count_distinct(spark):
+def test_fd_profile_collect_set_matches_count_distinct(spark, sf_dir):
     from etl_data_ingestion_spark.catalog import load_table
 
     got = {
         r.fd: (r.n_groups, r.n_violations, r.max_rhs_variants, r.holds)
         for r in registry.QUERIES["quality_functional_dependencies"](
-            spark, SF
+            spark, sf_dir
         ).collect()
     }
     assert len(got) == 4
@@ -143,7 +141,7 @@ def test_fd_profile_collect_set_matches_count_distinct(spark):
             "lineitem", ["l_orderkey", "l_linenumber"], "l_partkey",
         ),
     }.items():
-        df = load_table(spark, SF, tbl)
+        df = load_table(spark, sf_dir, tbl)
         ref = (
             df.groupBy(*lhs)
             .agg(F.count_distinct(F.col(rhs)).alias("v"))

@@ -10,14 +10,11 @@ from operator import methodcaller
 import pyspark.sql.functions as F
 import pytest
 
-from etl_data_ingestion_spark.plans import registry as reg
+from etl_data_ingestion_spark.plans import registry
 
-reg.load_all()
+from tests.helpers import executed_plan
 
-
-def _exec_plan(spark, name, sf_dir):
-    df = reg.QUERIES[name](spark, sf_dir)
-    return df._jdf.queryExecution().executedPlan().toString()
+registry.load_all()
 
 
 def test_pair_expr_expands_ordered_pairs(spark):
@@ -73,7 +70,7 @@ def test_corr_matrix_has_no_literal_relation_or_crossjoin(spark, sf_dir):
     against the broadcast moments row — the pair structs explode
     directly from the one-row aggregate. Exactly one parquet scan,
     no join operator of any kind in the plan."""
-    plan = _exec_plan(spark, "agg_corr_matrix_daily", sf_dir)
+    plan = executed_plan(spark, "agg_corr_matrix_daily", sf_dir)
     assert plan.count("Scan parquet") == 1, plan[:3000]
     for bad in ("CartesianProduct", "BroadcastNestedLoopJoin",
                 "BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin"):
@@ -87,7 +84,7 @@ def test_vocab_jaccard_single_corpus_pass(spark, sf_dir):
     the localCheckpoint is |vocab|-sized, so the executed plan must
     carry no parquet re-scan and no sort-merge/shuffled-hash join
     (the sizes attach as broadcasts)."""
-    plan = _exec_plan(spark, "text_source_vocab_jaccard", sf_dir)
+    plan = executed_plan(spark, "text_source_vocab_jaccard", sf_dir)
     assert "Scan parquet" not in plan, plan[:3000]
     assert "SortMergeJoin" not in plan, plan[:3000]
     assert "ShuffledHashJoin" not in plan, plan[:3000]
@@ -100,7 +97,7 @@ def test_threshold_curve_gram_join_gone(spark, sf_dir):
     collect_set aggregation; after the gsets localCheckpoint the only
     joins left are the sizes/lens broadcasts. The 15 coalesce-to-zero
     wrappers (r14 advisor) must still be present."""
-    df = reg.QUERIES["pipeline_dedup_threshold_curve"](spark, sf_dir)
+    df = registry.QUERIES["pipeline_dedup_threshold_curve"](spark, sf_dir)
     opt = df._jdf.queryExecution().optimizedPlan().toString()
     assert opt.count("coalesce") >= 15, opt[:3000]
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -114,7 +111,7 @@ def test_pq_rerank_shortlist_is_map_side(spark, sf_dir):
     mapInPandas pass (local top-SHORTLIST per query per task), so the
     executed plan must carry a MapInPandas node and no posexplode of
     a |corpus| x n_q score array."""
-    plan = _exec_plan(spark, "similarity_pq_rerank", sf_dir)
+    plan = executed_plan(spark, "similarity_pq_rerank", sf_dir)
     assert "MapInPandas" in plan, plan[:3000]
     assert "posexplode" not in plan, plan[:3000]
     spark.catalog.clearCache()
@@ -187,7 +184,7 @@ def test_ktruss_cumulative_window_is_keyed(spark, sf_dir):
     """k-truss's descending cumulative count runs over one partition,
     keyed on the partition id like edge_build's cut: a window with no
     key logs "No Partition Defined" on every run."""
-    plan = _exec_plan(spark, "graph_ktruss_edge_support", sf_dir)
+    plan = executed_plan(spark, "graph_ktruss_edge_support", sf_dir)
     (win,) = [ln for ln in plan.splitlines() if "Window [sum(n_edges" in ln]
     # Window [functions], [partition spec], [order spec]
     assert re.search(r"\], \[[^\]]+\], \[[^\]]+\]$", win), win
@@ -222,7 +219,7 @@ def test_wedge_queries_use_the_shared_edge_build(spark, sf_dir, monkeypatch):
         monkeypatch.setattr(graph, name, counting)
     for query, helper in WEDGE_QUERIES.items():
         calls.clear()
-        reg.QUERIES[query](spark, sf_dir)
+        registry.QUERIES[query](spark, sf_dir)
         # edge_build reads the posting lists once itself
         expected = (
             ["edge_build", "posting_lists"]
@@ -255,8 +252,8 @@ def test_wedge_jobs_per_query(spark, sf_dir):
     fails here."""
     jobs = {}
     for query in WEDGE_JOBS:
-        reg.run(spark, query, sf_dir, methodcaller("collect"))
-        jobs[query] = reg.run(spark, query, sf_dir, methodcaller("collect")).jobs
+        registry.run(spark, query, sf_dir, methodcaller("collect"))
+        jobs[query] = registry.run(spark, query, sf_dir, methodcaller("collect")).jobs
     assert jobs == WEDGE_JOBS
 
 
@@ -294,6 +291,6 @@ def test_kmeans_queries_use_the_shared_lloyd_and_assignment_udf(
     monkeypatch.setattr(similarity, "nearest_centroid_udf", nearest_centroid_udf)
     for query, dtype in KMEANS_QUERIES.items():
         calls.clear()
-        reg.QUERIES[query](spark, sf_dir)
+        registry.QUERIES[query](spark, sf_dir)
         expected = ["lloyd", ("nearest_centroid_udf", np.dtype(dtype))]
         assert calls == expected, (query, calls)

@@ -6,23 +6,12 @@ and contract invariants elsewhere."""
 from __future__ import annotations
 
 import re
-from decimal import ROUND_HALF_UP, Decimal
-
-import pytest
 
 from etl_data_ingestion_spark.plans import registry
 
+from tests.helpers import q, round4
+
 registry.load_all()
-
-
-def q(name, spark, sf_dir):
-    return registry.QUERIES[name](spark, sf_dir)
-
-
-def round4(x: float) -> float:
-    # Spark (and DuckDB) ROUND is half-up on the exact binary value;
-    # Python's built-in round is banker's — 4.28125 must go to 4.2813
-    return float(Decimal(x).quantize(Decimal("0.0001"), ROUND_HALF_UP))
 
 
 STOPWORDS = {"the", "a", "of", "and", "to", "in"}

@@ -3,6 +3,8 @@ equivalence, content-defined chunking invariants."""
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 
 from etl_data_ingestion_spark.catalog import load_table
@@ -10,16 +12,14 @@ from etl_data_ingestion_spark.plans import registry
 
 registry.load_all()
 
-SF = "/root/testdata/sf0.001"
 
-
-def test_ewma_matches_python_recursion(spark):
+def test_ewma_matches_python_recursion(spark, sf_dir):
     got = {
         r["day"]: (r["daily_total"], r["ewma_value"])
-        for r in registry.QUERIES["timeseries_ewma_daily"](spark, SF).collect()
+        for r in registry.QUERIES["timeseries_ewma_daily"](spark, sf_dir).collect()
     }
     daily = (
-        load_table(spark, SF, "events")
+        load_table(spark, sf_dir, "events")
         .groupBy(F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("d"))
         .agg(F.round(F.sum("value"), 6).alias("x"))
         .orderBy("d")
@@ -36,10 +36,10 @@ def test_ewma_matches_python_recursion(spark):
     assert len(got) == len(daily)
 
 
-def test_bloom_pruned_join_equals_plain_join(spark):
+def test_bloom_pruned_join_equals_plain_join(spark, sf_dir):
     # sf0.01: sf0.001's 10-supplier table has no nation-7 suppliers,
     # which would make the equality vacuous
-    sf = "/root/testdata/sf0.01"
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
     got = registry.QUERIES["join_bloom_pruned"](spark, sf)
     li = load_table(spark, sf, "lineitem")
     dim = load_table(spark, sf, "supplier").filter(F.col("s_nationkey") == 7)
@@ -67,13 +67,13 @@ def test_bloom_pruned_join_equals_plain_join(spark):
     assert want.count() > 0, "fixture must produce join matches"
 
 
-def test_bloom_prune_reduces_probe_rows(spark):
+def test_bloom_prune_reduces_probe_rows(spark, sf_dir):
     """The bitmap pre-filter must actually drop most non-matching fact
     rows (it's a prune, not a pass-through): with ~4% of suppliers in
     the dim, survivors should be well under half the fact table."""
-    li = load_table(spark, SF, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     dim = (
-        load_table(spark, SF, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .filter(F.col("s_nationkey") == 7)
         .select("s_suppkey")
     )
@@ -101,8 +101,8 @@ def test_bloom_prune_reduces_probe_rows(spark):
     assert survivors >= true_matches
 
 
-def test_cdc_chunking_contract(spark):
-    rows = registry.QUERIES["multimodal_cdc_chunking"](spark, SF).collect()
+def test_cdc_chunking_contract(spark, sf_dir):
+    rows = registry.QUERIES["multimodal_cdc_chunking"](spark, sf_dir).collect()
     assert rows, "planted duplicates must produce groups"
     for r in rows:
         assert r["n_copies"] >= 2
@@ -183,11 +183,11 @@ def test_cdc_chunker_invariants_property():
     check()
 
 
-def test_dpp_fires_on_partitioned_join(spark):
+def test_dpp_fires_on_partitioned_join(spark, sf_dir):
     """The partitioned-fact ⋈ runtime-dim join must carry a
     dynamicpruning expression in the fact scan's PartitionFilters —
     the receipt that only matching directories are read."""
-    df = registry.QUERIES["scan_partitioned_dpp"](spark, SF)
+    df = registry.QUERIES["scan_partitioned_dpp"](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "dynamicpruning" in plan.lower(), plan[:2000]
     got = {

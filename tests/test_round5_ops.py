@@ -4,8 +4,6 @@ feature exactness."""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
-
 from etl_data_ingestion_spark.operators.multimodal import (
     _png_defilter,
     _png_filter_line,
@@ -13,8 +11,6 @@ from etl_data_ingestion_spark.operators.multimodal import (
 from etl_data_ingestion_spark.plans import registry
 
 registry.load_all()
-
-SF = "/root/testdata/sf0.001"
 
 
 def test_png_filter_roundtrip_all_types():
@@ -45,9 +41,9 @@ def test_png_filter_roundtrip_all_types():
             assert bytes(out) == b"".join(src)
 
 
-def test_pack_sequences_sharded_bounds(spark):
+def test_pack_sequences_sharded_bounds(spark, sf_dir):
     rows = registry.QUERIES["pipeline_pack_sequences_sharded"](
-        spark, SF
+        spark, sf_dir
     ).collect()
     assert len(rows) == 8  # doc_id % 8 shards, all populated
     for r in rows:
@@ -60,8 +56,8 @@ def test_pack_sequences_sharded_bounds(spark):
         assert r["shard_tokens"] <= r["n_windows"] * 2048
 
 
-def test_levenshtein_banded_discriminates(spark):
-    rows = registry.QUERIES["dedup_levenshtein_banded"](spark, SF).collect()
+def test_levenshtein_banded_discriminates(spark, sf_dir):
+    rows = registry.QUERIES["dedup_levenshtein_banded"](spark, sf_dir).collect()
     pairs = {(r["a_id"], r["b_id"]): r["edit_dist"] for r in rows}
     # planted 6-edit copies (base + 1000000) are all found...
     base_ids = [a for (a, b) in pairs if b == a + 1000000]
@@ -72,8 +68,8 @@ def test_levenshtein_banded_discriminates(spark):
     assert not any(b >= 2000000 for (_, b) in pairs)
 
 
-def test_pagerank_mass_and_ranking(spark):
-    df = registry.QUERIES["graph_pagerank_bipartite"](spark, SF)
+def test_pagerank_mass_and_ranking(spark, sf_dir):
+    df = registry.QUERIES["graph_pagerank_bipartite"](spark, sf_dir)
     rows = df.collect()
     assert len(rows) == 20
     # descending, positive, deterministic top ranking
@@ -85,8 +81,8 @@ def test_pagerank_mass_and_ranking(spark):
     assert rows[0]["node"].startswith("S")
 
 
-def test_audio_features_exact(spark):
-    rows = registry.QUERIES["multimodal_audio_features"](spark, SF).collect()
+def test_audio_features_exact(spark, sf_dir):
+    rows = registry.QUERIES["multimodal_audio_features"](spark, sf_dir).collect()
     assert len(rows) == 200
     for r in rows:
         d = r["doc_id"]
@@ -97,8 +93,8 @@ def test_audio_features_exact(spark):
         assert r["zcr_per_frame_ok"]
 
 
-def test_ohlc_high_low_envelope(spark):
-    bars = registry.QUERIES["timeseries_resample_ohlc"](spark, SF).collect()
+def test_ohlc_high_low_envelope(spark, sf_dir):
+    bars = registry.QUERIES["timeseries_resample_ohlc"](spark, sf_dir).collect()
     assert bars, "no bars"
     for r in bars:
         assert r["low"] <= r["open"] <= r["high"]
@@ -106,14 +102,14 @@ def test_ohlc_high_low_envelope(spark):
         assert r["volume"] >= 1
 
 
-def test_asof_nearest_matches_bruteforce(spark):
+def test_asof_nearest_matches_bruteforce(spark, sf_dir):
     from etl_data_ingestion_spark.catalog import load_table
 
     got = {
         r["event_id"]: (r["direction"], r["nearest_view_ts"])
-        for r in registry.QUERIES["join_asof_nearest"](spark, SF).collect()
+        for r in registry.QUERIES["join_asof_nearest"](spark, sf_dir).collect()
     }
-    events = load_table(spark, SF, "events").collect()
+    events = load_table(spark, sf_dir, "events").collect()
     views = sorted(
         [e for e in events if e["event_type"] == "view"],
         key=lambda e: (e["ts"], e["event_id"]),
@@ -142,8 +138,8 @@ def test_asof_nearest_matches_bruteforce(spark):
         assert got[p["event_id"]][1] == exp_ts.strftime("%Y-%m-%d %H:%M:%S")
 
 
-def test_end_to_end_dedup_transitive(spark):
-    rows = registry.QUERIES["dedup_end_to_end_canonical"](spark, SF).collect()
+def test_end_to_end_dedup_transitive(spark, sf_dir):
+    rows = registry.QUERIES["dedup_end_to_end_canonical"](spark, sf_dir).collect()
     canon = {r["doc_id"]: r["canonical"] for r in rows}
     # every planted copy pair maps to the SAME canonical as its base,
     # and the canonical is the minimum member (the base doc)
@@ -156,8 +152,8 @@ def test_end_to_end_dedup_transitive(spark):
     assert all(r["doc_id"] == r["canonical"] for r in kept)
 
 
-def test_rfm_quartiles_cover(spark):
-    rows = registry.QUERIES["events_rfm_segmentation"](spark, SF).collect()
+def test_rfm_quartiles_cover(spark, sf_dir):
+    rows = registry.QUERIES["events_rfm_segmentation"](spark, sf_dir).collect()
     assert rows
     users = sum(r["users"] for r in rows)
     for r in rows:
@@ -165,8 +161,8 @@ def test_rfm_quartiles_cover(spark):
     assert users > 0
 
 
-def test_bigram_lm_scores_positive(spark):
-    rows = registry.QUERIES["text_bigram_lm_perplexity"](spark, SF).collect()
+def test_bigram_lm_scores_positive(spark, sf_dir):
+    rows = registry.QUERIES["text_bigram_lm_perplexity"](spark, sf_dir).collect()
     assert rows
     for r in rows:
         # add-one smoothing bounds every probability in (0, 1):
@@ -175,8 +171,8 @@ def test_bigram_lm_scores_positive(spark):
         assert r["n_bigrams"] >= 1
 
 
-def test_reachability_depths(spark):
-    rows = registry.QUERIES["graph_reachability_recursive"](spark, SF).collect()
+def test_reachability_depths(spark, sf_dir):
+    rows = registry.QUERIES["graph_reachability_recursive"](spark, sf_dir).collect()
     d = {r["node"]: r["min_depth"] for r in rows}
     assert d.get("view") == 0
     assert all(v >= 0 for v in d.values())

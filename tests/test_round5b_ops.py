@@ -14,8 +14,6 @@ from etl_data_ingestion_spark.plans import registry
 
 registry.load_all()
 
-SF = "/root/testdata/sf0.001"
-
 
 def test_attribution_tie_and_lookback(spark):
     # synthetic micro-fixture: a same-ts touch must NOT get credit
@@ -52,11 +50,11 @@ def test_attribution_tie_and_lookback(spark):
     assert "click" not in out
 
 
-def test_interval_union_coverage_identities(spark):
+def test_interval_union_coverage_identities(spark, sf_dir):
     row = registry.QUERIES["events_interval_union_coverage"](
-        spark, SF
+        spark, sf_dir
     ).collect()[0]
-    ev = spark.read.parquet(f"{SF}/events.parquet")
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     n_events = ev.count()
     n_users = ev.select("user_id").distinct().count()
     assert row["n_users"] == n_users
@@ -69,12 +67,12 @@ def test_interval_union_coverage_identities(spark):
     assert row["longest_hours"] >= 0.5
 
 
-def test_cdc_apply_supersession(spark):
-    out = registry.QUERIES["warehouse_cdc_apply"](spark, SF)
+def test_cdc_apply_supersession(spark, sf_dir):
+    out = registry.QUERIES["warehouse_cdc_apply"](spark, sf_dir)
     rows = {r["c_custkey"]: r for r in out.collect()}
     cust = {
         r["c_custkey"]: r["c_acctbal"]
-        for r in spark.read.parquet(f"{SF}/customer.parquet").collect()
+        for r in spark.read.parquet(f"{sf_dir}/customer.parquet").collect()
     }
     for k, bal in cust.items():
         if k % 10 == 0:
@@ -93,11 +91,11 @@ def test_cdc_apply_supersession(spark):
             assert rows[k + 2000000]["acctbal"] == 1000.0
 
 
-def test_expectations_discriminate(spark):
+def test_expectations_discriminate(spark, sf_dir):
     rows = {
         r["check_name"]: r
         for r in registry.QUERIES["quality_column_expectations"](
-            spark, SF
+            spark, sf_dir
         ).collect()
     }
     assert len(rows) == 6
@@ -118,9 +116,9 @@ def test_expectations_discriminate(spark):
     assert not rows["orderline_unique"]["passed"]
 
 
-def test_interval_overlap_matches_naive_theta(spark):
-    grid = registry.QUERIES["join_interval_overlap"](spark, SF)
-    orders = spark.read.parquet(f"{SF}/orders.parquet")
+def test_interval_overlap_matches_naive_theta(spark, sf_dir):
+    grid = registry.QUERIES["join_interval_overlap"](spark, sf_dir)
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     iv = orders.select(
         "o_totalprice",
         F.col("o_orderdate").alias("o_start"),
@@ -159,17 +157,17 @@ def test_interval_overlap_matches_naive_theta(spark):
     assert got == want  # grid bucketing neither drops nor double-counts
 
 
-def test_shard_assignment_manifest(spark):
-    rows = registry.QUERIES["pipeline_shard_assignment"](spark, SF).collect()
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
+def test_shard_assignment_manifest(spark, sf_dir):
+    rows = registry.QUERIES["pipeline_shard_assignment"](spark, sf_dir).collect()
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     assert sum(r["n_docs"] for r in rows) == docs.count()
     assert {r["shard"] for r in rows} == set(range(16))
     total_chars = docs.agg(F.sum("n_chars")).collect()[0][0]
     assert sum(r["total_chars"] for r in rows) == total_chars
 
 
-def test_string_agg_deterministic_under_partitioning(spark):
-    out = registry.QUERIES["agg_string_agg_ordered"](spark, SF).collect()
+def test_string_agg_deterministic_under_partitioning(spark, sf_dir):
+    out = registry.QUERIES["agg_string_agg_ordered"](spark, sf_dir).collect()
     assert len(out) == 5  # five regions
     for r in out:
         parts = r["nations"].split("|")
@@ -177,12 +175,12 @@ def test_string_agg_deterministic_under_partitioning(spark):
         assert len(parts) == r["n_nations"]
 
 
-def test_weighted_median_crossing_property(spark):
-    rows = registry.QUERIES["agg_weighted_median"](spark, SF).collect()
+def test_weighted_median_crossing_property(spark, sf_dir):
+    rows = registry.QUERIES["agg_weighted_median"](spark, sf_dir).collect()
     sup = (
-        spark.read.parquet(f"{SF}/supplier.parquet")
+        spark.read.parquet(f"{sf_dir}/supplier.parquet")
         .join(
-            spark.read.parquet(f"{SF}/nation.parquet"),
+            spark.read.parquet(f"{sf_dir}/nation.parquet"),
             F.col("s_nationkey") == F.col("n_nationkey"),
         )
         .select("n_name", "s_acctbal", (1 + F.col("s_suppkey") % 5).alias("wt"))
@@ -224,8 +222,8 @@ def test_mad_robust_to_planted_outlier(spark):
     assert r["n_outliers"] == 1  # exactly the planted extreme
 
 
-def test_cohort_ltv_monotone(spark):
-    rows = registry.QUERIES["events_cohort_ltv"](spark, SF).collect()
+def test_cohort_ltv_monotone(spark, sf_dir):
+    rows = registry.QUERIES["events_cohort_ltv"](spark, sf_dir).collect()
     by_cohort = {}
     for r in rows:
         by_cohort.setdefault(r["cohort_week"], []).append(
@@ -239,10 +237,10 @@ def test_cohort_ltv_monotone(spark):
         assert ltvs == sorted(ltvs)
 
 
-def test_resize_real_matches_numpy_reference(spark):
+def test_resize_real_matches_numpy_reference(spark, sf_dir):
     import numpy as np
 
-    rows = registry.QUERIES["multimodal_resize_real"](spark, SF).collect()
+    rows = registry.QUERIES["multimodal_resize_real"](spark, sf_dir).collect()
     assert len(rows) == 150
     for r in rows[:20]:
         d = r["doc_id"]
@@ -264,18 +262,18 @@ def test_resize_real_matches_numpy_reference(spark):
         assert (r["thumb_w"], r["thumb_h"], r["channels"]) == (6, 4, ch)
 
 
-def test_any_all_rewrite_matches_bruteforce(spark):
+def test_any_all_rewrite_matches_bruteforce(spark, sf_dir):
     rows = {
         r["nation"]: r
         for r in registry.QUERIES["subquery_any_all_quantified"](
-            spark, SF
+            spark, sf_dir
         ).collect()
     }
-    sup = spark.read.parquet(f"{SF}/supplier.parquet").collect()
-    cust = spark.read.parquet(f"{SF}/customer.parquet").collect()
+    sup = spark.read.parquet(f"{sf_dir}/supplier.parquet").collect()
+    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").collect()
     nat = {
         r["n_nationkey"]: r["n_name"]
-        for r in spark.read.parquet(f"{SF}/nation.parquet").collect()
+        for r in spark.read.parquet(f"{sf_dir}/nation.parquet").collect()
     }
     by_nat = {}
     for c in cust:
@@ -294,11 +292,11 @@ def test_any_all_rewrite_matches_bruteforce(spark):
         assert r["beats_any"] == want_any.get(n, 0), n
 
 
-def test_length_bucket_bounds(spark):
+def test_length_bucket_bounds(spark, sf_dir):
     rows = registry.QUERIES["pipeline_length_bucket_batching"](
-        spark, SF
+        spark, sf_dir
     ).collect()
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     assert sum(r["n_docs"] for r in rows) == docs.count()
     for r in rows:
         # pow2 buckets and the >= 0.5 padding-efficiency bound
@@ -308,9 +306,9 @@ def test_length_bucket_bounds(spark):
         assert r["n_batches"] >= 1
 
 
-def test_snapshot_diff_reconciles(spark):
-    r = registry.QUERIES["warehouse_snapshot_diff"](spark, SF).collect()[0]
-    cust = spark.read.parquet(f"{SF}/customer.parquet").collect()
+def test_snapshot_diff_reconciles(spark, sf_dir):
+    r = registry.QUERIES["warehouse_snapshot_diff"](spark, sf_dir).collect()[0]
+    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").collect()
     keys = [c["c_custkey"] for c in cust]
     assert r["removed"] == sum(1 for k in keys if k % 17 == 0)
     assert r["added"] == sum(1 for k in keys if k % 23 == 0)
@@ -323,8 +321,8 @@ def test_snapshot_diff_reconciles(spark):
     )
 
 
-def test_dau_wau_mau_invariants(spark):
-    rows = registry.QUERIES["events_dau_wau_mau"](spark, SF).collect()
+def test_dau_wau_mau_invariants(spark, sf_dir):
+    rows = registry.QUERIES["events_dau_wau_mau"](spark, sf_dir).collect()
     assert rows
     by_day = {r["day"]: r for r in rows}
     for r in rows:
@@ -337,8 +335,8 @@ def test_dau_wau_mau_invariants(spark):
         assert by_day[days[1]]["wau"] >= by_day[days[0]]["dau"]
 
 
-def test_winsorized_mean_damps_tail(spark):
-    rows = registry.QUERIES["agg_winsorized_mean"](spark, SF).collect()
+def test_winsorized_mean_damps_tail(spark, sf_dir):
+    rows = registry.QUERIES["agg_winsorized_mean"](spark, sf_dir).collect()
     for r in rows:
         assert r["p05"] <= r["p95"]
         # clipping can only pull the mean toward the center band
@@ -346,9 +344,9 @@ def test_winsorized_mean_damps_tail(spark):
         assert r["n_clipped"] >= 0
 
 
-def test_quantile_rollup_contract_holds(spark):
+def test_quantile_rollup_contract_holds(spark, sf_dir):
     rows = registry.QUERIES["agg_quantile_histogram_rollup"](
-        spark, SF
+        spark, sf_dir
     ).collect()
     assert rows
     for r in rows:

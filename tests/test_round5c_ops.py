@@ -11,19 +11,17 @@ from etl_data_ingestion_spark.plans import registry
 
 registry.load_all()
 
-SF = "/root/testdata/sf0.001"
 
-
-def test_permissive_scan_splits_populations(spark):
-    row = registry.QUERIES["scan_csv_permissive_corrupt"](spark, SF).collect()[0]
+def test_permissive_scan_splits_populations(spark, sf_dir):
+    row = registry.QUERIES["scan_csv_permissive_corrupt"](spark, sf_dir).collect()[0]
     assert row.n_corrupt > 0 and row.n_good > 0
     # malformation is doc-key modular: corrupt fraction ~1/7
     frac = row.n_corrupt / (row.n_corrupt + row.n_good)
     assert 0.1 < frac < 0.2
 
 
-def test_compression_contract_holds_and_discriminates(spark):
-    row = registry.QUERIES["text_compression_ratio"](spark, SF).collect()[0]
+def test_compression_contract_holds_and_discriminates(spark, sf_dir):
+    row = registry.QUERIES["text_compression_ratio"](spark, sf_dir).collect()[0]
     assert row.repeated_more_compressible
     assert row.ratios_in_range
     # local cross-check of the planted-repetition effect
@@ -33,8 +31,8 @@ def test_compression_contract_holds_and_discriminates(spark):
     ) / len(t)
 
 
-def test_ffd_bounds_and_exact_packing_small_case(spark):
-    rows = registry.QUERIES["pipeline_pack_binpack_ffd"](spark, SF).collect()
+def test_ffd_bounds_and_exact_packing_small_case(spark, sf_dir):
+    rows = registry.QUERIES["pipeline_pack_binpack_ffd"](spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert r.bins_within_bounds and r.all_bins_fit
@@ -56,17 +54,17 @@ def test_ffd_bounds_and_exact_packing_small_case(spark):
     assert len(ffd([5, 5, 4, 3, 2, 1], 10)) == 2
 
 
-def test_kmeans_partitions_all_vectors(spark):
-    rows = registry.QUERIES["ml_kmeans_lloyd_exact"](spark, SF).collect()
-    n_total = spark.read.parquet(f"{SF}/embeddings.parquet").count()
+def test_kmeans_partitions_all_vectors(spark, sf_dir):
+    rows = registry.QUERIES["ml_kmeans_lloyd_exact"](spark, sf_dir).collect()
+    n_total = spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()
     assert sum(r.n_members for r in rows) == n_total
     assert all(r.inertia >= 0 for r in rows)
     assert len(rows) <= 4
 
 
-def test_patch_embed_replaces_stub(spark):
+def test_patch_embed_replaces_stub(spark, sf_dir):
     assert "multimodal_resize_featurize_stub" not in registry.QUERIES
-    rows = registry.QUERIES["multimodal_patch_embed_real"](spark, SF).collect()
+    rows = registry.QUERIES["multimodal_patch_embed_real"](spark, sf_dir).collect()
     assert rows
     for r in rows[:20]:
         assert r.feat_dim == 16
@@ -74,17 +72,17 @@ def test_patch_embed_replaces_stub(spark):
         assert -1.0 <= r.f0 <= 1.0 and -1.0 <= r.f5 <= 1.0
 
 
-def test_bpe_apply_consistent_with_training(spark):
+def test_bpe_apply_consistent_with_training(spark, sf_dir):
     # every word's BPE token count is between 1 and its char count,
     # and doc totals respect n_bpe_tokens <= n_chars, >= n_words
-    rows = registry.QUERIES["text_bpe_apply_tokenize"](spark, SF).collect()
+    rows = registry.QUERIES["text_bpe_apply_tokenize"](spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert r.n_words <= r.n_bpe_tokens <= r.n_chars
 
 
-def test_ks_drift_properties(spark):
-    rows = registry.QUERIES["quality_ks_drift_test"](spark, SF).collect()
+def test_ks_drift_properties(spark, sf_dir):
+    rows = registry.QUERIES["quality_ks_drift_test"](spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert 0.0 <= r.ks_d <= 1.0
@@ -92,8 +90,8 @@ def test_ks_drift_properties(spark):
         assert r.reject_95 == (r.ks_d > r.crit_95)
 
 
-def test_containment_catches_planted_quotes(spark):
-    rows = registry.QUERIES["dedup_containment_quotes"](spark, SF).collect()
+def test_containment_catches_planted_quotes(spark, sf_dir):
+    rows = registry.QUERIES["dedup_containment_quotes"](spark, sf_dir).collect()
     planted = [r for r in rows if r.doc_b >= 3000000]
     assert planted, "no planted quote pairs surfaced"
     for r in planted:
@@ -101,24 +99,24 @@ def test_containment_catches_planted_quotes(spark):
         assert r.jaccard < 0.5  # the pairs Jaccard-only dedup misses
 
 
-def test_naive_bayes_separates_planted_spam(spark):
-    rows = registry.QUERIES["pipeline_naive_bayes_spam"](spark, SF).collect()
+def test_naive_bayes_separates_planted_spam(spark, sf_dir):
+    rows = registry.QUERIES["pipeline_naive_bayes_spam"](spark, sf_dir).collect()
     byl = {r.label: r for r in rows}
     assert byl["spam"].accuracy >= 0.95
     assert byl["natural"].accuracy >= 0.95
 
 
-def test_pattern_match_counts(spark):
+def test_pattern_match_counts(spark, sf_dir):
     import pyspark.sql.functions as F
 
-    rows = registry.QUERIES["events_pattern_match_regex"](spark, SF).collect()
+    rows = registry.QUERIES["events_pattern_match_regex"](spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert r.converted == (r.n_conversions > 0)
         assert r.n_bounces >= 0
     # cross-check one user by hand
     ev = (
-        spark.read.parquet(f"{SF}/events.parquet")
+        spark.read.parquet(f"{sf_dir}/events.parquet")
         .filter(F.col("user_id") == rows[0].user_id)
         .orderBy("ts", "event_id")
         .collect()
@@ -134,8 +132,8 @@ def test_pattern_match_counts(spark):
     assert len(re.findall("v[^p]*p", seq)) == rows[0].n_conversions
 
 
-def test_holt_trend_tracks_series(spark):
-    rows = registry.QUERIES["timeseries_holt_trend"](spark, SF).collect()
+def test_holt_trend_tracks_series(spark, sf_dir):
+    rows = registry.QUERIES["timeseries_holt_trend"](spark, sf_dir).collect()
     assert len(rows) >= 3
     # recompute the recursion in python from the emitted daily totals
     xs = [r.daily_total for r in rows]
@@ -150,25 +148,25 @@ def test_holt_trend_tracks_series(spark):
         assert abs(rows[i].level - l) < 0.5
 
 
-def test_incremental_moments_identity(spark):
-    rows = registry.QUERIES["warehouse_incremental_moments"](spark, SF).collect()
+def test_incremental_moments_identity(spark, sf_dir):
+    rows = registry.QUERIES["warehouse_incremental_moments"](spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert r.merge_identity_holds
         assert abs(r.merged_mean - r.fullscan_mean) < 1e-5
 
 
-def test_geo_radius_grid_equals_bruteforce(spark):
+def test_geo_radius_grid_equals_bruteforce(spark, sf_dir):
     import math
 
     rows = {
         r.store_id: r
-        for r in registry.QUERIES["join_geo_radius_grid"](spark, SF).collect()
+        for r in registry.QUERIES["join_geo_radius_grid"](spark, sf_dir).collect()
     }
-    cust = spark.read.parquet(f"{SF}/customer.parquet").filter(
+    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").filter(
         "c_custkey < 2000"
     ).collect()
-    supp = spark.read.parquet(f"{SF}/supplier.parquet").collect()
+    supp = spark.read.parquet(f"{sf_dir}/supplier.parquet").collect()
 
     def hav(lat1, lon1, lat2, lon2):
         la1, lo1, la2, lo2 = map(math.radians, [lat1, lon1, lat2, lon2])
@@ -201,33 +199,33 @@ def test_geo_radius_grid_equals_bruteforce(spark):
             assert k not in rows
 
 
-def test_bucketed_join_zero_exchange_receipt(spark):
+def test_bucketed_join_zero_exchange_receipt(spark, sf_dir):
     rows = registry.QUERIES["scan_bucketed_join_zero_exchange"](
-        spark, SF
+        spark, sf_dir
     ).collect()
     assert rows
     assert all(r.zero_exchange for r in rows)
 
 
-def test_entity_resolution_links_planted_perturbations(spark):
-    rows = registry.QUERIES["pipeline_entity_resolution"](spark, SF).collect()
+def test_entity_resolution_links_planted_perturbations(spark, sf_dir):
+    rows = registry.QUERIES["pipeline_entity_resolution"](spark, sf_dir).collect()
     assert rows
     correct = sum(1 for r in rows if r.correct)
     assert correct / len(rows) >= 0.99  # mild perturbations, truth known
     assert all(r.accepted for r in rows if r.correct)
 
 
-def test_k_anonymity_accounting(spark):
-    rows = registry.QUERIES["quality_k_anonymity"](spark, SF).collect()
+def test_k_anonymity_accounting(spark, sf_dir):
+    rows = registry.QUERIES["quality_k_anonymity"](spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert r.n_violating_classes <= r.n_classes
         assert r.k5_anonymous == (r.min_class_size >= 5)
 
 
-def test_index_persist_reuse_contract(spark):
+def test_index_persist_reuse_contract(spark, sf_dir):
     rows = registry.QUERIES["similarity_index_persist_reuse"](
-        spark, SF
+        spark, sf_dir
     ).collect()
     assert len(rows) == 3
     for r in rows:
@@ -236,8 +234,8 @@ def test_index_persist_reuse_contract(spark):
         assert r.index_complete
 
 
-def test_lerp_fill_interpolates_linearly(spark):
-    rows = registry.QUERIES["timeseries_lerp_fill"](spark, SF).collect()
+def test_lerp_fill_interpolates_linearly(spark, sf_dir):
+    rows = registry.QUERIES["timeseries_lerp_fill"](spark, sf_dir).collect()
     assert rows
     by_day = {r.day: r for r in rows}
     obs = [r for r in rows if r.observed]
@@ -257,11 +255,11 @@ def test_lerp_fill_interpolates_linearly(spark):
             assert lo - 1e-6 <= r.filled_value <= hi + 1e-6
 
 
-def test_equi_depth_histogram_depth_balance(spark):
-    rows = registry.QUERIES["agg_equi_depth_histogram"](spark, SF).collect()
+def test_equi_depth_histogram_depth_balance(spark, sf_dir):
+    rows = registry.QUERIES["agg_equi_depth_histogram"](spark, sf_dir).collect()
     assert len(rows) == 10
     total = sum(r.n_rows for r in rows)
-    n = spark.read.parquet(f"{SF}/lineitem.parquet").count()
+    n = spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
     assert total == n  # partition of the table
     # equi-depth: each decile within 2x of the ideal tenth (discrete
     # ties can unbalance small data)
@@ -269,22 +267,22 @@ def test_equi_depth_histogram_depth_balance(spark):
         assert r.n_rows <= 2 * (n / 10) + 50
 
 
-def test_seasonal_decompose_identity(spark):
-    rows = registry.QUERIES["timeseries_seasonal_decompose"](spark, SF).collect()
+def test_seasonal_decompose_identity(spark, sf_dir):
+    rows = registry.QUERIES["timeseries_seasonal_decompose"](spark, sf_dir).collect()
     assert rows
     for r in rows:
         # additive identity: total = trend + seasonal + residual
         assert abs(r.daily_total - (r.trend + r.seasonal + r.residual)) < 0.01
 
 
-def test_triangle_count_matches_bruteforce(spark):
-    row = registry.QUERIES["graph_triangle_count"](spark, SF).collect()[0]
+def test_triangle_count_matches_bruteforce(spark, sf_dir):
+    row = registry.QUERIES["graph_triangle_count"](spark, sf_dir).collect()[0]
     # brute-force reference on the same derived graph
     import itertools
     from collections import Counter
 
-    orders = spark.read.parquet(f"{SF}/orders.parquet").collect()
-    li = spark.read.parquet(f"{SF}/lineitem.parquet").collect()
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").collect()
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").collect()
     okey_cust = {o.o_orderkey: o.o_custkey for o in orders}
     cs = {(okey_cust[l.l_orderkey], l.l_suppkey) for l in li
           if l.l_orderkey in okey_cust and l.l_suppkey < 1000}
@@ -319,16 +317,16 @@ def test_triangle_count_matches_bruteforce(spark):
     assert row.n_nodes == len(adj)
 
 
-def test_ahash_finds_planted_brightness_copies(spark):
-    rows = registry.QUERIES["multimodal_image_ahash_dedup"](spark, SF).collect()
+def test_ahash_finds_planted_brightness_copies(spark, sf_dir):
+    rows = registry.QUERIES["multimodal_image_ahash_dedup"](spark, sf_dir).collect()
     assert rows, "no planted near-dup image pairs found"
     for r in rows:
         assert r.doc_b == r.doc_a + 7000000
         assert r.hamming <= 2  # brightness shift barely moves aHash
 
 
-def test_link_prediction_excludes_existing_edges(spark):
-    preds = registry.QUERIES["graph_link_prediction"](spark, SF).collect()
+def test_link_prediction_excludes_existing_edges(spark, sf_dir):
+    preds = registry.QUERIES["graph_link_prediction"](spark, sf_dir).collect()
     assert preds
     assert all(p.common_neighbors >= 1 for p in preds)
     # descending score order with deterministic tie-break
@@ -336,20 +334,20 @@ def test_link_prediction_excludes_existing_edges(spark):
     assert scores == sorted(scores, reverse=True)
 
 
-def test_conversion_latency_percentile_ordering(spark):
-    r = registry.QUERIES["funnel_conversion_latency"](spark, SF).collect()[0]
+def test_conversion_latency_percentile_ordering(spark, sf_dir):
+    r = registry.QUERIES["funnel_conversion_latency"](spark, sf_dir).collect()[0]
     assert r.n_converted > 0
     assert r.p50_minutes <= r.p90_minutes <= r.p99_minutes <= r.max_minutes
 
 
-def test_zorder_skipping_beats_single_sort(spark):
-    r = registry.QUERIES["warehouse_zorder_skipping"](spark, SF).collect()[0]
+def test_zorder_skipping_beats_single_sort(spark, sf_dir):
+    r = registry.QUERIES["warehouse_zorder_skipping"](spark, sf_dir).collect()[0]
     assert r.zorder_wins
     assert r.zorder_skip_frac >= r.valuesort_skip_frac
 
 
-def test_welch_ttest_null_hypothesis_holds(spark):
-    rows = registry.QUERIES["agg_welch_ttest"](spark, SF).collect()
+def test_welch_ttest_null_hypothesis_holds(spark, sf_dir):
+    rows = registry.QUERIES["agg_welch_ttest"](spark, sf_dir).collect()
     assert rows
     for r in rows:
         # arms are a hash split of the same population: no significance
@@ -357,8 +355,8 @@ def test_welch_ttest_null_hypothesis_holds(spark):
         assert r.welch_df > 0
 
 
-def test_vad_segments_match_mask_pattern(spark):
-    rows = registry.QUERIES["multimodal_audio_vad_segments"](spark, SF).collect()
+def test_vad_segments_match_mask_pattern(spark, sf_dir):
+    rows = registry.QUERIES["multimodal_audio_vad_segments"](spark, sf_dir).collect()
     assert rows
     for r in rows[:20]:
         d = r.doc_id
@@ -378,15 +376,15 @@ def test_vad_segments_match_mask_pattern(spark):
         assert r.longest_segment == max(segs)
 
 
-def test_scd2_temporal_join_covers_every_event(spark):
-    rows = registry.QUERIES["join_scd2_temporal"](spark, SF).collect()
+def test_scd2_temporal_join_covers_every_event(spark, sf_dir):
+    rows = registry.QUERIES["join_scd2_temporal"](spark, sf_dir).collect()
     total = sum(r.n_events for r in rows)
-    n = spark.read.parquet(f"{SF}/events.parquet").count()
+    n = spark.read.parquet(f"{sf_dir}/events.parquet").count()
     assert total == n  # half-open ranges partition time: no leak/dup
 
 
-def test_poisson_anomaly_flag_semantics(spark):
-    rows = registry.QUERIES["agg_poisson_rate_anomaly"](spark, SF).collect()
+def test_poisson_anomaly_flag_semantics(spark, sf_dir):
+    rows = registry.QUERIES["agg_poisson_rate_anomaly"](spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert r.anomaly == (abs(r.z_score) > 3 or
@@ -394,9 +392,9 @@ def test_poisson_anomaly_flag_semantics(spark):
         assert r.expected > 0
 
 
-def test_curriculum_phases_partition_corpus(spark):
-    rows = registry.QUERIES["pipeline_curriculum_buckets"](spark, SF).collect()
-    n = spark.read.parquet(f"{SF}/documents.parquet").count()
+def test_curriculum_phases_partition_corpus(spark, sf_dir):
+    rows = registry.QUERIES["pipeline_curriculum_buckets"](spark, sf_dir).collect()
+    n = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
     assert sum(r.n_docs for r in rows) == n
     # phase score ranges are ordered and non-overlapping
     ordered = sorted(rows, key=lambda r: r.phase)
@@ -404,12 +402,12 @@ def test_curriculum_phases_partition_corpus(spark):
         assert lo.max_score <= hi.min_score or lo.max_score <= hi.max_score
 
 
-def test_higher_moments_match_numpy(spark):
+def test_higher_moments_match_numpy(spark, sf_dir):
     import numpy as np
 
     rows = {r.event_type: r
-            for r in registry.QUERIES["agg_higher_moments"](spark, SF).collect()}
-    ev = spark.read.parquet(f"{SF}/events.parquet").collect()
+            for r in registry.QUERIES["agg_higher_moments"](spark, sf_dir).collect()}
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet").collect()
     by_type = {}
     for e in ev:
         by_type.setdefault(e.event_type, []).append(e.value)
@@ -422,8 +420,8 @@ def test_higher_moments_match_numpy(spark):
         assert abs(rows[t].excess_kurtosis_pop - kurt) < 1e-3
 
 
-def test_ratio_delta_ci_positive_se(spark):
-    rows = registry.QUERIES["agg_ratio_delta_ci"](spark, SF).collect()
+def test_ratio_delta_ci_positive_se(spark, sf_dir):
+    rows = registry.QUERIES["agg_ratio_delta_ci"](spark, sf_dir).collect()
     assert len(rows) == 2
     for r in rows:
         assert r.ratio > 0
@@ -431,22 +429,22 @@ def test_ratio_delta_ci_positive_se(spark):
         assert abs(r.ci95_halfwidth - round(1.96 * r.ratio_se, 6)) < 1e-4
 
 
-def test_js_divergence_bounds(spark):
+def test_js_divergence_bounds(spark, sf_dir):
     import math
 
-    rows = registry.QUERIES["text_js_divergence_sources"](spark, SF).collect()
+    rows = registry.QUERIES["text_js_divergence_sources"](spark, sf_dir).collect()
     assert rows
     for r in rows:
         # JSD (nats) is bounded by ln(2)
         assert 0.0 <= r.js_divergence <= math.log(2) + 1e-9
 
 
-def test_gini_bounds_and_numpy_crosscheck(spark):
+def test_gini_bounds_and_numpy_crosscheck(spark, sf_dir):
     import numpy as np
 
-    r = registry.QUERIES["agg_gini_coefficient"](spark, SF).collect()[0]
+    r = registry.QUERIES["agg_gini_coefficient"](spark, sf_dir).collect()[0]
     assert 0.0 <= r.gini <= 1.0
-    ev = spark.read.parquet(f"{SF}/events.parquet").collect()
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet").collect()
     spend = {}
     for e in ev:
         spend[e.user_id] = round(spend.get(e.user_id, 0.0) + e.value, 10)
@@ -456,16 +454,16 @@ def test_gini_bounds_and_numpy_crosscheck(spark):
     assert abs(r.gini - gini) < 1e-4
 
 
-def test_cusum_peak_is_argmax(spark):
-    r = registry.QUERIES["timeseries_cusum_changepoint"](spark, SF).collect()[0]
+def test_cusum_peak_is_argmax(spark, sf_dir):
+    r = registry.QUERIES["timeseries_cusum_changepoint"](spark, sf_dir).collect()[0]
     assert r.normalized_peak >= 0
     assert r.shift_detected == (r.normalized_peak > 3)
 
 
-def test_entropy_bounds(spark):
+def test_entropy_bounds(spark, sf_dir):
     import math
 
-    rows = registry.QUERIES["agg_categorical_entropy_daily"](spark, SF).collect()
+    rows = registry.QUERIES["agg_categorical_entropy_daily"](spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert 0.0 <= r.type_entropy <= math.log(r.n_types) + 1e-9

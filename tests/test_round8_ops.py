@@ -12,11 +12,9 @@ import numpy as np
 
 from etl_data_ingestion_spark.plans import registry
 
+from tests.helpers import q
+
 registry.load_all()
-
-
-def q(name, spark, sf_dir):
-    return registry.QUERIES[name](spark, sf_dir)
 
 
 def _daily_cents(spark, sf_dir):

@@ -212,7 +212,7 @@ def test_anova_weekday_high_volume_no_overflow(spark, tmp_path):
     assert sg_max * sg_max * 10000 > 2**63
 
 
-def test_phrase_index_oracle_long_document(spark, tmp_path):
+def test_phrase_index_oracle_long_document(spark, sf_dir, tmp_path):
     """A >4096-token document must contribute ALL its positions to the
     oracle's postings (the old fixed generate_series(1,4096) truncated
     it). Build a tiny corpus where the top bigram's count depends on
@@ -225,7 +225,7 @@ def test_phrase_index_oracle_long_document(spark, tmp_path):
     )
     # documents fixture schema: check what columns the query reads
     docs_path = os.path.join(str(tmp_path), "documents.parquet")
-    real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    real = spark.read.parquet(f"{sf_dir}/documents.parquet")
     base = {f.name: f.dataType.simpleString() for f in real.schema.fields}
     # pad missing columns with nulls to match the fixture schema
     out = df

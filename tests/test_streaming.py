@@ -6,7 +6,6 @@ plus watermarked dedup.
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 import pytest
 
 from etl_data_ingestion_spark.catalog import load_table
@@ -729,77 +728,3 @@ def test_stream_jobs_per_file_kind(spark, tmp_path, monkeypatch):
     assert group[0]
     assert jobs == [("before", 0), (len(FILE_KINDS), 2)]
     assert len(group_jobs()) == 2
-
-
-def test_stream_left_outer_join_emits_unmatched(spark, sf_dir, tmp_path):
-    """The streaming face: a watermarked LEFT OUTER stream-stream
-    join must emit NULL-view rows for view-less purchases once the
-    watermark passes — proven by appending a far-future sentinel
-    view that advances the watermark past every join window, then
-    comparing against the batch outer join."""
-    from etl_data_ingestion_spark.streaming import (
-        purchase_view_interval_join_outer,
-    )
-
-    batch = load_table(spark, sf_dir, "events")
-    # sentinels on BOTH sides: the global watermark is the MIN across
-    # the two withWatermark operators, so advancing only the view
-    # side leaves the max-ts purchase's window unprovably open (its
-    # own side's watermark trails it) — observed as exactly one
-    # missing outer row before the purchase sentinel was added
-    mx = batch.agg(
-        F.max("ts").alias("mts"), F.max("event_id").alias("mid")
-    )
-    sentinel = mx.select(
-        (F.col("mid") + 1).alias("event_id"),
-        (F.col("mts") + F.expr("INTERVAL 30 DAYS")).alias("ts"),
-        F.lit(-1).cast("long").alias("user_id"),
-        F.lit("view").alias("event_type"),
-        F.lit(0.0).alias("value"),
-        F.lit("{}").alias("props"),
-    ).unionByName(
-        mx.select(
-            (F.col("mid") + 2).alias("event_id"),
-            (F.col("mts") + F.expr("INTERVAL 30 DAYS")).alias("ts"),
-            F.lit(-2).cast("long").alias("user_id"),
-            F.lit("purchase").alias("event_type"),
-            F.lit(0.0).alias("value"),
-            F.lit("{}").alias("props"),
-        )
-    )
-    src = str(tmp_path / "outer_src")
-    full = batch.select(
-        "event_id", "ts", "user_id", "event_type", "value", "props"
-    ).unionByName(sentinel)
-    # ONE file -> one data micro-batch; the outer rows then flush in
-    # the no-data batch Spark triggers after the watermark advances
-    # (file-source ordering is arbitrary, so multiple batches could
-    # process the sentinel FIRST and late-drop everything else)
-    full.coalesce(1).write.parquet(src)
-    stream = spark.readStream.schema(full.schema).parquet(src)
-    joined = purchase_view_interval_join_outer(
-        stream.filter("event_type = 'purchase'"),
-        stream.filter("event_type = 'view'"),
-    )
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("outer_join_out")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = spark.table("outer_join_out").collect()
-    expected = purchase_view_interval_join_outer(
-        full.filter("event_type = 'purchase'"),
-        full.filter("event_type = 'view'"),
-    ).collect()
-    # the sentinel purchase itself can never flush (nothing advances
-    # the watermark past it) — compare real rows only
-    key = lambda rows: {
-        (r["p_id"], r["v_id"]) for r in rows if r["p_user"] >= 0
-    }
-    got_pairs, exp_pairs = key(got), key(expected)
-    assert any(v is None for _, v in exp_pairs), "batch must have unmatched"
-    assert got_pairs == exp_pairs

@@ -1,13 +1,11 @@
-"""The layout of this test suite, checked with the stdlib ``ast``: test
-modules are named after what they test, not after when they were
-written, and no module binds a top-level name twice (a merge that
-shadows a ``test_*`` function would otherwise drop it silently)."""
+"""The layout of this test suite, checked with the stdlib ``ast``: no
+test module binds a top-level name twice (a merge that shadows a
+``test_*`` function would otherwise drop it silently)."""
 
 from __future__ import annotations
 
 import ast
 import os
-import re
 from collections import Counter
 
 TESTS = os.path.dirname(os.path.abspath(__file__))
@@ -27,10 +25,6 @@ def _bound(node) -> list[str]:
         return []
     elts = [e for t in targets for e in (t.elts if isinstance(t, ast.Tuple) else [t])]
     return [e.id for e in elts if isinstance(e, ast.Name)]
-
-
-def test_no_test_module_is_named_by_round_or_wave():
-    assert [f for f in MODULES if re.search(r"round|wave", f)] == []
 
 
 def test_no_test_module_binds_a_name_twice():

@@ -6,7 +6,6 @@ detection, and the registered frame-sampling query's shape."""
 from __future__ import annotations
 
 import pytest
-from hypothesis import given, settings, strategies as st
 
 from etl_data_ingestion_spark.operators.video import (
     lzw_decode,
@@ -82,9 +81,3 @@ def test_video_frames_query_shape(spark, sf_dir):
             p = f.width * f.height
             expect = sum((a + i) % 256 for i in range(p))
             assert f.pixel_sum == expect
-
-
-@settings(max_examples=60, deadline=None)
-@given(st.binary(min_size=0, max_size=4000))
-def test_lzw_roundtrip_arbitrary_bytes(data):
-    assert lzw_decode(lzw_encode(data)) == data

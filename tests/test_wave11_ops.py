@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import csv
 import glob
-import math
 from collections import Counter
 
 from etl_data_ingestion_spark.plans import registry

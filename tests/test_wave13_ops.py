@@ -6,7 +6,6 @@ driven against a real stream with a watermark-advancing sentinel."""
 from __future__ import annotations
 
 import datetime
-import math
 from collections import Counter, defaultdict
 
 import pyspark.sql.functions as F

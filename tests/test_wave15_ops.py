@@ -4,7 +4,7 @@ test (tie-corrected) and the per-brand log-log elasticity slope."""
 from __future__ import annotations
 
 import math
-from collections import Counter, defaultdict
+from collections import defaultdict
 
 from etl_data_ingestion_spark.plans import registry
 

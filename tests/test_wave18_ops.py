@@ -7,13 +7,10 @@ from __future__ import annotations
 import math
 from collections import Counter, defaultdict
 
+from etl_data_ingestion_spark.functions.numeric import snap
 from etl_data_ingestion_spark.plans import registry
 
 registry.load_all()
-
-
-def snap6(x: float) -> float:
-    return math.floor(x * 1e6 + 0.5) / 1e6
 
 
 def test_kruskal_wallis_matches_python(spark, sf_dir):
@@ -52,8 +49,8 @@ def test_kruskal_wallis_matches_python(spark, sf_dir):
     [row] = registry.QUERIES["agg_kruskal_wallis"](spark, sf_dir).collect()
     assert row.n_orders == n
     assert row.n_groups == len(rg)
-    assert row.h_stat == snap6(h)
-    assert row.h_corrected == snap6(hc)
+    assert row.h_stat == snap(h, 6, math.floor)
+    assert row.h_corrected == snap(hc, 6, math.floor)
     assert row.h_stat >= 0.0
 
 
@@ -108,8 +105,8 @@ def test_bh_fdr_matches_python(spark, sf_dir):
     for i, nk in enumerate(order, 1):
         r = got[nk]
         assert r.n_customers == g[nk][0]
-        assert r.z_score == snap6(zs[nk])
-        assert r.p_value == snap6(ps[nk])
+        assert r.z_score == snap(zs[nk], 6, math.floor)
+        assert r.p_value == snap(ps[nk], 6, math.floor)
         assert r.p_rank == i
         assert r.rejected == (1 if i <= cutoff else 0)
 
@@ -147,7 +144,7 @@ def test_runs_test_matches_python(spark, sf_dir):
         n2,
         runs,
     )
-    assert row.z_score == snap6(z)
+    assert row.z_score == snap(z, 6, math.floor)
 
 
 def test_pacf_matches_python(spark, sf_dir):
@@ -190,9 +187,9 @@ def test_pacf_matches_python(spark, sf_dir):
     # the daily cents here re-sum floats in Python order, so allow a
     # 1e-6 snap step of drift on the inputs; the engine/oracle pair
     # is the exact gate, this mirror is the sanity opinion
-    assert abs(got[1] - snap6(r1)) <= 2e-6
-    assert abs(got[2] - snap6(phi22)) <= 2e-6
-    assert abs(got[3] - snap6(phi33)) <= 2e-6
+    assert abs(got[1] - snap(r1, 6, math.floor)) <= 2e-6
+    assert abs(got[2] - snap(phi22, 6, math.floor)) <= 2e-6
+    assert abs(got[3] - snap(phi33, 6, math.floor)) <= 2e-6
 
 
 def test_cochran_armitage_matches_python(spark, sf_dir):
@@ -220,4 +217,4 @@ def test_cochran_armitage_matches_python(spark, sf_dir):
     assert row.n_orders == n
     assert row.n_levels == len(per)
     assert row.n_finished == rr
-    assert row.z_trend == snap6(z)
+    assert row.z_trend == snap(z, 6, math.floor)

@@ -7,25 +7,16 @@ import datetime
 import math
 from collections import defaultdict
 
+from etl_data_ingestion_spark.functions.numeric import snap
 from etl_data_ingestion_spark.plans import registry
+
+from tests.helpers import event_rows
 
 registry.load_all()
 
 
-def snap(x, d):
-    return math.floor(x * 10**d + 0.5) / 10**d
-
-
-def _events(spark, sf_dir):
-    return (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .selectExpr("user_id", "ts", "event_type", "value", "event_id")
-        .collect()
-    )
-
-
 def test_position_attribution_matches_python(spark, sf_dir):
-    rows = _events(spark, sf_dir)
+    rows = event_rows(spark, sf_dir)
     first_purchase: dict = {}
     for r in rows:
         if r.event_type == "purchase":
@@ -63,7 +54,7 @@ def test_position_attribution_matches_python(spark, sf_dir):
         ).collect()
     }
     expect = {
-        ch: (n, snap(c9 / 1e9, 4)) for ch, (n, c9) in credit.items()
+        ch: (n, snap(c9 / 1e9, 4, math.floor)) for ch, (n, c9) in credit.items()
     }
     assert got == expect
     # total credited conversions ~= number of converting users
@@ -72,7 +63,7 @@ def test_position_attribution_matches_python(spark, sf_dir):
 
 
 def test_variance_ratio_matches_python(spark, sf_dir):
-    rows = _events(spark, sf_dir)
+    rows = event_rows(spark, sf_dir)
     daily: dict = defaultdict(float)
     for r in rows:
         daily[str(r.ts.date())] += r.value
@@ -91,12 +82,12 @@ def test_variance_ratio_matches_python(spark, sf_dir):
         spark, sf_dir
     ).collect()
     assert row.n_diffs == n
-    assert abs(row.variance_ratio - snap(vr, 6)) <= 2e-6
-    assert abs(row.z_score - snap(z, 6)) <= 2e-6
+    assert abs(row.variance_ratio - snap(vr, 6, math.floor)) <= 2e-6
+    assert abs(row.z_score - snap(z, 6, math.floor)) <= 2e-6
 
 
 def test_wow_growth_matches_python(spark, sf_dir):
-    rows = _events(spark, sf_dir)
+    rows = event_rows(spark, sf_dir)
     weekly: dict = defaultdict(float)
     for r in rows:
         d = r.ts.date()
@@ -121,12 +112,12 @@ def test_wow_growth_matches_python(spark, sf_dir):
         # cents; integer fields must be exact
         assert got[i][0] == str(w)
         assert got[i][1] == rev
-        assert abs(got[i][2] - snap(growth, 6)) <= 2e-6
-        assert abs(got[i][3] - snap(s4 * 1.0 / c4, 4)) <= 2e-4
+        assert abs(got[i][2] - snap(growth, 6, math.floor)) <= 2e-6
+        assert abs(got[i][3] - snap(s4 * 1.0 / c4, 4, math.floor)) <= 2e-4
 
 
 def test_churn_matches_python(spark, sf_dir):
-    rows = _events(spark, sf_dir)
+    rows = event_rows(spark, sf_dir)
     uw = set()
     for r in rows:
         d = r.ts.date()
@@ -145,5 +136,5 @@ def test_churn_matches_python(spark, sf_dir):
         churned = {
             u for u in users if (u, w + datetime.timedelta(days=7)) not in uw
         }
-        rate = snap(len(churned) * 1.0 / len(users), 6)
+        rate = snap(len(churned) * 1.0 / len(users), 6, math.floor)
         assert got[str(w)] == (len(users), len(churned), rate), w

@@ -7,6 +7,8 @@ from collections import defaultdict
 
 from etl_data_ingestion_spark.plans import registry
 
+from tests.helpers import daily_cents_sql
+
 registry.load_all()
 
 
@@ -82,21 +84,8 @@ def test_decayed_engagement_matches_python(spark, sf_dir):
         assert abs(r.engagement_score - v[1] / 1e9) < 2e-6, u
 
 
-def _daily_cents(spark, sf_dir):
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .selectExpr("CAST(ts AS DATE) AS d", "value")
-        .groupBy("d")
-        .agg({"value": "sum"})
-        .withColumnRenamed("sum(value)", "v")
-        .selectExpr("d", "CAST(FLOOR(v * 100 + 0.5) AS LONG) AS y")
-        .collect()
-    )
-    return sorted((r.d, r.y) for r in rows)
-
-
 def test_grubbs_matches_python(spark, sf_dir):
-    daily = _daily_cents(spark, sf_dir)
+    daily = daily_cents_sql(spark, sf_dir)
     ys = [y for _, y in daily]
     n, s = len(ys), sum(ys)
     q = sum(y * y for y in ys)
@@ -110,7 +99,7 @@ def test_grubbs_matches_python(spark, sf_dir):
 
 
 def test_var_es_matches_python(spark, sf_dir):
-    daily = _daily_cents(spark, sf_dir)
+    daily = daily_cents_sql(spark, sf_dir)
     ys = [y for _, y in daily]
     diffs = [b - a for a, b in zip(ys, ys[1:])]
     n = len(diffs)

@@ -12,8 +12,6 @@ from etl_data_ingestion_spark.plans import registry
 
 registry.load_all()
 
-SF = "/root/testdata/sf0.001"
-
 
 def test_t_closeness_missing_cell_fold(spark, sf_dir):
     """The shared-denominator algebra folds missing (class,
@@ -21,12 +19,12 @@ def test_t_closeness_missing_cell_fold(spark, sf_dir):
     brute-force TV computation on the same fixture."""
     out = {
         r.c_nationkey: r.max_tvd
-        for r in registry.QUERIES["quality_t_closeness"](spark, SF).collect()
+        for r in registry.QUERIES["quality_t_closeness"](spark, sf_dir).collect()
     }
     from etl_data_ingestion_spark.catalog import load_table
 
-    c = load_table(spark, SF, "customer")
-    o = load_table(spark, SF, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     rows = (
         c.join(o, o.o_custkey == c.c_custkey)
         .select(
@@ -60,14 +58,14 @@ def test_split_hash_deterministic_and_disjoint(spark, sf_dir):
     """The multiplicative hash split is a pure function of doc_id:
     two runs agree exactly, and train+test == total per source."""
     q = registry.QUERIES["pipeline_train_test_split_hash"]
-    a = sorted(map(tuple, q(spark, SF).collect()))
-    b = sorted(map(tuple, q(spark, SF).collect()))
+    a = sorted(map(tuple, q(spark, sf_dir).collect()))
+    b = sorted(map(tuple, q(spark, sf_dir).collect()))
     assert a == b
     from etl_data_ingestion_spark.catalog import load_table
 
     totals = {
         r.source: r.cnt
-        for r in load_table(spark, SF, "documents")
+        for r in load_table(spark, sf_dir, "documents")
         .groupBy("source")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .collect()
@@ -113,7 +111,7 @@ def test_roc_points_margins_consistent(spark, sf_dir):
     """TPR/FPR are exact count ratios: monotone non-increasing in
     the threshold, and tp <= pos / fp <= neg via the snapped ratios
     staying in [0, 1]."""
-    rows = registry.QUERIES["ml_roc_curve_points"](spark, SF).collect()
+    rows = registry.QUERIES["ml_roc_curve_points"](spark, sf_dir).collect()
     assert [r.threshold for r in rows] == [
         round(0.1 * i, 1) for i in range(1, 10)
     ]
@@ -129,7 +127,7 @@ def test_ewma_crossover_signal_definition(spark, sf_dir):
     with a monotone series the fast EWMA hugs the data, so the
     signal is constant after day 1 and n_crossovers is small.
     Sanity-pin the output contract (one row, counts bounded)."""
-    r = registry.QUERIES["timeseries_ewma_crossover"](spark, SF).collect()
+    r = registry.QUERIES["timeseries_ewma_crossover"](spark, sf_dir).collect()
     assert len(r) == 1
     row = r[0]
     assert row.n_crossovers >= 0 and row.n_crossovers < row.n_days

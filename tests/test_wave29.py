@@ -11,37 +11,19 @@ from collections import Counter, defaultdict
 import pyspark.sql.functions as F
 
 from etl_data_ingestion_spark.catalog import load_table
+from etl_data_ingestion_spark.functions.numeric import snap
 from etl_data_ingestion_spark.plans import registry
 
+from tests.helpers import daily_cents_rows
+
 registry.load_all()
-
-SF = "/root/testdata/sf0.001"
-
-
-def _snap(x, d=6):
-    return math.floor(x * 10**d + 0.5) / 10**d
-
-
-def _daily_cents(spark):
-    ev = load_table(spark, SF, "events")
-    rows = (
-        ev.groupBy(F.to_date("ts").alias("d"))
-        .agg(
-            F.floor(F.sum("value") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("y")
-        )
-        .orderBy("d")
-        .collect()
-    )
-    return [(r.d, r.y) for r in rows]
 
 
 def test_friedman_matches_bruteforce(spark, sf_dir):
     """Tie-averaged within-block ranks + the tie-corrected Q,
     recomputed directly from (week, weekday, cents) cells."""
-    out = registry.QUERIES["agg_friedman_test"](spark, SF).collect()[0]
-    ev = load_table(spark, SF, "events")
+    out = registry.QUERIES["agg_friedman_test"](spark, sf_dir).collect()[0]
+    ev = load_table(spark, sf_dir, "events")
     cells = (
         ev.groupBy(
             F.date_trunc("week", "ts").alias("w"),
@@ -72,13 +54,13 @@ def test_friedman_matches_bruteforce(spark, sf_dir):
             a4 += r2 * r2
     sq = sum((rank_sum[j] - 8 * n) ** 2 for j in range(1, 8))
     q = 6.0 * sq / (a4 - 448 * n)
-    assert abs(out.q_stat - _snap(q)) < 1e-9
+    assert abs(out.q_stat - snap(q, 6, math.floor)) < 1e-9
 
 
 def test_cronbach_alpha_matches_bruteforce(spark, sf_dir):
     """Population variances over the exact per-customer item cents."""
-    out = registry.QUERIES["agg_cronbach_alpha"](spark, SF).collect()[0]
-    od = load_table(spark, SF, "orders").collect()
+    out = registry.QUERIES["agg_cronbach_alpha"](spark, sf_dir).collect()[0]
+    od = load_table(spark, sf_dir, "orders").collect()
     per = defaultdict(lambda: [0.0, 0.0, 0.0])
     idx = {"O": 0, "F": 1, "P": 2}
     for r in od:
@@ -104,9 +86,9 @@ def test_decision_stump_is_argmin_over_all_thresholds(spark, sf_dir):
     must achieve the global minimum weighted Gini with the
     smallest-threshold tie-break, and the max-quantity split must
     be excluded."""
-    out = registry.QUERIES["ml_decision_stump_gini"](spark, SF).collect()[0]
+    out = registry.QUERIES["ml_decision_stump_gini"](spark, sf_dir).collect()[0]
     li = (
-        load_table(spark, SF, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .select(
             F.col("l_quantity").cast("long").alias("q"),
             (F.col("l_returnflag") == "R").cast("int").alias("y"),
@@ -131,7 +113,7 @@ def test_decision_stump_is_argmin_over_all_thresholds(spark, sf_dir):
         if best is None or (g, q) < best:
             best = (g, q)
     assert out.threshold_qty == best[1]
-    assert abs(out.weighted_gini - _snap(best[0])) < 1e-9
+    assert abs(out.weighted_gini - snap(best[0], 6, math.floor)) < 1e-9
     assert out.n_left + out.n_right == N
     assert out.pos_left + out.pos_right == P
 
@@ -140,9 +122,9 @@ def test_permutation_entropy_matches_bruteforce(spark, sf_dir):
     """Sign-triple codes over consecutive day triples, entropy in
     nats and normalized by ln 6 — ties keep their own symbol."""
     out = registry.QUERIES["timeseries_permutation_entropy"](
-        spark, SF
+        spark, sf_dir
     ).collect()[0]
-    ys = [y for _, y in _daily_cents(spark)]
+    ys = [y for _, y in daily_cents_rows(spark, sf_dir)]
 
     def s(a, b):
         return ">" if b > a else ("<" if b < a else "=")
@@ -163,10 +145,10 @@ def test_rich_club_matches_bruteforce(spark, sf_dir):
     """N_k / E_k suffix sums equal a direct both-endpoints-over-k
     count, and phi is NULL below two club nodes."""
     rows = registry.QUERIES["graph_rich_club_coefficient"](
-        spark, SF
+        spark, sf_dir
     ).collect()
     li = (
-        load_table(spark, SF, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_suppkey")
         .collect()
     )
@@ -192,6 +174,6 @@ def test_rich_club_matches_bruteforce(spark, sf_dir):
         assert r.n_club_edges == ek
         if len(club) >= 2:
             phi = 2.0 * ek / (len(club) * (len(club) - 1.0))
-            assert abs(r.rich_club_phi - _snap(phi)) < 1e-9
+            assert abs(r.rich_club_phi - snap(phi, 6, math.floor)) < 1e-9
         else:
             assert r.rich_club_phi is None

@@ -6,41 +6,23 @@ from __future__ import annotations
 import math
 from collections import Counter, defaultdict
 
-import pyspark.sql.functions as F
-
 from etl_data_ingestion_spark.catalog import load_table
+from etl_data_ingestion_spark.functions.numeric import snap
 from etl_data_ingestion_spark.plans import registry
+
+from tests.helpers import daily_cents_rows
 
 registry.load_all()
 
-SF = "/root/testdata/sf0.001"
+
 GAMMA = 0.5772156649015329
-
-
-def _snap(x, d=6):
-    return math.floor(x * 10**d + 0.5) / 10**d
-
-
-def _daily_cents(spark):
-    ev = load_table(spark, SF, "events")
-    rows = (
-        ev.groupBy(F.to_date("ts").alias("d"))
-        .agg(
-            F.floor(F.sum("value") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("y")
-        )
-        .orderBy("d")
-        .collect()
-    )
-    return [(r.d, r.y) for r in rows]
 
 
 def test_gumbel_fit_matches_bruteforce(spark, sf_dir):
     """Weekly maxima, sample variance, method-of-moments mu/beta,
     and the fitted exceedance of the historical worst."""
-    out = registry.QUERIES["agg_gumbel_block_maxima"](spark, SF).collect()[0]
-    daily = _daily_cents(spark)
+    out = registry.QUERIES["agg_gumbel_block_maxima"](spark, sf_dir).collect()[0]
+    daily = daily_cents_rows(spark, sf_dir)
     mx = defaultdict(int)
     for d, y in daily:
         wk = d.isocalendar()[:2]
@@ -60,8 +42,8 @@ def test_gumbel_fit_matches_bruteforce(spark, sf_dir):
 
 def test_cochran_q_matches_bruteforce(spark, sf_dir):
     """Fraction-free integer Q over per-customer indicator triples."""
-    out = registry.QUERIES["agg_cochran_q_test"](spark, SF).collect()[0]
-    od = load_table(spark, SF, "orders").collect()
+    out = registry.QUERIES["agg_cochran_q_test"](spark, sf_dir).collect()[0]
+    od = load_table(spark, sf_dir, "orders").collect()
     resp = defaultdict(lambda: [0, 0, 0])
     idx = {"O": 0, "F": 1, "P": 2}
     for r in od:
@@ -73,18 +55,18 @@ def test_cochran_q_matches_bruteforce(spark, sf_dir):
     q = 2.0 * (3 * sum(ci * ci for ci in c) - t * t) / (3 * t - sr2)
     assert out.n_blocks == len(rows)
     assert out.t_total == t
-    assert abs(out.q_stat - _snap(q)) < 1e-9
+    assert abs(out.q_stat - snap(q, 6, math.floor)) < 1e-9
 
 
 def test_fisher_lda_direction_and_separation(spark, sf_dir):
     """The closed-form w must solve cov_pooled @ w = d exactly, the
     published direction is unit-norm, and the Mahalanobis value is
     d . w."""
-    out = registry.QUERIES["ml_fisher_lda_closed_form"](spark, SF).collect()[
+    out = registry.QUERIES["ml_fisher_lda_closed_form"](spark, sf_dir).collect()[
         0
     ]
-    od = load_table(spark, SF, "orders").collect()
-    li = load_table(spark, SF, "lineitem").collect()
+    od = load_table(spark, sf_dir, "orders").collect()
+    li = load_table(spark, sf_dir, "lineitem").collect()
     lc = Counter(r.l_orderkey for r in li)
     feats = {0: [], 1: []}
     for r in od:
@@ -128,10 +110,10 @@ def test_fisher_lda_direction_and_separation(spark, sf_dir):
 
 def test_sample_entropy_matches_bruteforce(spark, sf_dir):
     """Richman-Moorman counts with the exact same r threshold."""
-    out = registry.QUERIES["timeseries_sample_entropy"](spark, SF).collect()[
+    out = registry.QUERIES["timeseries_sample_entropy"](spark, sf_dir).collect()[
         0
     ]
-    ys = [y for _, y in _daily_cents(spark)]
+    ys = [y for _, y in daily_cents_rows(spark, sf_dir)]
     n = len(ys)
     mean = sum(ys) / n
     r = 0.2 * math.sqrt(sum(y * y for y in ys) / n - mean * mean)
@@ -150,7 +132,7 @@ def test_sample_entropy_matches_bruteforce(spark, sf_dir):
     assert out.b_matches == b_cnt
     assert out.a_matches == a_cnt
     if a_cnt and b_cnt:
-        assert abs(out.sampen - _snap(-math.log(a_cnt / b_cnt))) < 1e-9
+        assert abs(out.sampen - snap(-math.log(a_cnt / b_cnt), 6, math.floor)) < 1e-9
     else:
         assert out.sampen is None
 
@@ -163,12 +145,12 @@ def test_fd_profile_truth_table(spark, sf_dir):
     rows = {
         r.fd: r
         for r in registry.QUERIES["quality_functional_dependencies"](
-            spark, SF
+            spark, sf_dir
         ).collect()
     }
     assert rows["o_orderkey->o_custkey"].holds == 1
     assert rows["o_orderkey->o_custkey"].max_rhs_variants == 1
-    li = load_table(spark, SF, "lineitem").collect()
+    li = load_table(spark, sf_dir, "lineitem").collect()
     comp = defaultdict(set)
     for r in li:
         comp[(r.l_orderkey, r.l_linenumber)].add(r.l_partkey)

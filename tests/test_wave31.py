@@ -6,27 +6,20 @@ from __future__ import annotations
 import math
 from collections import Counter, defaultdict
 
-import pyspark.sql.functions as F
-
 from etl_data_ingestion_spark.catalog import load_table
+from etl_data_ingestion_spark.functions.numeric import snap
 from etl_data_ingestion_spark.plans import registry
 
 registry.load_all()
-
-SF = "/root/testdata/sf0.001"
-
-
-def _snap(x, d=6):
-    return math.floor(x * 10**d + 0.5) / 10**d
 
 
 def test_engle_granger_matches_bruteforce(spark, sf_dir):
     """OLS on the cumulative levels, snapped residuals, exact-integer
     ADF sums, and the expanded error-sum identity."""
     out = registry.QUERIES["timeseries_engle_granger_coint"](
-        spark, SF
+        spark, sf_dir
     ).collect()[0]
-    ev = load_table(spark, SF, "events").collect()
+    ev = load_table(spark, sf_dir, "events").collect()
     dv, dp = Counter(), Counter()
     for r in ev:
         d = r.ts.date()
@@ -63,8 +56,8 @@ def test_engle_granger_matches_bruteforce(spark, sf_dir):
         ((s_de2 * 1.0 - rho * s_eld) / (m - 1)) / s_el2
     )
     assert out.n_days == n
-    assert abs(out.beta - _snap(beta)) < 1e-9
-    assert abs(out.rho - _snap(rho)) < 1e-9
+    assert abs(out.beta - snap(beta, 6, math.floor)) < 1e-9
+    assert abs(out.rho - snap(rho, 6, math.floor)) < 1e-9
     assert abs(out.adf_t - math.floor(t * 1e4 + 0.5) / 1e4) < 1e-9
     # cointegration direction: rho must be a mean-reverting pull
     assert out.rho < 0
@@ -74,9 +67,9 @@ def test_jackknife_ratio_matches_bruteforce(spark, sf_dir):
     """Every delete-1 replicate in closed form; the centered-integer
     variance equals the direct sum of squared deviations."""
     out = registry.QUERIES["ml_jackknife_ratio_variance"](
-        spark, SF
+        spark, sf_dir
     ).collect()[0]
-    li = load_table(spark, SF, "lineitem").collect()
+    li = load_table(spark, sf_dir, "lineitem").collect()
     revs = [
         math.floor(r.l_extendedprice * (1 - r.l_discount) * 100 + 0.5)
         for r in li
@@ -101,9 +94,9 @@ def test_chapman_matches_bruteforce(spark, sf_dir):
     """Presence flags, the Chapman point estimate and its SE; the
     estimator should land within a few SE of the observable truth."""
     out = registry.QUERIES["agg_capture_recapture_chapman"](
-        spark, SF
+        spark, sf_dir
     ).collect()[0]
-    ev = load_table(spark, SF, "events").collect()
+    ev = load_table(spark, sf_dir, "events").collect()
     first, second = set(), set()
     for r in ev:
         if r.ts.day <= 15:
@@ -126,8 +119,8 @@ def test_chapman_matches_bruteforce(spark, sf_dir):
 def test_poisson_deviance_dense_grid(spark, sf_dir):
     """mu from the fixed 20-day train window; the eval grid must be
     dense (5 types x eval days) with y=0 terms contributing 2*mu."""
-    rows = registry.QUERIES["ml_poisson_deviance"](spark, SF).collect()
-    ev = load_table(spark, SF, "events").collect()
+    rows = registry.QUERIES["ml_poisson_deviance"](spark, sf_dir).collect()
+    ev = load_table(spark, sf_dir, "events").collect()
     cnt = Counter()
     eval_days = set()
     for r in ev:
@@ -143,7 +136,7 @@ def test_poisson_deviance_dense_grid(spark, sf_dir):
                 if t == r.event_type and d.day <= 20)
             / 20.0
         )
-        assert abs(r.mu_daily - _snap(mu)) < 1e-9
+        assert abs(r.mu_daily - snap(mu, 6, math.floor)) < 1e-9
         assert r.n_eval_days == len(eval_days)
         dev = 0
         for d in eval_days:
@@ -154,7 +147,7 @@ def test_poisson_deviance_dense_grid(spark, sf_dir):
                 else 2.0 * mu
             )
             dev += math.floor(term * 1e9 + 0.5)
-        assert abs(r.poisson_deviance - _snap(dev / 1e9)) < 1e-9
+        assert abs(r.poisson_deviance - snap(dev / 1e9, 6, math.floor)) < 1e-9
 
 
 def test_burrows_delta_matches_bruteforce(spark, sf_dir):
@@ -162,8 +155,8 @@ def test_burrows_delta_matches_bruteforce(spark, sf_dir):
     z-deltas, smallest-delta pairs first."""
     import re
 
-    rows = registry.QUERIES["text_burrows_delta"](spark, SF).collect()
-    docs = load_table(spark, SF, "documents").collect()
+    rows = registry.QUERIES["text_burrows_delta"](spark, sf_dir).collect()
+    docs = load_table(spark, sf_dir, "documents").collect()
     toks = defaultdict(list)
     for r in docs:
         toks[r.source].extend(re.findall(r"[a-z]+", r.text.lower()))
@@ -195,7 +188,7 @@ def test_burrows_delta_matches_bruteforce(spark, sf_dir):
                 math.floor(abs(z[(s1, w)] - z[(s2, w)]) * 1e9 + 0.5)
                 for w in top
             )
-            deltas.append((_snap(d9 / 30 / 1e9), s1, s2))
+            deltas.append((snap(d9 / 30 / 1e9, 6, math.floor), s1, s2))
     deltas.sort()
     assert len(rows) == 10
     for r, (d, s1, s2) in zip(rows, deltas[:10]):

@@ -4,29 +4,22 @@ recomputation on the sf0.001 fixture."""
 from __future__ import annotations
 
 import math
-from collections import Counter, defaultdict
-
-import pyspark.sql.functions as F
+from collections import Counter
 
 from etl_data_ingestion_spark.catalog import load_table
+from etl_data_ingestion_spark.functions.numeric import snap
 from etl_data_ingestion_spark.plans import registry
 
 registry.load_all()
-
-SF = "/root/testdata/sf0.001"
-
-
-def _snap(x, d=6):
-    return math.floor(x * 10**d + 0.5) / 10**d
 
 
 def test_kpss_matches_bruteforce(spark, sf_dir):
     """n-scaled demeaning, exact partial-sum squares, Bartlett q=3
     long-run variance via the multiplied-through integer identity."""
     out = registry.QUERIES["timeseries_kpss_stationarity"](
-        spark, SF
+        spark, sf_dir
     ).collect()[0]
-    ev = load_table(spark, SF, "events").collect()
+    ev = load_table(spark, sf_dir, "events").collect()
     daily = Counter()
     for r in ev:
         daily[r.ts.date()] += r.value
@@ -46,7 +39,7 @@ def test_kpss_matches_bruteforce(spark, sf_dir):
     ]
     eta = 4.0 * ss2 / (n * (4.0 * g[0] + 2.0 * (3.0 * g[1] + 2.0 * g[2] + g[3])))
     assert out.n_days == n
-    assert abs(out.kpss_eta - _snap(eta)) < 1e-9
+    assert abs(out.kpss_eta - snap(eta, 6, math.floor)) < 1e-9
     # sanity: the demeaned partial sums telescope to zero
     assert s[-1] == 0
 
@@ -55,9 +48,9 @@ def test_loo_1nn_matches_bruteforce(spark, sf_dir):
     """Every vector's nearest other vector by cosine (smaller-id tie
     break) votes; per-label accuracy matches the direct count."""
     rows = registry.QUERIES["ml_loo_1nn_embedding_accuracy"](
-        spark, SF
+        spark, sf_dir
     ).collect()
-    emb = load_table(spark, SF, "embeddings").collect()
+    emb = load_table(spark, sf_dir, "embeddings").collect()
     vecs = {r.vec_id: (list(r.embedding), r.label) for r in emb}
 
     def cos(a, b):
@@ -92,12 +85,12 @@ def test_eb_shrinkage_pulls_toward_prior_mean(spark, sf_dir):
     rate lies strictly between its raw rate and the prior mean (or
     equals both when they coincide), and small-n brands move more."""
     rows = registry.QUERIES["ml_empirical_bayes_shrinkage"](
-        spark, SF
+        spark, sf_dir
     ).collect()
-    li = load_table(spark, SF, "lineitem").collect()
+    li = load_table(spark, sf_dir, "lineitem").collect()
     pt = {
         r.p_partkey: r.p_brand
-        for r in load_table(spark, SF, "part").collect()
+        for r in load_table(spark, sf_dir, "part").collect()
     }
     n, pos = Counter(), Counter()
     for r in li:
@@ -115,8 +108,8 @@ def test_eb_shrinkage_pulls_toward_prior_mean(spark, sf_dir):
     for r in rows:
         raw = pos[r.brand] / n[r.brand]
         shrunk = (pos[r.brand] + ab * m) / (n[r.brand] + ab)
-        assert abs(r.raw_rate - _snap(raw)) < 1e-9
-        assert abs(r.shrunk_rate - _snap(shrunk)) < 1e-9
+        assert abs(r.raw_rate - snap(raw, 6, math.floor)) < 1e-9
+        assert abs(r.shrunk_rate - snap(shrunk, 6, math.floor)) < 1e-9
         lo, hi = sorted((raw, m))
         assert lo - 1e-9 <= shrunk <= hi + 1e-9
 
@@ -125,9 +118,9 @@ def test_conformal_order_statistic_and_coverage(spark, sf_dir):
     """The radius is exactly the ceil((n+1)*0.75)-th smallest snapped
     calibration residual, and coverage counts eval days inside it."""
     rows = registry.QUERIES["ml_conformal_interval_coverage"](
-        spark, SF
+        spark, sf_dir
     ).collect()
-    ev = load_table(spark, SF, "events").collect()
+    ev = load_table(spark, sf_dir, "events").collect()
     cnt = Counter()
     days = set()
     for r in ev:
@@ -145,7 +138,7 @@ def test_conformal_order_statistic_and_coverage(spark, sf_dir):
             )
             / 15.0
         )
-        assert abs(r.mu_daily - _snap(mu)) < 1e-9
+        assert abs(r.mu_daily - snap(mu, 6, math.floor)) < 1e-9
         cal = sorted(
             (
                 math.floor(
@@ -158,7 +151,7 @@ def test_conformal_order_statistic_and_coverage(spark, sf_dir):
         )
         kth = math.ceil((len(cal) + 1) * 0.75)
         q6 = cal[kth - 1][0]
-        assert abs(r.conformal_radius - _snap(q6 / 1e6)) < 1e-9
+        assert abs(r.conformal_radius - snap(q6 / 1e6, 6, math.floor)) < 1e-9
         ev_days = [d for d in days if d.day >= 24]
         cov = sum(
             1

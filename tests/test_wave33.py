@@ -6,25 +6,18 @@ from __future__ import annotations
 import math
 from collections import Counter, defaultdict
 
-import pyspark.sql.functions as F
-
 from etl_data_ingestion_spark.catalog import load_table
+from etl_data_ingestion_spark.functions.numeric import snap
 from etl_data_ingestion_spark.plans import registry
 
 registry.load_all()
-
-SF = "/root/testdata/sf0.001"
-
-
-def _snap(x, d=6):
-    return math.floor(x * 10**d + 0.5) / 10**d
 
 
 def test_logrank_matches_bruteforce(spark, sf_dir):
     """Censored lifetimes, dense at-risk suffix sums, snapped E/V
     terms, and the O-E chi-square."""
-    out = registry.QUERIES["ml_logrank_test"](spark, SF).collect()[0]
-    ev = load_table(spark, SF, "events").collect()
+    out = registry.QUERIES["ml_logrank_test"](spark, sf_dir).collect()[0]
+    ev = load_table(spark, sf_dir, "events").collect()
     first, firstp = {}, {}
     mx = max(r.ts.date() for r in ev)
     for r in ev:
@@ -58,13 +51,13 @@ def test_logrank_matches_bruteforce(spark, sf_dir):
                 / (nt * 1.0 * nt * (nt - 1)) * 1e9 + 0.5
             )
     assert out.observed_g1 == o1
-    assert abs(out.expected_g1 - _snap(e1_9 / 1e9)) < 1e-9
+    assert abs(out.expected_g1 - snap(e1_9 / 1e9, 6, math.floor)) < 1e-9
     chi2 = (o1 - e1_9 / 1e9) ** 2 / (v_9 / 1e9)
     assert abs(out.chi2_logrank - math.floor(chi2 * 1e4 + 0.5) / 1e4) < 1e-9
 
 
-def _daily(spark):
-    ev = load_table(spark, SF, "events").collect()
+def _daily(spark, sf_dir):
+    ev = load_table(spark, sf_dir, "events").collect()
     d = defaultdict(float)
     for r in ev:
         d[r.ts.date()] += r.value
@@ -74,9 +67,9 @@ def _daily(spark):
 def test_energy_distance_matches_bruteforce(spark, sf_dir):
     """V-statistic pair sums over the day domain, and D^2 >= 0."""
     out = registry.QUERIES["agg_energy_distance_weekend"](
-        spark, SF
+        spark, sf_dir
     ).collect()[0]
-    daily = _daily(spark)
+    daily = _daily(spark, sf_dir)
     xs = [y for d, y in daily.items() if d.isoweekday() <= 5]
     ys = [y for d, y in daily.items() if d.isoweekday() >= 6]
     n1, n2 = len(xs), len(ys)
@@ -96,10 +89,10 @@ def test_energy_distance_matches_bruteforce(spark, sf_dir):
 def test_circular_stats_matches_bruteforce(spark, sf_dir):
     """Minute-binned snapped trig sums; mean hour wraps correctly
     and R lands in [0, 1]."""
-    out = registry.QUERIES["agg_circular_hour_stats"](spark, SF).collect()[
+    out = registry.QUERIES["agg_circular_hour_stats"](spark, sf_dir).collect()[
         0
     ]
-    ev = load_table(spark, SF, "events").collect()
+    ev = load_table(spark, sf_dir, "events").collect()
     mins = Counter()
     for r in ev:
         sod = (
@@ -117,7 +110,7 @@ def test_circular_stats_matches_bruteforce(spark, sf_dir):
     hour = (a + (2 * math.pi if a < 0 else 0)) / (2 * math.pi) * 24
     assert out.n_events == n
     assert abs(out.mean_hour - math.floor(hour * 1e4 + 0.5) / 1e4) < 1e-9
-    assert abs(out.resultant_r - _snap(r)) < 1e-9
+    assert abs(out.resultant_r - snap(r, 6, math.floor)) < 1e-9
     assert 0.0 <= out.resultant_r <= 1.0
     assert abs(out.rayleigh_z - math.floor(n * r * r * 100 + 0.5) / 100) < 1e-9
 
@@ -126,9 +119,9 @@ def test_post_stratified_lift_matches_bruteforce(spark, sf_dir):
     """Tercile cutoffs as exact order statistics, per-stratum snapped
     terms, and the weight identity sum(w_s) == 1."""
     out = registry.QUERIES["events_post_stratified_lift"](
-        spark, SF
+        spark, sf_dir
     ).collect()[0]
-    ev = load_table(spark, SF, "events").collect()
+    ev = load_table(spark, sf_dir, "events").collect()
     n_ev, conv = Counter(), Counter()
     for r in ev:
         n_ev[r.user_id] += 1
@@ -171,7 +164,7 @@ def test_post_stratified_lift_matches_bruteforce(spark, sf_dir):
         tx0 += x0
     assert out.n_users == nn
     naive = tx1 / tn1 - tx0 / tn0
-    assert abs(out.naive_lift - _snap(naive)) < 1e-9
-    assert abs(out.stratified_lift - _snap(l12 / 1e12)) < 1e-9
-    assert abs(out.stratified_se - _snap(math.sqrt(v12 / 1e12))) < 1e-9
+    assert abs(out.naive_lift - snap(naive, 6, math.floor)) < 1e-9
+    assert abs(out.stratified_lift - snap(l12 / 1e12, 6, math.floor)) < 1e-9
+    assert abs(out.stratified_se - snap(math.sqrt(v12 / 1e12), 6, math.floor)) < 1e-9
     assert sum((c[0] + c[2]) / nn for c in cells.values()) == 1.0

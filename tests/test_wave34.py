@@ -6,22 +6,15 @@ from __future__ import annotations
 import math
 from collections import Counter, defaultdict
 
-import pyspark.sql.functions as F
-
 from etl_data_ingestion_spark.catalog import load_table
+from etl_data_ingestion_spark.functions.numeric import snap
 from etl_data_ingestion_spark.plans import registry
 
 registry.load_all()
 
-SF = "/root/testdata/sf0.001"
 
-
-def _snap(x, d=6):
-    return math.floor(x * 10**d + 0.5) / 10**d
-
-
-def _daily_xyz(spark):
-    ev = load_table(spark, SF, "events").collect()
+def _daily_xyz(spark, sf_dir):
+    ev = load_table(spark, sf_dir, "events").collect()
     agg = defaultdict(lambda: [0, 0, 0, 0.0])
     for r in ev:
         d = r.ts.date()
@@ -42,8 +35,8 @@ def _daily_xyz(spark):
 def test_xi_matches_bruteforce_and_detects_dependence(spark, sf_dir):
     """Peer-inclusive ranks, x-then-day sort, the exact walk sum —
     and xi(y, y) would be ~1 (sanity of the rank device)."""
-    out = registry.QUERIES["ml_xi_correlation"](spark, SF).collect()[0]
-    daily = _daily_xyz(spark)
+    out = registry.QUERIES["ml_xi_correlation"](spark, sf_dir).collect()[0]
+    daily = _daily_xyz(spark, sf_dir)
     rows = [(d, v[0], v[3]) for d, v in daily.items()]
     n = len(rows)
     ys = sorted(y for _, _, y in rows)
@@ -55,7 +48,7 @@ def test_xi_matches_bruteforce_and_detects_dependence(spark, sf_dir):
     )
     xi = 1.0 - 3.0 * sdr / (n * 1.0 * n - 1)
     assert out.n_days == n
-    assert abs(out.xi_coefficient - _snap(xi)) < 1e-9
+    assert abs(out.xi_coefficient - snap(xi, 6, math.floor)) < 1e-9
     # device sanity: a perfectly dependent series gives xi near 1
     perfect = sorted(range(1, n + 1))
     sdr_p = sum(
@@ -66,9 +59,9 @@ def test_xi_matches_bruteforce_and_detects_dependence(spark, sf_dir):
 
 def test_tail_dependence_matches_bruteforce(spark, sf_dir):
     out = registry.QUERIES["agg_tail_dependence_extremes"](
-        spark, SF
+        spark, sf_dir
     ).collect()[0]
-    daily = _daily_xyz(spark)
+    daily = _daily_xyz(spark, sf_dir)
     xs = sorted(v[0] for v in daily.values())
     ys = sorted(v[3] for v in daily.values())
     n = len(xs)
@@ -93,10 +86,10 @@ def test_tail_dependence_matches_bruteforce(spark, sf_dir):
 
 def test_partial_correlation_matches_bruteforce(spark, sf_dir):
     """The partial r equals the residual-correlation identity."""
-    out = registry.QUERIES["agg_partial_correlation"](spark, SF).collect()[
+    out = registry.QUERIES["agg_partial_correlation"](spark, sf_dir).collect()[
         0
     ]
-    daily = _daily_xyz(spark)
+    daily = _daily_xyz(spark, sf_dir)
     xs = [v[0] for v in daily.values()]
     ys = [v[1] for v in daily.values()]
     zs = [v[2] for v in daily.values()]
@@ -116,17 +109,17 @@ def test_partial_correlation_matches_bruteforce(spark, sf_dir):
         (1 - rxz * rxz) * (1 - ryz * ryz)
     )
     assert out.n_days == n
-    assert abs(out.r_view_purchase - _snap(rxy)) < 2e-6
-    assert abs(out.r_partial_given_clicks - _snap(part)) < 2e-6
+    assert abs(out.r_view_purchase - snap(rxy, 6, math.floor)) < 2e-6
+    assert abs(out.r_partial_given_clicks - snap(part, 6, math.floor)) < 2e-6
 
 
 def test_sprt_walk_and_decision(spark, sf_dir):
     """The snapped-increment walk, the Wald boundaries, and the
     first-crossing decision rule."""
-    out = registry.QUERIES["ml_sprt_sequential_test"](spark, SF).collect()[
+    out = registry.QUERIES["ml_sprt_sequential_test"](spark, sf_dir).collect()[
         0
     ]
-    ev = load_table(spark, SF, "events").collect()
+    ev = load_table(spark, sf_dir, "events").collect()
     s, t = Counter(), Counter()
     for r in ev:
         d = r.ts.date()
@@ -145,7 +138,7 @@ def test_sprt_walk_and_decision(spark, sf_dir):
         if cross is None and (c9 >= a9 or c9 <= b9):
             cross = (d, "accept_h1" if c9 >= a9 else "accept_h0")
     assert out.n_days == len(days)
-    assert abs(out.final_llr - _snap(c9 / 1e9)) < 1e-9
+    assert abs(out.final_llr - snap(c9 / 1e9, 6, math.floor)) < 1e-9
     if cross is None:
         assert out.decision == "continue"
         assert out.crossing_day is None

@@ -7,27 +7,20 @@ import math
 import re
 from collections import Counter, defaultdict
 
-import pyspark.sql.functions as F
-
 from etl_data_ingestion_spark.catalog import load_table
+from etl_data_ingestion_spark.functions.numeric import snap
 from etl_data_ingestion_spark.plans import registry
 
 registry.load_all()
-
-SF = "/root/testdata/sf0.001"
-
-
-def _snap(x, d=6):
-    return math.floor(x * 10**d + 0.5) / 10**d
 
 
 def test_cuped_matches_bruteforce_and_reduces_variance(spark, sf_dir):
     """theta from exact moments, the lift identity, and the defining
     property: residual variance <= raw variance."""
     out = registry.QUERIES["events_cuped_adjusted_lift"](
-        spark, SF
+        spark, sf_dir
     ).collect()[0]
-    ev = load_table(spark, SF, "events").collect()
+    ev = load_table(spark, sf_dir, "events").collect()
     xs, ys = Counter(), Counter()
     users = set()
     for r in ev:
@@ -49,17 +42,17 @@ def test_cuped_matches_bruteforce_and_reduces_variance(spark, sf_dir):
     naive = sum(Y[u] for u in g1) / len(g1) - sum(Y[u] for u in g0) / len(g0)
     xgap = sum(X[u] for u in g1) / len(g1) - sum(X[u] for u in g0) / len(g0)
     assert out.n_users == n
-    assert abs(out.theta - _snap(theta)) < 1e-9
-    assert abs(out.naive_lift - _snap(naive)) < 1e-9
-    assert abs(out.cuped_lift - _snap(naive - theta * xgap)) < 1e-9
+    assert abs(out.theta - snap(theta, 6, math.floor)) < 1e-9
+    assert abs(out.naive_lift - snap(naive, 6, math.floor)) < 1e-9
+    assert abs(out.cuped_lift - snap(naive - theta * xgap, 6, math.floor)) < 1e-9
     assert 0.0 <= out.var_reduction_pct <= 100.0
 
 
 def test_lmoments_match_bruteforce_and_bounds(spark, sf_dir):
     """b_k from sorted ranks, the lambda ladder, and the L-ratio
     bounds |tau3| < 1, tau4 in (-0.25, 1)."""
-    out = registry.QUERIES["agg_lmoments_daily"](spark, SF).collect()[0]
-    ev = load_table(spark, SF, "events").collect()
+    out = registry.QUERIES["agg_lmoments_daily"](spark, sf_dir).collect()[0]
+    ev = load_table(spark, sf_dir, "events").collect()
     daily = defaultdict(float)
     for r in ev:
         daily[r.ts.date()] += r.value
@@ -79,9 +72,9 @@ def test_lmoments_match_bruteforce_and_bounds(spark, sf_dir):
     assert out.n_days == n
     assert abs(out.l1_dollars - math.floor(l1 + 0.5) / 100) < 1e-9
     assert abs(out.l2_dollars - math.floor(l2 + 0.5) / 100) < 1e-9
-    assert abs(out.l_cv - _snap(l2 / l1)) < 1e-9
-    assert abs(out.l_skewness - _snap(l3 / l2)) < 1e-9
-    assert abs(out.l_kurtosis - _snap(l4 / l2)) < 1e-9
+    assert abs(out.l_cv - snap(l2 / l1, 6, math.floor)) < 1e-9
+    assert abs(out.l_skewness - snap(l3 / l2, 6, math.floor)) < 1e-9
+    assert abs(out.l_kurtosis - snap(l4 / l2, 6, math.floor)) < 1e-9
     assert abs(out.l_skewness) < 1.0
     assert -0.25 < out.l_kurtosis < 1.0
 
@@ -94,7 +87,7 @@ def test_threshold_curve_monotone_and_matches_single_threshold(
     rows = {
         r.threshold: r
         for r in registry.QUERIES["pipeline_dedup_threshold_curve"](
-            spark, SF
+            spark, sf_dir
         ).collect()
     }
     assert sorted(rows) == [0.3, 0.5, 0.7, 0.8, 0.9]
@@ -103,7 +96,7 @@ def test_threshold_curve_monotone_and_matches_single_threshold(
     removed = [rows[t].n_docs_removed for t in sorted(rows)]
     assert removed == sorted(removed, reverse=True)
     # brute force at t=0.5 on the same synthetic corpus
-    docs = load_table(spark, SF, "documents").collect()
+    docs = load_table(spark, sf_dir, "documents").collect()
     corpus = {}
     for r in docs:
         if r.doc_id < 150:

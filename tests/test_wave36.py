@@ -6,19 +6,14 @@ from __future__ import annotations
 import math
 from collections import defaultdict
 
-import pyspark.sql.functions as F
-
 from etl_data_ingestion_spark.catalog import load_table
+from etl_data_ingestion_spark.functions.numeric import snap
 from etl_data_ingestion_spark.plans import registry
 
 registry.load_all()
 
-SF = "/root/testdata/sf0.001"
+
 TYPES = ["view", "click", "purchase", "signup", "error"]
-
-
-def _snap(x, d=6):
-    return math.floor(x * 10**d + 0.5) / 10**d
 
 
 def test_ledoit_wolf_matches_dense_bruteforce(spark, sf_dir):
@@ -26,9 +21,9 @@ def test_ledoit_wolf_matches_dense_bruteforce(spark, sf_dir):
     DENSE matrices directly (no identities) and verify the identity
     form the operator uses agrees; lambda must land in [0, 1]."""
     out = registry.QUERIES["agg_ledoit_wolf_shrinkage"](
-        spark, SF
+        spark, sf_dir
     ).collect()[0]
-    ev = load_table(spark, SF, "events").collect()
+    ev = load_table(spark, sf_dir, "events").collect()
     days = defaultdict(lambda: [0] * 5)
     for r in ev:
         days[r.ts.date()][TYPES.index(r.event_type)] += 1
@@ -57,7 +52,7 @@ def test_ledoit_wolf_matches_dense_bruteforce(spark, sf_dir):
     assert abs(out.mu_diag - mu) < 1e-4
     assert abs(out.d2 - d2) < max(1e-4, 1e-6 * abs(d2))
     assert abs(out.bbar2_uncapped - disp) < max(1e-4, 1e-6 * abs(disp))
-    assert abs(out.shrinkage_lambda - _snap(lam)) < 1e-5
+    assert abs(out.shrinkage_lambda - snap(lam, 6, math.floor)) < 1e-5
     assert 0.0 <= out.shrinkage_lambda <= 1.0
 
 
@@ -65,9 +60,9 @@ def test_power_analysis_matches_bruteforce(spark, sf_dir):
     """Observed rates, the closed-form n-per-arm, and the A&S
     polynomial power evaluated the same way."""
     out = registry.QUERIES["ml_power_analysis_two_prop"](
-        spark, SF
+        spark, sf_dir
     ).collect()[0]
-    ev = load_table(spark, SF, "events").collect()
+    ev = load_table(spark, sf_dir, "events").collect()
     g = {0: [0, 0], 1: [0, 0]}
     for r in ev:
         c = g[r.user_id % 2]
@@ -85,8 +80,8 @@ def test_power_analysis_matches_bruteforce(spark, sf_dir):
     )
     se = math.sqrt(p0 * (1 - p0) / n0 + p1 * (1 - p1) / n1)
     assert out.n_events == n0 + n1
-    assert abs(out.rate_control - _snap(p0)) < 1e-9
-    assert abs(out.rate_treatment - _snap(p1)) < 1e-9
+    assert abs(out.rate_control - snap(p0, 6, math.floor)) < 1e-9
+    assert abs(out.rate_treatment - snap(p1, 6, math.floor)) < 1e-9
     if delta > 0:
         assert out.n_per_arm_for_80pct_power == math.ceil(
             num * num / (delta * delta)

@@ -6,18 +6,14 @@ from __future__ import annotations
 import math
 from collections import defaultdict
 
-import pyspark.sql.functions as F
-
 from etl_data_ingestion_spark.catalog import load_table
 from etl_data_ingestion_spark.plans import registry
 
 registry.load_all()
 
-SF = "/root/testdata/sf0.001"
 
-
-def _daily(spark):
-    ev = load_table(spark, SF, "events").collect()
+def _daily(spark, sf_dir):
+    ev = load_table(spark, sf_dir, "events").collect()
     d = defaultdict(float)
     for r in ev:
         d[r.ts.date()] += r.value
@@ -26,9 +22,9 @@ def _daily(spark):
 
 def test_turning_points_matches_bruteforce(spark, sf_dir):
     out = registry.QUERIES["timeseries_turning_points_test"](
-        spark, SF
+        spark, sf_dir
     ).collect()[0]
-    ys = _daily(spark)
+    ys = _daily(spark, sf_dir)
     n = len(ys)
     turns = sum(
         1
@@ -48,9 +44,9 @@ def test_peak_prominence_matches_bruteforce(spark, sf_dir):
     """Strict peaks, nearest-higher boundaries (series end when no
     higher ground), saddle minima, top-5 by (prominence, day)."""
     rows = registry.QUERIES["timeseries_peak_prominence"](
-        spark, SF
+        spark, sf_dir
     ).collect()
-    ev = load_table(spark, SF, "events").collect()
+    ev = load_table(spark, sf_dir, "events").collect()
     d = defaultdict(float)
     for r in ev:
         d[r.ts.date()] += r.value

@@ -12,11 +12,9 @@ from etl_data_ingestion_spark.plans import registry
 
 registry.load_all()
 
-SF = "/root/testdata/sf0.001"
 
-
-def _daily_by_we(spark):
-    ev = load_table(spark, SF, "events").collect()
+def _daily_by_we(spark, sf_dir):
+    ev = load_table(spark, sf_dir, "events").collect()
     d = defaultdict(float)
     for r in ev:
         d[r.ts.date()] += r.value
@@ -30,7 +28,7 @@ def _daily_by_we(spark):
 def test_wasserstein_matches_bruteforce(spark, sf_dir):
     """W1 = integral |F1-F2| dv over the pooled value axis, computed
     here the slow direct way (per-segment CDF gap x gap width)."""
-    xs, ys = _daily_by_we(spark)
+    xs, ys = _daily_by_we(spark, sf_dir)
     vals = sorted(set(xs) | set(ys))
     n1, n2 = len(xs), len(ys)
     w1 = 0.0
@@ -38,7 +36,7 @@ def test_wasserstein_matches_bruteforce(spark, sf_dir):
         f1 = sum(1 for v in xs if v <= a) / n1
         f2 = sum(1 for v in ys if v <= a) / n2
         w1 += abs(f1 - f2) * (b - a)
-    out = registry.QUERIES["agg_wasserstein_weekend"](spark, SF).collect()[0]
+    out = registry.QUERIES["agg_wasserstein_weekend"](spark, sf_dir).collect()[0]
     assert out.n_weekday == n1 and out.n_weekend == n2
     assert abs(out.wasserstein_dollars
                - math.floor(w1 / 100 * 1e4 + 0.5) / 1e4) < 1e-9
@@ -47,7 +45,7 @@ def test_wasserstein_matches_bruteforce(spark, sf_dir):
 def test_cvm_matches_bruteforce(spark, sf_dir):
     """Anderson's two-sample T from first principles: sorted own
     samples, tie-averaged pooled ranks, U-sum, T chain."""
-    xs, ys = _daily_by_we(spark)
+    xs, ys = _daily_by_we(spark, sf_dir)
     pooled = sorted(xs + ys)
     n, m = len(xs), len(ys)
     big_n = n + m
@@ -64,14 +62,14 @@ def test_cvm_matches_bruteforce(spark, sf_dir):
     )
     t_stat = u / (big_n * n * m) - (4.0 * m * n - 1) / (6.0 * big_n)
     out = registry.QUERIES["agg_cramer_von_mises_weekend"](
-        spark, SF
+        spark, sf_dir
     ).collect()[0]
     assert out.n_weekday == n and out.n_weekend == m
     assert abs(out.cvm_t - math.floor(t_stat * 1e6 + 0.5) / 1e6) < 2e-6
 
 
 def test_durbin_watson_matches_bruteforce(spark, sf_dir):
-    ev = load_table(spark, SF, "events").collect()
+    ev = load_table(spark, sf_dir, "events").collect()
     d = defaultdict(float)
     for r in ev:
         d[r.ts.date()] += r.value
@@ -87,14 +85,14 @@ def test_durbin_watson_matches_bruteforce(spark, sf_dir):
     dw = sum((e1 - e0) ** 2 for e0, e1 in zip(es, es[1:])) / sum(
         e * e for e in es
     )
-    out = registry.QUERIES["agg_durbin_watson_daily"](spark, SF).collect()[0]
+    out = registry.QUERIES["agg_durbin_watson_daily"](spark, sf_dir).collect()[0]
     assert out.n_days == n
     assert abs(out.dw_stat - math.floor(dw * 1e6 + 0.5) / 1e6) < 1e-9
     assert 0.0 <= out.dw_stat <= 4.0
 
 
 def test_good_turing_matches_bruteforce(spark, sf_dir):
-    docs = load_table(spark, SF, "documents").collect()
+    docs = load_table(spark, sf_dir, "documents").collect()
     counts = Counter()
     for r in docs:
         ws = r.text.strip().split()
@@ -104,7 +102,7 @@ def test_good_turing_matches_bruteforce(spark, sf_dir):
     fof = Counter(counts.values())
     n_tokens = sum(counts.values())
     rows = registry.QUERIES["text_good_turing_estimates"](
-        spark, SF
+        spark, sf_dir
     ).collect()
     assert rows, "r<=8 frequency classes must exist on this fixture"
     for row in rows:
@@ -123,7 +121,7 @@ def test_good_turing_matches_bruteforce(spark, sf_dir):
 
 
 def test_km_curve_matches_bruteforce(spark, sf_dir):
-    orders = load_table(spark, SF, "orders").collect()
+    orders = load_table(spark, sf_dir, "orders").collect()
     per = {}
     for r in orders:
         f, l = per.get(r.o_custkey, (r.o_orderdate, r.o_orderdate))
@@ -151,7 +149,7 @@ def test_km_curve_matches_bruteforce(spark, sf_dir):
                 )
             rows_exp.append((t, at_risk, d, lterm))
         at_risk -= a
-    out = registry.QUERIES["ml_km_survival_curve"](spark, SF).collect()
+    out = registry.QUERIES["ml_km_survival_curve"](spark, sf_dir).collect()
     assert len(out) == min(30, len(rows_exp))
     cum = 0
     for row, (t, nr, d, lterm) in zip(out, rows_exp):

@@ -11,11 +11,9 @@ from etl_data_ingestion_spark.plans import registry
 
 registry.load_all()
 
-SF = "/root/testdata/sf0.001"
-
 
 def test_bartlett_matches_bruteforce(spark, sf_dir):
-    orders = load_table(spark, SF, "orders").collect()
+    orders = load_table(spark, sf_dir, "orders").collect()
     groups = defaultdict(list)
     for r in orders:
         groups[r.o_orderpriority].append(
@@ -39,7 +37,7 @@ def test_bartlett_matches_bruteforce(spark, sf_dir):
     c = 1 + (sinv - 1.0 / (nn - k)) / (3.0 * (k - 1))
     chi2 = num / c
     out = registry.QUERIES["agg_bartlett_variance_test"](
-        spark, SF
+        spark, sf_dir
     ).collect()[0]
     assert out.n_groups == k and out.n_orders == nn
     assert abs(out.bartlett_chi2 - math.floor(chi2 * 1e6 + 0.5) / 1e6) < 2e-6
@@ -47,10 +45,10 @@ def test_bartlett_matches_bruteforce(spark, sf_dir):
 
 
 def test_herfindahl_matches_bruteforce(spark, sf_dir):
-    li = load_table(spark, SF, "lineitem").collect()
+    li = load_table(spark, sf_dir, "lineitem").collect()
     sup = {
         r.s_suppkey: r.s_nationkey
-        for r in load_table(spark, SF, "supplier").collect()
+        for r in load_table(spark, sf_dir, "supplier").collect()
     }
     rev = defaultdict(lambda: defaultdict(int))
     for r in li:
@@ -58,7 +56,7 @@ def test_herfindahl_matches_bruteforce(spark, sf_dir):
             r.l_extendedprice * 100 + 0.5
         )
     rows = registry.QUERIES["agg_herfindahl_concentration"](
-        spark, SF
+        spark, sf_dir
     ).collect()
     assert len(rows) == len(rev)
     for row in rows:
@@ -80,7 +78,7 @@ def test_herfindahl_matches_bruteforce(spark, sf_dir):
 
 
 def test_overdispersion_matches_bruteforce(spark, sf_dir):
-    orders = load_table(spark, SF, "orders").collect()
+    orders = load_table(spark, sf_dir, "orders").collect()
     per = defaultdict(int)
     for r in orders:
         per[r.o_orderdate] += 1
@@ -91,7 +89,7 @@ def test_overdispersion_matches_bruteforce(spark, sf_dir):
     s2 = (n * ss - s * s) / n / (n - 1)
     d = s2 / mean
     out = registry.QUERIES["agg_poisson_overdispersion"](
-        spark, SF
+        spark, sf_dir
     ).collect()[0]
     assert out.n_days == n
     assert abs(out.mean_orders_per_day
@@ -103,7 +101,7 @@ def test_overdispersion_matches_bruteforce(spark, sf_dir):
 
 
 def test_page_hinkley_matches_bruteforce(spark, sf_dir):
-    ev = load_table(spark, SF, "events").collect()
+    ev = load_table(spark, sf_dir, "events").collect()
     daily = defaultdict(float)
     for r in ev:
         daily[r.ts.date()] += r.value
@@ -120,7 +118,7 @@ def test_page_hinkley_matches_bruteforce(spark, sf_dir):
         if gap > best_gap:
             best_gap, best_day = gap, d
     out = registry.QUERIES["events_page_hinkley_drift"](
-        spark, SF
+        spark, sf_dir
     ).collect()[0]
     assert out.n_days == n
     assert out.detection_day == best_day.isoformat()

@@ -12,15 +12,9 @@ import re
 
 from etl_data_ingestion_spark.plans import registry
 
+from tests.helpers import q
+
 registry.load_all()
-
-
-def q(name, spark, sf_dir):
-    return registry.QUERIES[name](spark, sf_dir)
-
-
-def _snap(x, d):
-    return math.floor(x * 10**d + 0.5) / 10**d
 
 
 def test_mcnemar_matches_python(spark, sf_dir):

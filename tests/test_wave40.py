@@ -11,11 +11,9 @@ from etl_data_ingestion_spark.plans import registry
 
 registry.load_all()
 
-SF = "/root/testdata/sf0.001"
-
 
 def test_jonckheere_matches_bruteforce(spark, sf_dir):
-    orders = load_table(spark, SF, "orders").collect()
+    orders = load_table(spark, sf_dir, "orders").collect()
     groups = defaultdict(list)
     for r in orders:
         groups[int(r.o_orderpriority[0])].append(
@@ -38,15 +36,15 @@ def test_jonckheere_matches_bruteforce(spark, sf_dir):
         n * n * (2 * n + 3) - sum(x * x * (2 * x + 3) for x in ns)
     ) / 72
     z = (jt2 / 2 - mean) / math.sqrt(var)
-    out = registry.QUERIES["agg_jonckheere_terpstra"](spark, SF).collect()[0]
+    out = registry.QUERIES["agg_jonckheere_terpstra"](spark, sf_dir).collect()[0]
     assert out.n_orders == n
     assert out.jt2_stat == jt2
     assert abs(out.jt_z - math.floor(z * 1e6 + 0.5) / 1e6) < 2e-6
 
 
 def test_cmh_matches_bruteforce(spark, sf_dir):
-    cust = load_table(spark, SF, "customer").collect()
-    orders = load_table(spark, SF, "orders").collect()
+    cust = load_table(spark, sf_dir, "customer").collect()
+    orders = load_table(spark, sf_dir, "orders").collect()
     urgent = {r.o_custkey for r in orders
               if r.o_orderpriority == "1-URGENT"}
     strata = defaultdict(lambda: [0, 0, 0, 0])  # a, r1, k1, n
@@ -69,13 +67,13 @@ def test_cmh_matches_bruteforce(spark, sf_dir):
             r1 * (n - r1) * k1 * (n - k1) / (n * n * (n - 1)) * 1e9 + 0.5
         )
     chi2 = (num9 / 1e9) ** 2 / (v9 / 1e9)
-    out = registry.QUERIES["agg_cmh_stratified_test"](spark, SF).collect()[0]
+    out = registry.QUERIES["agg_cmh_stratified_test"](spark, sf_dir).collect()[0]
     assert out.n_strata == n_strata
     assert abs(out.cmh_chi2 - math.floor(chi2 * 1e6 + 0.5) / 1e6) < 2e-6
 
 
 def test_mood_median_matches_bruteforce(spark, sf_dir):
-    orders = load_table(spark, SF, "orders").collect()
+    orders = load_table(spark, sf_dir, "orders").collect()
     vals = sorted(math.floor(r.o_totalprice * 100 + 0.5) for r in orders)
     med = vals[math.ceil(len(vals) / 2) - 1]
     groups = defaultdict(list)
@@ -92,7 +90,7 @@ def test_mood_median_matches_bruteforce(spark, sf_dir):
         e1 = ng * ta / nn
         e0 = ng * (nn - ta) / nn
         chi2 += (ab - e1) ** 2 / e1 + ((ng - ab) - e0) ** 2 / e0
-    out = registry.QUERIES["agg_mood_median_test"](spark, SF).collect()[0]
+    out = registry.QUERIES["agg_mood_median_test"](spark, sf_dir).collect()[0]
     assert out.n_groups == len(groups)
     assert out.n_above_total == ta
     assert abs(out.mood_chi2 - math.floor(chi2 * 1e6 + 0.5) / 1e6) < 2e-6
@@ -101,7 +99,7 @@ def test_mood_median_matches_bruteforce(spark, sf_dir):
 def test_ratio_margin_matches_bruteforce(spark, sf_dir):
     import numpy as np
 
-    emb = load_table(spark, SF, "embeddings").collect()
+    emb = load_table(spark, sf_dir, "embeddings").collect()
     ids = np.array([r.vec_id for r in emb])
     order = np.argsort(ids)
     ids = ids[order]
@@ -116,7 +114,7 @@ def test_ratio_margin_matches_bruteforce(spark, sf_dir):
     for i in range(len(ids)):
         row = np.sort(S[i])
         per_label[int(labels[i])].append(int(row[-1] - row[-2]))
-    rows = registry.QUERIES["similarity_ratio_margin"](spark, SF).collect()
+    rows = registry.QUERIES["similarity_ratio_margin"](spark, sf_dir).collect()
     assert len(rows) == len(per_label)
     for row in rows:
         ms = per_label[row.label]
@@ -130,7 +128,7 @@ def test_ratio_margin_matches_bruteforce(spark, sf_dir):
 
 
 def test_ess_matches_bruteforce(spark, sf_dir):
-    docs = load_table(spark, SF, "documents").collect()
+    docs = load_table(spark, sf_dir, "documents").collect()
     toks = sorted(
         ((len(r.text.strip().split()), r.doc_id) for r in docs),
         key=lambda p: (-p[0], p[1]),
@@ -139,7 +137,7 @@ def test_ess_matches_bruteforce(spark, sf_dir):
     s, ss = sum(ws), sum(w * w for w in ws)
     ess = s * s / ss
     out = registry.QUERIES["pipeline_length_weight_ess"](
-        spark, SF
+        spark, sf_dir
     ).collect()[0]
     assert out.n_docs == len(ws) and out.total_tokens == s
     assert abs(out.ess - math.floor(ess * 1e4 + 0.5) / 1e4) < 1e-9

@@ -11,11 +11,9 @@ from etl_data_ingestion_spark.plans import registry
 
 registry.load_all()
 
-SF = "/root/testdata/sf0.001"
-
 
 def test_yule_k_matches_bruteforce(spark, sf_dir):
-    docs = load_table(spark, SF, "documents").collect()
+    docs = load_table(spark, sf_dir, "documents").collect()
     freq = defaultdict(Counter)
     for r in docs:
         t = r.text.strip()
@@ -24,7 +22,7 @@ def test_yule_k_matches_bruteforce(spark, sf_dir):
     out = {
         r.source: r
         for r in registry.QUERIES["text_yule_k_characteristic"](
-            spark, SF
+            spark, sf_dir
         ).collect()
     }
     assert set(out) == set(freq)
@@ -45,7 +43,7 @@ def _polyhash(s: str) -> int:
 
 
 def test_priority_sample_matches_bruteforce(spark, sf_dir):
-    docs = load_table(spark, SF, "documents").collect()
+    docs = load_table(spark, sf_dir, "documents").collect()
     keyed = []
     for r in docs:
         t = r.text.strip()
@@ -58,7 +56,7 @@ def test_priority_sample_matches_bruteforce(spark, sf_dir):
     keyed.sort()
     want = keyed[:20]
     out = registry.QUERIES["pipeline_weighted_priority_sample"](
-        spark, SF
+        spark, sf_dir
     ).collect()
     assert len(out) == 20
     for row, (negp, did, src, w) in zip(out, want):
@@ -69,7 +67,7 @@ def test_priority_sample_matches_bruteforce(spark, sf_dir):
 
 
 def test_bh_fdr_matches_bruteforce(spark, sf_dir):
-    docs = load_table(spark, SF, "documents").collect()
+    docs = load_table(spark, sf_dir, "documents").collect()
     by_src = defaultdict(lambda: [0] * 16)
     for r in docs:
         by_src[r.source][min(15, r.n_chars // 256)] += 1
@@ -105,7 +103,7 @@ def test_bh_fdr_matches_bruteforce(spark, sf_dir):
     out = {
         r.source: r
         for r in registry.QUERIES["agg_bh_fdr_source_drift"](
-            spark, SF
+            spark, sf_dir
         ).collect()
     }
     assert set(out) == set(stats)
@@ -120,7 +118,7 @@ def test_bh_fdr_matches_bruteforce(spark, sf_dir):
 def test_mmd_drift_matches_bruteforce(spark, sf_dir):
     import pyarrow.parquet as pq
 
-    tbl = pq.read_table(SF + "/embeddings.parquet").to_pydict()
+    tbl = pq.read_table(sf_dir + "/embeddings.parquet").to_pydict()
     by_label = defaultdict(list)
     for lab, vec in zip(tbl["label"], tbl["embedding"]):
         by_label[lab].append(
@@ -137,7 +135,7 @@ def test_mmd_drift_matches_bruteforce(spark, sf_dir):
     out = {
         r.label: r
         for r in registry.QUERIES["similarity_label_mmd_drift"](
-            spark, SF
+            spark, sf_dir
         ).collect()
     }
     assert set(out) == set(by_label)

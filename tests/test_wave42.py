@@ -11,13 +11,11 @@ from etl_data_ingestion_spark.plans import registry
 
 registry.load_all()
 
-SF = "/root/testdata/sf0.001"
-
 
 def test_cooks_distance_matches_bruteforce(spark, sf_dir):
     import datetime
 
-    orders = load_table(spark, SF, "orders").collect()
+    orders = load_table(spark, sf_dir, "orders").collect()
     day = defaultdict(int)
     for r in orders:
         d = r.o_orderdate
@@ -46,7 +44,7 @@ def test_cooks_distance_matches_bruteforce(spark, sf_dir):
         d6 = math.floor(e * e * h / (2.0 * s2 * (1 - h) * (1 - h)) * 1e6 + 0.5)
         scored.append((-d6, d, y, e))
     scored.sort()
-    out = registry.QUERIES["ml_cooks_distance_topk"](spark, SF).collect()
+    out = registry.QUERIES["ml_cooks_distance_topk"](spark, sf_dir).collect()
     assert len(out) == 20
     for row, (negd6, d, y, e) in zip(out, scored[:20]):
         assert row.day == d
@@ -58,7 +56,7 @@ def test_cooks_distance_matches_bruteforce(spark, sf_dir):
 
 
 def test_mahalanobis_matches_bruteforce(spark, sf_dir):
-    orders = load_table(spark, SF, "orders").collect()
+    orders = load_table(spark, sf_dir, "orders").collect()
     feat = defaultdict(lambda: [0, 0])
     for r in orders:
         f = feat[r.o_custkey]
@@ -81,7 +79,7 @@ def test_mahalanobis_matches_bruteforce(spark, sf_dir):
         d2 = (dx * dx * cyy - 2 * dx * dy * cxy + dy * dy * cxx) / det
         scored.append((-math.floor(d2 * 1e6 + 0.5), ck, x, y))
     scored.sort()
-    out = registry.QUERIES["agg_mahalanobis_outliers"](spark, SF).collect()
+    out = registry.QUERIES["agg_mahalanobis_outliers"](spark, sf_dir).collect()
     assert len(out) == 20
     for row, (negd6, ck, x, y) in zip(out, scored[:20]):
         assert row.custkey == ck

@@ -11,13 +11,11 @@ from etl_data_ingestion_spark.plans import registry
 
 registry.load_all()
 
-SF = "/root/testdata/sf0.001"
 
-
-def _daily_weekend(spark):
+def _daily_weekend(spark, sf_dir):
     import datetime
 
-    events = load_table(spark, SF, "events").select("ts", "value").collect()
+    events = load_table(spark, sf_dir, "events").select("ts", "value").collect()
     day = defaultdict(float)
     for r in events:
         day[r.ts.date()] += r.value
@@ -28,8 +26,8 @@ def _daily_weekend(spark):
     return out
 
 
-def test_cohens_d_matches_bruteforce(spark):
-    daily = _daily_weekend(spark)
+def test_cohens_d_matches_bruteforce(spark, sf_dir):
+    daily = _daily_weekend(spark, sf_dir)
     g0 = [y for we, y in daily if we == 0]
     g1 = [y for we, y in daily if we == 1]
     n0, n1 = len(g0), len(g1)
@@ -38,16 +36,16 @@ def test_cohens_d_matches_bruteforce(spark):
     ss1 = sum(y * y for y in g1) - sum(g1) ** 2 / n1
     d = (m1 - m0) / math.sqrt((ss0 + ss1) / (n0 + n1 - 2))
     g = d * (1.0 - 3.0 / (4.0 * (n0 + n1) - 9.0))
-    row = registry.QUERIES["agg_cohens_d_weekend"](spark, SF).collect()[0]
+    row = registry.QUERIES["agg_cohens_d_weekend"](spark, sf_dir).collect()[0]
     assert row.n_weekday == n0 and row.n_weekend == n1
     assert abs(row.cohens_d - math.floor(d * 1e6 + 0.5) / 1e6) < 2e-6
     assert abs(row.hedges_g - math.floor(g * 1e6 + 0.5) / 1e6) < 2e-6
 
 
-def test_chow_matches_bruteforce(spark):
+def test_chow_matches_bruteforce(spark, sf_dir):
     import datetime
 
-    events = load_table(spark, SF, "events").select("ts", "value").collect()
+    events = load_table(spark, sf_dir, "events").select("ts", "value").collect()
     day = defaultdict(float)
     for r in events:
         day[r.ts.date()] += r.value
@@ -69,16 +67,16 @@ def test_chow_matches_bruteforce(spark):
     post = [p for p in pts if p[0] * 2 > k]
     s01 = ssr(pre) + ssr(post)
     f = ((ssr(pts) - s01) / 2) / (s01 / (k - 4))
-    row = registry.QUERIES["agg_chow_break_daily"](spark, SF).collect()[0]
+    row = registry.QUERIES["agg_chow_break_daily"](spark, sf_dir).collect()[0]
     assert row.n_pre == len(pre) and row.n_post == len(post)
     assert abs(row.chow_f - math.floor(f * 1e6 + 0.5) / 1e6) < 2e-6
 
 
-def test_breusch_pagan_matches_bruteforce(spark):
-    orders = load_table(spark, SF, "orders").select(
+def test_breusch_pagan_matches_bruteforce(spark, sf_dir):
+    orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     ).collect()
-    li = load_table(spark, SF, "lineitem").select("l_orderkey").collect()
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey").collect()
     cnt = defaultdict(int)
     for r in li:
         cnt[r.l_orderkey] += 1
@@ -101,16 +99,16 @@ def test_breusch_pagan_matches_bruteforce(spark):
     c = sxe2 - sx * se2 / n
     lm = c * c / ((sxx - sx * sx / n) * (se2e2 - se2 * se2 / n)) * n
     row = registry.QUERIES["agg_breusch_pagan_order_size"](
-        spark, SF
+        spark, sf_dir
     ).collect()[0]
     assert row.n_orders == n
     assert abs(row.lm_koenker - math.floor(lm * 1e6 + 0.5) / 1e6) < 2e-6
 
 
-def test_ngram_diversity_matches_bruteforce(spark):
+def test_ngram_diversity_matches_bruteforce(spark, sf_dir):
     import re
 
-    docs = load_table(spark, SF, "documents").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "source", "text"
     ).collect()
     tot = defaultdict(int)
@@ -127,7 +125,7 @@ def test_ngram_diversity_matches_bruteforce(spark):
             tot[(r.source, 2)] += 1
             dis[(r.source, 2)].add(g)
     out = registry.QUERIES["text_distinct_ngram_diversity"](
-        spark, SF
+        spark, sf_dir
     ).collect()
     assert len(out) == len(tot)
     for row in out:

@@ -8,11 +8,9 @@ from collections import Counter
 
 from etl_data_ingestion_spark.plans import registry
 
+from tests.helpers import q
+
 registry.load_all()
-
-
-def q(name, spark, sf_dir):
-    return registry.QUERIES[name](spark, sf_dir)
 
 
 def test_assortativity_matches_python(spark, sf_dir):

@@ -5,29 +5,20 @@ Matryoshka truncation-agreement operator."""
 from __future__ import annotations
 
 import math
-from collections import Counter, defaultdict
+from collections import Counter
 
 from etl_data_ingestion_spark.plans import registry
 
+from tests.helpers import daily_event_counts
+
 registry.load_all()
+
 
 KINDS = ["view", "click", "purchase", "signup", "error"]
 
 
-def _daily(spark, sf_dir):
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .selectExpr("cast(to_date(ts) as string) AS d", "event_type")
-        .collect()
-    )
-    daily: dict = defaultdict(lambda: Counter())
-    for r in rows:
-        daily[r.d][r.event_type] += 1
-    return daily
-
-
 def test_corr_matrix_matches_python(spark, sf_dir):
-    daily = _daily(spark, sf_dir)
+    daily = daily_event_counts(spark, sf_dir)
     series = {k: [daily[d][k] for d in sorted(daily)] for k in KINDS}
     n = len(daily)
     expect = []
@@ -53,7 +44,7 @@ def test_corr_matrix_matches_python(spark, sf_dir):
 
 
 def test_granger_lag1_matches_python(spark, sf_dir):
-    daily = _daily(spark, sf_dir)
+    daily = daily_event_counts(spark, sf_dir)
     days = sorted(daily)
     trip = [
         (daily[days[i - 1]]["purchase"], daily[days[i - 1]]["view"],
