@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import threading
 import weakref
 from collections.abc import Callable, Iterator
 from contextlib import contextmanager
@@ -69,9 +70,10 @@ _SCANS: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str, bool], Dat
 
 
 def drop_plan_cache(spark: SparkSession) -> None:
-    """Forget this session's registered scans and its small_fact_session
-    children with theirs, unpersisting any that persist_scans pinned.
-    Call after rewriting a table path in place."""
+    """Forget this session's registered scans and its gate children
+    (small_input_session, small_fact_session) with theirs, unpersisting
+    any that persist_scans pinned. Call after rewriting a table path in
+    place."""
     for child in _CHILDREN.pop(spark, {}).values():
         drop_plan_cache(child)
     for df in _SCANS.pop(spark, {}).values():
@@ -80,10 +82,12 @@ def drop_plan_cache(spark: SparkSession) -> None:
 
 
 def persist_scans(spark: SparkSession) -> int:
-    """Persist and materialize every scan this session has registered;
-    returns how many. They stay pinned across registry.run calls until
-    drop_plan_cache (or a session-wide clearCache)."""
-    scans = _SCANS.get(spark, {}).values()
+    """Persist and materialize every scan this session and its gate
+    children have registered; returns how many. They stay pinned across
+    registry.run calls until drop_plan_cache (or a session-wide
+    clearCache)."""
+    sessions = (spark, *_CHILDREN.get(spark, {}).values())
+    scans = [df for s in sessions for df in _SCANS.get(s, {}).values()]
     for df in scans:
         df.persist()
         df.count()
@@ -157,6 +161,12 @@ def dir_key(sf_dir: str) -> str:
     return hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
 
 
+def _routes_bucketed(spark: SparkSession, key_dir: str) -> bool:
+    """Whether ``spark`` reads lineitem/orders of ``key_dir`` (an
+    absolute sf dir) from the bucketed tables."""
+    return _BUCKETED.get(spark, {}).get(key_dir, (0, False))[1]
+
+
 def _bucketed_table(key_dir: str, name: str) -> str:
     return f"{name}_bucketed_{dir_key(key_dir)}"
 
@@ -212,16 +222,22 @@ def table_path(sf_dir: str, name: str) -> str:
 
 # Fact footprint under which small_fact_session plans statically.
 SMALL_FACT_BYTES = 2_000_000_000
-# Fact input per static shuffle partition in the gate's child session.
+# Input per static shuffle partition in a gate's child session; an sf
+# dir whose tables total at most this plans every registry query on
+# one partition (small_input_session).
 GATE_BYTES_PER_PARTITION = 4 << 20
 
-# The gate's child sessions: caller session -> {shuffle partitions:
+# The gates' child sessions: caller session -> {shuffle partitions:
 # child}. A child keeps its own scan registry, so a fresh child per
 # call would re-infer every parquet schema it reads (one extra job per
 # table read); one child per (caller, partition count) reads each once.
+# Both gates set the same two confs, so a count's child serves either.
 _CHILDREN: "weakref.WeakKeyDictionary[SparkSession, dict[int, SparkSession]]" = (
     weakref.WeakKeyDictionary()
 )
+# Queries on one session may build from several threads; one child per
+# (caller, count) holds only if its creation is atomic.
+_CHILDREN_LOCK = threading.Lock()
 
 
 def _fact_bytes(path: str) -> int:
@@ -239,6 +255,50 @@ def _fact_bytes(path: str) -> int:
     return total or 1 << 60
 
 
+def _static_child(spark: SparkSession, parts: int) -> SparkSession:
+    """The cached child of ``spark`` that plans without AQE on
+    ``parts`` shuffle partitions."""
+    with _CHILDREN_LOCK:
+        children = _CHILDREN.setdefault(spark, {})
+        if parts not in children:
+            children[parts] = child_session(
+                spark,
+                {
+                    "spark.sql.adaptive.enabled": "false",
+                    "spark.sql.shuffle.partitions": str(parts),
+                },
+            )
+        return children[parts]
+
+
+def small_input_session(spark: SparkSession, sf_dir: str) -> SparkSession:
+    """The session a registered query builds on (registry.gated):
+    ``spark`` itself, or, when the caller's AQE is on and every table of
+    ``sf_dir`` together holds at most GATE_BYTES_PER_PARTITION, a cached
+    child that plans statically on one shuffle partition.
+
+    Under that size AQE coalesces every shuffle to one partition anyway,
+    and it submits each query stage as a Spark job of its own; a static
+    plan runs a query's chain of stages as one job (perfbench analytics
+    at sf0.001: 30 -> 14 jobs for 9 queries). Above it AQE stays on:
+    its runtime broadcast conversions are what the wedge family needs
+    at sf1, where a static plan ran 7.80 s against 5.36 s. The sizes
+    follow _fact_bytes, so a missing table, a non-local URI or a 0-byte
+    walk counts as LARGE.
+
+    A caller that reads bucketed facts of ``sf_dir``
+    (enable_bucketed_facts) keeps its own session: the routing is per
+    session, and a child would read the stock parquet. The caller's
+    conf is never written."""
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    if aqe != "true" or _routes_bucketed(spark, os.path.abspath(sf_dir)):
+        return spark
+    total = sum(_fact_bytes(table_path(sf_dir, name)) for name in TABLES)
+    if total > GATE_BYTES_PER_PARTITION:
+        return spark
+    return _static_child(spark, 1)
+
+
 def small_fact_session(spark: SparkSession, sf_dir: str, table: str) -> SparkSession:
     """The session an iterative / multi-consumer small-input query
     builds on: ``spark`` itself, or a tuned child session that plans
@@ -251,7 +311,10 @@ def small_fact_session(spark: SparkSession, sf_dir: str, table: str) -> SparkSes
     for its runtime BHJ conversion + skew handling. Non-local URIs,
     missing paths and 0-byte walks count as LARGE, so the gate can never
     silently disable AQE in the cluster-scale case it must protect. It
-    acts only when the caller's AQE is on.
+    acts only when the caller's AQE is on, so through the registry it
+    acts only above small_input_session's size: below it, the registry
+    already hands the builder a one-partition static child, and this
+    returns that child as it is.
 
     With AQE off nothing coalesces partitions at runtime, so the child
     also gets a static shuffle partition count sized from the
@@ -277,16 +340,7 @@ def small_fact_session(spark: SparkSession, sf_dir: str, table: str) -> SparkSes
         int(spark.conf.get("spark.sql.shuffle.partitions")),
         max(8, fact_bytes // GATE_BYTES_PER_PARTITION),
     )
-    children = _CHILDREN.setdefault(spark, {})
-    if parts not in children:
-        children[parts] = child_session(
-            spark,
-            {
-                "spark.sql.adaptive.enabled": "false",
-                "spark.sql.shuffle.partitions": str(parts),
-            },
-        )
-    return children[parts]
+    return _static_child(spark, parts)
 
 
 def _with_scan_parallelism(spark: SparkSession, df: DataFrame) -> DataFrame:
@@ -353,7 +407,7 @@ def load_table(
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     key_dir = os.path.abspath(sf_dir)
-    if name in BUCKETED_FACTS and _BUCKETED.get(spark, {}).get(key_dir, (0, False))[1]:
+    if name in BUCKETED_FACTS and _routes_bucketed(spark, key_dir):
         # the catalog table is the registered plan (bucket spec
         # included); the bucket count fixes the scan tasks, so the
         # parallel floor does not apply

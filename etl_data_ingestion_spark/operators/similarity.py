@@ -1607,15 +1607,26 @@ def _ivf_top2_other(Xn, self_col, qids, Qn, index):
     return b1i, b1v, b2v
 
 
-def _top2_other_stream(it, emb_path: str, exact_max_rows: int):
+def _top2_other_stream(it, emb_path: str, exact_max_rows: int, eager: bool = False):
     """Shared mapInPandas core: consume Arrow batches carrying
     (vec_id, embedding[, ...]), yield (pdf, nbr_ids, top1_s9,
-    top2_s9) per batch under the snap/tie contract above."""
+    top2_s9) per batch under the snap/tie contract above.
+
+    The corpus loads with the first batch, so a partition without rows
+    reads nothing and yields nothing, whichever layout planned it.
+    ``eager`` loads it before the first batch, so a corpus under 3
+    vectors raises even where no row arrives."""
     import numpy as np
 
-    qids, Qn = _corpus_matrix(emb_path)
-    index = None if len(qids) <= exact_max_rows else _ivf_coarse_index(Qn)
+    def load():
+        qids, Qn = _corpus_matrix(emb_path)
+        return qids, Qn, None if len(qids) <= exact_max_rows else _ivf_coarse_index(Qn)
+
+    corpus = load() if eager else None
     for pdf in it:
+        if corpus is None:
+            corpus = load()
+        qids, Qn, index = corpus
         X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
         Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
         ids = pdf["vec_id"].to_numpy()
@@ -1799,7 +1810,10 @@ def similarity_ratio_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     label-domain-sized. Above GEMM_EXACT_MAX_ROWS the candidate
     generation swaps to the shared IVF coarse index with the same
     margin definition (ties already resolved by the snap: equal
-    snapped values give margin 0 regardless of id order)."""
+    snapped values give margin 0 regardless of id order). The corpus
+    loads before the first batch, so a corpus under 3 vectors raises
+    on every layout, empty partitions included: the margin is
+    undefined there."""
     import numpy as np
     import pandas as pd
 
@@ -1809,7 +1823,7 @@ def similarity_ratio_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _margins(it):
         for pdf, _nbr_ids, top1, top2 in _top2_other_stream(
-            it, emb_path, cap
+            it, emb_path, cap, eager=True
         ):
             yield pd.DataFrame(
                 {

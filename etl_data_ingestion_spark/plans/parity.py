@@ -123,12 +123,12 @@ class Verdict:
     error: str | None = None
 
 
-def check(spark, con, name: str, sf_dir: str) -> Verdict:
-    """Run query ``name`` on ``spark`` through ``registry.run`` and its
-    oracle on ``con`` (see ``duckdb_views``) over ``sf_dir``, and judge
-    the results."""
+def check(spark, con, name: str, sf_dir: str, build=None) -> Verdict:
+    """Run query ``name`` (or ``build`` standing in for it) on ``spark``
+    through ``registry.run`` and its oracle on ``con`` (see
+    ``duckdb_views``) over ``sf_dir``, and judge the results."""
     try:
-        got = run(spark, name, sf_dir, methodcaller("toPandas")).result
+        got = run(spark, name, sf_dir, methodcaller("toPandas"), build).result
     except Exception as e:  # the query's own failure is the verdict
         return Verdict(name, FAIL, detail="spark raised", error=str(e))
     sql = ORACLES.get(name)

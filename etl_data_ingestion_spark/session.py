@@ -8,7 +8,11 @@ for scale-readiness:
   agree byte-for-byte.
 - AQE on (coalesce partitions, skew-join handling): at 100 TB the
   static shuffle-partition number is always wrong for some stage; AQE
-  re-plans from runtime statistics.
+  re-plans from runtime statistics. A registry query whose whole input
+  fits one partition builds on a child session instead, AQE off and
+  one shuffle partition (``catalog.small_input_session``): AQE submits
+  each query stage as a Spark job of its own, a static plan runs a
+  chain of stages as one.
 - `timeParserPolicy=CORRECTED`: strict `yyyy-MM-dd` parsing, matching
   the reference's strptime('%Y-%m-%d') (reference main.py:400-410).
 - `escapedStringLiterals=false`: SQL string literals unescape `\'` and
@@ -80,11 +84,11 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # parallelismFirst / advisoryPartitionSizeInBytes stay at
-        # defaults: a round-3 interleaved A/B (8 queries x 4 rounds at
-        # sf0.1) measured parallelismFirst=false + 32m advisory ~10%
-        # SLOWER across the board — at this scale 32 short tasks beat
-        # fewer bigger ones; at cluster scale AQE's data-sized
-        # coalescing matters and the defaults already provide it.
+        # defaults: an interleaved A/B (8 queries x 4 rounds at sf0.1)
+        # measured parallelismFirst=false + 32m advisory ~10% SLOWER
+        # across the board — at this scale 32 short tasks beat fewer
+        # bigger ones; at cluster scale AQE's data-sized coalescing
+        # matters and the defaults already provide it.
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")

@@ -1,11 +1,14 @@
 """The catalog's front door: the per-session scan registry, resident
-persistence, bucketed routing and the small-fact AQE gate. Every
+persistence, bucketed routing and the two AQE gates (small input,
+small fact). Every
 registry builder reads its tables through ``catalog.load_table``."""
 
 from __future__ import annotations
 
 import os
 import shutil
+import sys
+from concurrent.futures import ThreadPoolExecutor
 from operator import methodcaller
 
 import pytest
@@ -267,14 +270,66 @@ def test_drop_plan_cache_drops_the_gate_children(spark, sf_dir):
     assert catalog.small_fact_session(caller, sf_dir, "lineitem") is not child
 
 
+def test_registry_gate_decision(spark, sf_dir, empty_dir):
+    """A registered query builds on a cached one-partition static child
+    when the caller's AQE is on and the sf dir's tables total at most
+    GATE_BYTES_PER_PARTITION (sf0.001, 0-row tables), and on the
+    caller otherwise (sf0.1, an AQE-off caller). The caller's conf is
+    never written; the gated frame runs without AdaptiveSparkPlan,
+    the module's own builder on the caller with it."""
+    from etl_data_ingestion_spark.plans import registry
+
+    registry.load_all()
+    before = spark.conf.getAll
+    child = catalog.small_input_session(spark, sf_dir)
+    assert child is not spark
+    assert child.conf.get(AQE) == "false"
+    assert child.conf.get("spark.sql.shuffle.partitions") == "1"
+    assert catalog.small_input_session(spark, sf_dir) is child
+    assert catalog.small_input_session(spark, empty_dir) is child
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.1")
+    assert catalog.small_input_session(spark, sf01) is spark
+    static = child_session(spark, {AQE: "false"})
+    assert catalog.small_input_session(static, sf_dir) is static
+    q1 = registry.QUERIES["tpch_q1_pricing_summary"]
+    gated, direct = q1(spark, sf_dir), q1.__wrapped__(spark, sf_dir)
+    assert sorted(gated.collect()) == sorted(direct.collect())
+    assert "AdaptiveSparkPlan" not in _exec_plan(gated)
+    assert "AdaptiveSparkPlan" in _exec_plan(direct)
+    assert spark.conf.getAll == before
+
+
+def test_gate_child_is_made_once_under_concurrent_calls(spark, sf_dir):
+    """Threads that gate one caller at the same time, more of them than
+    cores, all get the one cached child."""
+    caller = child_session(spark, {})
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            got = list(
+                pool.map(
+                    lambda _: catalog.small_input_session(caller, sf_dir), range(8), timeout=120
+                )
+            )
+    finally:
+        sys.setswitchinterval(interval)
+        children = catalog._CHILDREN.get(caller, {})
+        catalog.drop_plan_cache(caller)
+    assert len({id(s) for s in got}) == 1
+    assert list(children.values()) == [got[0]]
+
+
 # The builders planned on catalog.small_fact_session, with their Spark
 # jobs per query at sf0.001 on a second call (first-read
-# jobs are not counted), the builder's own eager jobs included.
+# jobs are not counted), the builder's own eager jobs included. At
+# sf0.001 the registry plans them on the one-partition child of
+# catalog.small_input_session.
 GATED_JOBS = {
     "graph_kcore_peel": 6,
     "ml_item_item_cf": 2,
     "graph_assortativity": 4,
-    "dedup_end_to_end_canonical": 18,
+    "dedup_end_to_end_canonical": 17,
 }
 
 
@@ -332,10 +387,11 @@ def test_run_keeps_the_resident_scans(spark, sf_dir):
 
     registry.load_all()
     session = child_session(spark, {})  # a scan registry of its own
+    planned = catalog.small_input_session(session, sf_dir)  # where the queries build
     try:
         registry.run(session, "tpch_q3_shipping_priority", sf_dir, registry.NOOP)
         assert catalog.persist_scans(session) == 3
-        scans = list(catalog._SCANS[session].values())
+        scans = list(catalog._SCANS[planned].values())
         stored = _stored_rdds(session)
         for name in ("tpch_q3_shipping_priority", "agg_theil_inequality"):
             registry.run(session, name, sf_dir, registry.NOOP)

@@ -2,8 +2,9 @@
 Spark, then every registered query against its oracle twice: on the
 populated fixture in a child session with a layout no builder was
 tuned for (AQE off, 3 shuffle partitions), and on 0-row base tables in
-the tuned session. Last, the small-fact-gated queries on an AQE-on
-caller, where the gate engages. Every query leaves as many persisted
+the tuned session, where the registry plans them on its one-partition
+static child. Last, the small-fact-gated builders on an AQE-on
+caller, where that gate engages. Every query leaves as many persisted
 RDDs as it found: ``registry.run`` releases what it pinned. ``pytest
 tests/test_parity.py -k <query>`` checks one query."""
 
@@ -153,13 +154,15 @@ def adaptive(spark):
 @pytest.mark.usefixtures("no_persisted")
 @pytest.mark.parametrize("name", GATED_QUERIES)
 def test_gated_query_matches_oracle_with_the_gate_engaged(sf_dir, con, adaptive, name):
-    """On an AQE-on caller the gate plans on its own child session: the
-    result still matches the oracle, the caller's conf is the same
-    after the query's first call as before it, and the persists the
-    builder made on the child are released."""
+    """On an AQE-on caller the small-fact gate plans on its own child
+    session: the result still matches the oracle, the caller's conf is
+    the same after the query's first call as before it, and the
+    persists the builder made on the child are released. The module's
+    own builder runs, not the registry's gated one, which would plan on
+    the one-partition child before the small-fact gate is reached."""
     assert adaptive.conf.get("spark.sql.adaptive.enabled") == "true"
     before, rdds = adaptive.conf.getAll, persisted(adaptive)
-    v = parity.check(adaptive, con, name, sf_dir)
+    v = parity.check(adaptive, con, name, sf_dir, registry.QUERIES[name].__wrapped__)
     assert v.status == parity.OK, (v.detail, v.error)
     assert adaptive.conf.getAll == before
     assert persisted(adaptive) == rdds

@@ -5,7 +5,8 @@ Usage: python tools/ab.py <sf_dir>... <query> <armA> <armB> [rounds]
 
 An arm is one of:
   stock              the registry builder of <query>;
-  path.py:function   a (spark, sf_dir) -> DataFrame builder in path.py;
+  path.py:function   a (spark, sf_dir) -> DataFrame builder in path.py,
+                     wrapped in registry.gated as the stock builder is;
   duckdb             <query>'s oracle SQL on DuckDB over the same parquet.
 
 At every sf_dir both arms must return the same columns and the same
@@ -75,7 +76,7 @@ def make_arm(spec: str, spark, query: str, cons: dict):
             return None if r is None else round(r[0], 3)
 
         return values, sample
-    build = None if spec == "stock" else load_builder(spec)
+    build = None if spec == "stock" else registry.gated(load_builder(spec))
 
     def spark_run(sf_dir, action):
         return registry.run(spark, query, sf_dir, action, build)
